@@ -15,7 +15,7 @@ Why a task can compute the WHOLE pyramid locally: the store's chunk
 GRID is preserved across levels (chunk dims shrink by the factor, so
 level-L chunk (cz,cy,cx) derives exactly from level-(L-1) chunk
 (cz,cy,cx)), and the sink's geometry guard (shared
-``_write_all_metadata``) only admits chunk dims where per-chunk
+``plan_store_layout``) only admits chunk dims where per-chunk
 windowed means equal the global windowed mean (divisible-by-factor or
 full-extent per axis).  The guard protects both write paths — they
 cannot disagree on metadata or geometry — and
@@ -610,7 +610,6 @@ def run_fused_ingest(
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
         _make_codec,
         _write_all_metadata,
-        _ZARR_DTYPES,
     )
     from aind_smartspim_data_transformation_spark.sources.stack_reader import (
         scan_stack_files,
@@ -625,9 +624,6 @@ def run_fused_ingest(
         geo = [g for g in geo if (g["channel"], g["stack"]) in keep]
     if not geo:
         return [], {"n_chunks": 0, "chunk_bytes": 0}
-    for g in geo:
-        if g["dtype"] not in _ZARR_DTYPES:
-            raise ValueError(f"unsupported dtype {g['dtype']} in {g}")
     meta_rows = [
         {
             **g,
@@ -774,9 +770,11 @@ def run_fused_ingest(
             windowed_mean,
         )
         from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+            ChunkWriter,
             _fs_for,
             _make_codec as make_codec,
-            pad_block,
+            chunk_key,
+            stack_group,
         )
         from aind_smartspim_data_transformation_spark.sources.stack_reader import (
             decode_image_gray,
@@ -916,7 +914,8 @@ def run_fused_ingest(
             for buf, p in zip(bufs, parts):
                 buf[i] = p
         fs, base = _fs_for(output_root)
-        made: set[str] = set()
+        cw = ChunkWriter(fs, compress)
+        group = stack_group(base, channel, stack)
         n_chunks = 0
         raw_bytes = 0
         for buf, (cy0, _y0, _y1) in zip(bufs, wins):
@@ -931,30 +930,11 @@ def run_fused_ingest(
                     n_chunks += 1
                     raw_bytes += arr.nbytes
                     for lvl in range(n_levels):
-                        out = pad_block(arr, stack_ladder[lvl])  # edge → pad
-                        key = "/".join(
-                            [
-                                base,
-                                channel,
-                                f"{stack}.ome.zarr",
-                                str(lvl),
-                                "0",
-                                "0",
-                                str(cz),
-                                str(cy0 + cyy),
-                                str(cx),
-                            ]
+                        cw.write(
+                            chunk_key(group, lvl, cz, cy0 + cyy, cx),
+                            arr,
+                            stack_ladder[lvl],
                         )
-                        parent = key.rsplit("/", 1)[0]
-                        if parent not in made:
-                            fs.create_dir(parent, recursive=True)
-                            made.add(parent)
-                        with fs.open_output_stream(key) as f:
-                            f.write(
-                                compress(
-                                    np.ascontiguousarray(out).tobytes()
-                                )
-                            )
                         if lvl < n_levels - 1:
                             # downsample the UNPADDED data: zero
                             # padding before the mean would corrupt

@@ -41,13 +41,14 @@ from aind_smartspim_data_transformation_spark.sources.stack_reader import (
 
 
 def _ingest_chunks(spark: SparkSession, settings: ImagingJobSettings, root: str):
-    """Choose the scan path: DataSource (one partition per stack, no
-    z-map — the default at scale) when the Python DataSource API is
-    available, the binaryFile+UDF pipeline otherwise.  Both are
-    bit-identical on clean trees (tests/test_datasource.py); the
-    DataSource scan has no dead-letter channel, so quarantine jobs
-    route to the UDF pipeline (settings validation already refused a
-    forced datasource+quarantine combination)."""
+    """Choose the scan path and return (chunk table, route): DataSource
+    (one partition per stack, no z-map — the default at scale) when the
+    Python DataSource API is available, the binaryFile+UDF pipeline
+    otherwise.  Both are bit-identical on clean trees
+    (tests/test_datasource.py); the DataSource scan has no dead-letter
+    channel, so quarantine jobs route to the UDF pipeline (settings
+    validation already refused a forced datasource+quarantine
+    combination)."""
     cz, cy, cx = settings.chunk_size
     # Probe the capabilities the DataSource path actually uses, not
     # just the public attribute: on Spark Connect `spark.dataSource`
@@ -62,10 +63,11 @@ def _ingest_chunks(spark: SparkSession, settings: ImagingJobSettings, root: str)
         and ds_capable
         and settings.on_error == "fail"
     ):
-        return read_stack_tree_datasource(
+        chunks = read_stack_tree_datasource(
             spark, f"{root}/SmartSPIM", chunk_z=cz, chunk_y=cy, chunk_x=cx
         )
-    return read_stack_tree(
+        return chunks, "datasource"
+    chunks = read_stack_tree(
         spark,
         f"{root}/SmartSPIM",
         chunk_z=cz,
@@ -73,6 +75,7 @@ def _ingest_chunks(spark: SparkSession, settings: ImagingJobSettings, root: str)
         chunk_x=cx,
         on_error=settings.on_error,
     )
+    return chunks, "udf"
 
 
 def partition_stacks(stacks: list, n_partitions: int) -> list[list]:
@@ -88,6 +91,11 @@ def partition_stacks(stacks: list, n_partitions: int) -> list[list]:
 
 
 def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
+    """Run the whole ingest; returns status_code, message, the written
+    stack groups, the ingest metrics, and ``route`` — the ingest path
+    taken: ``"fused"`` (band tasks), ``"datasource"`` or ``"udf"`` (the
+    chunk-table pipeline over either scan), or None when this
+    partition owns no stacks."""
     start = time.time()
     root = str(settings.input_source)
     # With s3_location set, executors write STRAIGHT to the object
@@ -130,6 +138,7 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
                 "message": "empty partition",
                 "written": [],
                 "metrics": {},
+                "route": None,
             }
 
     # Fused zero-shuffle path (imaging/fused.py): "auto" takes it when
@@ -176,9 +185,10 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
                 ),
                 "written": written,
                 "metrics": metrics,
+                "route": "fused",
             }
 
-    chunks = _ingest_chunks(spark, settings, root)
+    chunks, route = _ingest_chunks(spark, settings, root)
     if mine is not None:
         keys = spark.createDataFrame(mine, "channel string, stack string")
         chunks = chunks.join(F.broadcast(keys), ["channel", "stack"])
@@ -224,6 +234,7 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
         "message": f"wrote {len(written)} stacks in {time.time() - start:.1f}s",
         "written": written,
         "metrics": obs.get,
+        "route": route,
     }
 
 

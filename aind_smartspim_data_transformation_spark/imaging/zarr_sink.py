@@ -7,13 +7,17 @@ Re-expresses the reference's zarr writer (SURVEY.md §2.1 S7,
   job (``_arrow_foreach``) — embarrassingly parallel, no coordination,
   idempotent (re-run overwrites);
 - the driver writes all JSON metadata (.zgroup/.zattrs/.zarray) ONCE,
-  which removes the reference's create-race handling
-  (`safe_create_zarr_group`, `compress/png_to_zarr.py:503-530`);
+  after every chunk has landed (metadata-last, ``_write_all_metadata``
+  — shared with the fused ingest in imaging/fused.py), which removes
+  the reference's create-race handling (`safe_create_zarr_group`,
+  `compress/png_to_zarr.py:503-530`) and leaves a failed job with no
+  store that parses as complete;
 - chunk keys use ``dimension_separator="/"`` →
   ``<level>/<t>/<c>/<z>/<y>/<x>`` exactly like the reference
-  (`compress/png_to_zarr.py:697`);
+  (`compress/png_to_zarr.py:697`), built only by ``chunk_key``;
 - edge chunks are zero-padded to the nominal chunk shape (zarr v2
-  stores full-size chunks);
+  stores full-size chunks) by ``ChunkWriter``, the one pad → compress
+  → write step every writer uses;
 - compression is pluggable (``_make_codec``): zlib / none always work;
   blosc (the reference's default codec, `compress/zarr_utilities.py`)
   is gated behind an import-try and activates on any cluster with
@@ -106,16 +110,65 @@ def _make_decodec(meta: dict[str, Any] | None):
 def pad_block(arr: np.ndarray, dims) -> np.ndarray:
     """Zero-pad an edge block to the nominal chunk shape (zarr v2
     stores full-size chunks); returns ``arr`` unchanged when already
-    full.  ONE implementation for every writer (the chunk-table sinks,
-    the append path, both DataSource writers, and the fused ingest) —
-    the padding convention is load-bearing for byte-compatibility
-    across write paths, so it must not be re-derived per site."""
+    full.  Writers reach it through :class:`ChunkWriter` — the padding
+    convention is load-bearing for byte-compatibility across write
+    paths, so it must not be re-derived per site."""
     dims = tuple(dims)
     if arr.shape == dims:
         return arr
     full = np.zeros(dims, dtype=arr.dtype)
     full[tuple(slice(0, s) for s in arr.shape)] = arr
     return full
+
+
+def chunk_key(group: str, lvl: int, cz: int, cy: int, cx: int) -> str:
+    """Key of one chunk inside a stack group: ``<group>/<lvl>/0/0/<cz>/
+    <cy>/<cx>`` (t = c = 0, ``dimension_separator="/"``, like the
+    reference, `compress/png_to_zarr.py:697`).  The ONE place the
+    store's chunk-key layout is spelled out — every writer and
+    :func:`read_zarr_level` build keys here."""
+    return f"{group}/{lvl}/0/0/{cz}/{cy}/{cx}"
+
+
+def stack_group(root: str, channel: str, stack: str) -> str:
+    """A stack's group under an output root: ``<root>/<channel>/
+    <stack>.ome.zarr`` — for metadata paths and chunk keys alike."""
+    return os.path.join(root, channel, f"{stack}.ome.zarr")
+
+
+class ChunkWriter:
+    """One task's chunk writes through one filesystem handle: zero-pad
+    an edge block to its level's chunk dims, compress, create the
+    parent directory once per task, write.  Every writer goes through
+    it (the chunk-table sink, the z-slab append, the fused band tasks,
+    and the streaming writer's staging and promotion), so the write
+    paths cannot drift apart on bytes."""
+
+    def __init__(self, fs, compress=None):
+        self.fs = fs
+        self.compress = compress
+        self._made: set[str] = set()
+
+    def make_parent(self, key: str) -> None:
+        parent = key.rsplit("/", 1)[0]
+        if parent not in self._made:
+            self.fs.create_dir(parent, recursive=True)
+            self._made.add(parent)
+
+    def write(self, key: str, block: np.ndarray, dims) -> None:
+        self.make_parent(key)
+        payload = self.compress(
+            np.ascontiguousarray(pad_block(block, dims)).tobytes()
+        )
+        with self.fs.open_output_stream(key) as f:
+            f.write(payload)
+
+
+def _row_block(r) -> np.ndarray:
+    """A chunk-table row's (dz, dy, dx) pixel block."""
+    return np.frombuffer(r["data"], dtype=np.dtype(r["dtype"])).reshape(
+        r["dz"], r["dy"], r["dx"]
+    )
 
 
 def _fs_for(root: str):
@@ -199,143 +252,6 @@ def _level_geometry(level_df: DataFrame) -> tuple[tuple[int, ...], str]:
     return (int(row["z"]), int(row["y"]), int(row["x"])), row["dtype"]
 
 
-def write_ome_zarr(
-    levels: list[DataFrame],
-    output_path: str,
-    stack_name: str,
-    channel_name: str,
-    voxel_size_zyx: list[float],
-    scale_factor_zyx: list[int],
-    chunk_zyx: list[int],
-    compressor_name: str = "zlib",
-    compressor_kwargs: dict[str, Any] | None = None,
-) -> str:
-    """Write a multiscale OME-Zarr group for one stack.
-
-    ``levels[i]`` is the level-i chunk table (imaging/pyramid.py).
-    Returns the stack group path.
-    """
-    group = os.path.join(output_path, f"{stack_name}.ome.zarr")
-    codec_meta, compress = _make_codec(compressor_name, compressor_kwargs)
-    (z0, y0, x0), dtype = _level_geometry(levels[0])
-    shape_5d = (1, 1, z0, y0, x0)
-    n_lvls = len(levels)
-
-    transforms, chunk_opts = compute_scale_ladder(
-        voxel_size_zyx, scale_factor_zyx, n_lvls, shape_5d, chunk_zyx
-    )
-    _write_json(os.path.join(output_path, ".zgroup"), {"zarr_format": 2})
-    _write_json(os.path.join(group, ".zgroup"), {"zarr_format": 2})
-    _write_json(
-        os.path.join(group, ".zattrs"),
-        {
-            "multiscales": [
-                {
-                    "axes": axes_5d(),
-                    "datasets": [
-                        {"path": str(i), "coordinateTransformations": transforms[i]}
-                        for i in range(n_lvls)
-                    ],
-                    "name": f"/{stack_name}.ome.zarr",
-                    "version": "0.4",
-                    "metadata": pyramid_provenance(),
-                }
-            ],
-            "omero": build_omero(
-                channel_name,
-                shape_5d,
-                np.dtype(dtype),
-                image_name=f"{stack_name}.ome.zarr",
-            ),
-        },
-    )
-
-    shape = [1, 1, z0, y0, x0]
-    # nominal chunk = dims of the (0,0,0) chunk: the stored grid is
-    # regular except at upper edges, and may differ from the *requested*
-    # chunk (e.g. full-plane assembly keeps whole Y/X slices).  ONE
-    # lookup at level 0; deeper levels follow exactly — the windowed
-    # mean maps tile dims d → ceil(d/f) per level, so no per-level
-    # first() job (each was a full Spark job; at 4 levels × many stacks
-    # the saved scheduling is material).
-    from pyspark.sql import functions as F
-
-    first = (
-        levels[0]
-        .filter((F.col("cz") == 0) & (F.col("cy") == 0) & (F.col("cx") == 0))
-        .select("dz", "dy", "dx")
-        .first()
-    )
-    chunk_dims = [int(first["dz"]), int(first["dy"]), int(first["dx"])]
-
-    for lvl, level_df in enumerate(levels):
-        # Same geometry guard as write_ome_zarr_all: refuse chunk dims a
-        # per-chunk pyramid can't reduce exactly (divisible by factor or
-        # full-extent on each axis) instead of writing divergent levels.
-        if lvl < n_lvls - 1:
-            for ax, (d, f) in enumerate(zip(chunk_dims, scale_factor_zyx)):
-                if d % f != 0 and d != shape[2 + ax]:
-                    raise ValueError(
-                        f"zarr sink: level-{lvl} chunk dim {d} on axis "
-                        f"{'zyx'[ax]} of {stack_name} is neither divisible "
-                        f"by factor {f} nor the full extent {shape[2 + ax]} "
-                        f"— per-chunk pyramid would diverge from the "
-                        f"global windowed mean"
-                    )
-        lvl_dir = os.path.join(group, str(lvl))
-        nominal_chunk = [1, 1, *chunk_dims]
-        _write_json(
-            os.path.join(lvl_dir, ".zarray"),
-            {
-                "zarr_format": 2,
-                "shape": shape,
-                "chunks": nominal_chunk,
-                "dtype": _ZARR_DTYPES[dtype],
-                "compressor": codec_meta,
-                "fill_value": 0,
-                "filters": None,
-                "order": "C",
-                "dimension_separator": "/",
-            },
-        )
-        chunk_shape = tuple(nominal_chunk[2:])
-
-        def _write_partition(
-            rows, lvl_dir=lvl_dir, chunk_shape=chunk_shape, compress=compress
-        ):
-            fs, base = _fs_for(lvl_dir)  # once per task, not per chunk
-            made: set[str] = set()
-            for r in rows:
-                arr = np.frombuffer(r["data"], dtype=np.dtype(r["dtype"])).reshape(
-                    r["dz"], r["dy"], r["dx"]
-                )
-                arr = pad_block(arr, chunk_shape)  # edge chunk → zero-pad
-                key = "/".join(
-                    [base, "0", "0", str(r["cz"]), str(r["cy"]), str(r["cx"])]
-                )
-                parent = key.rsplit("/", 1)[0]
-                if parent not in made:
-                    fs.create_dir(parent, recursive=True)
-                    made.add(parent)
-                with fs.open_output_stream(key) as f:
-                    f.write(compress(np.ascontiguousarray(arr).tobytes()))
-
-        _arrow_foreach(level_df, _write_partition)
-        shape = [
-            1,
-            1,
-            -(-shape[2] // scale_factor_zyx[0]),
-            -(-shape[3] // scale_factor_zyx[1]),
-            -(-shape[4] // scale_factor_zyx[2]),
-        ]
-        chunk_dims = [
-            -(-chunk_dims[0] // scale_factor_zyx[0]),
-            -(-chunk_dims[1] // scale_factor_zyx[1]),
-            -(-chunk_dims[2] // scale_factor_zyx[2]),
-        ]
-    return group
-
-
 def write_ome_zarr_all(
     levels: list[DataFrame],
     output_root: str,
@@ -345,16 +261,19 @@ def write_ome_zarr_all(
     compressor_name: str = "zlib",
     compressor_kwargs: dict[str, Any] | None = None,
 ) -> list[str]:
-    """Multi-stack sink: ``levels[i]`` is the level-i chunk table over
+    """Chunk-table sink: ``levels[i]`` is the level-i chunk table over
     ALL stacks (rows keyed by channel/stack).  Stack groups land at
     ``<output_root>/<channel>/<stack>.ome.zarr``.
 
-    This is the 1000-executor shape: ONE geometry aggregation and ONE
-    Arrow-batched write job (``_arrow_foreach``) per level for the whole dataset —
-    per-stack routing happens inside the task from each row's
-    channel/stack columns — instead of the per-stack sink's
-    jobs × stacks fan-out.  Metadata stays driver-side single-writer.
-    Returns the sorted stack group paths.
+    ONE geometry aggregation and ONE Arrow-batched write job
+    (``_arrow_foreach``) per level for the whole dataset — per-stack
+    routing happens inside the task from each row's channel/stack
+    columns.  Metadata-last, like the fused ingest: the layout is
+    planned first (the geometry guard refuses before any chunk lands),
+    and the driver writes every stack's metadata only after every
+    level's write job has succeeded — a failed job leaves no target
+    that parses as a complete store with missing chunks reading as
+    zeros.  Returns the sorted stack group paths.
     """
     from pyspark.sql import functions as F
 
@@ -383,7 +302,29 @@ def write_ome_zarr_all(
     )
 
     n_lvls = len(levels)
-    groups, chunk_ladder = _write_all_metadata(
+    groups, chunk_ladder = plan_store_layout(
+        geo, output_root, scale_factor_zyx, n_lvls
+    )
+
+    for lvl, level_df in enumerate(levels):
+
+        def _write_partition(rows, lvl=lvl):
+            fs, base = _fs_for(output_root)  # once per task, not per chunk
+            cw = ChunkWriter(fs, compress)
+            for r in rows:
+                c, s = r["channel"], r["stack"]
+                cw.write(
+                    chunk_key(
+                        stack_group(base, c, s), lvl, r["cz"], r["cy"], r["cx"]
+                    ),
+                    _row_block(r),
+                    chunk_ladder[(c, s)][lvl],
+                )
+
+        _arrow_foreach(level_df, _write_partition)
+
+    # every level's chunks are on disk — NOW the stores may parse
+    _write_all_metadata(
         geo,
         output_root,
         voxel_size_zyx,
@@ -392,42 +333,6 @@ def write_ome_zarr_all(
         n_lvls,
         codec_meta,
     )
-
-    for lvl, level_df in enumerate(levels):
-
-        def _write_partition(
-            rows, lvl=lvl, root=output_root, ladder=chunk_ladder, compress=compress
-        ):
-            fs, base = _fs_for(root)  # once per task, not per chunk
-            made: set[str] = set()
-            for r in rows:
-                chunk_shape = ladder[(r["channel"], r["stack"])][lvl]
-                arr = np.frombuffer(
-                    r["data"], dtype=np.dtype(r["dtype"])
-                ).reshape(r["dz"], r["dy"], r["dx"])
-                arr = pad_block(arr, chunk_shape)  # edge chunk → zero-pad
-                key = "/".join(
-                    [
-                        base,
-                        r["channel"],
-                        f"{r['stack']}.ome.zarr",
-                        str(lvl),
-                        "0",
-                        "0",
-                        str(r["cz"]),
-                        str(r["cy"]),
-                        str(r["cx"]),
-                    ]
-                )
-                parent = key.rsplit("/", 1)[0]
-                if parent not in made:
-                    fs.create_dir(parent, recursive=True)
-                    made.add(parent)
-                with fs.open_output_stream(key) as f:
-                    f.write(compress(np.ascontiguousarray(arr).tobytes()))
-
-        _arrow_foreach(level_df, _write_partition)
-
     return sorted(groups)
 
 
@@ -440,24 +345,22 @@ def _write_all_metadata(
     n_lvls: int,
     codec_meta: dict[str, Any] | None,
     extra_attrs: dict[str, Any] | None = None,
-) -> tuple[list[str], dict[tuple[str, str], list[tuple[int, int, int]]]]:
+) -> None:
     """Driver-side metadata writer shared by the chunk-table sink
     (:func:`write_ome_zarr_all`) and the fused ingest
     (imaging/fused.py): per stack, the group .zgroup/.zattrs and every
     level's .zarray, including the geometry guard.  ``geo`` rows carry
     channel/stack, full extents z/y/x, dtype, and origin-chunk dims
-    cdz/cdy/cdx.  Returns (group paths, per-stack chunk-dims ladder) —
-    ONE implementation so the two write paths can never disagree on
-    metadata.  ``extra_attrs`` entries land inside the stack's single
+    cdz/cdy/cdx — ONE implementation so the write paths can never
+    disagree on metadata.  ``extra_attrs`` entries land inside the stack's single
     ``.zattrs`` write (the streaming writer's epoch marker must be
     atomic with store creation — see append_slab_transaction)."""
     fz, fy, fx = scale_factor_zyx
     groups, chunk_ladder = plan_store_layout(
         geo, output_root, scale_factor_zyx, n_lvls
     )
-    for r in geo:
+    for r, group in zip(geo, groups):
         channel, stack = r["channel"], r["stack"]
-        group = os.path.join(output_root, channel, f"{stack}.ome.zarr")
         shape_5d = (1, 1, int(r["z"]), int(r["y"]), int(r["x"]))
         transforms, _ = compute_scale_ladder(
             voxel_size_zyx, scale_factor_zyx, n_lvls, shape_5d, chunk_zyx
@@ -516,8 +419,6 @@ def _write_all_metadata(
         # levels-without-marker)
         _write_json(os.path.join(group, ".zattrs"), attrs)
 
-    return groups, chunk_ladder
-
 
 def plan_store_layout(
     geo,
@@ -533,15 +434,19 @@ def plan_store_layout(
     dims are divisible by the factor OR the chunk spans the whole
     extent on that axis (then the truncated window IS the array edge)
     — refuse loudly instead of planning levels that diverge from the
-    global windowed mean (see pyramid.validate_pyramid_geometry)."""
+    global windowed mean (see pyramid.validate_pyramid_geometry).  A
+    dtype the store cannot declare is refused here too."""
     fz, fy, fx = scale_factor_zyx
     groups: list[str] = []
     chunk_ladder: dict[tuple[str, str], list[tuple[int, int, int]]] = {}
     for r in geo:
         channel, stack = r["channel"], r["stack"]
-        groups.append(
-            os.path.join(output_root, channel, f"{stack}.ome.zarr")
-        )
+        if r["dtype"] not in _ZARR_DTYPES:
+            raise ValueError(
+                f"zarr sink: unsupported dtype {r['dtype']} in "
+                f"{channel}/{stack}"
+            )
+        groups.append(stack_group(output_root, channel, stack))
         shape = [1, 1, int(r["z"]), int(r["y"]), int(r["x"])]
         dims = (int(r["cdz"]), int(r["cdy"]), int(r["cdx"]))
         ladder = []
@@ -584,7 +489,7 @@ def read_zarr_level(group: str, level: int) -> np.ndarray:
     for cz in range(cz_n):
         for cy in range(cy_n):
             for cx in range(cx_n):
-                key = "/".join([lvl_dir, "0", "0", str(cz), str(cy), str(cx)])
+                key = chunk_key(gpath, level, cz, cy, cx)
                 if fs.get_file_info(key).type == pafs.FileType.NotFound:
                     continue
                 with fs.open_input_stream(key) as f:
@@ -648,28 +553,16 @@ def append_ome_zarr_z(levels: list[DataFrame], group: str) -> str:
     def _write_level(lvl: int, off: int, meta: dict) -> None:
         compress = _compress_from_meta(meta["compressor"])
         chunk_shape = tuple(meta["chunks"][2:])
-        lvl_dir = f"{group}/{lvl}"
 
-        def _write_partition(
-            rows, lvl_dir=lvl_dir, chunk_shape=chunk_shape,
-            compress=compress, off=off,
-        ):
-            fs2, base = _fs_for(lvl_dir)
-            made: set[str] = set()
+        def _write_partition(rows):
+            fs, gbase = _fs_for(group)
+            cw = ChunkWriter(fs, compress)
             for r in rows:
-                arr = np.frombuffer(r["data"], dtype=np.dtype(r["dtype"])).reshape(
-                    r["dz"], r["dy"], r["dx"]
+                cw.write(
+                    chunk_key(gbase, lvl, r["cz"] + off, r["cy"], r["cx"]),
+                    _row_block(r),
+                    chunk_shape,
                 )
-                arr = pad_block(arr, chunk_shape)
-                key = "/".join(
-                    [base, "0", "0", str(r["cz"] + off), str(r["cy"]), str(r["cx"])]
-                )
-                parent = key.rsplit("/", 1)[0]
-                if parent not in made:
-                    fs2.create_dir(parent, recursive=True)
-                    made.add(parent)
-                with fs2.open_output_stream(key) as f:
-                    f.write(compress(np.ascontiguousarray(arr).tobytes()))
 
         _arrow_foreach(levels[lvl], _write_partition)
 

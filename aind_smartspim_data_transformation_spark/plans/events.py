@@ -355,7 +355,7 @@ def _bucket_us(width_us: int) -> str:
     rely on (ADVICE r12).  ``pmod`` is non-negative, ``x - pmod(x, w)``
     is an exact multiple of ``w``, so the ``div`` is exact floor
     division over the full long domain — identical to plain ``div`` on
-    the post-epoch testdata, plans re-sampled via _LEADING_R13.
+    the post-epoch testdata.
     """
     return (
         f"(unix_micros(ts) - pmod(unix_micros(ts), {width_us})) "

@@ -23,46 +23,6 @@ from aind_smartspim_data_transformation_spark.plans import relational
 # leading list is (a) all keys with no driver row yet, oldest first,
 # then (b) this round's brand-new keys; r-green families trail.
 #
-# Round-12 rotation (VERDICT r11 ask #3): queries whose
-# implementations changed in r11 with no r11 driver row, plus this
-# round's changes.  s09/n07 call `lloyd_train`, whose signature grew
-# the mapInPandas assign-mode branch in r11 (equality-tested, but the
-# rotation invariant says re-sample).  d03 was refactored this round
-# (shared `_verify_jaccard_pairs` helper + the Observation hook; plan
-# value-identical, re-sample anyway); i05 had its chunk-dim literals
-# hoisted to I05_CZ/I05_CY constants this round (ADVICE r11).
-# i01–i04 stay put: the r11 imaging_queries.py diff was i05-only
-# (verified from `git diff b65107c..2ece7b6`).  d16 is brand-new
-# (invariant (b)): bounded recall recovery for saturated LSH buckets.
-# e08's equi-key grew the 30-min bucket (zipf-sweep finding, SCALE.md
-# §6o) and e16 is the new bounded-partition rolling twin — both lead.
-# Round-13 rotation (VERDICT r12 ask #3): queries whose plans changed
-# in r13.  d16's verify phase is now digest-collapsed (ask #1 — same
-# result set, new plan); e16 gained the exact floor-division bucket
-# key AND the null-exact sum recomposition (ADVICE r12); e08 gained
-# the floor-division bucket key.  No new registry keys this round
-# (the verdict's standing "do not add except where named" rule).
-# Round-14 rotation (VERDICT r13 ask #5): queries whose plans changed
-# in r14.  d16's cross-digest verify now canonicalizes the digest
-# pair before the distinct (ADVICE r13 — halves worst-case rep-set
-# join volume, same result set); e16 dropped the dead n_ge coalesce
-# (ADVICE r13 — provably-non-null frame sum, plan simplification);
-# e14's registered plan IS the pointer-jumping formulation now
-# (VERDICT r13 ask #4, measured adoption — the rCTE twin stays
-# in-tree as e14_sessions_rcte; SCALE.md §6t).  No new registry keys.
-# Round-15 rotation (optimization round; VERDICT r14 ask #4): every
-# query whose plan changed in r15 leads.  The r15 changes are
-# (a) the conditional unsplittable-scan spread
-# (tables.spread_unsplittable_scan) under the dedup-family documents
-# scans, text._docs and the s09/n07 embeddings scans — which reaches
-# every query built on d03's pipeline (d06, d08, d09, d11, d12, d13,
-# c14, n01, n13) and the whole t-family + x04's shingle stream;
-# (b) d05's explicit AQE-exempt pair-loop repartition; (c) e13's
-# registered plan is the bucketed formulation since r15 (VERDICT r14
-# ask #1 — the e14 precedent; the native RANGE frame stays as the
-# diagnostic twin e13_rolling_24h_native); (d) e14's pointer-jumping
-# loop changes from r15 optimization work (converged-row filtering /
-# release mechanics).  No new registry keys.
 # Round-16 rotation (optimization round 2; VERDICT r15 ask #7): every
 # query whose plan or operator internals r16 touched leads.  (a) s10/
 # s11's PQ encode+ADC moved from literal codebook/LUT expression trees
@@ -83,88 +43,6 @@ _LEADING_R16 = [
     "d07_simhash_hamming_pairs",
     "d14_hamming_neighbor_topk",
     "e14_sessions_recursive",
-]
-
-# Kept so NOTES/VERDICT history stays greppable; no longer drive the
-# window.
-_LEADING_R15 = [
-    "e13_rolling_24h",
-    "e14_sessions_recursive",
-    "d02_dedup_ngram_jaccard",
-    "d03_dedup_minhash_lsh",
-    "d04_simhash",
-    "d05_dedup_embedding_cosine",
-    "d06_dedup_corpus",
-    "d07_simhash_hamming_pairs",
-    "d08_dup_components",
-    "d09_dup_components_star",
-    "d11_split_leakage",
-    "d12_dup_pagerank",
-    "d13_keep_best_quality",
-    "d14_hamming_neighbor_topk",
-    "d15_lsh_saturation_audit",
-    "d16_lsh_recovered_pairs",
-    "n01_minhash_estimator_qa",
-    "n07_semantic_dedup",
-    "n13_cluster_merge_qa",
-    "c14_curation_pipeline",
-    "s09_kmeans_train",
-    "q23_percentiles",
-    "c08_contamination",
-    "d10_substring_coverage",
-    "n09_cross_source_contamination",
-    "x04_hll_distinct",
-    "t01_token_stats",
-    "t02_quality_score",
-    "t03_lang_stats",
-    "t04_lang_id",
-    "t05_fingerprint",
-    "t06_top_bigrams",
-    "t07_tfidf_top_terms",
-    "t08_repetition_stats",
-    "t09_readability",
-    "t10_vocab_zipf",
-    "t11_char_entropy",
-    "t12_mean_token_rank",
-]
-
-# Kept so NOTES/VERDICT history stays greppable; no longer drive the
-# window.
-_LEADING_R14 = [
-    "e14_sessions_recursive",
-    "d16_lsh_recovered_pairs",
-    "e16_rolling_24h_bucketed",
-]
-
-# Kept so NOTES/VERDICT history stays greppable; no longer drive the
-# window.
-_LEADING_R13 = [
-    "d16_lsh_recovered_pairs",
-    "e16_rolling_24h_bucketed",
-    "e08_interval_join",
-]
-_LEADING_R12 = [
-    "d16_lsh_recovered_pairs",
-    "e08_interval_join",
-    "e16_rolling_24h_bucketed",
-    "d03_dedup_minhash_lsh",
-    "s09_kmeans_train",
-    "n07_semantic_dedup",
-    "i05_resume_bookkeeping",
-]
-
-# Kept so NOTES/VERDICT history stays greppable; no longer drive the
-# window.
-_LEADING_R11 = [
-    "i05_resume_bookkeeping",
-    "e14_sessions_recursive",
-    "d15_lsh_saturation_audit",
-]
-_LEADING_R10 = [
-    "d07_simhash_hamming_pairs",
-    "n07_semantic_dedup",
-    "d05_dedup_embedding_cosine",
-    "d14_hamming_neighbor_topk",
 ]
 
 
@@ -196,7 +74,7 @@ def _modules():
         "aind_smartspim_data_transformation_spark.plans.imaging_queries",
         "aind_smartspim_data_transformation_spark.operators.dedup",
         # Module order no longer defines the sample window (the explicit
-        # _LEADING_R12 rotation above does); extras still merges last so
+        # _LEADING_R16 rotation above does); extras still merges last so
         # its re-registrations of relational helpers win by key.
         "aind_smartspim_data_transformation_spark.plans.extras",
     ]

@@ -38,7 +38,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
@@ -112,9 +111,6 @@ class SmartspimDataSource(DataSource):
 
     def simpleStreamReader(self, schema) -> "SmartspimStreamReader":
         return SmartspimStreamReader(self.options)
-
-    def writer(self, schema, overwrite: bool) -> "SmartspimWriter":
-        return SmartspimWriter(self.options, overwrite)
 
     def streamWriter(self, schema, overwrite: bool) -> "SmartspimStreamWriter":
         return SmartspimStreamWriter(self.options)
@@ -357,260 +353,12 @@ class SmartspimStreamReader(SimpleDataSourceStreamReader):
         pass  # offsets are self-contained; nothing external to release
 
 
-# ---------------------------------------------------------------------------
-# Writer: chunk table → OME-Zarr through Spark's commit protocol
-# ---------------------------------------------------------------------------
-
-WRITE_SCHEMA = (
-    "channel string, stack string, level int, cz int, cy int, cx int, "
-    "dz int, dy int, dx int, dtype string, data binary"
-)
-
-
-class ChunkStats(WriterCommitMessage):
-    """Per-task accounting: for each (channel, stack, level) this task
-    touched, the observed max extents (exact level extents once merged
-    across tasks — extent = max(chunk_index·chunk_dim + chunk_fill)),
-    dtype, and chunk/byte counts.  Plain picklable dict payload."""
-
-    def __init__(self, stats: dict):
-        self.stats = stats
-
-
-class SmartspimWriter(DataSourceWriter):
-    """``df.write.format("smartspim").options(...).save(root)`` — the
-    OME-Zarr sink expressed through the Python DataSource COMMIT
-    PROTOCOL (the reader/streaming-reader's missing third leg).
-
-    Input rows: :data:`WRITE_SCHEMA` — the union of per-level chunk
-    tables with a ``level`` column (the same rows
-    ``write_ome_zarr_all`` consumes, any partitioning; no grouping or
-    co-location requirement).
-
-    Crash safety falls out of the protocol: tasks write ONLY chunk
-    files; ``.zgroup``/``.zattrs``/``.zarray`` metadata is written by
-    :meth:`commit` on the driver AFTER every task has succeeded — so a
-    failed or half-finished job never leaves a store that parses as
-    complete (metadata-last, the same invariant the incremental
-    append's fence protects).  ``commit`` also validates the pyramid:
-    every stack must carry contiguous levels 0..n-1 whose observed
-    extents equal the ceil-division chain of its level-0 extents — a
-    mis-downsampled input is refused before metadata exists.
-
-    One deliberate divergence from the driver-side sinks: chunk dims
-    are the UNCLAMPED ladder derived from ``option("chunk")`` (store
-    chunk shape even when a stack's extent is smaller on an axis).
-    Zarr permits chunks larger than the array; clamping requires every
-    task to know its stack's global extent, which a single-pass
-    distributed writer cannot (and should not) coordinate.  Stores are
-    byte-identical to ``write_ome_zarr_all`` whenever extents ≥ chunk
-    (the production case) and array-identical always — both asserted
-    in tests/test_datasource.py.
-
-    Options: ``voxel_size`` (json [z,y,x] µm, default [1,1,1]),
-    ``scale_factor`` (json, default [2,2,2]), ``chunk`` (json, default
-    [128,128,128]), ``n_levels`` (default: max level seen + 1),
-    ``compressor`` / ``compressor_kwargs`` (default zlib).
-    ``mode("overwrite")`` removes the target root up front (driver,
-    before any task); the default append mode writes into place.
-    """
-
-    def __init__(self, options, overwrite: bool):
-        import json as _json
-
-        self.root = options.get("path")
-        if not self.root:
-            raise ValueError("smartspim writer requires .save(<output root>)")
-        self.voxel = _json.loads(options.get("voxel_size", "[1.0, 1.0, 1.0]"))
-        self.factors = _json.loads(options.get("scale_factor", "[2, 2, 2]"))
-        self.chunk = _json.loads(options.get("chunk", "[128, 128, 128]"))
-        self.n_levels = (
-            int(options["n_levels"]) if "n_levels" in options else None
-        )
-        if self.n_levels is not None and self.n_levels < 1:
-            raise ValueError(f"n_levels must be >= 1, got {self.n_levels}")
-        self.compressor = options.get("compressor", "zlib")
-        self.compressor_kwargs = _json.loads(
-            options.get("compressor_kwargs", "null")
-        )
-        from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-            validate_pyramid_geometry,
-        )
-
-        if self.n_levels is not None:
-            validate_pyramid_geometry(self.chunk, self.factors, self.n_levels)
-        if overwrite:
-            from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-                _fs_for,
-            )
-
-            fs, base = _fs_for(self.root)
-            try:
-                fs.delete_dir(base)
-            except FileNotFoundError:
-                pass
-
-    def _ladder(self, max_level: int) -> list[tuple[int, int, int]]:
-        dims = tuple(self.chunk)
-        out = [dims]
-        fz, fy, fx = self.factors
-        for _ in range(max_level):
-            dims = (-(-dims[0] // fz), -(-dims[1] // fy), -(-dims[2] // fx))
-            out.append(dims)
-        return out
-
-    def write(self, iterator) -> ChunkStats:
-        import numpy as np
-
-        from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-            _fs_for,
-            _make_codec,
-            pad_block,
-        )
-
-        _, compress = _make_codec(self.compressor, self.compressor_kwargs)
-        fs, base = _fs_for(self.root)
-        ladder: list[tuple[int, int, int]] = self._ladder(0)
-        made: set[str] = set()
-        stats: dict = {}
-        for r in iterator:
-            lvl = int(r["level"])
-            if lvl < 0 or (
-                self.n_levels is not None and lvl >= self.n_levels
-            ):
-                # an out-of-range level would land chunk files commit()
-                # never validates — junk directories inside a store
-                # that finalizes green
-                raise ValueError(
-                    f"row level {lvl} outside [0, {self.n_levels}) "
-                    f"({r['channel']}/{r['stack']})"
-                )
-            while lvl >= len(ladder):
-                ladder = self._ladder(len(ladder))
-            dims = ladder[lvl]
-            shp = (int(r["dz"]), int(r["dy"]), int(r["dx"]))
-            if any(s > d for s, d in zip(shp, dims)):
-                raise ValueError(
-                    f"chunk {shp} exceeds level-{lvl} store chunk {dims} "
-                    f"({r['channel']}/{r['stack']}) — re-chunk the input "
-                    f"to option('chunk')'s ladder"
-                )
-            arr = np.frombuffer(bytes(r["data"]), dtype=np.dtype(r["dtype"]))
-            arr = pad_block(arr.reshape(shp), dims)
-            key = "/".join(
-                [
-                    base,
-                    r["channel"],
-                    f"{r['stack']}.ome.zarr",
-                    str(lvl),
-                    "0",
-                    "0",
-                    str(int(r["cz"])),
-                    str(int(r["cy"])),
-                    str(int(r["cx"])),
-                ]
-            )
-            parent = key.rsplit("/", 1)[0]
-            if parent not in made:
-                fs.create_dir(parent, recursive=True)
-                made.add(parent)
-            payload = compress(np.ascontiguousarray(arr).tobytes())
-            with fs.open_output_stream(key) as f:
-                f.write(payload)
-            k = (r["channel"], r["stack"], lvl)
-            s = stats.setdefault(
-                k,
-                {"z": 0, "y": 0, "x": 0, "dtype": r["dtype"], "n": 0, "b": 0},
-            )
-            if s["dtype"] != r["dtype"]:
-                raise ValueError(
-                    f"mixed dtypes for {k}: {s['dtype']} vs {r['dtype']}"
-                )
-            s["z"] = max(s["z"], int(r["cz"]) * dims[0] + shp[0])
-            s["y"] = max(s["y"], int(r["cy"]) * dims[1] + shp[1])
-            s["x"] = max(s["x"], int(r["cx"]) * dims[2] + shp[2])
-            s["n"] += 1
-            s["b"] += len(payload)
-        return ChunkStats(stats)
-
-    def commit(self, messages) -> None:
-        from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-            validate_pyramid_geometry,
-        )
-        from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-            _make_codec,
-            _write_all_metadata,
-        )
-
-        merged: dict = {}
-        for m in messages:
-            if m is None:
-                continue
-            for k, s in m.stats.items():
-                t = merged.setdefault(k, dict(s, n=0, b=0))
-                if t["dtype"] != s["dtype"]:
-                    raise ValueError(f"mixed dtypes for {k} across tasks")
-                for ax in ("z", "y", "x"):
-                    t[ax] = max(t[ax], s[ax])
-                t["n"] += s["n"]
-                t["b"] += s["b"]
-        if not merged:
-            return  # empty frame: nothing written, no store to declare
-        by_stack: dict = {}
-        for (channel, stack, lvl), s in merged.items():
-            by_stack.setdefault((channel, stack), {})[lvl] = s
-        n_lvls = self.n_levels or 1 + max(
-            lvl for (_, _, lvl) in merged
-        )
-        validate_pyramid_geometry(self.chunk, self.factors, n_lvls)
-        fz, fy, fx = self.factors
-        geo = []
-        for (channel, stack), lvls in sorted(by_stack.items()):
-            missing = set(range(n_lvls)) - set(lvls)
-            if missing:
-                raise ValueError(
-                    f"{channel}/{stack}: missing pyramid levels "
-                    f"{sorted(missing)} of {n_lvls} — metadata refused, "
-                    f"store left unfinalized"
-                )
-            z, y, x = lvls[0]["z"], lvls[0]["y"], lvls[0]["x"]
-            ez, ey, ex = z, y, x
-            for lvl in range(1, n_lvls):
-                ez, ey, ex = -(-ez // fz), -(-ey // fy), -(-ex // fx)
-                got = (lvls[lvl]["z"], lvls[lvl]["y"], lvls[lvl]["x"])
-                if got != (ez, ey, ex):
-                    raise ValueError(
-                        f"{channel}/{stack} level {lvl}: observed extents "
-                        f"{got} != {(ez, ey, ex)} expected from level 0 by "
-                        f"×{self.factors} reduction — mis-downsampled "
-                        f"input, metadata refused"
-                    )
-            geo.append(
-                {
-                    "channel": channel,
-                    "stack": stack,
-                    "z": z,
-                    "y": y,
-                    "x": x,
-                    "dtype": lvls[0]["dtype"],
-                    # UNCLAMPED ladder origin (see class docstring)
-                    "cdz": self.chunk[0],
-                    "cdy": self.chunk[1],
-                    "cdx": self.chunk[2],
-                }
-            )
-        codec_meta, _ = _make_codec(self.compressor, self.compressor_kwargs)
-        _write_all_metadata(
-            geo, self.root, self.voxel, self.factors, self.chunk,
-            n_lvls, codec_meta,
-        )
-
-    def abort(self, messages) -> None:
-        # metadata-last: nothing was finalized, the target never parses
-        # as a zarr store.  Chunk files from succeeded tasks remain for
-        # a rerun to overwrite (fixed keys, deterministic compressor);
-        # mode("overwrite") clears them wholesale.
-        pass
+def _stage_key(
+    base: str, channel: str, stack: str, lvl: int, cz: int, cy: int, cx: int
+) -> str:
+    """Staging key of one slab-local chunk (its final store key is only
+    known at commit, when the slab's z offset in the store is)."""
+    return f"{base}/{channel}/{stack}/{lvl}/{cz}/{cy}/{cx}"
 
 
 class SlabStage(WriterCommitMessage):
@@ -713,14 +461,15 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
             windowed_mean,
         )
         from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+            ChunkWriter,
             _fs_for,
             _make_codec,
-            pad_block,
         )
 
         _, compress = _make_codec(self.compressor, self.compressor_kwargs)
         staging = f"{self.root}/.staging/{uuid.uuid4().hex}"
         fs, base = _fs_for(staging)
+        cw = ChunkWriter(fs, compress)
         by_stack: dict = {}
         for r in iterator:
             by_stack.setdefault((r["channel"], r["stack"]), []).append(
@@ -756,7 +505,6 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
             )
             levels = []
             arr = vol
-            made: set[str] = set()
             for lvl in range(self.n_levels):
                 chunks = []
                 for cz in range(-(-arr.shape[0] // dims[0])):
@@ -767,23 +515,11 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
                                 cy * dims[1] : (cy + 1) * dims[1],
                                 cx * dims[2] : (cx + 1) * dims[2],
                             ]
-                            block = pad_block(block, dims)  # edge → zero-pad
-                            key = "/".join(
-                                [
-                                    base, channel, stack, str(lvl),
-                                    str(cz), str(cy), str(cx),
-                                ]
+                            # staged at slab-local cz (see _stage_key)
+                            key = _stage_key(
+                                base, channel, stack, lvl, cz, cy, cx
                             )
-                            parent = key.rsplit("/", 1)[0]
-                            if parent not in made:
-                                fs.create_dir(parent, recursive=True)
-                                made.add(parent)
-                            with fs.open_output_stream(key) as f:
-                                f.write(
-                                    compress(
-                                        np.ascontiguousarray(block).tobytes()
-                                    )
-                                )
+                            cw.write(key, block, dims)
                             chunks.append((cz, cy, cx))
                 levels.append(
                     {
@@ -817,23 +553,21 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
         the destination then already holds the byte-identical chunk)."""
         from pyarrow import fs as pafs
 
+        from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+            ChunkWriter,
+            chunk_key,
+        )
+
         if self.failpoint_before_level == lvl:
             raise RuntimeError(
                 f"simulated crash before level-{lvl} promotion "
                 f"(failpoint_before_level)"
             )
-        made: set[str] = set()
+        cw = ChunkWriter(fs)
         for cz, cy, cx in info["levels"][lvl]["chunks"]:
-            src = "/".join(
-                [stage_base, channel, stack, str(lvl), str(cz), str(cy), str(cx)]
-            )
-            dst = "/".join(
-                [group_base, str(lvl), "0", "0", str(cz + off), str(cy), str(cx)]
-            )
-            parent = dst.rsplit("/", 1)[0]
-            if parent not in made:
-                fs.create_dir(parent, recursive=True)
-                made.add(parent)
+            src = _stage_key(stage_base, channel, stack, lvl, cz, cy, cx)
+            dst = chunk_key(group_base, lvl, cz + off, cy, cx)
+            cw.make_parent(dst)
             if fs.get_file_info(src).type == pafs.FileType.NotFound:
                 if fs.get_file_info(dst).type == pafs.FileType.NotFound:
                     raise FileNotFoundError(
@@ -859,6 +593,7 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
             _make_codec,
             _write_all_metadata,
             append_slab_transaction,
+            stack_group,
         )
 
         codec_meta, _ = _make_codec(self.compressor, self.compressor_kwargs)
@@ -883,7 +618,7 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
 
         def _commit_stack(channel, stack, staging, info):
                 _, stage_base = _fs_for(staging)
-                group = f"{self.root}/{channel}/{stack}.ome.zarr"
+                group = stack_group(self.root, channel, stack)
                 _, group_base = _fs_for(group)
                 geo = [
                     ((lv["z"], lv["y"], lv["x"]), info["dtype"])

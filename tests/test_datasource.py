@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pytest
 
@@ -322,19 +320,24 @@ def test_stream_reader_crash_replay_fresh_instance(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Writer: chunk table → OME-Zarr via the DataSource commit protocol
+# Batch store from per-level chunk tables (write_ome_zarr_all)
 # ---------------------------------------------------------------------------
 
-def _chunk_rows(channel, stack, vol, chunk, levels):
-    """Cut a numpy volume's pyramid into WRITE_SCHEMA rows."""
+def _level_tables(spark, channel, stack, vol, chunk, levels):
+    """Cut a numpy volume's windowed-mean pyramid into per-level chunk
+    tables (CHUNK_SCHEMA), each level chunked by the halved chunk."""
     from aind_smartspim_data_transformation_spark.imaging.pyramid import (
         windowed_mean,
     )
+    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
+        CHUNK_SCHEMA,
+    )
 
-    rows = []
+    tables = []
     arr = vol
-    for lvl in range(levels):
+    for _ in range(levels):
         cz, cy, cx = chunk
+        rows = []
         for iz in range(-(-arr.shape[0] // cz)):
             for iy in range(-(-arr.shape[1] // cy)):
                 for ix in range(-(-arr.shape[2] // cx)):
@@ -345,168 +348,16 @@ def _chunk_rows(channel, stack, vol, chunk, levels):
                     ]
                     rows.append(
                         (
-                            channel, stack, lvl, iz, iy, ix,
+                            channel, stack, 0, 0, iz, iy, ix,
                             blk.shape[0], blk.shape[1], blk.shape[2],
                             str(blk.dtype),
                             bytes(np.ascontiguousarray(blk).tobytes()),
                         )
                     )
+        tables.append(spark.createDataFrame(rows, CHUNK_SCHEMA))
         chunk = [-(-d // f) for d, f in zip(chunk, (2, 2, 2))]
         arr = windowed_mean(arr, (2, 2, 2))
-    return rows
-
-
-def test_writer_store_identical_to_driver_sink(spark, tmp_path):
-    """df.write.format("smartspim") must produce a BYTE-identical store
-    to write_ome_zarr_all at extent ≥ chunk geometry (where the
-    unclamped ladder equals the clamped one)."""
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimDataSource,
-    )
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        write_ome_zarr_all,
-    )
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        WRITE_SCHEMA,
-    )
-
-    rng = np.random.default_rng(5)
-    vol = rng.integers(0, 65535, size=(8, 8, 8)).astype(np.uint16)
-    rows = _chunk_rows("Ex_445_Em_469", "432380_504340", vol, [4, 4, 4], 2)
-    df = spark.createDataFrame(rows, WRITE_SCHEMA)
-
-    spark.dataSource.register(SmartspimDataSource)
-    out_w = tmp_path / "via_writer"
-    (
-        df.write.format("smartspim")
-        .option("voxel_size", "[2.0, 1.8, 1.8]")
-        .option("chunk", "[4, 4, 4]")
-        .option("n_levels", "2")
-        .mode("append")
-        .save(str(out_w))
-    )
-
-    out_d = tmp_path / "via_sink"
-    levels = [
-        spark.createDataFrame(
-            [
-                (c, s, 0, 0, cz, cy, cx, dz, dy, dx, dt, data)
-                for (c, s, lv, cz, cy, cx, dz, dy, dx, dt, data) in rows
-                if lv == lvl
-            ],
-            "channel string, stack string, t int, c int, cz int, cy int,"
-            " cx int, dz int, dy int, dx int, dtype string, data binary",
-        )
-        for lvl in range(2)
-    ]
-    write_ome_zarr_all(
-        levels, str(out_d), [2.0, 1.8, 1.8], [2, 2, 2], [4, 4, 4]
-    )
-    w = {
-        str(p.relative_to(out_w)): p.read_bytes()
-        for p in sorted(out_w.rglob("*")) if p.is_file()
-    }
-    d = {
-        str(p.relative_to(out_d)): p.read_bytes()
-        for p in sorted(out_d.rglob("*")) if p.is_file()
-    }
-    assert w == d
-
-
-def test_writer_small_stack_array_identical_and_overwrite(spark, tmp_path):
-    """Sub-chunk extents: the writer's unclamped chunk declaration must
-    still read back array-identical; mode('overwrite') replaces."""
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimDataSource,
-    )
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        read_zarr_level,
-    )
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-        windowed_mean,
-    )
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        WRITE_SCHEMA,
-    )
-
-    spark.dataSource.register(SmartspimDataSource)
-    out = tmp_path / "store"
-    vols = []
-    for seed in (1, 2):
-        rng = np.random.default_rng(seed)
-        vols.append(rng.integers(0, 65535, size=(2, 3, 5)).astype(np.uint16))
-    for vol, mode in zip(vols, ("append", "overwrite")):
-        df = spark.createDataFrame(
-            _chunk_rows("Ex_488_Em_525", "stk", vol, [4, 4, 4], 2), WRITE_SCHEMA
-        )
-        (
-            df.write.format("smartspim")
-            .option("chunk", "[4, 4, 4]")
-            .option("n_levels", "2")
-            .mode(mode)
-            .save(str(out))
-        )
-    g = str(out / "Ex_488_Em_525" / "stk.ome.zarr")
-    assert np.array_equal(read_zarr_level(g, 0), vols[1])
-    assert np.array_equal(read_zarr_level(g, 1), windowed_mean(vols[1], (2, 2, 2)))
-
-
-def test_writer_refuses_bad_pyramid_metadata_last(spark, tmp_path):
-    """A mis-downsampled input (missing level) must fail at COMMIT —
-    and because metadata is written last, the target must not parse as
-    a store afterwards (no .zattrs/.zarray anywhere)."""
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimDataSource,
-    )
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        WRITE_SCHEMA,
-    )
-
-    spark.dataSource.register(SmartspimDataSource)
-    rng = np.random.default_rng(9)
-    vol = rng.integers(0, 65535, size=(4, 4, 4)).astype(np.uint16)
-    rows = _chunk_rows("Ex_488_Em_525", "stk", vol, [4, 4, 4], 1)  # level 0 only
-    df = spark.createDataFrame(rows, WRITE_SCHEMA)
-    out = tmp_path / "store"
-    with pytest.raises(Exception, match="missing pyramid levels"):
-        (
-            df.write.format("smartspim")
-            .option("chunk", "[4, 4, 4]")
-            .option("n_levels", "2")
-            .mode("append")
-            .save(str(out))
-        )
-    written = [str(p) for p in out.rglob("*") if p.is_file()]
-    assert not [p for p in written if p.endswith((".zattrs", ".zarray", ".zgroup"))]
-    assert written  # chunks landed, but nothing finalized the store
-
-
-def test_writer_rejects_out_of_range_level(spark, tmp_path):
-    """A row whose level >= n_levels must fail in write() — otherwise
-    its chunk files land in directories commit() never validates and
-    the store finalizes with undeclared junk inside."""
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimDataSource,
-        WRITE_SCHEMA,
-    )
-
-    spark.dataSource.register(SmartspimDataSource)
-    rng = np.random.default_rng(17)
-    vol = rng.integers(0, 65535, size=(4, 4, 4)).astype(np.uint16)
-    rows = _chunk_rows("Ex_488_Em_525", "stk", vol, [4, 4, 4], 1)
-    rows += [
-        (c, s, 5, cz, cy, cx, dz, dy, dx, dt, data)
-        for (c, s, _lv, cz, cy, cx, dz, dy, dx, dt, data) in rows[:1]
-    ]
-    df = spark.createDataFrame(rows, WRITE_SCHEMA)
-    with pytest.raises(Exception, match="outside"):
-        (
-            df.write.format("smartspim")
-            .option("chunk", "[4, 4, 4]")
-            .option("n_levels", "1")
-            .mode("append")
-            .save(str(tmp_path / "store"))
-        )
+    return tables
 
 
 @pytest.mark.parametrize(
@@ -521,39 +372,27 @@ def test_writer_rejects_out_of_range_level(spark, tmp_path):
 )
 def test_writer_geometry_sweep_array_identity(spark, tmp_path, shape, chunk, levels):
     """Random-geometry sweep: whatever the extents/chunking, the
-    writer's store must read back array-identical to the numpy pyramid
-    at every level (the unclamped-ladder divergence from the driver
-    sink is metadata-shape only, never data)."""
+    chunk-table sink's store must read back array-identical to the
+    numpy windowed-mean pyramid at every level."""
     from aind_smartspim_data_transformation_spark.imaging.pyramid import (
         validate_pyramid_geometry,
         windowed_mean,
     )
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
         read_zarr_level,
-    )
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimDataSource,
-        WRITE_SCHEMA,
+        write_ome_zarr_all,
     )
 
     try:
         validate_pyramid_geometry(chunk, [2, 2, 2], levels)
     except ValueError:
         pytest.skip("geometry rejected by the shared guard (by design)")
-    spark.dataSource.register(SmartspimDataSource)
     rng = np.random.default_rng(sum(shape))
     vol = rng.integers(0, 65535, size=shape).astype(np.uint16)
-    rows = _chunk_rows("Ex_488_Em_525", "stk", vol, list(chunk), levels)
-    df = spark.createDataFrame(rows, WRITE_SCHEMA)
-    out = tmp_path / "store"
-    (
-        df.write.format("smartspim")
-        .option("chunk", json.dumps(chunk))
-        .option("n_levels", str(levels))
-        .mode("append")
-        .save(str(out))
+    tables = _level_tables(spark, "Ex_488_Em_525", "stk", vol, list(chunk), levels)
+    [g] = write_ome_zarr_all(
+        tables, str(tmp_path / "store"), [1.0, 1.0, 1.0], [2, 2, 2], list(chunk)
     )
-    g = str(out / "Ex_488_Em_525" / "stk.ome.zarr")
     expect = vol
     for lvl in range(levels):
         assert np.array_equal(read_zarr_level(g, lvl), expect), (shape, chunk, lvl)

@@ -17,7 +17,7 @@ from aind_smartspim_data_transformation_spark.imaging.pyramid import (
 )
 from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
     read_zarr_level,
-    write_ome_zarr,
+    write_ome_zarr_all,
 )
 from aind_smartspim_data_transformation_spark.sources.acquisition import (
     get_voxel_resolution,
@@ -162,11 +162,9 @@ def test_zarr_roundtrip(spark, dataset, tmp_path):
         "channel = 'Ex_445_Em_469' AND stack = '432380_530260'"
     )
     levels = build_pyramid(chunks, (2, 2, 2), 3, persist_levels=False)
-    group = write_ome_zarr(
+    [group] = write_ome_zarr_all(
         levels,
-        str(tmp_path / "out" / "Ex_445_Em_469"),
-        stack_name="432380_530260",
-        channel_name="Ex_445_Em_469",
+        str(tmp_path / "out"),
         voxel_size_zyx=[2.0, 1.8, 1.8],
         scale_factor_zyx=[2, 2, 2],
         chunk_zyx=[64, 64, 64],
@@ -187,11 +185,9 @@ def test_zarr_ngff_metadata(spark, dataset, tmp_path):
         "channel = 'Ex_561_Em_600' AND stack = '432380_504340'"
     )
     levels = build_pyramid(chunks, (2, 2, 2), 2, persist_levels=False)
-    group = write_ome_zarr(
+    [group] = write_ome_zarr_all(
         levels,
-        str(tmp_path / "out2" / "Ex_561_Em_600"),
-        stack_name="432380_504340",
-        channel_name="Ex_561_Em_600",
+        str(tmp_path / "out2"),
         voxel_size_zyx=[2.0, 1.8, 1.8],
         scale_factor_zyx=[2, 2, 2],
         chunk_zyx=[64, 64, 64],
@@ -306,11 +302,9 @@ def test_zarr_codec_none_roundtrip(spark, dataset, tmp_path):
         "channel = 'Ex_445_Em_469' AND stack = '432380_530260'"
     )
     levels = build_pyramid(chunks, (2, 2, 2), 1, persist_levels=False)
-    group = write_ome_zarr(
+    [group] = write_ome_zarr_all(
         levels,
-        str(tmp_path / "raw" / "Ex_445_Em_469"),
-        stack_name="432380_530260",
-        channel_name="Ex_445_Em_469",
+        str(tmp_path / "raw"),
         voxel_size_zyx=[2.0, 1.8, 1.8],
         scale_factor_zyx=[2, 2, 2],
         chunk_zyx=[64, 64, 64],
@@ -479,15 +473,46 @@ def test_zarr_sink_rejects_indivisible_chunks(spark, tmp_path):
     arr = np.arange(20 * 6 * 6, dtype=np.uint16).reshape(20, 6, 6)
     chunks = _chunk_table(spark, arr, (10, 6, 6))
     with pytest.raises(ValueError, match="neither divisible"):
-        write_ome_zarr(
+        write_ome_zarr_all(
             [chunks, chunks],  # 2 levels is enough to trigger the guard
             str(tmp_path),
-            stack_name="st",
-            channel_name="Ex_445_Em_469",
             voxel_size_zyx=[2.0, 1.8, 1.8],
             scale_factor_zyx=[3, 3, 3],
             chunk_zyx=[10, 6, 6],
         )
+
+
+def test_zarr_sink_failed_level_write_leaves_no_parsing_store(spark, tmp_path):
+    """Metadata-last for the chunk-table sink: a job that dies in its
+    level-1 write must leave NO .zattrs/.zarray under the target — a
+    store that parsed as complete would read the missing level as
+    zeros.  The failure lives in the level table's own plan, so it
+    fires inside the sink's level-1 write job."""
+    from pyspark.sql import functions as F
+
+    arr = np.arange(8 * 8 * 8, dtype=np.uint16).reshape(8, 8, 8)
+    channel = F.lit("Ex_488_Em_525")
+    lvl0 = _chunk_table(spark, arr, (4, 4, 4)).withColumn("channel", channel)
+    lvl1 = _chunk_table(spark, windowed_mean(arr, (2, 2, 2)), (2, 2, 2))
+
+    def explode(batches):
+        for pdf in batches:
+            raise RuntimeError("simulated level-1 write failure")
+            yield pdf
+
+    lvl1 = lvl1.withColumn("channel", channel).mapInPandas(
+        explode, schema=lvl1.schema
+    )
+    out = tmp_path / "out"
+    with pytest.raises(Exception, match="simulated level-1 write failure"):
+        write_ome_zarr_all(
+            [lvl0, lvl1], str(out), [2.0, 1.8, 1.8], [2, 2, 2], [4, 4, 4]
+        )
+    files = [p for p in out.rglob("*") if p.is_file()] if out.exists() else []
+    meta = [p for p in files if p.name in (".zattrs", ".zarray", ".zgroup")]
+    assert meta == [], meta
+    # level 0 was written before the failure: the job really died midway
+    assert (out / "Ex_488_Em_525" / "st.ome.zarr" / "0" / "0" / "0").is_dir()
 
 
 def test_imaging_does_not_clobber_arrow_batch_conf(spark, dataset):

@@ -222,7 +222,7 @@ def test_job_ingest_paths_write_identical_stores(spark, tmp_path):
     # 'auto' takes the fused path at this (tiny) geometry
     (auto, auto_resp) = run("auto")
     assert auto == fused
-    assert "(fused)" in auto_resp["message"]
+    assert auto_resp["route"] == "fused"
     # the availability gate: this pyspark has the DataSource API
     assert hasattr(spark, "dataSource")
 
@@ -240,7 +240,7 @@ def test_append_z_slab_equals_one_shot(spark, tmp_path):
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
         append_ome_zarr_z,
         read_zarr_level,
-        write_ome_zarr,
+        write_ome_zarr_all,
     )
     from aind_smartspim_data_transformation_spark.sources.png_codec import (
         encode_png_gray,
@@ -268,17 +268,14 @@ def test_append_z_slab_equals_one_shot(spark, tmp_path):
         return build_pyramid(chunks, (2, 2, 2), 2, chunk_zyx=[64, 64, 64])
 
     kw = dict(
-        channel_name="Ex_488_Em_525",
         voxel_size_zyx=[2.0, 1.8, 1.8],
         scale_factor_zyx=[2, 2, 2],
         chunk_zyx=[64, 64, 64],
     )
-    group = write_ome_zarr(
-        pyramid(roots["a"]), str(tmp_path / "inc"), "400000_500000", **kw
-    )
+    [group] = write_ome_zarr_all(pyramid(roots["a"]), str(tmp_path / "inc"), **kw)
     append_ome_zarr_z(pyramid(roots["b"]), group)
-    one_shot = write_ome_zarr(
-        pyramid(roots["full"]), str(tmp_path / "oneshot"), "400000_500000", **kw
+    [one_shot] = write_ome_zarr_all(
+        pyramid(roots["full"]), str(tmp_path / "oneshot"), **kw
     )
     for lvl in (0, 1):
         np.testing.assert_array_equal(
@@ -316,7 +313,7 @@ def test_append_refuses_shallow_slab_and_chunk_mismatch(spark, tmp_path):
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
         append_ome_zarr_z,
         read_zarr_level,
-        write_ome_zarr,
+        write_ome_zarr_all,
     )
     from aind_smartspim_data_transformation_spark.sources.png_codec import (
         encode_png_gray,
@@ -340,14 +337,13 @@ def test_append_refuses_shallow_slab_and_chunk_mismatch(spark, tmp_path):
         return build_pyramid(chunks, (2, 2, 2), n_levels, chunk_zyx=[64, 64, 64])
 
     kw = dict(
-        channel_name="Ex_488_Em_525",
         voxel_size_zyx=[2.0, 1.8, 1.8],
         scale_factor_zyx=[2, 2, 2],
         chunk_zyx=[64, 64, 64],
     )
     full8 = rng.integers(0, 65535, size=(8, 16, 20), dtype=np.uint16)
-    group = write_ome_zarr(
-        pyr(tree("base", full8), 3), str(tmp_path / "s3"), "400000_500000", **kw
+    [group] = write_ome_zarr_all(
+        pyr(tree("base", full8), 3), str(tmp_path / "s3"), **kw
     )
     # (1) 2-deep slab into a 3-level store: level extents [2,1,1] — the
     # old slab-ratio check passed this; the store-ladder check must not
@@ -359,8 +355,8 @@ def test_append_refuses_shallow_slab_and_chunk_mismatch(spark, tmp_path):
     # second wave is DEEPER (8 planes), so its single 8-deep chunk
     # cannot land on the store's 4-plane grid
     full12 = np.concatenate([full8, rng.integers(0, 65535, size=(4, 16, 20), dtype=np.uint16)])
-    g2 = write_ome_zarr(
-        pyr(tree("w1", full12[:4]), 2), str(tmp_path / "clamped"), "400000_500000", **kw
+    [g2] = write_ome_zarr_all(
+        pyr(tree("w1", full12[:4]), 2), str(tmp_path / "clamped"), **kw
     )
     w2 = tree("w2", full12[4:])
     with pytest.raises(ValueError, match="chunk_z=4"):
@@ -382,7 +378,7 @@ def test_append_crash_fence_and_roll_forward(spark, tmp_path, monkeypatch):
     )
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
         append_ome_zarr_z,
-        write_ome_zarr,
+        write_ome_zarr_all,
     )
     from aind_smartspim_data_transformation_spark.sources.png_codec import (
         encode_png_gray,
@@ -407,15 +403,14 @@ def test_append_crash_fence_and_roll_forward(spark, tmp_path, monkeypatch):
         return build_pyramid(chunks, (2, 2, 2), 2, chunk_zyx=[64, 64, 64])
 
     kw = dict(
-        channel_name="Ex_488_Em_525",
         voxel_size_zyx=[2.0, 1.8, 1.8],
         scale_factor_zyx=[2, 2, 2],
         chunk_zyx=[64, 64, 64],
     )
     slab_a, slab_b = tree("a", full[:4]), tree("b", full[4:], 4)
     slab_c = tree("c", full[:2])  # different DEPTH: fence must refuse it
-    one_shot = write_ome_zarr(
-        pyr(tree("full", full)), str(tmp_path / "oneshot"), "400000_500000", **kw
+    [one_shot] = write_ome_zarr_all(
+        pyr(tree("full", full)), str(tmp_path / "oneshot"), **kw
     )
 
     real_write_json = zarr_sink._write_json
@@ -424,7 +419,7 @@ def test_append_crash_fence_and_roll_forward(spark, tmp_path, monkeypatch):
         """Fresh store from slab A, then append slab B crashing at the
         nth .zarray write; returns the group path."""
         dest = tmp_path / f"crash{nth_zarray_write}"
-        group = write_ome_zarr(pyr(slab_a), str(dest), "400000_500000", **kw)
+        [group] = write_ome_zarr_all(pyr(slab_a), str(dest), **kw)
         seen = {"n": 0}
 
         def exploding(path, obj):
@@ -1110,8 +1105,8 @@ def test_auto_routing_boundary_on_task_budget(spark, tmp_path, monkeypatch):
 
     at, at_resp = run("at", task_bytes)          # fits exactly → fused
     over, over_resp = run("over", task_bytes - 1)  # one byte short → fallback
-    assert "(fused)" in at_resp["message"]
-    assert "(fused)" not in over_resp["message"]
+    assert at_resp["route"] == "fused"
+    assert over_resp["route"] != "fused"
     assert at == over  # the route never changes the bytes
 
 
@@ -1200,7 +1195,7 @@ def test_band_plan_cap_never_changes_store_bytes(
             ),
         )
         assert resp["status_code"] == 200
-        assert "(fused)" in resp["message"]
+        assert resp["route"] == "fused"
         return {
             str(p.relative_to(out)): p.read_bytes()
             for p in sorted(out.rglob("*"))

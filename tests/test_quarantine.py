@@ -93,7 +93,7 @@ def test_quarantine_ingest_reaches_zarr_sink(spark, tmp_path):
 
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
         read_zarr_level,
-        write_ome_zarr,
+        write_ome_zarr_all,
     )
 
     vols = make_dataset(tmp_path, height=16, width=20)
@@ -105,11 +105,9 @@ def test_quarantine_ingest_reaches_zarr_sink(spark, tmp_path):
         (sr.F.col("channel") == CHANNELS[0]) & (sr.F.col("stack") == bad_stack)
     )
     out = str(tmp_path / "out")
-    group = write_ome_zarr(
+    [group] = write_ome_zarr_all(
         [target],
         out,
-        bad_stack,
-        CHANNELS[0],
         voxel_size_zyx=[2.0, 1.8, 1.8],
         scale_factor_zyx=[2, 2, 2],
         chunk_zyx=[2, 16, 20],

@@ -101,7 +101,7 @@ def test_streamed_waves_append_into_one_zarr(spark, tmp_path):
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
         append_ome_zarr_z,
         read_zarr_level,
-        write_ome_zarr,
+        write_ome_zarr_all,
     )
     from aind_smartspim_data_transformation_spark.sources.png_codec import (
         encode_png_gray,
@@ -115,7 +115,6 @@ def test_streamed_waves_append_into_one_zarr(spark, tmp_path):
     out = str(tmp_path / "landed")
     ckpt = str(tmp_path / "ckpt")
     kw = dict(
-        channel_name="Ex_488_Em_525",
         voxel_size_zyx=[2.0, 1.8, 1.8],
         scale_factor_zyx=[2, 2, 2],
         chunk_zyx=[64, 64, 64],
@@ -129,7 +128,7 @@ def test_streamed_waves_append_into_one_zarr(spark, tmp_path):
         (d / f"{z:06d}.png").write_bytes(encode_png_gray(full[z]))
     ss.run_incremental_ingest(spark, str(root / "SmartSPIM"), out, ckpt)
     slab = ss.landed_slab_chunks(spark, out, after_key=-1, chunk_z=64)
-    group = write_ome_zarr(pyr(slab), str(tmp_path / "store"), "400000_500000", **kw)
+    [group] = write_ome_zarr_all(pyr(slab), str(tmp_path / "store"), **kw)
 
     # wave 2: planes 4-7 arrive later; only THEY are decoded + appended
     for z in range(4, 8):

@@ -118,8 +118,8 @@ def main() -> None:
         )
         wall = time.perf_counter() - t0
         assert resp["status_code"] == 200, resp
-        route = "fused" if "(fused)" in resp.get("message", "") else "chunk-table"
-        assert route == "chunk-table", resp
+        route = resp["route"]
+        assert route != "fused", resp
         print(
             json.dumps(
                 {

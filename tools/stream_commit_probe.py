@@ -44,6 +44,7 @@ import numpy as np  # noqa: E402
 from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (  # noqa: E402
     SlabStage,
     SmartspimStreamWriter,
+    _stage_key,
 )
 
 CHUNK = [4, 64, 64]  # small chunks: stresses per-move latency, not IO bw
@@ -61,11 +62,10 @@ def stage_wave(root: Path, n_stacks: int, n_chunks: int) -> list[SlabStage]:
         chunks = []
         # chunk grid: 1 × 1 × n_chunks (x-major — grid shape is
         # irrelevant to move cost, count is what matters)
-        d = staging / channel / stack / "0"
-        d.mkdir(parents=True, exist_ok=True)
         for cx in range(n_chunks):
-            (d / f"0/0/{cx}").parent.mkdir(parents=True, exist_ok=True)
-            (d / f"0/0/{cx}").write_bytes(blob)
+            key = Path(_stage_key(str(staging), channel, stack, 0, 0, 0, cx))
+            key.parent.mkdir(parents=True, exist_ok=True)
+            key.write_bytes(blob)
             chunks.append((0, 0, cx))
         msgs.append(
             SlabStage(
