@@ -17,6 +17,11 @@ Divergences, by design:
   num_of_partitions=1), but callers who still launch N instances get
   the same deterministic split (imaging/job.py::partition_stacks) and
   partition-0-only derivatives upload.
+- There is no ingest-route setting: the job takes the fused band tasks
+  when their probed per-task buffer fits the memory envelope, else the
+  chunk-table pipeline (imaging/job.py), and both write the same bytes.
+  Unknown keys are ignored, so a payload that still carries the old
+  ``ingest`` key validates unchanged.
 """
 
 from __future__ import annotations
@@ -51,28 +56,10 @@ class ImagingJobSettings(BaseModel):
     chunk_size: list[int] = Field(default_factory=lambda: [128, 128, 128])
     scale_factor: list[int] = Field(default_factory=lambda: [2, 2, 2])
     downsample_levels: int = 4
-    # "auto": FUSED zero-shuffle ingest (decode→chunk→pyramid→write in
-    # one Python task per z-slab/y-band; imaging/fused.py) when the
-    # probed per-task buffer fits memory, DataSource scan when it
-    # doesn't, UDF path when the DataSource API is unavailable;
-    # "fused"/"datasource"/"udf" force one path.
-    ingest: Literal["auto", "fused", "datasource", "udf"] = "auto"
     # "quarantine": a corrupt slice becomes a zero-filled plane at its
     # z position plus a dead-letter triage row instead of failing the
-    # job (fused + udf paths; the DataSource scan has no dead-letter
-    # channel, so "auto" routes around it and forcing
-    # ingest="datasource" with quarantine is refused).
+    # job, on either ingest route (imaging/job.py).
     on_error: Literal["fail", "quarantine"] = "fail"
-
-    @model_validator(mode="after")
-    def _check_on_error_ingest(self) -> "ImagingJobSettings":
-        if self.on_error == "quarantine" and self.ingest == "datasource":
-            raise ValueError(
-                "on_error='quarantine' is not available on the "
-                "DataSource scan (no dead-letter channel) — use "
-                "ingest='auto', 'fused', or 'udf'"
-            )
-        return self
 
     @model_validator(mode="after")
     def _check_partitioning(self) -> "ImagingJobSettings":

@@ -37,10 +37,12 @@ balanced tasks; the per-task buffer is two band buffers + one decoded
 slice span.
 
 Memory envelope: one task holds its band (≤ chunk_z × band_rows ×
-width bytes, +1 decoded slice).  The ``auto`` ingest picks fused only
-when the probed per-task buffer fits ``FUSED_MAX_TASK_BYTES``;
-giant-plane acquisitions keep the tile-first shuffle pipeline, whose
-peak per-group memory is chunk-sized.
+width bytes, +1 decoded slice).  The envelope alone picks the route:
+``run_imaging_job`` takes this path exactly when the probed per-task
+buffer fits ``FUSED_MAX_TASK_BYTES``; giant-plane acquisitions take
+the chunk-table pipeline over the ``binaryFile`` + pandas-UDF scan,
+whose peak per-group memory is chunk-sized.  There is no setting that
+forces either route.
 
 Error handling (round 7): every slice passes a HEADER-ONLY geometry
 gate against the probed stack geometry before decoding (a taller slice
@@ -406,7 +408,7 @@ def _band_plan(
     until that fits.  Without this, a deep acquisition (many z-slabs →
     low band target → tall bands) tips the whole job off the fused
     path over a ~0.04% envelope overshoot — measured at 4×320 slices
-    of 2000×1600: the auto route fell back to the chunk-table pipeline
+    of 2000×1600: the job fell back to the chunk-table pipeline
     at 47 MB/s where capped 1-chunk-row bands stay fused (SCALE.md
     §6m).  The cap uses the UNCLAMPED band height (per_band·cy_chunk,
     not min(·, y)) — conservative by < one chunk row for a band
@@ -443,7 +445,7 @@ def fused_task_bytes(
     Because :func:`_band_plan` already shrinks the band height to the
     envelope, this exceeds the envelope only when even a
     single-chunk-row band doesn't fit (a genuinely giant plane) — the
-    one case where job.py's auto route SHOULD take the chunk-table
+    one case where job.py SHOULD take the chunk-table
     fallback.  ``max_task_bytes`` (default ``FUSED_MAX_TASK_BYTES``)
     is threaded to the internal :func:`_band_plan` call so the probe
     always sizes the SAME plan a caller passing a custom envelope

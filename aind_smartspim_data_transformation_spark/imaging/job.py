@@ -13,6 +13,12 @@ subprocess `aws s3 sync` + local delete    | write directly to the target
                                            | (s3a:// URI on a cluster)
 derivatives passthrough upload (S10)       | binary copy, driver-side
 
+Two ingest routes, picked by the memory envelope alone: the fused band
+tasks (imaging/fused.py) when their probed per-task buffer fits
+``FUSED_MAX_TASK_BYTES``, else the chunk-table pipeline over the
+``binaryFile`` + pandas-UDF scan (``read_stack_tree`` → pyramid →
+``write_ome_zarr_all``).  Both write byte-identical stores.
+
 Returns a JobResponse-like dict (status_code / message / duration).
 """
 
@@ -25,6 +31,7 @@ from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from aind_smartspim_data_transformation_spark.config.settings import ImagingJobSettings
+from aind_smartspim_data_transformation_spark.imaging import fused
 from aind_smartspim_data_transformation_spark.imaging.pyramid import build_pyramid
 from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
     write_ome_zarr_all,
@@ -34,48 +41,9 @@ from aind_smartspim_data_transformation_spark.sources.acquisition import (
 )
 from aind_smartspim_data_transformation_spark.sources.stack_reader import (
     read_stack_tree,
-    read_stack_tree_datasource,
     scan_stack_files,
     validate_extensions,
 )
-
-
-def _ingest_chunks(spark: SparkSession, settings: ImagingJobSettings, root: str):
-    """Choose the scan path and return (chunk table, route): DataSource
-    (one partition per stack, no z-map — the default at scale) when the
-    Python DataSource API is available, the binaryFile+UDF pipeline
-    otherwise.  Both are bit-identical on clean trees
-    (tests/test_datasource.py); the DataSource scan has no dead-letter
-    channel, so quarantine jobs route to the UDF pipeline (settings
-    validation already refused a forced datasource+quarantine
-    combination)."""
-    cz, cy, cx = settings.chunk_size
-    # Probe the capabilities the DataSource path actually uses, not
-    # just the public attribute: on Spark Connect `spark.dataSource`
-    # exists but the classic-JVM internals (registration fallback,
-    # sparkContext for the slab floor) do not — "auto" must fall back
-    # to the UDF path there instead of crashing.
-    ds_capable = hasattr(spark, "dataSource") and getattr(
-        spark, "_jsparkSession", None
-    ) is not None
-    if settings.ingest == "datasource" or (
-        settings.ingest == "auto"
-        and ds_capable
-        and settings.on_error == "fail"
-    ):
-        chunks = read_stack_tree_datasource(
-            spark, f"{root}/SmartSPIM", chunk_z=cz, chunk_y=cy, chunk_x=cx
-        )
-        return chunks, "datasource"
-    chunks = read_stack_tree(
-        spark,
-        f"{root}/SmartSPIM",
-        chunk_z=cz,
-        chunk_y=cy,
-        chunk_x=cx,
-        on_error=settings.on_error,
-    )
-    return chunks, "udf"
 
 
 def partition_stacks(stacks: list, n_partitions: int) -> list[list]:
@@ -93,9 +61,11 @@ def partition_stacks(stacks: list, n_partitions: int) -> list[list]:
 def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
     """Run the whole ingest; returns status_code, message, the written
     stack groups, the ingest metrics, and ``route`` — the ingest path
-    taken: ``"fused"`` (band tasks), ``"datasource"`` or ``"udf"`` (the
-    chunk-table pipeline over either scan), or None when this
-    partition owns no stacks."""
+    taken: ``"fused"`` (band tasks, when ``fused_task_bytes`` fits
+    ``FUSED_MAX_TASK_BYTES``), ``"udf"`` (the chunk-table pipeline over
+    the ``binaryFile`` + pandas-UDF scan, otherwise), or None when this
+    partition owns no stacks.  The route never changes the stored
+    bytes."""
     start = time.time()
     root = str(settings.input_source)
     # With s3_location set, executors write STRAIGHT to the object
@@ -141,54 +111,53 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
                 "route": None,
             }
 
-    # Fused zero-shuffle path (imaging/fused.py): "auto" takes it when
-    # the probed per-task band buffer fits memory — pixel bytes never
-    # enter the JVM, no assembly shuffle, every pyramid level computed
-    # and written by the decode task itself.  Falls through to the
-    # chunk-table pipeline for giant planes (memory envelope) or when
-    # forced off.
-    if settings.ingest in ("fused", "auto"):
-        from aind_smartspim_data_transformation_spark.imaging.fused import (
-            FUSED_MAX_TASK_BYTES,
-            fused_task_bytes,
-            probe_stack_geometry,
-            run_fused_ingest,
+    # Route by the memory envelope alone.  Fused zero-shuffle band
+    # tasks (imaging/fused.py) when the probed per-task band buffer
+    # fits: pixel bytes never enter the JVM, no assembly shuffle, every
+    # pyramid level computed and written by the decode task itself.
+    # Giant planes take the chunk-table pipeline below, whose peak
+    # per-group memory is chunk-sized.  Both write the same bytes.
+    geo = fused.probe_stack_geometry(
+        spark, f"{root}/SmartSPIM", on_error=settings.on_error
+    )
+    task_bytes = fused.fused_task_bytes(
+        geo, list(settings.chunk_size), spark.sparkContext.defaultParallelism
+    )
+    if task_bytes <= fused.FUSED_MAX_TASK_BYTES:
+        written, metrics = fused.run_fused_ingest(
+            spark,
+            f"{root}/SmartSPIM",
+            out,
+            voxel_size_zyx=voxel_zyx,
+            scale_factor_zyx=list(settings.scale_factor),
+            chunk_zyx=list(settings.chunk_size),
+            n_levels=settings.downsample_levels,
+            compressor_name=settings.compressor_name.value,
+            compressor_kwargs=settings.compressor_kwargs,
+            stack_filter=mine,
+            geo=geo,
+            on_error=settings.on_error,
         )
+        return {
+            "status_code": 200,
+            "message": (
+                f"wrote {len(written)} stacks in "
+                f"{time.time() - start:.1f}s (fused)"
+            ),
+            "written": written,
+            "metrics": metrics,
+            "route": "fused",
+        }
 
-        geo = probe_stack_geometry(
-            spark, f"{root}/SmartSPIM", on_error=settings.on_error
-        )
-        task_bytes = fused_task_bytes(
-            geo, list(settings.chunk_size),
-            spark.sparkContext.defaultParallelism,
-        )
-        if settings.ingest == "fused" or task_bytes <= FUSED_MAX_TASK_BYTES:
-            written, metrics = run_fused_ingest(
-                spark,
-                f"{root}/SmartSPIM",
-                out,
-                voxel_size_zyx=voxel_zyx,
-                scale_factor_zyx=list(settings.scale_factor),
-                chunk_zyx=list(settings.chunk_size),
-                n_levels=settings.downsample_levels,
-                compressor_name=settings.compressor_name.value,
-                compressor_kwargs=settings.compressor_kwargs,
-                stack_filter=mine,
-                geo=geo,
-                on_error=settings.on_error,
-            )
-            return {
-                "status_code": 200,
-                "message": (
-                    f"wrote {len(written)} stacks in "
-                    f"{time.time() - start:.1f}s (fused)"
-                ),
-                "written": written,
-                "metrics": metrics,
-                "route": "fused",
-            }
-
-    chunks, route = _ingest_chunks(spark, settings, root)
+    cz, cy, cx = settings.chunk_size
+    chunks = read_stack_tree(
+        spark,
+        f"{root}/SmartSPIM",
+        chunk_z=cz,
+        chunk_y=cy,
+        chunk_x=cx,
+        on_error=settings.on_error,
+    )
     if mine is not None:
         keys = spark.createDataFrame(mine, "channel string, stack string")
         chunks = chunks.join(F.broadcast(keys), ["channel", "stack"])
@@ -234,7 +203,7 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
         "message": f"wrote {len(written)} stacks in {time.time() - start:.1f}s",
         "written": written,
         "metrics": obs.get,
-        "route": route,
+        "route": "udf",
     }
 
 

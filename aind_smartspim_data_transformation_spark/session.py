@@ -44,9 +44,6 @@ _COMMON = {
     ),
     # Arrow for pandas UDF / toPandas — the only acceptable Python path.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Python DataSource filter pushdown (smartspim source prunes stack
-    # partitions from channel/stack equality predicates).
-    "spark.sql.python.filterPushdown.enabled": "true",
     # Keep Arrow batches bounded so 128^3 uint16 blocks (~4 MiB) plus
     # decode overhead fit comfortably in the Python worker.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",

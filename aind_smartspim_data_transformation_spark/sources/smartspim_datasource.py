@@ -1,44 +1,31 @@
-"""First-class Spark 4 Python DataSource for SmartSPIM stack trees.
+"""Spark 4 Python DataSource for live SmartSPIM acquisitions:
+streaming read and streaming write only.
 
-SURVEY.md §2.9 lists the Python data source API as the optional
-first-class wrapper around the binaryFile+UDF decode path (S2).  This
-is it: after ``spark.dataSource.register(SmartspimDataSource)``,
+After ``ensure_registered(spark)``:
 
-    spark.read.format("smartspim").load("/path/to/SmartSPIM")
+- ``spark.readStream.format("smartspim").load(root)`` tails a stack
+  tree as slices land, one row per decoded slice
+  (:class:`SmartspimStreamReader`);
+- ``slices.writeStream.format("smartspim").start(root)`` appends each
+  microbatch to the OME-Zarr stores through the streaming commit
+  protocol (:class:`SmartspimStreamWriter`).
 
-yields one row per decoded slice with the same columns the pandas-UDF
-pipeline produces.  One :class:`InputPartition` per chunk_z-aligned
-*z-slab* of each stack (``option("slab", N)``, default 64) — the
-reference distributes whole stacks round-robin across processes
-(reference `smartspim_job.py:30-63`); slab granularity keeps that
-locality (a slab's tiles are produced by one task, z is
-slab-offset + index, no z-map) while letting parallelism scale with
-stacks × slabs instead of capping at #stacks.
-
-The decode uses the same pure-python PNG codec as the UDF path
-(`sources/png_codec.py`), so both sources are bit-identical — asserted
-in tests/test_datasource.py.
-
-Scale: file *listing* happens once on the driver — os.walk by default,
-or ``option("manifest", file)`` with root-relative paths (an
-object-store inventory dump) so a 100 TB tree never walks millions of
-keys; decode bandwidth scales with executors.  Column pruning is
-handled by Spark post-read; channel/stack equality predicates push
-down via ``pushFilters`` and prune whole stack directories at plan
-time.  ``spark.readStream.format("smartspim")`` tails a live
-acquisition (see :class:`SmartspimStreamReader`).
+There is no batch read or batch write: a finished acquisition goes
+through ``imaging/job.py``, which takes the fused band tasks when they
+fit the memory envelope and the ``binaryFile`` + pandas-UDF chunk-table
+pipeline otherwise.  The stream reader decodes with the same
+magic-byte dispatch (``stack_reader.decode_image_gray``), so its pixels
+equal that pipeline's.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamWriter,
-    InputPartition,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
@@ -62,10 +49,8 @@ def ensure_registered(sess) -> None:
     still cannot resolve the format.  On that conflict, register into
     the session-local manager directly.  Leans on private internals
     (sessionState().dataSourceManager(), _wrap_function,
-    UserDefinedPythonDataSource) that move across Spark versions —
-    callers with a public-API fallback (the batch UDF ingest) should
-    wrap this in their own try/except; streaming callers have no
-    fallback and let a failure propagate.
+    UserDefinedPythonDataSource) that move across Spark versions; the
+    streaming callers let a failure propagate.
     """
     from pyspark.errors import AnalysisException
 
@@ -86,18 +71,8 @@ def ensure_registered(sess) -> None:
         dsm.registerDataSource("smartspim", jds)
 
 
-class StackPartition(InputPartition):
-    def __init__(
-        self, channel: str, stack: str, files: Sequence[str], z0: int = 0
-    ):
-        self.channel = channel
-        self.stack = stack
-        self.files = list(files)
-        self.z0 = z0  # z index of files[0] within the stack
-
-
 class SmartspimDataSource(DataSource):
-    """``spark.read.format("smartspim").load(root)``."""
+    """``format("smartspim")``: streaming read and streaming write."""
 
     @classmethod
     def name(cls) -> str:
@@ -106,153 +81,11 @@ class SmartspimDataSource(DataSource):
     def schema(self) -> str:
         return SLICE_SCHEMA
 
-    def reader(self, schema) -> "SmartspimReader":
-        return SmartspimReader(self.options)
-
     def simpleStreamReader(self, schema) -> "SmartspimStreamReader":
         return SmartspimStreamReader(self.options)
 
     def streamWriter(self, schema, overwrite: bool) -> "SmartspimStreamWriter":
         return SmartspimStreamWriter(self.options)
-
-
-class SmartspimReader(DataSourceReader):
-    def __init__(self, options):
-        root = options.get("path")
-        if not root:
-            raise ValueError("smartspim source requires a path: .load(root)")
-        self.root = root
-        # z-slab granularity: each input partition covers at most
-        # `slab` consecutive slices of one stack.  Aligned to the
-        # downstream chunk_z, a slab's tiles all come from one task;
-        # parallelism scales with stacks × slabs instead of capping at
-        # #stacks (a 10k-slice stack would otherwise be ONE task).
-        # 0 disables splitting (one partition per whole stack).
-        self.slab = int(options.get("slab", "64"))
-        # small-tree floor: if slab-sized slabs yield fewer partitions
-        # than this, the slab shrinks (down to 1 slice) so a 4-stack
-        # acquisition still uses every core; at production stack counts
-        # total/min_partitions >> slab and the chunk-aligned slab wins.
-        self.min_partitions = int(options.get("min_partitions", "0"))
-        # Manifest listing (the 100 TB path): a text file of
-        # root-relative slice paths (<channel>/<col>/<stack>/<file>),
-        # e.g. an object-store inventory dump — no os.walk over
-        # millions of keys.  Slices are SORTED within each stack
-        # regardless of manifest line order (the sorted-glob z
-        # contract).
-        self.manifest = options.get("manifest")
-        self.pushed: dict[str, str] = {}  # channel/stack equality filters
-
-    def pushFilters(self, filters):
-        """Partition pruning: EqualTo on channel/stack skips whole stack
-        directories at planning time (Spark 4.1 filter pushdown API).
-        Pushed filters are also returned so Spark re-checks them — a
-        pushed filter that is also evaluated post-scan is always safe."""
-        from pyspark.sql.datasource import EqualTo
-
-        for f in filters:
-            if isinstance(f, EqualTo) and f.attribute in (("channel",), ("stack",)):
-                self.pushed[f.attribute[0]] = f.value
-            yield f
-
-    def _list_walk(self) -> list[tuple[str, str, list[str]]]:
-        """(channel, stack, sorted slice paths) per stack directory via
-        os.walk — fine up to ~1M files; use a manifest beyond that."""
-        stacks: list[tuple[str, str, list[str]]] = []
-        for dirpath, _dirnames, filenames in sorted(os.walk(self.root)):
-            slices = sorted(
-                os.path.join(dirpath, f)
-                for f in filenames
-                if f.lower().endswith(_EXTS)
-            )
-            if not slices:
-                continue
-            rel = os.path.relpath(dirpath, self.root)
-            pieces = rel.split(os.sep)
-            # layout <channel>/<col>/<col_row>/ under the root
-            channel = pieces[0] if pieces else ""
-            stack = pieces[-1]
-            if self.pushed.get("channel") not in (None, channel):
-                continue
-            if self.pushed.get("stack") not in (None, stack):
-                continue
-            stacks.append((channel, stack, slices))
-        return stacks
-
-    def _list_manifest(self) -> list[tuple[str, str, list[str]]]:
-        """Same output as :meth:`_list_walk`, but from a listing file of
-        root-relative paths (one per line; blank lines and non-image
-        extensions skipped).  The z contract is unchanged: slices are
-        SORTED within a stack regardless of manifest line order."""
-        by_stack: dict[tuple[str, str], list[str]] = {}
-        with open(self.manifest) as f:
-            for line in f:
-                rel = line.strip()
-                if not rel or not rel.lower().endswith(_EXTS):
-                    continue
-                pieces = rel.split("/")
-                channel = pieces[0] if len(pieces) > 1 else ""
-                stack = pieces[-2] if len(pieces) > 1 else ""
-                if self.pushed.get("channel") not in (None, channel):
-                    continue
-                if self.pushed.get("stack") not in (None, stack):
-                    continue
-                by_stack.setdefault((channel, stack), set()).add(
-                    os.path.join(self.root, rel)
-                )
-        # set-dedup: object-store inventory dumps can repeat a key
-        # across list pages; a duplicate line would otherwise emit the
-        # slice twice AND shift every later z in the stack.
-        return [
-            (channel, stack, sorted(files))
-            for (channel, stack), files in sorted(by_stack.items())
-        ]
-
-    def partitions(self) -> Sequence[StackPartition]:
-        """One partition per chunk_z-aligned z-SLAB of each stack
-        directory (deterministic sorted walk or manifest listing,
-        mirroring the reference's sorted stack list), minus stacks
-        pruned by pushed channel/stack equality filters."""
-        stacks = self._list_manifest() if self.manifest else self._list_walk()
-        total = sum(len(s) for _, _, s in stacks)
-        if self.slab > 0:
-            step = self.slab
-            if self.min_partitions > 0 and total:
-                # shrink toward one-slice slabs only as far as needed
-                step = max(1, min(step, -(-total // self.min_partitions)))
-        else:
-            # slab=0: whole-stack partitions, UNCONDITIONALLY — callers
-            # set it to guarantee one task per stack, so the
-            # min_partitions floor must not re-split.
-            step = max((len(s) for _, _, s in stacks), default=1)
-        parts = [
-            StackPartition(channel, stack, slices[z0 : z0 + step], z0)
-            for channel, stack, slices in stacks
-            for z0 in range(0, len(slices), step)
-        ]
-        if not parts and not self.pushed:
-            raise FileNotFoundError(f"no image stacks under {self.root}")
-        return parts or [StackPartition("", "", [])]
-
-    def read(self, partition: StackPartition) -> Iterator[tuple]:
-        # imports here: this body runs on executors
-        from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-            decode_image_gray,
-        )
-
-        for idx, path in enumerate(partition.files):
-            with open(path, "rb") as f:
-                raw = f.read()
-            arr = decode_image_gray(raw)
-            yield (
-                partition.channel,
-                partition.stack,
-                partition.z0 + idx,
-                arr.shape[0],
-                arr.shape[1],
-                str(arr.dtype),
-                arr.tobytes(),
-            )
 
 
 class SmartspimStreamReader(SimpleDataSourceStreamReader):
@@ -273,7 +106,7 @@ class SmartspimStreamReader(SimpleDataSourceStreamReader):
     the driver, which is right for live-acquisition rates (a slice
     every few seconds).  Draining a large backlog at cluster speed is
     the partitioned path: `streaming/stack_stream.py` (file-source
-    stream, executor decode) or the batch DataSource after the fact.
+    stream, executor decode) or the batch imaging job after the fact.
     """
 
     def __init__(self, options):

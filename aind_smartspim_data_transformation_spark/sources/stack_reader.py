@@ -9,8 +9,8 @@ Re-expresses the reference's imaging ingest (SURVEY.md §2.1 S1-S4):
   reference's explicit ``sort(key=str)`` (`smartspim_job.py:59-60`).
 - S2/S3 lazy PNG/TIFF stack reader (`io/readers.py:129-145`, one dask
   chunk per slice; `compress/png_to_zarr.py:459-500` TIFF path) →
-  ``mapInPandas`` decode producing one row per slice, format picked by
-  magic bytes per file.
+  one ``mapInPandas`` kernel that decodes each slice and cuts it into
+  tile rows, format picked by magic bytes per file.
 - S4 header probe (`io/readers.py:147-174`) → ``probe_png_header`` over
   the first KB of content, no decompression.
 - P1 extension whitelist (`smartspim_job.py:145-150`).
@@ -82,25 +82,10 @@ def probe_image_header(data: bytes) -> tuple[int, int, int]:
         return probe_tiff_header(data)
     raise ValueError("unrecognized image format (PNG/TIFF supported)")
 
-SLICE_SCHEMA = (
-    "channel string, stack string, z int, height int, width int, "
-    "dtype string, data binary"
-)
-
 CHUNK_SCHEMA = (
     "channel string, stack string, t int, c int, cz int, cy int, cx int, "
     "dz int, dy int, dx int, dtype string, data binary"
 )
-
-# Imaging rows are megabytes, not bytes.  Batch sizing happens at TWO
-# layers, neither of which touches the caller's session config:
-# 1. the scan runs on the imaging CHILD session (session.py), whose own
-#    SQLConf caps JVM→Python Arrow batches at IMAGING_ARROW_ROWS for
-#    the whole downstream lineage (decode, pyramid, sink);
-# 2. the decode kernel additionally slices its OUTPUT at this many rows
-#    (32 × ~6.4 MB ≈ 200 MB) so a future caller who builds the plan on
-#    a plain session still gets bounded output batches.
-_IMAGING_OUT_ROWS = 32
 
 
 def scan_stack_files(spark: SparkSession, root: str) -> DataFrame:
@@ -157,11 +142,17 @@ def validate_extensions(spark: SparkSession, root: str) -> None:
 
 def _z_indexed(files: DataFrame) -> DataFrame:
     """Attach z = rank of path within (channel, stack) — the
-    reference's sorted-glob semantics — via a content-PRUNED listing
-    window broadcast-joined back on path (the multi-MB ``content``
-    column never enters the window's exchange; plan-asserted in
-    tests/test_imaging.py).  Shared by decode_slices and
-    decode_slices_to_tiles so the z contract has exactly one home."""
+    reference's sorted-glob semantics (`io/readers.py:145`).  SmartSPIM
+    slice names are zero-padded depths with arbitrary step ("000000",
+    "000020", ...), so z is the RANK in that order, not the parsed
+    number.
+
+    The rank comes from a content-PRUNED listing window broadcast-joined
+    back on path: the multi-MB ``content`` column never enters the
+    window's exchange (plan-asserted in tests/test_imaging.py), and
+    decode runs in the scan's own file-split partitions instead of
+    hashing every slice of a stack onto one task.  The one home of the
+    z contract for decode_slices_to_tiles."""
     w = W.partitionBy("channel", "stack").orderBy("path")
     zmap = (
         files.select("path", "channel", "stack")
@@ -169,63 +160,6 @@ def _z_indexed(files: DataFrame) -> DataFrame:
         .select("path", "z")
     )
     return files.join(F.broadcast(zmap), "path")
-
-
-def decode_slices(files: DataFrame) -> DataFrame:
-    """PNG-decode each file row into a slice row.
-
-    z is assigned by lexicographic filename order within the stack —
-    the reference's sorted-glob semantics (`io/readers.py:145`).
-    SmartSPIM slice names are zero-padded depths with arbitrary step
-    ("000000", "000020", ...), so z is the RANK in that order, not the
-    parsed number.
-
-    The rank is computed on a content-PRUNED projection of the same
-    scan (binaryFile materializes only the columns a plan reads, so
-    this side lists paths without reading a single pixel byte) and
-    broadcast-joined back on path.  Consequences, deliberate:
-
-    - the multi-MB ``content`` column never enters an Exchange — the
-      window's shuffle moves ~100-byte path rows only (plan-asserted in
-      tests/test_imaging.py);
-    - decode runs in the scan's own file-split partitions instead of
-      hashing every slice of a stack onto ONE task (the old
-      window-before-decode plan serialized thousands of ~6 MB slices
-      per stack through a single executor thread).
-
-    The broadcast z-map is O(#slice files) small rows; for acquisitions
-    past ~10M slices prefer the one-partition-per-stack DataSource path
-    (sources/smartspim_datasource.py), which needs no z-map at all.
-    """
-    indexed = _z_indexed(files)
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["channel", "stack", "z", "height", "width", "dtype", "data"]
-        out: list[tuple] = []
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                arr = decode_image_gray(bytes(r.content))
-                out.append(
-                    (
-                        r.channel,
-                        r.stack,
-                        r.z,
-                        arr.shape[0],
-                        arr.shape[1],
-                        str(arr.dtype),
-                        arr.tobytes(),  # C-order, native (little) endian
-                    )
-                )
-                # kernel-side Arrow batch sizing (see _IMAGING_OUT_ROWS)
-                if len(out) >= _IMAGING_OUT_ROWS:
-                    yield pd.DataFrame(out, columns=cols)
-                    out = []
-        if out:
-            yield pd.DataFrame(out, columns=cols)
-
-    return indexed.select(
-        "channel", "stack", "z", "path", "content"
-    ).mapInPandas(_decode, schema=SLICE_SCHEMA)
 
 
 def probe_shapes(files: DataFrame) -> DataFrame:
@@ -426,13 +360,11 @@ def decode_slices_to_tiles(
     """Fused decode + tile split: raw file rows → tile rows in ONE
     Python kernel.
 
-    ``decode_slices`` → ``slices_to_chunks`` composes the same result
-    from two chained ``mapInPandas`` kernels, which round-trips the
-    full decoded pixel volume through an extra JVM↔Python Arrow
-    crossing between them.  The fused kernel decodes a slice and emits
-    its tiles without the pixels ever going back to the JVM in
-    slice-row form.  z assignment is identical to ``decode_slices``
-    (content-pruned listing window, broadcast z-map).
+    A slice is decoded and cut into its tiles in the same kernel, so
+    the pixels never go back to the JVM in slice-row form.  z comes
+    from :func:`_z_indexed` (content-pruned listing window, broadcast
+    z-map).  With ``chunk_y``/``chunk_x`` None each slice is one
+    full-plane tile.
 
     ``on_error``: ``"fail"`` (default) propagates a codec error and
     fails the job — right for curated acquisitions.  ``"quarantine"``
@@ -522,8 +454,9 @@ def read_stack_tree(
     chunk_x: int | None = None,
     on_error: str = "fail",
 ) -> DataFrame:
-    """Scan + decode + chunk in one declarative pipeline (fused decode
-    + tile kernel; see decode_slices_to_tiles).
+    """Scan + decode + chunk in one declarative pipeline: the imaging
+    job's chunk-table scan (decode and tile split in one kernel, see
+    decode_slices_to_tiles; then the one assembly shuffle).
 
     With ``on_error="quarantine"`` a corrupt slice becomes a ZERO
     plane at its true z position — INCLUDING a trailing corrupt slice
@@ -584,62 +517,3 @@ def read_stack_tree(
         )
         return assemble_tiles(good.unionByName(zeros), chunk_z=chunk_z)
     return assemble_tiles(tiles)
-
-
-def read_stack_tree_datasource(
-    spark: SparkSession,
-    root: str,
-    chunk_z: int = 64,
-    chunk_y: int | None = None,
-    chunk_x: int | None = None,
-) -> DataFrame:
-    """DataSource-backed ingest: the default scan path at scale.
-
-    One input partition per stack (sources/smartspim_datasource.py), z
-    taken from each partition's own sorted file list — no z-map window,
-    no broadcast, no O(#slices) driver state — followed by the SAME
-    tile-first assembly shuffle as :func:`read_stack_tree`.  The two
-    paths are bit-identical on clean trees (tests/test_datasource.py);
-    this one has no quarantine mode (a corrupt slice fails the job), so
-    `run_imaging_job` falls back to the UDF path when the Python
-    DataSource API is unavailable or dead-letter handling is required.
-    """
-    from aind_smartspim_data_transformation_spark.session import imaging_session
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        ensure_registered,
-    )
-
-    sess = imaging_session(spark)
-    # Registration (ensure_registered) leans on PRIVATE PySpark
-    # internals that move across Spark versions.  Since "auto" makes
-    # this the DEFAULT ingest, any breakage there (advisor r5) must
-    # DEGRADE to the public-API UDF path, not fail ingestion — hence
-    # the broad except + fallback.
-    try:
-        ensure_registered(sess)
-        slices = (
-            sess.read.format("smartspim")
-            # chunk_z-aligned z-slabs: every tile of a slab comes from
-            # one scan task, and decode parallelism scales with stacks
-            # × slabs; the floor keeps small acquisitions from idling
-            # cores
-            .option("slab", str(chunk_z))
-            .option(
-                "min_partitions",
-                str(sess.sparkContext.defaultParallelism * 2),
-            )
-            .load(root)
-            .withColumnRenamed("slice_idx", "z")
-        )
-    except Exception as exc:  # pragma: no cover - version-dependent
-        import warnings
-
-        warnings.warn(
-            "smartspim DataSource registration failed "
-            f"({type(exc).__name__}: {exc}); falling back to the UDF "
-            "ingest path (read_stack_tree)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return read_stack_tree(spark, root, chunk_z, chunk_y, chunk_x)
-    return slices_to_chunks(slices, chunk_z, chunk_y, chunk_x)

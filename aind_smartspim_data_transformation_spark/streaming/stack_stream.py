@@ -12,9 +12,9 @@ the accumulated slice table converges to exactly what the batch path
 Two deliberate semantic choices:
 
 - **slice_key, not z, is the streamed identity.** The batch path assigns
-  dense z by filename rank over *all* files of a stack
-  (`decode_slices`, `io/readers.py:145` sorted-glob semantics) — a window
-  an incremental batch cannot evaluate (it only sees new files).  The
+  dense z by filename rank over *all* files of a stack (`_z_indexed`,
+  `io/readers.py:145` sorted-glob semantics) — a window an incremental
+  batch cannot evaluate (it only sees new files).  The
   stream therefore carries the numeric filename stem (`slice_key`,
   batch-independent and content-stable); dense z is assigned at
   chunk-assembly time by rank over the *accumulated* table, where it is

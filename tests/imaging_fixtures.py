@@ -68,3 +68,22 @@ def make_dataset(
     }
     (root / "acquisition.json").write_text(json.dumps(acquisition))
     return arrays
+
+
+def run_job_on_route(spark, settings, route: str) -> dict:
+    """Run the imaging job and assert the route it took.  ``"fused"``
+    runs at the default memory envelope, which every test geometry
+    fits; ``"udf"`` patches the envelope to 0 so the chunk-table
+    pipeline runs instead."""
+    import pytest
+
+    from aind_smartspim_data_transformation_spark.imaging import fused
+    from aind_smartspim_data_transformation_spark.imaging.job import run_imaging_job
+
+    with pytest.MonkeyPatch.context() as mp:
+        if route == "udf":
+            mp.setattr(fused, "FUSED_MAX_TASK_BYTES", 0)
+        resp = run_imaging_job(spark, settings)
+    assert resp["status_code"] == 200
+    assert resp["route"] == route
+    return resp

@@ -620,10 +620,10 @@ def test_packbits_stack_e2e(spark, tmp_path):
                 output_directory=str(out),
                 chunk_size=[64, 8, 64],  # multi-band y to hit windows
                 downsample_levels=2,
-                ingest="fused",
             ),
         )
         assert resp["status_code"] == 200
+        assert resp["route"] == "fused"
         roots[name] = {
             str(p.relative_to(out)): p.read_bytes()
             for p in sorted(out.rglob("*"))
@@ -764,10 +764,10 @@ def test_tiled_and_interlaced_stack_e2e(spark, tmp_path):
                 output_directory=str(out),
                 chunk_size=[64, 16, 64],  # multi-band y
                 downsample_levels=2,
-                ingest="fused",
             ),
         )
         assert resp["status_code"] == 200
+        assert resp["route"] == "fused"
         trees[name] = {
             str(p.relative_to(out)): p.read_bytes()
             for p in sorted(out.rglob("*"))

@@ -1,212 +1,17 @@
-"""Spark 4 Python DataSource: smartspim format vs the UDF decode path."""
+"""Spark 4 Python DataSource: the smartspim stream reader, plus the
+chunk-table sink's geometry sweep."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from tests.imaging_fixtures import make_dataset
-
-
-@pytest.fixture(scope="module")
-def ds_dataset(tmp_path_factory):
-    root = tmp_path_factory.mktemp("smartspim_ds")
-    arrays = make_dataset(root)
-    return root, arrays
-
-
-def test_datasource_reads_all_slices(spark, ds_dataset):
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimDataSource,
-    )
-
-    root, arrays = ds_dataset
-    spark.dataSource.register(SmartspimDataSource)
-    df = spark.read.format("smartspim").load(str(root / "SmartSPIM"))
-    rows = df.collect()
-    assert len(rows) == 2 * 2 * 2 * 2  # channels x cols x rows x slices
-    # pixel-identical to the fixture arrays
-    r0 = sorted(rows, key=lambda r: (r["channel"], r["stack"], r["slice_idx"]))[0]
-    key = sorted(arrays)[0]
-    got = np.frombuffer(r0["data"], dtype=np.dtype(r0["dtype"])).reshape(
-        r0["height"], r0["width"]
-    )
-    np.testing.assert_array_equal(got, arrays[key][0])
-
-
-def test_datasource_partitions_by_stack(spark, ds_dataset):
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimReader,
-    )
-
-    root, _ = ds_dataset
-    reader = SmartspimReader({"path": str(root / "SmartSPIM")})
-    parts = reader.partitions()
-    assert len(parts) == 2 * 2 * 2  # one per stack
-    assert all(len(p.files) == 2 for p in parts)
-
-
-def test_datasource_filter_pushdown_prunes_partitions(spark, ds_dataset):
-    """channel/stack equality filters prune stack directories at plan
-    time; results stay correct (Spark re-applies the filter post-scan)."""
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimDataSource,
-        SmartspimReader,
-    )
-    from pyspark.sql.datasource import EqualTo
-
-    root, _ = ds_dataset
-    spark.dataSource.register(SmartspimDataSource)
-    df = (
-        spark.read.format("smartspim")
-        .load(str(root / "SmartSPIM"))
-        .filter("channel = 'Ex_445_Em_469' AND stack = '432380_504340'")
-    )
-    rows = df.collect()
-    assert len(rows) == 2  # one stack, two slices
-    assert {(r["channel"], r["stack"]) for r in rows} == {
-        ("Ex_445_Em_469", "432380_504340")
-    }
-    # the reader itself prunes: only 1 of 8 stack partitions remains
-    reader = SmartspimReader({"path": str(root / "SmartSPIM")})
-    leftover = list(
-        reader.pushFilters(
-            [
-                EqualTo(("channel",), "Ex_445_Em_469"),
-                EqualTo(("stack",), "432380_504340"),
-            ]
-        )
-    )
-    assert len(leftover) == 2  # re-checked by Spark, still pushed
-    assert len(reader.partitions()) == 1
-
-
-def test_datasource_reads_tiff_stacks(spark, tmp_path):
-    """The Python DataSource decodes TIFF slices via the same
-    magic-byte dispatch as the UDF path."""
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimDataSource,
-    )
-    from tests.imaging_fixtures import make_dataset
-
-    arrays = make_dataset(tmp_path, fmt="tif")
-    spark.dataSource.register(SmartspimDataSource)
-    df = (
-        spark.read.format("smartspim")
-        .load(str(tmp_path / "SmartSPIM"))
-        .filter("channel = 'Ex_445_Em_469' AND stack = '432380_504340'")
-    )
-    rows = sorted(df.collect(), key=lambda r: r["slice_idx"])
-    assert len(rows) == 2
-    for z, r in enumerate(rows):
-        got = np.frombuffer(r["data"], dtype=np.dtype(r["dtype"])).reshape(
-            r["height"], r["width"]
-        )
-        np.testing.assert_array_equal(got, arrays["Ex_445_Em_469/432380_504340"][z])
-
-
-def test_datasource_manifest_listing(spark, ds_dataset, tmp_path):
-    """A manifest of root-relative paths replaces os.walk (the 100 TB
-    listing path): rows identical to the walk listing, z unaffected by
-    manifest line order, and a slice omitted from the manifest is
-    simply not read."""
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimDataSource,
-    )
-
-    root, _ = ds_dataset
-    base = root / "SmartSPIM"
-    rels = sorted(
-        str(p.relative_to(base)) for p in base.rglob("*") if p.is_file()
-    )
-    manifest = tmp_path / "inventory.txt"
-    # REVERSED line order + a blank line: the z contract must come from
-    # sorting, not manifest order
-    manifest.write_text("\n".join(reversed(rels)) + "\n\n")
-
-    spark.dataSource.register(SmartspimDataSource)
-    walk_rows = sorted(
-        map(tuple, spark.read.format("smartspim").load(str(base)).collect())
-    )
-    man_rows = sorted(
-        map(
-            tuple,
-            spark.read.format("smartspim")
-            .option("manifest", str(manifest))
-            .load(str(base))
-            .collect(),
-        )
-    )
-    assert man_rows == walk_rows
-
-    # drop one stack's slices from the manifest -> that stack vanishes
-    kept = [r for r in rels if "432380_504340" not in r]
-    manifest.write_text("\n".join(kept))
-    pruned = (
-        spark.read.format("smartspim")
-        .option("manifest", str(manifest))
-        .load(str(base))
-        .select("stack")
-        .distinct()
-        .collect()
-    )
-    assert all(r["stack"] != "432380_504340" for r in pruned)
-    assert len(pruned) == len({r[1] for r in walk_rows}) - 1
-
-
-def test_datasource_manifest_dedups_duplicate_lines(spark, ds_dataset, tmp_path):
-    """Inventory dumps can repeat a key across list pages: a duplicated
-    manifest line must not emit the slice twice or shift later z
-    indices (self-review r5 finding)."""
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimDataSource,
-    )
-
-    root, _ = ds_dataset
-    base = root / "SmartSPIM"
-    rels = sorted(
-        str(p.relative_to(base)) for p in base.rglob("*") if p.is_file()
-    )
-    manifest = tmp_path / "dup.txt"
-    manifest.write_text("\n".join(rels + rels[:3]))  # first 3 lines repeated
-
-    spark.dataSource.register(SmartspimDataSource)
-    walk_rows = sorted(
-        map(tuple, spark.read.format("smartspim").load(str(base)).collect())
-    )
-    dup_rows = sorted(
-        map(
-            tuple,
-            spark.read.format("smartspim")
-            .option("manifest", str(manifest))
-            .load(str(base))
-            .collect(),
-        )
-    )
-    assert dup_rows == walk_rows
-
-
-def test_datasource_slab_zero_means_whole_stack(ds_dataset):
-    """slab=0 guarantees one partition per stack even when
-    min_partitions would otherwise re-split (self-review r5 finding)."""
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimReader,
-    )
-
-    root, _ = ds_dataset
-    reader = SmartspimReader(
-        {"path": str(root / "SmartSPIM"), "slab": "0", "min_partitions": "64"}
-    )
-    parts = reader.partitions()
-    assert len(parts) == 2 * 2 * 2  # one per stack, floor ignored
-    assert all(p.z0 == 0 for p in parts)
-
 
 def test_datasource_streams_two_waves(spark, tmp_path):
     """spark.readStream.format("smartspim"): slices arriving across two
     availableNow runs are each decoded exactly once (compact per-stack
-    offsets), and the accumulated rows equal the batch read of the
-    finished tree."""
+    offsets), and every landed row carries the generated plane of its
+    slice index."""
     import numpy as np
 
     from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
@@ -247,17 +52,17 @@ def test_datasource_streams_two_waves(spark, tmp_path):
         (d / f"{z:06d}.png").write_bytes(encode_png_gray(planes[z]))
     drain()
 
-    got = sorted(
-        map(tuple, spark.read.parquet(out).collect())
-    )
-    batch = sorted(
-        map(tuple, spark.read.format("smartspim").load(str(root)).collect())
-    )
-    assert got == batch
+    got = spark.read.parquet(out).collect()
     assert len(got) == 6  # wave-1 slices were not re-decoded
     # z order survived the incremental arrival
-    idx = [r[2] for r in got]
+    idx = [r["slice_idx"] for r in got]
     assert sorted(idx) == list(range(6))
+    for r in got:
+        assert (r["channel"], r["stack"]) == ("Ex_488_Em_525", "400000_500000")
+        pixels = np.frombuffer(r["data"], dtype=np.dtype(r["dtype"])).reshape(
+            r["height"], r["width"]
+        )
+        np.testing.assert_array_equal(pixels, planes[r["slice_idx"]])
 
 
 def test_stream_reader_crash_replay_fresh_instance(tmp_path):

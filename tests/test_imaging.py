@@ -23,7 +23,7 @@ from aind_smartspim_data_transformation_spark.sources.acquisition import (
     get_voxel_resolution,
 )
 from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-    decode_slices,
+    decode_slices_to_tiles,
     read_stack_tree,
     scan_stack_files,
     validate_extensions,
@@ -52,14 +52,16 @@ def test_scan_finds_all_slices(spark, dataset):
 def test_decode_matches_source_pixels(spark, dataset):
     root, arrays = dataset
     files = scan_stack_files(spark, str(root / "SmartSPIM"))
-    slices = decode_slices(files).filter(
+    # no Y/X tiling: each slice is one full-plane tile
+    tiles = decode_slices_to_tiles(files, chunk_z=2).filter(
         "channel = 'Ex_445_Em_469' AND stack = '432380_504340'"
     )
-    rows = {r["z"]: r for r in slices.collect()}
+    rows = {r["z"]: r for r in tiles.collect()}
     src = arrays["Ex_445_Em_469/432380_504340"]
     assert len(rows) == src.shape[0]
     for z, r in rows.items():
-        got = np.frombuffer(r["data"], dtype=np.uint16).reshape(r["height"], r["width"])
+        assert (r["cy"], r["cx"]) == (0, 0)
+        got = np.frombuffer(r["data"], dtype=np.uint16).reshape(r["dy"], r["dx"])
         assert np.array_equal(got, src[z])
 
 

@@ -13,7 +13,7 @@ from aind_smartspim_data_transformation_spark.config.settings import ImagingJobS
 from aind_smartspim_data_transformation_spark.imaging.job import run_imaging_job
 from aind_smartspim_data_transformation_spark.imaging.pyramid import windowed_mean
 from aind_smartspim_data_transformation_spark.imaging.zarr_sink import read_zarr_level
-from tests.imaging_fixtures import make_dataset
+from tests.imaging_fixtures import make_dataset, run_job_on_route
 
 
 @pytest.fixture(scope="module")
@@ -183,48 +183,39 @@ def test_job_partitioned_runs_cover_all_stacks(spark, tmp_path):
 
 
 def test_job_ingest_paths_write_identical_stores(spark, tmp_path):
-    """All THREE ingest paths — fused (the round-6 default), the
-    DataSource scan, and the UDF pipeline — must produce byte-identical
-    zarr stores through the FULL job (chunk bytes AND metadata JSON),
-    and 'auto' must actually pick the fused path at this geometry."""
+    """Both ingest routes — the fused band tasks and the chunk-table
+    pipeline (envelope patched to 0) — must produce byte-identical
+    zarr stores through the FULL job (chunk bytes AND metadata JSON)
+    with equal ingest metrics, and the default envelope must pick the
+    fused route at this geometry."""
     root = tmp_path / "ds"
     make_dataset(root, height=24, width=28)
 
-    def run(ingest: str) -> tuple[dict[str, bytes], dict]:
-        out = tmp_path / f"out_{ingest}"
-        resp = run_imaging_job(
+    def run(route: str) -> tuple[dict[str, bytes], dict]:
+        out = tmp_path / f"out_{route}"
+        resp = run_job_on_route(
             spark,
             ImagingJobSettings(
                 input_source=str(root),
                 output_directory=str(out),
                 chunk_size=[64, 64, 64],
                 downsample_levels=2,
-                ingest=ingest,
             ),
+            route,
         )
-        assert resp["status_code"] == 200
         return {
             str(p.relative_to(out)): p.read_bytes()
             for p in sorted(out.rglob("*"))
             if p.is_file()
         }, resp
 
-    (ds, ds_resp), (udf, _), (fused, fused_resp) = (
-        run("datasource"), run("udf"), run("fused")
-    )
-    assert ds == udf
-    assert fused == ds
+    (udf, udf_resp), (fused, fused_resp) = run("udf"), run("fused")
+    assert fused == udf
     # metrics contract parity: fused reports the same ingest accounting
     # VALUES the chunk-table job's Observation produces (level-0 chunk
     # count and raw unpadded bytes)
-    assert fused_resp["metrics"] == ds_resp["metrics"]
+    assert fused_resp["metrics"] == udf_resp["metrics"]
     assert set(fused_resp["metrics"]) == {"n_chunks", "chunk_bytes"}
-    # 'auto' takes the fused path at this (tiny) geometry
-    (auto, auto_resp) = run("auto")
-    assert auto == fused
-    assert auto_resp["route"] == "fused"
-    # the availability gate: this pyspark has the DataSource API
-    assert hasattr(spark, "dataSource")
 
 
 def test_append_z_slab_equals_one_shot(spark, tmp_path):
@@ -495,27 +486,26 @@ def test_fused_multi_slab_store_identical(spark, tmp_path):
         )
     )
 
-    def run(ingest):
-        out = tmp_path / f"out_{ingest}"
-        resp = run_imaging_job(
+    def run(route):
+        out = tmp_path / f"out_{route}"
+        run_job_on_route(
             spark,
             ImagingJobSettings(
                 input_source=str(root),
                 output_directory=str(out),
                 chunk_size=[4, 4, 4],
                 downsample_levels=3,
-                ingest=ingest,
             ),
+            route,
         )
-        assert resp["status_code"] == 200
         return out, {
             str(p.relative_to(out)): p.read_bytes()
             for p in sorted(out.rglob("*"))
             if p.is_file()
         }
 
-    (out_f, fused), (_, ds) = run("fused"), run("datasource")
-    assert fused == ds
+    (out_f, fused), (_, udf) = run("fused"), run("udf")
+    assert fused == udf
     # numpy oracle at every level
     g = f"{out_f}/{ch}/{stack}.ome.zarr"
     expect = vol
@@ -535,16 +525,17 @@ def test_fused_rerun_and_partial_damage_repair(spark, tmp_path):
     make_dataset(root, height=24, width=28)
 
     def run(out):
-        return run_imaging_job(
+        resp = run_imaging_job(
             spark,
             ImagingJobSettings(
                 input_source=str(root),
                 output_directory=str(out),
                 chunk_size=[8, 8, 8],
                 downsample_levels=2,
-                ingest="fused",
             ),
         )
+        assert resp["route"] == "fused"
+        return resp
 
     def snap(out):
         return {
@@ -610,27 +601,26 @@ def test_fused_mixed_png_tiff_stack(spark, tmp_path):
         )
     )
 
-    def run(ingest):
-        out = tmp_path / f"out_{ingest}"
-        resp = run_imaging_job(
+    def run(route):
+        out = tmp_path / f"out_{route}"
+        run_job_on_route(
             spark,
             ImagingJobSettings(
                 input_source=str(root),
                 output_directory=str(out),
                 chunk_size=[4, 4, 4],
                 downsample_levels=2,
-                ingest=ingest,
             ),
+            route,
         )
-        assert resp["status_code"] == 200
         return out, {
             str(p.relative_to(out)): p.read_bytes()
             for p in sorted(out.rglob("*"))
             if p.is_file()
         }
 
-    (out_f, fused), (_, ds) = run("fused"), run("datasource")
-    assert fused == ds
+    (out_f, fused), (_, udf) = run("fused"), run("udf")
+    assert fused == udf
     g = f"{out_f}/{ch}/{stack}.ome.zarr"
     expect = vol
     for lvl in range(2):
@@ -680,27 +670,26 @@ def test_fused_even_band_count_folds_pairwise(spark, tmp_path):
     nb, per_band = _band_plan(geo, [4, 4, 4], 32)[(ch, f"{col}_504340")]
     assert nb == 4 and per_band == 1  # the even-fold shape this pins
 
-    def run(ingest):
-        out = tmp_path / f"out_{ingest}"
-        resp = run_imaging_job(
+    def run(route):
+        out = tmp_path / f"out_{route}"
+        run_job_on_route(
             spark,
             ImagingJobSettings(
                 input_source=str(root),
                 output_directory=str(out),
                 chunk_size=[4, 4, 4],
                 downsample_levels=2,
-                ingest=ingest,
             ),
+            route,
         )
-        assert resp["status_code"] == 200
         return out, {
             str(p.relative_to(out)): p.read_bytes()
             for p in sorted(out.rglob("*"))
             if p.is_file()
         }
 
-    (out_f, fused), (_, ds) = run("fused"), run("datasource")
-    assert fused == ds
+    (out_f, fused), (_, udf) = run("fused"), run("udf")
+    assert fused == udf
     g = f"{out_f}/{ch}/{stack}.ome.zarr"
     expect = vol
     for lvl in range(2):
@@ -1067,12 +1056,12 @@ def test_input_listing_digest_modes(spark, tmp_path):
 
 
 def test_auto_routing_boundary_on_task_budget(spark, tmp_path, monkeypatch):
-    """VERDICT r8 ask #5 (auto-routing half): 'auto' must take the
+    """VERDICT r8 ask #5 (auto-routing half): the job must take the
     fused path when the probed per-task band buffer fits
     FUSED_MAX_TASK_BYTES EXACTLY, and fall back to the chunk-table
-    pipeline one byte past it — with byte-identical stores either
-    side of the boundary (the budget changes the ROUTE, never the
-    output).  tools/fused_memory_probe.py measures the same boundary
+    pipeline one byte past it, in both on_error modes — with
+    byte-identical stores either side of the boundary (the budget
+    changes the ROUTE, never the output).  tools/fused_memory_probe.py measures the same boundary
     at a bigger geometry (wall + peak tree RSS, SCALE.md §6g)."""
     from aind_smartspim_data_transformation_spark.imaging import fused
 
@@ -1083,9 +1072,9 @@ def test_auto_routing_boundary_on_task_budget(spark, tmp_path, monkeypatch):
         geo, [64, 64, 64], spark.sparkContext.defaultParallelism
     )
 
-    def run(tag: str, cap: int):
+    def run(tag: str, cap: int, on_error: str):
         monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", cap)
-        out = tmp_path / f"out_{tag}"
+        out = tmp_path / f"out_{tag}_{on_error}"
         resp = run_imaging_job(
             spark,
             ImagingJobSettings(
@@ -1093,7 +1082,7 @@ def test_auto_routing_boundary_on_task_budget(spark, tmp_path, monkeypatch):
                 output_directory=str(out),
                 chunk_size=[64, 64, 64],
                 downsample_levels=2,
-                ingest="auto",
+                on_error=on_error,
             ),
         )
         assert resp["status_code"] == 200
@@ -1103,11 +1092,15 @@ def test_auto_routing_boundary_on_task_budget(spark, tmp_path, monkeypatch):
             if p.is_file()
         }, resp
 
-    at, at_resp = run("at", task_bytes)          # fits exactly → fused
-    over, over_resp = run("over", task_bytes - 1)  # one byte short → fallback
-    assert at_resp["route"] == "fused"
-    assert over_resp["route"] != "fused"
-    assert at == over  # the route never changes the bytes
+    stores = []
+    for on_error in ("fail", "quarantine"):
+        at, at_resp = run("at", task_bytes, on_error)  # fits exactly → fused
+        over, over_resp = run("over", task_bytes - 1, on_error)  # → fallback
+        assert at_resp["route"] == "fused"
+        assert over_resp["route"] == "udf"
+        stores += [at, over]
+    # the route never changes the bytes
+    assert all(st == stores[0] for st in stores)
 
 
 def test_band_plan_shrinks_to_memory_envelope():
@@ -1116,7 +1109,7 @@ def test_band_plan_shrinks_to_memory_envelope():
     path.  This is the measured regression geometry — 4 stacks × 320
     slices of 2000×1600 uint16 at 128³ chunks: the want-derived plan
     picks 2-chunk-row bands whose folded buffers overshoot 256 MiB by
-    ~0.04%, and before the cap the auto route fell back to the
+    ~0.04%, and before the cap the job fell back to the
     chunk-table pipeline at half the fused throughput."""
     from aind_smartspim_data_transformation_spark.imaging.fused import (
         FUSED_MAX_TASK_BYTES,
@@ -1191,7 +1184,6 @@ def test_band_plan_cap_never_changes_store_bytes(
                 output_directory=str(out),
                 chunk_size=[4, 4, 4],
                 downsample_levels=2,
-                ingest="fused",
             ),
         )
         assert resp["status_code"] == 200
@@ -1258,7 +1250,7 @@ def test_band_plan_invariants_hypothesis():
 def test_band_plan_giant_plane_still_falls_back():
     """Even single-chunk-row bands can't fit a wide-enough plane; the
     plan floors at per_band=1 and fused_task_bytes honestly exceeds
-    the envelope — job.py's auto route must keep the chunk-table
+    the envelope — job.py must keep the chunk-table
     fallback for exactly this case."""
     from aind_smartspim_data_transformation_spark.imaging.fused import (
         FUSED_MAX_TASK_BYTES,

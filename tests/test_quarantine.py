@@ -7,7 +7,12 @@ import numpy as np
 import pytest
 
 from aind_smartspim_data_transformation_spark.sources import stack_reader as sr
-from tests.imaging_fixtures import CHANNELS, SLICES, make_dataset
+from tests.imaging_fixtures import (
+    CHANNELS,
+    SLICES,
+    make_dataset,
+    run_job_on_route,
+)
 
 
 def _corrupt_first_slice(root) -> str:
@@ -123,26 +128,22 @@ def test_quarantine_ingest_reaches_zarr_sink(spark, tmp_path):
 # survive a corrupt slice exactly like the UDF pipeline — zero plane at
 # position, dead-letter triage row, store identical.
 # ---------------------------------------------------------------------------
-def _run_job(spark, root, out, ingest, on_error, chunk=(64, 64, 64)):
+def _run_job(spark, root, out, route, on_error, chunk=(64, 64, 64)):
     from aind_smartspim_data_transformation_spark.config.settings import (
         ImagingJobSettings,
     )
-    from aind_smartspim_data_transformation_spark.imaging.job import (
-        run_imaging_job,
-    )
 
-    resp = run_imaging_job(
+    resp = run_job_on_route(
         spark,
         ImagingJobSettings(
             input_source=str(root),
             output_directory=str(out),
             chunk_size=list(chunk),
             downsample_levels=2,
-            ingest=ingest,
             on_error=on_error,
         ),
+        route,
     )
-    assert resp["status_code"] == 200
     tree = {
         str(p.relative_to(out)): p.read_bytes()
         for p in sorted(out.rglob("*"))
@@ -153,7 +154,7 @@ def _run_job(spark, root, out, ingest, on_error, chunk=(64, 64, 64)):
 
 def test_fused_quarantine_store_matches_udf_store(spark, tmp_path):
     """Corrupt slice (the FIRST of its stack — the probe must fall back
-    to the next slice), ingest='fused' with quarantine: store is
+    to the next slice), fused route with quarantine: store is
     byte-identical to the UDF-quarantine store, and the dead-letter
     metric names the slice."""
     root = tmp_path / "ds"
@@ -237,24 +238,10 @@ def test_fused_geometry_mismatch_fails_loudly(spark, tmp_path):
     assert got[0].any()
 
 
-def test_datasource_quarantine_refused_at_settings(spark):
-    from aind_smartspim_data_transformation_spark.config.settings import (
-        ImagingJobSettings,
-    )
-
-    with pytest.raises(Exception, match="(?i)quarantine"):
-        ImagingJobSettings(
-            input_source="/x",
-            output_directory="/y",
-            ingest="datasource",
-            on_error="quarantine",
-        )
-
-
 def test_trailing_corrupt_slice_same_store_both_paths(spark, tmp_path):
     """A corrupt LAST slice used to shorten the UDF path's slab while
     the fused path zero-filled it at position (extents from the
-    listing) — path-dependent store shapes under ingest='auto'.  Both
+    listing) — route-dependent store shapes.  Both
     paths must now produce the listing-extent store with a zero plane
     at the end, byte-identical."""
     root = tmp_path / "ds"

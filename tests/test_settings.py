@@ -29,6 +29,16 @@ def test_json_arg_precedence(tmp_path):
         config_file=str(cfg),
     )
     assert str(s.input_source) == "/arg"
+    # a payload from before the route setting was removed still runs:
+    # the stale "ingest" key is ignored, the other fields unchanged
+    old = ImagingJobSettings.resolve(
+        json_arg=json.dumps(
+            {"input_source": "/arg", "output_directory": "/o", "ingest": "udf"}
+        ),
+        config_file=str(cfg),
+    )
+    assert old == s
+    assert not hasattr(old, "ingest")
 
 
 def test_config_file(tmp_path):
@@ -46,6 +56,13 @@ def test_config_file(tmp_path):
     s = ImagingJobSettings.resolve(config_file=str(cfg))
     assert str(s.input_source) == "/file"
     assert s.num_of_partitions == 4
+    # an old config file carrying "ingest" validates to the same settings
+    payload = json.loads(cfg.read_text())
+    payload["ingest"] = "datasource"
+    cfg.write_text(json.dumps(payload))
+    old = ImagingJobSettings.resolve(config_file=str(cfg))
+    assert old == s
+    assert not hasattr(old, "ingest")
 
 
 def test_env_vars():
@@ -60,6 +77,12 @@ def test_env_vars():
     assert str(s.input_source) == "/env"
     assert s.downsample_levels == 2
     assert s.chunk_size == [64, 64, 64]
+    # an environment still exporting the removed route setting
+    old = ImagingJobSettings.resolve(
+        environ={**env, "TRANSFORMATION_JOB_INGEST": "fused"}
+    )
+    assert old == s
+    assert not hasattr(old, "ingest")
 
 
 def test_invalid_settings_rejected():

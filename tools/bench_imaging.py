@@ -148,7 +148,7 @@ def run_e2e(spark, n_slices: int) -> dict:
             "wall_sec": round(wall, 2),
             "stacks": len(CHANNELS) * len(COLS) * len(ROWS),
             "slices_per_stack": n_slices,
-            # which ingest route "auto" took — the SCALE.md §6m routing
+            # which ingest route the job took — the SCALE.md §6m routing
             # regression (deep stacks silently on the chunk-table
             # fallback at half throughput) was invisible in BENCH JSON
             # until this field existed

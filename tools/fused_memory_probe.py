@@ -3,7 +3,7 @@
 
 VERDICT r7 ask #7 / r8 ask #5: ``FUSED_MAX_TASK_BYTES`` caps the fused
 path's per-task band buffer (two folded bands + one decoded slice
-span); past the cap, ``ingest="auto"`` must fall back to the
+span); past the cap, ``run_imaging_job`` must fall back to the
 chunk-table pipeline, whose per-task state is one chunk-row Arrow
 batch, not a whole band.  This probe exercises the boundary on an
 acquisition LARGER than a shrunken budget (shrinking the cap instead
@@ -13,7 +13,7 @@ measures both routes at the same geometry:
 - synthesizes one stack of ``--z`` slices at ``--height``×``--width``
   uint16 (default 32 × 2048 × 2048 ≈ 256 MiB raw);
 - computes ``fused_task_bytes`` for the geometry, then runs the FULL
-  ``run_imaging_job`` twice under ``ingest="auto"``:
+  ``run_imaging_job`` twice with default routing:
   A = cap set AT the probed task bytes (fused route taken),
   B = cap set one byte BELOW (chunk-table fallback taken);
 - asserts the routing decisions and that the two stores are
@@ -174,7 +174,6 @@ def main() -> int:
                 output_directory=str(out),
                 chunk_size=[128, 128, 128],
                 downsample_levels=3,
-                ingest="auto",
             ),
         )
         wall = time.perf_counter() - t0
@@ -182,7 +181,7 @@ def main() -> int:
         assert resp["status_code"] == 200
         routed_fused = resp["route"] == "fused"
         assert routed_fused == (tag == "fused"), (
-            f"auto routed {resp['route']} under cap={cap} — expected {tag}"
+            f"job routed {resp['route']} under cap={cap} — expected {tag}"
         )
         results[tag] = {
             "cap_bytes": cap,

@@ -6,13 +6,13 @@ envelope cap; the one remaining fused-path limit is a plane too WIDE
 for a single-chunk-row band: with 128³ chunks and uint16, a folded
 task's two one-chunk-row band buffers alone cost 2·128·128·x·2 bytes,
 so `2·128·128·x·2 + y·x·2 > FUSED_MAX_TASK_BYTES` (256 MiB) forces
-job.py's auto route onto the PRESERVED chunk-table pipeline.  Square
+job.py onto the chunk-table pipeline.  Square
 crossover: x ≈ 3682 px — i.e. any plane wider than ~3.7k px is
 width-bound off the fused path regardless of depth.
 
 This probe generates ONE stack of $GIANT_SLICES (default 16) square
-planes of $GIANT_XY (default 8192) px, runs ingest="auto", asserts the
-route taken was the chunk-table fallback, and prints ONE JSON line
+planes of $GIANT_XY (default 8192) px, runs the default job, asserts
+the route taken was the chunk-table fallback, and prints ONE JSON line
 with MB/s — the §6m table's missing row.
 
     python tools/giant_plane_probe.py
@@ -88,7 +88,7 @@ def main() -> None:
     spark = build_local_session(
         app_name="giant-plane-probe", driver_memory="48g"
     )
-    # the route prediction, from the same probe job.py's auto uses
+    # the route prediction, from the same probe job.py routes by
     geo = [
         {
             "channel": "Ex_445_Em_469",
