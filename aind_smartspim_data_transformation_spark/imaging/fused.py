@@ -553,7 +553,6 @@ def run_fused_ingest(
     stack_filter: list[tuple[str, str]] | None = None,
     geo: list[dict[str, Any]] | None = None,
     on_error: str = "fail",
-    failpoint_fail_key: tuple[str, str, int, int] | None = None,
     resume_digest: str = "metadata",
 ) -> tuple[list[str], dict[str, Any]]:
     """Write every stack's full multiscale store via fused band tasks.
@@ -569,19 +568,18 @@ def run_fused_ingest(
     is driver-side because dead letters are rare by construction; an
     operator at 100 TB persists it to the triage table of their choice.
 
-    Mid-job restartability (round 8): each completed band group writes
-    an atomic completion marker (chunk writes first, then the marker
-    via temp-file + rename) under ``<output_root>/.fused_progress/``;
-    a rerun after a failure or kill validates the markers' store/plan
+    Mid-job restartability: each completed band group writes an atomic
+    completion marker (chunk writes first, then the marker via
+    temp-file + rename) under ``<output_root>/.fused_progress/``; a
+    rerun after a failure or kill validates the markers' store/plan
     fingerprints, SKIPS every marker-present band (its chunks are
     already final — the store stays metadata-less until the very end,
     so "final" is invisible to readers), merges the saved per-band
     metrics and dead letters, and deletes the progress directory after
     the metadata-last finalize.  At a petabyte acquisition a late
-    failure now costs only the unfinished bands, not a full re-decode
-    (previously the round-7 missing item #1).  A marker from a
-    DIFFERENT store layout refuses loudly; a marker from a different
-    band plan (cluster size / on_error changed) — or, round 9, from a
+    failure costs only the unfinished bands, not a full re-decode.  A
+    marker from a DIFFERENT store layout refuses loudly; a marker from
+    a different band plan (cluster size / on_error changed) — or from a
     different input LISTING digest (a slice added/removed/edited, e.g.
     a corrupt slice replaced in place after a quarantine crash) —
     merely invalidates the skip and the rerun redoes everything over
@@ -591,13 +589,6 @@ def run_fused_ingest(
     ``rsync -a``) or ``"content"`` (sha256 of every input byte — one
     extra full read; use for post-quarantine reruns).  See
     :func:`input_listing_digest` for the exact contract.
-
-    ``failpoint_fail_key`` is crash-test plumbing (the band tasks run
-    in detached Python workers a test monkeypatch cannot reach — the
-    streaming writer's ``failpoint_before_level`` precedent): the band
-    task whose (channel, stack, slab, fold) matches raises before
-    writing anything, failing the job with the other bands' markers in
-    place — the crash-mid-job the restartability test needs.
     """
     if on_error not in ("fail", "quarantine"):
         raise ValueError(
@@ -788,41 +779,6 @@ def run_fused_ingest(
         stack = pdf["stack"].iloc[0]
         cz = int(pdf["slab"].iloc[0])
         fold = int(pdf["fold"].iloc[0])
-        if failpoint_fail_key is not None and (
-            channel, stack, cz, fold
-        ) == tuple(failpoint_fail_key):
-            # deterministic kill: wait for every OTHER band's marker to
-            # be durable first, so the crash test always observes
-            # all-but-one bands complete (otherwise stage cancellation
-            # races the siblings and the test's skip-proof is flaky)
-            import time as _time
-
-            from pyarrow import fs as pafs
-
-            from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-                _fs_for as fsf,
-            )
-
-            fp_fs, fp_base = fsf(output_root)
-            fp_dir = f"{fp_base}/{_PROGRESS_DIRNAME}"
-            want = len(remaining) - 1
-            deadline = _time.time() + 120
-            while _time.time() < deadline:
-                try:
-                    n = sum(
-                        1
-                        for i in fp_fs.get_file_info(pafs.FileSelector(fp_dir))
-                        if i.path.endswith(".json")
-                    )
-                except FileNotFoundError:
-                    n = 0
-                if n >= want:
-                    break
-                _time.sleep(0.1)
-            raise RuntimeError(
-                f"simulated band failure at {failpoint_fail_key} "
-                f"(failpoint_fail_key)"
-            )
         nb, per_band = plan[(channel, stack)]
         height, width, dtype_name = geom[(channel, stack)]
         exp_dtype = np.dtype(dtype_name)

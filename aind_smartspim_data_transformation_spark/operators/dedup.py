@@ -293,27 +293,21 @@ _PAIRS_CAPPED = (
 
 
 def _verify_jaccard_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    cand: DataFrame,
-    broadcast_pairs: bool = True,
+    spark: SparkSession, sf_dir: str, cand: DataFrame
 ) -> DataFrame:
     """d03's verify phase: exact jaccard over candidate pairs, keeping
-    only pairs ≥ JACCARD_THRESHOLD.  (d16 used to share this; since
-    r13 it verifies through `_verify_jaccard_pairs_digest_collapsed`,
-    which is equivalence-tested against this one — d03 keeps the
-    simpler form because its unsaturated candidate set is
-    replica-light by construction.)
+    only pairs ≥ JACCARD_THRESHOLD.  (d16 verifies through
+    `_verify_jaccard_pairs_digest_collapsed`, which is
+    equivalence-tested against this one — d03 keeps the simpler form
+    because its unsaturated candidate set is replica-light by
+    construction.)
 
     Verification touches only candidate docs: broadcast-semi-filter the
     *documents* table down BEFORE tokenize/shingle/explode — the verify
     pass never re-scans non-candidate text (candidates ≪ corpus, so
-    the per-doc distinct is near-free here).  ``broadcast_pairs``
-    controls whether the pair table itself is broadcast into the two
-    set joins: right for d03 (unsaturated candidates are small by
-    construction), wrong for d16 on a boilerplate-heavy corpus where
-    recovered pairs can reach K·n per family — d16 passes False and
-    takes shuffle joins."""
+    the per-doc distinct is near-free here).  The pair table itself is
+    broadcast into the two set joins: d03's unsaturated candidates are
+    small by construction."""
     cand_docs = (
         cand.select(F.col("doc1").alias("doc_id"))
         .union(cand.select(F.col("doc2")))
@@ -336,9 +330,9 @@ def _verify_jaccard_pairs(
     s2 = sets.select(F.col("doc_id").alias("doc2"), F.col("shs").alias("shs2"))
     common = F.size(F.array_intersect("shs1", "shs2"))
     jac = common / (F.size("shs1") + F.size("shs2") - common)
-    pairs = F.broadcast(cand) if broadcast_pairs else cand
     return (
-        pairs.join(s1, "doc1")
+        F.broadcast(cand)
+        .join(s1, "doc1")
         .join(s2, "doc2")
         .withColumn("jaccard", F.round(jac, 4))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
@@ -447,130 +441,6 @@ def _verify_jaccard_pairs_digest_collapsed(
     return same.unionByName(verified).orderBy("doc1", "doc2")
 
 
-def _full_signatures(docs_cand: DataFrame) -> DataFrame:
-    """(doc_id, sig): the FULL 16-minhash signature per eligible doc,
-    concatenated into one 128-hex-char key.  Same hash family and
-    lane-split as `minhash_band_rows` (4 md5 evaluations → 16 lanes),
-    so two docs share `sig` iff they agree on every minhash — the
-    co-bucket-in-all-8-bands condition, a far stronger agreement than
-    any single band key.  Ineligible docs (<3 tokens) have no row."""
-    sh = (
-        docs_cand.withColumn("toks", F.split("text", " "))
-        .filter(F.size("toks") >= 3)
-        .select("doc_id", F.explode(F.expr(_SHINGLES)).alias("sh"))
-    )
-    mins = [
-        F.min(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{i // 4}|"), F.col("sh"))),
-                8 * (i % 4) + 1,
-                8,
-            )
-        ).alias(f"h{i}")
-        for i in range(N_MINHASH)
-    ]
-    return (
-        sh.groupBy("doc_id")
-        .agg(*mins)
-        .select(
-            "doc_id",
-            F.concat(*[F.col(f"h{i}") for i in range(N_MINHASH)]).alias(
-                "sig"
-            ),
-        )
-    )
-
-
-def _verify_jaccard_pairs_signature_collapsed(
-    spark: SparkSession, sf_dir: str, cand: DataFrame
-) -> DataFrame:
-    """d16's verify with the collapse key raised from content digest to
-    full minhash SIGNATURE (VERDICT r13 ask #3, flag path
-    `collapse="signature"` — DEFAULT OFF, see `d16_lsh_recovered_pairs`).
-
-    Where the digest collapse only merges byte-identical replicas, this
-    merges near-identical boilerplate too: one-token-differing variants
-    of a long template usually agree on all 16 minhashes (the varied
-    token touches 3 of ~n shingles, so each minhash survives with prob
-    ≈ (n-3)/n and the full signature with prob ≈ ((n-3)/n)^16), so a
-    million-variant template family collapses to O(distinct signatures)
-    shingle sets instead of one per distinct digest.
-
-    APPROXIMATE BY DESIGN — this changes emitted values, which is why
-    the registered d16 contract stays on the digest path:
-    - same-signature pairs are emitted as jaccard 1.0 without shingle
-      verification (their true jaccard is typically 0.97–1.0 but can
-      sit below threshold — minhash agreement is evidence, not proof:
-      a below-threshold pair at true jaccard j slips through at the
-      textbook rate j^16, MEASURED at 2.68% worst case for j = 0.798
-      and falling to 2e-5 by j = 0.51, length-independent —
-      tools/d16_sig_false_rate.py, artifact
-      tools/d16_sig_false_rate_r14.json);
-    - cross-signature pairs carry their signature-REPRESENTATIVES'
-      jaccard, not their own (within-family variance folds onto the
-      rep pair's value).
-    On a corpus whose near-dup families are exact replicas the output
-    is identical to the digest path (asserted in tests/test_dedup.py).
-
-    Join posture mirrors the digest path exactly: shuffle-side joins
-    (recovered pairs reach K·n per family), canonicalized (least,
-    greatest) signature pairs before the distinct, eligibility via the
-    inner join to `sig` rows (<3-token docs have no signature and no
-    output, same as the digest path's eligibility bit)."""
-    cand_docs = (
-        cand.select(F.col("doc1").alias("doc_id"))
-        .union(cand.select(F.col("doc2")))
-        .distinct()
-    )
-    docs_cand = _docs_spread(spark, sf_dir).join(
-        F.broadcast(cand_docs), "doc_id"
-    )
-    sigs = _full_signatures(docs_cand).persist()  # consumed 3× (pair
-    # sides + rep election); released by the harness's clearCache()
-    # between queries — SCALE.md §6q.
-    p = cand.join(
-        sigs.select(F.col("doc_id").alias("doc1"), F.col("sig").alias("sg1")),
-        "doc1",
-    ).join(
-        sigs.select(F.col("doc_id").alias("doc2"), F.col("sig").alias("sg2")),
-        "doc2",
-    )
-    same = p.filter(F.col("sg1") == F.col("sg2")).select(
-        "doc1", "doc2", F.lit(1.0).alias("jaccard")
-    )
-    cross = p.filter(F.col("sg1") != F.col("sg2")).select(
-        "doc1",
-        "doc2",
-        F.least("sg1", "sg2").alias("sga"),
-        F.greatest("sg1", "sg2").alias("sgb"),
-    )
-    reps = sigs.groupBy("sig").agg(F.min("doc_id").alias("doc_id"))
-    rep_sets = (
-        docs_cand.join(reps, "doc_id")
-        .withColumn("toks", F.split("text", " "))
-        .select("sig", F.explode(F.expr(_SHINGLES)).alias("sh"))
-        .groupBy("sig")
-        .agg(F.collect_set("sh").alias("shs"))
-    )
-    s1 = rep_sets.select(F.col("sig").alias("sga"), F.col("shs").alias("shs1"))
-    s2 = rep_sets.select(F.col("sig").alias("sgb"), F.col("shs").alias("shs2"))
-    common = F.size(F.array_intersect("shs1", "shs2"))
-    jac = common / (F.size("shs1") + F.size("shs2") - common)
-    dver = (
-        cross.select("sga", "sgb")
-        .distinct()
-        .join(s1, "sga")
-        .join(s2, "sgb")
-        .withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("sga", "sgb", "jaccard")
-    )
-    verified = cross.join(dver, ["sga", "sgb"]).select(
-        "doc1", "doc2", "jaccard"
-    )
-    return same.unionByName(verified).orderBy("doc1", "doc2")
-
-
 def d03_dedup_minhash_lsh(
     spark: SparkSession, sf_dir: str, observation=None
 ) -> DataFrame:
@@ -634,12 +504,10 @@ def d03_dedup_minhash_lsh(
         # hygiene policy in SCALE.md §6q and registry.all_queries().
         .persist()
     )
-    return _verify_jaccard_pairs(spark, sf_dir, cand, broadcast_pairs=True)
+    return _verify_jaccard_pairs(spark, sf_dir, cand)
 
 
-def d16_lsh_recovered_pairs(
-    spark: SparkSession, sf_dir: str, collapse: str = "digest"
-) -> DataFrame:
+def d16_lsh_recovered_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """d03 with bounded recall inside saturated buckets (VERDICT r11
     "what's missing" #1 / ask #2): where d03 DROPS a band bucket larger
     than MAX_BAND_BUCKET (losing every LSH pair of a >64-way near-dup
@@ -661,26 +529,16 @@ def d16_lsh_recovered_pairs(
     planted >64-way-family fixture (tests/test_dedup.py) pins the
     recovery: d03 returns zero pairs, d16 returns the rep-pair set,
     oracle-matched."""
-    cand = _d16_candidates(spark, sf_dir)
     # Recovered pairs can reach K·n per boilerplate family — too big to
     # force-broadcast; the digest-collapsed verify joins shuffle.
-    # collapse="signature" (r14, VERDICT r13 ask #3) raises the
-    # collapse key to the full 16-minhash signature — near-identical
-    # boilerplate merges too, but emitted jaccard values become
-    # approximate (see `_verify_jaccard_pairs_signature_collapsed`),
-    # so the registered contract stays on the exact digest default.
-    if collapse == "signature":
-        return _verify_jaccard_pairs_signature_collapsed(
-            spark, sf_dir, cand
-        )
-    return _verify_jaccard_pairs_digest_collapsed(spark, sf_dir, cand)
+    return _verify_jaccard_pairs_digest_collapsed(
+        spark, sf_dir, _d16_candidates(spark, sf_dir)
+    )
 
 
 def _d16_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """d16's candidate-pair set (d03's expansion + the K·n capped
-    branch for saturated buckets).  Split out so the verify-volume
-    instrumentation (tools/d16_verify_volume.py) measures EXACTLY the
-    candidate stream d16 verifies."""
+    branch for saturated buckets)."""
     bands = minhash_band_rows(_docs_spread(spark, sf_dir))
     pair_branch = (
         f"CASE WHEN size(ids) <= {MAX_BAND_BUCKET} THEN {_PAIRS_IN_BUCKET} "

@@ -248,7 +248,9 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
     ``scale_factor`` (json, default [2,2,2]), ``n_levels`` (default 1),
     ``voxel_size`` (json µm, default [1,1,1]), ``compressor`` /
     ``compressor_kwargs`` (must match the store across waves —
-    validated against on-disk metadata before any promotion).
+    validated against on-disk metadata before any promotion).  Commit
+    promotion concurrency follows the filesystem type (see
+    :meth:`commit`, SCALE.md §6i).
     """
 
     def __init__(self, options):
@@ -265,19 +267,6 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
         self.compressor_kwargs = _json.loads(
             options.get("compressor_kwargs", "null")
         )
-        # fault injection for the crash-fence tests: commit() runs in a
-        # detached Python sink worker the test process cannot
-        # monkeypatch, so the crash point is an explicit option — raise
-        # just before promoting level N's chunks (i.e. after level
-        # N-1's shape commit: fence up, level N unpromoted)
-        self.failpoint_before_level = (
-            int(options["failpoint_before_level"])
-            if "failpoint_before_level" in options
-            else None
-        )
-        # driver-side promotion concurrency (0 = auto: min(16, stacks));
-        # 1 forces the sequential loop (the ABAB measurement baseline)
-        self.commit_parallelism = int(options.get("commit_parallelism", "0"))
         from aind_smartspim_data_transformation_spark.imaging.pyramid import (
             validate_pyramid_geometry,
         )
@@ -391,11 +380,6 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
             chunk_key,
         )
 
-        if self.failpoint_before_level == lvl:
-            raise RuntimeError(
-                f"simulated crash before level-{lvl} promotion "
-                f"(failpoint_before_level)"
-            )
         cw = ChunkWriter(fs)
         for cz, cy, cx in info["levels"][lvl]["chunks"]:
             src = _stage_key(stage_base, channel, stack, lvl, cz, cy, cx)
@@ -533,27 +517,25 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
         # Promote stacks CONCURRENTLY where latency dominates: each
         # stack's commit is an independent group (own fence, own
         # metadata), but a wide microbatch (hundreds of stacks ×
-        # thousands of chunks) used to serialize through this driver
-        # loop — on an object store, where a "move" is a copy+delete
-        # round-trip, the epoch's commit grew linearly with stack
-        # count.  Auto policy is MEASURED (tools/stream_commit_probe.py,
-        # SCALE.md §6h): on a LOCAL filesystem moves are ~60 µs renames
-        # and thread contention LOSES (0.26× at 16 threads — keep the
-        # sequential loop); under object-store-like per-op latency the
-        # pool's latency hiding wins by ~#workers.  Crash semantics are
-        # unchanged either way (a failure mid-pool leaves some stacks
-        # committed and some fenced/staged — exactly the states the
-        # sequential loop could leave, all covered by the roll-forward
-        # + epoch-marker replay paths).
+        # thousands of chunks) serialized through this driver loop on an
+        # object store, where a "move" is a copy+delete round-trip, grows
+        # the epoch's commit linearly with stack count.  The policy is
+        # picked from the filesystem type and MEASURED (SCALE.md §6i): on
+        # a LOCAL filesystem moves are µs renames and a 16-thread pool
+        # LOSES (0.30× — keep the sequential loop); under object-store
+        # per-op latency the pool's latency hiding wins (15.2× with
+        # min(16, stacks) threads).  Crash semantics are unchanged either
+        # way (a failure mid-pool leaves some stacks committed and some
+        # fenced/staged — exactly the states the sequential loop could
+        # leave, all covered by the roll-forward + epoch-marker replay
+        # paths).
         try:
             stacks_sorted = sorted(per_stack.items())
-            workers = int(getattr(self, "commit_parallelism", 0))
-            if workers == 0:
-                workers = (
-                    1
-                    if isinstance(fs, pafs.LocalFileSystem)
-                    else min(16, max(1, len(stacks_sorted)))
-                )
+            workers = (
+                1
+                if isinstance(fs, pafs.LocalFileSystem)
+                else min(16, max(1, len(stacks_sorted)))
+            )
             if workers <= 1 or len(stacks_sorted) <= 1:
                 for (channel, stack), (staging, info) in stacks_sorted:
                     _commit_stack(channel, stack, staging, info)

@@ -228,7 +228,6 @@ def run_streaming_store_ingest(
     n_levels: int = 1,
     voxel_size_zyx: list[float] | None = None,
     timeout_sec: int = 120,
-    extra_options: dict | None = None,
 ) -> None:
     """Stream arriving slices STRAIGHT into a multiscale OME-Zarr store
     through the DataSource streaming commit protocol — no landed
@@ -262,17 +261,16 @@ def run_streaming_store_ingest(
     # streaming sink, so a registration failure propagates.
     ensure_registered(spark)
     ensure_registered(slices.sparkSession)
-    writer = (
+    q = (
         slices.writeStream.format("smartspim")
         .option("checkpointLocation", checkpoint_dir)
         .option("chunk", json.dumps(chunk_zyx or [128, 128, 128]))
         .option("scale_factor", json.dumps(scale_factor_zyx or [2, 2, 2]))
         .option("n_levels", str(n_levels))
         .option("voxel_size", json.dumps(voxel_size_zyx or [1.0, 1.0, 1.0]))
+        .trigger(availableNow=True)
+        .start(store_root)
     )
-    for k, v in (extra_options or {}).items():
-        writer = writer.option(k, v)
-    q = writer.trigger(availableNow=True).start(store_root)
     try:
         done = q.awaitTermination(timeout_sec)
         if not done:

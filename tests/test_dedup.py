@@ -197,9 +197,7 @@ def test_digest_collapsed_verify_equals_shared_verify(spark, tmp_path):
     shared = sorted(
         map(
             tuple,
-            dedup._verify_jaccard_pairs(
-                spark, str(tmp_path), cand, broadcast_pairs=False
-            ).collect(),
+            dedup._verify_jaccard_pairs(spark, str(tmp_path), cand).collect(),
         )
     )
     collapsed = sorted(
@@ -252,9 +250,7 @@ def test_digest_collapsed_verify_property(spark, tmp_path_factory):
         shared = sorted(
             map(
                 tuple,
-                dedup._verify_jaccard_pairs(
-                    spark, str(tmp), cand, broadcast_pairs=False
-                ).collect(),
+                dedup._verify_jaccard_pairs(spark, str(tmp), cand).collect(),
             )
         )
         collapsed = sorted(
@@ -269,138 +265,6 @@ def test_digest_collapsed_verify_property(spark, tmp_path_factory):
         assert collapsed == shared
 
     check()
-
-
-def test_signature_collapsed_verify_matches_digest_when_sigs_unique(
-    spark, tmp_path
-):
-    """r14 (VERDICT r13 ask #3): on a corpus where no two DISTINCT
-    texts share a full 16-minhash signature (checked in-test), the
-    flag path `collapse="signature"` must emit EXACTLY the digest
-    path's rows — same-sig pairs are exactly the replica pairs (1.0 on
-    both paths), cross-sig rep verify is the exact jaccard (the near
-    pair at 0.7778 < 0.8 drops on both), ineligible docs have no
-    signature row and no output (same as the digest path's
-    eligibility bit)."""
-    near_a = "the quick brown fox jumps over the lazy dog today"
-    near_b = "the quick brown fox jumps over the lazy dog tonight"
-    far = "completely different words about mountains and oceans here"
-    rows = [
-        (0, near_a), (1, near_a), (2, near_a),
-        (3, near_b),
-        (4, far),
-        (5, "too short"), (6, "too short"),
-    ]
-    spark.createDataFrame(
-        [(i, t, "en", "src0", len(t)) for i, t in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sig_of = {
-        r["doc_id"]: r["sig"]
-        for r in dedup._full_signatures(docs).collect()
-    }
-    text_of = dict(rows)
-    # fixture precondition: signature collisions only between replicas
-    for a in sig_of:
-        for b in sig_of:
-            if sig_of[a] == sig_of[b]:
-                assert text_of[a] == text_of[b]
-    ids = [i for i, _ in rows]
-    cand = spark.createDataFrame(
-        [(a, b) for a in ids for b in ids if a < b], "doc1 long, doc2 long"
-    )
-    digest = sorted(
-        map(
-            tuple,
-            dedup._verify_jaccard_pairs_digest_collapsed(
-                spark, str(tmp_path), cand
-            ).collect(),
-        )
-    )
-    sig = sorted(
-        map(
-            tuple,
-            dedup._verify_jaccard_pairs_signature_collapsed(
-                spark, str(tmp_path), cand
-            ).collect(),
-        )
-    )
-    spark.catalog.clearCache()
-    assert sig == digest and len(sig) > 0
-
-
-def test_signature_collapsed_verify_boilerplate_variants(spark, tmp_path):
-    """r14 (VERDICT r13 ask #3): the corpus the flag exists for — 20
-    one-token-differing variants of a 40-token template, every digest
-    distinct, so the digest collapse is a no-op while the signature
-    collapse merges variants agreeing on all 16 minhashes.  Pins the
-    DOCUMENTED approximation: both paths emit the same PAIR SET (every
-    variant pair's true jaccard 35/41 = 0.8537 ≥ 0.8), the digest path
-    carries the exact value on every pair, and the signature path
-    emits 1.0 for same-sig pairs (evidence-not-proof shortcut) and the
-    signature-representatives' exact 0.8537 for the rest.  The md5
-    hash family is deterministic, so the fixture's signature
-    clustering (19 distinct sigs over 20 docs — the collapse fires) is
-    stable."""
-    rows = []
-    for i in range(20):
-        toks = [f"w{j}" for j in range(40)]
-        toks[20] = f"var{i}"
-        rows.append((i, " ".join(toks)))
-    spark.createDataFrame(
-        [(i, t, "en", "src0", len(t)) for i, t in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sig_of = {
-        r["doc_id"]: r["sig"]
-        for r in dedup._full_signatures(docs).collect()
-    }
-    assert len(set(sig_of.values())) < len(sig_of)  # collapse fires
-    cand = spark.createDataFrame(
-        [(a, b) for a in range(20) for b in range(20) if a < b],
-        "doc1 long, doc2 long",
-    )
-    digest = {
-        (r[0], r[1]): r[2]
-        for r in dedup._verify_jaccard_pairs_digest_collapsed(
-            spark, str(tmp_path), cand
-        ).collect()
-    }
-    sig = {
-        (r[0], r[1]): r[2]
-        for r in dedup._verify_jaccard_pairs_signature_collapsed(
-            spark, str(tmp_path), cand
-        ).collect()
-    }
-    spark.catalog.clearCache()
-    assert set(digest) == set(sig) == {
-        (a, b) for a in range(20) for b in range(20) if a < b
-    }
-    exact = round(35 / 41, 4)
-    assert all(v == exact for v in digest.values())
-    for (a, b), v in sig.items():
-        assert v == (1.0 if sig_of[a] == sig_of[b] else exact)
-    assert any(v == 1.0 for v in sig.values())  # the 1.0 branch ran
-
-
-def test_d16_signature_flag_default_is_digest(spark, sf_dir):
-    """The registered d16 contract is byte-stable: the default collapse
-    mode must stay "digest" (the flag path changes emitted values, so
-    it is opt-in only)."""
-    a = sorted(
-        map(tuple, dedup.d16_lsh_recovered_pairs(spark, sf_dir).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            dedup.d16_lsh_recovered_pairs(
-                spark, sf_dir, collapse="digest"
-            ).collect(),
-        )
-    )
-    assert a == b and len(a) > 0
 
 
 def test_d16_equals_d03_without_saturation(spark, sf_dir):

@@ -697,15 +697,40 @@ def test_fused_even_band_count_folds_pairwise(spark, tmp_path):
         expect = windowed_mean(expect, (2, 2, 2))
 
 
-def test_fused_mid_job_kill_resume_skips_completed_bands(spark, tmp_path):
+def _crash_before_finalize(monkeypatch, run):
+    """Run a fused job whose metadata-last finalize raises on the
+    driver: every band task has written its chunks and marker, and no
+    store metadata exists.  ``run_fused_ingest`` resolves
+    ``zarr_sink._write_all_metadata`` at call time, so the patch is
+    visible to it; the context restores the real finalize afterwards."""
+    from aind_smartspim_data_transformation_spark.imaging import zarr_sink
+
+    def crash(*_a, **_k):
+        raise RuntimeError("simulated crash before the metadata finalize")
+
+    with monkeypatch.context() as m:
+        m.setattr(zarr_sink, "_write_all_metadata", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            run()
+
+
+def test_fused_mid_job_kill_resume_skips_completed_bands(
+    spark, tmp_path, monkeypatch
+):
     """VERDICT r7 ask #3 done-criterion: a fused job killed mid-flight
     leaves per-band completion markers; the rerun SKIPS the completed
     bands (proven by their chunk files' mtimes never changing across
     the resume) and finalizes a store byte-identical to an
-    uninterrupted build, with the metrics contract intact."""
+    uninterrupted build, with the metrics contract intact.
+
+    The kill is injected from outside the code under test: the job
+    crashes at its driver-side finalize, then one band's marker and
+    chunk files are deleted — the state a job killed with that band
+    unfinished leaves behind."""
     from aind_smartspim_data_transformation_spark.imaging.fused import (
         _PROGRESS_DIRNAME,
         _band_plan,
+        _marker_name,
         run_fused_ingest,
     )
     from aind_smartspim_data_transformation_spark.sources.png_codec import (
@@ -754,23 +779,22 @@ def test_fused_mid_job_kill_resume_skips_completed_bands(spark, tmp_path):
     fail_key = (ch, stack, 0, 0)
 
     out = tmp_path / "out"
-    with pytest.raises(Exception, match="failpoint_fail_key"):
-        run_fused_ingest(
-            spark, str(root), str(out), **args, failpoint_fail_key=fail_key
-        )
+    _crash_before_finalize(
+        monkeypatch,
+        lambda: run_fused_ingest(spark, str(root), str(out), **args),
+    )
 
     # metadata-last held: the killed target must not parse as a store
     assert not list(out.rglob(".zattrs")) and not list(out.rglob(".zarray"))
-    # every band but the failpointed one completed (the failpoint waits
-    # for the siblings' markers before raising)
+    # every band completed before the finalize crashed
     pdir = out / _PROGRESS_DIRNAME
     markers = {
         tuple(json.loads(p.read_text())["key"]): json.loads(p.read_text())
         for p in pdir.glob("*.json")
     }
-    assert set(markers) == all_keys - {fail_key}
+    assert set(markers) == all_keys
 
-    # the chunk files each completed band owns, with their mtimes
+    # the chunk files each band owns
     def band_files(slab, fold):
         cys = []
         for b in sorted({fold, nb - 1 - fold}):
@@ -785,13 +809,20 @@ def test_fused_mid_job_kill_resume_skips_completed_bands(spark, tmp_path):
             for cx in range(n_cx)
         ]
 
+    # un-finish one band: no marker, no chunks
+    (pdir / _marker_name(*fail_key)).unlink()
+    for p in band_files(*fail_key[2:]):
+        p.unlink()
+    del markers[fail_key]
+
+    # the completed bands' chunk files, with their mtimes
     before = {}
     for (_, _, slab, fold) in markers:
         for p in band_files(slab, fold):
             assert p.is_file(), f"completed band missing chunk {p}"
             before[p] = p.stat().st_mtime_ns
 
-    # resume: no failpoint — only the one unfinished band runs
+    # resume: only the one unfinished band runs
     _, metrics = run_fused_ingest(spark, str(root), str(out), **args)
     assert not pdir.exists()  # progress retired after the finalize
     assert snap(out) == snap(fresh)
@@ -874,7 +905,9 @@ def test_fused_progress_marker_config_mismatch_refused(spark, tmp_path):
     assert np.array_equal(read_zarr_level(g, 0), vol)
 
 
-def test_fused_resume_after_input_edit_invalidates_markers(spark, tmp_path):
+def test_fused_resume_after_input_edit_invalidates_markers(
+    spark, tmp_path, monkeypatch
+):
     """ADVICE r8: after a quarantine-mode crash, the likely operator
     move is replacing the corrupt slice IN PLACE (same filename, same
     shape) and re-running.  Geometry fingerprints alone would match
@@ -914,12 +947,11 @@ def test_fused_resume_after_input_edit_invalidates_markers(spark, tmp_path):
         on_error="quarantine",
     )
     out = tmp_path / "out"
-    # crash AFTER slab 1 (the corrupt band) completes: fail slab 0
-    fail_key = (ch, stack, 0, 0)
-    with pytest.raises(Exception, match="failpoint_fail_key"):
-        run_fused_ingest(
-            spark, str(root), str(out), **args, failpoint_fail_key=fail_key
-        )
+    # crash AFTER every band (the corrupt one included) completed
+    _crash_before_finalize(
+        monkeypatch,
+        lambda: run_fused_ingest(spark, str(root), str(out), **args),
+    )
     pdir = out / _PROGRESS_DIRNAME
     dead_markers = [
         m

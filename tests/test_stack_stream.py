@@ -216,13 +216,15 @@ def test_writestream_smartspim_waves_equal_one_shot(spark, tmp_path):
 
 def test_writestream_smartspim_crash_fence_roll_forward(spark, tmp_path):
     """Mid-stream kill: the SECOND wave's commit dies after level 0's
-    shape commit (fence present, level 1 unpromoted — the
-    ``failpoint_before_level`` fault injection; the streaming sink's
-    commit runs in a detached Python worker a monkeypatch cannot
-    reach).  Restarting the stream with the same checkpoint must ROLL
-    FORWARD through the shared append transaction and end identical to
-    an uninterrupted run."""
+    shape commit (fence present, level 1 unpromoted).  The streaming
+    sink's commit runs in a Python worker Spark spawns, out of a
+    monkeypatch's reach, so the fault comes from the filesystem: a
+    regular file sits where wave 2's level-1 chunks must go, and their
+    promotion fails.  Restarting the stream with the same checkpoint
+    after removing it must ROLL FORWARD through the shared append
+    transaction and end identical to an uninterrupted run."""
     import json
+    from pathlib import Path
 
     import numpy as np
 
@@ -245,23 +247,25 @@ def test_writestream_smartspim_crash_fence_roll_forward(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     group = f"{store}/Ex_488_Em_525/400000_500000.ome.zarr"
 
-    def ingest(**extra):
+    def ingest():
         ss.run_streaming_store_ingest(
             spark, str(root / "SmartSPIM"), store, ckpt,
             chunk_zyx=[64, 64, 64], n_levels=2,
-            extra_options=extra or None,
         )
 
     for z in range(4):
         (d / f"{z:06d}.png").write_bytes(encode_png_gray(vol[z]))
     ingest()
 
-    # wave 2 arrives; kill the commit right before level 1's promotion
-    # (level 0's .zarray shape is committed, the fence is up)
+    # wave 2 arrives; kill the commit at level 1's promotion (level 0's
+    # .zarray shape is committed, the fence is up): a regular file
+    # obstructs level 1's z-chunk 1, the parent of wave 2's chunks
     for z in range(4, 8):
         (d / f"{z:06d}.png").write_bytes(encode_png_gray(vol[z]))
-    with pytest.raises(Exception, match="simulated crash"):
-        ingest(failpoint_before_level="1")
+    obstruction = Path(group, "1", "0", "0", "1")
+    obstruction.write_bytes(b"")
+    with pytest.raises(Exception, match="NotADirectoryError"):
+        ingest()
 
     # detectable crash state: fence present, level-0 shape grown
     attrs = json.loads((tmp_path / "store" / "Ex_488_Em_525" /
@@ -270,6 +274,7 @@ def test_writestream_smartspim_crash_fence_roll_forward(spark, tmp_path):
 
     # restart with the SAME checkpoint: Spark replays the epoch, the
     # fence rolls forward, the store finishes identical to one-shot
+    obstruction.unlink()
     ingest()
     np.testing.assert_array_equal(read_zarr_level(group, 0), vol)
     np.testing.assert_array_equal(
