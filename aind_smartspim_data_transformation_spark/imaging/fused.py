@@ -390,7 +390,6 @@ def _band_plan(
     geo: list[dict[str, Any]],
     chunk_zyx: list[int],
     parallelism: int,
-    max_task_bytes: int | None = None,
 ) -> dict[tuple[str, str], tuple[int, int]]:
     """Per stack: (n_bands, cy_chunks_per_band) splitting the y chunk
     rows into bands (never more bands than chunk rows; at least 1).
@@ -401,21 +400,18 @@ def _band_plan(
     pairing.
 
     The band height is additionally capped by the per-task memory
-    envelope (``max_task_bytes``, default the module's
-    ``FUSED_MAX_TASK_BYTES``): a folded task buffers TWO bands of
-    ``min(cz, z) × per_band·cy_chunk × x`` pixels plus one decoded
-    slice span, so ``per_band`` shrinks (never below one chunk row)
-    until that fits.  Without this, a deep acquisition (many z-slabs →
-    low band target → tall bands) tips the whole job off the fused
-    path over a ~0.04% envelope overshoot — measured at 4×320 slices
-    of 2000×1600: the job fell back to the chunk-table pipeline
-    at 47 MB/s where capped 1-chunk-row bands stay fused (SCALE.md
-    §6m).  The cap uses the UNCLAMPED band height (per_band·cy_chunk,
+    envelope ``FUSED_MAX_TASK_BYTES`` (read at call time): a folded
+    task buffers TWO bands of ``min(cz, z) × per_band·cy_chunk × x``
+    pixels plus one decoded slice span, so ``per_band`` shrinks (never
+    below one chunk row) until that fits.  Without this, a deep
+    acquisition (many z-slabs → low band target → tall bands) tips the
+    whole job off the fused path over a ~0.04% envelope overshoot —
+    measured at 4×320 slices of 2000×1600: the job fell back to the
+    chunk-table pipeline at 47 MB/s where capped 1-chunk-row bands
+    stay fused (SCALE.md §6m).  The cap uses the UNCLAMPED band height (per_band·cy_chunk,
     not min(·, y)) — conservative by < one chunk row for a band
     spanning the whole plane; :func:`fused_task_bytes` reports the
     exact clamped figure."""
-    if max_task_bytes is None:
-        max_task_bytes = FUSED_MAX_TASK_BYTES
     cz, cy_chunk, _ = chunk_zyx
     slabs = sum(-(-g["z"] // cz) for g in geo)
     want = max(1, (4 * parallelism) // max(slabs, 1))
@@ -426,7 +422,9 @@ def _band_plan(
         per_band = -(-n_cy // n_bands)
         item = np.dtype(g["dtype"]).itemsize
         denom = 2 * min(cz, g["z"]) * cy_chunk * g["x"] * item
-        pb_cap = max(1, (max_task_bytes - g["y"] * g["x"] * item) // denom)
+        pb_cap = max(
+            1, (FUSED_MAX_TASK_BYTES - g["y"] * g["x"] * item) // denom
+        )
         per_band = min(per_band, pb_cap)
         n_bands = -(-n_cy // per_band)  # drop empty trailing bands
         plan[(g["channel"], g["stack"])] = (n_bands, per_band)
@@ -437,7 +435,6 @@ def fused_task_bytes(
     geo: list[dict[str, Any]],
     chunk_zyx: list[int],
     parallelism: int,
-    max_task_bytes: int | None = None,
 ) -> int:
     """Worst-case per-task buffer: a folded task holds TWO band
     buffers (bands f and n_bands−1−f) plus one decoded slice span.
@@ -446,11 +443,9 @@ def fused_task_bytes(
     envelope, this exceeds the envelope only when even a
     single-chunk-row band doesn't fit (a genuinely giant plane) — the
     one case where job.py SHOULD take the chunk-table
-    fallback.  ``max_task_bytes`` (default ``FUSED_MAX_TASK_BYTES``)
-    is threaded to the internal :func:`_band_plan` call so the probe
-    always sizes the SAME plan a caller passing a custom envelope
-    would execute — the probe and the plan can't drift apart."""
-    plan = _band_plan(geo, chunk_zyx, parallelism, max_task_bytes)
+    fallback.  It sizes the plan :func:`_band_plan` returns, so the
+    probe and the plan can't drift apart."""
+    plan = _band_plan(geo, chunk_zyx, parallelism)
     worst = 0
     for g in geo:
         _, per_band = plan[(g["channel"], g["stack"])]

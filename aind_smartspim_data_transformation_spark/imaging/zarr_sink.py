@@ -140,9 +140,9 @@ class ChunkWriter:
     """One task's chunk writes through one filesystem handle: zero-pad
     an edge block to its level's chunk dims, compress, create the
     parent directory once per task, write.  Every writer goes through
-    it (the chunk-table sink, the z-slab append, the fused band tasks,
-    and the streaming writer's staging and promotion), so the write
-    paths cannot drift apart on bytes."""
+    it (the chunk-table sink, the fused band tasks and the streaming
+    writer's staging), so the write paths cannot drift apart on
+    bytes."""
 
     def __init__(self, fs, compress=None):
         self.fs = fs
@@ -236,20 +236,6 @@ def _arrow_foreach(df: DataFrame, partition_fn) -> None:
         yield pd.DataFrame({"n": [n]})
 
     df.mapInPandas(_runner, schema="n long").collect()
-
-
-def _level_geometry(level_df: DataFrame) -> tuple[tuple[int, ...], str]:
-    """(Z, Y, X) extent + dtype from chunk *metadata* (one tiny agg —
-    never touches the data column; Catalyst prunes it from the scan)."""
-    from pyspark.sql import functions as F
-
-    row = level_df.agg(
-        F.sum(F.when((F.col("cy") == 0) & (F.col("cx") == 0), F.col("dz"))).alias("z"),
-        F.sum(F.when((F.col("cz") == 0) & (F.col("cx") == 0), F.col("dy"))).alias("y"),
-        F.sum(F.when((F.col("cz") == 0) & (F.col("cy") == 0), F.col("dx"))).alias("x"),
-        F.first("dtype").alias("dtype"),
-    ).first()
-    return (int(row["z"]), int(row["y"]), int(row["x"])), row["dtype"]
 
 
 def write_ome_zarr_all(
@@ -503,72 +489,6 @@ def read_zarr_level(group: str, level: int) -> np.ndarray:
     return out
 
 
-def append_ome_zarr_z(levels: list[DataFrame], group: str) -> str:
-    """Append a z-slab pyramid to an EXISTING multiscale store — the
-    incremental-acquisition path: nightly slabs land in one store
-    without rereading or rewriting a byte of previously written data.
-
-    ``levels[i]`` is the level-i chunk table of the NEW slab only
-    (cz starting at 0); each level's chunks are written shifted by the
-    store's current z-chunk count and the ``.zarray`` shapes grow by
-    the slab's extents.  The reference has no incremental path at all
-    (every run rebuilds the full stack,
-    `compress/png_to_zarr.py:673-686`).
-
-    Validation per level, refusing loudly instead of corrupting:
-    - y/x extents and dtype must match the store;
-    - the store's current z extent must be a multiple of the stored
-      z-chunk (a previous TRAILING partial chunk blocks further
-      appends — by construction only the last slab may be partial);
-    - compressor metadata is reused from disk, so appended chunks are
-      byte-compatible with the initial write.
-
-    CRASH SAFETY (advisor r6): before any chunk lands, an intent fence
-    ``.zattrs["append_in_progress"] = {"pre_z": [...], "post_z": [...]}``
-    records every level's expected pre/post z extent; it is removed
-    only after ALL levels' chunks and ``.zarray`` shapes are committed.
-    A crash mid-append therefore leaves a DETECTABLE state, and a
-    retried append with the same slab ROLLS FORWARD instead of
-    double-appending: per level, ``shape[2] == post_z`` means committed
-    (skip), ``shape[2] == pre_z`` means redo (chunk writes are
-    idempotent — fixed keys, deterministic compressor — and the
-    ``.zarray`` shape update is the level's commit point).  A fence
-    whose slab geometry does not match the retry refuses loudly.
-    Any OTHER writer must refuse while the fence is present.
-
-    Metadata: only ``shape`` (per level) and ``omero.rdefs.defaultZ``
-    change; NGFF transforms are depth-independent.
-    """
-    geo = [_level_geometry(df) for df in levels]
-    from pyspark.sql import functions as F
-
-    chunk_info = []
-    for level_df in levels:
-        head = level_df.filter(
-            (F.col("cz") == 0) & (F.col("cy") == 0) & (F.col("cx") == 0)
-        ).select("dz").first()
-        n_cz = int(level_df.agg(F.max("cz")).first()[0]) + 1
-        chunk_info.append((int(head["dz"]), n_cz))
-
-    def _write_level(lvl: int, off: int, meta: dict) -> None:
-        compress = _compress_from_meta(meta["compressor"])
-        chunk_shape = tuple(meta["chunks"][2:])
-
-        def _write_partition(rows):
-            fs, gbase = _fs_for(group)
-            cw = ChunkWriter(fs, compress)
-            for r in rows:
-                cw.write(
-                    chunk_key(gbase, lvl, r["cz"] + off, r["cy"], r["cx"]),
-                    _row_block(r),
-                    chunk_shape,
-                )
-
-        _arrow_foreach(levels[lvl], _write_partition)
-
-    return append_slab_transaction(group, geo, chunk_info, _write_level)
-
-
 def append_slab_transaction(
     group: str,
     geo: list[tuple[tuple[int, int, int], str]],
@@ -576,11 +496,13 @@ def append_slab_transaction(
     write_level,
     extra_attrs: dict[str, Any] | None = None,
 ) -> str:
-    """The append's VALIDATION + FENCE + COMMIT core, shared by the
-    batch path (:func:`append_ome_zarr_z` — chunk writes are a Spark
-    job) and the streaming DataSource writer (chunk writes are staged-
-    file promotions).  One implementation so the two paths can never
-    disagree on crash semantics.
+    """Append a z-slab pyramid to an EXISTING multiscale store: the
+    commit of the streaming DataSource writer
+    (``sources/smartspim_datasource.SmartspimStreamWriter``), whose
+    chunk writes are staged-file promotions.  Each wave lands in the
+    store without rereading or rewriting a byte of earlier data; the
+    reference has no incremental path (every run rebuilds the full
+    stack, `compress/png_to_zarr.py:673-686`).
 
     ``geo[lvl]`` = ((z, y, x), dtype) of the slab's level-lvl extent;
     ``chunk_info[lvl]`` = (first-chunk dz, number of z-chunks);
@@ -588,6 +510,23 @@ def append_slab_transaction(
     shifted by ``off`` store z-chunks — it MUST be idempotent
     (fixed keys, deterministic bytes), because the roll-forward path
     re-invokes it for uncommitted levels.
+
+    Validation, all before any chunk lands: level count, dtype and y/x
+    plane match the store; each level's slab extent is an exact
+    reduction of the one above (no truncated boundary window); the
+    store does not end on a partial z-chunk; the slab's z-chunk grid
+    is the store's.
+
+    Crash safety: before any chunk lands, an intent fence
+    ``.zattrs["append_in_progress"] = {"pre_z": [...], "post_z": [...]}``
+    records every level's pre/post z extent; it is dropped only after
+    every level's chunks and ``.zarray`` shape are committed.  A retry
+    with the same slab ROLLS FORWARD (per level, ``shape[2] == post_z``
+    is committed and skipped, ``shape[2] == pre_z`` is redone — the
+    ``.zarray`` shape update is the level's commit point); a retry
+    whose slab extents differ from the fence's is refused.  Only
+    ``shape`` (per level) and ``omero.rdefs.defaultZ`` change; NGFF
+    transforms are depth-independent.
 
     ``extra_attrs`` entries are merged into ``.zattrs`` IN THE SAME
     WRITE that drops the fence — the append's overall commit point —
@@ -734,12 +673,3 @@ def append_slab_transaction(
         attrs.update(extra_attrs)
     _write_json(f"{gpath}/.zattrs", attrs)
     return group
-
-
-def _compress_from_meta(meta: dict[str, Any] | None):
-    """Compressor fn from on-disk .zarray metadata, delegating to
-    ``_make_codec`` (ONE codec table — append must stay byte-compatible
-    with what the store was created with, so this must never drift from
-    the create path)."""
-    name = "none" if meta is None else meta["id"]
-    return _make_codec(name, meta)[1]

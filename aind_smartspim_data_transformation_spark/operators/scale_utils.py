@@ -134,7 +134,7 @@ def compact_parquet(
     files; returns the output file count.
 
     The operational complement of append-style ingest (streaming
-    foreachBatch, micro-batch landing — e.g. ``streaming/stack_stream``):
+    foreachBatch, micro-batch landing — e.g. ``streaming/events_stream``):
     every micro-batch appends a few small files, and after a day a 100 TB
     table is a million 10 MB files — scan planning, file listing, and
     task scheduling all degrade.  Compaction = one coalescing pass:

@@ -1036,7 +1036,11 @@ def e14_sessions_rcte(spark: SparkSession, sf_dir: str) -> DataFrame:
 # frame's plan still referenced (`Block rdd_N does not exist`).  Keyed
 # by the result frame, a handle is released only once its frame is
 # garbage — pinned by tests/test_events.py::
-# test_e14_two_result_frames_alive_concurrently.
+# test_e14_two_result_frames_alive_concurrently.  Retention follows:
+# N live e14 result frames keep N generations of checkpoint blocks,
+# and a dropped frame's blocks are freed at the NEXT e14 build (the
+# sweep in _e14_release_dead_handles), not when the frame is
+# garbage-collected (SCALE.md §6q).
 _E14_LIVE_HANDLES: list = []  # [(weakref.ref(result_frame), rdd_handle)]
 
 

@@ -271,7 +271,7 @@ I05_PARALLELISM = 32  # fixed literal — both engines must agree
 I05_STACKS = 6
 # r11: _band_plan gained a per-task memory-envelope cap on the band
 # height (imaging/fused.py — a folded task's two band buffers plus one
-# decoded slice span must fit max_task_bytes).  The replay carries the
+# decoded slice span must fit FUSED_MAX_TASK_BYTES).  The replay carries the
 # same closed form over a synthetic x/itemsize, with the cap literal
 # sized so it BINDS for the two deepest synthetic stacks (per_band
 # 2→1 and 3→1) and leaves the rest on the want-derived value — both

@@ -1,42 +1,27 @@
-"""Spark 4 Python DataSource for live SmartSPIM acquisitions:
-streaming read and streaming write only.
+"""Spark 4 Python DataSource for live SmartSPIM acquisitions: a
+streaming writer only.
 
-After ``ensure_registered(spark)``:
+After ``ensure_registered(spark)``,
+``slices.writeStream.format("smartspim").start(root)`` appends each
+microbatch of decoded slices to the OME-Zarr stores through the
+streaming commit protocol (:class:`SmartspimStreamWriter`).  Its input
+is ``streaming/stack_stream.run_streaming_store_ingest``'s file-source
+stream, decoded on the executors with the same magic-byte dispatch as
+the batch pipeline (``stack_reader.decode_image_gray``).
 
-- ``spark.readStream.format("smartspim").load(root)`` tails a stack
-  tree as slices land, one row per decoded slice
-  (:class:`SmartspimStreamReader`);
-- ``slices.writeStream.format("smartspim").start(root)`` appends each
-  microbatch to the OME-Zarr stores through the streaming commit
-  protocol (:class:`SmartspimStreamWriter`).
-
-There is no batch read or batch write: a finished acquisition goes
+There is no read and no batch write: a finished acquisition goes
 through ``imaging/job.py``, which takes the fused band tasks when they
 fit the memory envelope and the ``binaryFile`` + pandas-UDF chunk-table
-pipeline otherwise.  The stream reader decodes with the same
-magic-byte dispatch (``stack_reader.decode_image_gray``), so its pixels
-equal that pipeline's.
+pipeline otherwise.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Sequence
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamWriter,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
-
-SLICE_SCHEMA = (
-    "channel string, stack string, slice_idx int, "
-    "height int, width int, dtype string, data binary"
-)
-
-_EXTS = (".png", ".tif", ".tiff")
-
 
 def ensure_registered(sess) -> None:
     """Register the ``smartspim`` format into ``sess``'s SESSION-LOCAL
@@ -72,118 +57,14 @@ def ensure_registered(sess) -> None:
 
 
 class SmartspimDataSource(DataSource):
-    """``format("smartspim")``: streaming read and streaming write."""
+    """``format("smartspim")``: the streaming writer."""
 
     @classmethod
     def name(cls) -> str:
         return "smartspim"
 
-    def schema(self) -> str:
-        return SLICE_SCHEMA
-
-    def simpleStreamReader(self, schema) -> "SmartspimStreamReader":
-        return SmartspimStreamReader(self.options)
-
     def streamWriter(self, schema, overwrite: bool) -> "SmartspimStreamWriter":
         return SmartspimStreamWriter(self.options)
-
-
-class SmartspimStreamReader(SimpleDataSourceStreamReader):
-    """Streaming half of the smartspim source:
-    ``spark.readStream.format("smartspim").load(root)``.
-
-    An acquisition writes slices over hours; each microbatch picks up
-    the files that appeared since the last offset.  The offset is
-    COMPACT and monotone — ``{"done": {stack_dir_rel: n_processed}}``
-    — relying on the same contract as everything else in this repo
-    (`io/readers.py:145` sorted-glob): slice filenames within a stack
-    are written in ascending name order, so "new" files always sort
-    after the processed prefix and ``slice_idx`` (= z) is the running
-    per-stack count.  ``readBetweenOffsets`` replays any [start, end)
-    window from the listing, which makes recovery exact.
-
-    This is the *simple* stream-reader API: listing AND decode run on
-    the driver, which is right for live-acquisition rates (a slice
-    every few seconds).  Draining a large backlog at cluster speed is
-    the partitioned path: `streaming/stack_stream.py` (file-source
-    stream, executor decode) or the batch imaging job after the fact.
-    """
-
-    def __init__(self, options):
-        root = options.get("path")
-        if not root:
-            raise ValueError("smartspim source requires a path: .load(root)")
-        self.root = root
-
-    def initialOffset(self) -> dict:
-        return {"done": {}}
-
-    def _listing(self) -> dict[str, list[str]]:
-        out: dict[str, list[str]] = {}
-        for dirpath, _dirnames, filenames in sorted(os.walk(self.root)):
-            slices = sorted(f for f in filenames if f.lower().endswith(_EXTS))
-            if slices:
-                out[os.path.relpath(dirpath, self.root)] = slices
-        return out
-
-    def _rows(self, rel: str, names: Sequence[str], idx0: int):
-        from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-            decode_image_gray,
-        )
-
-        pieces = rel.split(os.sep)
-        channel = pieces[0] if len(pieces) > 1 else ""
-        stack = pieces[-1]
-        for i, name in enumerate(names):
-            with open(os.path.join(self.root, rel, name), "rb") as f:
-                arr = decode_image_gray(f.read())
-            yield (
-                channel, stack, idx0 + i,
-                arr.shape[0], arr.shape[1], str(arr.dtype), arr.tobytes(),
-            )
-
-    def read(self, start: dict):
-        done = dict(start.get("done", {}))
-        listing = self._listing()
-        rows = []
-        for rel, names in listing.items():
-            n0 = int(done.get(rel, 0))
-            if len(names) > n0:
-                rows.extend(self._rows(rel, names[n0:], n0))
-                done[rel] = len(names)
-        return iter(rows), {"done": done}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        s = start.get("done", {})
-        e = end.get("done", {})
-        listing = self._listing()
-        for rel, n_end in e.items():
-            n0 = int(s.get(rel, 0))
-            if int(n_end) <= n0:
-                continue
-            names = listing.get(rel)
-            if names is None:
-                # A stack named in a committed offset vanished from the
-                # tree (deleted/renamed between runs).  A bare KeyError
-                # here turns recovery into a crash loop; fail with the
-                # actionable cause instead (advisor r5).
-                raise RuntimeError(
-                    f"smartspim stream replay: stack '{rel}' is recorded "
-                    f"in a committed offset (slices [{n0}, {n_end})) but "
-                    f"no longer exists under {self.root!r}; restore the "
-                    "stack or start from a fresh checkpoint"
-                )
-            if len(names) < int(n_end):
-                raise RuntimeError(
-                    f"smartspim stream replay: stack '{rel}' has "
-                    f"{len(names)} slices on disk but the committed "
-                    f"offset expects {n_end}; slice files were removed "
-                    "— restore them or start from a fresh checkpoint"
-                )
-            yield from self._rows(rel, names[n0:int(n_end)], n0)
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets are self-contained; nothing external to release
 
 
 def _stage_key(
@@ -207,9 +88,7 @@ class SlabStage(WriterCommitMessage):
 class SmartspimStreamWriter(DataSourceStreamWriter):
     """``decoded_slices.writeStream.format("smartspim").start()`` — the
     incremental OME-Zarr store expressed through the STREAMING commit
-    protocol, replacing the foreachBatch + driver-glue flow
-    (``streaming/stack_stream.run_incremental_ingest`` + manual
-    ``append_ome_zarr_z`` per wave).
+    protocol; the one incremental imaging path.
 
     Input rows: the decoded slice table
     (``stack_stream.STREAM_SLICE_SCHEMA`` — channel, stack, slice_key,
@@ -225,24 +104,26 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
       pyramid level locally (whole-slab windowed mean — identical to
       the batch ``build_pyramid`` semantics), and stages compressed
       chunks under ``<root>/.staging/<uuid>/`` — slab-LOCAL cz, final
-      keys unknown until commit.  Pixel bytes never cross to the JVM.
+      keys unknown until commit, each padded to the existing store's
+      chunk shape so promotion is a plain move.  Pixel bytes never
+      cross to the JVM.
     - :meth:`commit` (driver): per stack, either CREATES the store
       (chunks promoted first, metadata written last — a crash leaves no
       store) or APPENDS through
-      ``imaging.zarr_sink.append_slab_transaction`` — the SAME
-      validation + fence + roll-forward core the batch append uses, so
-      the two paths cannot disagree on crash semantics; promotion is a
-      per-chunk filesystem move.  A batch marker
+      ``imaging.zarr_sink.append_slab_transaction`` (validation, intent
+      fence, roll-forward), whose per-level write is a per-chunk
+      filesystem move of the staged chunks.  A batch marker
       (``.zattrs["smartspim_stream_last_batch"]``) makes commit
       idempotent per (stack, batchId): Spark may replay a committed
       epoch after a restart, and the marker turns the replay into a
       no-op instead of a double-append.
 
-    Acquisition contract (same as ``landed_slab_chunks``): slices
-    arrive in ascending slice_key order per stack across waves, and
-    every wave except a stack's last spans the SAME z extent (the
-    store's z-chunk is clamped to the first wave's slab depth, and the
-    append transaction refuses mismatched grids).
+    Acquisition contract (the reference's sorted-glob order,
+    `io/readers.py:145`): slices arrive in ascending slice_key order
+    per stack across waves, and every wave except a stack's last spans
+    the SAME z extent (the store's z-chunk is clamped to the first
+    wave's slab depth, and the append transaction refuses mismatched
+    grids); the last wave may be shallower.
 
     Options: ``chunk`` (json [z,y,x], default [128,128,128]),
     ``scale_factor`` (json, default [2,2,2]), ``n_levels`` (default 1),
@@ -275,6 +156,7 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
 
     # -- executor side ----------------------------------------------------
     def write(self, iterator) -> SlabStage:
+        import json as _json
         import uuid
 
         import numpy as np
@@ -286,6 +168,7 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
             ChunkWriter,
             _fs_for,
             _make_codec,
+            stack_group,
         )
 
         _, compress = _make_codec(self.compressor, self.compressor_kwargs)
@@ -325,9 +208,30 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
                 min(self.chunk[1], vol.shape[1]),
                 min(self.chunk[2], vol.shape[2]),
             )
+            # An existing store fixes every level's chunk shape.  A short
+            # last wave clamps its dims below it, so its chunks are padded
+            # to the store's shape; a deeper wave keeps its own dims and
+            # the commit refuses its z grid.
+            _, group_base = _fs_for(stack_group(self.root, channel, stack))
+            store_dims = []
+            try:
+                for lvl in range(self.n_levels):
+                    with fs.open_input_stream(
+                        f"{group_base}/{lvl}/.zarray"
+                    ) as f:
+                        store_dims.append(
+                            _json.loads(f.read().decode())["chunks"][2:]
+                        )
+            except FileNotFoundError:
+                store_dims = None
             levels = []
             arr = vol
             for lvl in range(self.n_levels):
+                pad = (
+                    dims
+                    if store_dims is None
+                    else tuple(map(max, dims, store_dims[lvl]))
+                )
                 chunks = []
                 for cz in range(-(-arr.shape[0] // dims[0])):
                     for cy in range(-(-arr.shape[1] // dims[1])):
@@ -341,7 +245,7 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
                             key = _stage_key(
                                 base, channel, stack, lvl, cz, cy, cx
                             )
-                            cw.write(key, block, dims)
+                            cw.write(key, block, pad)
                             chunks.append((cz, cy, cx))
                 levels.append(
                     {

@@ -193,7 +193,7 @@ def tile_plane_block(
     Yields (cy, cx, tile); edge tiles truncate to the remaining extent.
     With chunk_y/chunk_x None the block passes through as one tile.
     Pure function (property-tested in tests/test_imaging.py) — the
-    chunk-assembly UDF is a thin wrapper around it.
+    decode UDF (``decode_slices_to_tiles``) cuts every block through it.
     """
     h, wd = block.shape[1], block.shape[2]
     ty = chunk_y or h
@@ -209,62 +209,6 @@ def tile_plane_block(
             )
 
 
-def slices_to_chunks(
-    slices: DataFrame,
-    chunk_z: int,
-    chunk_y: int | None = None,
-    chunk_x: int | None = None,
-) -> DataFrame:
-    """Assemble z-runs of slices into 3-D chunks (one shuffle).
-
-    Output chunk coords are (t=0, c=0, cz=z//chunk_z, cy, cx) with dims
-    (dz<=chunk_z, dy<=chunk_y, dx<=chunk_x).  With chunk_y/chunk_x None
-    each chunk spans the full slice plane (the reference's
-    one-chunk-per-slice dask layout generalized to a z-blocked layout);
-    passing them tiles the plane into the reference's 128³-style bricks.
-
-    Order of operations matters for scale: each slice is cut into its
-    (cy, cx) tiles BEFORE the shuffle (a narrow mapInPandas in the
-    decode's own partitions), and the shuffle key is the full chunk
-    coordinate (channel, stack, cz, cy, cx).  Grouping whole slices by
-    (channel, stack, cz) and tiling after — the obvious alternative —
-    concentrates chunk_z × plane bytes (hundreds of MB at microscopy
-    plane sizes) on ONE task per z-slab and caps assembly parallelism
-    at #slabs; keying by tile keeps every group at chunk_z × tile
-    bytes (~512 KB for 128³ bricks), scales the parallelism with
-    #tiles, and moves exactly the same bytes through the exchange.
-    """
-    keyed = slices.withColumn("cz", (F.col("z") / chunk_z).cast("int"))
-
-    def _split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.data, dtype=np.dtype(r.dtype)).reshape(
-                    1, r.height, r.width
-                )
-                for cy, cx, tile in tile_plane_block(arr, chunk_y, chunk_x):
-                    rows.append(
-                        (
-                            r.channel,
-                            r.stack,
-                            r.cz,
-                            r.z,
-                            cy,
-                            cx,
-                            tile.shape[1],
-                            tile.shape[2],
-                            r.dtype,
-                            tile.tobytes(),
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(rows, columns=TILE_COLS)
-
-    tiles = keyed.mapInPandas(_split, schema=TILE_SCHEMA)
-    return assemble_tiles(tiles)
-
-
 TILE_SCHEMA = (
     "channel string, stack string, cz int, z int, cy int, cx int, "
     "dy int, dx int, dtype string, data binary"
@@ -276,8 +220,15 @@ TILE_COLS = [
 
 def assemble_tiles(tiles: DataFrame, chunk_z: int | None = None) -> DataFrame:
     """Tile rows (TILE_SCHEMA) → chunk rows (CHUNK_SCHEMA): the one
-    ingest shuffle, keyed by the full chunk coordinate (see
-    slices_to_chunks for why tile-first keying is the scale shape).
+    ingest shuffle, keyed by the full chunk coordinate (channel, stack,
+    cz, cy, cx).  Slices are cut into their (cy, cx) tiles BEFORE the
+    shuffle, in the decode's own partitions.  Grouping whole slices by
+    (channel, stack, cz) and tiling after would concentrate chunk_z ×
+    plane bytes (hundreds of MB at microscopy plane sizes) on ONE task
+    per z-slab and cap assembly parallelism at #slabs; keying by tile
+    keeps every group at chunk_z × tile bytes (~512 KB for 128³
+    bricks), scales the parallelism with #tiles, and moves exactly the
+    same bytes through the exchange.
 
     With ``chunk_z`` given, planes land at their TRUE within-chunk
     index (z − cz·chunk_z) and interior holes are zero-filled,

@@ -1,39 +1,38 @@
 """Incremental imaging ingest — Structured Streaming over arriving slices.
 
 The reference processes a finished acquisition in one batch job, re-listing
-the whole tree every run (`smartspim_job.py:43-63`, `run_job` 217-234).
+the whole tree every run (`smartspim_job.py:43-63`, `run_job` 217-234), and
+rebuilds the whole stack each time (`compress/png_to_zarr.py:673-686`).
 Acquisitions are written slice-by-slice over hours, so the streaming twin
 treats the stack tree as an unbounded source instead: Spark's file stream
 source checkpoints the set of processed files, so each arriving slice is
-listed and decoded exactly once across any number of micro-batches, and
-the accumulated slice table converges to exactly what the batch path
-(`sources/stack_reader.py`) produces on the finished tree.
+listed and decoded exactly once across any number of micro-batches.
 
-Two deliberate semantic choices:
+There is one incremental path, :func:`run_streaming_store_ingest`:
 
-- **slice_key, not z, is the streamed identity.** The batch path assigns
-  dense z by filename rank over *all* files of a stack (`_z_indexed`,
-  `io/readers.py:145` sorted-glob semantics) — a window an incremental
-  batch cannot evaluate (it only sees new files).  The
-  stream therefore carries the numeric filename stem (`slice_key`,
-  batch-independent and content-stable); dense z is assigned at
-  chunk-assembly time by rank over the *accumulated* table, where it is
-  a plain batch window again.  Once all slices have arrived the two
-  paths are row-identical (asserted in tests/test_stack_stream.py).
-- **foreachBatch + parquet append.** Chunk assembly needs a groupBy
-  (`applyInPandas`) across micro-batches, which is not a streaming
-  operator — so the stream's job is decode-and-land only, and assembly
-  stays a batch DataFrame op over the landed table.  The file-source
-  checkpoint makes input-side processing exactly-once; the append sink
-  is at-least-once on foreachBatch retry (dedup key: (stack, slice_key)
-  at assembly time would absorb replays; at scale, land to an
-  idempotent table format keyed on batch_id instead).
+    stream_stack_files → decode_stream_slices → repartition(channel, stack)
+                       → writeStream.format("smartspim")
+
+The ``smartspim`` stream writer
+(``sources/smartspim_datasource.SmartspimStreamWriter``) turns each
+microbatch into one fenced z-slab append per stack, so the OME-Zarr
+stores grow wave by wave and end identical to a one-shot build of the
+finished acquisition (asserted in tests/test_stack_stream.py).
+
+**slice_key, not z, is the streamed identity.** The batch path assigns
+dense z by filename rank over *all* files of a stack (`_z_indexed`,
+`io/readers.py:145` sorted-glob semantics) — a window an incremental
+batch cannot evaluate (it only sees new files).  The stream therefore
+carries the numeric filename stem (`slice_key`, batch-independent and
+content-stable); the writer orders a wave's slices by it and places the
+slab at the store's current z extent, which is the same rank under the
+acquisition contract (slices arrive in ascending stem order per stack).
 
 Scale posture: decode is the same Arrow-batched narrow map as batch
-ingest — no shuffle anywhere in the stream; the only state is the
-file-source's processed-file log.  1000 executors drain a burst of
-arriving slices at list-throughput, and `maxFilesPerTrigger` is the
-backpressure knob.
+ingest; the one shuffle is the repartition that puts each stack's wave
+in one write task, and the only stream state is the file-source's
+processed-file log.  1000 executors drain a burst of arriving slices at
+list-throughput, and `maxFilesPerTrigger` is the backpressure knob.
 """
 
 from __future__ import annotations
@@ -42,14 +41,11 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aind_smartspim_data_transformation_spark.sources.stack_reader import (
     decode_image_gray,
-)
-from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-    slices_to_chunks,
 )
 
 # binaryFile's fixed schema — streaming sources cannot infer it.
@@ -129,95 +125,6 @@ def decode_stream_slices(files: DataFrame) -> DataFrame:
     return files.mapInPandas(_decode, schema=STREAM_SLICE_SCHEMA)
 
 
-def run_incremental_ingest(
-    spark: SparkSession,
-    root: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
-) -> None:
-    """Drain everything new under ``root`` into the landed slice table.
-
-    ``availableNow`` processes the backlog and stops — re-running with
-    the same checkpoint picks up only files that arrived since (the
-    incremental re-run the reference lacks: its job re-reads the world).
-    """
-    files = stream_stack_files(spark, root)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        decode_stream_slices(batch_df).write.mode("append").parquet(out_dir)
-
-    q = (
-        files.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                f"incremental ingest did not drain within {timeout_sec}s "
-                f"— the checkpoint resumes where it stopped"
-            )
-    finally:
-        q.stop()
-
-
-def accumulated_slices_to_chunks(
-    spark: SparkSession, slice_dir: str, chunk_z: int = 64
-) -> DataFrame:
-    """Assemble the landed slice table into the standard chunk table.
-
-    Dense z = rank of slice_key within (channel, stack) — the batch
-    path's sorted-glob z, evaluated where it is well-defined (over the
-    full accumulated table).  Landed duplicates (foreachBatch replays)
-    would be absorbed here by a dropDuplicates on (stack, slice_key)
-    before ranking; the file-source checkpoint makes them impossible in
-    this local flow.
-    """
-    return _densify_and_chunk(spark.read.parquet(slice_dir), chunk_z)
-
-
-def _densify_and_chunk(sl: DataFrame, chunk_z: int) -> DataFrame:
-    """The ONE home of the dense-z contract: dedup on (channel, stack,
-    slice_key), z = rank of slice_key within the stack, then the
-    standard chunk assembly.  Shared by the full-table and slab paths
-    so their z assignment can never desynchronize."""
-    w = W.partitionBy("channel", "stack").orderBy("slice_key")
-    dense = (
-        sl.dropDuplicates(["channel", "stack", "slice_key"])
-        .withColumn("z", (F.row_number().over(w) - 1).cast("int"))
-        .drop("slice_key")
-    )
-    return slices_to_chunks(dense, chunk_z)
-
-
-def landed_slab_chunks(
-    spark: SparkSession,
-    slice_dir: str,
-    after_key: int,
-    chunk_z: int = 64,
-) -> DataFrame:
-    """Chunk table (slab-local z starting at 0) for slices landed with
-    ``slice_key > after_key`` — the input
-    ``imaging.zarr_sink.append_ome_zarr_z`` expects for incremental
-    store growth.
-
-    Correct under the acquisition contract the reference's writer also
-    assumes (`io/readers.py:145` sorted-glob): slices are written in
-    ascending z per stack, so everything after the last appended key IS
-    the next contiguous slab.  The caller tracks ``after_key`` (the max
-    key of the previous append — durable alongside the stream
-    checkpoint); append validation in the sink refuses geometry that
-    would truncate a boundary window, so an out-of-contract arrival
-    fails loudly rather than corrupting the store.
-    """
-    return _densify_and_chunk(
-        spark.read.parquet(slice_dir).filter(F.col("slice_key") > after_key),
-        chunk_z,
-    )
-
-
 def run_streaming_store_ingest(
     spark: SparkSession,
     root: str,
@@ -229,9 +136,8 @@ def run_streaming_store_ingest(
     voxel_size_zyx: list[float] | None = None,
     timeout_sec: int = 120,
 ) -> None:
-    """Stream arriving slices STRAIGHT into a multiscale OME-Zarr store
-    through the DataSource streaming commit protocol — no landed
-    parquet, no driver glue:
+    """Stream arriving slices straight into multiscale OME-Zarr stores
+    through the DataSource streaming commit protocol:
 
         decoded slices → repartition(channel, stack)
                        → writeStream.format("smartspim")

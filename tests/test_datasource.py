@@ -1,127 +1,11 @@
-"""Spark 4 Python DataSource: the smartspim stream reader, plus the
-chunk-table sink's geometry sweep."""
+"""The chunk-table sink's geometry sweep: per-level chunk tables written
+by ``write_ome_zarr_all`` read back as the numpy windowed-mean
+pyramid."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-
-
-def test_datasource_streams_two_waves(spark, tmp_path):
-    """spark.readStream.format("smartspim"): slices arriving across two
-    availableNow runs are each decoded exactly once (compact per-stack
-    offsets), and every landed row carries the generated plane of its
-    slice index."""
-    import numpy as np
-
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimDataSource,
-    )
-    root = tmp_path / "acq" / "SmartSPIM"
-    rng = np.random.default_rng(9)
-    planes = rng.integers(0, 65535, size=(6, 12, 14), dtype=np.uint16)
-    d = root / "Ex_488_Em_525" / "400000" / "400000_500000"
-    d.mkdir(parents=True)
-
-    from aind_smartspim_data_transformation_spark.sources.png_codec import (
-        encode_png_gray,
-    )
-
-    for z in range(3):
-        (d / f"{z:06d}.png").write_bytes(encode_png_gray(planes[z]))
-
-    spark.dataSource.register(SmartspimDataSource)
-    out = str(tmp_path / "landed")
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain():
-        q = (
-            spark.readStream.format("smartspim")
-            .load(str(root))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain()
-    assert spark.read.parquet(out).count() == 3
-    for z in range(3, 6):
-        (d / f"{z:06d}.png").write_bytes(encode_png_gray(planes[z]))
-    drain()
-
-    got = spark.read.parquet(out).collect()
-    assert len(got) == 6  # wave-1 slices were not re-decoded
-    # z order survived the incremental arrival
-    idx = [r["slice_idx"] for r in got]
-    assert sorted(idx) == list(range(6))
-    for r in got:
-        assert (r["channel"], r["stack"]) == ("Ex_488_Em_525", "400000_500000")
-        pixels = np.frombuffer(r["data"], dtype=np.dtype(r["dtype"])).reshape(
-            r["height"], r["width"]
-        )
-        np.testing.assert_array_equal(pixels, planes[r["slice_idx"]])
-
-
-def test_stream_reader_crash_replay_fresh_instance(tmp_path):
-    """Driver-restart replay (judge r5 ask): after a crash, Spark hands
-    a FRESH reader instance the committed [start, end) offset window and
-    calls readBetweenOffsets — the replay must return exactly the rows
-    the dead instance produced (no slice duplicated, none lost), and a
-    stack missing from the tree must fail with an actionable error, not
-    a KeyError crash loop."""
-    import numpy as np
-
-    from aind_smartspim_data_transformation_spark.sources.png_codec import (
-        encode_png_gray,
-    )
-    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
-        SmartspimStreamReader,
-    )
-
-    root = tmp_path / "acq"
-    rng = np.random.default_rng(21)
-    planes = rng.integers(0, 65535, size=(6, 8, 10), dtype=np.uint16)
-    d = root / "Ex_488_Em_525" / "400000" / "400000_500000"
-    d.mkdir(parents=True)
-    for z in range(3):
-        (d / f"{z:06d}.png").write_bytes(encode_png_gray(planes[z]))
-
-    r1 = SmartspimStreamReader({"path": str(root)})
-    rows1, off1 = r1.read(r1.initialOffset())
-    rows1 = list(rows1)
-    assert [r[2] for r in rows1] == [0, 1, 2]
-
-    # wave 2 lands, the original instance reads it, then the driver dies
-    for z in range(3, 6):
-        (d / f"{z:06d}.png").write_bytes(encode_png_gray(planes[z]))
-    rows2, off2 = r1.read(off1)
-    rows2 = list(rows2)
-
-    # restart: a BRAND-NEW instance replays the committed window
-    r2 = SmartspimStreamReader({"path": str(root)})
-    replay = list(r2.readBetweenOffsets(off1, off2))
-    assert replay == rows2  # byte-identical, no dup, no loss
-    # and the full-history window replays both waves exactly once
-    r3 = SmartspimStreamReader({"path": str(root)})
-    full = list(r3.readBetweenOffsets(r3.initialOffset(), off2))
-    assert full == rows1 + rows2
-
-    # slice files removed under a committed offset: actionable refusal
-    (d / "000005.png").unlink()
-    r4 = SmartspimStreamReader({"path": str(root)})
-    with pytest.raises(RuntimeError, match="slices on disk"):
-        list(r4.readBetweenOffsets(off1, off2))
-
-    # whole stack gone: actionable refusal naming the stack
-    import shutil
-
-    shutil.rmtree(d)
-    r5 = SmartspimStreamReader({"path": str(root)})
-    with pytest.raises(RuntimeError, match="no longer exists"):
-        list(r5.readBetweenOffsets(off1, off2))
 
 
 # ---------------------------------------------------------------------------

@@ -218,19 +218,13 @@ def test_job_ingest_paths_write_identical_stores(spark, tmp_path):
     assert set(fused_resp["metrics"]) == {"n_chunks", "chunk_bytes"}
 
 
-def test_append_z_slab_equals_one_shot(spark, tmp_path):
-    """Incremental acquisition: slab A written, slab B appended later
-    (each slab's pyramid computed independently) reassembles to exactly
-    the one-shot store of the full stack, at every level; a third
-    append with a mismatched plane is refused."""
-    import numpy as np
-
+def _one_stack_store(spark, tmp_path, name, planes, n_levels):
+    """A one-stack OME-Zarr store of ``planes`` written by the batch
+    sink at chunk [64, 64, 64] (clamped to the stack's extents)."""
     from aind_smartspim_data_transformation_spark.imaging.pyramid import (
         build_pyramid,
     )
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        append_ome_zarr_z,
-        read_zarr_level,
         write_ome_zarr_all,
     )
     from aind_smartspim_data_transformation_spark.sources.png_codec import (
@@ -240,34 +234,106 @@ def test_append_z_slab_equals_one_shot(spark, tmp_path):
         read_stack_tree,
     )
 
-    rng = np.random.default_rng(11)
-    full = rng.integers(0, 65535, size=(8, 32, 40), dtype=np.uint16)
-
-    def write_tree(root, planes, z0):
-        d = root / "SmartSPIM" / "Ex_488_Em_525" / "400000" / "400000_500000"
-        d.mkdir(parents=True)
-        for i, img in enumerate(planes):
-            (d / f"{z0 + i:06d}.png").write_bytes(encode_png_gray(img))
-
-    roots = {k: tmp_path / k for k in ("a", "b", "full")}
-    write_tree(roots["a"], full[:4], 0)
-    write_tree(roots["b"], full[4:], 4)  # names continue; z is slab-local
-    write_tree(roots["full"], full, 0)
-
-    def pyramid(root):
-        chunks = read_stack_tree(spark, str(root / "SmartSPIM"), chunk_z=64)
-        return build_pyramid(chunks, (2, 2, 2), 2, chunk_zyx=[64, 64, 64])
-
-    kw = dict(
+    src = tmp_path / f"{name}_src" / "SmartSPIM"
+    d = src / "Ex_488_Em_525" / "400000" / "400000_500000"
+    d.mkdir(parents=True)
+    for z, img in enumerate(planes):
+        (d / f"{z:06d}.png").write_bytes(encode_png_gray(img))
+    chunks = read_stack_tree(spark, str(src), chunk_z=64)
+    [group] = write_ome_zarr_all(
+        build_pyramid(chunks, (2, 2, 2), n_levels, chunk_zyx=[64, 64, 64]),
+        str(tmp_path / name),
         voxel_size_zyx=[2.0, 1.8, 1.8],
         scale_factor_zyx=[2, 2, 2],
         chunk_zyx=[64, 64, 64],
     )
-    [group] = write_ome_zarr_all(pyramid(roots["a"]), str(tmp_path / "inc"), **kw)
-    append_ome_zarr_z(pyramid(roots["b"]), group)
-    [one_shot] = write_ome_zarr_all(
-        pyramid(roots["full"]), str(tmp_path / "oneshot"), **kw
+    return group
+
+
+def _slab(planes, n_levels, chunk_z=None):
+    """A z-slab as the append transaction takes it: its own
+    ``windowed_mean`` pyramid (computed independently of the store),
+    ``geo``, ``chunk_info`` (level-0 z-chunk ``chunk_z``, default the
+    whole slab, halved per level) and a ``write_level`` that writes
+    each level's chunks on the store's chunk grid, shifted by ``off``
+    z-chunks."""
+    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+        ChunkWriter,
+        _fs_for,
+        _make_codec,
+        chunk_key,
     )
+
+    levels = [np.asarray(planes)]
+    for _ in range(n_levels - 1):
+        levels.append(windowed_mean(levels[-1], (2, 2, 2)))
+    geo = [(lv.shape, str(lv.dtype)) for lv in levels]
+    dz = chunk_z or levels[0].shape[0]
+    chunk_info = []
+    for lv in levels:
+        chunk_info.append((min(dz, lv.shape[0]), -(-lv.shape[0] // dz)))
+        dz = -(-dz // 2)
+
+    def write_level(group):
+        def write(lvl, off, meta):
+            fs, gbase = _fs_for(group)
+            cw = ChunkWriter(fs, _make_codec("zlib", None)[1])
+            cdz, cdy, cdx = meta["chunks"][2:]
+            arr = levels[lvl]
+            for z0 in range(0, arr.shape[0], cdz):
+                for y0 in range(0, arr.shape[1], cdy):
+                    for x0 in range(0, arr.shape[2], cdx):
+                        cw.write(
+                            chunk_key(
+                                gbase, lvl, z0 // cdz + off, y0 // cdy, x0 // cdx
+                            ),
+                            arr[z0 : z0 + cdz, y0 : y0 + cdy, x0 : x0 + cdx],
+                            (cdz, cdy, cdx),
+                        )
+
+        return write
+
+    return geo, chunk_info, write_level
+
+
+def _store_files(group):
+    return {p: p.read_bytes() for p in Path(group).rglob("*") if p.is_file()}
+
+
+def _assert_refused(group, geo, chunk_info, match):
+    """The append is refused before any chunk lands: ``write_level``
+    is never called and every store file (``.zattrs`` included, so no
+    fence) is byte-unchanged."""
+    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+        append_slab_transaction,
+    )
+
+    def never(lvl, off, meta):
+        pytest.fail(f"a refused slab wrote level {lvl}")
+
+    before = _store_files(group)
+    with pytest.raises(ValueError, match=match):
+        append_slab_transaction(group, geo, chunk_info, never)
+    assert _store_files(group) == before
+
+
+def test_append_z_slab_equals_one_shot(spark, tmp_path):
+    """Incremental acquisition: slab A written, slab B appended later
+    (each slab's pyramid computed independently) reassembles to exactly
+    the one-shot store of the full stack, at every level; a slab with a
+    mismatched plane, or an odd depth (it would finalize a truncated
+    boundary window), is refused before any chunk lands."""
+    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+        append_slab_transaction,
+    )
+
+    rng = np.random.default_rng(11)
+    full = rng.integers(0, 65535, size=(8, 32, 40), dtype=np.uint16)
+    group = _one_stack_store(spark, tmp_path, "inc", full[:4], 2)
+    one_shot = _one_stack_store(spark, tmp_path, "oneshot", full, 2)
+
+    geo, info, write_level = _slab(full[4:], 2)
+    append_slab_transaction(group, geo, info, write_level(group))
     for lvl in (0, 1):
         np.testing.assert_array_equal(
             read_zarr_level(group, lvl), read_zarr_level(one_shot, lvl)
@@ -275,175 +341,80 @@ def test_append_z_slab_equals_one_shot(spark, tmp_path):
     # level-0 equals the source exactly
     np.testing.assert_array_equal(read_zarr_level(group, 0), full)
 
-    # refusal: a slab with the wrong plane size must not corrupt
-    bad = tmp_path / "bad"
-    write_tree(bad, rng.integers(0, 9, size=(2, 16, 40), dtype=np.uint16), 0)
-    with pytest.raises(ValueError, match="plane"):
-        append_ome_zarr_z(pyramid(bad), group)
-
-    # refusal: an ODD slab depth would finalize a truncated boundary
-    # window (level-1 would diverge from the one-shot pyramid)
-    odd = tmp_path / "odd"
-    write_tree(odd, rng.integers(0, 9, size=(3, 32, 40), dtype=np.uint16), 0)
-    with pytest.raises(ValueError, match="truncated"):
-        append_ome_zarr_z(pyramid(odd), group)
+    bad = rng.integers(0, 9, size=(2, 16, 40), dtype=np.uint16)
+    _assert_refused(group, *_slab(bad, 2)[:2], "plane")
+    odd = rng.integers(0, 9, size=(3, 32, 40), dtype=np.uint16)
+    _assert_refused(group, *_slab(odd, 2)[:2], "truncated")
 
 
 def test_append_refuses_shallow_slab_and_chunk_mismatch(spark, tmp_path):
-    """Round-5 self-review regressions: (1) a slab shallower than
-    factor**(n_levels-1) must be refused (its deepest levels finalize
-    truncated windows — the extent-ratio check alone cannot see this
-    once an extent hits 1); (2) a slab whose z-chunking differs from
-    the store's must be refused with the store's chunk size named, and
-    re-chunking to that size must succeed."""
-    import numpy as np
-
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-        build_pyramid,
-    )
+    """(1) A slab shallower than factor**(n_levels-1) is refused (its
+    deepest levels finalize truncated windows — the extent-ratio check
+    alone cannot see this once an extent hits 1); (2) a slab whose
+    z-chunking differs from the store's is refused with the store's
+    chunk size named, and re-chunking to that size succeeds."""
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        append_ome_zarr_z,
-        read_zarr_level,
-        write_ome_zarr_all,
-    )
-    from aind_smartspim_data_transformation_spark.sources.png_codec import (
-        encode_png_gray,
-    )
-    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        read_stack_tree,
+        append_slab_transaction,
     )
 
     rng = np.random.default_rng(3)
-
-    def tree(name, planes):
-        root = tmp_path / name
-        d = root / "SmartSPIM" / "Ex_488_Em_525" / "400000" / "400000_500000"
-        d.mkdir(parents=True)
-        for i, img in enumerate(planes):
-            (d / f"{i:06d}.png").write_bytes(encode_png_gray(img))
-        return root
-
-    def pyr(root, n_levels, chunk_z=64):
-        chunks = read_stack_tree(spark, str(root / "SmartSPIM"), chunk_z=chunk_z)
-        return build_pyramid(chunks, (2, 2, 2), n_levels, chunk_zyx=[64, 64, 64])
-
-    kw = dict(
-        voxel_size_zyx=[2.0, 1.8, 1.8],
-        scale_factor_zyx=[2, 2, 2],
-        chunk_zyx=[64, 64, 64],
-    )
-    full8 = rng.integers(0, 65535, size=(8, 16, 20), dtype=np.uint16)
-    [group] = write_ome_zarr_all(
-        pyr(tree("base", full8), 3), str(tmp_path / "s3"), **kw
-    )
-    # (1) 2-deep slab into a 3-level store: level extents [2,1,1] — the
-    # old slab-ratio check passed this; the store-ladder check must not
-    shallow = tree("shallow", rng.integers(0, 9, size=(2, 16, 20), dtype=np.uint16))
-    with pytest.raises(ValueError, match="truncated"):
-        append_ome_zarr_z(pyr(shallow, 3), group)
+    full12 = rng.integers(0, 65535, size=(12, 16, 20), dtype=np.uint16)
+    # (1) 2-deep slab into a 3-level store: level extents [2, 1, 1] —
+    # the slab-ratio check passes this; the store-ladder check must not
+    s3 = _one_stack_store(spark, tmp_path, "s3", full12[:8], 3)
+    shallow = rng.integers(0, 9, size=(2, 16, 20), dtype=np.uint16)
+    _assert_refused(s3, *_slab(shallow, 3)[:2], "truncated")
 
     # (2) store whose z-chunk was clamped by a 4-deep first wave; the
     # second wave is DEEPER (8 planes), so its single 8-deep chunk
     # cannot land on the store's 4-plane grid
-    full12 = np.concatenate([full8, rng.integers(0, 65535, size=(4, 16, 20), dtype=np.uint16)])
-    [g2] = write_ome_zarr_all(
-        pyr(tree("w1", full12[:4]), 2), str(tmp_path / "clamped"), **kw
-    )
-    w2 = tree("w2", full12[4:])
-    with pytest.raises(ValueError, match="chunk_z=4"):
-        append_ome_zarr_z(pyr(w2, 2), g2)  # slab chunk dz=8 != store 4
-    append_ome_zarr_z(pyr(w2, 2, chunk_z=4), g2)  # re-chunked: fine
+    g2 = _one_stack_store(spark, tmp_path, "clamped", full12[:4], 2)
+    _assert_refused(g2, *_slab(full12[4:], 2)[:2], "chunk_z=4")
+    geo, info, write_level = _slab(full12[4:], 2, chunk_z=4)  # re-chunked
+    append_slab_transaction(g2, geo, info, write_level(g2))
     np.testing.assert_array_equal(read_zarr_level(g2, 0), full12)
 
 
-def test_append_crash_fence_and_roll_forward(spark, tmp_path, monkeypatch):
-    """Advisor r6: a crash mid-append must leave a DETECTABLE state
-    (the .zattrs append fence) and a retry with the same slab must
-    roll forward to exactly the one-shot store — never double-append.
-    Crash points exercised: (a) after the fence but before any level
-    commits, (b) after level 0 commits but before level 1.  A retry
-    with a DIFFERENT slab against a fenced store must refuse."""
-    from aind_smartspim_data_transformation_spark.imaging import zarr_sink
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-        build_pyramid,
-    )
+def test_append_crash_fence_and_roll_forward(spark, tmp_path):
+    """A crash mid-append leaves a DETECTABLE state (the .zattrs append
+    fence) and a retry with the same slab rolls forward to exactly the
+    one-shot store — never a double-append.  Crash points: (a) after
+    the fence but before any level commits, (b) after level 0 commits
+    but before level 1.  A slab of a different depth is refused while
+    the fence is up."""
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        append_ome_zarr_z,
-        write_ome_zarr_all,
-    )
-    from aind_smartspim_data_transformation_spark.sources.png_codec import (
-        encode_png_gray,
-    )
-    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        read_stack_tree,
+        append_slab_transaction,
     )
 
     rng = np.random.default_rng(29)
     full = rng.integers(0, 65535, size=(8, 16, 20), dtype=np.uint16)
+    one_shot = _one_stack_store(spark, tmp_path, "oneshot", full, 2)
+    geo, info, write_level = _slab(full[4:], 2)
 
-    def tree(name, planes, z0=0):
-        root = tmp_path / name
-        d = root / "SmartSPIM" / "Ex_488_Em_525" / "400000" / "400000_500000"
-        d.mkdir(parents=True)
-        for i, img in enumerate(planes):
-            (d / f"{z0 + i:06d}.png").write_bytes(encode_png_gray(img))
-        return root
+    for crash_lvl in (0, 1):
+        group = _one_stack_store(spark, tmp_path, f"crash{crash_lvl}", full[:4], 2)
+        real = write_level(group)
 
-    def pyr(root):
-        chunks = read_stack_tree(spark, str(root / "SmartSPIM"), chunk_z=64)
-        return build_pyramid(chunks, (2, 2, 2), 2, chunk_zyx=[64, 64, 64])
+        def crashing(lvl, off, meta, crash_lvl=crash_lvl, real=real):
+            if lvl == crash_lvl:
+                raise OSError("simulated crash mid-append")
+            real(lvl, off, meta)
 
-    kw = dict(
-        voxel_size_zyx=[2.0, 1.8, 1.8],
-        scale_factor_zyx=[2, 2, 2],
-        chunk_zyx=[64, 64, 64],
-    )
-    slab_a, slab_b = tree("a", full[:4]), tree("b", full[4:], 4)
-    slab_c = tree("c", full[:2])  # different DEPTH: fence must refuse it
-    [one_shot] = write_ome_zarr_all(
-        pyr(tree("full", full)), str(tmp_path / "oneshot"), **kw
-    )
-
-    real_write_json = zarr_sink._write_json
-
-    def run_crash_at(nth_zarray_write: int) -> str:
-        """Fresh store from slab A, then append slab B crashing at the
-        nth .zarray write; returns the group path."""
-        dest = tmp_path / f"crash{nth_zarray_write}"
-        [group] = write_ome_zarr_all(pyr(slab_a), str(dest), **kw)
-        seen = {"n": 0}
-
-        def exploding(path, obj):
-            if path.endswith("/.zarray"):
-                seen["n"] += 1
-                if seen["n"] == nth_zarray_write:
-                    raise OSError("simulated crash mid-append")
-            return real_write_json(path, obj)
-
-        monkeypatch.setattr(zarr_sink, "_write_json", exploding)
         with pytest.raises(OSError, match="simulated crash"):
-            append_ome_zarr_z(pyr(slab_b), group)
-        monkeypatch.setattr(zarr_sink, "_write_json", real_write_json)
-        return group
-
-    for crash_at in (1, 2):
-        group = run_crash_at(crash_at)
-        # partial state is detectable: the fence survives the crash
-        from pathlib import Path
-
+            append_slab_transaction(group, geo, info, crashing)
         attrs = json.loads(Path(group, ".zattrs").read_text())
-        assert "append_in_progress" in attrs
-        # a different-GEOMETRY slab must be refused while the fence is
-        # up (same-geometry slabs are indistinguishable by design — the
+        assert attrs["append_in_progress"] == {"pre_z": [4, 2], "post_z": [8, 4]}
+        level0 = json.loads(Path(group, "0", ".zarray").read_text())
+        assert level0["shape"][2] == (4 if crash_lvl == 0 else 8)
+        # a different-GEOMETRY slab is refused while the fence is up
+        # (same-geometry slabs are indistinguishable by design — the
         # fence pins extents, not content)
-        with pytest.raises(ValueError, match="crashed midway"):
-            append_ome_zarr_z(pyr(slab_c), group)
+        _assert_refused(group, *_slab(full[:2], 2)[:2], "crashed midway")
         # retry with the SAME slab rolls forward to the one-shot store
-        append_ome_zarr_z(pyr(slab_b), group)
+        append_slab_transaction(group, geo, info, real)
         for lvl in (0, 1):
             np.testing.assert_array_equal(
-                zarr_sink.read_zarr_level(group, lvl),
-                zarr_sink.read_zarr_level(one_shot, lvl),
+                read_zarr_level(group, lvl), read_zarr_level(one_shot, lvl)
             )
         attrs = json.loads(Path(group, ".zattrs").read_text())
         assert "append_in_progress" not in attrs
@@ -1135,7 +1106,7 @@ def test_auto_routing_boundary_on_task_budget(spark, tmp_path, monkeypatch):
     assert all(st == stores[0] for st in stores)
 
 
-def test_band_plan_shrinks_to_memory_envelope():
+def test_band_plan_shrinks_to_memory_envelope(monkeypatch):
     """r11 (SCALE.md §6m): a deep acquisition must NARROW its bands to
     fit the per-task envelope, not tip the whole job off the fused
     path.  This is the measured regression geometry — 4 stacks × 320
@@ -1143,6 +1114,7 @@ def test_band_plan_shrinks_to_memory_envelope():
     picks 2-chunk-row bands whose folded buffers overshoot 256 MiB by
     ~0.04%, and before the cap the job fell back to the
     chunk-table pipeline at half the fused throughput."""
+    from aind_smartspim_data_transformation_spark.imaging import fused
     from aind_smartspim_data_transformation_spark.imaging.fused import (
         FUSED_MAX_TASK_BYTES,
         _band_plan,
@@ -1170,16 +1142,15 @@ def test_band_plan_shrinks_to_memory_envelope():
 
     # uncapped want-derived plan (the pre-r11 shape) for contrast:
     # 12 slabs → want 10 → 2-chunk-row bands → 268.5 MB task > cap
-    loose = _band_plan(geo, chunk, 32, max_task_bytes=1 << 40)
+    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 1 << 40)
+    loose = _band_plan(geo, chunk, 32)
     assert loose[("Ex_445_Em_469", "s0")] == (7, 2)
 
-    # ADVICE r11: the probe must size the SAME plan a custom-envelope
-    # caller would execute — fused_task_bytes(max_task_bytes=X) sizes
-    # _band_plan(max_task_bytes=X), so the uncapped probe reports the
-    # loose plan's overshoot while the default probe reports the fit.
-    assert fused_task_bytes(geo, chunk, 32, max_task_bytes=1 << 40) > (
-        FUSED_MAX_TASK_BYTES
-    )
+    # ADVICE r11: the probe must size the SAME plan the band tasks
+    # would execute — under the lifted envelope fused_task_bytes sizes
+    # the loose plan and reports its overshoot of the real envelope,
+    # while the default probe above reports the fit.
+    assert fused_task_bytes(geo, chunk, 32) > FUSED_MAX_TASK_BYTES
 
 
 def test_band_plan_cap_never_changes_store_bytes(
@@ -1197,8 +1168,10 @@ def test_band_plan_cap_never_changes_store_bytes(
     make_dataset(root, height=80, width=28)
     geo = fused.probe_stack_geometry(spark, f"{root}/SmartSPIM")
     P = spark.sparkContext.defaultParallelism
-    loose = fused._band_plan(geo, [4, 4, 4], P, max_task_bytes=1 << 40)
-    tight = fused._band_plan(geo, [4, 4, 4], P, max_task_bytes=6000)
+    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 1 << 40)
+    loose = fused._band_plan(geo, [4, 4, 4], P)
+    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 6000)
+    tight = fused._band_plan(geo, [4, 4, 4], P)
     first = next(iter(loose))
     assert loose[first][1] > tight[first][1] == 1, (
         "fixture no longer makes the cap bind — adjust geometry",
@@ -1237,12 +1210,12 @@ def test_band_plan_invariants_hypothesis():
     envelope whenever a single-chunk-row band can — i.e.
     fused_task_bytes > cap implies even per_band=1 doesn't fit, and
     (4) never produce MORE bands than chunk rows."""
+    from unittest import mock
+
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from aind_smartspim_data_transformation_spark.imaging.fused import (
-        _band_plan,
-    )
+    from aind_smartspim_data_transformation_spark.imaging import fused
 
     @settings(max_examples=200, deadline=None)
     @given(
@@ -1261,7 +1234,8 @@ def test_band_plan_invariants_hypothesis():
              "dtype": dtype}
         ]
         chunk = [cz, cy, 1]
-        plan = _band_plan(geo, chunk, par, max_task_bytes=cap)
+        with mock.patch.object(fused, "FUSED_MAX_TASK_BYTES", cap):
+            plan = fused._band_plan(geo, chunk, par)
         nb, per_band = plan[("C", "s0")]
         n_cy = -(-y // cy)
         assert per_band >= 1

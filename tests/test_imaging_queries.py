@@ -136,15 +136,13 @@ def test_i04_matches_compute_scale_ladder(spark, sf_dir):
         assert tuple(chunks[lvl]) == (1, 1, r["cz"], r["cy"], r["cx"])
 
 
-def test_i05_matches_production_band_plan(spark, sf_dir):
+def test_i05_matches_production_band_plan(spark, sf_dir, monkeypatch):
     """i05's declarative band-plan/marker-key arithmetic must be the
     PRODUCTION bookkeeping, not merely self-consistent: replay the
     same synthetic geometry through imaging/fused.py's _band_plan and
     run_fused_ingest's (stack, slab, fold) key enumeration + marker
     merge, and require row-identical numbers."""
-    from aind_smartspim_data_transformation_spark.imaging.fused import (
-        _band_plan,
-    )
+    from aind_smartspim_data_transformation_spark.imaging import fused
 
     P, cz, cy = iq.I05_PARALLELISM, 4, 4
     geo = [
@@ -158,14 +156,14 @@ def test_i05_matches_production_band_plan(spark, sf_dir):
         }
         for i in range(iq.I05_STACKS)
     ]
-    plan = _band_plan(
-        geo, [cz, cy, 4], P, max_task_bytes=iq.I05_TASK_BYTES_CAP
-    )
+    uncapped = fused._band_plan(geo, [cz, cy, 4], P)
+    with monkeypatch.context() as mp:
+        mp.setattr(fused, "FUSED_MAX_TASK_BYTES", iq.I05_TASK_BYTES_CAP)
+        plan = fused._band_plan(geo, [cz, cy, 4], P)
     # the replayed cap literal must BIND for some synthetic stacks and
     # leave others on the want-derived band height, or the i05 parity
     # proves nothing about the capped branch
     per_bands = [plan[(g["channel"], g["stack"])][1] for g in geo]
-    uncapped = _band_plan(geo, [cz, cy, 4], P)
     assert per_bands != [
         uncapped[(g["channel"], g["stack"])][1] for g in geo
     ], "i05 cap literal no longer binds — resize I05_TASK_BYTES_CAP"

@@ -1,10 +1,11 @@
 """Incremental streaming ingest converges to the batch ingest.
 
-Slices arrive in two waves; the file-source checkpoint must process
-each file exactly once, and the accumulated chunk table must equal the
-batch path run over the finished tree — including the reference
-fixture's NON-dense filename stems (000000/000020, which make rank-z
-and stem-z differ and so exercise the slice_key design).
+Slices arrive in waves; the file-source checkpoint must process each
+file exactly once, and the stores the ``smartspim`` stream writer grows
+wave by wave must equal a one-shot build of the finished acquisition —
+including the reference fixture's NON-dense filename stems
+(000000/000020, which make rank-z and stem-z differ and so exercise
+the slice_key design).
 """
 
 from __future__ import annotations
@@ -12,159 +13,90 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from aind_smartspim_data_transformation_spark.sources.png_codec import encode_png_gray
-from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-    read_stack_tree,
+from aind_smartspim_data_transformation_spark.imaging.pyramid import windowed_mean
+from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+    read_zarr_level,
 )
+from aind_smartspim_data_transformation_spark.sources.png_codec import encode_png_gray
 from aind_smartspim_data_transformation_spark.streaming import stack_stream as ss
 
 
-def _write_slice(root, channel, stack, stem, value, shape=(8, 10)):
+def _write_slice(root, channel, stack, stem, plane):
     d = root / "SmartSPIM" / channel / stack.split("_")[0] / stack
     d.mkdir(parents=True, exist_ok=True)
-    arr = np.full(shape, value, dtype=np.uint16)
-    (d / f"{stem:06d}.png").write_bytes(encode_png_gray(arr))
+    (d / f"{stem:06d}.png").write_bytes(encode_png_gray(plane))
 
 
 def test_incremental_ingest_matches_batch(spark, tmp_path):
+    """Wave 1 lands four sparse-stem slices of one stack; wave 2 lands
+    that stack's SHORT last wave (two slices) and the first slices of a
+    new stack, so one epoch appends to one store and creates another.
+    Each store's level 0 equals its planes in stem order (every file
+    decoded exactly once, z = stem rank) and level 1 their windowed
+    mean."""
     root = tmp_path / "acq"
-    out = str(tmp_path / "landed")
+    store = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
+    ch = "Ex_488_Em_525"
+    rng = np.random.default_rng(7)
+    planes = {
+        "400000_500000": rng.integers(0, 65535, size=(6, 16, 20), dtype=np.uint16),
+        "400000_530000": rng.integers(0, 65535, size=(4, 16, 20), dtype=np.uint16),
+    }
 
-    # wave 1: one stack, reference-style sparse stems
-    _write_slice(root, "Ex_488_Em_525", "400000_500000", 0, 100)
-    _write_slice(root, "Ex_488_Em_525", "400000_500000", 20, 200)
-    ss.run_incremental_ingest(spark, str(root / "SmartSPIM"), out, ckpt)
-    landed1 = spark.read.parquet(out)
-    assert landed1.count() == 2
+    def ingest():
+        ss.run_streaming_store_ingest(
+            spark, str(root / "SmartSPIM"), store, ckpt,
+            chunk_zyx=[64, 64, 64], n_levels=2,
+        )
 
-    # wave 2: a late slice for stack 1 + a brand-new stack
-    _write_slice(root, "Ex_488_Em_525", "400000_500000", 40, 300)
-    _write_slice(root, "Ex_488_Em_525", "400000_530000", 0, 400)
-    ss.run_incremental_ingest(spark, str(root / "SmartSPIM"), out, ckpt)
-    landed2 = spark.read.parquet(out)
-    # exactly-once: wave-1 files were NOT re-decoded
-    assert landed2.count() == 4
-    assert landed2.select("stack", "slice_key").distinct().count() == 4
+    # wave 1: one stack, reference-style sparse stems 0/20/40/60
+    for i in range(4):
+        _write_slice(root, ch, "400000_500000", 20 * i, planes["400000_500000"][i])
+    ingest()
 
-    # accumulated chunks == batch chunks over the finished tree
-    stream_chunks = ss.accumulated_slices_to_chunks(spark, out, chunk_z=2)
-    batch_chunks = read_stack_tree(spark, str(root / "SmartSPIM"), chunk_z=2)
-    key = ["channel", "stack", "t", "c", "cz", "cy", "cx"]
-    s_rows = sorted(
-        (tuple(r[k] for k in key) + (r["dz"], r["dy"], r["dx"], r["dtype"], bytes(r["data"])))
-        for r in stream_chunks.collect()
-    )
-    b_rows = sorted(
-        (tuple(r[k] for k in key) + (r["dz"], r["dy"], r["dx"], r["dtype"], bytes(r["data"])))
-        for r in batch_chunks.collect()
-    )
-    assert s_rows == b_rows
+    # wave 2: stems 80/100 of the same stack + a brand-new stack
+    for i in range(4, 6):
+        _write_slice(root, ch, "400000_500000", 20 * i, planes["400000_500000"][i])
+    for i in range(4):
+        _write_slice(root, ch, "400000_530000", 20 * i, planes["400000_530000"][i])
+    ingest()
+
+    for stack, vol in planes.items():
+        group = f"{store}/{ch}/{stack}.ome.zarr"
+        np.testing.assert_array_equal(read_zarr_level(group, 0), vol)
+        np.testing.assert_array_equal(
+            read_zarr_level(group, 1), windowed_mean(vol, (2, 2, 2))
+        )
 
 
 def test_stream_ingests_tiff_slices(spark, tmp_path):
     """The stream scan admits .tif and the decoder dispatches on magic
-    bytes — a mixed PNG/TIFF wave lands identically to batch."""
+    bytes — a mixed PNG/TIFF wave lands as one stack in stem order."""
     from aind_smartspim_data_transformation_spark.sources.tiff_codec import (
         encode_tiff_gray,
     )
 
     root = tmp_path / "acq"
-    out = str(tmp_path / "landed")
+    store = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
     d = root / "SmartSPIM" / "Ex_488_Em_525" / "400000" / "400000_500000"
     d.mkdir(parents=True)
-    a = np.full((8, 10), 111, dtype=np.uint16)
-    b = np.full((8, 10), 222, dtype=np.uint16)
+    rng = np.random.default_rng(17)
+    a = rng.integers(0, 65535, size=(8, 10), dtype=np.uint16)
+    b = rng.integers(0, 65535, size=(8, 10), dtype=np.uint16)
     (d / "000000.png").write_bytes(encode_png_gray(a))
     (d / "000020.tif").write_bytes(encode_tiff_gray(b))
-    ss.run_incremental_ingest(spark, str(root / "SmartSPIM"), out, ckpt)
-    landed = spark.read.parquet(out)
-    assert landed.count() == 2
-    vals = {
-        int(np.frombuffer(bytes(r["data"]), dtype=np.uint16)[0])
-        for r in landed.collect()
-    }
-    assert vals == {111, 222}
-
-
-def test_streamed_waves_append_into_one_zarr(spark, tmp_path):
-    """The full incremental acquisition story: slices stream in over
-    two waves; each wave's slab is assembled from the landed table and
-    appended to ONE OME-Zarr store, which ends identical to a one-shot
-    batch build of the finished acquisition."""
-    import numpy as np
-
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-        build_pyramid,
-    )
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        append_ome_zarr_z,
-        read_zarr_level,
-        write_ome_zarr_all,
-    )
-    from aind_smartspim_data_transformation_spark.sources.png_codec import (
-        encode_png_gray,
-    )
-
-    rng = np.random.default_rng(5)
-    full = rng.integers(0, 65535, size=(8, 16, 20), dtype=np.uint16)
-    root = tmp_path / "acq"
-    d = root / "SmartSPIM" / "Ex_488_Em_525" / "400000" / "400000_500000"
-    d.mkdir(parents=True)
-    out = str(tmp_path / "landed")
-    ckpt = str(tmp_path / "ckpt")
-    kw = dict(
-        voxel_size_zyx=[2.0, 1.8, 1.8],
-        scale_factor_zyx=[2, 2, 2],
-        chunk_zyx=[64, 64, 64],
-    )
-
-    def pyr(chunks):
-        return build_pyramid(chunks, (2, 2, 2), 2, chunk_zyx=[64, 64, 64])
-
-    # wave 1: planes 0-3 arrive, stream lands them, store is created
-    for z in range(4):
-        (d / f"{z:06d}.png").write_bytes(encode_png_gray(full[z]))
-    ss.run_incremental_ingest(spark, str(root / "SmartSPIM"), out, ckpt)
-    slab = ss.landed_slab_chunks(spark, out, after_key=-1, chunk_z=64)
-    [group] = write_ome_zarr_all(pyr(slab), str(tmp_path / "store"), **kw)
-
-    # wave 2: planes 4-7 arrive later; only THEY are decoded + appended
-    for z in range(4, 8):
-        (d / f"{z:06d}.png").write_bytes(encode_png_gray(full[z]))
-    ss.run_incremental_ingest(spark, str(root / "SmartSPIM"), out, ckpt)
-    slab2 = ss.landed_slab_chunks(spark, out, after_key=3, chunk_z=64)
-    append_ome_zarr_z(pyr(slab2), group)
-
-    np.testing.assert_array_equal(read_zarr_level(group, 0), full)
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-        windowed_mean,
-    )
-
-    np.testing.assert_array_equal(
-        read_zarr_level(group, 1), windowed_mean(full, (2, 2, 2))
-    )
+    ss.run_streaming_store_ingest(spark, str(root / "SmartSPIM"), store, ckpt)
+    group = f"{store}/Ex_488_Em_525/400000_500000.ome.zarr"
+    np.testing.assert_array_equal(read_zarr_level(group, 0), np.stack([a, b]))
 
 
 def test_writestream_smartspim_waves_equal_one_shot(spark, tmp_path):
-    """writeStream.format('smartspim'): two waves through the streaming
-    DataSource writer end ARRAY-identical at every level to a one-shot
-    batch build of the finished acquisition — no foreachBatch glue, no
-    landed table."""
-    import numpy as np
-
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-        build_pyramid,
-        windowed_mean,
-    )
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        read_zarr_level,
-    )
-    from aind_smartspim_data_transformation_spark.sources.png_codec import (
-        encode_png_gray,
-    )
-
+    """writeStream.format('smartspim'): two waves of two stacks through
+    the streaming DataSource writer end ARRAY-identical at every level
+    to a one-shot build of the finished acquisition, with no fence and
+    no staging left behind."""
     rng = np.random.default_rng(11)
     full = {
         "400000_500000": rng.integers(0, 65535, size=(8, 16, 20), dtype=np.uint16),
@@ -214,29 +146,21 @@ def test_writestream_smartspim_waves_equal_one_shot(spark, tmp_path):
     )
 
 
-def test_writestream_smartspim_crash_fence_roll_forward(spark, tmp_path):
-    """Mid-stream kill: the SECOND wave's commit dies after level 0's
-    shape commit (fence present, level 1 unpromoted).  The streaming
-    sink's commit runs in a Python worker Spark spawns, out of a
-    monkeypatch's reach, so the fault comes from the filesystem: a
-    regular file sits where wave 2's level-1 chunks must go, and their
+@pytest.mark.parametrize("crash_level", [0, 1])
+def test_writestream_smartspim_crash_fence_roll_forward(
+    spark, tmp_path, crash_level
+):
+    """Mid-stream kill: the SECOND wave's commit dies after the fence
+    went up — at level 0's promotion (before any level commits) or at
+    level 1's (after level 0's shape commit).  The streaming sink's
+    commit runs in a Python worker Spark spawns, out of a monkeypatch's
+    reach, so the fault comes from the filesystem: a regular file sits
+    where wave 2's chunks of ``crash_level`` must go, and their
     promotion fails.  Restarting the stream with the same checkpoint
-    after removing it must ROLL FORWARD through the shared append
-    transaction and end identical to an uninterrupted run."""
+    after removing it must ROLL FORWARD through the append transaction
+    and end identical to an uninterrupted run."""
     import json
     from pathlib import Path
-
-    import numpy as np
-
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-        windowed_mean,
-    )
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        read_zarr_level,
-    )
-    from aind_smartspim_data_transformation_spark.sources.png_codec import (
-        encode_png_gray,
-    )
 
     rng = np.random.default_rng(13)
     vol = rng.integers(0, 65535, size=(8, 16, 20), dtype=np.uint16)
@@ -257,20 +181,23 @@ def test_writestream_smartspim_crash_fence_roll_forward(spark, tmp_path):
         (d / f"{z:06d}.png").write_bytes(encode_png_gray(vol[z]))
     ingest()
 
-    # wave 2 arrives; kill the commit at level 1's promotion (level 0's
-    # .zarray shape is committed, the fence is up): a regular file
-    # obstructs level 1's z-chunk 1, the parent of wave 2's chunks
+    # wave 2 arrives; kill the commit at crash_level's promotion (the
+    # fence is up): a regular file obstructs that level's z-chunk 1,
+    # the parent of wave 2's chunks
     for z in range(4, 8):
         (d / f"{z:06d}.png").write_bytes(encode_png_gray(vol[z]))
-    obstruction = Path(group, "1", "0", "0", "1")
+    obstruction = Path(group, str(crash_level), "0", "0", "1")
     obstruction.write_bytes(b"")
     with pytest.raises(Exception, match="NotADirectoryError"):
         ingest()
 
-    # detectable crash state: fence present, level-0 shape grown
+    # detectable crash state: fence present; level 0's shape grown only
+    # if the crash came after its commit
     attrs = json.loads((tmp_path / "store" / "Ex_488_Em_525" /
                         "400000_500000.ome.zarr" / ".zattrs").read_text())
-    assert attrs["append_in_progress"]["post_z"][0] == 8
+    assert attrs["append_in_progress"] == {"pre_z": [4, 2], "post_z": [8, 4]}
+    zarray0 = json.loads(Path(group, "0", ".zarray").read_text())
+    assert zarray0["shape"][2] == (4 if crash_level == 0 else 8)
 
     # restart with the SAME checkpoint: Spark replays the epoch, the
     # fence rolls forward, the store finishes identical to one-shot
