@@ -8,8 +8,8 @@ tile rows, through a full-volume assembly shuffle, back to Python for
 the pyramid, and again for each level's write — 1713 executor core-s
 for a 1.6 GB job whose numpy kernels need 83.  This path removes every
 one of those crossings: pixel bytes never enter the JVM.  Spark moves
-only PATH rows (the listing shuffle that groups a slab's slice paths
-into one task) and one summary row back per task.
+only PATH rows (one driver-planned row per band group, carrying its
+slice paths) and one summary row back per task.
 
 Why a task can compute the WHOLE pyramid locally: the store's chunk
 GRID is preserved across levels (chunk dims shrink by the factor, so
@@ -247,7 +247,7 @@ def _read_progress_markers(
 def _open_bytes(path: str, n: int | None = None) -> bytes:
     """Read a file (or its first ``n`` bytes — a ranged header probe)
     by Spark-listing path: ``file:/x`` / ``file:///x`` URIs (what
-    binaryFile listings produce) or any pyarrow.fs URI."""
+    list_stack_files and binaryFile listings produce) or any pyarrow.fs URI."""
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
         _fs_for,
     )
@@ -263,50 +263,58 @@ def _open_bytes(path: str, n: int | None = None) -> bytes:
         return f.read() if n is None else f.read(n)
 
 
+def _driver_frame(spark: SparkSession, rows: list[tuple], schema: str):
+    """DataFrame over driver-built planning rows, on the imaging session,
+    in ``min(rows, defaultParallelism)`` partitions — no empty tasks and
+    no file scan."""
+    from aind_smartspim_data_transformation_spark.session import imaging_session
+
+    sc = spark.sparkContext
+    n = max(1, min(len(rows), sc.defaultParallelism))
+    return imaging_session(spark).createDataFrame(sc.parallelize(rows, n), schema)
+
+
 def probe_stack_geometry(
-    spark: SparkSession, root: str, on_error: str = "fail"
+    spark: SparkSession,
+    root: str,
+    on_error: str = "fail",
+    listing: list[tuple] | None = None,
 ) -> list[dict[str, Any]]:
     """One geometry row per stack: (channel, stack, z, y, x, dtype) —
     z from the listing count (no content read), y/x/dtype from decoding
-    each stack's FIRST slice.  The decode runs DISTRIBUTED (mapInPandas
-    over the #stacks first-paths): at acquisition scale (10⁴ stacks)
-    a driver-side loop of small reads + decodes is minutes of serial
-    latency before any work starts; here it is one tiny Spark stage.
+    each stack's FIRST slice.  ``listing`` is :func:`list_stack_files`
+    of ``root`` (listed here when omitted); the driver groups it into
+    one row per stack with its candidate paths, and the header reads
+    run DISTRIBUTED (mapInPandas over those rows): at acquisition scale
+    (10⁴ stacks) a driver-side loop of small reads + decodes is minutes
+    of serial latency before any work starts; here it is one tiny
+    Spark stage.
 
     With ``on_error="quarantine"`` the probe tries each stack's first
     EIGHT slices in path order and uses the first that probes cleanly —
     a corrupt leading slice must not kill the job before the band tasks
     can quarantine it.  Eight consecutive corrupt leading slices still
-    fail loudly (geometry cannot be invented).  The candidate list is
-    bounded IN THE AGGREGATION BUFFER, not just the output: paths past
-    the candidate rank are nulled before collect_list (which skips
-    nulls), so the agg state holds ≤ 8 paths per stack — never the
-    10⁴-slice listing."""
+    fail loudly (geometry cannot be invented)."""
     from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        scan_stack_files,
+        list_stack_files,
     )
-
-    from pyspark.sql.window import Window as W
 
     quarantine = on_error == "quarantine"
     n_cand = 8 if quarantine else 1
-    # collect_list BOUNDED before aggregation: rank each stack's paths
-    # and null out everything past the candidate count — collect_list
-    # skips nulls, so the agg buffer holds ≤ n_cand paths per stack
-    # instead of the stack's whole listing (10⁴+ slices at acquisition
-    # scale).  The rank window shares the groupBy's partitioning key,
-    # so this adds no exchange.
-    ranked = scan_stack_files(spark, root).withColumn(
-        "_rk",
-        F.row_number().over(
-            W.partitionBy("channel", "stack").orderBy("path")
-        ),
-    )
-    firsts = ranked.groupBy("channel", "stack").agg(
-        F.count("*").alias("n_slices"),
-        F.sort_array(
-            F.collect_list(F.when(F.col("_rk") <= n_cand, F.col("path")))
-        ).alias("probe_paths"),
+    if listing is None:
+        listing = list_stack_files(root)
+    # one row per stack: slice count + its first n_cand paths in path
+    # order (the listing is path-sorted)
+    counts: dict[tuple[str, str], int] = {}
+    cands: dict[tuple[str, str], list[str]] = {}
+    for path, ch, st, _, _ in listing:
+        n = counts[(ch, st)] = counts.get((ch, st), 0) + 1
+        if n <= n_cand:
+            cands.setdefault((ch, st), []).append(path)
+    firsts = _driver_frame(
+        spark,
+        [(ch, st, counts[(ch, st)], cands[(ch, st)]) for ch, st in sorted(counts)],
+        "channel string, stack string, n_slices long, probe_paths array<string>",
     )
 
     def _probe(batches):
@@ -464,7 +472,7 @@ def input_listing_digest(
     root: str,
     stack_filter: list[tuple[str, str]] | None = None,
     mode: str = "metadata",
-    listing: "DataFrame | None" = None,
+    listing: list[tuple] | None = None,
 ) -> str:
     """Order-independent digest of the input tree, for resume safety.
 
@@ -476,44 +484,46 @@ def input_listing_digest(
     ``rsync -a``, ``tar -x`` of an older archive) produces an identical
     digest, so a resume would keep marker-complete bands built from the
     old bytes.  mtime is compared at millisecond granularity
-    (``unix_millis``; stack_reader.py), so an in-place rewrite landing
-    in the same wall-clock second — the r9 digest's truncation hole —
-    is still caught whenever the filesystem stores sub-second stamps.
+    (stack_reader.py), so an in-place rewrite landing in the same
+    wall-clock second — the r9 digest's truncation hole — is still
+    caught whenever the filesystem stores sub-second stamps.
 
     ``mode="content"`` sha256-hashes every file's BYTES (plus its
-    path): one full read of the input, distributed across executors
-    with a bounded DECIMAL-sum agg buffer.  Use it for post-quarantine
-    reruns where a corrupt slice may have been replaced with a
-    timestamp-preserving copy; at 100 TB it costs one extra pass over
-    the acquisition, which is exactly the price of certainty.
+    path): one full read of the input through the ``binaryFile`` scan,
+    distributed across executors with a bounded DECIMAL-sum agg buffer.
+    Use it for post-quarantine reruns where a corrupt slice may have
+    been replaced with a timestamp-preserving copy; at 100 TB it costs
+    one extra pass over the acquisition, which is exactly the price of
+    certainty.
 
     Both modes fold a 60-bit prefix of each per-file sha256 into a
-    DECIMAL(38,0) sum — commutative (listing order never matters) and
-    constant driver-side state.
+    decimal sum — commutative (listing order never matters) and
+    constant state.
 
-    Pass ``listing`` (a scan_stack_files DataFrame for ``root``) to
-    reuse an already-built file index: each scan_stack_files call
-    performs its own recursive file-status listing of the tree, which
-    at acquisition scale is minutes of driver-side LIST traffic —
-    run_fused_ingest shares ONE listing between this digest and its
-    band groups.
+    The metadata digest runs on the driver over ``listing`` (the
+    :func:`list_stack_files` rows of ``root``; listed here when
+    omitted), so run_fused_ingest plans the probe, this digest and its
+    band groups from ONE listing.  It equals the Spark expression
+    ``sha2(concat_ws("|", path, length, mtime))`` summed over a
+    ``scan_stack_files`` frame (resume-compatibility-tested), so
+    markers written by that earlier implementation still validate.
     """
     if mode not in ("metadata", "content"):
         raise ValueError(
             f"resume digest mode must be 'metadata' or 'content', got {mode!r}"
         )
-    if listing is None:
+    keep = None if stack_filter is None else set(stack_filter)
+    if mode == "content":
         from aind_smartspim_data_transformation_spark.sources.stack_reader import (
             scan_stack_files,
         )
 
-        listing = scan_stack_files(spark, root)
-    if stack_filter is not None:
-        _keys = spark.createDataFrame(
-            list(stack_filter), "channel string, stack string"
-        )
-        listing = listing.join(F.broadcast(_keys), ["channel", "stack"])
-    if mode == "content":
+        files = scan_stack_files(spark, root)
+        if keep is not None:
+            _keys = spark.createDataFrame(
+                list(keep), "channel string, stack string"
+            )
+            files = files.join(F.broadcast(_keys), ["channel", "stack"])
         per_file = F.sha2(
             F.concat(
                 F.encode(F.concat_ws("|", "path", "length"), "UTF-8"),
@@ -521,18 +531,32 @@ def input_listing_digest(
             ),
             256,
         )
-    else:
-        # metadata-only: Catalyst prunes the binary content column out
-        # of the scan entirely (plan-asserted in tests)
-        per_file = F.sha2(F.concat_ws("|", "path", "length", "mtime"), 256)
-    _dig = listing.agg(
-        F.count("*").alias("n"),
-        F.sum("length").alias("nbytes"),
-        F.sum(
-            F.conv(F.substring(per_file, 1, 15), 16, 10).cast("decimal(38,0)")
-        ).alias("hsum"),
-    ).collect()[0]
-    return f"{mode}:{_dig['n']}:{_dig['nbytes']}:{_dig['hsum']}"
+        _dig = files.agg(
+            F.count("*").alias("n"),
+            F.sum("length").alias("nbytes"),
+            F.sum(
+                F.conv(F.substring(per_file, 1, 15), 16, 10).cast(
+                    "decimal(38,0)"
+                )
+            ).alias("hsum"),
+        ).collect()[0]
+        return f"content:{_dig['n']}:{_dig['nbytes']}:{_dig['hsum']}"
+    import hashlib
+
+    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
+        list_stack_files,
+    )
+
+    if listing is None:
+        listing = list_stack_files(root)
+    n = nbytes = hsum = 0
+    for path, ch, st, length, mtime in listing:
+        if keep is None or (ch, st) in keep:
+            n += 1
+            nbytes += length
+            digest = hashlib.sha256(f"{path}|{length}|{mtime}".encode())
+            hsum += int(digest.hexdigest()[:15], 16)
+    return f"metadata:{n}:{nbytes}:{hsum}"
 
 
 def run_fused_ingest(
@@ -549,6 +573,7 @@ def run_fused_ingest(
     geo: list[dict[str, Any]] | None = None,
     on_error: str = "fail",
     resume_digest: str = "metadata",
+    listing: list[tuple] | None = None,
 ) -> tuple[list[str], dict[str, Any]]:
     """Write every stack's full multiscale store via fused band tasks.
 
@@ -579,19 +604,21 @@ def run_fused_ingest(
     a corrupt slice replaced in place after a quarantine crash) —
     merely invalidates the skip and the rerun redoes everything over
     the idempotent chunk keys.  ``resume_digest`` selects that digest:
-    ``"metadata"`` (default, metadata-only listing scan — blind to a
+    ``"metadata"`` (default, a driver-side hash of the listing — blind to a
     timestamp-preserving equal-length replacement such as ``cp -p`` /
     ``rsync -a``) or ``"content"`` (sha256 of every input byte — one
     extra full read; use for post-quarantine reruns).  See
     :func:`input_listing_digest` for the exact contract.
+
+    ``listing`` is :func:`list_stack_files` of ``root`` (listed here
+    when omitted): the probe, the resume digest and the band groups
+    are all planned from it on the driver.
     """
     if on_error not in ("fail", "quarantine"):
         raise ValueError(
             f"on_error must be 'fail' or 'quarantine', got {on_error!r}"
         )
     quarantine = on_error == "quarantine"
-    from pyspark.sql.window import Window as W
-
     from aind_smartspim_data_transformation_spark.imaging.pyramid import (
         validate_pyramid_geometry,
     )
@@ -600,13 +627,15 @@ def run_fused_ingest(
         _write_all_metadata,
     )
     from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        scan_stack_files,
+        list_stack_files,
     )
 
     validate_pyramid_geometry(chunk_zyx, scale_factor_zyx, n_levels)
     codec_meta, _ = _make_codec(compressor_name, compressor_kwargs)
+    if listing is None:
+        listing = list_stack_files(root)
     if geo is None:
-        geo = probe_stack_geometry(spark, root, on_error=on_error)
+        geo = probe_stack_geometry(spark, root, on_error=on_error, listing=listing)
     if stack_filter is not None:
         keep = set(stack_filter)
         geo = [g for g in geo if (g["channel"], g["stack"]) in keep]
@@ -643,29 +672,16 @@ def run_fused_ingest(
     # replaced in place after a quarantine crash) invalidates the
     # markers instead of silently keeping a marker-complete band's
     # zeroed planes.  Mode semantics live in input_listing_digest's
-    # docstring — "metadata" is a metadata-only scan with a documented
-    # timestamp-preserving-replacement blind spot; "content" reads
-    # every byte and closes it.
-    # ONE scan_stack_files (one recursive file-status listing of the
-    # tree) shared between the digest and the band groups — a second
-    # scan would re-list the whole acquisition
-    full_listing = scan_stack_files(spark, root)
+    # docstring — "metadata" hashes the listing on the driver with a
+    # documented timestamp-preserving-replacement blind spot;
+    # "content" reads every byte and closes it.
     content_fp = input_listing_digest(
         spark,
         root,
         stack_filter=stack_filter,
         mode=resume_digest,
-        listing=full_listing,
+        listing=listing,
     )
-    # band-group view of the same listing (content pruned by Catalyst)
-    listing = full_listing.select(
-        "path", "channel", "stack", "length", "mtime"
-    )
-    if stack_filter is not None:
-        _keys = spark.createDataFrame(
-            list(stack_filter), "channel string, stack string"
-        )
-        listing = listing.join(F.broadcast(_keys), ["channel", "stack"])
 
     # restartability: validate + load completion markers from an earlier
     # failed/killed run of THIS configuration; their bands are skipped
@@ -673,14 +689,16 @@ def run_fused_ingest(
         root, output_root, chunk_zyx, scale_factor_zyx, n_levels,
         codec_meta, geo, plan, on_error, content_fp,
     )
-    done = _read_progress_markers(output_root, store_fp, plan_fp)
+    markers = _read_progress_markers(output_root, store_fp, plan_fp)
     all_keys = [
         (g["channel"], g["stack"], slab, fold)
         for g in geo
         for slab in range(-(-g["z"] // cz_chunk))
         for fold in range((plan[(g["channel"], g["stack"])][0] + 1) // 2)
     ]
-    done = {k: m for k, m in done.items() if k in set(all_keys)}
+    # one pass over the keys, one dict lookup each: O(groups), never
+    # O(markers × groups)
+    done = {k: markers[k] for k in all_keys if k in markers}
     remaining = [k for k in all_keys if k not in done]
     # probed (height, width, dtype) per stack: band buffers are sized
     # from THIS, never from the first decoded slice, and every decoded
@@ -690,25 +708,26 @@ def run_fused_ingest(
         (g["channel"], g["stack"]): (g["y"], g["x"], g["dtype"]) for g in geo
     }
 
-    # listing → (slab, fold) groups.  The z-rank window moves ~100-byte
-    # path rows (content never scanned); each slice row is duplicated
-    # once per FOLD — fold f covers bands f and n_bands−1−f, so one
-    # decode of the slice's row span serves both bands (a PNG must
-    # inflate up to the higher band's end anyway; the lower band's
-    # rows come out of the same pass free), the per-task decode cost
-    # max(ends) is near-constant across folds instead of ramping with
-    # the band index, and slice-row duplication halves.  The groupBy
-    # shuffle lands each task's ≤chunk_z paths together.
-    files = listing.select("path", "channel", "stack")
-    w = W.partitionBy("channel", "stack").orderBy("path")
-    folds_df = spark.createDataFrame(
-        [
-            (c, s, f)
-            for (c, s), (nb, _) in plan.items()
-            for f in range((nb + 1) // 2)
-        ],
-        "channel string, stack string, fold int",
-    )
+    # listing → one row per remaining (slab, fold) group carrying its
+    # slice paths in z order; z is the path rank within the stack (the
+    # reference's sorted-glob semantics, `io/readers.py:145`), computed
+    # here on the driver.  Each slice path rides once per FOLD — fold f
+    # covers bands f and n_bands−1−f, so one decode of the slice's row
+    # span serves both bands (a PNG must inflate up to the higher
+    # band's end anyway; the lower band's rows come out of the same
+    # pass free), the per-task decode cost max(ends) is near-constant
+    # across folds instead of ramping with the band index, and
+    # slice-path duplication halves.  Completed (marker-present)
+    # groups of a resumed run are simply never shipped.
+    stack_paths: dict[tuple[str, str], list[str]] = {k: [] for k in plan}
+    for path, ch, st, _, _ in listing:
+        if (ch, st) in stack_paths:
+            stack_paths[(ch, st)].append(path)
+    group_rows = []
+    for c, st, slab, fold in remaining:
+        z0 = slab * cz_chunk
+        paths = stack_paths[(c, st)][z0 : z0 + cz_chunk]
+        group_rows.append((c, st, slab, fold, paths))
     # EXPLICIT numPartitions on the group key: the group rows are tiny
     # (paths), so AQE would coalesce the groupBy shuffle into ONE
     # partition — it sizes by bytes and cannot see that each row
@@ -718,11 +737,6 @@ def run_fused_ingest(
     # satisfies applyInPandas's required clustering, so the write stage
     # runs one task per hash bucket; 4× groups over-partitioning keeps
     # hash collisions from doubling a straggler's work.
-    n_groups = sum(
-        -(-g["z"] // cz_chunk)
-        * ((plan[(g["channel"], g["stack"])][0] + 1) // 2)
-        for g in geo
-    )
     # Cap the partition count: a petabyte acquisition can have 10⁶
     # (slab, band) groups, and 4× that in hash buckets is pure
     # scheduler overhead — past the cap, hash collisions just put a
@@ -730,26 +744,8 @@ def run_fused_ingest(
     # correctly.  The floor keeps small trees from under-filling.
     n_parts = max(
         2 * spark.sparkContext.defaultParallelism,
-        min(4 * n_groups, 32_768),
+        min(4 * len(all_keys), 32_768),
     )
-    slabs = (
-        files.withColumn("z", (F.row_number().over(w) - 1).cast("int"))
-        .withColumn("slab", (F.col("z") / cz_chunk).cast("int"))
-        .join(F.broadcast(folds_df), ["channel", "stack"])
-    )
-    if done:
-        # resume: drop the completed bands before the group shuffle —
-        # the skipped groups' slice paths never enter the write stage
-        done_df = spark.createDataFrame(
-            [(c, s, slab, fold) for (c, s, slab, fold) in done],
-            "channel string, stack string, slab int, fold int",
-        )
-        slabs = slabs.join(
-            F.broadcast(done_df),
-            ["channel", "stack", "slab", "fold"],
-            "left_anti",
-        )
-    slabs = slabs.repartition(n_parts, "channel", "stack", "slab", "fold")
 
     def _write_band(pdf):
         import pandas as pd
@@ -769,11 +765,11 @@ def run_fused_ingest(
         )
 
         _, compress = make_codec(compressor_name, compressor_kwargs)
-        pdf = pdf.sort_values("z")
         channel = pdf["channel"].iloc[0]
         stack = pdf["stack"].iloc[0]
         cz = int(pdf["slab"].iloc[0])
         fold = int(pdf["fold"].iloc[0])
+        paths = list(pdf["paths"].iloc[0])
         nb, per_band = plan[(channel, stack)]
         height, width, dtype_name = geom[(channel, stack)]
         exp_dtype = np.dtype(dtype_name)
@@ -841,11 +837,11 @@ def run_fused_ingest(
         # zero-filled AT POSITION (memset cost is noise next to the
         # decode+compress kernels this task runs)
         bufs = [
-            np.zeros((len(pdf), y1 - y0, width), dtype=exp_dtype)
+            np.zeros((len(paths), y1 - y0, width), dtype=exp_dtype)
             for (_, y0, y1) in wins
         ]
         dead: list[tuple[int, str]] = []
-        for i, (path, zz) in enumerate(zip(pdf["path"], pdf["z"])):
+        for i, path in enumerate(paths):
             try:
                 data = _open_bytes(path)
                 _check_header(path, data)
@@ -861,7 +857,7 @@ def run_fused_ingest(
                 if not quarantine:
                     raise
                 dead.append(
-                    (int(zz), f"{path}: {type(exc).__name__}: {exc}")
+                    (cz * cz_chunk + i, f"{path}: {type(exc).__name__}: {exc}")
                 )
                 continue  # band rows stay zero-filled
             for buf, p in zip(bufs, parts):
@@ -938,7 +934,13 @@ def run_fused_ingest(
     fresh_bytes = 0
     fresh_dead: list[dict[str, Any]] = []
     if remaining:  # a resumed run may have NOTHING left but the finalize
-        out = slabs.groupBy("channel", "stack", "slab", "fold").applyInPandas(
+        groups_df = _driver_frame(
+            spark,
+            group_rows,
+            "channel string, stack string, slab int, fold int, "
+            "paths array<string>",
+        ).repartition(n_parts, "channel", "stack", "slab", "fold")
+        out = groups_df.groupBy("channel", "stack", "slab", "fold").applyInPandas(
             _write_band,
             schema="channel string, stack string, n_chunks long, "
             "chunk_bytes long, dead_z long, dead_error string",

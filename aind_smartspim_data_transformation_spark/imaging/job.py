@@ -40,9 +40,8 @@ from aind_smartspim_data_transformation_spark.sources.acquisition import (
     get_voxel_resolution,
 )
 from aind_smartspim_data_transformation_spark.sources.stack_reader import (
+    list_stack_files,
     read_stack_tree,
-    scan_stack_files,
-    validate_extensions,
 )
 
 
@@ -74,8 +73,11 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
     # S9 flow, `smartspim_job.py:169-195`).
     out = settings.s3_location or str(settings.output_directory)
 
-    voxel_zyx = get_voxel_resolution(spark, f"{root}/acquisition.json")
-    validate_extensions(spark, f"{root}/SmartSPIM")
+    voxel_zyx = get_voxel_resolution(f"{root}/acquisition.json")
+    # ONE driver-side listing of the tree (raises on a non-image file,
+    # the reference's extension check) plans the partition split, the
+    # geometry probe, the resume digest and the fused band groups
+    listing = list_stack_files(f"{root}/SmartSPIM")
 
     # derivatives passthrough (reference S10: partition 0 uploads the
     # folder untouched; raises if missing)
@@ -92,13 +94,7 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
     # parallelism — so the filter only engages for num_of_partitions>1.
     mine: list | None = None
     if settings.num_of_partitions > 1:
-        all_stacks = sorted(
-            (r["channel"], r["stack"])
-            for r in scan_stack_files(spark, f"{root}/SmartSPIM")
-            .select("channel", "stack")
-            .distinct()
-            .collect()
-        )
+        all_stacks = sorted({(ch, st) for _, ch, st, _, _ in listing})
         mine = partition_stacks(all_stacks, settings.num_of_partitions)[
             settings.partition_to_process
         ]
@@ -118,7 +114,7 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
     # Giant planes take the chunk-table pipeline below, whose peak
     # per-group memory is chunk-sized.  Both write the same bytes.
     geo = fused.probe_stack_geometry(
-        spark, f"{root}/SmartSPIM", on_error=settings.on_error
+        spark, f"{root}/SmartSPIM", on_error=settings.on_error, listing=listing
     )
     task_bytes = fused.fused_task_bytes(
         geo, list(settings.chunk_size), spark.sparkContext.defaultParallelism
@@ -137,6 +133,7 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
             stack_filter=mine,
             geo=geo,
             on_error=settings.on_error,
+            listing=listing,
         )
         return {
             "status_code": 200,

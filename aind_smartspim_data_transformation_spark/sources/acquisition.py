@@ -2,10 +2,9 @@
 
 The reference reads the file into an untyped dict and picks
 ``tiles[0].coordinate_transformations[type=="scale"].scale``
-(`smartspim_job.py:65-90`); here the same extraction is a declared
-``StructType`` + ``explode``/``filter`` DataFrame expression —
-schema-on-read with an explicit schema, so Catalyst prunes everything
-except the two leaves actually consumed.
+(`smartspim_job.py:65-90`); here the same extraction runs on the
+driver with ``json``.  The file is a few KB of job metadata, so a
+Spark JSON read would only add two jobs before the ingest starts.
 
 Golden (reference fixture): scale [1.8, 1.8, 2.0] (XYZ) → voxel
 resolution [2.0, 1.8, 1.8] (ZYX).
@@ -13,69 +12,21 @@ resolution [2.0, 1.8, 1.8] (ZYX).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-ACQUISITION_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "tiles",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField(
-                            "channel",
-                            T.StructType(
-                                [
-                                    T.StructField("channel_name", T.StringType()),
-                                    T.StructField("laser_wavelength", T.IntegerType()),
-                                ]
-                            ),
-                        ),
-                        T.StructField(
-                            "coordinate_transformations",
-                            T.ArrayType(
-                                T.StructType(
-                                    [
-                                        T.StructField("type", T.StringType()),
-                                        T.StructField("scale", T.ArrayType(T.DoubleType())),
-                                        T.StructField(
-                                            "translation", T.ArrayType(T.DoubleType())
-                                        ),
-                                    ]
-                                )
-                            ),
-                        ),
-                        T.StructField("file_name", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
+import json
+import os
 
 
-def read_acquisition(spark: SparkSession, path: str):
-    """Load acquisition.json with the declared schema (multiLine JSON)."""
-    import os
-
+def get_voxel_resolution(path: str) -> list[float]:
+    """ZYX voxel size from the first tile's scale transform."""
     if not os.path.isfile(path):
         # same contract as the reference (`smartspim_job.py:69-72`)
         raise FileNotFoundError(f"acquisition.json file not found at: {path}")
-    return spark.read.schema(ACQUISITION_SCHEMA).option("multiLine", "true").json(path)
-
-
-def get_voxel_resolution(spark: SparkSession, path: str) -> list[float]:
-    """ZYX voxel size from the first tile's scale transform."""
-    df = read_acquisition(spark, path)
-    row = (
-        df.select(F.explode(F.col("tiles")).alias("tile"))
-        .limit(1)
-        .select(F.explode("tile.coordinate_transformations").alias("ct"))
-        .filter(F.col("ct.type") == "scale")
-        .select("ct.scale")
-        .first()
+    with open(path) as f:
+        tile = json.load(f)["tiles"][0]
+    scale = next(
+        ct["scale"]
+        for ct in tile["coordinate_transformations"]
+        if ct.get("type") == "scale"
     )
-    x, y, z = (float(v) for v in row["scale"][:3])
+    x, y, z = (float(v) for v in scale[:3])
     return [z, y, x]

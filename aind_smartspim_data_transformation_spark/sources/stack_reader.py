@@ -3,17 +3,20 @@
 Re-expresses the reference's imaging ingest (SURVEY.md §2.1 S1-S4):
 
 - S1 directory-tree stack scan (`smartspim_job.py:43-63` walks
-  ``SmartSPIM/<channel>/<col>/<col>_<row>/``) → a ``binaryFile``
-  DataFrame scan with ``recursiveFileLookup`` + ``regexp_extract`` path
-  parsing.  Spark's file listing is deterministic, which replaces the
-  reference's explicit ``sort(key=str)`` (`smartspim_job.py:59-60`).
+  ``SmartSPIM/<channel>/<col>/<col>_<row>/``) → :func:`list_stack_files`,
+  one driver-side recursive listing sorted by path (the reference's
+  ``sort(key=str)``, `smartspim_job.py:59-60`) that plans the fused
+  ingest; the chunk-table pipeline reads the same rows through the
+  ``binaryFile`` scan :func:`scan_stack_files` (``regexp_extract``
+  path columns).
 - S2/S3 lazy PNG/TIFF stack reader (`io/readers.py:129-145`, one dask
   chunk per slice; `compress/png_to_zarr.py:459-500` TIFF path) →
   one ``mapInPandas`` kernel that decodes each slice and cuts it into
   tile rows, format picked by magic bytes per file.
 - S4 header probe (`io/readers.py:147-174`) → ``probe_png_header`` over
   the first KB of content, no decompression.
-- P1 extension whitelist (`smartspim_job.py:145-150`).
+- P1 extension whitelist (`smartspim_job.py:145-150`), enforced by
+  :func:`list_stack_files`.
 
 The **chunk table** is the relational encoding of the 5-D canonical
 tensor (SURVEY.md §1.4): one row per chunk with coordinates
@@ -22,8 +25,10 @@ the reference's pad-to-5D P4/P5), dtype, and C-order little-endian
 bytes.  All downstream imaging operators (pyramid, zarr sink) are
 DataFrame transformations over this table.
 
-Scale posture: the scan lists files once on the driver (cheap:
-metadata-only), decode is Arrow-batched Python with ~6.4 MB rows, and
+Scale posture: the fused ingest plans from ONE listing held on the
+driver as path-sorted tuples (metadata only, ~10⁶ rows at acquisition
+scale); the chunk-table scan lists the tree again through Spark's file
+index.  Decode is Arrow-batched Python with ~6.4 MB rows, and
 slice→chunk assembly is ONE shuffle keyed by (channel, stack, cz) —
 the only Exchange in the whole ingest that carries pixel data.  The
 z-rank window shuffles a content-pruned (path, channel, stack)
@@ -35,6 +40,8 @@ never crosses stacks.
 
 from __future__ import annotations
 
+import os
+import re
 from collections.abc import Iterator
 
 import numpy as np
@@ -125,19 +132,63 @@ def scan_stack_files(spark: SparkSession, root: str) -> DataFrame:
     )
 
 
-def validate_extensions(spark: SparkSession, root: str) -> None:
-    """Reference raises on non-png/tiff files inside a stack
-    (`smartspim_job.py:145-150`); same contract, one metadata-only scan."""
-    df = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select(F.lower(F.regexp_extract("path", r"\.([A-Za-z]+)$", 1)).alias("ext"))
-        .filter(~F.col("ext").isin("json"))  # metadata files ride along
-    )
-    bad = df.filter(~F.col("ext").isin(*ALLOWED_EXTENSIONS)).limit(1).collect()
-    if bad:
-        raise ValueError(f"unsupported image extension: .{bad[0]['ext']}")
+_EXT_RE = re.compile(r"\.([A-Za-z]+)$")
+_CHANNEL_RE = re.compile(r"SmartSPIM/([^/]+)/")
+_STACK_RE = re.compile(r"/([^/]+)/[^/]+\.[A-Za-z]+$")
+
+
+def list_stack_files(root: str) -> list[tuple[str, str, str, int, int]]:
+    """One recursive listing of a SmartSPIM tree on the driver:
+    ``(path, channel, stack, length, mtime_ms)`` rows sorted by path.
+
+    Same rows as :func:`scan_stack_files` (parity-tested): Spark's
+    hidden-path rule (any path component below the root starting with
+    ``.`` or ``_``), the ``ALLOWED_EXTENSIONS`` whitelist
+    (case-insensitive), the ``SmartSPIM/<channel>/…/<stack>/<file>``
+    parse with empty-channel rows dropped, and paths in Spark's
+    ``file:/…`` form, so resume digests and progress markers match
+    those a ``binaryFile`` listing produced.  Lists through
+    ``zarr_sink._fs_for``, the filesystem layer the fused band tasks
+    read slices with.  Raises like the reference on any file that is
+    neither an image nor ``.json`` (`smartspim_job.py:145-150`)."""
+    from pyarrow import fs as pafs
+
+    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import _fs_for
+
+    if "://" not in root:
+        root = os.path.abspath(root)
+    fs, base = _fs_for(root)
+    base = base.rstrip("/")
+    # Spark's path form: ``file:/abs/path`` locally, the URI elsewhere
+    local = isinstance(fs, pafs.LocalFileSystem)
+    prefix = f"file:{base}" if local else root.rstrip("/")
+    rows = []
+    for info in fs.get_file_info(pafs.FileSelector(base, recursive=True)):
+        rel = info.path[len(base) + 1 :]
+        hidden = any(part.startswith((".", "_")) for part in rel.split("/"))
+        if info.type != pafs.FileType.File or hidden:
+            continue
+        m = _EXT_RE.search(rel)
+        ext = m.group(1).lower() if m else ""
+        if ext not in ALLOWED_EXTENSIONS:
+            if ext != "json":  # metadata files ride along
+                raise ValueError(f"unsupported image extension: .{ext}")
+            continue
+        path = f"{prefix}/{rel}"
+        channel = _CHANNEL_RE.search(path)
+        if channel is None:
+            continue
+        rows.append(
+            (
+                path,
+                channel.group(1),
+                _STACK_RE.search(path).group(1),
+                info.size,
+                info.mtime_ns // 1_000_000,
+            )
+        )
+    rows.sort()
+    return rows
 
 
 def _z_indexed(files: DataFrame) -> DataFrame:

@@ -32,7 +32,7 @@ Scale posture: decode is the same Arrow-batched narrow map as batch
 ingest; the one shuffle is the repartition that puts each stack's wave
 in one write task, and the only stream state is the file-source's
 processed-file log.  1000 executors drain a burst of arriving slices at
-list-throughput, and `maxFilesPerTrigger` is the backpressure knob.
+list-throughput.
 """
 
 from __future__ import annotations
@@ -59,23 +59,19 @@ STREAM_SLICE_SCHEMA = (
 )
 
 
-def stream_stack_files(
-    spark: SparkSession, root: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def stream_stack_files(spark: SparkSession, root: str) -> DataFrame:
     """Streaming twin of ``scan_stack_files``: same path-derived columns,
     plus the batch-independent ``slice_key`` (numeric filename stem)."""
     from aind_smartspim_data_transformation_spark.session import imaging_session
 
-    reader = (
+    df = (
         imaging_session(spark)  # megabyte-row Arrow batches, own SQLConf
         .readStream.format("binaryFile")
         .schema(BINARY_FILE_SCHEMA)
         .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.{png,tif,tiff}")
+        .load(root)
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = reader.load(root)
     channel = F.regexp_extract("path", r"SmartSPIM/([^/]+)/", 1)
     stack = F.regexp_extract("path", r"/([^/]+)/[^/]+\.[A-Za-z]+$", 1)
     slice_key = F.regexp_extract("path", r"/(\d+)\.[A-Za-z]+$", 1).cast("long")

@@ -24,9 +24,9 @@ from aind_smartspim_data_transformation_spark.sources.acquisition import (
 )
 from aind_smartspim_data_transformation_spark.sources.stack_reader import (
     decode_slices_to_tiles,
+    list_stack_files,
     read_stack_tree,
     scan_stack_files,
-    validate_extensions,
 )
 from tests.imaging_fixtures import make_dataset
 
@@ -104,22 +104,68 @@ def test_stack_shape_golden(spark, dataset):
     assert np.array_equal(vol, arrays["Ex_445_Em_469/432380_504340"])
 
 
-def test_validate_extensions_rejects_unknown(spark, tmp_path):
+def test_unknown_extension_rejected_by_listing_and_job(spark, tmp_path):
+    """The reference's extension check (`smartspim_job.py:145-150`) now
+    lives in the one listing: both the listing and the job refuse."""
+    from aind_smartspim_data_transformation_spark.config.settings import (
+        ImagingJobSettings,
+    )
+    from aind_smartspim_data_transformation_spark.imaging.job import run_imaging_job
+
+    make_dataset(tmp_path, height=16, width=20)
     d = tmp_path / "SmartSPIM" / "Ex_445_Em_469" / "c" / "c_r"
     d.mkdir(parents=True)
     (d / "000000.bmp").write_bytes(b"xx")
     with pytest.raises(ValueError, match="unsupported image extension"):
-        validate_extensions(spark, str(tmp_path / "SmartSPIM"))
+        list_stack_files(str(tmp_path / "SmartSPIM"))
+    settings = ImagingJobSettings(
+        input_source=str(tmp_path), output_directory=str(tmp_path / "out")
+    )
+    with pytest.raises(ValueError, match="unsupported image extension"):
+        run_imaging_job(spark, settings)
 
 
-def test_voxel_resolution_golden(spark, dataset):
+def test_list_stack_files_matches_binaryfile_scan(spark, tmp_path):
+    """The driver listing that plans the fused ingest and the
+    ``binaryFile`` scan the chunk-table pipeline reads must agree row
+    for row: hidden files and directories, metadata JSON, an
+    upper-case extension and a channel-less file included."""
+    import os
+
+    root = tmp_path / "SmartSPIM"
+    make_dataset(tmp_path, height=16, width=20)
+    stack = root / "Ex_445_Em_469" / "432380" / "432380_504340"
+    (stack / "000040.TIF").write_bytes(b"II*\x00upper")
+    (stack / ".DS_Store").write_bytes(b"finder")
+    (stack / "_SUCCESS").write_bytes(b"")
+    hidden = stack / ".hidden"
+    hidden.mkdir()
+    (hidden / "000060.png").write_bytes(b"not listed")
+    (root / "acquisition.json").write_text("{}")
+    (root / "000000.png").write_bytes(b"no channel")
+    os.utime(stack / "000000.png", ns=(0, 1_700_000_000_123_456_789))
+
+    rows = list_stack_files(str(root))
+    scanned = (
+        scan_stack_files(spark, str(root))
+        .select("path", "channel", "stack", "length", "mtime")
+        .collect()
+    )
+    assert sorted(tuple(r) for r in scanned) == rows
+    assert len(rows) == 2 * 2 * 2 * 2 + 1  # the fixture + the .TIF
+    assert [r[0] for r in rows] == sorted(r[0] for r in rows)
+    assert any(r[0].endswith("000040.TIF") for r in rows)
+    assert all(r[0].startswith("file:/") and r[1] for r in rows)
+
+
+def test_voxel_resolution_golden(dataset):
     root, _ = dataset
-    assert get_voxel_resolution(spark, str(root / "acquisition.json")) == [2.0, 1.8, 1.8]
+    assert get_voxel_resolution(str(root / "acquisition.json")) == [2.0, 1.8, 1.8]
 
 
-def test_voxel_resolution_missing_file(spark, tmp_path):
+def test_voxel_resolution_missing_file(tmp_path):
     with pytest.raises(FileNotFoundError):
-        get_voxel_resolution(spark, str(tmp_path / "acquisition.json"))
+        get_voxel_resolution(str(tmp_path / "acquisition.json"))
 
 
 def test_wavelength_goldens():
