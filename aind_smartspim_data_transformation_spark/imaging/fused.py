@@ -7,9 +7,12 @@ cost is ~95% data plane: the pixel volume crosses Python→JVM as Arrow
 tile rows, through a full-volume assembly shuffle, back to Python for
 the pyramid, and again for each level's write — 1713 executor core-s
 for a 1.6 GB job whose numpy kernels need 83.  This path removes every
-one of those crossings: pixel bytes never enter the JVM.  Spark moves
-only PATH rows (one driver-planned row per band group, carrying its
-slice paths) and one summary row back per task.
+one of those crossings: pixel bytes never enter the JVM.  The driver
+plans every band group as one plain tuple carrying its slice paths,
+and the ingest is two plain Python RDD jobs over such tuples — the
+geometry probe and the band stage (``parallelize(groups).map``, one
+task per group) — with no DataFrame, Arrow, pandas or shuffle between
+the plan and the tasks; each task sends back one summary tuple.
 
 Why a task can compute the WHOLE pyramid locally: the store's chunk
 GRID is preserved across levels (chunk dims shrink by the factor, so
@@ -85,6 +88,11 @@ FUSED_MAX_TASK_BYTES = 256 << 20
 # saved metrics.  Deleted after the metadata-last finalize — a COMPLETE
 # store never carries progress droppings.
 _PROGRESS_DIRNAME = ".fused_progress"
+
+# The band-task phases timed into ``metrics["phase_sec"]``: slice
+# reads; header gate + decode + window checks + band-buffer copy;
+# windowed means; pad + compress; directory, chunk and marker writes.
+PHASES = ("read", "decode", "pyramid", "compress", "write")
 
 
 def _marker_name(channel: str, stack: str, slab: int, fold: int) -> str:
@@ -263,17 +271,6 @@ def _open_bytes(path: str, n: int | None = None) -> bytes:
         return f.read() if n is None else f.read(n)
 
 
-def _driver_frame(spark: SparkSession, rows: list[tuple], schema: str):
-    """DataFrame over driver-built planning rows, on the imaging session,
-    in ``min(rows, defaultParallelism)`` partitions — no empty tasks and
-    no file scan."""
-    from aind_smartspim_data_transformation_spark.session import imaging_session
-
-    sc = spark.sparkContext
-    n = max(1, min(len(rows), sc.defaultParallelism))
-    return imaging_session(spark).createDataFrame(sc.parallelize(rows, n), schema)
-
-
 def probe_stack_geometry(
     spark: SparkSession,
     root: str,
@@ -284,11 +281,12 @@ def probe_stack_geometry(
     z from the listing count (no content read), y/x/dtype from decoding
     each stack's FIRST slice.  ``listing`` is :func:`list_stack_files`
     of ``root`` (listed here when omitted); the driver groups it into
-    one row per stack with its candidate paths, and the header reads
-    run DISTRIBUTED (mapInPandas over those rows): at acquisition scale
-    (10⁴ stacks) a driver-side loop of small reads + decodes is minutes
-    of serial latency before any work starts; here it is one tiny
-    Spark stage.
+    one tuple per stack with its candidate paths, and the header reads
+    run DISTRIBUTED (one plain RDD job over those tuples, in
+    ``min(stacks, defaultParallelism)`` partitions): at acquisition
+    scale (10⁴ stacks) a driver-side loop of small reads + decodes is
+    minutes of serial latency before any work starts; here it is one
+    tiny Spark stage.
 
     With ``on_error="quarantine"`` the probe tries each stack's first
     EIGHT slices in path order and uses the first that probes cleanly —
@@ -311,15 +309,9 @@ def probe_stack_geometry(
         n = counts[(ch, st)] = counts.get((ch, st), 0) + 1
         if n <= n_cand:
             cands.setdefault((ch, st), []).append(path)
-    firsts = _driver_frame(
-        spark,
-        [(ch, st, counts[(ch, st)], cands[(ch, st)]) for ch, st in sorted(counts)],
-        "channel string, stack string, n_slices long, probe_paths array<string>",
-    )
+    rows = [(ch, st, counts[(ch, st)], cands[(ch, st)]) for ch, st in sorted(counts)]
 
-    def _probe(batches):
-        import pandas as pd
-
+    def _probe(part):
         from aind_smartspim_data_transformation_spark.sources.png_codec import (
             probe_png_header,
         )
@@ -328,70 +320,53 @@ def probe_stack_geometry(
             probe_image_header,
         )
 
-        for pdf in batches:
-            ys, xs, dts = [], [], []
-            for paths, ch, st in zip(
-                pdf["probe_paths"], pdf["channel"], pdf["stack"]
-            ):
-                got = None
-                err: Exception | None = None
-                for p in paths:
-                    try:
-                        # ranged read: a PNG header probe needs 29
-                        # bytes, not the whole multi-MB slice — at 10⁴
-                        # stacks the probe stage reads KBs instead of
-                        # the first-slice GBs
-                        head = _open_bytes(p, 64)
-                        if head[:8] == _PNG_SIG:
-                            got = probe_png_header(head)
-                        else:
-                            # TIFF IFDs sit at an arbitrary offset
-                            # (often the tail), so fall back to the
-                            # full read — the probe still skips pixel
-                            # decompression entirely
-                            got = probe_image_header(_open_bytes(p))
-                        break
-                    except Exception as exc:  # noqa: BLE001
-                        if not quarantine:
-                            raise
-                        err = exc
-                if got is None:
-                    raise RuntimeError(
-                        f"geometry probe failed for stack {ch}/{st}: "
-                        f"none of the first {len(paths)} slices probed "
-                        f"cleanly (last error: {err})"
-                    ) from err
-                w, h, bits = got
-                ys.append(h)
-                xs.append(w)
-                dts.append("uint16" if bits == 16 else "uint8")
-            yield pd.DataFrame(
-                {
-                    "channel": pdf["channel"],
-                    "stack": pdf["stack"],
-                    "z": pdf["n_slices"],
-                    "y": ys,
-                    "x": xs,
-                    "dtype": dts,
-                }
-            )
+        for ch, st, n_slices, paths in part:
+            got = None
+            err: Exception | None = None
+            for p in paths:
+                try:
+                    # ranged read: a PNG header probe needs 29 bytes,
+                    # not the whole multi-MB slice — at 10⁴ stacks the
+                    # probe stage reads KBs instead of the first-slice
+                    # GBs
+                    head = _open_bytes(p, 64)
+                    if head[:8] == _PNG_SIG:
+                        got = probe_png_header(head)
+                    else:
+                        # TIFF IFDs sit at an arbitrary offset (often
+                        # the tail), so fall back to the full read —
+                        # the probe still skips pixel decompression
+                        # entirely
+                        got = probe_image_header(_open_bytes(p))
+                    break
+                except Exception as exc:  # noqa: BLE001
+                    if not quarantine:
+                        raise
+                    err = exc
+            if got is None:
+                raise RuntimeError(
+                    f"geometry probe failed for stack {ch}/{st}: "
+                    f"none of the first {len(paths)} slices probed "
+                    f"cleanly (last error: {err})"
+                ) from err
+            w, h, bits = got
+            yield {
+                "channel": ch,
+                "stack": st,
+                "z": n_slices,
+                "y": h,
+                "x": w,
+                "dtype": "uint16" if bits == 16 else "uint8",
+            }
 
-    rows = firsts.mapInPandas(
-        _probe,
-        schema="channel string, stack string, z long, y long, x long, "
-        "dtype string",
-    ).collect()
-    return [
-        {
-            "channel": r["channel"],
-            "stack": r["stack"],
-            "z": int(r["z"]),
-            "y": int(r["y"]),
-            "x": int(r["x"]),
-            "dtype": r["dtype"],
-        }
-        for r in sorted(rows, key=lambda r: (r["channel"], r["stack"]))
-    ]
+    sc = spark.sparkContext
+    # collect() keeps partition order, so the result stays sorted by
+    # (channel, stack) like ``rows``
+    return (
+        sc.parallelize(rows, max(1, min(len(rows), sc.defaultParallelism)))
+        .mapPartitions(_probe)
+        .collect()
+    )
 
 
 def _band_plan(
@@ -577,16 +552,27 @@ def run_fused_ingest(
 ) -> tuple[list[str], dict[str, Any]]:
     """Write every stack's full multiscale store via fused band tasks.
 
+    The band stage is one plain Python RDD job: the driver-built group
+    tuples go to ``min(groups, 32768)`` partitions (one task per group
+    up to the cap), each task returns one summary tuple, and the driver
+    sums and dedups them.
+
     Returns (sorted group paths, {"n_chunks": level-0 chunks written,
-    "chunk_bytes": raw level-0 bytes}) — the same metrics contract as
-    the chunk-table job's Observation.  With ``on_error="quarantine"``
-    the metrics dict also carries ``"dead_letters"``: one
-    {channel, stack, z, error} dict per corrupt slice (deduped across
-    the folds that each decode it), and the store holds ZERO planes at
-    the quarantined z positions — byte-identical to the UDF quarantine
-    pipeline's store (asserted in tests/test_quarantine.py).  The list
-    is driver-side because dead letters are rare by construction; an
-    operator at 100 TB persists it to the triage table of their choice.
+    "chunk_bytes": raw level-0 bytes, "phase_sec": ...}) — n_chunks and
+    chunk_bytes are the chunk-table job's Observation contract;
+    ``phase_sec`` maps each of :data:`PHASES` (read, decode, pyramid,
+    compress, write) to the band tasks' seconds, summed over the bands
+    THIS run wrote (resumed bands add nothing).  With
+    ``on_error="quarantine"`` the metrics dict also carries
+    ``"dead_letters"``: one {channel, stack, z, error} dict per corrupt
+    slice, sorted by (channel, stack, z) — a slice decoded by several
+    folds (or also saved in a resumed band's marker) keeps its smallest
+    error string, so reruns report identical rows — and the store holds
+    ZERO planes at the quarantined z positions, byte-identical to the
+    UDF quarantine pipeline's store (asserted in
+    tests/test_quarantine.py).  The list is driver-side because dead
+    letters are rare by construction; an operator at 100 TB persists it
+    to the triage table of their choice.
 
     Mid-job restartability: each completed band group writes an atomic
     completion marker (chunk writes first, then the marker via
@@ -640,7 +626,11 @@ def run_fused_ingest(
         keep = set(stack_filter)
         geo = [g for g in geo if (g["channel"], g["stack"]) in keep]
     if not geo:
-        return [], {"n_chunks": 0, "chunk_bytes": 0}
+        return [], {
+            "n_chunks": 0,
+            "chunk_bytes": 0,
+            "phase_sec": dict.fromkeys(PHASES, 0.0),
+        }
     meta_rows = [
         {
             **g,
@@ -728,27 +718,9 @@ def run_fused_ingest(
         z0 = slab * cz_chunk
         paths = stack_paths[(c, st)][z0 : z0 + cz_chunk]
         group_rows.append((c, st, slab, fold, paths))
-    # EXPLICIT numPartitions on the group key: the group rows are tiny
-    # (paths), so AQE would coalesce the groupBy shuffle into ONE
-    # partition — it sizes by bytes and cannot see that each row
-    # explodes into seconds of decode+compress work (measured: the
-    # whole 1.6 GB job serialized into a single 142 core-s task).  An
-    # explicit repartition count is exempt from AQE coalescing and
-    # satisfies applyInPandas's required clustering, so the write stage
-    # runs one task per hash bucket; 4× groups over-partitioning keeps
-    # hash collisions from doubling a straggler's work.
-    # Cap the partition count: a petabyte acquisition can have 10⁶
-    # (slab, band) groups, and 4× that in hash buckets is pure
-    # scheduler overhead — past the cap, hash collisions just put a
-    # few groups per task, which applyInPandas handles serially and
-    # correctly.  The floor keeps small trees from under-filling.
-    n_parts = max(
-        2 * spark.sparkContext.defaultParallelism,
-        min(4 * len(all_keys), 32_768),
-    )
 
-    def _write_band(pdf):
-        import pandas as pd
+    def _write_band(row):
+        import time
 
         from aind_smartspim_data_transformation_spark.imaging.pyramid import (
             windowed_mean,
@@ -765,11 +737,7 @@ def run_fused_ingest(
         )
 
         _, compress = make_codec(compressor_name, compressor_kwargs)
-        channel = pdf["channel"].iloc[0]
-        stack = pdf["stack"].iloc[0]
-        cz = int(pdf["slab"].iloc[0])
-        fold = int(pdf["fold"].iloc[0])
-        paths = list(pdf["paths"].iloc[0])
+        channel, stack, cz, fold, paths = row
         nb, per_band = plan[(channel, stack)]
         height, width, dtype_name = geom[(channel, stack)]
         exp_dtype = np.dtype(dtype_name)
@@ -833,6 +801,10 @@ def run_fused_ingest(
                 for (_, y0, y1) in wins
             ]
 
+        # decode time is the slice loop less its reads: header gate,
+        # decode, window checks and the copy into the band buffers
+        t_loop = time.perf_counter()
+        read_s = 0.0
         # zeros, not empty: a quarantined slice's rows must come out
         # zero-filled AT POSITION (memset cost is noise next to the
         # decode+compress kernels this task runs)
@@ -843,7 +815,9 @@ def run_fused_ingest(
         dead: list[tuple[int, str]] = []
         for i, path in enumerate(paths):
             try:
+                t0 = time.perf_counter()
                 data = _open_bytes(path)
+                read_s += time.perf_counter() - t0
                 _check_header(path, data)
                 parts = _decode_bands(data)
                 for p, (_, y0, y1) in zip(parts, wins):
@@ -862,6 +836,8 @@ def run_fused_ingest(
                 continue  # band rows stay zero-filled
             for buf, p in zip(bufs, parts):
                 buf[i] = p
+        decode_s = time.perf_counter() - t_loop - read_s
+        pyramid_s = 0.0
         fs, base = _fs_for(output_root)
         cw = ChunkWriter(fs, compress)
         group = stack_group(base, channel, stack)
@@ -888,13 +864,16 @@ def run_fused_ingest(
                             # downsample the UNPADDED data: zero
                             # padding before the mean would corrupt
                             # edge windows
+                            t0 = time.perf_counter()
                             arr = windowed_mean(arr, factors)
+                            pyramid_s += time.perf_counter() - t0
         # completion marker LAST (all chunks durable), via temp + rename
         # so a kill mid-write can never leave a parsing half-marker; a
         # speculative duplicate attempt rewrites identical content.
         import json as _json
         import uuid as _uuid
 
+        t0 = time.perf_counter()
         pdir = f"{base}/{_PROGRESS_DIRNAME}"
         fs.create_dir(pdir, recursive=True)
         tmp = f"{pdir}/.tmp-{_uuid.uuid4().hex}"
@@ -916,95 +895,54 @@ def run_fused_ingest(
         # whose destination exists counts as a sibling attempt's
         # byte-equivalent publish (see _publish_marker)
         _publish_marker(fs, tmp, dest)
-        rows = [(channel, stack, n_chunks, raw_bytes, None, None)]
-        rows += [(channel, stack, 0, 0, z, err) for z, err in dead]
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "channel",
-                "stack",
-                "n_chunks",
-                "chunk_bytes",
-                "dead_z",
-                "dead_error",
-            ],
+        write_s = cw.write_s + time.perf_counter() - t0
+        return (
+            n_chunks,
+            raw_bytes,
+            [(channel, stack, z, err) for z, err in dead],
+            (read_s, decode_s, pyramid_s, cw.compress_s, write_s),
         )
 
-    fresh_chunks = 0
-    fresh_bytes = 0
-    fresh_dead: list[dict[str, Any]] = []
-    if remaining:  # a resumed run may have NOTHING left but the finalize
-        groups_df = _driver_frame(
-            spark,
-            group_rows,
-            "channel string, stack string, slab int, fold int, "
-            "paths array<string>",
-        ).repartition(n_parts, "channel", "stack", "slab", "fold")
-        out = groups_df.groupBy("channel", "stack", "slab", "fold").applyInPandas(
-            _write_band,
-            schema="channel string, stack string, n_chunks long, "
-            "chunk_bytes long, dead_z long, dead_error string",
-        )
-        agg_cols = [
-            F.sum("n_chunks").alias("n_chunks"),
-            F.sum("chunk_bytes").alias("chunk_bytes"),
-        ]
-        if quarantine:
-            # the summary frame is tiny (one row per task + one per dead
-            # letter) — persist so the expensive write stage runs ONCE
-            # for both the totals and the dead-letter pull
-            out = out.persist()
-            summaries = out.agg(*agg_cols).first()
-            # a corrupt slice is decoded by EVERY fold of its slab —
-            # dedup to one triage row per (stack, z)
-            dead_rows = (
-                out.filter(F.col("dead_error").isNotNull())
-                .select(
-                    "channel",
-                    "stack",
-                    F.col("dead_z").alias("z"),
-                    F.col("dead_error").alias("error"),
-                )
-                .dropDuplicates(["channel", "stack", "z"])
-                .collect()
+    # one task per group (at most 32,768 tasks): the plan is already
+    # balanced, so no shuffle or grouping sits between it and the bands
+    fresh = []
+    if group_rows:  # a resumed run may have NOTHING left but the finalize
+        fresh = (
+            spark.sparkContext.parallelize(
+                group_rows, min(len(group_rows), 32_768)
             )
-            out.unpersist()
-            fresh_dead = [
-                {
-                    "channel": r["channel"],
-                    "stack": r["stack"],
-                    "z": int(r["z"]),
-                    "error": r["error"],
-                }
-                for r in dead_rows
-            ]
-        else:
-            summaries = out.agg(*agg_cols).first()
-        fresh_chunks = int(summaries["n_chunks"])
-        fresh_bytes = int(summaries["chunk_bytes"])
-    metrics: dict[str, Any] = {}
-    if quarantine:
-        # merge dead letters from the skipped (marker-saved) bands —
-        # their corrupt slices were quarantined in the earlier run and
-        # must still reach the triage list of the resumed run
-        seen = {}
-        for d in fresh_dead:
-            seen[(d["channel"], d["stack"], d["z"])] = d
-        for (c, s, _slab, _fold), m in done.items():
-            for z, err in m.get("dead", []):
-                seen.setdefault(
-                    (c, s, int(z)),
-                    {"channel": c, "stack": s, "z": int(z), "error": err},
-                )
-        metrics["dead_letters"] = sorted(
-            seen.values(), key=lambda d: (d["channel"], d["stack"], d["z"])
+            .map(_write_band)
+            .collect()
         )
-    metrics["n_chunks"] = fresh_chunks + sum(
-        int(m["n_chunks"]) for m in done.values()
-    )
-    metrics["chunk_bytes"] = fresh_bytes + sum(
-        int(m["chunk_bytes"]) for m in done.values()
-    )
+    metrics: dict[str, Any] = {
+        "n_chunks": sum(r[0] for r in fresh)
+        + sum(int(m["n_chunks"]) for m in done.values()),
+        "chunk_bytes": sum(r[1] for r in fresh)
+        + sum(int(m["chunk_bytes"]) for m in done.values()),
+        # summed over the bands this run wrote; resumed bands add nothing
+        "phase_sec": {
+            name: sum((r[3][i] for r in fresh), 0.0)
+            for i, name in enumerate(PHASES)
+        },
+    }
+    if quarantine:
+        # a corrupt slice is decoded by EVERY fold of its slab, and a
+        # resumed run also brings the skipped bands' saved dead letters
+        # (their slices were quarantined in the earlier run): keep one
+        # triage row per (stack, z), the smallest error string
+        dead = {d for r in fresh for d in r[2]}
+        dead |= {
+            (c, s, int(z), err)
+            for (c, s, _slab, _fold), m in done.items()
+            for z, err in m.get("dead", [])
+        }
+        first: dict[tuple[str, str, int], str] = {}
+        for c, s, z, err in sorted(dead):
+            first.setdefault((c, s, z), err)
+        metrics["dead_letters"] = [
+            {"channel": c, "stack": s, "z": z, "error": err}
+            for (c, s, z), err in first.items()
+        ]
     # every band task succeeded — NOW the stores may parse as complete
     _write_all_metadata(
         meta_rows,

@@ -59,12 +59,14 @@ def partition_stacks(stacks: list, n_partitions: int) -> list[list]:
 
 def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
     """Run the whole ingest; returns status_code, message, the written
-    stack groups, the ingest metrics, and ``route`` — the ingest path
+    stack groups, the ingest metrics, ``route`` — the ingest path
     taken: ``"fused"`` (band tasks, when ``fused_task_bytes`` fits
     ``FUSED_MAX_TASK_BYTES``), ``"udf"`` (the chunk-table pipeline over
     the ``binaryFile`` + pandas-UDF scan, otherwise), or None when this
-    partition owns no stacks.  The route never changes the stored
-    bytes."""
+    partition owns no stacks — and ``phase_sec``: the fused band tasks'
+    read/decode/pyramid/compress/write seconds summed over the bands
+    this run wrote (None off the fused route).  The route never changes
+    the stored bytes."""
     start = time.time()
     root = str(settings.input_source)
     # With s3_location set, executors write STRAIGHT to the object
@@ -105,6 +107,7 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
                 "written": [],
                 "metrics": {},
                 "route": None,
+                "phase_sec": None,
             }
 
     # Route by the memory envelope alone.  Fused zero-shuffle band
@@ -135,6 +138,7 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
             on_error=settings.on_error,
             listing=listing,
         )
+        phase_sec = metrics.pop("phase_sec")
         return {
             "status_code": 200,
             "message": (
@@ -144,6 +148,7 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
             "written": written,
             "metrics": metrics,
             "route": "fused",
+            "phase_sec": phase_sec,
         }
 
     cz, cy, cx = settings.chunk_size
@@ -201,6 +206,7 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
         "written": written,
         "metrics": obs.get,
         "route": "udf",
+        "phase_sec": None,
     }
 
 

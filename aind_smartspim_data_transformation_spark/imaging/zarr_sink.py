@@ -43,6 +43,7 @@ from __future__ import annotations
 import json
 import os
 import threading
+import time
 import zlib
 from typing import Any
 
@@ -148,6 +149,10 @@ class ChunkWriter:
         self.fs = fs
         self.compress = compress
         self._made: set[str] = set()
+        # seconds spent padding + compressing, and creating directories
+        # + writing files, for the caller's phase accounting
+        self.compress_s = 0.0
+        self.write_s = 0.0
 
     def make_parent(self, key: str) -> None:
         parent = key.rsplit("/", 1)[0]
@@ -156,12 +161,16 @@ class ChunkWriter:
             self._made.add(parent)
 
     def write(self, key: str, block: np.ndarray, dims) -> None:
-        self.make_parent(key)
+        t0 = time.perf_counter()
         payload = self.compress(
             np.ascontiguousarray(pad_block(block, dims)).tobytes()
         )
+        t1 = time.perf_counter()
+        self.make_parent(key)
         with self.fs.open_output_stream(key) as f:
             f.write(payload)
+        self.compress_s += t1 - t0
+        self.write_s += time.perf_counter() - t1
 
 
 def _row_block(r) -> np.ndarray:

@@ -290,7 +290,7 @@ def assemble_tiles(tiles: DataFrame, chunk_z: int | None = None) -> DataFrame:
     contiguous in z (fail-mode ingest, where a codec error aborts
     before any hole can exist)."""
 
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _assemble(key, pdf):
         channel, stack, cz, cy, cx = key
         pdf = pdf.sort_values("z")
         dtype = pdf["dtype"].iloc[0]

@@ -54,6 +54,19 @@ def test_job_observed_metrics(job_run):
     assert m["chunk_bytes"] == sum(a.nbytes for a in arrays.values())
 
 
+def test_job_reports_phase_seconds(job_run):
+    """The fused route returns its band tasks' read, decode, pyramid,
+    compress and write seconds as a field."""
+    from aind_smartspim_data_transformation_spark.imaging.fused import PHASES
+
+    resp, out, arrays = job_run
+    assert resp["route"] == "fused"
+    phases = resp["phase_sec"]
+    assert set(phases) == set(PHASES)
+    assert all(v >= 0 for v in phases.values()), phases
+    assert sum(phases.values()) > 0
+
+
 def test_job_derivatives_passthrough(job_run):
     resp, out, arrays = job_run
     assert json.loads((out / "derivatives" / "metadata.json").read_text()) == {
@@ -685,6 +698,33 @@ def _crash_before_finalize(monkeypatch, run):
             run()
 
 
+def test_fully_resumed_run_adds_no_phase_seconds(spark, tmp_path, monkeypatch):
+    """A rerun whose every band is marker-complete writes no band, so
+    its phase timings are all zero while its accounting still counts
+    the resumed bands."""
+    from aind_smartspim_data_transformation_spark.imaging.fused import (
+        PHASES,
+        run_fused_ingest,
+    )
+
+    root = tmp_path / "ds"
+    arrays = make_dataset(root, height=16, width=20)
+    args = dict(
+        voxel_size_zyx=[2.0, 1.8, 1.8],
+        scale_factor_zyx=[2, 2, 2],
+        chunk_zyx=[64, 64, 64],
+        n_levels=2,
+    )
+    out = str(tmp_path / "out")
+    _crash_before_finalize(
+        monkeypatch, lambda: run_fused_ingest(spark, str(root), out, **args)
+    )
+    _, metrics = run_fused_ingest(spark, str(root), out, **args)
+    assert metrics["phase_sec"] == dict.fromkeys(PHASES, 0.0)
+    assert metrics["n_chunks"] == len(arrays)
+    assert metrics["chunk_bytes"] == sum(a.nbytes for a in arrays.values())
+
+
 def test_fused_mid_job_kill_resume_skips_completed_bands(
     spark, tmp_path, monkeypatch
 ):
@@ -797,6 +837,10 @@ def test_fused_mid_job_kill_resume_skips_completed_bands(
     _, metrics = run_fused_ingest(spark, str(root), str(out), **args)
     assert not pdir.exists()  # progress retired after the finalize
     assert snap(out) == snap(fresh)
+    # phase timings cover only the bands each run wrote: wall seconds,
+    # not accounting (test_fully_resumed_run_adds_no_phase_seconds)
+    metrics.pop("phase_sec")
+    fresh_metrics.pop("phase_sec")
     assert metrics == fresh_metrics
     after = {p: p.stat().st_mtime_ns for p in before}
     rewritten = [p for p in before if before[p] != after[p]]
@@ -1114,6 +1158,43 @@ def test_fused_job_runs_at_most_four_spark_jobs(spark, tmp_path):
     assert resp["route"] == "fused"
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 1 <= len(jobs) <= 4, jobs
+
+
+def test_fused_job_is_two_jobs_without_shuffle(spark, tmp_path):
+    """The fused ingest is two plain RDD jobs of one stage each — the
+    geometry probe and the band stage — and no stage writes shuffle
+    bytes: nothing but driver-built path tuples reaches the band
+    tasks."""
+    import time
+
+    make_dataset(tmp_path / "ds", height=32, width=40)
+    settings = ImagingJobSettings(
+        input_source=str(tmp_path / "ds"),
+        output_directory=str(tmp_path / "out"),
+        chunk_size=[64, 64, 64],
+        downsample_levels=2,
+    )
+    sc = spark.sparkContext
+    group = f"fused-two-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "job shape")
+    try:
+        resp = run_imaging_job(spark, settings)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert resp["route"] == "fused"
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 2, jobs
+    # the listener bus updates the status store asynchronously
+    deadline = time.monotonic() + 10
+    while any(tracker.getJobInfo(j).status == "RUNNING" for j in jobs):
+        assert time.monotonic() < deadline, "jobs did not end in the store"
+        time.sleep(0.01)
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    assert len(stages) == 2, stages
+    store = sc._jsc.sc().statusStore()
+    for s in stages:
+        assert store.lastStageAttempt(s).shuffleWriteBytes() == 0, s
 
 
 def test_auto_routing_boundary_on_task_budget(spark, tmp_path, monkeypatch):

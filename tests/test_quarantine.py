@@ -324,6 +324,43 @@ def test_partially_corrupt_slice_zeroes_whole_plane(spark, tmp_path):
     assert got[1].any()
 
 
+def test_slice_decoded_by_two_folds_gives_one_dead_letter(spark, tmp_path):
+    """Height 32 at chunk (64, 8, 64) splits every stack into 4 bands,
+    so 2 folds each decode the corrupt slice: the fused route reports
+    ONE dead letter for it, picked by a fixed rule (two runs agree),
+    and its store equals the UDF store."""
+    from aind_smartspim_data_transformation_spark.imaging.fused import (
+        _band_plan,
+        probe_stack_geometry,
+    )
+
+    root = tmp_path / "ds"
+    make_dataset(root, height=32, width=20)
+    bad_stack = _corrupt_first_slice(root)
+    chunk = (64, 8, 64)
+    geo = probe_stack_geometry(
+        spark, str(root / "SmartSPIM"), on_error="quarantine"
+    )
+    plan = _band_plan(geo, list(chunk), spark.sparkContext.defaultParallelism)
+    assert plan[(CHANNELS[0], bad_stack)][0] == 4  # 4 bands: 2 folds
+
+    fused, resp = _run_job(
+        spark, root, tmp_path / "out_f", "fused", "quarantine", chunk=chunk
+    )
+    _, again = _run_job(
+        spark, root, tmp_path / "out_f2", "fused", "quarantine", chunk=chunk
+    )
+    udf, _ = _run_job(
+        spark, root, tmp_path / "out_u", "udf", "quarantine", chunk=chunk
+    )
+    assert fused == udf
+    dead = resp["metrics"]["dead_letters"]
+    assert [(d["channel"], d["stack"], d["z"]) for d in dead] == [
+        (CHANNELS[0], bad_stack, 0)
+    ]
+    assert dead == again["metrics"]["dead_letters"]
+
+
 def test_fused_taller_slice_fails_loudly_in_fail_mode(spark, tmp_path):
     """A slice TALLER than the probe decodes cleanly inside every band
     window, so the per-window shape check cannot see it — the header
