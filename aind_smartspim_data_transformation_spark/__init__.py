@@ -14,9 +14,10 @@ Layout
 - ``operators`` : dedup, similarity search, text analysis, as-of join,
                   multimodal column plumbing
 - ``functions`` : scalar-function library (wavelength→hex LUT, hashes, ...)
-- ``sources``   : imaging sources — PNG codec, stack scan → chunk table,
+- ``sources``   : imaging sources — PNG/TIFF codecs, stack listing,
                   acquisition.json metadata
-- ``imaging``   : windowed-mean pyramid + OME-Zarr sink
+- ``imaging``   : the imaging job: fused band tasks, windowed-mean
+                  pyramid, OME-Zarr store layer
 - ``config``    : pydantic job settings (JSON arg / config file / env vars)
 - ``streaming`` : Structured Streaming twins of the events-table queries
 """

@@ -17,11 +17,10 @@ Divergences, by design:
   num_of_partitions=1), but callers who still launch N instances get
   the same deterministic split (imaging/job.py::partition_stacks) and
   partition-0-only derivatives upload.
-- There is no ingest-route setting: the job takes the fused band tasks
-  when their probed per-task buffer fits the memory envelope, else the
-  chunk-table pipeline (imaging/job.py), and both write the same bytes.
-  Unknown keys are ignored, so a payload that still carries the old
-  ``ingest`` key validates unchanged.
+- There is no ingest-route setting: the job has one route, the fused
+  band tasks, whose band plan fits the memory envelope by itself
+  (imaging/fused.py).  Unknown keys are ignored, so a payload that
+  still carries the old ``ingest`` key validates unchanged.
 """
 
 from __future__ import annotations

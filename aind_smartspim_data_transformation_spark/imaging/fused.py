@@ -1,29 +1,22 @@
 """Fused zero-shuffle imaging ingest: decode → chunk → ALL pyramid
 levels → compressed OME-Zarr chunks, in ONE Python task per
-(z-slab, y-band).
+(z-slab, y-band, x-tile).  This is the imaging job's only batch route.
 
-The round-6 profile (NOTES_r06.md) showed the chunk-table pipeline's
-cost is ~95% data plane: the pixel volume crosses Python→JVM as Arrow
-tile rows, through a full-volume assembly shuffle, back to Python for
-the pyramid, and again for each level's write — 1713 executor core-s
-for a 1.6 GB job whose numpy kernels need 83.  This path removes every
-one of those crossings: pixel bytes never enter the JVM.  The driver
-plans every band group as one plain tuple carrying its slice paths,
-and the ingest is two plain Python RDD jobs over such tuples — the
-geometry probe and the band stage (``parallelize(groups).map``, one
-task per group) — with no DataFrame, Arrow, pandas or shuffle between
-the plan and the tasks; each task sends back one summary tuple.
+Pixel bytes never enter the JVM.  The driver plans every band group as
+one plain tuple carrying its slice paths, and the ingest is two plain
+Python RDD jobs over such tuples — the geometry probe and the band
+stage (``parallelize(groups).map``, one task per group) — with no
+DataFrame, Arrow, pandas or shuffle between the plan and the tasks;
+each task sends back one summary tuple.
 
 Why a task can compute the WHOLE pyramid locally: the store's chunk
 GRID is preserved across levels (chunk dims shrink by the factor, so
 level-L chunk (cz,cy,cx) derives exactly from level-(L-1) chunk
-(cz,cy,cx)), and the sink's geometry guard (shared
-``plan_store_layout``) only admits chunk dims where per-chunk
-windowed means equal the global windowed mean (divisible-by-factor or
-full-extent per axis).  The guard protects both write paths — they
-cannot disagree on metadata or geometry — and
-tests/test_imaging_job.py asserts the two stores are ARRAY-IDENTICAL
-at every level.
+(cz,cy,cx)), and the geometry guard (``plan_store_layout``) only
+admits chunk dims where per-chunk windowed means equal the global
+windowed mean (divisible-by-factor or full-extent per axis).  The
+tests check every level of the store against the numpy
+``windowed_mean`` ladder of the decoded slices.
 
 Parallelism: slabs alone can under-fill a cluster (a 64-slice
 acquisition at chunk_z=128 is one slab per stack), so each slab is
@@ -36,29 +29,29 @@ across folds instead of ramping with the band index, and slice-row
 duplication halves; TIFF folds decode each band window separately
 (strips are random-access, so the rows between the fold's bands are
 never read).  Fold count ≈ 2× parallelism keeps full occupancy with
-balanced tasks; the per-task buffer is two band buffers + one decoded
-slice span.
+balanced tasks.
 
-Memory envelope: one task holds its band (≤ chunk_z × band_rows ×
-width bytes, +1 decoded slice).  The envelope alone picks the route:
-``run_imaging_job`` takes this path exactly when the probed per-task
-buffer fits ``FUSED_MAX_TASK_BYTES``; giant-plane acquisitions take
-the chunk-table pipeline over the ``binaryFile`` + pandas-UDF scan,
-whose peak per-group memory is chunk-sized.  There is no setting that
-forces either route.
+Memory envelope: a task buffers its fold's two bands (``2 × min(cz, z)
+× band_rows × tile_width`` pixels) plus one decoded row span (``y ×
+x`` at most).  :func:`_band_plan` sizes the plan to fit
+``FUSED_MAX_TASK_BYTES``: it first narrows bands to one chunk row, and
+when even a one-chunk-row band at full width does not fit, it also
+splits each band into X-TILES of whole chunk columns.  The decoded row
+span is the one term the plan cannot shrink; it exceeds the envelope
+only for planes of about 11.6k² uint16 and larger.  There is no
+setting that changes the plan or the route.
 
 Error handling (round 7): every slice passes a HEADER-ONLY geometry
 gate against the probed stack geometry before decoding (a taller slice
 decodes cleanly inside every band window, so only the header can see
 it — previously its bottom rows were silently dropped), band buffers
 are allocated from the probe, and each decoded window's shape/dtype is
-re-checked before copying.  ``on_error="quarantine"`` ports the UDF
-path's dead-letter semantics into the band task with WHOLE-PLANE
-atomicity: quarantine mode decodes the full slice (strict end-to-end
-validation — PNG adler32 + exact length, every TIFF strip/tile), so a
-slice corrupt ANYWHERE zero-fills at its z position in every band
-(matching the UDF store byte-for-byte, including a trailing corrupt
-slice), and one dead-letter row per (stack, z) rides the per-task
+re-checked before copying.  ``on_error="quarantine"`` gives dead-letter
+semantics with WHOLE-PLANE atomicity: quarantine mode decodes the full
+slice (strict end-to-end validation — PNG adler32 + exact length,
+every TIFF strip/tile), so a slice corrupt ANYWHERE zero-fills at its
+z position in every band and tile (a trailing corrupt slice
+included), and one dead-letter row per (stack, z) rides the per-task
 summary channel back — at 100 TB one bad slice costs one triage row,
 not a full-job rerun.  Quarantine trades the windowed-decode saving
 for that atomicity; fail mode keeps the windowed fast path.
@@ -95,12 +88,12 @@ _PROGRESS_DIRNAME = ".fused_progress"
 PHASES = ("read", "decode", "pyramid", "compress", "write")
 
 
-def _marker_name(channel: str, stack: str, slab: int, fold: int) -> str:
+def _marker_name(channel: str, stack: str, slab: int, gi: int) -> str:
     from urllib.parse import quote
 
     return (
         f"{quote(channel, safe='')}__{quote(stack, safe='')}"
-        f"__{slab}__{fold}.json"
+        f"__{slab}__{gi}.json"
     )
 
 
@@ -210,10 +203,11 @@ def _read_progress_markers(
     output_root: str, store_fp: str, plan_fp: str
 ) -> dict[tuple[str, str, int, int], dict[str, Any]]:
     """Valid completion markers under ``<output_root>/.fused_progress``,
-    keyed by (channel, stack, slab, fold).  A marker whose store
-    fingerprint differs is a LOUD error (the target mixes layouts); a
-    plan-only mismatch silently invalidates all markers (full redo is
-    correct — chunk keys are idempotent)."""
+    keyed by (channel, stack, slab, gi), the band group gi = fold·n_xt
+    + x-tile.  A marker whose store fingerprint differs is a LOUD error
+    (the target mixes layouts); a plan-only mismatch silently
+    invalidates all markers (full redo is correct — chunk keys are
+    idempotent)."""
     import json as _json
 
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
@@ -242,8 +236,8 @@ def _read_progress_markers(
         if m.get("plan_fp") != plan_fp:
             stale = True
             continue
-        c, s, slab, fold = m["key"]
-        done[(c, s, int(slab), int(fold))] = m
+        c, s, slab, gi = m["key"]
+        done[(c, s, int(slab), int(gi))] = m
     if stale and not done:
         # different band plan (parallelism / on_error changed): markers
         # are meaningless under the new split — drop them and redo
@@ -373,73 +367,55 @@ def _band_plan(
     geo: list[dict[str, Any]],
     chunk_zyx: list[int],
     parallelism: int,
-) -> dict[tuple[str, str], tuple[int, int]]:
-    """Per stack: (n_bands, cy_chunks_per_band) splitting the y chunk
-    rows into bands (never more bands than chunk rows; at least 1).
+) -> dict[tuple[str, str], tuple[int, int, int, int]]:
+    """Per stack: (n_bands, cy_chunks_per_band, n_xt, cx_chunks_per_xt)
+    — the y chunk rows split into bands (never more bands than chunk
+    rows; at least 1), and each band split into X-tiles of whole chunk
+    columns.
 
     Bands are executed FOLDED — task (fold f) processes bands f and
     n_bands−1−f (see :func:`run_fused_ingest`) — so the band count
     targets ≈ 4× parallelism to leave ≈ 2× parallelism tasks after
     pairing.
 
-    The band height is additionally capped by the per-task memory
-    envelope ``FUSED_MAX_TASK_BYTES`` (read at call time): a folded
-    task buffers TWO bands of ``min(cz, z) × per_band·cy_chunk × x``
-    pixels plus one decoded slice span, so ``per_band`` shrinks (never
-    below one chunk row) until that fits.  Without this, a deep
-    acquisition (many z-slabs → low band target → tall bands) tips the
-    whole job off the fused path over a ~0.04% envelope overshoot —
-    measured at 4×320 slices of 2000×1600: the job fell back to the
-    chunk-table pipeline at 47 MB/s where capped 1-chunk-row bands
-    stay fused (SCALE.md §6m).  The cap uses the UNCLAMPED band height (per_band·cy_chunk,
-    not min(·, y)) — conservative by < one chunk row for a band
-    spanning the whole plane; :func:`fused_task_bytes` reports the
-    exact clamped figure."""
-    cz, cy_chunk, _ = chunk_zyx
+    The plan is capped by the per-task memory envelope
+    ``FUSED_MAX_TASK_BYTES`` (read at call time): a folded task
+    buffers TWO bands of ``min(cz, z) × per_band·cy_chunk × tile_x``
+    pixels plus one decoded row span (``y × x``, the term no split
+    removes).  First ``per_band`` shrinks, never below one chunk row,
+    until a full-width band fits — a deep acquisition (many z-slabs →
+    low band target → tall bands) would otherwise overshoot the
+    envelope (SCALE.md §6m).  When even a one-chunk-row band at full
+    width does not fit, the band is also split along X into ``n_xt``
+    tiles of ``per_xt`` chunk columns, never fewer than one column.
+    Otherwise ``n_xt = 1`` and ``per_xt`` is the whole chunk-column
+    count: the full width is compared against the envelope directly,
+    because a width that is not a multiple of the chunk is narrower
+    than its whole chunk columns.  Band heights and tile widths use
+    whole chunks (per_band·cy_chunk, per_xt·cx_chunk) — conservative
+    by less than one chunk for the last band or tile."""
+    cz, cy_chunk, cx_chunk = chunk_zyx
     slabs = sum(-(-g["z"] // cz) for g in geo)
     want = max(1, (4 * parallelism) // max(slabs, 1))
     plan = {}
     for g in geo:
         n_cy = -(-g["y"] // cy_chunk)
+        n_cx = -(-g["x"] // cx_chunk)
         n_bands = min(want, n_cy)
         per_band = -(-n_cy // n_bands)
         item = np.dtype(g["dtype"]).itemsize
-        denom = 2 * min(cz, g["z"]) * cy_chunk * g["x"] * item
-        pb_cap = max(
-            1, (FUSED_MAX_TASK_BYTES - g["y"] * g["x"] * item) // denom
-        )
-        per_band = min(per_band, pb_cap)
+        free = FUSED_MAX_TASK_BYTES - g["y"] * g["x"] * item
+        # one chunk row of one band pair, per pixel column
+        row = 2 * min(cz, g["z"]) * cy_chunk * item
+        per_band = min(per_band, max(1, free // (row * g["x"])))
         n_bands = -(-n_cy // per_band)  # drop empty trailing bands
-        plan[(g["channel"], g["stack"])] = (n_bands, per_band)
+        if per_band * row * g["x"] <= free:
+            n_xt, per_xt = 1, n_cx
+        else:
+            per_xt = max(1, free // (per_band * row * cx_chunk))
+            n_xt = -(-n_cx // per_xt)
+        plan[(g["channel"], g["stack"])] = (n_bands, per_band, n_xt, per_xt)
     return plan
-
-
-def fused_task_bytes(
-    geo: list[dict[str, Any]],
-    chunk_zyx: list[int],
-    parallelism: int,
-) -> int:
-    """Worst-case per-task buffer: a folded task holds TWO band
-    buffers (bands f and n_bands−1−f) plus one decoded slice span.
-
-    Because :func:`_band_plan` already shrinks the band height to the
-    envelope, this exceeds the envelope only when even a
-    single-chunk-row band doesn't fit (a genuinely giant plane) — the
-    one case where job.py SHOULD take the chunk-table
-    fallback.  It sizes the plan :func:`_band_plan` returns, so the
-    probe and the plan can't drift apart."""
-    plan = _band_plan(geo, chunk_zyx, parallelism)
-    worst = 0
-    for g in geo:
-        _, per_band = plan[(g["channel"], g["stack"])]
-        band_rows = min(per_band * chunk_zyx[1], g["y"])
-        item = np.dtype(g["dtype"]).itemsize
-        worst = max(
-            worst,
-            2 * min(chunk_zyx[0], g["z"]) * band_rows * g["x"] * item
-            + g["y"] * g["x"] * item,  # +1 full decoded slice span
-        )
-    return worst
 
 
 def input_listing_digest(
@@ -545,7 +521,6 @@ def run_fused_ingest(
     compressor_name: str = "zlib",
     compressor_kwargs: dict[str, Any] | None = None,
     stack_filter: list[tuple[str, str]] | None = None,
-    geo: list[dict[str, Any]] | None = None,
     on_error: str = "fail",
     resume_digest: str = "metadata",
     listing: list[tuple] | None = None,
@@ -558,8 +533,7 @@ def run_fused_ingest(
     sums and dedups them.
 
     Returns (sorted group paths, {"n_chunks": level-0 chunks written,
-    "chunk_bytes": raw level-0 bytes, "phase_sec": ...}) — n_chunks and
-    chunk_bytes are the chunk-table job's Observation contract;
+    "chunk_bytes": raw unpadded level-0 bytes, "phase_sec": ...});
     ``phase_sec`` maps each of :data:`PHASES` (read, decode, pyramid,
     compress, write) to the band tasks' seconds, summed over the bands
     THIS run wrote (resumed bands add nothing).  With
@@ -568,8 +542,7 @@ def run_fused_ingest(
     slice, sorted by (channel, stack, z) — a slice decoded by several
     folds (or also saved in a resumed band's marker) keeps its smallest
     error string, so reruns report identical rows — and the store holds
-    ZERO planes at the quarantined z positions, byte-identical to the
-    UDF quarantine pipeline's store (asserted in
+    ZERO planes at the quarantined z positions (asserted in
     tests/test_quarantine.py).  The list is driver-side because dead
     letters are rare by construction; an operator at 100 TB persists it
     to the triage table of their choice.
@@ -620,8 +593,7 @@ def run_fused_ingest(
     codec_meta, _ = _make_codec(compressor_name, compressor_kwargs)
     if listing is None:
         listing = list_stack_files(root)
-    if geo is None:
-        geo = probe_stack_geometry(spark, root, on_error=on_error, listing=listing)
+    geo = probe_stack_geometry(spark, root, on_error=on_error, listing=listing)
     if stack_filter is not None:
         keep = set(stack_filter)
         geo = [g for g in geo if (g["channel"], g["stack"]) in keep]
@@ -680,11 +652,16 @@ def run_fused_ingest(
         codec_meta, geo, plan, on_error, content_fp,
     )
     markers = _read_progress_markers(output_root, store_fp, plan_fp)
+    # a band group is (slab, gi) with gi = fold·n_xt + x-tile; with one
+    # x-tile, gi is the fold
+    n_groups = {
+        k: (nb + 1) // 2 * n_xt for k, (nb, _, n_xt, _) in plan.items()
+    }
     all_keys = [
-        (g["channel"], g["stack"], slab, fold)
+        (g["channel"], g["stack"], slab, gi)
         for g in geo
         for slab in range(-(-g["z"] // cz_chunk))
-        for fold in range((plan[(g["channel"], g["stack"])][0] + 1) // 2)
+        for gi in range(n_groups[(g["channel"], g["stack"])])
     ]
     # one pass over the keys, one dict lookup each: O(groups), never
     # O(markers × groups)
@@ -698,7 +675,7 @@ def run_fused_ingest(
         (g["channel"], g["stack"]): (g["y"], g["x"], g["dtype"]) for g in geo
     }
 
-    # listing → one row per remaining (slab, fold) group carrying its
+    # listing → one row per remaining (slab, gi) group carrying its
     # slice paths in z order; z is the path rank within the stack (the
     # reference's sorted-glob semantics, `io/readers.py:145`), computed
     # here on the driver.  Each slice path rides once per FOLD — fold f
@@ -707,17 +684,19 @@ def run_fused_ingest(
     # band's end anyway; the lower band's rows come out of the same
     # pass free), the per-task decode cost max(ends) is near-constant
     # across folds instead of ramping with the band index, and
-    # slice-path duplication halves.  Completed (marker-present)
-    # groups of a resumed run are simply never shipped.
+    # slice-path duplication halves.  The x-tiles of one fold each
+    # decode the same rows and keep their own columns.  Completed
+    # (marker-present) groups of a resumed run are simply never
+    # shipped.
     stack_paths: dict[tuple[str, str], list[str]] = {k: [] for k in plan}
     for path, ch, st, _, _ in listing:
         if (ch, st) in stack_paths:
             stack_paths[(ch, st)].append(path)
     group_rows = []
-    for c, st, slab, fold in remaining:
+    for c, st, slab, gi in remaining:
         z0 = slab * cz_chunk
         paths = stack_paths[(c, st)][z0 : z0 + cz_chunk]
-        group_rows.append((c, st, slab, fold, paths))
+        group_rows.append((c, st, slab, gi, paths))
 
     def _write_band(row):
         import time
@@ -737,10 +716,15 @@ def run_fused_ingest(
         )
 
         _, compress = make_codec(compressor_name, compressor_kwargs)
-        channel, stack, cz, fold, paths = row
-        nb, per_band = plan[(channel, stack)]
+        channel, stack, cz, gi, paths = row
+        nb, per_band, n_xt, per_xt = plan[(channel, stack)]
+        fold, xt = divmod(gi, n_xt)
         height, width, dtype_name = geom[(channel, stack)]
         exp_dtype = np.dtype(dtype_name)
+        # the x-tile's columns [x0, x1), from chunk column cx0
+        cx0 = xt * per_xt
+        x0 = cx0 * cx_chunk
+        x1 = min(x0 + per_xt * cx_chunk, width)
         # the fold's band windows: (cy0, y0, y1) for bands f and
         # nb−1−f (one window when they coincide)
         wins = []
@@ -780,24 +764,24 @@ def run_fused_ingest(
 
         def _decode_bands(data):
             if quarantine:
-                # quarantine parity with the UDF path: a corrupt slice
-                # must zero the WHOLE plane, not just the bands whose
+                # whole-plane atomicity: a corrupt slice must zero the
+                # WHOLE plane, not just the bands and tiles whose
                 # windows touch the damage — so decode the full slice
                 # (strict end-to-end validation: PNG adler32 + exact
                 # length, every TIFF strip/tile) and slice the windows
                 # from it.  Quarantine trades the windowed-decode
                 # saving for whole-plane failure atomicity.
                 plane = decode_image_gray(data)
-                return [plane[y0:y1] for (_, y0, y1) in wins]
+                return [plane[y0:y1, x0:x1] for (_, y0, y1) in wins]
             # PNG inflates sequentially, so ONE pass to the higher
             # band's end serves both windows (the lower band is free);
             # TIFF strips are random-access, so per-window decodes
             # skip the rows BETWEEN the fold's bands too.
             if len(wins) == 1 or data[:8] == b"\x89PNG\r\n\x1a\n":
                 span = decode_image_gray(data, row_stop=hi, row_start=lo)
-                return [span[y0 - lo : y1 - lo] for (_, y0, y1) in wins]
+                return [span[y0 - lo : y1 - lo, x0:x1] for (_, y0, y1) in wins]
             return [
-                decode_image_gray(data, row_stop=y1, row_start=y0)
+                decode_image_gray(data, row_stop=y1, row_start=y0)[:, x0:x1]
                 for (_, y0, y1) in wins
             ]
 
@@ -809,7 +793,7 @@ def run_fused_ingest(
         # zero-filled AT POSITION (memset cost is noise next to the
         # decode+compress kernels this task runs)
         bufs = [
-            np.zeros((len(paths), y1 - y0, width), dtype=exp_dtype)
+            np.zeros((len(paths), y1 - y0, x1 - x0), dtype=exp_dtype)
             for (_, y0, y1) in wins
         ]
         dead: list[tuple[int, str]] = []
@@ -821,11 +805,11 @@ def run_fused_ingest(
                 _check_header(path, data)
                 parts = _decode_bands(data)
                 for p, (_, y0, y1) in zip(parts, wins):
-                    if p.shape != (y1 - y0, width) or p.dtype != exp_dtype:
+                    if p.shape != (y1 - y0, x1 - x0) or p.dtype != exp_dtype:
                         raise ValueError(
                             f"slice geometry mismatch in {path}: decoded "
                             f"window {p.shape} {p.dtype} != probed "
-                            f"{(y1 - y0, width)} {exp_dtype}"
+                            f"{(y1 - y0, x1 - x0)} {exp_dtype}"
                         )
             except Exception as exc:  # noqa: BLE001 — dead-letter boundary
                 if not quarantine:
@@ -856,7 +840,7 @@ def run_fused_ingest(
                     raw_bytes += arr.nbytes
                     for lvl in range(n_levels):
                         cw.write(
-                            chunk_key(group, lvl, cz, cy0 + cyy, cx),
+                            chunk_key(group, lvl, cz, cy0 + cyy, cx0 + cx),
                             arr,
                             stack_ladder[lvl],
                         )
@@ -881,7 +865,7 @@ def run_fused_ingest(
             f.write(
                 _json.dumps(
                     {
-                        "key": [channel, stack, cz, fold],
+                        "key": [channel, stack, cz, gi],
                         "n_chunks": n_chunks,
                         "chunk_bytes": raw_bytes,
                         "dead": [[z, err] for z, err in dead],
@@ -890,7 +874,7 @@ def run_fused_ingest(
                     }
                 ).encode()
             )
-        dest = f"{pdir}/{_marker_name(channel, stack, cz, fold)}"
+        dest = f"{pdir}/{_marker_name(channel, stack, cz, gi)}"
         # race-tolerant check-delete-move with retry; a failed move
         # whose destination exists counts as a sibling attempt's
         # byte-equivalent publish (see _publish_marker)
@@ -926,14 +910,14 @@ def run_fused_ingest(
         },
     }
     if quarantine:
-        # a corrupt slice is decoded by EVERY fold of its slab, and a
+        # a corrupt slice is decoded by EVERY group of its slab, and a
         # resumed run also brings the skipped bands' saved dead letters
         # (their slices were quarantined in the earlier run): keep one
         # triage row per (stack, z), the smallest error string
         dead = {d for r in fresh for d in r[2]}
         dead |= {
             (c, s, int(z), err)
-            for (c, s, _slab, _fold), m in done.items()
+            for (c, s, _slab, _gi), m in done.items()
             for z, err in m.get("dead", [])
         }
         first: dict[tuple[str, str, int], str] = {}

@@ -5,19 +5,20 @@ The Spark re-expression of the reference's
 
 reference                                  | here
 -------------------------------------------|--------------------------------
-round-robin stack list across N processes  | Spark schedules chunk tasks;
-(`smartspim_job.py:30-63`)                 | one app replaces N instances
-per-stack dask graph + da.store            | one DataFrame pipeline/stack
-write level, read back for next level      | persist() between levels
+round-robin stack list across N processes  | one driver-side listing plans
+(`smartspim_job.py:30-63`)                 | band tasks; one app replaces
+                                           | N instances
+per-stack dask graph + da.store            | fused band tasks (fused.py):
+                                           | decode + every level + write
+write level, read back for next level      | every level from the band in
+                                           | memory, no read-back
 subprocess `aws s3 sync` + local delete    | write directly to the target
                                            | (s3a:// URI on a cluster)
 derivatives passthrough upload (S10)       | binary copy, driver-side
 
-Two ingest routes, picked by the memory envelope alone: the fused band
-tasks (imaging/fused.py) when their probed per-task buffer fits
-``FUSED_MAX_TASK_BYTES``, else the chunk-table pipeline over the
-``binaryFile`` + pandas-UDF scan (``read_stack_tree`` → pyramid →
-``write_ome_zarr_all``).  Both write byte-identical stores.
+One ingest route: ``fused.run_fused_ingest``.  Its band plan fits every
+geometry to the memory envelope by splitting bands along Y and, for
+planes too wide for a one-chunk-row band, along X as well.
 
 Returns a JobResponse-like dict (status_code / message / duration).
 """
@@ -27,21 +28,15 @@ from __future__ import annotations
 import time
 from pathlib import Path
 
-from pyspark.sql import Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from aind_smartspim_data_transformation_spark.config.settings import ImagingJobSettings
-from aind_smartspim_data_transformation_spark.imaging import fused
-from aind_smartspim_data_transformation_spark.imaging.pyramid import build_pyramid
-from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-    write_ome_zarr_all,
-)
+from aind_smartspim_data_transformation_spark.imaging.fused import run_fused_ingest
 from aind_smartspim_data_transformation_spark.sources.acquisition import (
     get_voxel_resolution,
 )
 from aind_smartspim_data_transformation_spark.sources.stack_reader import (
     list_stack_files,
-    read_stack_tree,
 )
 
 
@@ -59,14 +54,11 @@ def partition_stacks(stacks: list, n_partitions: int) -> list[list]:
 
 def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
     """Run the whole ingest; returns status_code, message, the written
-    stack groups, the ingest metrics, ``route`` — the ingest path
-    taken: ``"fused"`` (band tasks, when ``fused_task_bytes`` fits
-    ``FUSED_MAX_TASK_BYTES``), ``"udf"`` (the chunk-table pipeline over
-    the ``binaryFile`` + pandas-UDF scan, otherwise), or None when this
-    partition owns no stacks — and ``phase_sec``: the fused band tasks'
-    read/decode/pyramid/compress/write seconds summed over the bands
-    this run wrote (None off the fused route).  The route never changes
-    the stored bytes."""
+    stack groups, the ingest metrics, ``route`` — ``"fused"``, the one
+    ingest path, or None when this partition owns no stacks — and
+    ``phase_sec``: the band tasks' read/decode/pyramid/compress/write
+    seconds summed over the bands this run wrote (None when nothing
+    ran)."""
     start = time.time()
     root = str(settings.input_source)
     # With s3_location set, executors write STRAIGHT to the object
@@ -110,103 +102,31 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
                 "phase_sec": None,
             }
 
-    # Route by the memory envelope alone.  Fused zero-shuffle band
-    # tasks (imaging/fused.py) when the probed per-task band buffer
-    # fits: pixel bytes never enter the JVM, no assembly shuffle, every
-    # pyramid level computed and written by the decode task itself.
-    # Giant planes take the chunk-table pipeline below, whose peak
-    # per-group memory is chunk-sized.  Both write the same bytes.
-    geo = fused.probe_stack_geometry(
-        spark, f"{root}/SmartSPIM", on_error=settings.on_error, listing=listing
-    )
-    task_bytes = fused.fused_task_bytes(
-        geo, list(settings.chunk_size), spark.sparkContext.defaultParallelism
-    )
-    if task_bytes <= fused.FUSED_MAX_TASK_BYTES:
-        written, metrics = fused.run_fused_ingest(
-            spark,
-            f"{root}/SmartSPIM",
-            out,
-            voxel_size_zyx=voxel_zyx,
-            scale_factor_zyx=list(settings.scale_factor),
-            chunk_zyx=list(settings.chunk_size),
-            n_levels=settings.downsample_levels,
-            compressor_name=settings.compressor_name.value,
-            compressor_kwargs=settings.compressor_kwargs,
-            stack_filter=mine,
-            geo=geo,
-            on_error=settings.on_error,
-            listing=listing,
-        )
-        phase_sec = metrics.pop("phase_sec")
-        return {
-            "status_code": 200,
-            "message": (
-                f"wrote {len(written)} stacks in "
-                f"{time.time() - start:.1f}s (fused)"
-            ),
-            "written": written,
-            "metrics": metrics,
-            "route": "fused",
-            "phase_sec": phase_sec,
-        }
-
-    cz, cy, cx = settings.chunk_size
-    chunks = read_stack_tree(
+    written, metrics = run_fused_ingest(
         spark,
         f"{root}/SmartSPIM",
-        chunk_z=cz,
-        chunk_y=cy,
-        chunk_x=cx,
-        on_error=settings.on_error,
-    )
-    if mine is not None:
-        keys = spark.createDataFrame(mine, "channel string, stack string")
-        chunks = chunks.join(F.broadcast(keys), ["channel", "stack"])
-    # Observation metrics ride the FIRST action over the chunk table —
-    # ingest volume accounting with no second scan (the reference logs
-    # wall-clock only, `smartspim_job.py:219,231-233`; at 100 TB a
-    # count()-style recount would itself be a full pipeline re-run).
-    obs = Observation("ingest")
-    chunks = chunks.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.sum(F.length("data")).alias("chunk_bytes"),
-    )
-    # ONE pipeline over ALL stacks (the 1000-executor shape): the
-    # pyramid and each level's zarr write run as one Spark job whose
-    # tasks span every stack's tiles — the scheduler sees a few big
-    # jobs with thousands of tasks instead of stacks × levels small
-    # jobs (the reference fans stacks out as N separate *processes*,
-    # `smartspim_job.py:30-41`; Spark's task scheduler replaces that
-    # machinery outright).  Per-stack routing happens inside the write
-    # task from each row's channel/stack columns.
-    levels = build_pyramid(
-        chunks,
-        tuple(settings.scale_factor),
-        settings.downsample_levels,
-        chunk_zyx=list(settings.chunk_size),
-    )
-    written = write_ome_zarr_all(
-        levels,
         out,
         voxel_size_zyx=voxel_zyx,
         scale_factor_zyx=list(settings.scale_factor),
         chunk_zyx=list(settings.chunk_size),
+        n_levels=settings.downsample_levels,
         compressor_name=settings.compressor_name.value,
         compressor_kwargs=settings.compressor_kwargs,
+        stack_filter=mine,
+        on_error=settings.on_error,
+        listing=listing,
     )
-    for lvl in levels:
-        if lvl.is_cached:
-            lvl.unpersist()
-
+    phase_sec = metrics.pop("phase_sec")
     return {
         "status_code": 200,
-        "message": f"wrote {len(written)} stacks in {time.time() - start:.1f}s",
+        "message": (
+            f"wrote {len(written)} stacks in "
+            f"{time.time() - start:.1f}s (fused)"
+        ),
         "written": written,
-        "metrics": obs.get,
-        "route": "udf",
-        "phase_sec": None,
+        "metrics": metrics,
+        "route": "fused",
+        "phase_sec": phase_sec,
     }
 
 

@@ -5,24 +5,19 @@ non-overlapping f-windowed mean of level i, dtype preserved
 (`compress/png_to_zarr.py:350-394` via xarray_multiscale, factors
 [2,2,2], edge windows truncated → output shape ceil(shape/f)).
 
-Spark-first design: the chunk table makes this a **shuffle-free map**.
-Each chunk row downsamples locally in numpy (`mapInPandas`); chunk
-coordinates keep their grid index, dims shrink by f.  This is correct
-whenever every non-edge chunk dim is divisible by f (the 128-chunk /
-factor-2 default guarantees it; :func:`validate_pyramid_geometry`
-rejects configurations that break it — per-chunk windows would
-otherwise truncate at interior chunk boundaries and silently diverge
-from the global windowed mean).  After k
-levels chunks have shrunk f^k×, so an optional ``regroup`` stage
-(one 8:1 shuffle of already-reduced data) restores the nominal chunk
-size for the sink — the same two-phase shape the reference gets from
-rechunk+write, minus its write-then-read-back barrier
-(`compress/png_to_zarr.py:673-686`), which Spark's lazy pipelining
-makes unnecessary.
+:func:`windowed_mean` is the one kernel: the fused band tasks
+(imaging/fused.py) apply it chunk by chunk, the streaming writer
+applies it to each wave's slab, and the tests use it as the numpy
+oracle.  Per-chunk means equal the global mean whenever every
+non-edge chunk dim is divisible by f (the 128-chunk / factor-2
+default guarantees it; :func:`validate_pyramid_geometry` rejects
+configurations that break it — per-chunk windows would otherwise
+truncate at interior chunk boundaries and silently diverge from the
+global windowed mean).
 
-At 100 TB: level-0 → level-1 touches every byte exactly once with no
-shuffle; every further level is 8× cheaper than the last.  The only
-shuffles are optional regroups of geometrically shrinking data.
+:func:`downsample_chunks` is the same step over a chunk table
+(``CHUNK_SCHEMA``): a ``mapInPandas`` map with no shuffle, which the
+i03 pyramid-level query runs.
 """
 
 from __future__ import annotations
@@ -33,7 +28,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from aind_smartspim_data_transformation_spark.sources.stack_reader import CHUNK_SCHEMA
 
@@ -46,7 +40,7 @@ def validate_pyramid_geometry(
     """Reject chunk/factor combinations the per-chunk kernel cannot
     compute exactly.
 
-    The distributed pyramid reduces each chunk independently, so the
+    The pyramid reduces each chunk independently, so the
     truncated "edge" windows of :func:`windowed_mean` must only ever
     occur at the array's true upper edge.  That holds iff every
     *retained* level's chunk dims are divisible by the factor — i.e.
@@ -80,8 +74,8 @@ def windowed_mean(arr: np.ndarray, factors: tuple[int, ...]) -> np.ndarray:
     """Non-overlapping windowed mean; edge windows truncated (ceil
     semantics); result cast back to the input dtype (trunc toward 0).
 
-    This is also the numpy oracle the tests compare the distributed
-    pipeline against.
+    This is also the numpy oracle the tests compare every store
+    against.
     """
     out_shape = tuple(-(-s // f) for s, f in zip(arr.shape, factors))
     acc = np.zeros(out_shape, dtype=np.float64)
@@ -127,59 +121,3 @@ def downsample_chunks(chunks: DataFrame, factors: tuple[int, int, int]) -> DataF
             yield pd.DataFrame(rows, columns=[c.split()[0] for c in CHUNK_SCHEMA.split(", ")])
 
     return chunks.mapInPandas(_reduce, schema=CHUNK_SCHEMA)
-
-
-def build_pyramid(
-    chunks: DataFrame,
-    factors: tuple[int, int, int],
-    n_levels: int,
-    persist_levels: bool = True,
-    chunk_zyx: Sequence[int] | None = None,
-) -> list[DataFrame]:
-    """Levels [0..n_levels-1]; level 0 is the input.
-
-    ``persist_levels`` replaces the reference's write-then-read-back
-    materialization barrier with ``persist()`` — each level is computed
-    once even though level i+1 and the sink both consume level i.
-
-    Pass ``chunk_zyx`` (the nominal chunk dims of the input table) to
-    fail fast on geometries the per-chunk kernel cannot compute exactly
-    (see :func:`validate_pyramid_geometry`); the sink re-validates
-    against actual chunk dims regardless.
-    """
-    if chunk_zyx is not None:
-        validate_pyramid_geometry(chunk_zyx, factors, n_levels)
-    levels = [chunks]
-    for _ in range(1, n_levels):
-        prev = levels[-1]
-        if persist_levels:
-            prev = prev.persist()
-        levels[-1] = prev
-        levels.append(downsample_chunks(prev, factors))
-    return levels
-
-
-def assemble_array(chunks: DataFrame, chunk_z: int) -> np.ndarray:
-    """Collect one stack's chunk table into a dense (Z, Y, X) numpy
-    array — TEST/DEBUG helper only (driver-side materialization).
-    Handles the full 3-D (cz, cy, cx) tile grid: tile offsets come from
-    the (0,0,0) tile's dims (the grid is regular except at upper
-    edges)."""
-    rows = chunks.orderBy("cz", "cy", "cx").collect()
-    if not rows:
-        return np.zeros((0, 0, 0))
-    dtype = np.dtype(rows[0]["dtype"])
-    dz0, dy0, dx0 = rows[0]["dz"], rows[0]["dy"], rows[0]["dx"]
-    shape = (
-        max(r["cz"] * dz0 + r["dz"] for r in rows),
-        max(r["cy"] * dy0 + r["dy"] for r in rows),
-        max(r["cx"] * dx0 + r["dx"] for r in rows),
-    )
-    out = np.zeros(shape, dtype=dtype)
-    for r in rows:
-        tile = np.frombuffer(r["data"], dtype=dtype).reshape(
-            r["dz"], r["dy"], r["dx"]
-        )
-        z0, y0, x0 = r["cz"] * dz0, r["cy"] * dy0, r["cx"] * dx0
-        out[z0 : z0 + r["dz"], y0 : y0 + r["dy"], x0 : x0 + r["dx"]] = tile
-    return out

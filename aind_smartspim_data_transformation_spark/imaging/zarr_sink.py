@@ -1,14 +1,16 @@
-"""OME-Zarr (v2 + NGFF 0.4) multiscale sink for chunk tables.
+"""OME-Zarr (v2 + NGFF 0.4) multiscale store layer.
 
 Re-expresses the reference's zarr writer (SURVEY.md §2.1 S7,
-`compress/png_to_zarr.py:533-708`) as a Spark sink:
+`compress/png_to_zarr.py:533-708`) as the pieces Spark tasks and the
+driver share:
 
-- executors write chunk blobs via an Arrow-batched per-partition write
-  job (``_arrow_foreach``) — embarrassingly parallel, no coordination,
-  idempotent (re-run overwrites);
+- executors write chunk blobs from inside their tasks through
+  ``ChunkWriter`` (the fused band tasks in imaging/fused.py and the
+  streaming writer's staging) — embarrassingly parallel, no
+  coordination, idempotent (re-run overwrites);
 - the driver writes all JSON metadata (.zgroup/.zattrs/.zarray) ONCE,
-  after every chunk has landed (metadata-last, ``_write_all_metadata``
-  — shared with the fused ingest in imaging/fused.py), which removes
+  after every chunk has landed (metadata-last, ``_write_all_metadata``,
+  planned up front by ``plan_store_layout``), which removes
   the reference's create-race handling (`safe_create_zarr_group`,
   `compress/png_to_zarr.py:503-530`) and leaves a failed job with no
   store that parses as complete;
@@ -48,8 +50,6 @@ import zlib
 from typing import Any
 
 import numpy as np
-
-from pyspark.sql import DataFrame
 
 from aind_smartspim_data_transformation_spark.functions.imaging_meta import (
     axes_5d,
@@ -141,9 +141,8 @@ class ChunkWriter:
     """One task's chunk writes through one filesystem handle: zero-pad
     an edge block to its level's chunk dims, compress, create the
     parent directory once per task, write.  Every writer goes through
-    it (the chunk-table sink, the fused band tasks and the streaming
-    writer's staging), so the write paths cannot drift apart on
-    bytes."""
+    it (the fused band tasks and the streaming writer's staging), so
+    the write paths cannot drift apart on bytes."""
 
     def __init__(self, fs, compress=None):
         self.fs = fs
@@ -171,13 +170,6 @@ class ChunkWriter:
             f.write(payload)
         self.compress_s += t1 - t0
         self.write_s += time.perf_counter() - t1
-
-
-def _row_block(r) -> np.ndarray:
-    """A chunk-table row's (dz, dy, dx) pixel block."""
-    return np.frombuffer(r["data"], dtype=np.dtype(r["dtype"])).reshape(
-        r["dz"], r["dy"], r["dx"]
-    )
 
 
 def _fs_for(root: str):
@@ -217,120 +209,6 @@ def _write_json(path: str, obj: Any) -> None:
             f.write(payload)
 
 
-def _arrow_foreach(df: DataFrame, partition_fn) -> None:
-    """Run ``partition_fn(rows)`` once per partition, with ``rows`` an
-    iterator of dict-like records — through ``mapInPandas``, i.e. the
-    Arrow transfer path.
-
-    ``DataFrame.foreachPartition`` would route every row through the
-    legacy pickled-RDD serializer; with half-megabyte binary chunk
-    payloads per row that serializer dominated the sink's wall-clock
-    (measured ~2× slower end-to-end than Arrow batches on the 409 MB
-    micro-bench).  The one-summary-row-per-partition output is what
-    forces execution; it is collected and discarded.
-    """
-    import pandas as pd
-
-    def _runner(batches):
-        n = 0
-
-        def rows():
-            nonlocal n
-            for pdf in batches:
-                for rec in pdf.to_dict("records"):
-                    n += 1
-                    yield rec
-
-        partition_fn(rows())
-        yield pd.DataFrame({"n": [n]})
-
-    df.mapInPandas(_runner, schema="n long").collect()
-
-
-def write_ome_zarr_all(
-    levels: list[DataFrame],
-    output_root: str,
-    voxel_size_zyx: list[float],
-    scale_factor_zyx: list[int],
-    chunk_zyx: list[int],
-    compressor_name: str = "zlib",
-    compressor_kwargs: dict[str, Any] | None = None,
-) -> list[str]:
-    """Chunk-table sink: ``levels[i]`` is the level-i chunk table over
-    ALL stacks (rows keyed by channel/stack).  Stack groups land at
-    ``<output_root>/<channel>/<stack>.ome.zarr``.
-
-    ONE geometry aggregation and ONE Arrow-batched write job
-    (``_arrow_foreach``) per level for the whole dataset — per-stack
-    routing happens inside the task from each row's channel/stack
-    columns.  Metadata-last, like the fused ingest: the layout is
-    planned first (the geometry guard refuses before any chunk lands),
-    and the driver writes every stack's metadata only after every
-    level's write job has succeeded — a failed job leaves no target
-    that parses as a complete store with missing chunks reading as
-    zeros.  Returns the sorted stack group paths.
-    """
-    from pyspark.sql import functions as F
-
-    codec_meta, compress = _make_codec(compressor_name, compressor_kwargs)
-
-    origin = (F.col("cy") == 0) & (F.col("cx") == 0) & (F.col("cz") == 0)
-    geo = (
-        levels[0]
-        .groupBy("channel", "stack")
-        .agg(
-            F.sum(
-                F.when((F.col("cy") == 0) & (F.col("cx") == 0), F.col("dz"))
-            ).alias("z"),
-            F.sum(
-                F.when((F.col("cz") == 0) & (F.col("cx") == 0), F.col("dy"))
-            ).alias("y"),
-            F.sum(
-                F.when((F.col("cz") == 0) & (F.col("cy") == 0), F.col("dx"))
-            ).alias("x"),
-            F.first("dtype").alias("dtype"),
-            F.first(F.when(origin, F.col("dz")), ignorenulls=True).alias("cdz"),
-            F.first(F.when(origin, F.col("dy")), ignorenulls=True).alias("cdy"),
-            F.first(F.when(origin, F.col("dx")), ignorenulls=True).alias("cdx"),
-        )
-        .collect()
-    )
-
-    n_lvls = len(levels)
-    groups, chunk_ladder = plan_store_layout(
-        geo, output_root, scale_factor_zyx, n_lvls
-    )
-
-    for lvl, level_df in enumerate(levels):
-
-        def _write_partition(rows, lvl=lvl):
-            fs, base = _fs_for(output_root)  # once per task, not per chunk
-            cw = ChunkWriter(fs, compress)
-            for r in rows:
-                c, s = r["channel"], r["stack"]
-                cw.write(
-                    chunk_key(
-                        stack_group(base, c, s), lvl, r["cz"], r["cy"], r["cx"]
-                    ),
-                    _row_block(r),
-                    chunk_ladder[(c, s)][lvl],
-                )
-
-        _arrow_foreach(level_df, _write_partition)
-
-    # every level's chunks are on disk — NOW the stores may parse
-    _write_all_metadata(
-        geo,
-        output_root,
-        voxel_size_zyx,
-        scale_factor_zyx,
-        chunk_zyx,
-        n_lvls,
-        codec_meta,
-    )
-    return sorted(groups)
-
-
 def _write_all_metadata(
     geo,
     output_root: str,
@@ -341,13 +219,12 @@ def _write_all_metadata(
     codec_meta: dict[str, Any] | None,
     extra_attrs: dict[str, Any] | None = None,
 ) -> None:
-    """Driver-side metadata writer shared by the chunk-table sink
-    (:func:`write_ome_zarr_all`) and the fused ingest
-    (imaging/fused.py): per stack, the group .zgroup/.zattrs and every
-    level's .zarray, including the geometry guard.  ``geo`` rows carry
-    channel/stack, full extents z/y/x, dtype, and origin-chunk dims
-    cdz/cdy/cdx — ONE implementation so the write paths can never
-    disagree on metadata.  ``extra_attrs`` entries land inside the stack's single
+    """Driver-side metadata writer shared by the fused ingest
+    (imaging/fused.py) and the streaming writer: per stack, the group
+    .zgroup/.zattrs and every level's .zarray, including the geometry
+    guard.  ``geo`` rows carry channel/stack, full extents z/y/x,
+    dtype, and origin-chunk dims cdz/cdy/cdx — ONE implementation so
+    the write paths can never disagree on metadata.  ``extra_attrs`` entries land inside the stack's single
     ``.zattrs`` write (the streaming writer's epoch marker must be
     atomic with store creation — see append_slab_transaction)."""
     fz, fy, fx = scale_factor_zyx

@@ -1,1 +1,1 @@
-"""Imaging sources: PNG codec, stack scan → chunk table, acquisition metadata."""
+"""Imaging sources: PNG/TIFF codecs, stack listing, acquisition metadata."""

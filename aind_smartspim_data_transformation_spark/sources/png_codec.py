@@ -2,7 +2,7 @@
 
 The reference reads 16-bit grayscale PNG/TIFF slices through pims/dask
 (`/root/reference/src/aind_smartspim_data_transformation/io/readers.py:112-184`);
-this container has no pillow/imagecodecs, so the decode UDF is backed by
+this container has no pillow/imagecodecs, so slice decode is backed by
 this minimal codec built on ``zlib`` + ``numpy`` only (PNG is a public
 spec: RFC 2083).  Supports what the imaging plane needs:
 

@@ -7,12 +7,11 @@ microbatch of decoded slices to the OME-Zarr stores through the
 streaming commit protocol (:class:`SmartspimStreamWriter`).  Its input
 is ``streaming/stack_stream.run_streaming_store_ingest``'s file-source
 stream, decoded on the executors with the same magic-byte dispatch as
-the batch pipeline (``stack_reader.decode_image_gray``).
+the batch band tasks (``stack_reader.decode_image_gray``).
 
 There is no read and no batch write: a finished acquisition goes
-through ``imaging/job.py``, which takes the fused band tasks when they
-fit the memory envelope and the ``binaryFile`` + pandas-UDF chunk-table
-pipeline otherwise.
+through ``imaging/job.py``, whose one route is the fused band tasks
+(imaging/fused.py).
 """
 
 from __future__ import annotations
@@ -101,8 +100,8 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
 
     - :meth:`write` (executors): each task assembles its stacks' wave
       slices into a z-slab (slice_key ascending), computes EVERY
-      pyramid level locally (whole-slab windowed mean — identical to
-      the batch ``build_pyramid`` semantics), and stages compressed
+      pyramid level locally (whole-slab ``windowed_mean``, the kernel
+      the batch band tasks use), and stages compressed
       chunks under ``<root>/.staging/<uuid>/`` — slab-LOCAL cz, final
       keys unknown until commit, each padded to the existing store's
       chunk shape so promotion is a plain move.  Pixel bytes never

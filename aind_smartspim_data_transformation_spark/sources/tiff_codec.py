@@ -3,7 +3,7 @@
 The reference reads PNG *and* TIFF stacks through pims
 (`/root/reference/src/aind_smartspim_data_transformation/io/readers.py:112-184`;
 `compress/png_to_zarr.py:459-500` builds a lazy per-file TIFF reader).
-This container has no tifffile/pillow, so the decode UDF is backed by
+This container has no tifffile/pillow, so slice decode is backed by
 this minimal codec built on ``struct`` + ``zlib`` + ``numpy`` only
 (TIFF 6.0 is a public Adobe/ISO spec).  Supports what the imaging
 plane needs:

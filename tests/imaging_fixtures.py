@@ -4,6 +4,11 @@ Mirrors the reference fixture layout (FIXTURES.md §1): 2 channels ×
 2 cols × 2 stacks-per-col, 2 slices each — but with deterministic
 synthetic pixels (seed 42) and configurable slice size so tests stay
 fast.  acquisition.json carries the golden scale [1.8, 1.8, 2.0] (XYZ).
+
+Also the helpers the imaging tests share: a one-stack tree from a
+volume, the fused ingest at the fixture's voxel size, the imaging job
+with its store's bytes, the numpy ``windowed_mean`` oracle over a
+written store, and a byte snapshot of a store.
 """
 
 from __future__ import annotations
@@ -70,20 +75,106 @@ def make_dataset(
     return arrays
 
 
-def run_job_on_route(spark, settings, route: str) -> dict:
-    """Run the imaging job and assert the route it took.  ``"fused"``
-    runs at the default memory envelope, which every test geometry
-    fits; ``"udf"`` patches the envelope to 0 so the chunk-table
-    pipeline runs instead."""
-    import pytest
+def make_stack(root: Path, vol: np.ndarray, encode=None) -> tuple[str, str]:
+    """One-stack SmartSPIM tree of ``vol``'s slices under ``root``, with
+    the acquisition.json and derivatives folder the job reads.  Slice z
+    is written as ``<z>.png`` with ``encode(z, plane)`` bytes (PNG by
+    default; content sniffing, not the extension, picks the codec).
+    Returns the stack's (channel, stack)."""
+    ch, col, stack = CHANNELS[0], COLS[0], f"{COLS[0]}_{ROWS[0]}"
+    d = root / "SmartSPIM" / ch / col / stack
+    d.mkdir(parents=True)
+    for z, plane in enumerate(vol):
+        data = encode(z, plane) if encode else encode_png_gray(plane)
+        (d / f"{z:06d}.png").write_bytes(data)
+    (root / "derivatives").mkdir(exist_ok=True)
+    (root / "acquisition.json").write_text(
+        json.dumps(
+            {
+                "tiles": [
+                    {
+                        "channel": {"channel_name": "445"},
+                        "coordinate_transformations": [
+                            {"type": "scale", "scale": [1.8, 1.8, 2.0]}
+                        ],
+                        "file_name": f"{ch}/{col}/{stack}/",
+                    }
+                ]
+            }
+        )
+    )
+    return ch, stack
 
-    from aind_smartspim_data_transformation_spark.imaging import fused
+
+def ingest(spark, src: Path, out: Path, chunk, n_levels: int, factors=(2, 2, 2), **kw):
+    """The fused ingest of the tree at ``src`` (its ``SmartSPIM``
+    folder) into ``out`` at the fixture's voxel size; ``kw`` goes to
+    ``run_fused_ingest``.  Returns (stack groups, metrics)."""
+    from aind_smartspim_data_transformation_spark.imaging.fused import (
+        run_fused_ingest,
+    )
+
+    return run_fused_ingest(
+        spark,
+        str(src / "SmartSPIM"),
+        str(out),
+        voxel_size_zyx=[2.0, 1.8, 1.8],
+        scale_factor_zyx=list(factors),
+        chunk_zyx=list(chunk),
+        n_levels=n_levels,
+        **kw,
+    )
+
+
+def job_store(spark, root: Path, out: Path, chunk, n_levels: int, on_error="fail"):
+    """Run the imaging job on the tree at ``root`` into ``out``;
+    returns (the store's bytes, the job response)."""
+    from aind_smartspim_data_transformation_spark.config.settings import (
+        ImagingJobSettings,
+    )
     from aind_smartspim_data_transformation_spark.imaging.job import run_imaging_job
 
-    with pytest.MonkeyPatch.context() as mp:
-        if route == "udf":
-            mp.setattr(fused, "FUSED_MAX_TASK_BYTES", 0)
-        resp = run_imaging_job(spark, settings)
-    assert resp["status_code"] == 200
-    assert resp["route"] == route
-    return resp
+    resp = run_imaging_job(
+        spark,
+        ImagingJobSettings(
+            input_source=str(root),
+            output_directory=str(out),
+            chunk_size=list(chunk),
+            downsample_levels=n_levels,
+            on_error=on_error,
+        ),
+    )
+    assert resp["status_code"] == 200 and resp["route"] == "fused"
+    return tree_bytes(out), resp
+
+
+def assert_pyramid(group: str, vol: np.ndarray, n_levels: int, factors=(2, 2, 2)):
+    """The numpy oracle: level L of the store at ``group`` equals the
+    L-fold ``windowed_mean`` of ``vol``, at every one of ``n_levels``
+    levels, and the store has no further level."""
+    from aind_smartspim_data_transformation_spark.imaging.pyramid import windowed_mean
+    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+        _fs_for,
+        read_zarr_level,
+    )
+
+    fs, gpath = _fs_for(group)
+    with fs.open_input_stream(f"{gpath}/.zattrs") as f:
+        datasets = json.loads(f.read().decode())["multiscales"][0]["datasets"]
+    assert len(datasets) == n_levels, (group, len(datasets))
+    expect = vol
+    for lvl in range(n_levels):
+        np.testing.assert_array_equal(
+            read_zarr_level(group, lvl), expect, err_msg=f"{group} level {lvl}"
+        )
+        expect = windowed_mean(expect, factors)
+
+
+def tree_bytes(out: Path) -> dict[str, bytes]:
+    """Every file under ``out`` by relative path: a byte-level store
+    snapshot for identity checks."""
+    return {
+        str(p.relative_to(out)): p.read_bytes()
+        for p in sorted(out.rglob("*"))
+        if p.is_file()
+    }

@@ -311,38 +311,28 @@ def test_tiff_stack_tree_golden(spark, tmp_path):
     """Mirror of the PNG golden-shape test over a TIFF acquisition
     (reference `tests/test_smartspim_job.py:138-150` exercises extension
     handling; our scan admits .tif and the decode path must deliver)."""
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-        assemble_array,
-    )
-    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        read_stack_tree,
-    )
-    from tests.imaging_fixtures import make_dataset
+    from tests.imaging_fixtures import assert_pyramid, ingest, make_dataset
 
-    arrays = make_dataset(tmp_path, fmt="tif")
-    chunks = read_stack_tree(spark, str(tmp_path / "SmartSPIM"), chunk_z=64).filter(
-        "channel = 'Ex_445_Em_469' AND stack = '432380_504340'"
+    arrays = make_dataset(tmp_path / "src", fmt="tif")
+    ingest(spark, tmp_path / "src", tmp_path / "out", (64, 64, 64), 2)
+    assert_pyramid(
+        f"{tmp_path}/out/Ex_445_Em_469/432380_504340.ome.zarr",
+        arrays["Ex_445_Em_469/432380_504340"],
+        2,
     )
-    got = assemble_array(chunks, 64)
-    assert np.array_equal(got, arrays["Ex_445_Em_469/432380_504340"])
 
 
 def test_mixed_png_tiff_stack(spark, tmp_path):
     """One acquisition mixing .png and .tif slices decodes seamlessly."""
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-        assemble_array,
-    )
-    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        read_stack_tree,
-    )
-    from tests.imaging_fixtures import make_dataset
+    from tests.imaging_fixtures import assert_pyramid, ingest, make_dataset
 
-    arrays = make_dataset(tmp_path, fmt="mixed")
-    chunks = read_stack_tree(spark, str(tmp_path / "SmartSPIM"), chunk_z=64).filter(
-        "channel = 'Ex_561_Em_600' AND stack = '464780_530260'"
+    arrays = make_dataset(tmp_path / "src", fmt="mixed")
+    ingest(spark, tmp_path / "src", tmp_path / "out", (64, 64, 64), 2)
+    assert_pyramid(
+        f"{tmp_path}/out/Ex_561_Em_600/464780_530260.ome.zarr",
+        arrays["Ex_561_Em_600/464780_530260"],
+        2,
     )
-    got = assemble_array(chunks, 64)
-    assert np.array_equal(got, arrays["Ex_561_Em_600/464780_530260"])
 
 
 @given(_images(), st.integers(0, 4), st.data())

@@ -10,25 +10,18 @@ from aind_smartspim_data_transformation_spark.functions.imaging_meta import (
     parse_emission_wavelength,
     wavelength_to_hex,
 )
-from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-    assemble_array,
-    build_pyramid,
-    windowed_mean,
-)
+from aind_smartspim_data_transformation_spark.imaging.pyramid import windowed_mean
 from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
     read_zarr_level,
-    write_ome_zarr_all,
 )
 from aind_smartspim_data_transformation_spark.sources.acquisition import (
     get_voxel_resolution,
 )
 from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-    decode_slices_to_tiles,
     list_stack_files,
-    read_stack_tree,
     scan_stack_files,
 )
-from tests.imaging_fixtures import make_dataset
+from tests.imaging_fixtures import assert_pyramid, ingest, make_dataset, make_stack
 
 
 @pytest.fixture(scope="module")
@@ -36,6 +29,15 @@ def dataset(tmp_path_factory):
     root = tmp_path_factory.mktemp("smartspim")
     arrays = make_dataset(root)
     return root, arrays
+
+
+@pytest.fixture(scope="module")
+def store(spark, dataset, tmp_path_factory):
+    """The fixture tree ingested at 64³ chunks and 3 levels."""
+    root, _ = dataset
+    out = tmp_path_factory.mktemp("store")
+    ingest(spark, root, out, (64, 64, 64), 3)
+    return out
 
 
 def test_scan_finds_all_slices(spark, dataset):
@@ -49,57 +51,30 @@ def test_scan_finds_all_slices(spark, dataset):
     assert len(stacks) == 8
 
 
-def test_decode_matches_source_pixels(spark, dataset):
-    root, arrays = dataset
-    files = scan_stack_files(spark, str(root / "SmartSPIM"))
-    # no Y/X tiling: each slice is one full-plane tile
-    tiles = decode_slices_to_tiles(files, chunk_z=2).filter(
-        "channel = 'Ex_445_Em_469' AND stack = '432380_504340'"
+def test_decode_matches_source_pixels(dataset):
+    """Each listed slice of a stack, decoded by the band tasks' decoder
+    in listing order, is the source plane at that z."""
+    from aind_smartspim_data_transformation_spark.imaging.fused import _open_bytes
+    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
+        decode_image_gray,
     )
-    rows = {r["z"]: r for r in tiles.collect()}
+
+    root, arrays = dataset
+    rows = [
+        r
+        for r in list_stack_files(str(root / "SmartSPIM"))
+        if r[1:3] == ("Ex_445_Em_469", "432380_504340")
+    ]
     src = arrays["Ex_445_Em_469/432380_504340"]
     assert len(rows) == src.shape[0]
-    for z, r in rows.items():
-        assert (r["cy"], r["cx"]) == (0, 0)
-        got = np.frombuffer(r["data"], dtype=np.uint16).reshape(r["dy"], r["dx"])
-        assert np.array_equal(got, src[z])
+    for z, r in enumerate(rows):
+        assert np.array_equal(decode_image_gray(_open_bytes(r[0])), src[z])
 
 
-def test_ingest_never_shuffles_raw_content(spark, dataset):
-    """The z-rank window runs on a content-pruned scan projection and
-    rejoins by broadcast: no Exchange in the ingest plan may carry the
-    raw binaryFile `content` column (VERDICT r3 scale defect — the old
-    window-before-decode plan shuffled every raw byte AND hashed all
-    slices of a stack onto one task)."""
-    import re
-
-    root, _ = dataset
-    df = read_stack_tree(spark, str(root / "SmartSPIM"), chunk_z=2)
-    fmt = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    txt = df._jdf.queryExecution().explainString(fmt)
-    # formatted explain prints one "(N) NodeName" block per node with an
-    # "Input [...]" / "Output [...]" line naming the columns it carries
-    blocks = re.split(r"\n(?=\(\d+\) )", txt)
-    exchanges = [b for b in blocks if b.startswith("(") and " Exchange" in b.splitlines()[0]]
-    assert exchanges, "expected at least the chunk-assembly Exchange"
-    for b in exchanges:
-        assert "content#" not in b, f"Exchange carries raw content:\n{b}"
-    # the pruned rank-side scan must not read bytes at all
-    scans = [b for b in blocks if "Scan binaryFile" in b.splitlines()[0]]
-    assert any("ReadSchema: struct<path:string>" in b for b in scans), (
-        "z-rank side should scan path only"
-    )
-
-
-def test_stack_shape_golden(spark, dataset):
+def test_stack_shape_golden(store, dataset):
     """Reference golden: stack assembles to (n_slices, H, W) (SURVEY §5)."""
-    root, arrays = dataset
-    chunks = read_stack_tree(spark, str(root / "SmartSPIM"), chunk_z=64).filter(
-        "channel = 'Ex_445_Em_469' AND stack = '432380_504340'"
-    )
-    vol = assemble_array(chunks, 64)
+    _, arrays = dataset
+    vol = read_zarr_level(f"{store}/Ex_445_Em_469/432380_504340.ome.zarr", 0)
     assert vol.shape == (2, 64, 80)
     assert np.array_equal(vol, arrays["Ex_445_Em_469/432380_504340"])
 
@@ -127,8 +102,8 @@ def test_unknown_extension_rejected_by_listing_and_job(spark, tmp_path):
 
 def test_list_stack_files_matches_binaryfile_scan(spark, tmp_path):
     """The driver listing that plans the fused ingest and the
-    ``binaryFile`` scan the chunk-table pipeline reads must agree row
-    for row: hidden files and directories, metadata JSON, an
+    ``binaryFile`` scan the content digest reads must agree row for
+    row: hidden files and directories, metadata JSON, an
     upper-case extension and a channel-less file included."""
     import os
 
@@ -190,56 +165,29 @@ def test_windowed_mean_oracle():
                 assert got[z, y, x] == np.uint16(win.astype(np.float64).mean())
 
 
-def test_pyramid_matches_numpy(spark, dataset):
-    root, arrays = dataset
-    chunks = read_stack_tree(spark, str(root / "SmartSPIM"), chunk_z=64).filter(
-        "channel = 'Ex_561_Em_600' AND stack = '464780_530260'"
-    )
-    levels = build_pyramid(chunks, (2, 2, 2), 3, persist_levels=False)
+def test_pyramid_matches_numpy(store, dataset):
+    _, arrays = dataset
     src = arrays["Ex_561_Em_600/464780_530260"]
     expect = src
     for lvl in range(3):
-        got = assemble_array(levels[lvl], 64)
+        got = read_zarr_level(f"{store}/Ex_561_Em_600/464780_530260.ome.zarr", lvl)
         assert np.array_equal(got, expect), f"level {lvl}"
         expect = windowed_mean(expect, (2, 2, 2))
 
 
-def test_zarr_roundtrip(spark, dataset, tmp_path):
-    root, arrays = dataset
-    chunks = read_stack_tree(spark, str(root / "SmartSPIM"), chunk_z=64).filter(
-        "channel = 'Ex_445_Em_469' AND stack = '432380_530260'"
+def test_zarr_roundtrip(store, dataset):
+    _, arrays = dataset
+    assert_pyramid(
+        f"{store}/Ex_445_Em_469/432380_530260.ome.zarr",
+        arrays["Ex_445_Em_469/432380_530260"],
+        3,
     )
-    levels = build_pyramid(chunks, (2, 2, 2), 3, persist_levels=False)
-    [group] = write_ome_zarr_all(
-        levels,
-        str(tmp_path / "out"),
-        voxel_size_zyx=[2.0, 1.8, 1.8],
-        scale_factor_zyx=[2, 2, 2],
-        chunk_zyx=[64, 64, 64],
-    )
-    src = arrays["Ex_445_Em_469/432380_530260"]
-    expect = src
-    for lvl in range(3):
-        got = read_zarr_level(group, lvl)
-        assert np.array_equal(got, expect), f"level {lvl}"
-        expect = windowed_mean(expect, (2, 2, 2))
 
 
-def test_zarr_ngff_metadata(spark, dataset, tmp_path):
+def test_zarr_ngff_metadata(store):
     import json
 
-    root, _ = dataset
-    chunks = read_stack_tree(spark, str(root / "SmartSPIM"), chunk_z=64).filter(
-        "channel = 'Ex_561_Em_600' AND stack = '432380_504340'"
-    )
-    levels = build_pyramid(chunks, (2, 2, 2), 2, persist_levels=False)
-    [group] = write_ome_zarr_all(
-        levels,
-        str(tmp_path / "out2"),
-        voxel_size_zyx=[2.0, 1.8, 1.8],
-        scale_factor_zyx=[2, 2, 2],
-        chunk_zyx=[64, 64, 64],
-    )
+    group = f"{store}/Ex_561_Em_600/432380_504340.ome.zarr"
     attrs = json.loads((open(f"{group}/.zattrs")).read())
     ms = attrs["multiscales"][0]
     assert [a["name"] for a in ms["axes"]] == ["t", "c", "z", "y", "x"]
@@ -303,41 +251,33 @@ def test_windowed_mean_property(case):
         assert got[idx] == expect
 
 
-def test_downsample_step_has_no_shuffle(spark, dataset):
+def test_downsample_step_has_no_shuffle(spark):
     """One pyramid level = mapInPandas over existing partitions — the
     physical plan must contain no Exchange (SCALE.md §6)."""
     from aind_smartspim_data_transformation_spark.imaging.pyramid import (
         downsample_chunks,
     )
-    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        read_stack_tree,
-    )
 
-    root, _arrays = dataset
-    chunks = read_stack_tree(spark, str(root / "SmartSPIM"), chunk_z=2)
-    lvl1 = downsample_chunks(chunks, (2, 2, 2))
+    arr = np.arange(4 * 8 * 8, dtype=np.uint16).reshape(4, 8, 8)
+    lvl1 = downsample_chunks(_chunk_table(spark, arr, (2, 4, 4)), (2, 2, 2))
     plan = lvl1._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan.split("MapInPandas")[0]
 
 
-def test_multi_level_pyramid_has_no_shuffle(spark, dataset):
-    """Three chained pyramid levels — still zero Exchange operators."""
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import build_pyramid
-    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        read_stack_tree,
+def test_multi_level_pyramid_has_no_shuffle(spark):
+    """Two chained pyramid steps over a chunk table — still zero
+    Exchange operators, one kernel per step."""
+    from aind_smartspim_data_transformation_spark.imaging.pyramid import (
+        downsample_chunks,
     )
 
-    root, _arrays = dataset
-    chunks = read_stack_tree(spark, str(root / "SmartSPIM"), chunk_z=2)
-    levels = build_pyramid(chunks, (2, 2, 2), 3, persist_levels=False)
-    plan = levels[-1]._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan.split("MapInPandas")[0]
-    # ONE fused decode+tile kernel + one kernel per downsample step
-    # (decode and tile split share a kernel so the pixel volume makes
-    # no extra JVM↔Python round-trip); the only Exchange in the whole
-    # pipeline is the tile-keyed chunk assembly below the first
-    # MapInPandas
-    assert plan.count("MapInPandas") == 3
+    arr = np.arange(8 * 8 * 8, dtype=np.uint16).reshape(8, 8, 8)
+    lvl = _chunk_table(spark, arr, (4, 4, 4))
+    for _ in range(2):
+        lvl = downsample_chunks(lvl, (2, 2, 2))
+    plan = lvl._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert plan.count("MapInPandas") == 2
 
 
 def test_zarr_codec_none_roundtrip(spark, dataset, tmp_path):
@@ -346,18 +286,8 @@ def test_zarr_codec_none_roundtrip(spark, dataset, tmp_path):
     import json
 
     root, arrays = dataset
-    chunks = read_stack_tree(spark, str(root / "SmartSPIM"), chunk_z=64).filter(
-        "channel = 'Ex_445_Em_469' AND stack = '432380_530260'"
-    )
-    levels = build_pyramid(chunks, (2, 2, 2), 1, persist_levels=False)
-    [group] = write_ome_zarr_all(
-        levels,
-        str(tmp_path / "raw"),
-        voxel_size_zyx=[2.0, 1.8, 1.8],
-        scale_factor_zyx=[2, 2, 2],
-        chunk_zyx=[64, 64, 64],
-        compressor_name="none",
-    )
+    ingest(spark, root, tmp_path / "raw", (64, 64, 64), 1, compressor_name="none")
+    group = f"{tmp_path}/raw/Ex_445_Em_469/432380_530260.ome.zarr"
     meta = json.load(open(f"{group}/0/.zarray"))
     assert meta["compressor"] is None
     got = read_zarr_level(group, 0)
@@ -380,63 +310,32 @@ def test_zarr_codec_blosc_gated():
         assert meta["id"] == "blosc" and meta["cname"] == "zstd"
 
 
-def test_tiled_chunks_match_full_plane(spark, dataset):
+def test_tiled_chunks_match_full_plane(spark, dataset, store, tmp_path):
     """Y/X tiling (the reference's 128³-brick layout, `models.py:65-69`)
-    must be a pure re-partitioning of the same voxels: the tiled chunk
-    table reassembles to the identical array, and the tiled pyramid
-    level equals the full-plane pyramid level (tile dims stay
+    must be a pure re-partitioning of the same voxels: the tiled store
+    holds the 2×2 chunk grid and reads back the identical array, and
+    its pyramid level equals the full-plane store's (tile dims stay
     factor-aligned, so the windowed mean is tile-local either way)."""
+    import json
+
     root, arrays = dataset
-    sel = "channel = 'Ex_445_Em_469' AND stack = '432380_504340'"
+    name = "Ex_445_Em_469/432380_504340.ome.zarr"
     src = arrays["Ex_445_Em_469/432380_504340"]
-    tiled = read_stack_tree(
-        spark, str(root / "SmartSPIM"), chunk_z=64, chunk_y=32, chunk_x=48
-    ).filter(sel)
-    rows = tiled.select("cy", "cx", "dy", "dx").distinct().collect()
-    # 64×80 plane with 32×48 tiles → 2×2 grid, edge tiles truncated
-    assert {(r["cy"], r["cx"]) for r in rows} == {(0, 0), (0, 1), (1, 0), (1, 1)}
-    assert {(r["dy"], r["dx"]) for r in rows} == {(32, 48), (32, 32)}
-    assert np.array_equal(assemble_array(tiled, 64), src)
-    lvl1_tiled = assemble_array(
-        build_pyramid(tiled, (2, 2, 2), 2, persist_levels=False)[1], 64
-    )
+    ingest(spark, root, tmp_path / "tiled", (64, 32, 48), 2)
+    group = tmp_path / "tiled" / name
+    # 64×80 plane with 32×48 tiles → 2×2 grid, edge tiles padded in the
+    # store and truncated on read
+    assert json.loads((group / "0" / ".zarray").read_text())["chunks"] == [
+        1, 1, 2, 32, 48,
+    ]
+    level0 = group / "0" / "0" / "0" / "0"
+    assert {(int(p.parent.name), int(p.name)) for p in level0.glob("*/*")} == {
+        (0, 0), (0, 1), (1, 0), (1, 1),
+    }
+    assert np.array_equal(read_zarr_level(str(group), 0), src)
+    lvl1_tiled = read_zarr_level(str(group), 1)
     assert np.array_equal(lvl1_tiled, windowed_mean(src, (2, 2, 2)))
-
-
-@st.composite
-def _blocks_and_tiles(draw):
-    dz = draw(st.integers(1, 4))
-    h = draw(st.integers(1, 40))
-    w = draw(st.integers(1, 40))
-    ty = draw(st.one_of(st.none(), st.integers(1, 48)))
-    tx = draw(st.one_of(st.none(), st.integers(1, 48)))
-    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
-    block = rng.integers(0, 65535, size=(dz, h, w), dtype=np.uint16)
-    return block, ty, tx
-
-
-@given(_blocks_and_tiles())
-@settings(max_examples=80, deadline=None)
-def test_tile_plane_block_property(case):
-    """Tiling is a lossless re-partitioning: tiles are contiguous,
-    edge-truncated, and reassemble to the exact source block."""
-    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        tile_plane_block,
-    )
-
-    block, ty, tx = case
-    _, h, w = block.shape
-    ety, etx = ty or h, tx or w
-    tiles = list(tile_plane_block(block, ty, tx))
-    assert len(tiles) == (-(-h // ety)) * (-(-w // etx))
-    out = np.zeros_like(block)
-    for cy, cx, tile in tiles:
-        assert tile.flags["C_CONTIGUOUS"]
-        assert tile.shape[0] == block.shape[0]
-        assert tile.shape[1] == min(ety, h - cy * ety)
-        assert tile.shape[2] == min(etx, w - cx * etx)
-        out[:, cy * ety : cy * ety + tile.shape[1], cx * etx : cx * etx + tile.shape[2]] = tile
-    assert np.array_equal(out, block)
+    assert np.array_equal(lvl1_tiled, read_zarr_level(f"{store}/{name}", 1))
 
 
 # ---------------------------------------------------------------------------
@@ -488,79 +387,64 @@ def test_validate_pyramid_geometry():
         validate_pyramid_geometry([128, 0, 128], [2, 2, 2], 2)
 
 
-def test_build_pyramid_rejects_indivisible_geometry(spark):
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import build_pyramid
-
-    arr = np.arange(4 * 4 * 4, dtype=np.uint16).reshape(4, 4, 4)
-    chunks = _chunk_table(spark, arr, (4, 4, 4))
+def test_fused_ingest_rejects_indivisible_geometry(spark, dataset, tmp_path):
+    """Factor 3 with the default 128 chunk is refused before any task
+    runs or any file lands."""
+    root, _ = dataset
+    out = tmp_path / "out"
     with pytest.raises(ValueError, match="not divisible"):
-        build_pyramid(chunks, (3, 3, 3), 2, chunk_zyx=[128, 128, 128])
+        ingest(spark, root, out, (128, 128, 128), 2, factors=(3, 3, 3))
+    assert not out.exists()
 
 
-def test_factor3_pyramid_matches_numpy(spark):
-    """scale_factor=[3,3,3] with a divisible chunk: the distributed
-    per-chunk pyramid equals the global numpy windowed mean exactly."""
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import build_pyramid
-
+def test_factor3_pyramid_matches_numpy(spark, tmp_path):
+    """scale_factor=[3,3,3] with a divisible chunk: the per-chunk
+    pyramid the band tasks write equals the global numpy windowed mean
+    exactly."""
     rng = np.random.default_rng(33)
     arr = rng.integers(0, 65535, size=(18, 18, 27), dtype=np.uint16)
-    chunks = _chunk_table(spark, arr, (9, 9, 9))
-    levels = build_pyramid(
-        chunks, (3, 3, 3), 3, persist_levels=False, chunk_zyx=[9, 9, 9]
+    make_stack(tmp_path / "src", arr)
+    [group], _ = ingest(
+        spark, tmp_path / "src", tmp_path / "out", (9, 9, 9), 3, factors=(3, 3, 3)
     )
-    expect = arr
-    for lvl in range(3):
-        got = assemble_array(levels[lvl], 9)
-        assert np.array_equal(got, expect), f"level {lvl}"
-        expect = windowed_mean(expect, (3, 3, 3))
+    assert_pyramid(group, arr, 3, factors=(3, 3, 3))
 
 
-def test_zarr_sink_rejects_indivisible_chunks(spark, tmp_path):
-    """The sink re-validates actual chunk dims: dz=10 with factor 3 and
-    a 20-deep stack (two chunks) can't be reduced per-chunk → raise."""
-    arr = np.arange(20 * 6 * 6, dtype=np.uint16).reshape(20, 6, 6)
-    chunks = _chunk_table(spark, arr, (10, 6, 6))
+def test_zarr_sink_rejects_indivisible_chunks():
+    """The store planner re-validates actual chunk dims: dz=10 with
+    factor 3 and a 20-deep stack (two chunks) can't be reduced
+    per-chunk → raise."""
+    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+        plan_store_layout,
+    )
+
+    geo = [
+        {"channel": "ch", "stack": "st", "z": 20, "y": 6, "x": 6,
+         "dtype": "uint16", "cdz": 10, "cdy": 6, "cdx": 6}
+    ]
     with pytest.raises(ValueError, match="neither divisible"):
-        write_ome_zarr_all(
-            [chunks, chunks],  # 2 levels is enough to trigger the guard
-            str(tmp_path),
-            voxel_size_zyx=[2.0, 1.8, 1.8],
-            scale_factor_zyx=[3, 3, 3],
-            chunk_zyx=[10, 6, 6],
-        )
+        plan_store_layout(geo, "/unused", [3, 3, 3], 2)  # 2 levels trigger it
 
 
 def test_zarr_sink_failed_level_write_leaves_no_parsing_store(spark, tmp_path):
-    """Metadata-last for the chunk-table sink: a job that dies in its
-    level-1 write must leave NO .zattrs/.zarray under the target — a
-    store that parsed as complete would read the missing level as
-    zeros.  The failure lives in the level table's own plan, so it
-    fires inside the sink's level-1 write job."""
-    from pyspark.sql import functions as F
-
+    """Metadata-last: a job that dies in its level-1 chunk writes must
+    leave NO .zattrs/.zarray/.zgroup under the target — a store that
+    parsed as complete would read the missing level as zeros.  The
+    failure is injected from outside: a regular file sits where the
+    level-1 chunk directory must go."""
     arr = np.arange(8 * 8 * 8, dtype=np.uint16).reshape(8, 8, 8)
-    channel = F.lit("Ex_488_Em_525")
-    lvl0 = _chunk_table(spark, arr, (4, 4, 4)).withColumn("channel", channel)
-    lvl1 = _chunk_table(spark, windowed_mean(arr, (2, 2, 2)), (2, 2, 2))
-
-    def explode(batches):
-        for pdf in batches:
-            raise RuntimeError("simulated level-1 write failure")
-            yield pdf
-
-    lvl1 = lvl1.withColumn("channel", channel).mapInPandas(
-        explode, schema=lvl1.schema
-    )
+    ch, stack = make_stack(tmp_path / "src", arr)
     out = tmp_path / "out"
-    with pytest.raises(Exception, match="simulated level-1 write failure"):
-        write_ome_zarr_all(
-            [lvl0, lvl1], str(out), [2.0, 1.8, 1.8], [2, 2, 2], [4, 4, 4]
-        )
-    files = [p for p in out.rglob("*") if p.is_file()] if out.exists() else []
+    group = out / ch / f"{stack}.ome.zarr"
+    group.mkdir(parents=True)
+    (group / "1").write_bytes(b"not a directory")
+    with pytest.raises(Exception, match="(?i)exist|directory"):
+        ingest(spark, tmp_path / "src", out, (4, 4, 4), 2)
+    files = [p for p in out.rglob("*") if p.is_file()]
     meta = [p for p in files if p.name in (".zattrs", ".zarray", ".zgroup")]
     assert meta == [], meta
     # level 0 was written before the failure: the job really died midway
-    assert (out / "Ex_488_Em_525" / "st.ome.zarr" / "0" / "0" / "0").is_dir()
+    assert (group / "0" / "0" / "0").is_dir()
 
 
 def test_imaging_does_not_clobber_arrow_batch_conf(spark, dataset):
@@ -569,8 +453,8 @@ def test_imaging_does_not_clobber_arrow_batch_conf(spark, dataset):
     pandas-UDF queries in the same session would silently run 32-row
     batches instead of the 4096 configured in session.py."""
     root, _ = dataset
-    chunks = read_stack_tree(spark, str(root / "SmartSPIM"), chunk_z=64)
-    chunks.limit(2).collect()  # execute decode + assembly kernels
+    files = scan_stack_files(spark, str(root / "SmartSPIM"))
+    files.limit(2).collect()  # execute the imaging-session scan
     assert (
         spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "4096"
     )

@@ -13,7 +13,14 @@ from aind_smartspim_data_transformation_spark.config.settings import ImagingJobS
 from aind_smartspim_data_transformation_spark.imaging.job import run_imaging_job
 from aind_smartspim_data_transformation_spark.imaging.pyramid import windowed_mean
 from aind_smartspim_data_transformation_spark.imaging.zarr_sink import read_zarr_level
-from tests.imaging_fixtures import make_dataset, run_job_on_route
+from tests.imaging_fixtures import (
+    assert_pyramid,
+    ingest,
+    job_store,
+    make_dataset,
+    make_stack,
+    tree_bytes,
+)
 
 
 @pytest.fixture(scope="module")
@@ -196,70 +203,37 @@ def test_job_partitioned_runs_cover_all_stacks(spark, tmp_path):
 
 
 def test_job_ingest_paths_write_identical_stores(spark, tmp_path):
-    """Both ingest routes — the fused band tasks and the chunk-table
-    pipeline (envelope patched to 0) — must produce byte-identical
-    zarr stores through the FULL job (chunk bytes AND metadata JSON)
-    with equal ingest metrics, and the default envelope must pick the
-    fused route at this geometry."""
+    """Both decode paths of the job — fail mode's windowed decode and
+    quarantine mode's whole-plane decode — must produce byte-identical
+    zarr stores on a clean tree through the FULL job (chunk bytes AND
+    metadata JSON), equal to the numpy oracle, with the exact ingest
+    accounting: level-0 chunk count and raw unpadded bytes."""
     root = tmp_path / "ds"
-    make_dataset(root, height=24, width=28)
+    arrays = make_dataset(root, height=24, width=28)
 
-    def run(route: str) -> tuple[dict[str, bytes], dict]:
-        out = tmp_path / f"out_{route}"
-        resp = run_job_on_route(
-            spark,
-            ImagingJobSettings(
-                input_source=str(root),
-                output_directory=str(out),
-                chunk_size=[64, 64, 64],
-                downsample_levels=2,
-            ),
-            route,
+    def run(on_error: str) -> tuple[dict[str, bytes], dict]:
+        return job_store(
+            spark, root, tmp_path / f"out_{on_error}", [64, 64, 64], 2, on_error
         )
-        return {
-            str(p.relative_to(out)): p.read_bytes()
-            for p in sorted(out.rglob("*"))
-            if p.is_file()
-        }, resp
 
-    (udf, udf_resp), (fused, fused_resp) = run("udf"), run("fused")
-    assert fused == udf
-    # metrics contract parity: fused reports the same ingest accounting
-    # VALUES the chunk-table job's Observation produces (level-0 chunk
-    # count and raw unpadded bytes)
-    assert fused_resp["metrics"] == udf_resp["metrics"]
-    assert set(fused_resp["metrics"]) == {"n_chunks", "chunk_bytes"}
+    (fail, fail_resp), (quar, quar_resp) = run("fail"), run("quarantine")
+    assert fail == quar
+    expect = {
+        "n_chunks": len(arrays),
+        "chunk_bytes": sum(a.nbytes for a in arrays.values()),
+    }
+    assert fail_resp["metrics"] == expect
+    assert quar_resp["metrics"] == {**expect, "dead_letters": []}
+    for key, vol in arrays.items():
+        assert_pyramid(f"{tmp_path}/out_fail/{key}.ome.zarr", vol, 2)
 
 
 def _one_stack_store(spark, tmp_path, name, planes, n_levels):
-    """A one-stack OME-Zarr store of ``planes`` written by the batch
-    sink at chunk [64, 64, 64] (clamped to the stack's extents)."""
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-        build_pyramid,
-    )
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        write_ome_zarr_all,
-    )
-    from aind_smartspim_data_transformation_spark.sources.png_codec import (
-        encode_png_gray,
-    )
-    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        read_stack_tree,
-    )
-
-    src = tmp_path / f"{name}_src" / "SmartSPIM"
-    d = src / "Ex_488_Em_525" / "400000" / "400000_500000"
-    d.mkdir(parents=True)
-    for z, img in enumerate(planes):
-        (d / f"{z:06d}.png").write_bytes(encode_png_gray(img))
-    chunks = read_stack_tree(spark, str(src), chunk_z=64)
-    [group] = write_ome_zarr_all(
-        build_pyramid(chunks, (2, 2, 2), n_levels, chunk_zyx=[64, 64, 64]),
-        str(tmp_path / name),
-        voxel_size_zyx=[2.0, 1.8, 1.8],
-        scale_factor_zyx=[2, 2, 2],
-        chunk_zyx=[64, 64, 64],
-    )
+    """A one-stack OME-Zarr store of ``planes`` written by the fused
+    ingest at chunk [64, 64, 64] (clamped to the stack's extents)."""
+    src = tmp_path / f"{name}_src"
+    make_stack(src, np.asarray(planes))
+    [group], _ = ingest(spark, src, tmp_path / name, (64, 64, 64), n_levels)
     return group
 
 
@@ -433,69 +407,31 @@ def test_append_crash_fence_and_roll_forward(spark, tmp_path):
         assert "append_in_progress" not in attrs
 
 
-def test_fused_multi_slab_store_identical(spark, tmp_path):
-    """Multi-z-slab geometry through the FUSED path: 10 slices at
-    chunk_z=4 → 3 slabs (partial last), 3 y chunk-rows → multiple
-    bands.  The fused store must be byte-identical to the chunk-table
-    pipeline's, and level data must equal the numpy windowed-mean
-    oracle — this covers the slab/band boundary arithmetic the 2-slice
-    fixture never reaches (pair windows falling ON slab boundaries,
-    edge-chunk padding in the partial slab)."""
-    from aind_smartspim_data_transformation_spark.sources.png_codec import (
-        encode_png_gray,
-    )
+def test_fused_multi_slab_store_identical(spark, tmp_path, monkeypatch):
+    """Multi-z-slab geometry: 10 slices at chunk_z=4 → 3 slabs (partial
+    last), 3 y chunk-rows → multiple bands.  Level data must equal the
+    numpy windowed-mean oracle, and the store must be byte-identical to
+    the one an X-tiled band plan writes — this covers the slab/band/tile
+    boundary arithmetic the 2-slice fixture never reaches (pair windows
+    falling ON slab boundaries, edge-chunk padding in the partial
+    slab)."""
+    from aind_smartspim_data_transformation_spark.imaging import fused
 
     root = tmp_path / "ds"
-    ch, col, stack = "Ex_445_Em_469", "432380", "432380_504340"
-    d = root / "SmartSPIM" / ch / col / stack
-    d.mkdir(parents=True)
     rng = np.random.default_rng(7)
     vol = rng.integers(0, 65535, size=(10, 12, 16)).astype(np.uint16)
-    for z in range(10):
-        (d / f"{z:06d}.png").write_bytes(encode_png_gray(vol[z]))
-    (root / "derivatives").mkdir()
-    (root / "acquisition.json").write_text(
-        json.dumps(
-            {
-                "tiles": [
-                    {
-                        "channel": {"channel_name": "445"},
-                        "coordinate_transformations": [
-                            {"type": "scale", "scale": [1.8, 1.8, 2.0]}
-                        ],
-                        "file_name": f"{ch}/{col}/{stack}/",
-                    }
-                ]
-            }
-        )
-    )
+    ch, stack = make_stack(root, vol)
 
-    def run(route):
-        out = tmp_path / f"out_{route}"
-        run_job_on_route(
-            spark,
-            ImagingJobSettings(
-                input_source=str(root),
-                output_directory=str(out),
-                chunk_size=[4, 4, 4],
-                downsample_levels=3,
-            ),
-            route,
-        )
-        return out, {
-            str(p.relative_to(out)): p.read_bytes()
-            for p in sorted(out.rglob("*"))
-            if p.is_file()
-        }
-
-    (out_f, fused), (_, udf) = run("fused"), run("udf")
-    assert fused == udf
-    # numpy oracle at every level
-    g = f"{out_f}/{ch}/{stack}.ome.zarr"
-    expect = vol
-    for lvl in range(3):
-        assert np.array_equal(read_zarr_level(g, lvl), expect)
-        expect = windowed_mean(expect, (2, 2, 2))
+    store, _ = job_store(spark, root, tmp_path / "out", [4, 4, 4], 3)
+    g = f"{tmp_path}/out/{ch}/{stack}.ome.zarr"
+    assert_pyramid(g, vol, 3)
+    # 12×16 uint16: 384 B decoded span; one-chunk-row bands of 2·4·4·2 B
+    # per column → a 1000 B envelope leaves 2-column x-tiles
+    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 1000)
+    geo = fused.probe_stack_geometry(spark, str(root / "SmartSPIM"))
+    assert fused._band_plan(geo, [4, 4, 4], 32)[(ch, stack)][2:] == (2, 2)
+    tiled, _ = job_store(spark, root, tmp_path / "out_tiled", [4, 4, 4], 3)
+    assert tiled == store
 
 
 def test_fused_rerun_and_partial_damage_repair(spark, tmp_path):
@@ -547,7 +483,7 @@ def test_fused_mixed_png_tiff_stack(spark, tmp_path):
     slices: exercises the header-only geometry probe's TIFF fallback
     (IFD at the file tail — the 64-byte fast path cannot see it) and
     the band tasks' TIFF strip-window decode inside the real pipeline.
-    Store must equal the chunk-table pipeline's and the numpy oracle."""
+    Store must equal the numpy oracle."""
     from aind_smartspim_data_transformation_spark.sources.png_codec import (
         encode_png_gray,
     )
@@ -555,130 +491,40 @@ def test_fused_mixed_png_tiff_stack(spark, tmp_path):
         encode_tiff_gray,
     )
 
+    def encode(z, plane):  # extension stays .png — content sniffing must win
+        if z % 2:
+            return encode_tiff_gray(plane, compression=8, rows_per_strip=4)
+        return encode_png_gray(plane)
+
     root = tmp_path / "ds"
-    ch, col, stack = "Ex_445_Em_469", "432380", "432380_504340"
-    d = root / "SmartSPIM" / ch / col / stack
-    d.mkdir(parents=True)
     rng = np.random.default_rng(11)
     vol = rng.integers(0, 65535, size=(6, 12, 16)).astype(np.uint16)
-    for z in range(6):
-        if z % 2:  # extension stays .png — content sniffing must win
-            (d / f"{z:06d}.png").write_bytes(
-                encode_tiff_gray(vol[z], compression=8, rows_per_strip=4)
-            )
-        else:
-            (d / f"{z:06d}.png").write_bytes(encode_png_gray(vol[z]))
-    (root / "derivatives").mkdir()
-    (root / "acquisition.json").write_text(
-        json.dumps(
-            {
-                "tiles": [
-                    {
-                        "channel": {"channel_name": "445"},
-                        "coordinate_transformations": [
-                            {"type": "scale", "scale": [1.8, 1.8, 2.0]}
-                        ],
-                        "file_name": f"{ch}/{col}/{stack}/",
-                    }
-                ]
-            }
-        )
-    )
-
-    def run(route):
-        out = tmp_path / f"out_{route}"
-        run_job_on_route(
-            spark,
-            ImagingJobSettings(
-                input_source=str(root),
-                output_directory=str(out),
-                chunk_size=[4, 4, 4],
-                downsample_levels=2,
-            ),
-            route,
-        )
-        return out, {
-            str(p.relative_to(out)): p.read_bytes()
-            for p in sorted(out.rglob("*"))
-            if p.is_file()
-        }
-
-    (out_f, fused), (_, udf) = run("fused"), run("udf")
-    assert fused == udf
-    g = f"{out_f}/{ch}/{stack}.ome.zarr"
-    expect = vol
-    for lvl in range(2):
-        assert np.array_equal(read_zarr_level(g, lvl), expect)
-        expect = windowed_mean(expect, (2, 2, 2))
+    ch, stack = make_stack(root, vol, encode)
+    job_store(spark, root, tmp_path / "out", [4, 4, 4], 2)
+    assert_pyramid(f"{tmp_path}/out/{ch}/{stack}.ome.zarr", vol, 2)
 
 
 def test_fused_even_band_count_folds_pairwise(spark, tmp_path):
     """16 y-rows at chunk 4 → 4 bands → folds {0,3} and {1,2}: every
     task is a PAIR (no middle singleton) — covers the two-band decode
     and buffer routing for even band counts.  Store must equal the
-    chunk-table pipeline's and the numpy oracle."""
-    from aind_smartspim_data_transformation_spark.sources.png_codec import (
-        encode_png_gray,
-    )
-
-    root = tmp_path / "ds"
-    ch, col, stack = "Ex_445_Em_469", "432380", "432380_504340"
-    d = root / "SmartSPIM" / ch / col / stack
-    d.mkdir(parents=True)
-    rng = np.random.default_rng(13)
-    vol = rng.integers(0, 65535, size=(4, 16, 8)).astype(np.uint16)
-    for z in range(4):
-        (d / f"{z:06d}.png").write_bytes(encode_png_gray(vol[z]))
-    (root / "derivatives").mkdir()
-    (root / "acquisition.json").write_text(
-        json.dumps(
-            {
-                "tiles": [
-                    {
-                        "channel": {"channel_name": "445"},
-                        "coordinate_transformations": [
-                            {"type": "scale", "scale": [1.8, 1.8, 2.0]}
-                        ],
-                        "file_name": f"{ch}/{col}/{stack}/",
-                    }
-                ]
-            }
-        )
-    )
+    numpy oracle."""
     from aind_smartspim_data_transformation_spark.imaging.fused import (
         _band_plan,
         probe_stack_geometry,
     )
 
+    root = tmp_path / "ds"
+    rng = np.random.default_rng(13)
+    vol = rng.integers(0, 65535, size=(4, 16, 8)).astype(np.uint16)
+    ch, stack = make_stack(root, vol)
+
     geo = probe_stack_geometry(spark, str(root))
-    nb, per_band = _band_plan(geo, [4, 4, 4], 32)[(ch, f"{col}_504340")]
-    assert nb == 4 and per_band == 1  # the even-fold shape this pins
-
-    def run(route):
-        out = tmp_path / f"out_{route}"
-        run_job_on_route(
-            spark,
-            ImagingJobSettings(
-                input_source=str(root),
-                output_directory=str(out),
-                chunk_size=[4, 4, 4],
-                downsample_levels=2,
-            ),
-            route,
-        )
-        return out, {
-            str(p.relative_to(out)): p.read_bytes()
-            for p in sorted(out.rglob("*"))
-            if p.is_file()
-        }
-
-    (out_f, fused), (_, udf) = run("fused"), run("udf")
-    assert fused == udf
-    g = f"{out_f}/{ch}/{stack}.ome.zarr"
-    expect = vol
-    for lvl in range(2):
-        assert np.array_equal(read_zarr_level(g, lvl), expect)
-        expect = windowed_mean(expect, (2, 2, 2))
+    nb, per_band, n_xt, _ = _band_plan(geo, [4, 4, 4], 32)[(ch, stack)]
+    # the even-fold shape this pins
+    assert nb == 4 and per_band == 1 and n_xt == 1
+    job_store(spark, root, tmp_path / "out", [4, 4, 4], 2)
+    assert_pyramid(f"{tmp_path}/out/{ch}/{stack}.ome.zarr", vol, 2)
 
 
 def _crash_before_finalize(monkeypatch, run):
@@ -780,7 +626,8 @@ def test_fused_mid_job_kill_resume_skips_completed_bands(
         [4, 4, 4],
         spark.sparkContext.defaultParallelism,
     )
-    nb, per_band = plan[(ch, stack)]
+    nb, per_band, n_xt, _ = plan[(ch, stack)]
+    assert n_xt == 1  # a group is (slab, fold)
     n_slabs, n_cy, n_cx = 3, 3, 4
     all_keys = {
         (ch, stack, slab, fold)
@@ -1198,66 +1045,45 @@ def test_fused_job_is_two_jobs_without_shuffle(spark, tmp_path):
 
 
 def test_auto_routing_boundary_on_task_budget(spark, tmp_path, monkeypatch):
-    """VERDICT r8 ask #5 (auto-routing half): the job must take the
-    fused path when the probed per-task band buffer fits
-    FUSED_MAX_TASK_BYTES EXACTLY, and fall back to the chunk-table
-    pipeline one byte past it, in both on_error modes — with
-    byte-identical stores either side of the boundary (the budget
-    changes the ROUTE, never the output).  tools/fused_memory_probe.py measures the same boundary
-    at a bigger geometry (wall + peak tree RSS, SCALE.md §6g)."""
+    """VERDICT r8 ask #5: at an envelope that fits a full-width band
+    EXACTLY the plan keeps whole-width bands, and one byte less splits
+    the bands along X — in both on_error modes, with byte-identical
+    stores either side of the boundary (the envelope changes the task
+    split, never the output)."""
     from aind_smartspim_data_transformation_spark.imaging import fused
 
     root = tmp_path / "ds"
     make_dataset(root, height=24, width=28)
+    chunk = [64, 64, 8]  # 28 px → 4 chunk columns to split
     geo = fused.probe_stack_geometry(spark, f"{root}/SmartSPIM")
-    task_bytes = fused.fused_task_bytes(
-        geo, [64, 64, 64], spark.sparkContext.defaultParallelism
-    )
-
-    def run(tag: str, cap: int, on_error: str):
-        monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", cap)
-        out = tmp_path / f"out_{tag}_{on_error}"
-        resp = run_imaging_job(
-            spark,
-            ImagingJobSettings(
-                input_source=str(root),
-                output_directory=str(out),
-                chunk_size=[64, 64, 64],
-                downsample_levels=2,
-                on_error=on_error,
-            ),
-        )
-        assert resp["status_code"] == 200
-        return {
-            str(p.relative_to(out)): p.read_bytes()
-            for p in sorted(out.rglob("*"))
-            if p.is_file()
-        }, resp
+    # two one-chunk-row bands of 2 slices × 28 px, plus the 24×28 span
+    fits = 2 * 2 * 64 * 28 * 2 + 24 * 28 * 2
 
     stores = []
     for on_error in ("fail", "quarantine"):
-        at, at_resp = run("at", task_bytes, on_error)  # fits exactly → fused
-        over, over_resp = run("over", task_bytes - 1, on_error)  # → fallback
-        assert at_resp["route"] == "fused"
-        assert over_resp["route"] == "udf"
-        stores += [at, over]
-    # the route never changes the bytes
+        for tag, cap, n_xt in (("at", fits, 1), ("over", fits - 1, 2)):
+            monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", cap)
+            plans = fused._band_plan(geo, chunk, spark.sparkContext.defaultParallelism)
+            assert {p[2] for p in plans.values()} == {n_xt}, (tag, plans)
+            store, _ = job_store(
+                spark, root, tmp_path / f"out_{tag}_{on_error}", chunk, 2, on_error
+            )
+            stores.append(store)
+    # the envelope never changes the bytes
     assert all(st == stores[0] for st in stores)
 
 
 def test_band_plan_shrinks_to_memory_envelope(monkeypatch):
     """r11 (SCALE.md §6m): a deep acquisition must NARROW its bands to
-    fit the per-task envelope, not tip the whole job off the fused
-    path.  This is the measured regression geometry — 4 stacks × 320
-    slices of 2000×1600 uint16 at 128³ chunks: the want-derived plan
-    picks 2-chunk-row bands whose folded buffers overshoot 256 MiB by
-    ~0.04%, and before the cap the job fell back to the
-    chunk-table pipeline at half the fused throughput."""
+    fit the per-task envelope.  This is the measured regression
+    geometry — 4 stacks × 320 slices of 2000×1600 uint16 at 128³
+    chunks: the want-derived plan picks 2-chunk-row bands whose folded
+    buffers overshoot 256 MiB by ~0.04%; capped 1-chunk-row bands fit
+    at full width."""
     from aind_smartspim_data_transformation_spark.imaging import fused
     from aind_smartspim_data_transformation_spark.imaging.fused import (
         FUSED_MAX_TASK_BYTES,
         _band_plan,
-        fused_task_bytes,
     )
 
     geo = [
@@ -1272,24 +1098,21 @@ def test_band_plan_shrinks_to_memory_envelope(monkeypatch):
         for i in range(4)
     ]
     chunk = [128, 128, 128]
+
+    def task_bytes(per_band):  # two bands at full width + the span
+        return 2 * 128 * per_band * 128 * 2000 * 2 + 1600 * 2000 * 2
+
     plan = _band_plan(geo, chunk, 32)
-    nb, per_band = plan[("Ex_445_Em_469", "s0")]
-    assert per_band == 1, "cap must shrink the 2-chunk-row band"
-    assert nb == 13  # ceil(1600 / 128)
-    # and the reported worst case now fits, so auto stays fused
-    assert fused_task_bytes(geo, chunk, 32) <= FUSED_MAX_TASK_BYTES
+    # cap shrinks the 2-chunk-row band; 2000 px stays one 16-column tile
+    assert plan[("Ex_445_Em_469", "s0")] == (13, 1, 1, 16)  # ceil(1600 / 128)
+    assert task_bytes(1) <= FUSED_MAX_TASK_BYTES
 
     # uncapped want-derived plan (the pre-r11 shape) for contrast:
     # 12 slabs → want 10 → 2-chunk-row bands → 268.5 MB task > cap
     monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 1 << 40)
     loose = _band_plan(geo, chunk, 32)
-    assert loose[("Ex_445_Em_469", "s0")] == (7, 2)
-
-    # ADVICE r11: the probe must size the SAME plan the band tasks
-    # would execute — under the lifted envelope fused_task_bytes sizes
-    # the loose plan and reports its overshoot of the real envelope,
-    # while the default probe above reports the fit.
-    assert fused_task_bytes(geo, chunk, 32) > FUSED_MAX_TASK_BYTES
+    assert loose[("Ex_445_Em_469", "s0")] == (7, 2, 1, 16)
+    assert task_bytes(2) > FUSED_MAX_TASK_BYTES
 
 
 def test_band_plan_cap_never_changes_store_bytes(
@@ -1332,11 +1155,7 @@ def test_band_plan_cap_never_changes_store_bytes(
         )
         assert resp["status_code"] == 200
         assert resp["route"] == "fused"
-        return {
-            str(p.relative_to(out)): p.read_bytes()
-            for p in sorted(out.rglob("*"))
-            if p.is_file()
-        }
+        return tree_bytes(out)
 
     assert run("loose", 1 << 40) == run("tight", 6000)
 
@@ -1344,11 +1163,12 @@ def test_band_plan_cap_never_changes_store_bytes(
 def test_band_plan_invariants_hypothesis():
     """Property sweep of the capped band plan over arbitrary
     geometries (tiny planes, z < cz, single-pixel widths, all dtypes):
-    the plan must always (1) floor per_band at 1, (2) cover every y
-    chunk row exactly (no empty trailing band), (3) respect the
-    envelope whenever a single-chunk-row band can — i.e.
-    fused_task_bytes > cap implies even per_band=1 doesn't fit, and
-    (4) never produce MORE bands than chunk rows."""
+    the plan must always (1) floor per_band and per_xt at 1, (2) cover
+    every y chunk row and every x chunk column exactly once (no empty
+    trailing band or tile), (3) respect the envelope whenever a 1×1-chunk
+    tile plus one decoded span can, (4) keep whole-width bands whenever
+    a one-chunk-row full-width band fits, and (5) never produce MORE
+    bands than chunk rows or tiles than chunk columns."""
     from unittest import mock
 
     from hypothesis import given, settings
@@ -1356,65 +1176,135 @@ def test_band_plan_invariants_hypothesis():
 
     from aind_smartspim_data_transformation_spark.imaging import fused
 
-    @settings(max_examples=200, deadline=None)
+    @settings(max_examples=300, deadline=None)
     @given(
         z=st.integers(1, 4096),
         y=st.integers(1, 8192),
         x=st.integers(1, 8192),
         cz=st.integers(1, 256),
         cy=st.integers(1, 256),
+        cx=st.integers(1, 256),
         par=st.integers(1, 64),
         dtype=st.sampled_from(["uint8", "uint16", "float32"]),
         cap=st.integers(1, 1 << 30),
     )
-    def check(z, y, x, cz, cy, par, dtype, cap):
+    def check(z, y, x, cz, cy, cx, par, dtype, cap):
         geo = [
             {"channel": "C", "stack": "s0", "z": z, "y": y, "x": x,
              "dtype": dtype}
         ]
-        chunk = [cz, cy, 1]
         with mock.patch.object(fused, "FUSED_MAX_TASK_BYTES", cap):
-            plan = fused._band_plan(geo, chunk, par)
-        nb, per_band = plan[("C", "s0")]
-        n_cy = -(-y // cy)
-        assert per_band >= 1
+            plan = fused._band_plan(geo, [cz, cy, cx], par)
+        nb, per_band, n_xt, per_xt = plan[("C", "s0")]
+        n_cy, n_cx = -(-y // cy), -(-x // cx)
+        assert per_band >= 1 and per_xt >= 1
         assert nb == -(-n_cy // per_band)  # no empty trailing bands
         assert nb <= n_cy
+        assert n_xt <= n_cx
+        # the x-tiles [xt·per_xt, (xt+1)·per_xt) cover each column once
+        cols = [
+            c
+            for xt in range(n_xt)
+            for c in range(xt * per_xt, min((xt + 1) * per_xt, n_cx))
+        ]
+        assert cols == list(range(n_cx))
         item = np.dtype(dtype).itemsize
-        one_row = 2 * min(cz, z) * min(cy, y) * x * item + y * x * item
+        span = y * x * item
+        zz = min(cz, z)
+        if 2 * zz * cy * x * item + span <= cap:
+            assert n_xt == 1
+        one_tile = 2 * zz * min(cy, y) * min(cx, x) * item + span
         band_rows = min(per_band * cy, y)
-        capped_worst = 2 * min(cz, z) * band_rows * x * item + y * x * item
-        if capped_worst > cap:
+        tile_cols = min(per_xt * cx, x)
+        worst = 2 * zz * band_rows * tile_cols * item + span
+        if worst > cap:
             # the envelope was missed — only legal when even a
-            # single-chunk-row band cannot fit
-            assert per_band == 1 and one_row > cap
+            # 1×1-chunk tile cannot fit
+            assert per_band == 1 and per_xt == 1 and one_tile > cap
 
     check()
 
 
-def test_band_plan_giant_plane_still_falls_back():
-    """Even single-chunk-row bands can't fit a wide-enough plane; the
-    plan floors at per_band=1 and fused_task_bytes honestly exceeds
-    the envelope — job.py must keep the chunk-table
-    fallback for exactly this case."""
+def test_band_plan_giant_plane_splits_in_x():
+    """A plane too wide for even a one-chunk-row band splits its bands
+    along X: 8192² × 256 uint16 at 128³ chunks plans 64 one-row bands of
+    4 tiles × 16 chunk columns, whose folded task fits 256 MiB."""
     from aind_smartspim_data_transformation_spark.imaging.fused import (
         FUSED_MAX_TASK_BYTES,
         _band_plan,
-        fused_task_bytes,
     )
 
     geo = [
-        {
-            "channel": "C",
-            "stack": "s0",
-            "z": 256,
-            "y": 4096,
-            # one chunk row alone: 2·128·128·600k·2 ≈ 39 GB ≫ envelope
-            "x": 600_000,
-            "dtype": "uint16",
-        }
+        {"channel": "C", "stack": "s0", "z": 256, "y": 8192, "x": 8192,
+         "dtype": "uint16"}
     ]
-    chunk = [128, 128, 128]
-    plan = _band_plan(geo, chunk, 32)
-    assert plan[("C", "s0")][1] == 1  # floored, never zero
-    assert fused_task_bytes(geo, chunk, 32) > FUSED_MAX_TASK_BYTES
+    plan = _band_plan(geo, [128, 128, 128], 32)
+    assert plan[("C", "s0")] == (64, 1, 4, 16)
+    # full width: 2·128·128·8192·2 = 512 MiB, over the envelope alone
+    assert 2 * 128 * 128 * 8192 * 2 > FUSED_MAX_TASK_BYTES
+    # one tile pair + the decoded span
+    assert 2 * 128 * 128 * 16 * 128 * 2 + 8192 * 8192 * 2 <= FUSED_MAX_TASK_BYTES
+
+
+def test_band_plan_single_plane_over_cap_floors_and_ingests(
+    spark, tmp_path, monkeypatch
+):
+    """A plane whose decoded span ALONE exceeds the envelope: no split
+    can fit it, so the plan floors at one chunk row by one chunk column
+    (per_band = per_xt = 1) — and the job still writes the numpy
+    oracle's store."""
+    from aind_smartspim_data_transformation_spark.imaging import fused
+
+    root = tmp_path / "ds"
+    rng = np.random.default_rng(5)
+    vol = rng.integers(0, 65535, size=(6, 12, 16)).astype(np.uint16)
+    ch, stack = make_stack(root, vol)
+    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 100)  # span: 384 B
+    geo = fused.probe_stack_geometry(spark, str(root / "SmartSPIM"))
+    _, per_band, n_xt, per_xt = fused._band_plan(geo, [4, 4, 4], 32)[(ch, stack)]
+    assert (per_band, n_xt, per_xt) == (1, 4, 1)
+    job_store(spark, root, tmp_path / "out", [4, 4, 4], 2)
+    assert_pyramid(f"{tmp_path}/out/{ch}/{stack}.ome.zarr", vol, 2)
+
+
+@pytest.mark.parametrize("on_error", ["fail", "quarantine"])
+def test_fused_x_tiled_ingest_matches_oracle(spark, tmp_path, monkeypatch, on_error):
+    """End to end at an n_xt > 1 plan (envelope lowered): a mixed
+    PNG/TIFF stack of 10 slices × 12 × 20 at chunk 4³ splits into
+    3 x-tiles of 2, 2 and 1 chunk columns.  The store equals the numpy
+    oracle at every level; in quarantine mode a corrupt slice, decoded
+    by every tile and fold of its slab, is one dead letter and one zero
+    plane."""
+    from aind_smartspim_data_transformation_spark.imaging import fused
+    from aind_smartspim_data_transformation_spark.sources.png_codec import (
+        encode_png_gray,
+    )
+    from aind_smartspim_data_transformation_spark.sources.tiff_codec import (
+        encode_tiff_gray,
+    )
+
+    def encode(z, plane):
+        if z % 3 == 1:
+            return encode_tiff_gray(plane, compression=8, rows_per_strip=4)
+        return encode_png_gray(plane)
+
+    root = tmp_path / "ds"
+    rng = np.random.default_rng(19)
+    vol = rng.integers(0, 65535, size=(10, 12, 20)).astype(np.uint16)
+    ch, stack = make_stack(root, vol, encode)
+    expect = vol.copy()
+    if on_error == "quarantine":
+        bad = next((root / "SmartSPIM").rglob("000005.png"))
+        bad.write_bytes(b"\x89PNG\r\n\x1a\n" + b"\x00" * 40)
+        expect[5] = 0
+    # 480 B span; one-chunk-row bands cost 64 B per column, so 1000 B
+    # leaves (1000 − 480) // 256 = 2 columns per tile
+    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 1000)
+    geo = fused.probe_stack_geometry(spark, str(root / "SmartSPIM"))
+    assert fused._band_plan(geo, [4, 4, 4], 32)[(ch, stack)][1:] == (1, 3, 2)
+    _, resp = job_store(spark, root, tmp_path / "out", [4, 4, 4], 3, on_error)
+    assert_pyramid(f"{tmp_path}/out/{ch}/{stack}.ome.zarr", expect, 3)
+    assert resp["metrics"]["n_chunks"] == 3 * 3 * 5  # slabs × rows × cols
+    if on_error == "quarantine":
+        dead = resp["metrics"]["dead_letters"]
+        assert [(d["stack"], d["z"]) for d in dead] == [(stack, 5)]

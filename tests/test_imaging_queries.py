@@ -170,7 +170,8 @@ def test_i05_matches_production_band_plan(spark, sf_dir, monkeypatch):
     got = {r["stack_id"]: r for r in iq.i05_resume_bookkeeping(spark, sf_dir).collect()}
     assert len(got) == iq.I05_STACKS
     for i, g in enumerate(geo):
-        nb, per_band = plan[(g["channel"], g["stack"])]
+        nb, per_band, n_xt, _ = plan[(g["channel"], g["stack"])]
+        assert n_xt == 1  # marker keys are (slab, fold) at this geometry
         n_slabs = -(-g["z"] // cz)
         n_folds = (nb + 1) // 2  # run_fused_ingest's fold pairing
         # the all_keys enumeration + the deterministic "survived" rule

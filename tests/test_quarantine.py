@@ -6,116 +6,92 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from aind_smartspim_data_transformation_spark.sources import stack_reader as sr
+from aind_smartspim_data_transformation_spark.imaging.zarr_sink import read_zarr_level
 from tests.imaging_fixtures import (
     CHANNELS,
     SLICES,
+    assert_pyramid,
+    ingest,
+    job_store,
     make_dataset,
-    run_job_on_route,
+    tree_bytes,
 )
 
 
-def _corrupt_first_slice(root) -> str:
-    """Truncate one real slice file into a decode failure; returns its
-    stack id.  A valid PNG signature with a mangled body exercises the
-    codec error path, not the extension filter."""
+def _corrupt_slice(root, z: int = 0) -> str:
+    """Truncate slice ``z`` (default the first) of the first stack into
+    a decode failure; returns its stack id.  A valid PNG signature with
+    a mangled body exercises the codec error path, not the extension
+    filter."""
     ch_dir = root / "SmartSPIM" / CHANNELS[0]
     col = sorted(p for p in ch_dir.iterdir() if p.is_dir())[0]
     stack = sorted(p for p in col.iterdir() if p.is_dir())[0]
-    target = stack / f"{SLICES[0]}.png"
+    target = stack / f"{SLICES[z]}.png"
     target.write_bytes(b"\x89PNG\r\n\x1a\n" + b"\x00" * 40)
     return stack.name
 
 
 def test_fail_mode_propagates_codec_error(spark, tmp_path):
+    """A corrupt slice past the probed first one fails its band task,
+    and the job with it."""
     make_dataset(tmp_path, height=16, width=20)
-    _corrupt_first_slice(tmp_path)
+    _corrupt_slice(tmp_path, z=1)
     with pytest.raises(Exception, match="(?i)png|chunk|decode"):
-        sr.read_stack_tree(spark, str(tmp_path / "SmartSPIM"), chunk_z=2).collect()
+        ingest(spark, tmp_path, tmp_path / "out", (2, 8, 8), 1, on_error="fail")
 
 
 def test_quarantine_mode_isolates_and_zero_fills(spark, tmp_path):
     vols = make_dataset(tmp_path, height=16, width=20)
-    bad_stack = _corrupt_first_slice(tmp_path)
-    root = str(tmp_path / "SmartSPIM")
+    bad_stack = _corrupt_slice(tmp_path)
 
-    tiles = sr.decode_slices_to_tiles(
-        sr.scan_stack_files(spark, root), chunk_z=2, on_error="quarantine"
-    ).persist()
-    good, dead = sr.split_quarantine(tiles)
+    groups, metrics = ingest(
+        spark, tmp_path, tmp_path / "out", (2, 8, 8), 1, on_error="quarantine"
+    )
 
     # exactly one dead letter, naming the corrupt file with the cause
-    dl = dead.collect()
+    dl = metrics["dead_letters"]
     assert len(dl) == 1
     assert dl[0]["stack"] == bad_stack and dl[0]["z"] == 0
     assert f"{SLICES[0]}.png" in dl[0]["error"]
 
-    # assembled chunks: corrupt plane zero-filled AT ITS POSITION,
-    # every other voxel identical to the fixture volume
-    chunks = sr.assemble_tiles(good, chunk_z=2).collect()
-    seen_bad = 0
-    for row in chunks:
-        key = f"{row['channel']}/{row['stack']}"
-        vol = vols[key]
-        block = np.frombuffer(row["data"], dtype=np.dtype(row["dtype"])).reshape(
-            row["dz"], row["dy"], row["dx"]
-        )
-        zlo = row["cz"] * 2
-        ylo, xlo = row["cy"] * row["dy"], row["cx"] * row["dx"]
-        expect = vol[
-            zlo : zlo + row["dz"], ylo : ylo + row["dy"], xlo : xlo + row["dx"]
-        ].copy()
-        if row["channel"] == CHANNELS[0] and row["stack"] == bad_stack and zlo == 0:
+    # every stack: corrupt plane zero-filled AT ITS POSITION, every
+    # other voxel identical to the fixture volume
+    assert len(groups) == len(vols)
+    for key, vol in vols.items():
+        expect = vol.copy()
+        if key == f"{CHANNELS[0]}/{bad_stack}":
             expect[0] = 0  # the quarantined plane
-            seen_bad += 1
-        assert np.array_equal(block, expect), (key, row["cz"], row["cy"], row["cx"])
-    assert seen_bad > 0  # the corrupt stack's chunks were checked
-    tiles.unpersist()
+        assert_pyramid(f"{tmp_path}/out/{key}.ome.zarr", expect, 1)
 
 
 def test_quarantine_clean_tree_matches_fail_mode(spark, tmp_path):
     """On a healthy acquisition the two modes are bit-identical."""
-    make_dataset(tmp_path, height=16, width=20)
-    root = str(tmp_path / "SmartSPIM")
-    a = sorted(
-        (r["channel"], r["stack"], r["cz"], r["cy"], r["cx"], bytes(r["data"]))
-        for r in sr.read_stack_tree(spark, root, chunk_z=2).collect()
+    vols = make_dataset(tmp_path, height=16, width=20)
+    ingest(spark, tmp_path, tmp_path / "a", (2, 8, 8), 1, on_error="fail")
+    _, metrics = ingest(
+        spark, tmp_path, tmp_path / "b", (2, 8, 8), 1, on_error="quarantine"
     )
-    b = sorted(
-        (r["channel"], r["stack"], r["cz"], r["cy"], r["cx"], bytes(r["data"]))
-        for r in sr.read_stack_tree(
-            spark, root, chunk_z=2, on_error="quarantine"
-        ).collect()
-    )
-    assert a == b
+    assert metrics["dead_letters"] == []
+    assert tree_bytes(tmp_path / "a") == tree_bytes(tmp_path / "b")
+    for key, vol in vols.items():
+        assert_pyramid(f"{tmp_path}/a/{key}.ome.zarr", vol, 1)
 
 
 def test_quarantine_ingest_reaches_zarr_sink(spark, tmp_path):
-    """End-to-end: a corrupt slice quarantined at ingest flows through
-    chunk assembly into the OME-Zarr store as a ZERO plane at its true
-    z index — the sink's alignment contract survives the dead letter."""
-    import numpy as np
-
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        read_zarr_level,
-        write_ome_zarr_all,
-    )
-
+    """End-to-end: a corrupt slice quarantined at ingest reaches the
+    OME-Zarr store as a ZERO plane at its true z index — the store's
+    alignment contract survives the dead letter."""
     vols = make_dataset(tmp_path, height=16, width=20)
-    bad_stack = _corrupt_first_slice(tmp_path)
-    root = str(tmp_path / "SmartSPIM")
+    bad_stack = _corrupt_slice(tmp_path)
 
-    chunks = sr.read_stack_tree(spark, root, chunk_z=2, on_error="quarantine")
-    target = chunks.filter(
-        (sr.F.col("channel") == CHANNELS[0]) & (sr.F.col("stack") == bad_stack)
-    )
-    out = str(tmp_path / "out")
-    [group] = write_ome_zarr_all(
-        [target],
-        out,
-        voxel_size_zyx=[2.0, 1.8, 1.8],
-        scale_factor_zyx=[2, 2, 2],
-        chunk_zyx=[2, 16, 20],
+    [group], _ = ingest(
+        spark,
+        tmp_path,
+        tmp_path / "out",
+        (2, 16, 20),
+        1,
+        on_error="quarantine",
+        stack_filter=[(CHANNELS[0], bad_stack)],
     )
     got = read_zarr_level(group, 0)
     expect = vols[f"{CHANNELS[0]}/{bad_stack}"].copy()
@@ -124,48 +100,36 @@ def test_quarantine_ingest_reaches_zarr_sink(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Fused-path quarantine (round 7): the zero-shuffle default ingest must
-# survive a corrupt slice exactly like the UDF pipeline — zero plane at
-# position, dead-letter triage row, store identical.
+# Job-level quarantine (round 7): the imaging job must survive a corrupt
+# slice — zero plane at position, dead-letter triage row — and write the
+# numpy oracle's store everywhere else.
 # ---------------------------------------------------------------------------
-def _run_job(spark, root, out, route, on_error, chunk=(64, 64, 64)):
-    from aind_smartspim_data_transformation_spark.config.settings import (
-        ImagingJobSettings,
-    )
-
-    resp = run_job_on_route(
-        spark,
-        ImagingJobSettings(
-            input_source=str(root),
-            output_directory=str(out),
-            chunk_size=list(chunk),
-            downsample_levels=2,
-            on_error=on_error,
-        ),
-        route,
-    )
-    tree = {
-        str(p.relative_to(out)): p.read_bytes()
-        for p in sorted(out.rglob("*"))
-        if p.is_file()
-    }
-    return tree, resp
+def _run_job(spark, root, out, on_error, chunk=(64, 64, 64)):
+    """The imaging job at 2 levels; returns (store bytes, response)."""
+    return job_store(spark, root, out, chunk, 2, on_error)
 
 
-def test_fused_quarantine_store_matches_udf_store(spark, tmp_path):
+def _assert_oracle(out, vols, zeroed: dict[str, int]):
+    """Every stack's 2-level store equals the numpy oracle of its
+    volume, with plane ``zeroed[key]`` zero-filled where given."""
+    for key, vol in vols.items():
+        expect = vol.copy()
+        if key in zeroed:
+            expect[zeroed[key]] = 0
+        assert_pyramid(f"{out}/{key}.ome.zarr", expect, 2)
+
+
+def test_fused_quarantine_store_matches_oracle(spark, tmp_path):
     """Corrupt slice (the FIRST of its stack — the probe must fall back
-    to the next slice), fused route with quarantine: store is
-    byte-identical to the UDF-quarantine store, and the dead-letter
-    metric names the slice."""
+    to the next slice), quarantine mode: every stack's store equals the
+    numpy oracle, the corrupt plane zero, and the dead-letter metric
+    names the slice."""
     root = tmp_path / "ds"
-    make_dataset(root, height=16, width=20)
-    bad_stack = _corrupt_first_slice(root)
+    vols = make_dataset(root, height=16, width=20)
+    bad_stack = _corrupt_slice(root)
 
-    fused, fused_resp = _run_job(
-        spark, root, tmp_path / "out_fused", "fused", "quarantine"
-    )
-    udf, _ = _run_job(spark, root, tmp_path / "out_udf", "udf", "quarantine")
-    assert fused == udf
+    _, fused_resp = _run_job(spark, root, tmp_path / "out_fused", "quarantine")
+    _assert_oracle(tmp_path / "out_fused", vols, {f"{CHANNELS[0]}/{bad_stack}": 0})
 
     dead = fused_resp["metrics"]["dead_letters"]
     assert len(dead) == 1
@@ -175,10 +139,6 @@ def test_fused_quarantine_store_matches_udf_store(spark, tmp_path):
     assert f"{SLICES[0]}.png" in dead[0]["error"]
 
     # the quarantined plane is ZERO at its position; neighbors intact
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        read_zarr_level,
-    )
-
     group = str(
         tmp_path / "out_fused" / CHANNELS[0] / f"{bad_stack}.ome.zarr"
     )
@@ -190,9 +150,9 @@ def test_fused_quarantine_store_matches_udf_store(spark, tmp_path):
 def test_fused_fail_mode_propagates_codec_error(spark, tmp_path):
     root = tmp_path / "ds"
     make_dataset(root, height=16, width=20)
-    _corrupt_first_slice(root)
+    _corrupt_slice(root)
     with pytest.raises(Exception, match="(?i)png|probe|decode"):
-        _run_job(spark, root, tmp_path / "out", "fused", "fail")
+        _run_job(spark, root, tmp_path / "out", "fail")
 
 
 def test_fused_geometry_mismatch_fails_loudly(spark, tmp_path):
@@ -216,19 +176,13 @@ def test_fused_geometry_mismatch_fails_loudly(spark, tmp_path):
     target.write_bytes(encode_png_gray(rogue))
 
     with pytest.raises(Exception, match="geometry mismatch"):
-        _run_job(spark, root, tmp_path / "out_f", "fused", "fail")
+        _run_job(spark, root, tmp_path / "out_f", "fail")
 
-    _, resp = _run_job(
-        spark, root, tmp_path / "out_q", "fused", "quarantine"
-    )
+    _, resp = _run_job(spark, root, tmp_path / "out_q", "quarantine")
     dead = resp["metrics"]["dead_letters"]
     assert len(dead) == 1 and dead[0]["z"] == 1
     assert "geometry mismatch" in dead[0]["error"]
     assert f"{SLICES[1]}.png" in dead[0]["error"]
-
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        read_zarr_level,
-    )
 
     group = str(
         tmp_path / "out_q" / CHANNELS[0] / f"{stack_dir.name}.ome.zarr"
@@ -239,30 +193,35 @@ def test_fused_geometry_mismatch_fails_loudly(spark, tmp_path):
 
 
 def test_trailing_corrupt_slice_same_store_both_paths(spark, tmp_path):
-    """A corrupt LAST slice used to shorten the UDF path's slab while
-    the fused path zero-filled it at position (extents from the
-    listing) — route-dependent store shapes.  Both
-    paths must now produce the listing-extent store with a zero plane
-    at the end, byte-identical."""
+    """A corrupt LAST slice must not shorten the stack: the quarantine
+    store keeps the listing extent with a zero plane at the end.  The
+    same store must come out of both decode paths — the whole-plane
+    quarantine decode of the corrupt tree and the windowed fail-mode
+    decode of a twin tree whose last slice is a real all-zero plane —
+    byte for byte."""
+    import shutil
+
+    from aind_smartspim_data_transformation_spark.sources.png_codec import (
+        encode_png_gray,
+    )
+
     root = tmp_path / "ds"
     vols = make_dataset(root, height=16, width=20)
+    twin = tmp_path / "twin"
+    shutil.copytree(root, twin)
     ch_dir = root / "SmartSPIM" / CHANNELS[0]
     col = sorted(p for p in ch_dir.iterdir() if p.is_dir())[0]
     stack_dir = sorted(p for p in col.iterdir() if p.is_dir())[0]
-    # corrupt the LAST slice
-    (stack_dir / f"{SLICES[-1]}.png").write_bytes(
-        b"\x89PNG\r\n\x1a\n" + b"\x00" * 40
-    )
+    rel = stack_dir.relative_to(root) / f"{SLICES[-1]}.png"
+    # corrupt the LAST slice; the twin holds a zero plane there instead
+    (root / rel).write_bytes(b"\x89PNG\r\n\x1a\n" + b"\x00" * 40)
+    (twin / rel).write_bytes(encode_png_gray(np.zeros((16, 20), np.uint16)))
 
-    fused, fused_resp = _run_job(
-        spark, root, tmp_path / "out_fused", "fused", "quarantine"
+    quarantined, fused_resp = _run_job(
+        spark, root, tmp_path / "out_fused", "quarantine"
     )
-    udf, _ = _run_job(spark, root, tmp_path / "out_udf", "udf", "quarantine")
-    assert fused == udf
-
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        read_zarr_level,
-    )
+    zero_twin, _ = _run_job(spark, twin, tmp_path / "out_twin", "fail")
+    assert quarantined == zero_twin
 
     group = str(
         tmp_path / "out_fused" / CHANNELS[0] / f"{stack_dir.name}.ome.zarr"
@@ -279,9 +238,9 @@ def test_trailing_corrupt_slice_same_store_both_paths(spark, tmp_path):
 def test_partially_corrupt_slice_zeroes_whole_plane(spark, tmp_path):
     """A slice corrupt only in its BOTTOM strips: bands above the
     damage decode cleanly, so a window-local quarantine would write a
-    mixed real/zero plane while the UDF path zeroes it all.  Fused
-    quarantine decodes the full slice (strict validation), so the
-    whole plane zeroes in BOTH paths — stores identical."""
+    mixed real/zero plane.  Quarantine decodes the full slice (strict
+    validation), so the whole plane zeroes in every band — the store
+    equals the numpy oracle with that plane zero."""
     from aind_smartspim_data_transformation_spark.sources.tiff_codec import (
         encode_tiff_gray,
         _read_ifd,
@@ -303,19 +262,10 @@ def test_partially_corrupt_slice_zeroes_whole_plane(spark, tmp_path):
 
     # chunk_y=8 → two y-bands; the top band's window never touches the
     # corrupt bottom strip
-    fused, fused_resp = _run_job(
-        spark, root, tmp_path / "out_f", "fused", "quarantine",
-        chunk=(64, 8, 64),
+    _run_job(spark, root, tmp_path / "out_f", "quarantine", chunk=(64, 8, 64))
+    _assert_oracle(
+        tmp_path / "out_f", vols, {f"{CHANNELS[0]}/{stack_dir.name}": 0}
     )
-    udf, _ = _run_job(
-        spark, root, tmp_path / "out_u", "udf", "quarantine",
-        chunk=(64, 8, 64),
-    )
-    assert fused == udf
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        read_zarr_level,
-    )
-
     group = str(
         tmp_path / "out_f" / CHANNELS[0] / f"{stack_dir.name}.ome.zarr"
     )
@@ -326,17 +276,17 @@ def test_partially_corrupt_slice_zeroes_whole_plane(spark, tmp_path):
 
 def test_slice_decoded_by_two_folds_gives_one_dead_letter(spark, tmp_path):
     """Height 32 at chunk (64, 8, 64) splits every stack into 4 bands,
-    so 2 folds each decode the corrupt slice: the fused route reports
-    ONE dead letter for it, picked by a fixed rule (two runs agree),
-    and its store equals the UDF store."""
+    so 2 folds each decode the corrupt slice: the job reports ONE dead
+    letter for it, picked by a fixed rule (two runs agree, byte for
+    byte), and its store equals the numpy oracle."""
     from aind_smartspim_data_transformation_spark.imaging.fused import (
         _band_plan,
         probe_stack_geometry,
     )
 
     root = tmp_path / "ds"
-    make_dataset(root, height=32, width=20)
-    bad_stack = _corrupt_first_slice(root)
+    vols = make_dataset(root, height=32, width=20)
+    bad_stack = _corrupt_slice(root)
     chunk = (64, 8, 64)
     geo = probe_stack_geometry(
         spark, str(root / "SmartSPIM"), on_error="quarantine"
@@ -344,16 +294,12 @@ def test_slice_decoded_by_two_folds_gives_one_dead_letter(spark, tmp_path):
     plan = _band_plan(geo, list(chunk), spark.sparkContext.defaultParallelism)
     assert plan[(CHANNELS[0], bad_stack)][0] == 4  # 4 bands: 2 folds
 
-    fused, resp = _run_job(
-        spark, root, tmp_path / "out_f", "fused", "quarantine", chunk=chunk
+    fused, resp = _run_job(spark, root, tmp_path / "out_f", "quarantine", chunk=chunk)
+    twice, again = _run_job(
+        spark, root, tmp_path / "out_f2", "quarantine", chunk=chunk
     )
-    _, again = _run_job(
-        spark, root, tmp_path / "out_f2", "fused", "quarantine", chunk=chunk
-    )
-    udf, _ = _run_job(
-        spark, root, tmp_path / "out_u", "udf", "quarantine", chunk=chunk
-    )
-    assert fused == udf
+    assert fused == twice
+    _assert_oracle(tmp_path / "out_f", vols, {f"{CHANNELS[0]}/{bad_stack}": 0})
     dead = resp["metrics"]["dead_letters"]
     assert [(d["channel"], d["stack"], d["z"]) for d in dead] == [
         (CHANNELS[0], bad_stack, 0)
@@ -379,7 +325,7 @@ def test_fused_taller_slice_fails_loudly_in_fail_mode(spark, tmp_path):
     (stack_dir / f"{SLICES[1]}.png").write_bytes(encode_png_gray(tall))
 
     with pytest.raises(Exception, match="geometry mismatch"):
-        _run_job(spark, root, tmp_path / "out", "fused", "fail")
+        _run_job(spark, root, tmp_path / "out", "fail")
 
 
 def test_fused_failed_job_leaves_no_parsing_store(spark, tmp_path):
@@ -391,10 +337,10 @@ def test_fused_failed_job_leaves_no_parsing_store(spark, tmp_path):
     store."""
     root = tmp_path / "ds"
     vols = make_dataset(root, height=16, width=20)
-    bad_stack = _corrupt_first_slice(root)
+    bad_stack = _corrupt_slice(root)
     out = tmp_path / "out"
     with pytest.raises(Exception):
-        _run_job(spark, root, out, "fused", "fail")
+        _run_job(spark, root, out, "fail")
     leftovers = [
         p for p in out.rglob("*")
         if p.name in (".zattrs", ".zarray", ".zgroup")
@@ -412,6 +358,6 @@ def test_fused_failed_job_leaves_no_parsing_store(spark, tmp_path):
     (stack_dir / f"{SLICES[0]}.png").write_bytes(
         encode_png_gray(vols[f"{CHANNELS[0]}/{bad_stack}"][0])
     )
-    rerun, _ = _run_job(spark, root, out, "fused", "fail")
-    fresh, _ = _run_job(spark, root, tmp_path / "out_fresh", "fused", "fail")
+    rerun, _ = _run_job(spark, root, out, "fail")
+    fresh, _ = _run_job(spark, root, tmp_path / "out_fresh", "fail")
     assert rerun == fresh

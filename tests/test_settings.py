@@ -33,7 +33,7 @@ def test_json_arg_precedence(tmp_path):
     # the stale "ingest" key is ignored, the other fields unchanged
     old = ImagingJobSettings.resolve(
         json_arg=json.dumps(
-            {"input_source": "/arg", "output_directory": "/o", "ingest": "udf"}
+            {"input_source": "/arg", "output_directory": "/o", "ingest": "fused"}
         ),
         config_file=str(cfg),
     )

@@ -670,22 +670,6 @@ ANNOTATIONS = {
     ),
 }
 
-INGEST_NOTE = (
-    "The r3 VERDICT scale defect, fixed, plus the r4 tile-first fused "
-    "assembly. z comes from a content-PRUNED listing (the window's "
-    "exchange moves ~100-byte path rows — `ReadSchema: "
-    "struct<path:string>` on its scan — and rejoins as a broadcast), "
-    "so decode runs in the scan's own file-split partitions. ONE fused "
-    "kernel decodes a slice AND cuts it into (cy, cx) tiles (two "
-    "chained kernels would round-trip the full pixel volume through an "
-    "extra JVM↔Python Arrow crossing) BEFORE the one real shuffle, "
-    "whose key is the full chunk coordinate (channel, stack, cz, cy, "
-    "cx): assembly parallelism scales with #tiles (not #z-slabs), peak "
-    "group memory is chunk_z × tile bytes (~512 KB for 128³ bricks, vs "
-    "chunk_z × plane bytes ≈ hundreds of MB), and the exchange moves "
-    "exactly the same pixel bytes it always had to."
-)
-
 SUBPLAN_AUDIT = """## Shared-subplan audit of the headline set (round 4, VERDICT ask #6)
 
 Checked each bench.py headline query for subplans computed more than
@@ -740,41 +724,10 @@ def main() -> None:
             df.explain("formatted")
         out += [f"## {name}", "", note, "", "```", buf.getvalue().rstrip(), "```", ""]
 
-    # imaging ingest plan over a tiny generated stack tree (no parquet
-    # surface for this path, so it can't ride the registry loop above)
-    import shutil
-    import tempfile
-
-    sys.path.insert(0, str(REPO / "tests"))
-    from imaging_fixtures import make_dataset
-
-    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        read_stack_tree,
-    )
-
-    tmp = Path(tempfile.mkdtemp(prefix="plans_img_"))
-    try:
-        make_dataset(tmp)
-        df = read_stack_tree(spark, str(tmp / "SmartSPIM"), chunk_z=2, chunk_y=32, chunk_x=40)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        out += [
-            "## imaging ingest (read_stack_tree: scan → decode → tile → chunk)",
-            "",
-            INGEST_NOTE,
-            "",
-            "```",
-            buf.getvalue().rstrip(),
-            "```",
-            "",
-        ]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
     # fingerprints: measured wide-exchange counts of the guarded set
     # (executed adaptive plans — the numbers the test ceilings pin)
-    from test_plan_fingerprints import (  # tests/ already on sys.path
+    sys.path.insert(0, str(REPO / "tests"))
+    from test_plan_fingerprints import (
         MAX_WIDE_EXCHANGES,
         REQUIRE_REUSED_EXCHANGE,
     )
