@@ -33,13 +33,17 @@ balanced tasks.
 
 Memory envelope: a task buffers its fold's two bands (``2 × min(cz, z)
 × band_rows × tile_width`` pixels) plus one decoded row span (``y ×
-x`` at most).  :func:`_band_plan` sizes the plan to fit
-``FUSED_MAX_TASK_BYTES``: it first narrows bands to one chunk row, and
-when even a one-chunk-row band at full width does not fit, it also
-splits each band into X-TILES of whole chunk columns.  The decoded row
-span is the one term the plan cannot shrink; it exceeds the envelope
-only for planes of about 11.6k² uint16 and larger.  There is no
-setting that changes the plan or the route.
+x`` at most).  :func:`_band_plan` sizes the band buffers to what
+``FUSED_MAX_TASK_BYTES`` leaves after the span: it first narrows bands
+to one chunk row, and when even a one-chunk-row band at full width
+does not fit, it also splits each band into X-TILES of whole chunk
+columns.  Every band group re-decodes its slices' rows, so the buffers
+never get less than 1/16 of a z-slab: fitting the envelope splits a
+slab into at most about 32 groups, and a plane too large for the
+envelope (8192² × 256 or 16384² × 8 uint16 at 128³ chunks) gets tasks
+above it rather than hundreds of re-decodes per slice.  The decoded
+row span is the one term no split removes.  There is no setting that
+changes the plan or the route.
 
 Error handling (round 7): every slice passes a HEADER-ONLY geometry
 gate against the probed stack geometry before decoding (a taller slice
@@ -75,6 +79,12 @@ from pyspark.sql import functions as F
 # tasks ≈ 8 GiB peak — conservative for this container; on a real
 # cluster size it to executor memory / cores.
 FUSED_MAX_TASK_BYTES = 256 << 20
+
+# Every band group re-reads and re-decodes its slices' rows, so the
+# band buffers' budget never drops below 1/_MAX_SLAB_SPLIT of a z-slab
+# (see _band_plan): fitting the envelope splits a slab into at most
+# about twice this many band groups.
+_MAX_SLAB_SPLIT = 16
 
 # Mid-job restartability (round 8): every completed band group leaves an
 # atomic marker here; a rerun skips marker-present bands and merges their
@@ -382,18 +392,30 @@ def _band_plan(
     ``FUSED_MAX_TASK_BYTES`` (read at call time): a folded task
     buffers TWO bands of ``min(cz, z) × per_band·cy_chunk × tile_x``
     pixels plus one decoded row span (``y × x``, the term no split
-    removes).  First ``per_band`` shrinks, never below one chunk row,
-    until a full-width band fits — a deep acquisition (many z-slabs →
-    low band target → tall bands) would otherwise overshoot the
-    envelope (SCALE.md §6m).  When even a one-chunk-row band at full
-    width does not fit, the band is also split along X into ``n_xt``
-    tiles of ``per_xt`` chunk columns, never fewer than one column.
-    Otherwise ``n_xt = 1`` and ``per_xt`` is the whole chunk-column
-    count: the full width is compared against the envelope directly,
-    because a width that is not a multiple of the chunk is narrower
-    than its whole chunk columns.  Band heights and tile widths use
-    whole chunks (per_band·cy_chunk, per_xt·cx_chunk) — conservative
-    by less than one chunk for the last band or tile."""
+    removes).  The band buffers get the envelope less that span, but
+    never less than ``1/_MAX_SLAB_SPLIT`` of a slab (``min(cz, z) × y
+    × x`` pixels).  Every band group re-decodes the rows ``[0, hi)``
+    of each slice in its slab — a PNG cannot skip rows, and quarantine
+    mode decodes whole planes — so a slab split into G groups costs
+    about 0.75·G plane decodes per slice.  Without the floor a
+    16384² × 8 stack, whose span alone exceeds 256 MiB, would split
+    into 8,192 groups per slab.  With it, each band or tile the budget narrows
+    buffers more than half the budget, so the envelope splits a slab
+    into at most about ``2 × _MAX_SLAB_SPLIT`` groups, and a task
+    holds at most ``max(cap, span + slab / _MAX_SLAB_SPLIT)``
+    (SCALE.md §6m, last follow-up).  First
+    ``per_band`` shrinks, never below one chunk row, until a
+    full-width band fits the budget — a deep acquisition (many
+    z-slabs → low band target → tall bands) would otherwise overshoot
+    the envelope (SCALE.md §6m).  When even a one-chunk-row band at
+    full width does not fit, the band is also split along X into
+    ``n_xt`` tiles of ``per_xt`` chunk columns, never fewer than one
+    column.  Otherwise ``n_xt = 1`` and ``per_xt`` is the whole
+    chunk-column count: the full width is compared against the budget
+    directly, because a width that is not a multiple of the chunk is
+    narrower than its whole chunk columns.  Band heights and tile
+    widths use whole chunks (per_band·cy_chunk, per_xt·cx_chunk) —
+    conservative by less than one chunk for the last band or tile."""
     cz, cy_chunk, cx_chunk = chunk_zyx
     slabs = sum(-(-g["z"] // cz) for g in geo)
     want = max(1, (4 * parallelism) // max(slabs, 1))
@@ -404,9 +426,12 @@ def _band_plan(
         n_bands = min(want, n_cy)
         per_band = -(-n_cy // n_bands)
         item = np.dtype(g["dtype"]).itemsize
-        free = FUSED_MAX_TASK_BYTES - g["y"] * g["x"] * item
+        span = g["y"] * g["x"] * item
+        zz = min(cz, g["z"])
+        # the band buffers' budget (see the docstring)
+        free = max(FUSED_MAX_TASK_BYTES - span, zz * span // _MAX_SLAB_SPLIT)
         # one chunk row of one band pair, per pixel column
-        row = 2 * min(cz, g["z"]) * cy_chunk * item
+        row = 2 * zz * cy_chunk * item
         per_band = min(per_band, max(1, free // (row * g["x"])))
         n_bands = -(-n_cy // per_band)  # drop empty trailing bands
         if per_band * row * g["x"] <= free:

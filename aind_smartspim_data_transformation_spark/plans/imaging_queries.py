@@ -276,7 +276,9 @@ I05_STACKS = 6
 # sized so it BINDS for the two deepest synthetic stacks (per_band
 # 2→1 and 3→1) and leaves the rest on the want-derived value — both
 # branches exercised, parity asserted against the production
-# _band_plan in tests/test_imaging_queries.py.
+# _band_plan in tests/test_imaging_queries.py.  The production budget
+# also never drops below 1/16 of a z-slab; at most 4·41·32·2 // 16 =
+# 656 B here, it never binds, so the replay omits it.
 I05_X = 32  # synthetic plane width (pixels)
 I05_ITEM = 2  # synthetic dtype itemsize (uint16)
 I05_TASK_BYTES_CAP = 6144

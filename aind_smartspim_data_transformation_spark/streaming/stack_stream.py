@@ -20,17 +20,17 @@ stores grow wave by wave and end identical to a one-shot build of the
 finished acquisition (asserted in tests/test_stack_stream.py).
 
 **slice_key, not z, is the streamed identity.** The batch path assigns
-dense z by filename rank over *all* files of a stack (`_z_indexed`,
-`io/readers.py:145` sorted-glob semantics) — a window an incremental
-batch cannot evaluate (it only sees new files).  The stream therefore
+dense z as the path rank over *all* files of a stack, on the driver
+(``list_stack_files`` rows ranked in ``fused.run_fused_ingest``,
+`io/readers.py:145` sorted-glob semantics) — a rank an incremental
+batch cannot compute (it only sees new files).  The stream therefore
 carries the numeric filename stem (`slice_key`, batch-independent and
 content-stable); the writer orders a wave's slices by it and places the
 slab at the store's current z extent, which is the same rank under the
 acquisition contract (slices arrive in ascending stem order per stack).
 
-Scale posture: decode is the same Arrow-batched narrow map as batch
-ingest; the one shuffle is the repartition that puts each stack's wave
-in one write task, and the only stream state is the file-source's
+Scale posture: decode is a narrow map; the one shuffle is the
+repartition that puts each stack's wave in one write task, and the only stream state is the file-source's
 processed-file log.  1000 executors drain a burst of arriving slices at
 list-throughput.
 """

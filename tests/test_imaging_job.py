@@ -1165,10 +1165,15 @@ def test_band_plan_invariants_hypothesis():
     geometries (tiny planes, z < cz, single-pixel widths, all dtypes):
     the plan must always (1) floor per_band and per_xt at 1, (2) cover
     every y chunk row and every x chunk column exactly once (no empty
-    trailing band or tile), (3) respect the envelope whenever a 1×1-chunk
-    tile plus one decoded span can, (4) keep whole-width bands whenever
-    a one-chunk-row full-width band fits, and (5) never produce MORE
-    bands than chunk rows or tiles than chunk columns."""
+    trailing band or tile), (3) keep the band buffers within their
+    budget — the envelope less one decoded span, but at least 1/16 of
+    a z-slab — whenever a 1×1-chunk tile fits it, (4) keep whole-width
+    bands whenever a one-chunk-row full-width band fits the budget,
+    (5) never produce MORE bands than chunk rows or tiles than chunk
+    columns, and (6) give every band it narrowed below the parallelism
+    target, and every full tile when it splits along X, more than half
+    the budget, so the group count (and with it the slices'
+    re-decodes) stays within twice what the budget forces."""
     from unittest import mock
 
     from hypothesis import given, settings
@@ -1209,61 +1214,95 @@ def test_band_plan_invariants_hypothesis():
         ]
         assert cols == list(range(n_cx))
         item = np.dtype(dtype).itemsize
-        span = y * x * item
         zz = min(cz, z)
-        if 2 * zz * cy * x * item + span <= cap:
+        budget = max(cap - y * x * item, zz * y * x * item // 16)
+        if 2 * zz * cy * x * item <= budget:
             assert n_xt == 1
-        one_tile = 2 * zz * min(cy, y) * min(cx, x) * item + span
+        one_tile = 2 * zz * min(cy, y) * min(cx, x) * item
         band_rows = min(per_band * cy, y)
         tile_cols = min(per_xt * cx, x)
-        worst = 2 * zz * band_rows * tile_cols * item + span
-        if worst > cap:
-            # the envelope was missed — only legal when even a
-            # 1×1-chunk tile cannot fit
-            assert per_band == 1 and per_xt == 1 and one_tile > cap
+        worst = 2 * zz * band_rows * tile_cols * item
+        if worst > budget:
+            # the budget was missed — only legal when even a
+            # 1×1-chunk tile cannot fit it
+            assert per_band == 1 and per_xt == 1 and one_tile > budget
+        want = max(1, 4 * par // -(-z // cz))
+        if per_band < -(-n_cy // min(want, n_cy)):
+            assert 2 * zz * per_band * cy * x * item > budget // 2
+        if n_xt > 1:
+            assert 2 * zz * per_band * cy * per_xt * cx * item > budget // 2
 
     check()
 
 
 def test_band_plan_giant_plane_splits_in_x():
     """A plane too wide for even a one-chunk-row band splits its bands
-    along X: 8192² × 256 uint16 at 128³ chunks plans 64 one-row bands of
-    4 tiles × 16 chunk columns, whose folded task fits 256 MiB."""
+    along X: 1024 × 32768 × 256 uint16 at 128³ chunks plans 8 one-row
+    bands of 4 tiles × 64 chunk columns.  The envelope less the span
+    (192 MiB) would split each slab into ~43 groups, every one
+    re-decoding its slices' rows; the buffers get 1/16 of a slab
+    (512 MiB) instead, so a slab is 16 groups."""
     from aind_smartspim_data_transformation_spark.imaging.fused import (
         FUSED_MAX_TASK_BYTES,
         _band_plan,
     )
 
     geo = [
-        {"channel": "C", "stack": "s0", "z": 256, "y": 8192, "x": 8192,
+        {"channel": "C", "stack": "s0", "z": 256, "y": 1024, "x": 32768,
          "dtype": "uint16"}
     ]
+    span = 1024 * 32768 * 2
     plan = _band_plan(geo, [128, 128, 128], 32)
-    assert plan[("C", "s0")] == (64, 1, 4, 16)
-    # full width: 2·128·128·8192·2 = 512 MiB, over the envelope alone
-    assert 2 * 128 * 128 * 8192 * 2 > FUSED_MAX_TASK_BYTES
-    # one tile pair + the decoded span
-    assert 2 * 128 * 128 * 16 * 128 * 2 + 8192 * 8192 * 2 <= FUSED_MAX_TASK_BYTES
+    assert plan[("C", "s0")] == (8, 1, 4, 64)
+    # full width: 2·128·128·32768·2 = 2 GiB, over the envelope alone
+    assert 2 * 128 * 128 * 32768 * 2 > FUSED_MAX_TASK_BYTES
+    # one tile pair: exactly 1/16 of a 128-slice slab
+    assert 2 * 128 * 128 * 64 * 128 * 2 == 128 * span // 16
+    assert 128 * span // 16 > FUSED_MAX_TASK_BYTES - span
 
 
-def test_band_plan_single_plane_over_cap_floors_and_ingests(
-    spark, tmp_path, monkeypatch
-):
-    """A plane whose decoded span ALONE exceeds the envelope: no split
-    can fit it, so the plan floors at one chunk row by one chunk column
-    (per_band = per_xt = 1) — and the job still writes the numpy
-    oracle's store."""
+def test_band_plan_giant_span_bounds_groups_per_slab():
+    """Planes whose envelope fit would need hundreds of band groups per
+    slab.  A 16384² uint16 span (512 MiB) alone exceeds the 256 MiB
+    envelope: at 8 slices the plan keeps full-width bands of 1/16 of
+    the slab, 16 groups per slab on 4 cores (64 on 32 cores, from the
+    parallelism target) — not 8,192 groups of one chunk each.  8192² ×
+    256 at 128³ keeps full-width one-row bands, 32 groups per slab on
+    32 cores, not 128 x-tiled ones."""
+    from aind_smartspim_data_transformation_spark.imaging.fused import (
+        _band_plan,
+    )
+
+    def plan(z, y, x, par):
+        geo = [{"channel": "C", "stack": "s0", "z": z, "y": y, "x": x,
+                "dtype": "uint16"}]
+        return _band_plan(geo, [128, 128, 128], par)[("C", "s0")]
+
+    assert plan(8, 16384, 16384, 4) == (32, 4, 1, 128)
+    # two bands of 4 chunk rows: 1/16 of the 8-slice slab
+    assert 2 * 8 * 4 * 128 * 16384 * 2 == 8 * 16384 * 16384 * 2 // 16
+    assert plan(8, 16384, 16384, 32) == (128, 1, 1, 128)
+    assert plan(256, 8192, 8192, 4) == (32, 2, 1, 64)
+    assert plan(256, 8192, 8192, 32) == (64, 1, 1, 64)
+
+
+def test_band_plan_span_over_cap_ingests(spark, tmp_path, monkeypatch):
+    """A plane whose decoded span ALONE exceeds the envelope: the band
+    buffers get 1/16 of the slab, so each slab splits into 16 one-column
+    tiles, and the job still writes the numpy oracle's store."""
     from aind_smartspim_data_transformation_spark.imaging import fused
 
     root = tmp_path / "ds"
     rng = np.random.default_rng(5)
-    vol = rng.integers(0, 65535, size=(6, 12, 16)).astype(np.uint16)
+    vol = rng.integers(0, 65535, size=(6, 8, 64)).astype(np.uint16)
     ch, stack = make_stack(root, vol)
-    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 100)  # span: 384 B
+    # span 1,024 B > 1,000 B envelope; a 2-slice slab is 2,048 B, so
+    # the budget is 128 B: one chunk column of a one-row band pair
+    # (2·2·4·4·2 B) per tile
+    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 1000)
     geo = fused.probe_stack_geometry(spark, str(root / "SmartSPIM"))
-    _, per_band, n_xt, per_xt = fused._band_plan(geo, [4, 4, 4], 32)[(ch, stack)]
-    assert (per_band, n_xt, per_xt) == (1, 4, 1)
-    job_store(spark, root, tmp_path / "out", [4, 4, 4], 2)
+    assert fused._band_plan(geo, [2, 4, 4], 32)[(ch, stack)] == (2, 1, 16, 1)
+    job_store(spark, root, tmp_path / "out", [2, 4, 4], 2)
     assert_pyramid(f"{tmp_path}/out/{ch}/{stack}.ome.zarr", vol, 2)
 
 
