@@ -73,12 +73,6 @@ def parse_emission_wavelength(channel_name: str) -> int:
     return int(channel_name.replace(".zarr", "").split("_")[-1])
 
 
-def parse_emission_wavelength_col(channel_name: Column) -> Column:
-    return F.element_at(
-        F.split(F.regexp_replace(channel_name, r"\.zarr$", ""), "_"), -1
-    ).cast("int")
-
-
 def axes_5d() -> list[dict[str, Any]]:
     """Fixed NGFF axes metadata: t/c/z/y/x with units."""
     return [

@@ -1267,117 +1267,29 @@ ORDER BY doc_id
 
 
 # ---------------------------------------------------------------------------
-# D8 — duplicate clusters: connected components over the d03 near-dup
-# pair graph, by iterative min-label propagation.  A pairwise dedup
-# leaves A~B, B~C as separate pairs; the *cluster* {A,B,C} with one
-# keeper is what a real pipeline materializes.  This is the engine's
-# iterative-algorithm surface: a driver loop over DataFrame joins with
-# ``localCheckpoint`` per round (cuts lineage, materializes state —
-# Spark's equivalent of Pregel supersteps).
+# D8/D9 — duplicate clusters: connected components over the d03
+# near-dup pair graph.  A pairwise dedup leaves A~B, B~C as separate
+# pairs; the *cluster* {A,B,C} with one keeper is what a real pipeline
+# materializes.  Output: component = min doc_id, its size and its max
+# member — one recursive-CTE oracle (D08_SQL) verifies both keys, which
+# run the same plan.
 #
-# Scale posture: plain label propagation converges in O(component
-# diameter) rounds — fine for dedup graphs (components are tiny, near-
-# cliques by construction).  For web-graph-diameter inputs you'd switch
-# to the large-star/small-star algorithm (Kiveris et al.) which
-# converges in O(log n) rounds; same join-per-round skeleton.  Each
-# round shuffles |E| rows on the node key.
-# ---------------------------------------------------------------------------
-def d08_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r15 (guide §2.4/§1.2): persist the d03 output — the undirected
-    # union below references it twice, and without the persist each
-    # branch re-executes d03's verify pipeline during the edges
-    # materialization.  Released by the harness's clearCache().
-    pairs = (
-        d03_dedup_minhash_lsh(spark, sf_dir).select("doc1", "doc2").persist()
-    )
-    edges = pairs.union(
-        pairs.select(F.col("doc2").alias("doc1"), F.col("doc1").alias("doc2"))
-    ).persist()
-    # r15: LAZY local checkpoints (eager=False) — the plan is truncated
-    # to a LogicalRDD immediately (same lineage-cut as the eager form),
-    # but materialization folds into the round's convergence count, so
-    # each round is ONE job instead of two (checkpoint job + count
-    # job).  Measured: the per-round job round-trip was the dominant
-    # build cost at bench scale (d08 build 6.7–7.2 s for tiny data).
-    labels = (
-        edges.select(F.col("doc1").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
-    )
-    while True:
-        nb_min = (
-            edges.join(labels, edges["doc2"] == labels["node"])
-            .groupBy("doc1")
-            .agg(F.min("label").alias("nb_label"))
-        )
-        new_labels = (
-            labels.join(nb_min, labels["node"] == nb_min["doc1"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nb_label", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    return (
-        labels.groupBy(F.col("label").alias("component"))
-        .agg(F.count("*").alias("n_docs"), F.max("node").alias("max_doc"))
-        .orderBy("component")
-    )
-
-
-D08_SQL = f"""
-WITH RECURSIVE pairs AS (
-  SELECT doc1, doc2 FROM ({D03_SQL}) _d03
-), und AS (
-  SELECT doc1 AS a, doc2 AS b FROM pairs
-  UNION ALL
-  SELECT doc2, doc1 FROM pairs
-), reach(src, dst) AS (
-  SELECT DISTINCT a, a FROM und
-  UNION
-  SELECT r.src, u.b FROM reach r JOIN und u ON u.a = r.dst
-), comp AS (
-  SELECT src AS node, min(dst) AS component FROM reach GROUP BY src
-)
-SELECT component, count(*) AS n_docs, max(node) AS max_doc
-FROM comp GROUP BY component ORDER BY component
-"""
-
-
-# ---------------------------------------------------------------------------
-# D9 — duplicate clusters via LARGE-STAR / SMALL-STAR (Kiveris et al.,
-# "Connected Components in MapReduce and Beyond"): the O(log n)-round
-# algorithm d08's docstring names as the web-scale upgrade, implemented
-# for real.  Same output contract as d08 (component = min doc_id,
-# size, max member), so the SAME recursive-CTE oracle verifies both —
-# and a test asserts d08 ≡ d09 row-for-row.
-#
-# Round = large-star (hook every node's larger neighbors to its local
-# minimum) then small-star (collapse each node's smaller neighborhood
-# onto its minimum).  Both are ONE groupBy(min) + ONE join each —
-# |E|-row shuffles, no neighbor-list materialization — and the edge set
-# provably converges to component-minimum stars in O(log n) rounds
-# regardless of component diameter (label propagation, d08, needs
-# O(diameter) rounds — the difference between 20 and 10⁶ iterations on
-# a path-shaped graph).  ``localCheckpoint`` per round cuts lineage.
-# The fixpoint test is ONE symmetric-difference job per round: both
-# edge sets are distinct, so a signed union (+1/-1) grouped by edge
-# with a nonzero sum pinpoints any change — one shuffle, one action
-# (was two exceptAll probes = two jobs; a petabyte graph would go
-# further and keep a changed-edges accumulator inside the round).
+# Algorithm: LARGE-STAR / SMALL-STAR (Kiveris et al., "Connected
+# Components in MapReduce and Beyond", SoCC 2014), shared with d11,
+# d13, c14 and n13.  Round = large-star (hook every node's larger
+# neighbors to its local minimum) then small-star (collapse each
+# node's smaller neighborhood onto its minimum).  Both are ONE
+# groupBy(min) + ONE join each — |E|-row shuffles, no neighbor-list
+# materialization — and the edge set provably converges to
+# component-minimum stars in O(log n) rounds regardless of component
+# diameter (label propagation needs O(diameter) rounds — the
+# difference between 20 and 10⁶ iterations on a path-shaped graph).
+# ``localCheckpoint`` per round cuts lineage (Spark's equivalent of
+# Pregel supersteps).  The fixpoint test is ONE symmetric-difference
+# job per round: both edge sets are distinct, so a signed union
+# (+1/-1) grouped by edge with a nonzero sum pinpoints any change —
+# one shuffle, one action (a petabyte graph would go further and keep
+# a changed-edges accumulator inside the round).
 # ---------------------------------------------------------------------------
 def _large_star(bidir: DataFrame) -> DataFrame:
     """Edges (u,v) in BOTH directions → undirected (a,b), a > b."""
@@ -1451,7 +1363,7 @@ def connected_components_star(pairs: DataFrame) -> DataFrame:
     return labels.union(roots)
 
 
-def d09_dup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
+def d08_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = d03_dedup_minhash_lsh(spark, sf_dir).select("doc1", "doc2")
     comp = connected_components_star(pairs)
     return (
@@ -1459,6 +1371,25 @@ def d09_dup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_docs"), F.max("node").alias("max_doc"))
         .orderBy("component")
     )
+
+
+D08_SQL = f"""
+WITH RECURSIVE pairs AS (
+  SELECT doc1, doc2 FROM ({D03_SQL}) _d03
+), und AS (
+  SELECT doc1 AS a, doc2 AS b FROM pairs
+  UNION ALL
+  SELECT doc2, doc1 FROM pairs
+), reach(src, dst) AS (
+  SELECT DISTINCT a, a FROM und
+  UNION
+  SELECT r.src, u.b FROM reach r JOIN und u ON u.a = r.dst
+), comp AS (
+  SELECT src AS node, min(dst) AS component FROM reach GROUP BY src
+)
+SELECT component, count(*) AS n_docs, max(node) AS max_doc
+FROM comp GROUP BY component ORDER BY component
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -1802,7 +1733,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "d06_dedup_corpus": d06_dedup_corpus,
     "d07_simhash_hamming_pairs": d07_simhash_hamming_pairs,
     "d08_dup_components": d08_dup_components,
-    "d09_dup_components_star": d09_dup_components_star,
+    "d09_dup_components_star": d08_dup_components,
     "d10_substring_coverage": d10_substring_coverage,
     "d11_split_leakage": d11_split_leakage,
     "d12_dup_pagerank": d12_dup_pagerank,
@@ -1820,8 +1751,7 @@ ORACLE: dict[str, str] = {
     "d06_dedup_corpus": _d06_sql(),
     "d07_simhash_hamming_pairs": _d07_sql(),
     "d08_dup_components": D08_SQL,
-    # identical output contract — the same recursive-CTE oracle verifies
-    # the O(log n) star algorithm and the label-propagation baseline
+    # the same plan as d08, kept under its own key
     "d09_dup_components_star": D08_SQL,
     "d10_substring_coverage": D10_SQL,
     "d11_split_leakage": D11_SQL,

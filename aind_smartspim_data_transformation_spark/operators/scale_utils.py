@@ -255,13 +255,6 @@ def plan_chunk_dims(
         prev = nxt
 
 
-def plan_partition_count(total_bytes: int, target_partition_bytes: int) -> int:
-    """ceil(total/target), minimum 1 — the repartition() companion."""
-    if target_partition_bytes <= 0:
-        raise ValueError("target_partition_bytes must be positive")
-    return max(1, -(-total_bytes // target_partition_bytes))
-
-
 def _quantile_bounds(df: DataFrame, order_col: str, n: int) -> list[float]:
     """Strictly-increasing approxQuantile boundaries for ``order_col``.
 

@@ -624,9 +624,9 @@ ORDER BY e.query_id
 # what makes an iterative numeric algorithm oracle-checkable.
 #
 # Iteration shape (the canonical Spark k-means):
-#   1. centroids are K×d values → collected to the driver, folded into
-#      LITERAL arrays → assignment is a narrow broadcast map, NO
-#      shuffle of the corpus;
+#   1. centroids are K×d values → collected to the driver, carried as
+#      an int64 matrix in the assignment task closure → assignment is a
+#      narrow map, NO shuffle of the corpus;
 #   2. centroid update is posexplode → groupBy(cell, dim) with map-side
 #      combine → K×d rows shuffled, corpus touched once per iteration.
 # At a billion vectors that is ITERS corpus scans and K×d-sized
@@ -636,48 +636,28 @@ KM_K = 4
 KM_ITERS = 2
 KM_SCALE = 1000
 # Assignment-path history (SCALE.md §6j, VERDICT r10 ask #6; REVERSED
-# by measurement in r15): the literal-centroid expression tree is K
-# inline structs of d-term zip_with/aggregate folds.  Those
-# higher-order functions are CodegenFallback — interpreted, not
-# codegen'd — and the r15 optimization round measured the numpy
-# mapInPandas assignment 3× faster per pass at registry K=16, d=64
-# (0.47–0.98 s vs 1.39–1.51 s over the sf0.1 corpus) and 1.6× on
-# n07 end-to-end (6.17→3.84 s min-over-min, interleaved; see
-# OPTIMIZATION_r15.md).  "auto" therefore routes to the pandas
-# assignment at EVERY K now; the expression path stays in-tree as the
-# zero-Python diagnostic twin (`assign_mode="expr"`), cell-for-cell
-# identical by exact int64 arithmetic — pinned by
-# tests/test_similarity.py::test_lloyd_pandas_assignment_identical.
-# KM_EXPR_MAX_K survives as the guard above which the expr path is
-# refused outright (a 10k-centroid literal projection is a planning
-# hazard, the r15 §2 "unrolled expressions" lesson).
-KM_EXPR_MAX_K = 256
-
-
-def _kmeans_assign(e: DataFrame, cents: list[tuple[int, list[int]]]):
-    """cell = argmin ||x-c||² (tie → smaller cid) against literal centroids."""
-    dists = []
-    for cid, cvec in cents:
-        c = F.array(*[F.lit(int(v)) for v in cvec])
-        d2 = F.aggregate(
-            F.zip_with("x", c, lambda x, cc: (x - cc) * (x - cc)),
-            F.lit(0).cast("long"),
-            lambda s, v: s + v,
-        )
-        dists.append(F.struct(d2.alias("d2"), F.lit(cid).cast("long").alias("cid")))
-    return F.array_min(F.array(*dists))["cid"]
+# by measurement in r15): the first assignment was a literal-centroid
+# expression tree — K inline structs of d-term zip_with/aggregate
+# folds.  Those higher-order functions are CodegenFallback —
+# interpreted, not codegen'd — and the r15 optimization round measured
+# the numpy mapInPandas assignment 3× faster per pass at registry
+# K=16, d=64 (0.47–0.98 s vs 1.39–1.51 s over the sf0.1 corpus) and
+# 1.6× on n07 end-to-end (6.17→3.84 s min-over-min, interleaved; see
+# OPTIMIZATION_r15.md).  The numpy argmin is the one assignment path;
+# the DuckDB oracle (S09_SQL) pins the resulting centroids and cluster
+# sizes exactly.
 
 
 def _kmeans_assign_pandas(
     e: DataFrame, cents: list[tuple[int, list[int]]]
 ) -> DataFrame:
-    """Large-K assignment twin of ``_kmeans_assign``: one vectorized
-    ||x||² − 2x·Cᵀ + ||c||² argmin per Arrow batch against a K×d int64
-    centroid matrix carried in the task closure (K·d·8 bytes — ~80 MB
-    at K=10k, d=1k; a broadcast-sized constant, never a shuffle).
-    Exactness: all terms are int64 products of KM_SCALE-quantized
-    values, and ``cents`` is sorted by cid, so numpy's first-minimum
-    argmin IS the expression path's (d2, cid) struct-min tie rule."""
+    """Lloyd assignment ``cell = argmin ||x-c||²`` (tie → smaller cid):
+    one vectorized ||x||² − 2x·Cᵀ + ||c||² argmin per Arrow batch
+    against a K×d int64 centroid matrix carried in the task closure
+    (K·d·8 bytes — ~80 MB at K=10k, d=1k; a broadcast-sized constant,
+    never a shuffle).  Exactness: all terms are int64 products of
+    KM_SCALE-quantized values, and ``cents`` is sorted by cid, so
+    numpy's first-minimum argmin IS the oracle's (d2, cid) tie rule."""
     import numpy as np
 
     from pyspark.sql.types import LongType, StructField, StructType
@@ -704,23 +684,15 @@ def _kmeans_assign_pandas(
 
 
 def lloyd_train(
-    e: DataFrame, k: int, iters: int, assign_mode: str = "auto"
+    e: DataFrame, k: int, iters: int
 ) -> tuple[DataFrame, list[tuple[int, list[int]]]]:
     """Deterministic integer Lloyd training shared by s09 and the
     SemDeDup composition (plans/extras.n07_semantic_dedup).  ``e`` must
     carry (vec_id, x) with x already integer-quantized; init centroids
-    are the vectors with vec_id 1..k.  Each round: literal-centroid
-    assignment (narrow broadcast map — NO corpus shuffle) then a K×d-row
-    mean update.  Returns (final assignment with a ``cell`` column, the
-    final centroid list).
-
-    ``assign_mode``: "pandas" (and "auto", which now always routes to
-    it — the r15 measured decision, see the KM_EXPR_MAX_K comment)
-    uses the vectorized numpy argmin; "expr" inlines K
-    literal-centroid expressions (the zero-Python diagnostic twin,
-    refused above ``KM_EXPR_MAX_K`` where the literal projection is a
-    planning hazard).  Both produce identical cells (exact int64
-    arithmetic, same tie rule) — pinned by test.
+    are the vectors with vec_id 1..k.  Each round: the vectorized numpy
+    assignment (``_kmeans_assign_pandas`` — a narrow map, NO corpus
+    shuffle) then a K×d-row mean update.  Returns (final assignment
+    with a ``cell`` column, the final centroid list).
 
     r15 (guide §4.1 "pass only the columns the function needs"): the
     update-feeding iteration passes run over a narrow ``x``-only
@@ -728,14 +700,6 @@ def lloyd_train(
     raw vector) never cross the Arrow boundary during training; only
     the RETURNED final assignment — which the caller consumes lazily —
     carries the full row."""
-    if assign_mode not in ("auto", "expr", "pandas"):
-        raise ValueError(f"unknown assign_mode: {assign_mode}")
-    use_expr = assign_mode == "expr"
-    if use_expr and k > KM_EXPR_MAX_K:
-        raise ValueError(
-            f"assign_mode='expr' refused at k={k} > {KM_EXPR_MAX_K}: "
-            "the literal-centroid projection is a planning hazard"
-        )
     cents = [
         (int(r["vec_id"]), [int(v) for v in r["x"]])
         for r in e.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= k)).collect()
@@ -744,19 +708,12 @@ def lloyd_train(
     xonly = e.select("x")
     assigned = None
     for i in range(iters):
-        if use_expr:
-            # diagnostic twin: the pre-r15 shape, full-width assignment
-            # every pass
-            assigned = e.withColumn("cell", _kmeans_assign(e, cents))
-            src = assigned
-        else:
-            # narrow iteration frame: ships only `x` through Arrow
-            src = _kmeans_assign_pandas(xonly, cents)
-            if i == iters - 1:
-                # the returned assignment (lazy — executed by the
-                # caller's plan) under the SAME centroids as `src`,
-                # over the full row
-                assigned = _kmeans_assign_pandas(e, cents)
+        # narrow iteration frame: ships only `x` through Arrow
+        src = _kmeans_assign_pandas(xonly, cents)
+        if i == iters - 1:
+            # the returned assignment (lazy — executed by the caller's
+            # plan) under the SAME centroids as `src`, over the full row
+            assigned = _kmeans_assign_pandas(e, cents)
         new_cents = (
             src.select("cell", F.posexplode("x").alias("dim", "val"))
             .groupBy("cell", "dim")
@@ -781,8 +738,8 @@ def s09_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # r15: conditional scan spread (guide §2.5) — parallelizes the
-    # quantize transform and the literal-centroid assignment folds that
-    # run scan-side; no-op whenever the scan already splits.
+    # quantize transform and the centroid assignment that run
+    # scan-side; no-op whenever the scan already splits.
     e = spread_unsplittable_scan(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id",
         F.expr(
@@ -858,9 +815,9 @@ ORDER BY cid
 # M table lookups, no float math against the original vector.
 #
 # Spark shape: the codebooks (seed subvectors) and the query's
-# per-subspace distance LUT are computed once on the driver and folded
-# into LITERALS, so encoding + distance estimation is a NARROW MAP
-# over the corpus — zero shuffles before the final top-k
+# per-subspace distance LUT are computed once on the driver and carried
+# in the numpy task closure, so encoding + distance estimation is a
+# NARROW MAP over the corpus — zero shuffles before the final top-k
 # (TakeOrderedAndProject).  That is the scan you run over a billion
 # codes.  Everything is scale-1000 integer math (exact in int64), so
 # the DuckDB oracle derives the same codebooks/LUT relationally and
@@ -877,8 +834,7 @@ PQ_TOPK = 10
 def _pq_books_lut(pivot: dict[int, list[int]]):
     """(books, lut, q) from the collected seed/query vectors —
     codebooks[m][k] = seed k's m-th subvector; lut[m][k] = d²(query's
-    m-th subvector, that).  Shared by the registered numpy path and
-    the expression diagnostic twins."""
+    m-th subvector, that).  Shared by s10 and s11."""
     q = pivot[PQ_QUERY_ID]
     books = [
         [pivot[s][m * PQ_SUB : (m + 1) * PQ_SUB] for s in PQ_SEED_IDS]
@@ -913,9 +869,9 @@ def s10_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     into numpy too (float32→float64 widening, ×KM_SCALE, floor — the
     identical IEEE double ops the Spark expression performed), so the
     scan ships the narrower raw float32 array through Arrow instead
-    of 64 int64s.  Cell-for-cell identity with the expression twin
-    `_s10_pq_adc_expr` is pinned by
-    tests/test_similarity.py::test_s10_pandas_equals_expr."""
+    of 64 int64s.  The DuckDB oracle (``_pq_sql``) pins the rows
+    exactly (tests/test_similarity.py::test_similarity_vs_oracle);
+    the r16 expression plan is no longer in the tree."""
     import numpy as np
 
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -974,80 +930,6 @@ def s10_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return enc.orderBy(F.asc("d2_approx"), F.asc("vec_id")).limit(PQ_TOPK)
-
-
-def _s10_pq_adc_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-Python diagnostic twin — the pre-r16 literal
-    codebook/LUT expression plan (e13/Lloyd precedent: the rewired
-    query keeps its old shape in-tree, equivalence pinned by test)."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr(
-            f"transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * {KM_SCALE}) AS BIGINT))"
-        ).alias("x"),
-    )
-    pivot = {
-        int(r["vec_id"]): [int(v) for v in r["x"]]
-        for r in e.filter(
-            F.col("vec_id").isin(PQ_QUERY_ID, *PQ_SEED_IDS)
-        ).collect()
-    }
-    books, lut, q = _pq_books_lut(pivot)
-
-    def _sub_d2(m: int, k: int):
-        c = F.array(*[F.lit(v) for v in books[m][k]])
-        sub = F.slice("x", m * PQ_SUB + 1, PQ_SUB)
-        return F.aggregate(
-            F.zip_with(sub, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda s, v: s + v,
-        )
-
-    codes = [
-        F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        _sub_d2(m, k).alias("d2"),
-                        F.lit(k).cast("long").alias("k"),
-                    )
-                    for k in range(PQ_K)
-                ]
-            )
-        )["k"].alias(f"code{m}")
-        for m in range(PQ_M)
-    ]
-    enc = e.select("vec_id", "x", *codes)
-    pq_code = sum(
-        (F.col(f"code{m}") * (PQ_K**m) for m in range(PQ_M)), F.lit(0).cast("long")
-    )
-    # ADC: the literal LUT indexed by the stored code — M lookups/vector
-    approx = sum(
-        (
-            F.element_at(
-                F.array(*[F.lit(v) for v in lut[m]]), (F.col(f"code{m}") + 1).cast("int")
-            )
-            for m in range(PQ_M)
-        ),
-        F.lit(0).cast("long"),
-    )
-    q_lit = F.array(*[F.lit(v) for v in q])
-    exact = F.aggregate(
-        F.zip_with("x", q_lit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda s, v: s + v,
-    )
-    return (
-        enc.select(
-            "vec_id",
-            pq_code.alias("pq_code"),
-            approx.alias("d2_approx"),
-            exact.alias("d2_exact"),
-            (approx - exact).alias("adc_err"),
-        )
-        .orderBy(F.asc("d2_approx"), F.asc("vec_id"))
-        .limit(PQ_TOPK)
-    )
 
 
 def _pq_sql() -> str:
@@ -1119,9 +1001,10 @@ LIMIT {PQ_TOPK}
 #      stage caps the ADC approximation error at zero for the answers
 #      that matter.
 #
-# Plan: centroids + LUT fold into literals (driver-side, K+M·K tiny
-# rows), so stages 1–3 are a narrow map with ZERO exchanges; stage 4
-# is TakeOrderedAndProject(RERANK) then a 20-row exact re-score.
+# Plan: centroids + LUT are computed driver-side (K+M·K tiny rows) and
+# ride the numpy task closure, so stages 1–3 are a narrow map with ZERO
+# exchanges; stage 4 is TakeOrderedAndProject(RERANK) then a top-k by
+# the exact distance.
 # Everything integer → the DuckDB oracle hash-matches exactly.
 # ---------------------------------------------------------------------------
 IVFPQ_RERANK = 20
@@ -1133,11 +1016,11 @@ def s11_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``mapInPandas`` (r16, VERDICT r15 ask #1): coarse assignment
     (argmin int64 L2 against the K×d centroid matrix, first-minimum ==
     the struct-min cid tie rule), nprobe cell filter, PQ encode and
-    ADC all run per Arrow batch inside one opaque map; the former
-    literal-centroid + literal-codebook expression tree (K·d + M·K·SUB
-    constants re-analyzed by Catalyst per invocation) survives as the
-    diagnostic twin `_s11_ivf_pq_search_expr`, result-identity pinned
-    by tests/test_similarity.py::test_s11_pandas_equals_expr.  The
+    ADC all run per Arrow batch inside one opaque map, replacing the
+    former literal-centroid + literal-codebook expression tree (K·d +
+    M·K·SUB constants re-analyzed by Catalyst per invocation); the
+    DuckDB oracle (``_ivfpq_sql``) pins the rows exactly
+    (tests/test_similarity.py::test_similarity_vs_oracle).  The
     exact re-rank distance is computed vectorized for every probed row
     (trivial next to the codes argmin) instead of on the 20-row
     shortlist — same deterministic per-row value, so the two-stage
@@ -1217,91 +1100,6 @@ def s11_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         shortlist.select("vec_id", "cell", "d2_approx", "d2_exact")
-        .orderBy(F.asc("d2_exact"), F.asc("vec_id"))
-        .limit(IVFPQ_TOPK)
-    )
-
-
-def _s11_ivf_pq_search_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-Python diagnostic twin — the pre-r16 literal
-    centroid/codebook/LUT expression plan (result identity pinned by
-    test_s11_pandas_equals_expr)."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr(
-            f"transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * {KM_SCALE}) AS BIGINT))"
-        ).alias("x"),
-    )
-    pivot = {
-        int(r["vec_id"]): [int(v) for v in r["x"]]
-        for r in e.filter(
-            F.col("vec_id").isin(PQ_QUERY_ID, *range(1, N_CENTROIDS + 1))
-        ).collect()
-    }
-    cents = [(cid, pivot[cid]) for cid in range(1, N_CENTROIDS + 1)]
-    books, lut, q = _pq_books_lut(pivot)
-    # stage 1: coarse assignment (argmin integer d2, cid tiebreak)
-    cell = _kmeans_assign(e, cents)
-    # stage 2: the query's nprobe cells, computed driver-side (tiny)
-    qd = sorted(
-        (sum((a - b) ** 2 for a, b in zip(q, cvec)), cid) for cid, cvec in cents
-    )
-    probe_cells = [cid for _, cid in qd[:N_PROBE]]
-
-    # stage 3: PQ encode + ADC over the probed slice only
-    def _sub_d2(m: int, k: int):
-        c = F.array(*[F.lit(v) for v in books[m][k]])
-        sub = F.slice("x", m * PQ_SUB + 1, PQ_SUB)
-        return F.aggregate(
-            F.zip_with(sub, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda s, v: s + v,
-        )
-
-    codes = [
-        F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        _sub_d2(m, k).alias("d2"),
-                        F.lit(k).cast("long").alias("k"),
-                    )
-                    for k in range(PQ_K)
-                ]
-            )
-        )["k"].alias(f"code{m}")
-        for m in range(PQ_M)
-    ]
-    probed = (
-        e.withColumn("cell", cell)
-        .filter(
-            F.col("cell").isin(*probe_cells) & (F.col("vec_id") != PQ_QUERY_ID)
-        )
-        .select("vec_id", "cell", "x", *codes)
-    )
-    approx = sum(
-        (
-            F.element_at(
-                F.array(*[F.lit(v) for v in lut[m]]), (F.col(f"code{m}") + 1).cast("int")
-            )
-            for m in range(PQ_M)
-        ),
-        F.lit(0).cast("long"),
-    )
-    shortlist = (
-        probed.select("vec_id", "cell", "x", approx.alias("d2_approx"))
-        .orderBy(F.asc("d2_approx"), F.asc("vec_id"))
-        .limit(IVFPQ_RERANK)
-    )
-    # stage 4: exact re-rank of the shortlist
-    q_lit = F.array(*[F.lit(v) for v in q])
-    exact = F.aggregate(
-        F.zip_with("x", q_lit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda s, v: s + v,
-    )
-    return (
-        shortlist.select("vec_id", "cell", "d2_approx", exact.alias("d2_exact"))
         .orderBy(F.asc("d2_exact"), F.asc("vec_id"))
         .limit(IVFPQ_TOPK)
     )

@@ -30,60 +30,6 @@ def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 
 
-# One scoped clone per (parent session, mirrored-conf values) —
-# weak-keyed on the parent so a torn-down parent never pins its clone:
-# newSession() builds a whole JVM SessionState, and e14 inside a
-# 150-query registry sweep was paying that build — and leaking one
-# SessionState — per call (ADVICE r9).  The cache holds only the
-# LATEST conf combination per parent; an older clone stays alive
-# exactly as long as some still-lazy DataFrame references it.
-_E14_SCOPED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-# Runtime confs MIRRORED from the parent: a clone's SQLConf
-# initializes from the SparkContext defaults, NOT the parent's runtime
-# session conf, so a harness override (ANSI sweep, session timezone,
-# shuffle sizing) would silently not apply to e14's execution
-# (ADVICE r9).  Deliberately a short explicit list — mirroring ALL
-# parent confs would re-import the exact guard leakage the clone
-# exists to contain.
-_E14_MIRRORED_CONFS = (
-    "spark.sql.ansi.enabled",
-    "spark.sql.session.timeZone",
-    "spark.sql.shuffle.partitions",
-)
-
-
-def _e14_scoped_session(spark: SparkSession) -> SparkSession:
-    # The cache key is the VALUES of the mirrored confs: SQLConf is
-    # read at EXECUTION time, so mutating a cached clone's conf in
-    # place would retroactively change the semantics of a still-lazy
-    # DataFrame returned by an earlier e14 call (e.g. an ANSI sweep
-    # builds under ansi=true, the harness flips it back, a later e14
-    # call re-mirrors, and the held DataFrame silently collects under
-    # ansi=false).  A changed combination gets a FRESH clone; the old
-    # one keeps its conf for whoever still holds it.
-    vals = []
-    for k in _E14_MIRRORED_CONFS:
-        try:
-            vals.append(spark.conf.get(k))
-        except Exception:
-            vals.append(None)
-    key = tuple(vals)
-    entry = _E14_SCOPED.get(spark)
-    if entry is not None and entry[0] == key:
-        return entry[1]
-    scoped = spark.newSession()
-    # the sizing count() reads parquet FOOTERS only (aggregate
-    # pushdown — safe to flip here because the clone's conf never
-    # escapes), so the guard costs a metadata pass, not a data pass
-    scoped.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    for k, v in zip(_E14_MIRRORED_CONFS, key):
-        if v is not None:
-            scoped.conf.set(k, v)
-    _E14_SCOPED[spark] = (key, scoped)
-    return scoped
-
-
 # ---------------------------------------------------------------------------
 # E1 — semi-structured JSON extraction from props.
 # ---------------------------------------------------------------------------
@@ -651,10 +597,10 @@ FROM weekly ORDER BY event_type, week
 # the frame identically — epoch *seconds* would truncate and disagree
 # on sub-second boundaries.
 #
-# Scale posture: one hash shuffle on user_id + one in-partition sort;
-# frame state is bounded by a user's 24-hour event count.  This is the
-# batch twin of what a streaming job would do with a 24h sliding
-# aggregation.
+# The contract is the literal per-user RANGE frame, stated once as the
+# DuckDB oracle (E13_SQL).  The Spark plan is e16's bucketed
+# formulation: Spark re-scans a sliding RANGE frame per row, so the
+# literal frame is O(n_user × frame) on ONE task (see E16 below).
 # ---------------------------------------------------------------------------
 _DAY_US = 24 * 3600 * 1_000_000
 
@@ -665,37 +611,14 @@ def e13_rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     native per-user RANGE frame is O(n_user × frame) on ONE task and
     was measured KILLED (~80 min, still running) at the 100×-zipf
     decade on the hot user's 1.48M-event partition, while the bucketed
-    twin computes the same 10M rows in ~9.5 s
+    plan computes the same 10M rows in ~9.5 s
     (tools/overflow_sweep_r14_100x_zipf_changed.log) — every window
     partition is one user-DAY, so a hot key parallelizes across its
-    days.  Row-identical by construction and by test
-    (tests/test_events.py::test_bucketed_rolling_equals_range_frame);
-    the DuckDB oracle stays the native RANGE-frame SQL (E13_SQL), so
-    the strict gate pins the two formulations against each other at
-    every sweep.  The native frame survives as the diagnostic twin
-    `e13_rolling_24h_native` (the pedagogical W-frame surface)."""
+    days.  The DuckDB oracle is the native RANGE-frame SQL (E13_SQL),
+    so the strict gate and tests/test_events.py (the sf0.01 corpus plus
+    tie and pre-epoch fixtures) pin the bucketed plan against the
+    literal frame; the oracle is the one statement of that contract."""
     return e16_rolling_24h_bucketed(spark, sf_dir)
-
-
-def e13_rolling_24h_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic twin: the literal sliding RANGE frame (unregistered
-    since r15 — see e13_rolling_24h).  O(n_user × frame) per partition;
-    correct, and the simplest statement of the contract."""
-    ev = _ev(spark, sf_dir)
-    w = (
-        W.partitionBy("user_id")
-        .orderBy(F.unix_micros("ts"))
-        .rangeBetween(-_DAY_US, 0)
-    )
-    return (
-        ev.select(
-            "user_id",
-            "ts",
-            F.count("*").over(w).alias("n_24h"),
-            F.round(F.sum("value").over(w), 2).alias("sum_24h"),
-        )
-        .orderBy("user_id", "ts")
-    )
 
 
 E13_SQL = f"""
@@ -729,10 +652,10 @@ ORDER BY user_id, ts
 # the sum), with events sorting before probes at equal us so the
 # inclusive left boundary counts.  Every window partition is one
 # user-day, not one user — the hot key parallelizes across its days.
-# Same oracle as e13 (registered under E13_SQL); e13 ≡ e16 asserted in
-# tests/test_events.py.  Measured on the same skewed 100× corpus:
-# 12.1 s for all 10M output rows, where e13 was killed after ~80 min
-# (>395×).
+# Same oracle as e13 (registered under E13_SQL); tests/test_events.py
+# checks e16 against it on tie and pre-epoch fixtures too.  Measured on
+# the same skewed 100× corpus: 12.1 s for all 10M output rows, where
+# the literal frame was killed after ~80 min (>395×).
 # ---------------------------------------------------------------------------
 def e16_rolling_24h_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _ev(spark, sf_dir).select(
@@ -825,209 +748,8 @@ def e16_rolling_24h_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _e16_fused_two_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fused candidate for e16 (VERDICT r12 ask #6): ONE window
-    partition pass over the event+probe union computes BOTH terms —
-    event rows take the own-bucket cumulative (RANGE asc, probes
-    contribute nothing via the is_probe filter), probe rows take the
-    prev-bucket descending cumulative — instead of e16's separate
-    own-bucket pass.  Saves one n-row exchange + one parquet scan; the
-    asc window now sorts 2n rows instead of n, and the event↔probe
-    join is unavoidable in both forms (an event and its probe live in
-    ADJACENT bucket partitions).  Row-identical to e16 by test; kept
-    unregistered unless the ABAB gate shows ≥1.3× on the unskewed
-    100× corpus (SCALE.md §6s records the decision)."""
-    ev = _ev(spark, sf_dir).select(
-        "event_id",
-        "user_id",
-        "ts",
-        "value",
-        F.unix_micros("ts").alias("us"),
-        F.expr(_bucket_us(_DAY_US)).alias("bkt"),
-    )
-    ev_rows = ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.col("bkt").alias("pbkt"),
-        "us",
-        "value",
-        F.lit(0).alias("is_probe"),
-        F.lit(None).cast("long").alias("probe_of"),
-    )
-    probe_rows = ev.select(
-        F.lit(None).cast("long").alias("event_id"),
-        "user_id",
-        F.lit(None).cast("timestamp").alias("ts"),
-        (F.col("bkt") - 1).alias("pbkt"),
-        (F.col("us") - F.lit(_DAY_US)).alias("us"),
-        F.lit(None).cast("double").alias("value"),
-        F.lit(1).alias("is_probe"),
-        F.col("event_id").alias("probe_of"),
-    )
-    is_ev = F.col("is_probe") == 0
-    w_asc = (
-        W.partitionBy("user_id", "pbkt")
-        .orderBy("us")
-        .rangeBetween(W.unboundedPreceding, 0)
-    )
-    w_desc = (
-        W.partitionBy("user_id", "pbkt")
-        .orderBy(F.desc("us"), F.asc("is_probe"))
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    ann = ev_rows.unionByName(probe_rows).select(
-        "event_id",
-        "user_id",
-        "ts",
-        "is_probe",
-        "probe_of",
-        F.sum(F.when(is_ev, 1)).over(w_asc).alias("n_own"),
-        F.sum(F.when(is_ev, F.col("value"))).over(w_asc).alias("s_own"),
-        F.sum(1 - F.col("is_probe")).over(w_desc).alias("n_ge"),
-        F.sum(F.when(is_ev, F.col("value"))).over(w_desc).alias("s_ge"),
-    )
-    own = ann.filter(is_ev).select(
-        "event_id", "user_id", "ts", "n_own", "s_own"
-    )
-    probed = ann.filter(F.col("is_probe") == 1).select(
-        # never NULL — the DESC frame holds the probe row's own 0
-        # (same argument as e16 proper; ADVICE r13)
-        F.col("probe_of").alias("event_id"),
-        "n_ge",
-        "s_ge",
-    )
-    s_sum = F.when(
-        F.col("s_own").isNull() & F.col("s_ge").isNull(),
-        F.lit(None).cast("double"),
-    ).otherwise(
-        F.coalesce("s_own", F.lit(0.0)) + F.coalesce("s_ge", F.lit(0.0))
-    )
-    return (
-        own.join(probed, "event_id")
-        .select(
-            "user_id",
-            "ts",
-            (F.col("n_own") + F.col("n_ge")).alias("n_24h"),
-            F.round(s_sum, 2).alias("sum_24h"),
-        )
-        .orderBy("user_id", "ts")
-    )
-
-
-# ---------------------------------------------------------------------------
-# E14 — the same 30-minute-gap sessions as e04, via recursive chain
-# traversal.  FOUR formulations of one contract now exist (e04 window
-# scan, streaming session_window, recursive CTE, pointer jumping), all
-# asserted row-identical in tests.  The REGISTERED e14 plan is the
-# pointer-jumping one since r14 (see e14_sessions_recursive); the
-# native-rCTE chain walk below (e14_sessions_rcte) stays as the
-# declarative diagnostic surface — Spark 4 rCTE semantics demonstrated
-# and oracle-pinned at small SF.
-#
-# rCTE termination and cost are structural: each recursion step
-# strictly advances event time along a per-user chain, and total
-# recursive rows = total events (each event appears in exactly one
-# chain prefix) — linear rows, but LEVELS = longest chain, which is
-# the skew wall (and the 100-level guard's loud failure) pointer
-# jumping removes.  Spark 4 rCTEs support UNION ALL only (no
-# distinct-fixpoint), which this shape never needs.
-# ---------------------------------------------------------------------------
-def e14_sessions_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """e14's REGISTERED plan — pointer-jumping since r14 (VERDICT r13
-    ask #4, measured decision; artifact
-    `tools/e14_pointer_probe_r14_100x_zipf.json`): on the 100× zipf
-    corpus the pointer-jumping formulation computes all 4,883,560
-    sessions in ~205 s while the rCTE chain walk cannot finish at all
-    — it fails its 100-level recursion guard on the hot user's
-    1.48M-event session (RECURSION_LEVEL_LIMIT_EXCEEDED, the
-    documented loud failure), and with the guard raised it is
-    iteration-count-bound (one JOIN per chain step — ≥1.48M levels)
-    and timed out at the probe bound.  Adoption clears e14's standing
-    zipf-sweep waiver: every registered query now completes under
-    skew.
-
-    The declarative rCTE twin stays in-tree as `e14_sessions_rcte`
-    (small-SF diagnostic surface, row-identity-tested); the DuckDB
-    oracle remains the recursive SQL (E14_SQL) — same answer, so the
-    strict gate pins the two formulations against each other at every
-    sweep."""
-    return _e14_pointer_jumping(spark, sf_dir)
-
-
-def e14_sessions_rcte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The chain links on a per-user ROW NUMBER (ts, event_id order),
-    # not on ts: two events of one user sharing a timestamp would make
-    # a ts-keyed join match both rows, forking the chain and
-    # double-counting the session (same-second events are routine in
-    # real streams even though the fixtures happen to lack them).
-    # Size the rCTE's runaway guard to the input (found by the r8
-    # overflow/envelope sweep: the default spark.sql.cteRecursionRowLimit
-    # of 10⁶ total recursive rows fails a 10⁶-event corpus even though
-    # THIS recursion is structurally linear — total recursive rows
-    # = total events, each event joins exactly one chain prefix).  2n+1k
-    # keeps the guard meaningful: a forked chain (the bug the guard
-    # exists for) would still trip it.  The 100-LEVEL default stays: a
-    # single session longer than 100 events fails loudly, and e04 (one
-    # window scan) / the streaming session_window are the scale paths —
-    # this query is the declarative-parity formulation.
-    #
-    # The loosened guard is scoped to a CLONED session (shared
-    # SparkContext/cache manager, isolated SQLConf and temp-view
-    # namespace): the limit is read at EXECUTION time, so a
-    # save-restore around the lazy build would re-tighten it before
-    # the caller ever collects, while a plain conf.set would leak the
-    # loosened guard to every later rCTE in a registry sweep (r8
-    # judge finding).  The clone also keeps `_e14_events` out of the
-    # caller's temp-view namespace.  It is CACHED per parent and
-    # mirrors the parent's ANSI/timezone/shuffle runtime confs at each
-    # call (_e14_scoped_session, ADVICE r9).
-    scoped = _e14_scoped_session(spark)
-    ev = _ev(scoped, sf_dir)
-    ev.createOrReplaceTempView("_e14_events")
-    n_events = ev.count()
-    # monotone: the cached clone may hold an earlier (larger) input's
-    # limit while that DataFrame is still un-collected — the guard is
-    # read at EXECUTION time, so only ever RAISE it.  A forked chain
-    # (the bug the guard exists for) is quadratic and still trips any
-    # linear-sized bound.
-    new_limit = max(1_000_000, 2 * n_events + 1_000)
-    cur = int(scoped.conf.get("spark.sql.cteRecursionRowLimit"))
-    scoped.conf.set(
-        "spark.sql.cteRecursionRowLimit", str(max(cur, new_limit))
-    )
-    return scoped.sql(
-        """
-        WITH RECURSIVE base AS (
-          SELECT user_id, ts,
-                 row_number() OVER w AS rn,
-                 lag(ts) OVER w AS prev_ts
-          FROM _e14_events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), nodes AS (
-          SELECT user_id, ts, rn,
-                 (prev_ts IS NULL
-                  OR CAST(ts AS LONG) - CAST(prev_ts AS LONG) > 1800) AS is_head
-          FROM base
-        ), chain(user_id, session_start, ts, rn, n) AS (
-          SELECT user_id, ts, ts, rn, 1 FROM nodes WHERE is_head
-          UNION ALL
-          SELECT c.user_id, c.session_start, n.ts, n.rn, c.n + 1
-          FROM chain c JOIN nodes n
-            ON n.user_id = c.user_id AND n.rn = c.rn + 1
-          WHERE NOT n.is_head
-        )
-        SELECT user_id, session_start,
-               max(ts) AS session_end,
-               CAST(max(n) AS BIGINT) AS n_events
-        FROM chain GROUP BY user_id, session_start
-        ORDER BY user_id, session_start
-        """
-    )
-
-
 # Checkpoint RDD handles still potentially referenced by a returned
-# _e14_pointer_jumping frame, as (weakref-to-result-frame, handle)
+# e14_sessions_recursive frame, as (weakref-to-result-frame, handle)
 # pairs.  r16 (VERDICT r15 "what's wrong" #2): the r15 registry was a
 # flat list released unconditionally at the start of the NEXT build,
 # which reintroduced a lifetime hazard — with two e14 result frames
@@ -1072,27 +794,40 @@ def _ck_rdd_handle(df: DataFrame):
     return df._jdf.queryExecution().analyzed().rdd()
 
 
-def _e14_pointer_jumping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pointer-jumping (doubling) reformulation of e14's session walk
-    (VERDICT r13 ask #4, builder's NOTES_r13 "next flaw" #3): the rCTE
-    replays ONE chain step per iteration, so a hot user's longest
-    session sets the iteration count — the 100×-zipf wall.  Here every
+# ---------------------------------------------------------------------------
+# E14 — the same 30-minute-gap sessions as e04, via chain traversal.
+# The contract is the recursive chain walk, stated once as the DuckDB
+# oracle (E14_SQL): each recursion step advances one event along a
+# per-user chain, so its LEVELS = the longest session — the skew wall.
+# The Spark plan is pointer jumping, which needs O(log longest-chain)
+# rounds instead.  The chain links on a per-user ROW NUMBER (ts,
+# event_id order), not on ts: two events of one user sharing a
+# timestamp would make a ts-keyed link match both rows, forking the
+# chain and double-counting the session.
+# ---------------------------------------------------------------------------
+def e14_sessions_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """e14's REGISTERED plan — pointer jumping (doubling) since r14
+    (VERDICT r13 ask #4, measured decision; artifact
+    `tools/e14_pointer_probe_r14_100x_zipf.json`).  A recursive chain
+    walk replays ONE chain step per iteration, so a hot user's longest
+    session sets the iteration count: on the 100× zipf corpus the
+    Spark rCTE failed its 100-level recursion guard on the hot user's
+    1.48M-event session, and with the guard raised it timed out, while
+    this plan computes all 4,883,560 sessions in ~205 s.  Here every
     event starts with a pointer at its predecessor (heads self-loop)
     and each round composes ptr ← ptr(ptr), halving every event's
     remaining distance to its session head: O(log longest-chain)
     rounds total, the d09 large/small-star trick applied to a path.
 
-    Row-identical to e14/e04's sessions by construction (pointer
-    convergence lands every event on the nearest preceding head — the
-    session head) and by test (tests/test_events.py).  Each round is
-    one shuffle join on (user_id, ptr); unlike the rCTE — which keeps
-    the hot user's whole chain in ONE task's iteration sequence — the
-    join key spreads a hot user's rows across ptr values, so skew
-    DILUTES with each round instead of serializing.  Rounds
-    localCheckpoint (the d09 convention): truncates lineage (the
-    self-referential join would otherwise double the plan every
-    round) and materializes, so the convergence probe is a cheap
-    scan, not a re-execution.
+    Pointer convergence lands every event on the nearest preceding
+    head — the session head — so the rows equal E14_SQL's; the strict
+    gate and tests/test_events.py pin that.  Each round is one shuffle
+    join on (user_id, ptr); the join key spreads a hot user's rows
+    across ptr values, so skew DILUTES with each round instead of
+    serializing.  Rounds localCheckpoint (the d09 convention):
+    truncates lineage (the self-referential join would otherwise
+    double the plan every round) and materializes, so the convergence
+    probe is a cheap scan, not a re-execution.
 
     Storage is bounded (r14, tightened r15): consumed generations are
     released as soon as their successor is materialized.  Without the
@@ -1112,25 +847,22 @@ def _e14_pointer_jumping(spark: SparkSession, sf_dir: str) -> DataFrame:
     r15 (VERDICT r14 ask #7): CONVERGED-ROW FILTERING was built,
     row-identity-verified (same 4,883,560 sessions at 100× zipf) and
     REJECTED on the ABAB gate — 0.87× at 100× zipf, 2/3 interleaved
-    pairs clearly slower (tools/r15_e14_filter_probe.json).  Why the
-    geometric-shrink intuition fails: filtering only thins the join's
-    LEFT side (10M→~1.5M rows after round 2 on this corpus), but the
-    mapping (right) side must stay corpus-sized every round — an
-    active row can target any long-converged node — and the added
-    per-round work (separate done-part and active-part checkpoint
-    jobs, a k-part union feeding the mapping) costs more than the
-    left-side shuffle saving.  The candidate stays in-tree as
-    `_e14_pointer_jumping_filtered` so the probe remains
-    reproducible; do not re-adopt without a corpus where the LEFT
-    side dominates the join cost."""
+    pairs clearly slower (tools/r15_e14_filter_probe.json records the
+    run).  Why the geometric-shrink intuition fails: filtering only
+    thins the join's LEFT side (10M→~1.5M rows after round 2 on this
+    corpus), but the mapping (right) side must stay corpus-sized every
+    round — an active row can target any long-converged node — and the
+    added per-round work (separate done-part and active-part
+    checkpoint jobs, a k-part union feeding the mapping) costs more
+    than the left-side shuffle saving.  That candidate is no longer in
+    the tree; do not rebuild it without a corpus where the LEFT side
+    dominates the join cost."""
     # Release any checkpoint blocks whose result frame a PREVIOUS e14
     # build of this process has since dropped (ADVICE r14: the final
     # generation's blocks outlive the returned DataFrame until GC;
     # clearCache() does not reach them).  r16: release is keyed by the
     # result frame's liveness, so a still-alive older result is never
     # invalidated (see _e14_release_dead_handles).
-    import weakref
-
     _e14_release_dead_handles()
 
     from pyspark import StorageLevel
@@ -1209,120 +941,6 @@ def _e14_pointer_jumping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("user_id", "session_start")
     )
     _E14_LIVE_HANDLES.append((weakref.ref(result), cur_h))
-    return result
-
-
-def _e14_pointer_jumping_filtered(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """REJECTED candidate (VERDICT r14 ask #7), kept so the ABAB probe
-    stays reproducible (tools/r15_e14_filter_probe.py /
-    tools/r15_e14_filter_probe.json): converged rows leave the join's
-    LEFT side each round, but the mapping (right) side must stay
-    corpus-sized — an active row can target any long-converged node —
-    so the saving is bounded at the left side's shuffle share and the
-    added per-round jobs (done-part + active-part checkpoints, k-part
-    mapping union) cost more: 0.87× at 100× zipf, 2/3 interleaved
-    pairs clearly slower.  Row-identical to the registered loop (same
-    4,883,560 sessions at 100× zipf; small-SF identity by test)."""
-    import weakref
-
-    _e14_release_dead_handles()
-
-    from pyspark import StorageLevel
-
-    _GEN_LEVEL = StorageLevel.MEMORY_AND_DISK
-    ev = _ev(spark, sf_dir)
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    base = ev.select(
-        "user_id",
-        "ts",
-        F.row_number().over(w).alias("rn"),
-        F.lag("ts").over(w).alias("prev_ts"),
-    )
-    nodes = base.withColumn(
-        "is_head",
-        F.col("prev_ts").isNull()
-        | (F.col("ts").cast("long") - F.col("prev_ts").cast("long") > 1800),
-    )
-    active = nodes.select(
-        "user_id",
-        "ts",
-        "rn",
-        F.when(F.col("is_head"), F.col("rn"))
-        .otherwise(F.col("rn") - 1)
-        .alias("ptr"),
-    ).localCheckpoint(storageLevel=_GEN_LEVEL)
-    active_h = _ck_rdd_handle(active)
-    done_parts: list[DataFrame] = []
-    result_handles: list = []  # done-part blocks backing the result
-    while True:
-        mapping = active.select(
-            F.col("user_id").alias("m_uid"),
-            F.col("rn").alias("m_rn"),
-            F.col("ptr").alias("m_ptr"),
-        )
-        for d in done_parts:
-            mapping = mapping.unionByName(
-                d.select(
-                    F.col("user_id").alias("m_uid"),
-                    F.col("rn").alias("m_rn"),
-                    F.col("ptr").alias("m_ptr"),
-                )
-            )
-        nxt = (
-            active.join(
-                mapping,
-                (F.col("user_id") == F.col("m_uid"))
-                & (F.col("ptr") == F.col("m_rn")),
-            )
-            .select(
-                "user_id",
-                "ts",
-                "rn",
-                F.col("m_ptr").alias("ptr"),
-                (F.col("m_ptr") != F.col("ptr")).alias("moved"),
-            )
-            # eager: materialized on return, so the generations
-            # consumed below are safe to drop
-            .localCheckpoint(storageLevel=_GEN_LEVEL)
-        )
-        nxt_h = _ck_rdd_handle(nxt)
-        # newly-converged rows leave the loop for good (cheap filter
-        # jobs over the materialized nxt blocks, not re-executions)
-        new_done = nxt.filter(~F.col("moved")).drop("moved").localCheckpoint(
-            storageLevel=_GEN_LEVEL
-        )
-        done_parts.append(new_done)
-        result_handles.append(_ck_rdd_handle(new_done))
-        still_moving = nxt.filter("moved").limit(1).count() > 0
-        if not still_moving:
-            nxt_h.unpersist(False)
-            active_h.unpersist(False)
-            break
-        new_active = (
-            nxt.filter("moved").drop("moved")
-            .localCheckpoint(storageLevel=_GEN_LEVEL)
-        )
-        new_active_h = _ck_rdd_handle(new_active)
-        nxt_h.unpersist(False)
-        active_h.unpersist(False)
-        active, active_h = new_active, new_active_h
-    out = done_parts[0]
-    for d in done_parts[1:]:
-        out = out.unionByName(d)
-    result = (
-        out.groupBy("user_id", F.col("ptr").alias("head_rn"))
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count("*").cast("bigint").alias("n_events"),
-        )
-        .select("user_id", "session_start", "session_end", "n_events")
-        .orderBy("user_id", "session_start")
-    )
-    for h in result_handles:
-        _E14_LIVE_HANDLES.append((weakref.ref(result), h))
     return result
 
 

@@ -26,8 +26,9 @@ from aind_smartspim_data_transformation_spark.plans import relational
 # Round-16 rotation (optimization round 2; VERDICT r15 ask #7): every
 # query whose plan or operator internals r16 touched leads.  (a) s10/
 # s11's PQ encode+ADC moved from literal codebook/LUT expression trees
-# to the vectorized numpy mapInPandas (VERDICT r15 ask #1; expression
-# twins stay in-tree, identity pinned by test); (b) d07's salt key and
+# to the vectorized numpy mapInPandas (VERDICT r15 ask #1; the
+# expression plans are since deleted — the DuckDB oracle pins the
+# rows); (b) d07's salt key and
 # d14's self-pair filter were de-spoiled (coalesce / null-safe <=>) so
 # AQE's runtime stage cache shares ONE signature subtree across all
 # consumers (ask #3 — executed plans now 1 documents scan, was 2; d04
@@ -35,7 +36,9 @@ from aind_smartspim_data_transformation_spark.plans import relational
 # e14's checkpoint-handle registry is keyed by the result frame (ask
 # #8 — release mechanics only, plan unchanged, rotated on the n18
 # lesson: every touched query gets driver verification).  No new
-# registry keys.
+# registry keys.  Later: d08 moved from its own label-propagation loop
+# onto the shared large-star/small-star components (d09's plan), so it
+# leads too.
 _LEADING_R16 = [
     "s10_pq_adc",
     "s11_ivf_pq_search",
@@ -43,6 +46,7 @@ _LEADING_R16 = [
     "d07_simhash_hamming_pairs",
     "d14_hamming_neighbor_topk",
     "e14_sessions_recursive",
+    "d08_dup_components",
 ]
 
 

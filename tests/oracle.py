@@ -11,18 +11,25 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import os
 
 import duckdb
 
 from aind_smartspim_data_transformation_spark.tables import TABLE_NAMES
 
 
-def run_oracle(sql: str, sf_dir: str):
+def run_oracle(sql: str, sf_dir: str, tables=TABLE_NAMES):
+    """Run ``sql`` in DuckDB over views of ``tables`` under ``sf_dir``.
+
+    Small test fixtures hold only the tables their query reads, so
+    they pass just those; a table Spark wrote is a directory of part
+    files, read through a glob."""
     con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    for t in tables:
+        src = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(src):
+            src += "/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
     cur = con.execute(sql)
     cols = [d[0] for d in cur.description]
     rows = cur.fetchall()

@@ -33,14 +33,6 @@ def test_near_dups_found(spark, sf_dir):
     assert all(r["jaccard"] >= dedup.JACCARD_THRESHOLD for r in rows)
 
 
-def test_star_components_equal_label_propagation(spark, sf_dir):
-    """d09 (large-star/small-star, O(log n) rounds) and d08 (label
-    propagation, O(diameter) rounds) must produce identical clusters."""
-    a = [tuple(r) for r in dedup.d08_dup_components(spark, sf_dir).collect()]
-    b = [tuple(r) for r in dedup.d09_dup_components_star(spark, sf_dir).collect()]
-    assert a == b
-
-
 def test_star_components_path_graph(spark):
     """A 6-node path (worst case for label propagation's diameter bound)
     collapses to one component labeled by its minimum."""

@@ -63,36 +63,16 @@ def test_s10_pq_scan_is_shuffle_free(spark, sf_dir):
     assert "Exchange" not in plan
     assert "Generate" not in plan  # no posexplode of the embedding
     assert "MapInPandas" in plan  # the r16 vectorized encode
-
-
-def test_s10_pandas_equals_expr(spark, sf_dir):
-    """r16 (VERDICT r15 ask #1): the registered numpy PQ plan must be
-    row-for-row identical to the literal codebook/LUT expression twin
-    — exact int64 arithmetic and the same first-minimum (d2, k) tie
-    rule, so EQUAL, not approximately equal."""
-    got = [tuple(r) for r in similarity.s10_pq_adc(spark, sf_dir).collect()]
-    ref = [
-        tuple(r) for r in similarity._s10_pq_adc_expr(spark, sf_dir).collect()
-    ]
-    assert got == ref and len(got) == similarity.PQ_TOPK
-
-
-def test_s11_pandas_equals_expr(spark, sf_dir):
-    """Same identity pin for the composed IVF-PQ search (coarse
-    assignment tie rule included)."""
-    got = [
-        tuple(r) for r in similarity.s11_ivf_pq_search(spark, sf_dir).collect()
-    ]
-    ref = [
-        tuple(r)
-        for r in similarity._s11_ivf_pq_search_expr(spark, sf_dir).collect()
-    ]
-    assert got == ref and len(got) == similarity.IVFPQ_TOPK
+    # the top-k comes back in (d2_approx, vec_id) order, which the
+    # order-insensitive oracle compare does not check
+    keys = [(r["d2_approx"], r["vec_id"]) for r in df.collect()]
+    assert keys == sorted(keys) and len(keys) == similarity.PQ_TOPK
 
 
 def test_s11_plan_scan_is_narrow_and_pruned(spark, sf_dir):
     """The IVF-PQ scan must be a narrow map: no Exchange before the
-    TakeOrderedAndProject shortlist (centroids and LUT are literals),
+    TakeOrderedAndProject shortlist (centroids and LUT ride the numpy
+    task closure),
     and the exact re-rank runs on IVFPQ_RERANK rows, not the corpus."""
     from aind_smartspim_data_transformation_spark.operators import similarity as sim
 
@@ -142,7 +122,7 @@ def test_ivf_cells_prune_files_when_partitioned(spark, sf_dir, tmp_path):
     ]
     cents.sort()
     path = str(tmp_path / "emb_by_cell")
-    e.withColumn("cell", sim._kmeans_assign(e, cents)).write.partitionBy(
+    sim._kmeans_assign_pandas(e, cents).write.partitionBy(
         "cell"
     ).parquet(path)
     cell_dirs = [d for d in os.listdir(path) if d.startswith("cell=")]
@@ -178,16 +158,12 @@ def test_ivf_cells_prune_files_when_partitioned(spark, sf_dir, tmp_path):
 
 
 def test_lloyd_pandas_assignment_identical(spark, sf_dir):
-    """§6j assignment-path pin (VERDICT r10 ask #6; routing REVERSED
-    in r15): the mapInPandas assignment path must be cell-for-cell AND
-    centroid-for-centroid identical to the literal-expression path at
-    registry K — exact int64 arithmetic and the same (d2, cid) tie
-    rule, so not approximately equal: EQUAL.  Since r15, auto mode
-    routes to the pandas plan at EVERY K (the interpreted zip_with
-    folds of the expression path measured 3× slower per pass at K=16;
-    OPTIMIZATION_r15.md); the expression path survives as the
-    explicit zero-Python diagnostic twin and is refused above
-    KM_EXPR_MAX_K."""
+    """r15 routing pin (§6j, VERDICT r10 ask #6): Lloyd's assignment is
+    the vectorized mapInPandas argmin at EVERY K — the interpreted
+    zip_with folds of the former literal-expression path measured 3×
+    slower per pass at K=16 (OPTIMIZATION_r15.md), and that path is
+    gone.  s09's DuckDB oracle pins the resulting centroids and
+    cluster sizes exactly (test_similarity_vs_oracle)."""
     from pyspark.sql import functions as F
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -197,38 +173,8 @@ def test_lloyd_pandas_assignment_identical(spark, sf_dir):
             f"* {similarity.KM_SCALE}) AS BIGINT))"
         ).alias("x"),
     )
-    a_expr, c_expr = similarity.lloyd_train(
-        e, similarity.KM_K, similarity.KM_ITERS, assign_mode="expr"
-    )
-    a_pd, c_pd = similarity.lloyd_train(
-        e, similarity.KM_K, similarity.KM_ITERS, assign_mode="pandas"
-    )
-    assert c_expr == c_pd
-    cells_expr = {r["vec_id"]: r["cell"] for r in a_expr.select("vec_id", "cell").collect()}
-    cells_pd = {r["vec_id"]: r["cell"] for r in a_pd.select("vec_id", "cell").collect()}
-    assert cells_expr == cells_pd
-
-    # r15 routing pin: auto mode is the pandas plan at EVERY K —
-    # the registered hot path carries the vectorized assignment
-    plan_small = (
+    plan = (
         similarity.lloyd_train(e, similarity.KM_K, 1)[0]
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "MapInPandas" in plan_small
-
-    # the expr diagnostic twin stays Python-free, and is refused at a
-    # K whose literal projection would be a planning hazard
-    plan_expr = (
-        similarity.lloyd_train(e, similarity.KM_K, 1, assign_mode="expr")[0]
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "MapInPandas" not in plan_expr
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        similarity.lloyd_train(e, similarity.KM_K, 1, assign_mode="nope")
-    with _pytest.raises(ValueError):
-        similarity.lloyd_train(
-            e, similarity.KM_EXPR_MAX_K + 1, 1, assign_mode="expr"
-        )
+    assert "MapInPandas" in plan

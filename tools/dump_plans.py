@@ -325,8 +325,8 @@ ANNOTATIONS = {
         "numpy kernel (the pre-r16 literal-expression folds were "
         "CodegenFallback and their constant-tree analysis dominated "
         "the wall; 4.6x interleaved — OPTIMIZATION_r16.md §2; the "
-        "expression twin `_s10_pq_adc_expr` stays in-tree, identity-"
-        "pinned). The billion-code single-pass scan shape "
+        "expression plan is since deleted, the DuckDB oracle pins the "
+        "rows). The billion-code single-pass scan shape "
         "(plan-asserted in tests/test_similarity.py)."
     ),
     "c10_pii_redaction": (
@@ -471,8 +471,8 @@ ANNOTATIONS = {
         "parquet scan; centroid assignment, cell filter, PQ codes, "
         "the ADC sum and the exact distance all inside ONE "
         "`MapInPandas` (centroids + codebooks + LUT in the task "
-        "closure — 7.6x interleaved vs the literal-expression twin "
-        "`_s11_ivf_pq_search_expr`, which stays identity-pinned); NO "
+        "closure — 7.6x interleaved vs the former literal-expression "
+        "plan, since deleted; the DuckDB oracle pins the rows); NO "
         "Exchange hashpartitioning anywhere; the shortlist is "
         "TakeOrderedAndProject(20) over narrow (id, cell, d2) rows. "
         "At scale `cell` is the partition key and the nprobe filter "
