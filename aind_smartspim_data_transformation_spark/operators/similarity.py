@@ -870,8 +870,7 @@ def s10_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical IEEE double ops the Spark expression performed), so the
     scan ships the narrower raw float32 array through Arrow instead
     of 64 int64s.  The DuckDB oracle (``_pq_sql``) pins the rows
-    exactly (tests/test_similarity.py::test_similarity_vs_oracle);
-    the r16 expression plan is no longer in the tree."""
+    exactly (tests/test_similarity.py::test_similarity_vs_oracle)."""
     import numpy as np
 
     e = load_table(spark, sf_dir, "embeddings").select(
