@@ -7,9 +7,11 @@ model (`models.py:23-79`), same defaults (chunk 128³, factor [2,2,2],
 4 levels).
 
 Divergences, by design:
-- ``compressor_name`` allows ``zlib``/``none``/``blosc`` — blosc (the
-  reference default) is import-tried in the sink, so it works on any
-  cluster with python-blosc and fails fast with a clear error here.
+- ``compressor_name`` is ``zstd`` (default), ``zlib`` or ``none``.  The
+  reference writes Blosc zstd clevel 3 with byte shuffle; here the
+  default is plain numcodecs zstd level 1 behind a ``shuffle`` filter,
+  written with pyarrow's zstd (imaging/zarr_sink.py::_make_codec), so
+  no Blosc install is needed and stock zarr readers still decode it.
 - ``num_of_partitions``/``partition_to_process`` are HONORED for
   compatibility: the reference round-robins stacks across N independent
   job instances (`smartspim_job.py:30-41`) because it has no cluster
@@ -33,13 +35,17 @@ from typing import Any, Literal, Optional
 
 from pydantic import BaseModel, Field, model_validator
 
+from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+    DEFAULT_COMPRESSOR,
+)
+
 ENV_PREFIX = "TRANSFORMATION_JOB_"
 
 
 class CompressorName(str, Enum):
+    ZSTD = "zstd"
     ZLIB = "zlib"
     NONE = "none"
-    BLOSC = "blosc"  # import-tried in the sink; needs python-blosc
 
 
 class ImagingJobSettings(BaseModel):
@@ -50,7 +56,7 @@ class ImagingJobSettings(BaseModel):
     s3_location: Optional[str] = None
     num_of_partitions: int = 1
     partition_to_process: int = 0
-    compressor_name: CompressorName = CompressorName.ZLIB
+    compressor_name: CompressorName = CompressorName(DEFAULT_COMPRESSOR)
     compressor_kwargs: dict[str, Any] = Field(default_factory=lambda: {"level": 1})
     chunk_size: list[int] = Field(default_factory=lambda: [128, 128, 128])
     scale_factor: list[int] = Field(default_factory=lambda: [2, 2, 2])

@@ -75,6 +75,10 @@ import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+    DEFAULT_COMPRESSOR,
+)
+
 # A fused task buffers one (z-slab, y-band).  256 MiB × 32 concurrent
 # tasks ≈ 8 GiB peak — conservative for this container; on a real
 # cluster size it to executor memory / cores.
@@ -543,7 +547,7 @@ def run_fused_ingest(
     scale_factor_zyx: list[int],
     chunk_zyx: list[int],
     n_levels: int,
-    compressor_name: str = "zlib",
+    compressor_name: str = DEFAULT_COMPRESSOR,
     compressor_kwargs: dict[str, Any] | None = None,
     stack_filter: list[tuple[str, str]] | None = None,
     on_error: str = "fail",
@@ -740,12 +744,14 @@ def run_fused_ingest(
             decode_image_gray,
         )
 
-        _, compress = make_codec(compressor_name, compressor_kwargs)
         channel, stack, cz, gi, paths = row
         nb, per_band, n_xt, per_xt = plan[(channel, stack)]
         fold, xt = divmod(gi, n_xt)
         height, width, dtype_name = geom[(channel, stack)]
         exp_dtype = np.dtype(dtype_name)
+        _, compress = make_codec(
+            compressor_name, compressor_kwargs, exp_dtype.itemsize
+        )
         # the x-tile's columns [x0, x1), from chunk column cx0
         cx0 = xt * per_xt
         x0 = cx0 * cx_chunk
@@ -960,7 +966,8 @@ def run_fused_ingest(
         scale_factor_zyx,
         chunk_zyx,
         n_levels,
-        codec_meta,
+        compressor_name,
+        compressor_kwargs,
     )
     # the job is complete and finalized — retire the progress markers
     # (a COMPLETE store carries no droppings; the next run starts clean)

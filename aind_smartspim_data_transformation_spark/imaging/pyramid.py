@@ -23,13 +23,13 @@ i03 pyramid-level query runs.
 from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import DataFrame
-
-from aind_smartspim_data_transformation_spark.sources.stack_reader import CHUNK_SCHEMA
+if TYPE_CHECKING:
+    import pandas as pd
+    from pyspark.sql import DataFrame
 
 
 def validate_pyramid_geometry(
@@ -91,7 +91,15 @@ def windowed_mean(arr: np.ndarray, factors: tuple[int, ...]) -> np.ndarray:
 
 
 def downsample_chunks(chunks: DataFrame, factors: tuple[int, int, int]) -> DataFrame:
-    """One pyramid step over the chunk table — mapInPandas, no shuffle."""
+    """One pyramid step over the chunk table — mapInPandas, no shuffle.
+    pandas and the chunk schema are imported here, not at module level:
+    the band tasks import this module for :func:`windowed_mean` only."""
+    import pandas as pd
+
+    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
+        CHUNK_SCHEMA,
+    )
+
     fz, fy, fx = factors
 
     def _reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

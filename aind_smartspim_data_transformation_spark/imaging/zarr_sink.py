@@ -18,14 +18,16 @@ driver share:
   ``<level>/<t>/<c>/<z>/<y>/<x>`` exactly like the reference
   (`compress/png_to_zarr.py:697`), built only by ``chunk_key``;
 - edge chunks are zero-padded to the nominal chunk shape (zarr v2
-  stores full-size chunks) by ``ChunkWriter``, the one pad → compress
+  stores full-size chunks) by ``ChunkWriter``, the one pad → encode
   → write step every writer uses;
-- compression is pluggable (``_make_codec``): zlib / none always work;
-  blosc (the reference's default codec, `compress/zarr_utilities.py`)
-  is gated behind an import-try and activates on any cluster with
-  python-blosc installed — the zarr metadata written for it is the
-  standard ``{"id": "blosc", "cname": ..., "clevel": ..., "shuffle":
-  ...}`` codec spec, so external zarr readers decode it natively.
+- the chunk codec is defined once (``_make_codec``): ``zstd`` level 1
+  behind a byte-shuffle filter by default (the reference writes Blosc
+  zstd with byte shuffle, `compress/png_to_zarr.py:533-708`), or
+  ``zlib`` / ``none``.  The metadata is plain numcodecs zarr v2
+  (``"compressor": {"id": "zstd", "level": 1}``, ``"filters":
+  [{"id": "shuffle", "elementsize": 2}]`` for uint16), so stock zarr
+  readers decode it; the frames come from pyarrow's zstd and the
+  shuffle is numpy.
 
 ``read_zarr_level`` is the verification reader: it reopens what the
 sink wrote from the spec alone (no zarr library), used by the golden
@@ -60,52 +62,93 @@ from aind_smartspim_data_transformation_spark.functions.imaging_meta import (
 
 _ZARR_DTYPES = {"uint8": "|u1", "uint16": "<u2", "uint32": "<u4", "float32": "<f4"}
 
+# the chunk codec of the imaging job, run_fused_ingest and the
+# format("smartspim") stream writer unless the caller names another
+DEFAULT_COMPRESSOR = "zstd"
 
-def _make_codec(name: str, kwargs: dict[str, Any] | None):
-    """(zarr compressor metadata, compress_fn) for a codec name.
 
-    ``zlib`` and ``none`` are always available; ``blosc`` needs
-    python-blosc on driver AND executors (import-tried here, so a
-    cluster that has it gets the reference's codec with zero code
-    change; this container doesn't, and asking for it raises a clear
-    error at plan time rather than mid-write on an executor).
+def _shuffle(buf, itemsize: int) -> np.ndarray:
+    """numcodecs ``Shuffle``: byte j of every little-endian element,
+    for j = 0 .. itemsize-1, one run after another."""
+    u = np.frombuffer(buf, dtype=f"<u{itemsize}")
+    out = np.empty((itemsize, u.size), dtype=np.uint8)
+    for j in range(itemsize):
+        np.right_shift(u, 8 * j, out=out[j], casting="unsafe")
+    return out
+
+
+def _unshuffle(buf, itemsize: int) -> bytes:
+    """Inverse of :func:`_shuffle`."""
+    planes = np.frombuffer(buf, dtype=np.uint8).reshape(itemsize, -1)
+    return np.ascontiguousarray(planes.T).tobytes()
+
+
+def _make_codec(name: str, kwargs: dict[str, Any] | None, itemsize: int = 2):
+    """(zarr codec metadata, compress_fn) for a codec name and the
+    chunk dtype's itemsize.
+
+    The metadata is the ``.zarray`` pair ``{"compressor": ...,
+    "filters": ...}``; ``compress_fn`` maps a chunk's C-order bytes to
+    its stored bytes.  ``zstd`` shuffles bytes first (no filter for
+    1-byte dtypes, where a shuffle is the identity); ``zlib`` and
+    ``none`` take no filter.  ``kwargs`` may set ``level`` (default 1).
     """
     kwargs = kwargs or {}
+    level = int(kwargs.get("level", 1))
     if name == "none":
-        return None, lambda b: b
+        return {"compressor": None, "filters": None}, lambda b: b
     if name == "zlib":
-        level = int(kwargs.get("level", 1))
-        return {"id": "zlib", "level": level}, lambda b: zlib.compress(b, level)
-    if name == "blosc":
-        try:
-            import blosc  # noqa: F401
-        except ImportError as e:  # pragma: no cover - container has no blosc
-            raise ImportError(
-                "compressor 'blosc' requires python-blosc on driver and "
-                "executors; use 'zlib' or 'none' here"
-            ) from e
-        cname = kwargs.get("cname", "zstd")
-        clevel = int(kwargs.get("clevel", 3))
-        shuffle = int(kwargs.get("shuffle", 1))
-        meta = {"id": "blosc", "cname": cname, "clevel": clevel,
-                "shuffle": shuffle, "blocksize": 0}
-        return meta, lambda b: blosc.compress(
-            b, typesize=2, cname=cname, clevel=clevel, shuffle=shuffle
+        return (
+            {"compressor": {"id": "zlib", "level": level}, "filters": None},
+            lambda b: zlib.compress(b, level),
         )
-    raise ValueError(f"unknown compressor {name!r} (zlib|none|blosc)")
+    if name == "zstd":
+        import pyarrow as pa
+
+        codec = pa.Codec("zstd", compression_level=level)
+        meta = {"compressor": {"id": "zstd", "level": level}, "filters": None}
+        if itemsize == 1:
+            return meta, lambda b: codec.compress(b, asbytes=True)
+        meta["filters"] = [{"id": "shuffle", "elementsize": itemsize}]
+        return meta, lambda b: codec.compress(
+            _shuffle(b, itemsize), asbytes=True
+        )
+    raise ValueError(f"unknown compressor {name!r} (zstd|zlib|none)")
 
 
-def _make_decodec(meta: dict[str, Any] | None):
-    """Inverse of ``_make_codec`` from on-disk .zarray metadata."""
-    if meta is None:
-        return lambda b: b
-    if meta["id"] == "zlib":
-        return zlib.decompress
-    if meta["id"] == "blosc":  # pragma: no cover - container has no blosc
-        import blosc
+def _make_decodec(meta: dict[str, Any]):
+    """Inverse of ``_make_codec`` from a level's on-disk ``.zarray``:
+    stored chunk bytes → C-order chunk bytes.  A compressor or filter
+    this reader cannot undo is refused, never passed through."""
+    itemsize = np.dtype(meta["dtype"]).itemsize
+    nbytes = int(np.prod(meta["chunks"])) * itemsize
+    comp = meta["compressor"]
+    if comp is None:
+        def decompress(b):
+            return b
+    elif comp["id"] == "zlib":
+        decompress = zlib.decompress
+    elif comp["id"] == "zstd":
+        import pyarrow as pa
 
-        return blosc.decompress
-    raise ValueError(f"unsupported compressor metadata {meta!r}")
+        codec = pa.Codec("zstd")
+
+        def decompress(b):
+            return codec.decompress(b, decompressed_size=nbytes, asbytes=True)
+    else:
+        raise ValueError(f"unsupported compressor id {comp['id']!r}")
+    filters = meta.get("filters") or []
+    for f in filters:
+        if f["id"] != "shuffle":
+            raise ValueError(f"unsupported filter id {f['id']!r}")
+
+    def decode(b):
+        raw = decompress(b)
+        for f in reversed(filters):
+            raw = _unshuffle(raw, int(f["elementsize"]))
+        return raw
+
+    return decode
 
 
 def pad_block(arr: np.ndarray, dims) -> np.ndarray:
@@ -139,10 +182,11 @@ def stack_group(root: str, channel: str, stack: str) -> str:
 
 class ChunkWriter:
     """One task's chunk writes through one filesystem handle: zero-pad
-    an edge block to its level's chunk dims, compress, create the
-    parent directory once per task, write.  Every writer goes through
-    it (the fused band tasks and the streaming writer's staging), so
-    the write paths cannot drift apart on bytes."""
+    an edge block to its level's chunk dims, encode it with the
+    ``_make_codec`` function of its dtype, create the parent directory
+    once per task, write.  Every writer goes through it (the fused
+    band tasks and the streaming writer's staging), so the write paths
+    cannot drift apart on bytes."""
 
     def __init__(self, fs, compress=None):
         self.fs = fs
@@ -216,7 +260,8 @@ def _write_all_metadata(
     scale_factor_zyx: list[int],
     chunk_zyx: list[int],
     n_lvls: int,
-    codec_meta: dict[str, Any] | None,
+    compressor_name: str,
+    compressor_kwargs: dict[str, Any] | None,
     extra_attrs: dict[str, Any] | None = None,
 ) -> None:
     """Driver-side metadata writer shared by the fused ingest
@@ -224,9 +269,11 @@ def _write_all_metadata(
     .zgroup/.zattrs and every level's .zarray, including the geometry
     guard.  ``geo`` rows carry channel/stack, full extents z/y/x,
     dtype, and origin-chunk dims cdz/cdy/cdx — ONE implementation so
-    the write paths can never disagree on metadata.  ``extra_attrs`` entries land inside the stack's single
-    ``.zattrs`` write (the streaming writer's epoch marker must be
-    atomic with store creation — see append_slab_transaction)."""
+    the write paths can never disagree on metadata.  Each stack's
+    compressor and filters come from ``_make_codec`` at its dtype.
+    ``extra_attrs`` entries land inside the stack's single ``.zattrs``
+    write (the streaming writer's epoch marker must be atomic with
+    store creation — see append_slab_transaction)."""
     fz, fy, fx = scale_factor_zyx
     groups, chunk_ladder = plan_store_layout(
         geo, output_root, scale_factor_zyx, n_lvls
@@ -268,6 +315,9 @@ def _write_all_metadata(
             attrs.update(extra_attrs)
         shape = list(shape_5d)
         ladder = chunk_ladder[(channel, stack)]
+        codec, _ = _make_codec(
+            compressor_name, compressor_kwargs, np.dtype(r["dtype"]).itemsize
+        )
         for lvl in range(n_lvls):
             _write_json(
                 os.path.join(group, str(lvl), ".zarray"),
@@ -276,9 +326,9 @@ def _write_all_metadata(
                     "shape": shape,
                     "chunks": [1, 1, *ladder[lvl]],
                     "dtype": _ZARR_DTYPES[r["dtype"]],
-                    "compressor": codec_meta,
+                    "compressor": codec["compressor"],
                     "fill_value": 0,
-                    "filters": None,
+                    "filters": codec["filters"],
                     "order": "C",
                     "dimension_separator": "/",
                 },
@@ -343,7 +393,9 @@ def plan_store_layout(
 
 def read_zarr_level(group: str, level: int) -> np.ndarray:
     """Spec-only reader: reassemble one level into (Z, Y, X) numpy.
-    Accepts local paths and pyarrow.fs URIs (file:// s3:// ...)."""
+    Accepts local paths and pyarrow.fs URIs (file:// s3:// ...).
+    Undoes the level's compressor and ``shuffle`` filters and raises
+    ``ValueError`` on any other."""
     from pyarrow import fs as pafs
 
     fs, gpath = _fs_for(group)
@@ -353,7 +405,7 @@ def read_zarr_level(group: str, level: int) -> np.ndarray:
     shape = meta["shape"]
     chunks = meta["chunks"]
     dtype = np.dtype(meta["dtype"])
-    decompress = _make_decodec(meta["compressor"])
+    decompress = _make_decodec(meta)
     out = np.zeros(tuple(shape[2:]), dtype=dtype)
     cz_n = -(-shape[2] // chunks[2])
     cy_n = -(-shape[3] // chunks[3])

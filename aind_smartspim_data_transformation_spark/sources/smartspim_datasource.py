@@ -127,14 +127,19 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
     Options: ``chunk`` (json [z,y,x], default [128,128,128]),
     ``scale_factor`` (json, default [2,2,2]), ``n_levels`` (default 1),
     ``voxel_size`` (json µm, default [1,1,1]), ``compressor`` /
-    ``compressor_kwargs`` (must match the store across waves —
-    validated against on-disk metadata before any promotion).  Commit
-    promotion concurrency follows the filesystem type (see
-    :meth:`commit`, SCALE.md §6i).
+    ``compressor_kwargs`` (default ``zstd`` level 1 with a byte-shuffle
+    filter; must match the store's ``compressor`` and ``filters``
+    across waves — validated against on-disk metadata before any
+    promotion).  Commit promotion concurrency follows the filesystem
+    type (see :meth:`commit`, SCALE.md §6i).
     """
 
     def __init__(self, options):
         import json as _json
+
+        from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+            DEFAULT_COMPRESSOR,
+        )
 
         self.root = options.get("path")
         if not self.root:
@@ -143,7 +148,7 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
         self.factors = _json.loads(options.get("scale_factor", "[2, 2, 2]"))
         self.chunk = _json.loads(options.get("chunk", "[128, 128, 128]"))
         self.n_levels = int(options.get("n_levels", "1"))
-        self.compressor = options.get("compressor", "zlib")
+        self.compressor = options.get("compressor", DEFAULT_COMPRESSOR)
         self.compressor_kwargs = _json.loads(
             options.get("compressor_kwargs", "null")
         )
@@ -170,10 +175,8 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
             stack_group,
         )
 
-        _, compress = _make_codec(self.compressor, self.compressor_kwargs)
         staging = f"{self.root}/.staging/{uuid.uuid4().hex}"
         fs, base = _fs_for(staging)
-        cw = ChunkWriter(fs, compress)
         by_stack: dict = {}
         for r in iterator:
             by_stack.setdefault((r["channel"], r["stack"]), []).append(
@@ -196,6 +199,13 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
                         f"{channel}/{stack}: slice {k} geometry "
                         f"{hh}x{ww}/{dd} != wave's {h}x{w}/{dt}"
                     )
+            cw = ChunkWriter(
+                fs,
+                _make_codec(
+                    self.compressor, self.compressor_kwargs,
+                    np.dtype(dt).itemsize,
+                )[1],
+            )
             vol = np.stack(
                 [
                     np.frombuffer(r[4], dtype=np.dtype(dt)).reshape(h, w)
@@ -306,6 +316,7 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
     def commit(self, messages, batchId: int) -> None:
         import json as _json
 
+        import numpy as np
         from pyarrow import fs as pafs
 
         from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
@@ -316,7 +327,6 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
             stack_group,
         )
 
-        codec_meta, _ = _make_codec(self.compressor, self.compressor_kwargs)
         fs, root_base = _fs_for(self.root)
         # merge manifests; a stack split across tasks cannot be
         # assembled into one slab — the upstream repartition contract
@@ -360,9 +370,14 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
                     with fs.open_input_stream(
                         f"{group_base}/0/.zarray"
                     ) as f:
-                        disk_codec = _json.loads(f.read().decode())[
-                            "compressor"
-                        ]
+                        zarray = _json.loads(f.read().decode())
+                    disk_codec = {
+                        k: zarray.get(k) for k in ("compressor", "filters")
+                    }
+                    codec_meta, _ = _make_codec(
+                        self.compressor, self.compressor_kwargs,
+                        np.dtype(info["dtype"]).itemsize,
+                    )
                     if disk_codec != codec_meta:
                         raise ValueError(
                             f"{channel}/{stack}: stream codec {codec_meta} "
@@ -413,7 +428,8 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
                         self.factors,
                         self.chunk,
                         self.n_levels,
-                        codec_meta,
+                        self.compressor,
+                        self.compressor_kwargs,
                         extra_attrs={"smartspim_stream_last_batch": batchId},
                     )
 

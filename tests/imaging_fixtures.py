@@ -17,6 +17,7 @@ import json
 from pathlib import Path
 
 import numpy as np
+import pytest
 
 from aind_smartspim_data_transformation_spark.sources.png_codec import encode_png_gray
 from aind_smartspim_data_transformation_spark.sources.tiff_codec import encode_tiff_gray
@@ -178,3 +179,20 @@ def tree_bytes(out: Path) -> dict[str, bytes]:
         for p in sorted(out.rglob("*"))
         if p.is_file()
     }
+
+
+def crash_before_finalize(monkeypatch, run):
+    """Run a fused job whose metadata-last finalize raises on the
+    driver: every band task has written its chunks and marker, and no
+    store metadata exists.  ``run_fused_ingest`` resolves
+    ``zarr_sink._write_all_metadata`` at call time, so the patch is
+    visible to it; the context restores the real finalize afterwards."""
+    from aind_smartspim_data_transformation_spark.imaging import zarr_sink
+
+    def crash(*_a, **_k):
+        raise RuntimeError("simulated crash before the metadata finalize")
+
+    with monkeypatch.context() as m:
+        m.setattr(zarr_sink, "_write_all_metadata", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            run()

@@ -6,6 +6,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from aind_smartspim_data_transformation_spark.config.settings import CompressorName
 from aind_smartspim_data_transformation_spark.functions.imaging_meta import (
     parse_emission_wavelength,
     wavelength_to_hex,
@@ -251,6 +252,24 @@ def test_windowed_mean_property(case):
         assert got[idx] == expect
 
 
+def test_pyramid_import_leaves_pandas_unloaded():
+    """The band tasks import the pyramid module for ``windowed_mean``
+    only; importing it in a fresh interpreter must not load pandas
+    (about 0.4 s per fresh Python worker)."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import sys\n"
+        "import aind_smartspim_data_transformation_spark.imaging.pyramid\n"
+        "assert 'pandas' not in sys.modules, 'pandas loaded'\n"
+    )
+    subprocess.run(
+        [sys.executable, "-c", code], check=True, cwd=Path(__file__).parents[1]
+    )
+
+
 def test_downsample_step_has_no_shuffle(spark):
     """One pyramid level = mapInPandas over existing partitions — the
     physical plan must contain no Exchange (SCALE.md §6)."""
@@ -294,20 +313,114 @@ def test_zarr_codec_none_roundtrip(spark, dataset, tmp_path):
     assert np.array_equal(got, arrays["Ex_445_Em_469/432380_530260"])
 
 
-def test_zarr_codec_blosc_gated():
-    """Asking for blosc without python-blosc fails fast at plan time
-    (never mid-write on an executor); with it installed the same call
-    returns the reference's codec metadata."""
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import _make_codec
+def _codec_store(tmp_path, name, vol, chunk):
+    """One-level store of ``vol`` written the way the ingest writes
+    one: every chunk through ``ChunkWriter`` with the ``_make_codec``
+    function of ``vol``'s dtype, then the driver's metadata."""
+    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+        ChunkWriter,
+        _fs_for,
+        _make_codec,
+        _write_all_metadata,
+        chunk_key,
+        stack_group,
+    )
 
-    try:
-        import blosc  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="python-blosc"):
-            _make_codec("blosc", {})
-    else:  # pragma: no cover - container has no blosc
-        meta, _ = _make_codec("blosc", {"cname": "zstd", "clevel": 3})
-        assert meta["id"] == "blosc" and meta["cname"] == "zstd"
+    out = str(tmp_path / name)
+    group = stack_group(out, "Ex_445_Em_469", "s")
+    fs, _ = _fs_for(out)
+    cw = ChunkWriter(fs, _make_codec(name, None, vol.itemsize)[1])
+    for z in range(0, vol.shape[0], chunk[0]):
+        for y in range(0, vol.shape[1], chunk[1]):
+            for x in range(0, vol.shape[2], chunk[2]):
+                block = vol[z : z + chunk[0], y : y + chunk[1], x : x + chunk[2]]
+                key = chunk_key(
+                    group, 0, z // chunk[0], y // chunk[1], x // chunk[2]
+                )
+                cw.write(key, block, chunk)
+    geo = [{"channel": "Ex_445_Em_469", "stack": "s", "z": vol.shape[0],
+            "y": vol.shape[1], "x": vol.shape[2], "dtype": str(vol.dtype),
+            "cdz": chunk[0], "cdy": chunk[1], "cdx": chunk[2]}]
+    _write_all_metadata(geo, out, [1.0, 1.0, 1.0], [2, 2, 2], list(chunk), 1,
+                        name, None)
+    return group
+
+
+@pytest.mark.parametrize("dtype", ["uint8", "uint16"])
+@pytest.mark.parametrize("name", [c.value for c in CompressorName])
+def test_zarr_codec_roundtrip(tmp_path, name, dtype):
+    """Every compressor the settings accept, at 1- and 2-byte dtypes,
+    writes a ``.zarray`` whose compressor and filters the reader undoes
+    — edge chunks (zero-padded to the chunk shape) included."""
+    import json
+
+    rng = np.random.default_rng(5)
+    vol = rng.integers(0, np.iinfo(dtype).max, size=(5, 12, 10), dtype=dtype)
+    group = _codec_store(tmp_path, name, vol, (4, 8, 8))
+    meta = json.load(open(f"{group}/0/.zarray"))
+    shuffle = [{"id": "shuffle", "elementsize": 2}]
+    expected = {
+        "zstd": ({"id": "zstd", "level": 1}, shuffle if dtype == "uint16" else None),
+        "zlib": ({"id": "zlib", "level": 1}, None),
+        "none": (None, None),
+    }[name]
+    assert (meta["compressor"], meta["filters"]) == expected
+    np.testing.assert_array_equal(read_zarr_level(group, 0), vol)
+
+
+@pytest.mark.parametrize(
+    "field, value, match",
+    [
+        ("filters", [{"id": "delta", "dtype": "<u2"}], "delta"),
+        ("filters", [{"id": "shuffle", "elementsize": 2},
+                     {"id": "bitround", "keepbits": 8}], "bitround"),
+        ("compressor", {"id": "lz4", "acceleration": 1}, "lz4"),
+    ],
+)
+def test_zarr_reader_refuses_unknown_codec(tmp_path, field, value, match):
+    """A filter or compressor the reader cannot undo raises, naming
+    its id, instead of returning scrambled pixels."""
+    import json
+
+    vol = np.arange(4 * 8 * 8, dtype=np.uint16).reshape(4, 8, 8)
+    group = _codec_store(tmp_path, "zstd", vol, (4, 8, 8))
+    path = f"{group}/0/.zarray"
+    meta = json.load(open(path))
+    meta[field] = value
+    json.dump(meta, open(path, "w"))
+    with pytest.raises(ValueError, match=match):
+        read_zarr_level(group, 0)
+
+
+def test_default_chunk_decodes_from_spec(store, dataset):
+    """A chunk file of the default store decodes from its ``.zarray``
+    alone: a standard zstd frame (magic ``28b52ffd``) whose header
+    carries the content size, which numcodecs' Zstd decoder requires,
+    holding the byte-shuffled chunk (numcodecs ``Shuffle``: the
+    little-endian bytes of every element, grouped by byte position)."""
+    import json
+
+    import pyarrow as pa
+
+    _, arrays = dataset
+    group = store / "Ex_445_Em_469" / "432380_504340.ome.zarr"
+    meta = json.loads((group / "0" / ".zarray").read_text())
+    assert meta["compressor"] == {"id": "zstd", "level": 1}
+    assert meta["filters"] == [{"id": "shuffle", "elementsize": 2}]
+    frame = (group / "0" / "0" / "0" / "0" / "0" / "0").read_bytes()
+    assert frame[:4].hex() == "28b52ffd"
+    descriptor = frame[4]
+    # Frame_Content_Size_flag (bits 7-6) or Single_Segment_flag (bit 5)
+    assert descriptor >> 6 or descriptor & 0x20
+    cz, cy, cx = meta["chunks"][2:]
+    dtype = np.dtype(meta["dtype"])
+    raw = pa.Codec("zstd").decompress(
+        frame, decompressed_size=cz * cy * cx * dtype.itemsize, asbytes=True
+    )
+    planes = np.frombuffer(raw, dtype=np.uint8).reshape(dtype.itemsize, -1)
+    chunk = np.frombuffer(planes.T.tobytes(), dtype=dtype).reshape(cz, cy, cx)
+    src = arrays["Ex_445_Em_469/432380_504340"]
+    np.testing.assert_array_equal(chunk, src[:cz, :cy, :cx])
 
 
 def test_tiled_chunks_match_full_plane(spark, dataset, store, tmp_path):

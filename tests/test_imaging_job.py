@@ -15,6 +15,7 @@ from aind_smartspim_data_transformation_spark.imaging.pyramid import windowed_me
 from aind_smartspim_data_transformation_spark.imaging.zarr_sink import read_zarr_level
 from tests.imaging_fixtures import (
     assert_pyramid,
+    crash_before_finalize,
     ingest,
     job_store,
     make_dataset,
@@ -245,6 +246,7 @@ def _slab(planes, n_levels, chunk_z=None):
     each level's chunks on the store's chunk grid, shifted by ``off``
     z-chunks."""
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+        DEFAULT_COMPRESSOR,
         ChunkWriter,
         _fs_for,
         _make_codec,
@@ -264,9 +266,11 @@ def _slab(planes, n_levels, chunk_z=None):
     def write_level(group):
         def write(lvl, off, meta):
             fs, gbase = _fs_for(group)
-            cw = ChunkWriter(fs, _make_codec("zlib", None)[1])
-            cdz, cdy, cdx = meta["chunks"][2:]
             arr = levels[lvl]
+            cw = ChunkWriter(
+                fs, _make_codec(DEFAULT_COMPRESSOR, None, arr.itemsize)[1]
+            )
+            cdz, cdy, cdx = meta["chunks"][2:]
             for z0 in range(0, arr.shape[0], cdz):
                 for y0 in range(0, arr.shape[1], cdy):
                     for x0 in range(0, arr.shape[2], cdx):
@@ -527,23 +531,6 @@ def test_fused_even_band_count_folds_pairwise(spark, tmp_path):
     assert_pyramid(f"{tmp_path}/out/{ch}/{stack}.ome.zarr", vol, 2)
 
 
-def _crash_before_finalize(monkeypatch, run):
-    """Run a fused job whose metadata-last finalize raises on the
-    driver: every band task has written its chunks and marker, and no
-    store metadata exists.  ``run_fused_ingest`` resolves
-    ``zarr_sink._write_all_metadata`` at call time, so the patch is
-    visible to it; the context restores the real finalize afterwards."""
-    from aind_smartspim_data_transformation_spark.imaging import zarr_sink
-
-    def crash(*_a, **_k):
-        raise RuntimeError("simulated crash before the metadata finalize")
-
-    with monkeypatch.context() as m:
-        m.setattr(zarr_sink, "_write_all_metadata", crash)
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            run()
-
-
 def test_fully_resumed_run_adds_no_phase_seconds(spark, tmp_path, monkeypatch):
     """A rerun whose every band is marker-complete writes no band, so
     its phase timings are all zero while its accounting still counts
@@ -562,7 +549,7 @@ def test_fully_resumed_run_adds_no_phase_seconds(spark, tmp_path, monkeypatch):
         n_levels=2,
     )
     out = str(tmp_path / "out")
-    _crash_before_finalize(
+    crash_before_finalize(
         monkeypatch, lambda: run_fused_ingest(spark, str(root), out, **args)
     )
     _, metrics = run_fused_ingest(spark, str(root), out, **args)
@@ -637,7 +624,7 @@ def test_fused_mid_job_kill_resume_skips_completed_bands(
     fail_key = (ch, stack, 0, 0)
 
     out = tmp_path / "out"
-    _crash_before_finalize(
+    crash_before_finalize(
         monkeypatch,
         lambda: run_fused_ingest(spark, str(root), str(out), **args),
     )
@@ -746,12 +733,13 @@ def test_fused_progress_marker_config_mismatch_refused(spark, tmp_path):
         _progress_fingerprints,
     )
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
+        DEFAULT_COMPRESSOR,
         _make_codec,
     )
 
     geo = [{"channel": ch, "stack": stack, "z": 4, "y": 8, "x": 8,
             "dtype": "uint16"}]
-    codec_meta, _ = _make_codec("zlib", None)
+    codec_meta, _ = _make_codec(DEFAULT_COMPRESSOR, None)
     store_fp, _ = _progress_fingerprints(
         str(root), str(out), [4, 4, 4], [2, 2, 2], 1, codec_meta, geo,
         _band_plan(geo, [4, 4, 4], spark.sparkContext.defaultParallelism),
@@ -810,7 +798,7 @@ def test_fused_resume_after_input_edit_invalidates_markers(
     )
     out = tmp_path / "out"
     # crash AFTER every band (the corrupt one included) completed
-    _crash_before_finalize(
+    crash_before_finalize(
         monkeypatch,
         lambda: run_fused_ingest(spark, str(root), str(out), **args),
     )

@@ -17,7 +17,7 @@ def test_defaults():
     assert s.chunk_size == [128, 128, 128]
     assert s.scale_factor == [2, 2, 2]
     assert s.downsample_levels == 4
-    assert s.compressor_name == CompressorName.ZLIB
+    assert s.compressor_name == CompressorName.ZSTD
     assert s.s3_location is None
 
 

@@ -210,3 +210,43 @@ def test_writestream_smartspim_crash_fence_roll_forward(
     attrs = json.loads((tmp_path / "store" / "Ex_488_Em_525" /
                         "400000_500000.ome.zarr" / ".zattrs").read_text())
     assert "append_in_progress" not in attrs
+
+
+def test_default_codec_refuses_zlib_store_and_zlib_markers(
+    spark, tmp_path, monkeypatch
+):
+    """Writers at the default codec meet a target written under zlib.
+    A default-options stream into an existing zlib store refuses with
+    the codec-mismatch error before any chunk is promoted, and a fused
+    rerun whose progress markers were written under zlib refuses with
+    the store-fingerprint error instead of redoing the bands silently
+    into a store of mixed codecs."""
+    from tests.imaging_fixtures import crash_before_finalize, ingest
+
+    rng = np.random.default_rng(19)
+    vol = rng.integers(0, 65535, size=(8, 16, 20), dtype=np.uint16)
+    root = tmp_path / "acq"
+    stack = "400000_500000"
+    for z in range(4):
+        _write_slice(root, "Ex_488_Em_525", stack, z, vol[z])
+    store = tmp_path / "store"
+    ingest(spark, root, store, (4, 64, 64), 2, compressor_name="zlib")
+    group = store / "Ex_488_Em_525" / f"{stack}.ome.zarr"
+    before = {p: p.read_bytes() for p in group.rglob("*") if p.is_file()}
+
+    for z in range(4, 8):
+        _write_slice(root, "Ex_488_Em_525", stack, z, vol[z])
+    with pytest.raises(Exception, match="byte-incompatible"):
+        ss.run_streaming_store_ingest(
+            spark, str(root / "SmartSPIM"), str(store), str(tmp_path / "ckpt"),
+            chunk_zyx=[4, 64, 64], n_levels=2,
+        )
+    assert {p: p.read_bytes() for p in group.rglob("*") if p.is_file()} == before
+
+    out = tmp_path / "resumed"
+    crash_before_finalize(
+        monkeypatch,
+        lambda: ingest(spark, root, out, (4, 64, 64), 2, compressor_name="zlib"),
+    )
+    with pytest.raises(ValueError, match="different store configuration"):
+        ingest(spark, root, out, (4, 64, 64), 2)
