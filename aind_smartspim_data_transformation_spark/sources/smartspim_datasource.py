@@ -139,6 +139,7 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
 
         from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
             DEFAULT_COMPRESSOR,
+            _make_codec,
         )
 
         self.root = options.get("path")
@@ -152,6 +153,8 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
         self.compressor_kwargs = _json.loads(
             options.get("compressor_kwargs", "null")
         )
+        # an unknown codec is refused here, before any write task runs
+        _make_codec(self.compressor, self.compressor_kwargs)
         from aind_smartspim_data_transformation_spark.imaging.pyramid import (
             validate_pyramid_geometry,
         )

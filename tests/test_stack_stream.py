@@ -220,8 +220,15 @@ def test_default_codec_refuses_zlib_store_and_zlib_markers(
     the codec-mismatch error before any chunk is promoted, and a fused
     rerun whose progress markers were written under zlib refuses with
     the store-fingerprint error instead of redoing the bands silently
-    into a store of mixed codecs."""
+    into a store of mixed codecs.  A stream writer naming a codec the
+    sink does not know is refused when it is built, before any task."""
+    from aind_smartspim_data_transformation_spark.sources.smartspim_datasource import (
+        SmartspimStreamWriter,
+    )
     from tests.imaging_fixtures import crash_before_finalize, ingest
+
+    with pytest.raises(ValueError, match="unknown compressor 'lz4'"):
+        SmartspimStreamWriter({"path": str(tmp_path / "s"), "compressor": "lz4"})
 
     rng = np.random.default_rng(19)
     vol = rng.integers(0, 65535, size=(8, 16, 20), dtype=np.uint16)
