@@ -3,12 +3,9 @@
 [driver-ext] SURVEY.md §2.11 extension: the ops a large-scale LLM
 training-data pipeline runs after dedup/quality filtering —
 deterministic dataset splitting, sequence packing, and window
-chunking.  All three are pure DataFrame algebra (JVM-side, codegen'd);
-c03 additionally ships a Spark 4 Python UDTF twin
-(:func:`chunk_windows_udtf`) to exercise the engine's table-function
-extension surface (asserted row-identical in tests/test_corpus.py —
-the UDTF is the *extensibility* demo, the native expression is the
-hot path).
+chunking.  All three are pure DataFrame algebra (JVM-side, codegen'd),
+each checked against its DuckDB twin (``ORACLE``) in
+tests/test_corpus.py.
 
 Scale posture (100 TB of documents):
 - c01 split: the split key is a *content-stable hash* (md5 of doc_id),
@@ -175,41 +172,6 @@ SELECT doc_id,
        array_to_string(list_slice(t, s + 1, s + {CHUNK_TOKS}), ' ') AS chunk
 FROM starts ORDER BY doc_id, chunk_idx
 """
-
-
-# ---------------------------------------------------------------------------
-# C3 UDTF twin — the same chunker as a Spark 4 Python user-defined
-# table function.  Row-at-a-time Python (the SLOW path — ~10-100×
-# behind the native expression above; see tests for the equality
-# assertion).  Exists to prove the engine's table-function extension
-# point, mirroring the reference's pluggable-reader ABC
-# (/root/reference/src/aind_smartspim_data_transformation/io/readers.py:16-109).
-# ---------------------------------------------------------------------------
-def register_chunk_udtf(spark: SparkSession) -> None:
-    """Register ``chunk_windows(doc_id, text)`` as a lateral UDTF."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_idx int, n_tok int, chunk string")
-    class ChunkWindows:
-        def eval(self, doc_id: int, text: str):  # noqa: D102
-            toks = text.split(" ")
-            for idx, s in enumerate(range(0, len(toks), CHUNK_STRIDE)):
-                window = toks[s : s + CHUNK_TOKS]
-                yield idx, len(window), " ".join(window)
-
-    spark.udtf.register("chunk_windows", ChunkWindows)
-
-
-def chunk_windows_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UDTF-path chunking — identical rows to :func:`c03_chunk_windows`."""
-    register_chunk_udtf(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("_corpus_docs")
-    return spark.sql(
-        "SELECT d.doc_id, c.chunk_idx, c.n_tok, c.chunk "
-        "FROM _corpus_docs d, LATERAL chunk_windows(d.doc_id, d.text) c "
-        "ORDER BY d.doc_id, c.chunk_idx"
-    )
 
 
 # ---------------------------------------------------------------------------

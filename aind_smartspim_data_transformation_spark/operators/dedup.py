@@ -441,9 +441,7 @@ def _verify_jaccard_pairs_digest_collapsed(
     return same.unionByName(verified).orderBy("doc1", "doc2")
 
 
-def d03_dedup_minhash_lsh(
-    spark: SparkSession, sf_dir: str, observation=None
-) -> DataFrame:
+def d03_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The signature pipeline (minhash_band_rows) is consumed exactly
     # once — the verify pass below re-shingles only candidate docs —
     # so nothing here needs caching.
@@ -463,30 +461,6 @@ def d03_dedup_minhash_lsh(
     grouped = bands.groupBy("band_id", "bkey").agg(
         F.array_sort(F.collect_list("doc_id")).alias("ids")
     )
-    if observation is not None:
-        # Zero-extra-scan form of d15 (VERDICT r11 "what's wrong" #3):
-        # the saturation counters ride d03's OWN bucket aggregate via an
-        # Observation — metrics materialize on the same execution that
-        # computes the pairs, before the size filter prunes saturated
-        # buckets.  Values are definitionally d15's (asserted equal in
-        # tests/test_dedup.py); pass a pyspark Observation and read
-        # observation.get after an action on the returned plan.
-        # CAVEAT: if the query's final result is EMPTY, AQE's
-        # empty-relation propagation can elide this observed aggregate
-        # from the executed plan and the metrics row comes back empty —
-        # the registry d15 query is the unconditional form.
-        sz = F.size("ids")
-        sat = sz > MAX_BAND_BUCKET
-        grouped = grouped.observe(
-            observation,
-            F.coalesce(F.sum(F.when(sat, F.lit(1)).otherwise(F.lit(0))), F.lit(0))
-            .cast("bigint")
-            .alias("n_saturated_buckets"),
-            F.coalesce(F.sum(F.when(sat, sz).otherwise(F.lit(0))), F.lit(0))
-            .cast("bigint")
-            .alias("n_band_rows_dropped"),
-            F.coalesce(F.max(sz), F.lit(0)).cast("bigint").alias("max_bucket_rows"),
-        )
     # r9 ABAB (VERDICT r8 ask #6): pinning this exchange to
     # parallelism/4 fat reducers LOST all 4 interleaved pairs at sf0.1
     # (11.8–12.7 s vs 11.5–11.8 s query wall; NOTES_r09) — AQE's

@@ -648,23 +648,50 @@ KM_SCALE = 1000
 # sizes exactly.
 
 
+def _quantize(embeddings: list):
+    """``floor(v·KM_SCALE)`` as int64 over a batch of float32 vectors —
+    the float32→float64 widening, multiply and floor are the identical
+    IEEE double ops of the Spark/DuckDB ``CAST(floor(CAST(v AS DOUBLE)
+    * KM_SCALE) AS BIGINT)`` transform."""
+    import numpy as np
+
+    emb = np.array(embeddings, dtype=np.float64)
+    return np.floor(emb * float(KM_SCALE)).astype(np.int64)
+
+
+def _centroid_arrays(cents: list[tuple[int, list[int]]]):
+    """(cids, cmat, cnorm) int64 arrays of cid-sorted ``cents``: the
+    constants :func:`_nearest_cell` reads, built once per task closure."""
+    import numpy as np
+
+    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
+    cmat = np.array([cvec for _, cvec in cents], dtype=np.int64)
+    return cids, cmat, (cmat * cmat).sum(axis=1)
+
+
+def _nearest_cell(x, cids, cmat, cnorm):
+    """``argmin ||x-c||²`` per row of the int64 matrix ``x`` as one
+    vectorized ||x||² − 2x·Cᵀ + ||c||².  All terms are exact int64
+    products of KM_SCALE-quantized values, and ``cids`` is sorted, so
+    numpy's first-minimum argmin IS the oracles' (d2, cid) tie rule.
+    The one coarse-assignment kernel: Lloyd (s09, n07) and s11."""
+    d2 = (x * x).sum(axis=1)[:, None] - 2 * (x @ cmat.T) + cnorm[None, :]
+    return cids[d2.argmin(axis=1)]
+
+
 def _kmeans_assign_pandas(
     e: DataFrame, cents: list[tuple[int, list[int]]]
 ) -> DataFrame:
     """Lloyd assignment ``cell = argmin ||x-c||²`` (tie → smaller cid):
-    one vectorized ||x||² − 2x·Cᵀ + ||c||² argmin per Arrow batch
-    against a K×d int64 centroid matrix carried in the task closure
-    (K·d·8 bytes — ~80 MB at K=10k, d=1k; a broadcast-sized constant,
-    never a shuffle).  Exactness: all terms are int64 products of
-    KM_SCALE-quantized values, and ``cents`` is sorted by cid, so
-    numpy's first-minimum argmin IS the oracle's (d2, cid) tie rule."""
+    one :func:`_nearest_cell` per Arrow batch against a K×d int64
+    centroid matrix carried in the task closure (K·d·8 bytes — ~80 MB
+    at K=10k, d=1k; a broadcast-sized constant, never a shuffle).
+    ``cents`` must be sorted by cid."""
     import numpy as np
 
     from pyspark.sql.types import LongType, StructField, StructType
 
-    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
-    cmat = np.array([cvec for _, cvec in cents], dtype=np.int64)
-    cnorm = (cmat * cmat).sum(axis=1)
+    arrays = _centroid_arrays(cents)
     out_schema = StructType(
         list(e.schema.fields) + [StructField("cell", LongType())]
     )
@@ -676,8 +703,7 @@ def _kmeans_assign_pandas(
                 yield pdf
                 continue
             x = np.array(pdf["x"].tolist(), dtype=np.int64)
-            d2 = (x * x).sum(axis=1)[:, None] - 2 * (x @ cmat.T) + cnorm[None, :]
-            pdf["cell"] = cids[d2.argmin(axis=1)]
+            pdf["cell"] = _nearest_cell(x, *arrays)
             yield pdf
 
     return e.mapInPandas(assign, schema=out_schema)
@@ -853,6 +879,19 @@ def _pq_books_lut(pivot: dict[int, list[int]]):
     return books, lut, q
 
 
+def _pq_adc(x, books_arr, lut_arr):
+    """PQ encode + ADC of the int64 rows ``x``: (codes, d2_approx) with
+    codes[n, m] = the nearest of the K codebook entries of subspace m
+    (first minimum == the oracles' smaller-k tie rule) and d2_approx =
+    Σ_m lut[m][code_m].  The one PQ kernel: s10 and s11."""
+    import numpy as np
+
+    xs = x.reshape(len(x), PQ_M, PQ_SUB)
+    diff = xs[:, :, None, :] - books_arr[None, :, :, :]
+    codes = (diff * diff).sum(axis=3).argmin(axis=2)      # (n, M)
+    return codes, lut_arr[np.arange(PQ_M)[None, :], codes].sum(axis=1)
+
+
 def s10_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-ADC over the corpus — registered plan is the vectorized
     numpy ``mapInPandas`` (r16, VERDICT r15 ask #1): the former
@@ -890,23 +929,16 @@ def s10_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     lut_arr = np.array(lut, dtype=np.int64)          # (M, K)
     q_arr = np.array(q, dtype=np.int64)              # (M*SUB,)
     weights = PQ_K ** np.arange(PQ_M, dtype=np.int64)
-    scale = float(KM_SCALE)
 
     def encode(batches):
         import pandas as pd
 
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            x = np.floor(emb * scale).astype(np.int64)   # (n, M*SUB)
-            xs = x.reshape(n, PQ_M, PQ_SUB)
-            diff = xs[:, :, None, :] - books_arr[None, :, :, :]
-            d2 = (diff * diff).sum(axis=3)               # (n, M, K)
-            codes = d2.argmin(axis=2)                    # first min == smaller k
+            x = _quantize(pdf["embedding"].tolist())    # (n, M*SUB)
+            codes, approx = _pq_adc(x, books_arr, lut_arr)
             pq_code = (codes * weights[None, :]).sum(axis=1)
-            approx = lut_arr[np.arange(PQ_M)[None, :], codes].sum(axis=1)
             dq = x - q_arr[None, :]
             exact = (dq * dq).sum(axis=1)
             yield pd.DataFrame(
@@ -1047,36 +1079,27 @@ def s11_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probe_cells = [cid for _, cid in qd[:N_PROBE]]
 
-    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
-    cmat = np.array([cvec for _, cvec in cents], dtype=np.int64)
-    cnorm = (cmat * cmat).sum(axis=1)
+    arrays = _centroid_arrays(cents)
     books_arr = np.array(books, dtype=np.int64)
     lut_arr = np.array(lut, dtype=np.int64)
     q_arr = np.array(q, dtype=np.int64)
     probe_arr = np.array(probe_cells, dtype=np.int64)
-    scale = float(KM_SCALE)
 
     def search(batches):
         import pandas as pd
 
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            x = np.floor(emb * scale).astype(np.int64)
+            x = _quantize(pdf["embedding"].tolist())
             vid = pdf["vec_id"].to_numpy()
-            d2c = (x * x).sum(axis=1)[:, None] - 2 * (x @ cmat.T) + cnorm[None, :]
-            cell = cids[d2c.argmin(axis=1)]   # first min == smaller cid
+            cell = _nearest_cell(x, *arrays)
             mask = np.isin(cell, probe_arr) & (vid != PQ_QUERY_ID)
             if not mask.any():
                 continue
+            # PQ runs on the probed rows only
             xm, vm, cm = x[mask], vid[mask], cell[mask]
-            m = len(xm)
-            xs = xm.reshape(m, PQ_M, PQ_SUB)
-            diff = xs[:, :, None, :] - books_arr[None, :, :, :]
-            codes = (diff * diff).sum(axis=3).argmin(axis=2)
-            approx = lut_arr[np.arange(PQ_M)[None, :], codes].sum(axis=1)
+            _, approx = _pq_adc(xm, books_arr, lut_arr)
             dq = xm - q_arr[None, :]
             exact = (dq * dq).sum(axis=1)
             yield pd.DataFrame(

@@ -38,7 +38,8 @@ from aind_smartspim_data_transformation_spark.plans import relational
 # lesson: every touched query gets driver verification).  No new
 # registry keys.  Later: d08 moved from its own label-propagation loop
 # onto the shared large-star/small-star components (d09's plan), so it
-# leads too.
+# leads too; so do s09 and n07 (Lloyd assignment now calls the numpy
+# kernel shared with s11) and d03 (its observation option is gone).
 _LEADING_R16 = [
     "s10_pq_adc",
     "s11_ivf_pq_search",
@@ -47,6 +48,9 @@ _LEADING_R16 = [
     "d14_hamming_neighbor_topk",
     "e14_sessions_recursive",
     "d08_dup_components",
+    "s09_kmeans_train",
+    "n07_semantic_dedup",
+    "d03_dedup_minhash_lsh",
 ]
 
 

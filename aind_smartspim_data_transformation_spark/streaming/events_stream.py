@@ -456,56 +456,6 @@ def windowed_hll_distinct(events: DataFrame) -> DataFrame:
     )
 
 
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Running per-user totals via ``transformWithStateInPandas`` — the
-    Spark 4 arbitrary-state API that supersedes applyInPandasWithState:
-    typed per-key state variables (ValueState here; List/MapState and
-    timers/TTL for idle-key expiry are available on the same handle)
-    backed by the RocksDB state store provider.
-
-    Same semantics as :func:`running_user_totals`; the test asserts the
-    two APIs and the batch aggregate all agree.  Requires
-    ``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider`` (transformWithState only
-    runs on RocksDB-backed state) and the ``protobuf`` package (the
-    Python state-server protocol is protobuf-framed).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            prior = self._totals.get() if self._totals.exists() else None
-            n, total = prior if prior is not None else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        RunningTotals(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def write_stream_to_parquet(
     stream_df: DataFrame, out_dir: str, checkpoint_dir: str
 ) -> None:

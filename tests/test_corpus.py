@@ -1,5 +1,4 @@
-"""Training-corpus prep operators (split / pack / chunk) vs DuckDB;
-UDTF chunker vs the native expression."""
+"""Training-corpus prep operators (split / pack / chunk) vs DuckDB."""
 
 from __future__ import annotations
 
@@ -58,18 +57,11 @@ def test_pack_respects_token_budget_startwise(spark, sf_dir):
     assert bad.count() == 0
 
 
-def test_chunk_udtf_matches_native(spark, sf_dir):
-    """The Spark 4 Python UDTF chunker is row-identical to the native
-    sequence/slice expression path."""
-    native = sorted(map(tuple, corpus.c03_chunk_windows(spark, sf_dir).collect()))
-    via_udtf = sorted(map(tuple, corpus.chunk_windows_udtf(spark, sf_dir).collect()))
-    assert native == via_udtf
-
-
 def test_chunker_properties_hypothesis():
-    """Property-test the chunking kernel over random token streams (the
-    UDTF eval is pure Python; tests above assert it row-identical to
-    the native Spark expression, so these properties transfer)."""
+    """Property-test the chunk-window rule over random token streams:
+    windows start at 0, CHUNK_STRIDE, 2·CHUNK_STRIDE, … and hold
+    CHUNK_TOKS tokens.  c03 and its DuckDB twin both implement this
+    rule, and test_corpus_vs_oracle pins them to each other."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 

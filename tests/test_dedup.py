@@ -267,40 +267,6 @@ def test_d16_equals_d03_without_saturation(spark, sf_dir):
     assert a == b and len(a) > 0
 
 
-def test_d03_observation_matches_d15(spark, tmp_path):
-    """Ask r11 #6 (zero-extra-scan saturation counters): d03 run with
-    an Observation must report exactly d15's figures from its own
-    bucket aggregate — no second signature pipeline.  The fixture
-    carries one small unsaturated near-dup pair so d03's OUTPUT is
-    non-empty: on an empty result AQE's empty-relation propagation can
-    elide the observed aggregate from the final plan and the metrics
-    row comes back empty (documented on the observation kwarg)."""
-    from pyspark.sql import Observation
-
-    n = dedup.MAX_BAND_BUCKET + 36
-    _write_saturated_family(spark, tmp_path, n)
-    pair = "one small duplicated sentence about rivers flowing south"
-    spark.createDataFrame(
-        [(2000, pair, "en", "src2", len(pair)), (2001, pair, "en", "src2", len(pair))],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.mode("append").parquet(str(tmp_path / "documents.parquet"))
-
-    [d15] = dedup.d15_lsh_saturation_audit(spark, str(tmp_path)).collect()
-    obs = Observation()
-    out = dedup.d03_dedup_minhash_lsh(spark, str(tmp_path), observation=obs)
-    out.collect()  # action materializes the observed metrics
-    got = obs.get
-    assert (
-        got["n_saturated_buckets"],
-        got["n_band_rows_dropped"],
-        got["max_bucket_rows"],
-    ) == (
-        d15["n_saturated_buckets"],
-        d15["n_band_rows_dropped"],
-        d15["max_bucket_rows"],
-    )
-
-
 def test_embedding_cosine_pairs_planted(spark, tmp_path):
     """d05 (r10 fat-group collapse): the base corpora carry no
     embedding near-dups at the 0.9 threshold, so the oracle rows there

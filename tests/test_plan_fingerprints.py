@@ -64,12 +64,12 @@ MAX_WIDE_EXCHANGES = {
 # Queries whose plan MUST share multi-referenced subtrees instead of
 # recomputing them per consumer: their final plans must contain at
 # least one ReusedExchange.  r16 runtime audit (VERDICT r15 ask #5,
-# tools/r16_d13c14_reuse_probe.py): for d13/c14 the d03 pair pipeline
-# itself does NOT appear in the collected plan at all — the
-# connected_components_star loop localCheckpoints it, so it executes
-# exactly once during build and the final plan reads a LogicalRDD
-# (stronger than exchange reuse; a persist would only add a barrier
-# on top of the existing checkpoint).  What the pin matches — and
+# `git show 37feb5f:tools/r16_d13c14_reuse_probe.py`): for d13/c14
+# the d03 pair pipeline itself does NOT appear in the collected plan
+# at all — the connected_components_star loop localCheckpoints it, so
+# it executes exactly once during build and the final plan reads a
+# LogicalRDD (stronger than exchange reuse; a persist would only add a
+# barrier on top of the existing checkpoint).  What the pin matches — and
 # what must keep firing — is the reuse across the comp/labels
 # consumers: d13=2 (labels agg shared by union+roots anti-join; comp
 # shared by members+score join), c14=3 (same two + the surviving

@@ -6,8 +6,6 @@ same expression, two execution modes.
 
 from __future__ import annotations
 
-import pytest
-
 from aind_smartspim_data_transformation_spark.plans.events import e02_tumbling_window
 from aind_smartspim_data_transformation_spark.streaming import events_stream as es
 
@@ -135,44 +133,6 @@ def test_stream_static_enrich_matches_batch(spark, sf_dir):
     )
     expect = sorted(map(tuple, e09_stream_static_enrich(spark, sf_dir).collect()))
     assert sorted(map(tuple, got.collect())) == expect
-
-
-def test_transform_with_state_matches_batch(spark, sf_dir):
-    """transformWithStateInPandas (Spark 4 typed-state API) produces the
-    same final per-user totals as applyInPandasWithState and the batch
-    aggregate; needs the RocksDB state store provider.
-
-    Spark's transformWithState Python driver worker talks to the JVM
-    state server over protobuf, so the test is skipped where
-    google.protobuf is unavailable."""
-    pytest.importorskip("google.protobuf")
-    from pyspark.sql import functions as F
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = es.read_events_stream(spark, sf_dir)
-        got = es.run_to_completion(
-            es.running_user_totals_tws(stream), "t_tws", mode="update"
-        )
-        final = {r["user_id"]: (r["n_events"], r["total_value"]) for r in got.collect()}
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
-    batch = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("tv"))
-        .collect()
-    )
-    expect = {r["user_id"]: (r["n"], r["tv"]) for r in batch}
-    assert final == expect
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
