@@ -7,7 +7,9 @@ one plain tuple carrying its slice paths, and the ingest is two plain
 Python RDD jobs over such tuples — the geometry probe and the band
 stage (``parallelize(groups).map``, one task per group) — with no
 DataFrame, Arrow, pandas or shuffle between the plan and the tasks;
-each task sends back one summary tuple.
+each task sends back one summary tuple.  A band task's work is
+:func:`write_slab`, the one slab writer, which the streaming writer
+(sources/smartspim_datasource.py) calls too.
 
 Why a task can compute the WHOLE pyramid locally: the store's chunk
 GRID is preserved across levels (chunk dims shrink by the factor, so
@@ -73,10 +75,15 @@ from typing import Any
 import numpy as np
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
+from aind_smartspim_data_transformation_spark.imaging.pyramid import windowed_mean
 from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
     DEFAULT_COMPRESSOR,
+)
+from aind_smartspim_data_transformation_spark.sources.stack_reader import (
+    _PNG_SIG,
+    decode_image_gray,
+    probe_image_header,
 )
 
 # A fused task buffers one (z-slab, y-band).  256 MiB × 32 concurrent
@@ -279,6 +286,130 @@ def _open_bytes(path: str, n: int | None = None) -> bytes:
         return f.read() if n is None else f.read(n)
 
 
+def probe_slice(path: str) -> tuple[int, int, int]:
+    """(width, height, bitdepth) of one slice from its header, with no
+    pixel decompression.  A PNG header needs a ranged 64-byte read —
+    at 10⁴ stacks a probe reads KBs instead of the first slices' GBs;
+    TIFF IFDs sit at an arbitrary offset (often the tail), so a TIFF
+    is read whole."""
+    head = _open_bytes(path, 64)
+    return probe_image_header(head if head[:8] == _PNG_SIG else _open_bytes(path))
+
+
+def write_slab(
+    paths: list[str],
+    wins: list[tuple[int, int, int]],
+    cols: tuple[int, int, int],
+    plane: tuple[int, int, str],
+    chunk_yx: tuple[int, int],
+    factors: tuple[int, ...],
+    ladder: list[tuple[int, int, int]],
+    key,
+    cw,
+    quarantine: bool = False,
+) -> tuple[int, int, list[tuple[int, str]], float, float, float]:
+    """The one slab writer, called by the fused band tasks and the
+    streaming writer: read, header-gate and decode the slices ``paths``
+    (one z-chunk of one stack, in z order) into the ``(cy0, y0, y1)``
+    row windows ``wins`` and the ``(cx0, x0, x1)`` column span ``cols``
+    (cy0/cx0: the first chunk row/column), then write every pyramid
+    level of each ``chunk_yx`` chunk through the ``ChunkWriter`` ``cw``
+    at ``key(lvl, cy, cx)``, padded to ``ladder[lvl]``.  ``plane`` is the
+    ``(height, width, dtype)`` every slice must have; the gates and the
+    ``quarantine`` semantics are the module docstring's error handling.
+
+    Returns (level-0 chunks, raw level-0 bytes, ``(slab index, error)``
+    dead letters, read_s, decode_s, pyramid_s); compress and write
+    seconds accrue on ``cw``.
+    """
+    import time
+
+    height, width, dtype_name = plane
+    exp_dtype = np.dtype(dtype_name)
+    exp_bits = exp_dtype.itemsize * 8
+    cy_chunk, cx_chunk = chunk_yx
+    cx0, x0, x1 = cols
+    lo, hi = wins[0][1], wins[-1][2]
+
+    def _decode_windows(data):
+        if quarantine:
+            # whole-plane atomicity: decode (and validate) the full slice
+            full = decode_image_gray(data)
+            return [full[y0:y1, x0:x1] for (_, y0, y1) in wins]
+        # PNG inflates sequentially, so ONE pass to the higher window's
+        # end serves both windows (the lower one is free); TIFF strips
+        # are random-access, so per-window decodes skip the rows
+        # BETWEEN the windows too.
+        if len(wins) == 1 or data[:8] == _PNG_SIG:
+            span = decode_image_gray(data, row_stop=hi, row_start=lo)
+            return [span[y0 - lo : y1 - lo, x0:x1] for (_, y0, y1) in wins]
+        return [
+            decode_image_gray(data, row_stop=y1, row_start=y0)[:, x0:x1]
+            for (_, y0, y1) in wins
+        ]
+
+    t_loop = time.perf_counter()
+    read_s = 0.0
+    # zeros, not empty: a quarantined slice's rows must come out
+    # zero-filled AT POSITION (memset cost is noise next to the
+    # decode+compress kernels this task runs)
+    bufs = [
+        np.zeros((len(paths), y1 - y0, x1 - x0), dtype=exp_dtype)
+        for (_, y0, y1) in wins
+    ]
+    dead: list[tuple[int, str]] = []
+    for i, path in enumerate(paths):
+        try:
+            t0 = time.perf_counter()
+            data = _open_bytes(path)
+            read_s += time.perf_counter() - t0
+            # header-only gate: a windowed decode cannot see a slice
+            # taller than the plane
+            wp, hp, bits = probe_image_header(data)
+            if (hp, wp) != (height, width) or bits != exp_bits:
+                raise ValueError(
+                    f"slice geometry mismatch in {path}: header "
+                    f"{hp}x{wp}/{bits}bit != probed "
+                    f"{height}x{width}/{exp_bits}bit"
+                )
+            parts = _decode_windows(data)
+            for p, (_, y0, y1) in zip(parts, wins):
+                if p.shape != (y1 - y0, x1 - x0) or p.dtype != exp_dtype:
+                    raise ValueError(
+                        f"slice geometry mismatch in {path}: decoded "
+                        f"window {p.shape} {p.dtype} != probed "
+                        f"{(y1 - y0, x1 - x0)} {exp_dtype}"
+                    )
+        except Exception as exc:  # noqa: BLE001 — dead-letter boundary
+            if not quarantine:
+                raise
+            dead.append((i, f"{path}: {type(exc).__name__}: {exc}"))
+            continue  # window rows stay zero-filled
+        for buf, p in zip(bufs, parts):
+            buf[i] = p
+    decode_s = time.perf_counter() - t_loop - read_s
+    pyramid_s = 0.0
+    n_chunks = 0
+    raw_bytes = 0
+    for buf, (cy0, _y0, _y1) in zip(bufs, wins):
+        _, bh, bw = buf.shape
+        for cyy in range(-(-bh // cy_chunk)):
+            ys = slice(cyy * cy_chunk, (cyy + 1) * cy_chunk)
+            for cx in range(-(-bw // cx_chunk)):
+                arr = buf[:, ys, cx * cx_chunk : (cx + 1) * cx_chunk]
+                n_chunks += 1
+                raw_bytes += arr.nbytes
+                for lvl, dims in enumerate(ladder):
+                    cw.write(key(lvl, cy0 + cyy, cx0 + cx), arr, dims)
+                    if lvl < len(ladder) - 1:
+                        # downsample the UNPADDED data: zero padding
+                        # before the mean would corrupt edge windows
+                        t0 = time.perf_counter()
+                        arr = windowed_mean(arr, factors)
+                        pyramid_s += time.perf_counter() - t0
+    return n_chunks, raw_bytes, dead, read_s, decode_s, pyramid_s
+
+
 def probe_stack_geometry(
     spark: SparkSession,
     root: str,
@@ -320,32 +451,12 @@ def probe_stack_geometry(
     rows = [(ch, st, counts[(ch, st)], cands[(ch, st)]) for ch, st in sorted(counts)]
 
     def _probe(part):
-        from aind_smartspim_data_transformation_spark.sources.png_codec import (
-            probe_png_header,
-        )
-        from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-            _PNG_SIG,
-            probe_image_header,
-        )
-
         for ch, st, n_slices, paths in part:
             got = None
             err: Exception | None = None
             for p in paths:
                 try:
-                    # ranged read: a PNG header probe needs 29 bytes,
-                    # not the whole multi-MB slice — at 10⁴ stacks the
-                    # probe stage reads KBs instead of the first-slice
-                    # GBs
-                    head = _open_bytes(p, 64)
-                    if head[:8] == _PNG_SIG:
-                        got = probe_png_header(head)
-                    else:
-                        # TIFF IFDs sit at an arbitrary offset (often
-                        # the tail), so fall back to the full read —
-                        # the probe still skips pixel decompression
-                        # entirely
-                        got = probe_image_header(_open_bytes(p))
+                    got = probe_slice(p)
                     break
                 except Exception as exc:  # noqa: BLE001
                     if not quarantine:
@@ -468,75 +579,62 @@ def input_listing_digest(
     wall-clock second — the r9 digest's truncation hole — is still
     caught whenever the filesystem stores sub-second stamps.
 
-    ``mode="content"`` sha256-hashes every file's BYTES (plus its
-    path): one full read of the input through the ``binaryFile`` scan,
-    distributed across executors with a bounded DECIMAL-sum agg buffer.
-    Use it for post-quarantine reruns where a corrupt slice may have
-    been replaced with a timestamp-preserving copy; at 100 TB it costs
-    one extra pass over the acquisition, which is exactly the price of
-    certainty.
+    ``mode="content"`` sha256-hashes every file's BYTES (after its
+    ``path|length``): one full read of the input, a plain RDD job over
+    the listing that keeps every byte out of the JVM.  Use it for
+    post-quarantine reruns where a corrupt slice may have been replaced
+    with a timestamp-preserving copy; at 100 TB it costs one extra pass
+    over the acquisition, which is exactly the price of certainty.
 
-    Both modes fold a 60-bit prefix of each per-file sha256 into a
-    decimal sum — commutative (listing order never matters) and
-    constant state.
-
-    The metadata digest runs on the driver over ``listing`` (the
-    :func:`list_stack_files` rows of ``root``; listed here when
-    omitted), so run_fused_ingest plans the probe, this digest and its
-    band groups from ONE listing.  It equals the Spark expression
-    ``sha2(concat_ws("|", path, length, mtime))`` summed over a
-    ``scan_stack_files`` frame (resume-compatibility-tested), so
-    markers written by that earlier implementation still validate.
+    Both modes sum a 60-bit prefix of each per-file sha256 —
+    commutative, so listing order never matters.  Both run over
+    ``listing`` (the :func:`list_stack_files` rows of ``root``; listed
+    here when omitted), so run_fused_ingest plans the probe, this
+    digest and its band groups from ONE listing.  Each mode equals the
+    Spark expression earlier releases summed over a
+    ``scan_stack_files`` frame — ``sha2(concat_ws("|", path, length,
+    mtime))`` and ``sha2(concat(encode(concat_ws("|", path, length)),
+    content))`` (resume-compatibility-tested) — so markers written by
+    those implementations still validate.
     """
-    if mode not in ("metadata", "content"):
-        raise ValueError(
-            f"resume digest mode must be 'metadata' or 'content', got {mode!r}"
-        )
-    keep = None if stack_filter is None else set(stack_filter)
-    if mode == "content":
-        from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-            scan_stack_files,
-        )
-
-        files = scan_stack_files(spark, root)
-        if keep is not None:
-            _keys = spark.createDataFrame(
-                list(keep), "channel string, stack string"
-            )
-            files = files.join(F.broadcast(_keys), ["channel", "stack"])
-        per_file = F.sha2(
-            F.concat(
-                F.encode(F.concat_ws("|", "path", "length"), "UTF-8"),
-                F.col("content"),
-            ),
-            256,
-        )
-        _dig = files.agg(
-            F.count("*").alias("n"),
-            F.sum("length").alias("nbytes"),
-            F.sum(
-                F.conv(F.substring(per_file, 1, 15), 16, 10).cast(
-                    "decimal(38,0)"
-                )
-            ).alias("hsum"),
-        ).collect()[0]
-        return f"content:{_dig['n']}:{_dig['nbytes']}:{_dig['hsum']}"
     import hashlib
 
     from aind_smartspim_data_transformation_spark.sources.stack_reader import (
         list_stack_files,
     )
 
+    if mode not in ("metadata", "content"):
+        raise ValueError(
+            f"resume digest mode must be 'metadata' or 'content', got {mode!r}"
+        )
+    keep = None if stack_filter is None else set(stack_filter)
     if listing is None:
         listing = list_stack_files(root)
-    n = nbytes = hsum = 0
-    for path, ch, st, length, mtime in listing:
-        if keep is None or (ch, st) in keep:
-            n += 1
-            nbytes += length
-            digest = hashlib.sha256(f"{path}|{length}|{mtime}".encode())
-            hsum += int(digest.hexdigest()[:15], 16)
-    return f"metadata:{n}:{nbytes}:{hsum}"
+    files = [
+        (path, length, mtime)
+        for path, ch, st, length, mtime in listing
+        if keep is None or (ch, st) in keep
+    ]
+
+    def _hash(file) -> int:
+        path, length, mtime = file
+        if mode == "content":
+            h = hashlib.sha256(f"{path}|{length}".encode())
+            h.update(_open_bytes(path))
+        else:
+            h = hashlib.sha256(f"{path}|{length}|{mtime}".encode())
+        return int(h.hexdigest()[:15], 16)
+
+    if mode == "content":
+        sc = spark.sparkContext
+        hsum = (
+            sc.parallelize(files, max(1, min(len(files), sc.defaultParallelism)))
+            .map(_hash)
+            .sum()
+        )
+    else:
+        hsum = sum(map(_hash, files))
+    return f"{mode}:{len(files)}:{sum(f[1] for f in files)}:{hsum}"
 
 
 def run_fused_ingest(
@@ -728,11 +826,10 @@ def run_fused_ingest(
         group_rows.append((c, st, slab, gi, paths))
 
     def _write_band(row):
+        import json as _json
         import time
+        import uuid as _uuid
 
-        from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-            windowed_mean,
-        )
         from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
             ChunkWriter,
             _fs_for,
@@ -740,22 +837,15 @@ def run_fused_ingest(
             chunk_key,
             stack_group,
         )
-        from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-            decode_image_gray,
-        )
 
         channel, stack, cz, gi, paths = row
         nb, per_band, n_xt, per_xt = plan[(channel, stack)]
         fold, xt = divmod(gi, n_xt)
         height, width, dtype_name = geom[(channel, stack)]
-        exp_dtype = np.dtype(dtype_name)
-        _, compress = make_codec(
-            compressor_name, compressor_kwargs, exp_dtype.itemsize
-        )
         # the x-tile's columns [x0, x1), from chunk column cx0
         cx0 = xt * per_xt
         x0 = cx0 * cx_chunk
-        x1 = min(x0 + per_xt * cx_chunk, width)
+        cols = (cx0, x0, min(x0 + per_xt * cx_chunk, width))
         # the fold's band windows: (cy0, y0, y1) for bands f and
         # nb−1−f (one window when they coincide)
         wins = []
@@ -765,129 +855,22 @@ def run_fused_ingest(
             wins.append(
                 (cy0, y0, min(y0 + per_band * cy_chunk, height))
             )
-        lo, hi = wins[0][1], wins[-1][2]
-        stack_ladder = ladder[(channel, stack)]
-
-        def _check_header(path, data):
-            # header-only geometry gate (cheap — no pixel decode): the
-            # WINDOWED decode below cannot see rows past its window, so
-            # a slice TALLER than the probe would otherwise be silently
-            # cropped; the header names every mismatch up front
-            from aind_smartspim_data_transformation_spark.sources.png_codec import (
-                probe_png_header,
-            )
-            from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-                _PNG_SIG,
-                probe_image_header,
-            )
-
-            if data[:8] == _PNG_SIG:
-                wp, hp, bits = probe_png_header(data[:64])
-            else:
-                wp, hp, bits = probe_image_header(data)
-            exp_bits = exp_dtype.itemsize * 8
-            if (hp, wp) != (height, width) or bits != exp_bits:
-                raise ValueError(
-                    f"slice geometry mismatch in {path}: header "
-                    f"{hp}x{wp}/{bits}bit != probed "
-                    f"{height}x{width}/{exp_bits}bit"
-                )
-
-        def _decode_bands(data):
-            if quarantine:
-                # whole-plane atomicity: a corrupt slice must zero the
-                # WHOLE plane, not just the bands and tiles whose
-                # windows touch the damage — so decode the full slice
-                # (strict end-to-end validation: PNG adler32 + exact
-                # length, every TIFF strip/tile) and slice the windows
-                # from it.  Quarantine trades the windowed-decode
-                # saving for whole-plane failure atomicity.
-                plane = decode_image_gray(data)
-                return [plane[y0:y1, x0:x1] for (_, y0, y1) in wins]
-            # PNG inflates sequentially, so ONE pass to the higher
-            # band's end serves both windows (the lower band is free);
-            # TIFF strips are random-access, so per-window decodes
-            # skip the rows BETWEEN the fold's bands too.
-            if len(wins) == 1 or data[:8] == b"\x89PNG\r\n\x1a\n":
-                span = decode_image_gray(data, row_stop=hi, row_start=lo)
-                return [span[y0 - lo : y1 - lo, x0:x1] for (_, y0, y1) in wins]
-            return [
-                decode_image_gray(data, row_stop=y1, row_start=y0)[:, x0:x1]
-                for (_, y0, y1) in wins
-            ]
-
-        # decode time is the slice loop less its reads: header gate,
-        # decode, window checks and the copy into the band buffers
-        t_loop = time.perf_counter()
-        read_s = 0.0
-        # zeros, not empty: a quarantined slice's rows must come out
-        # zero-filled AT POSITION (memset cost is noise next to the
-        # decode+compress kernels this task runs)
-        bufs = [
-            np.zeros((len(paths), y1 - y0, x1 - x0), dtype=exp_dtype)
-            for (_, y0, y1) in wins
-        ]
-        dead: list[tuple[int, str]] = []
-        for i, path in enumerate(paths):
-            try:
-                t0 = time.perf_counter()
-                data = _open_bytes(path)
-                read_s += time.perf_counter() - t0
-                _check_header(path, data)
-                parts = _decode_bands(data)
-                for p, (_, y0, y1) in zip(parts, wins):
-                    if p.shape != (y1 - y0, x1 - x0) or p.dtype != exp_dtype:
-                        raise ValueError(
-                            f"slice geometry mismatch in {path}: decoded "
-                            f"window {p.shape} {p.dtype} != probed "
-                            f"{(y1 - y0, x1 - x0)} {exp_dtype}"
-                        )
-            except Exception as exc:  # noqa: BLE001 — dead-letter boundary
-                if not quarantine:
-                    raise
-                dead.append(
-                    (cz * cz_chunk + i, f"{path}: {type(exc).__name__}: {exc}")
-                )
-                continue  # band rows stay zero-filled
-            for buf, p in zip(bufs, parts):
-                buf[i] = p
-        decode_s = time.perf_counter() - t_loop - read_s
-        pyramid_s = 0.0
         fs, base = _fs_for(output_root)
+        _, compress = make_codec(
+            compressor_name, compressor_kwargs, np.dtype(dtype_name).itemsize
+        )
         cw = ChunkWriter(fs, compress)
         group = stack_group(base, channel, stack)
-        n_chunks = 0
-        raw_bytes = 0
-        for buf, (cy0, _y0, _y1) in zip(bufs, wins):
-            bh, bw = buf.shape[1], buf.shape[2]
-            for cyy in range(-(-bh // cy_chunk)):
-                for cx in range(-(-bw // cx_chunk)):
-                    arr = buf[
-                        :,
-                        cyy * cy_chunk : (cyy + 1) * cy_chunk,
-                        cx * cx_chunk : (cx + 1) * cx_chunk,
-                    ]
-                    n_chunks += 1
-                    raw_bytes += arr.nbytes
-                    for lvl in range(n_levels):
-                        cw.write(
-                            chunk_key(group, lvl, cz, cy0 + cyy, cx0 + cx),
-                            arr,
-                            stack_ladder[lvl],
-                        )
-                        if lvl < n_levels - 1:
-                            # downsample the UNPADDED data: zero
-                            # padding before the mean would corrupt
-                            # edge windows
-                            t0 = time.perf_counter()
-                            arr = windowed_mean(arr, factors)
-                            pyramid_s += time.perf_counter() - t0
+        n_chunks, raw_bytes, dead, read_s, decode_s, pyramid_s = write_slab(
+            paths, wins, cols, geom[(channel, stack)], (cy_chunk, cx_chunk),
+            factors, ladder[(channel, stack)],
+            lambda lvl, cy, cx: chunk_key(group, lvl, cz, cy, cx),
+            cw, quarantine,
+        )
+        dead = [(cz * cz_chunk + i, err) for i, err in dead]
         # completion marker LAST (all chunks durable), via temp + rename
         # so a kill mid-write can never leave a parsing half-marker; a
         # speculative duplicate attempt rewrites identical content.
-        import json as _json
-        import uuid as _uuid
-
         t0 = time.perf_counter()
         pdir = f"{base}/{_PROGRESS_DIRNAME}"
         fs.create_dir(pdir, recursive=True)

@@ -5,10 +5,10 @@ non-overlapping f-windowed mean of level i, dtype preserved
 (`compress/png_to_zarr.py:350-394` via xarray_multiscale, factors
 [2,2,2], edge windows truncated → output shape ceil(shape/f)).
 
-:func:`windowed_mean` is the one kernel: the fused band tasks
-(imaging/fused.py) apply it chunk by chunk, the streaming writer
-applies it to each wave's slab, and the tests use it as the numpy
-oracle.  Per-chunk means equal the global mean whenever every
+:func:`windowed_mean` is the one kernel: the slab writer
+(imaging/fused.py::write_slab, which both the fused band tasks and the
+streaming writer call) applies it chunk by chunk, and the tests use it
+as the numpy oracle.  Per-chunk means equal the global mean whenever every
 non-edge chunk dim is divisible by f (the 128-chunk / factor-2
 default guarantees it; :func:`validate_pyramid_geometry` rejects
 configurations that break it — per-chunk windows would otherwise

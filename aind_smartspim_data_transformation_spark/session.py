@@ -55,10 +55,11 @@ _COMMON = {
 }
 
 
-# Arrow batch rows for imaging pipelines: rows are megabytes (a decoded
-# 2000×1600 uint16 slice ≈ 6.4 MB), so the relational 4096-row batch
-# target would build multi-GB Arrow batches in the JVM and Python
-# workers.  32 × ~6.4 MB ≈ 200 MB per batch.
+# Arrow batch rows for the imaging child session, whose one user is the
+# ``scan_stack_files`` binaryFile scan (the ingest routes read slices by
+# path, never as rows): a row is a whole slice file (2000×1600 uint16 ≈
+# 6.4 MB), so the relational 4096-row target would build multi-GB Arrow
+# batches.  32 × ~6.4 MB ≈ 200 MB per batch.
 IMAGING_ARROW_ROWS = "32"
 
 import weakref
@@ -86,14 +87,9 @@ def imaging_session(spark: SparkSession) -> SparkSession:
         child.conf.set(
             "spark.sql.execution.arrow.maxRecordsPerBatch", IMAGING_ARROW_ROWS
         )
-        # One slice file per scan partition: decode is the expensive
-        # step (pure-Python codec, ~1 s per 2000×1600 slice) and now
-        # runs IN the scan partitions (no pre-decode shuffle), so
-        # parallelism = scan splits.  The relational default packs
-        # ~128 MB of files per partition — twenty ~6 MB slices would
-        # serialize onto one task.  openCost == maxPartitionBytes means
-        # a partition closes after its first file; at 100 TB this stays
-        # right: per-file tasks are decode-bound, scheduling is noise.
+        # One slice file per scan partition (openCost ==
+        # maxPartitionBytes closes a partition after its first file)
+        # instead of the relational ~128 MB of files per partition.
         child.conf.set("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         child.conf.set("spark.sql.files.openCostInBytes", str(32 * 1024 * 1024))
         _imaging_sessions[spark] = child

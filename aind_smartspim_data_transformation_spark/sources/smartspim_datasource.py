@@ -3,11 +3,11 @@ streaming writer only.
 
 After ``ensure_registered(spark)``,
 ``slices.writeStream.format("smartspim").start(root)`` appends each
-microbatch of decoded slices to the OME-Zarr stores through the
-streaming commit protocol (:class:`SmartspimStreamWriter`).  Its input
-is ``streaming/stack_stream.run_streaming_store_ingest``'s file-source
-stream, decoded on the executors with the same magic-byte dispatch as
-the batch band tasks (``stack_reader.decode_image_gray``).
+microbatch of slices to the OME-Zarr stores through the streaming
+commit protocol (:class:`SmartspimStreamWriter`).  Its input is
+``streaming/stack_stream.run_streaming_store_ingest``'s file-source
+stream of slice paths; the write tasks read, decode and write them
+through the batch band tasks' kernel (``imaging/fused.write_slab``).
 
 There is no read and no batch write: a finished acquisition goes
 through ``imaging/job.py``, whose one route is the fused band tasks
@@ -85,27 +85,30 @@ class SlabStage(WriterCommitMessage):
 
 
 class SmartspimStreamWriter(DataSourceStreamWriter):
-    """``decoded_slices.writeStream.format("smartspim").start()`` — the
+    """``slices.writeStream.format("smartspim").start()`` — the
     incremental OME-Zarr store expressed through the STREAMING commit
     protocol; the one incremental imaging path.
 
-    Input rows: the decoded slice table
-    (``stack_stream.STREAM_SLICE_SCHEMA`` — channel, stack, slice_key,
-    height, width, dtype, data), partitioned so each stack's microbatch
-    rows share ONE partition (``run_streaming_store_ingest`` does the
-    ``repartition("channel", "stack")``; a split stack is detected at
-    commit and refused loudly).
+    Input rows: one short row per slice
+    (``stack_stream.stream_stack_files`` — channel, stack, slice_key,
+    path), partitioned so each stack's microbatch rows share ONE
+    partition (``run_streaming_store_ingest`` repartitions by
+    ``("channel", "stack")``; a split stack is detected at commit and
+    refused loudly).
 
     Per microbatch:
 
-    - :meth:`write` (executors): each task assembles its stacks' wave
-      slices into a z-slab (slice_key ascending), computes EVERY
-      pyramid level locally (whole-slab ``windowed_mean``, the kernel
-      the batch band tasks use), and stages compressed
-      chunks under ``<root>/.staging/<uuid>/`` — slab-LOCAL cz, final
-      keys unknown until commit, each padded to the existing store's
-      chunk shape so promotion is a plain move.  Pixel bytes never
-      cross to the JVM.
+    - :meth:`write` (executors): each task orders its stacks' wave
+      slices by slice_key, takes the wave geometry from the first
+      slice's header, and runs the fused band kernel
+      (``imaging/fused.write_slab``) once per z-chunk over the full
+      plane: header gate, decode, EVERY pyramid level per chunk, and
+      compressed chunks staged under ``<root>/.staging/<uuid>/`` —
+      slab-LOCAL cz, final keys unknown until commit, each padded to
+      the existing store's chunk shape so promotion is a plain move.
+      A slice whose header differs from the first slice's fails the
+      task with ``slice geometry mismatch``.  Pixel bytes never cross
+      to the JVM.
     - :meth:`commit` (driver): per stack, either CREATES the store
       (chunks promoted first, metadata written last — a crash leaves no
       store) or APPENDS through
@@ -168,8 +171,9 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
 
         import numpy as np
 
-        from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-            windowed_mean,
+        from aind_smartspim_data_transformation_spark.imaging.fused import (
+            probe_slice,
+            write_slab,
         )
         from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
             ChunkWriter,
@@ -183,43 +187,19 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
         by_stack: dict = {}
         for r in iterator:
             by_stack.setdefault((r["channel"], r["stack"]), []).append(
-                (
-                    int(r["slice_key"]),
-                    int(r["height"]),
-                    int(r["width"]),
-                    r["dtype"],
-                    bytes(r["data"]),
-                )
+                (int(r["slice_key"]), r["path"])
             )
         stacks: dict = {}
         factors = tuple(self.factors)
         for (channel, stack), rows in by_stack.items():
-            rows.sort(key=lambda t: t[0])
-            h, w, dt = rows[0][1], rows[0][2], rows[0][3]
-            for k, hh, ww, dd, _ in rows:
-                if (hh, ww, dd) != (h, w, dt):
-                    raise ValueError(
-                        f"{channel}/{stack}: slice {k} geometry "
-                        f"{hh}x{ww}/{dd} != wave's {h}x{w}/{dt}"
-                    )
-            cw = ChunkWriter(
-                fs,
-                _make_codec(
-                    self.compressor, self.compressor_kwargs,
-                    np.dtype(dt).itemsize,
-                )[1],
-            )
-            vol = np.stack(
-                [
-                    np.frombuffer(r[4], dtype=np.dtype(dt)).reshape(h, w)
-                    for r in rows
-                ]
-            )
-            dims = (
-                min(self.chunk[0], vol.shape[0]),
-                min(self.chunk[1], vol.shape[1]),
-                min(self.chunk[2], vol.shape[2]),
-            )
+            rows.sort()
+            paths = [p for _, p in rows]
+            # the wave's geometry is its first slice's header; the slab
+            # writer's header gate refuses any slice that differs
+            w, h, bits = probe_slice(paths[0])
+            dt = "uint16" if bits == 16 else "uint8"
+            shape = (len(paths), h, w)
+            dims = tuple(map(min, self.chunk, shape))
             # An existing store fixes every level's chunk shape.  A short
             # last wave clamps its dims below it, so its chunks are padded
             # to the store's shape; a deeper wave keeps its own dims and
@@ -236,47 +216,44 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
                         )
             except FileNotFoundError:
                 store_dims = None
-            levels = []
-            arr = vol
+            # per level: extent, chunk dims, staged pad dims; the chunk
+            # grid is the same at every level (see imaging/fused.py)
+            chunks = [
+                (cz, cy, cx)
+                for cz in range(-(-shape[0] // dims[0]))
+                for cy in range(-(-shape[1] // dims[1]))
+                for cx in range(-(-shape[2] // dims[2]))
+            ]
+            levels, ladder, lv_shape, lv_dims = [], [], shape, dims
             for lvl in range(self.n_levels):
-                pad = (
-                    dims
-                    if store_dims is None
-                    else tuple(map(max, dims, store_dims[lvl]))
-                )
-                chunks = []
-                for cz in range(-(-arr.shape[0] // dims[0])):
-                    for cy in range(-(-arr.shape[1] // dims[1])):
-                        for cx in range(-(-arr.shape[2] // dims[2])):
-                            block = arr[
-                                cz * dims[0] : (cz + 1) * dims[0],
-                                cy * dims[1] : (cy + 1) * dims[1],
-                                cx * dims[2] : (cx + 1) * dims[2],
-                            ]
-                            # staged at slab-local cz (see _stage_key)
-                            key = _stage_key(
-                                base, channel, stack, lvl, cz, cy, cx
-                            )
-                            cw.write(key, block, pad)
-                            chunks.append((cz, cy, cx))
+                z, y, x = lv_shape
                 levels.append(
-                    {
-                        "z": arr.shape[0],
-                        "y": arr.shape[1],
-                        "x": arr.shape[2],
-                        "dims": list(dims),
-                        "chunks": chunks,
-                    }
+                    {"z": z, "y": y, "x": x, "dims": list(lv_dims), "chunks": chunks}
                 )
-                if lvl < self.n_levels - 1:
-                    arr = windowed_mean(arr, factors)
-                    dims = tuple(
-                        -(-d // f) for d, f in zip(dims, factors)
-                    )
+                ladder.append(
+                    lv_dims if store_dims is None
+                    else tuple(map(max, lv_dims, store_dims[lvl]))
+                )
+                lv_shape = tuple(-(-d // f) for d, f in zip(lv_shape, factors))
+                lv_dims = tuple(-(-d // f) for d, f in zip(lv_dims, factors))
+            _, compress = _make_codec(
+                self.compressor, self.compressor_kwargs, np.dtype(dt).itemsize
+            )
+            cw = ChunkWriter(fs, compress)
+            # one slab-writer call per z-chunk of the wave, full-plane
+            # window, staged at slab-local cz (see _stage_key)
+            for cz in range(-(-shape[0] // dims[0])):
+                write_slab(
+                    paths[cz * dims[0] : (cz + 1) * dims[0]],
+                    [(0, 0, h)], (0, 0, w), (h, w, dt), dims[1:], factors,
+                    ladder,
+                    lambda lvl, cy, cx, cz=cz: _stage_key(
+                        base, channel, stack, lvl, cz, cy, cx
+                    ),
+                    cw,
+                )
             stacks[(channel, stack)] = {
-                "dtype": dt,
-                "min_key": rows[0][0],
-                "max_key": rows[-1][0],
+                "dtype": dt, "min_key": rows[0][0], "max_key": rows[-1][0],
                 "levels": levels,
             }
         return SlabStage(staging, stacks)

@@ -7,8 +7,9 @@ Re-expresses the reference's imaging ingest (SURVEY.md §2.1 S1-S4):
   one driver-side recursive listing sorted by path (the reference's
   ``sort(key=str)``, `smartspim_job.py:59-60`) that plans the fused
   ingest (imaging/fused.py).  :func:`scan_stack_files` is the same
-  listing as a ``binaryFile`` DataFrame with the file bytes, for the
-  content resume digest.
+  listing as a ``binaryFile`` DataFrame with the file bytes; it pins
+  the listing's parity in the tests and is the listing that
+  ``perfbench/worker.py`` times.
 - S2/S3 lazy PNG/TIFF stack reader (`io/readers.py:129-145`, one dask
   chunk per slice; `compress/png_to_zarr.py:459-500` TIFF path) →
   :func:`decode_image_gray`, the format picked by magic bytes per file
@@ -78,6 +79,14 @@ def probe_image_header(data: bytes) -> tuple[int, int, int]:
         return probe_tiff_header(data)
     raise ValueError("unrecognized image format (PNG/TIFF supported)")
 
+
+# The SmartSPIM path parse (``SmartSPIM/<channel>/…/<stack>/<stem>.<ext>``);
+# the Spark scans pass ``.pattern`` to ``regexp_extract``.
+_EXT_RE = re.compile(r"\.([A-Za-z]+)$")
+_CHANNEL_RE = re.compile(r"SmartSPIM/([^/]+)/")
+_STACK_RE = re.compile(r"/([^/]+)/[^/]+\.[A-Za-z]+$")
+_SLICE_KEY_RE = re.compile(r"/(\d+)\.[A-Za-z]+$")
+
 CHUNK_SCHEMA = (
     "channel string, stack string, t int, c int, cz int, cy int, cx int, "
     "dz int, dy int, dx int, dtype string, data binary"
@@ -100,9 +109,9 @@ def scan_stack_files(spark: SparkSession, root: str) -> DataFrame:
         .option("recursiveFileLookup", "true")
         .load(root)
     )
-    ext = F.lower(F.regexp_extract("path", r"\.([A-Za-z]+)$", 1))
-    channel = F.regexp_extract("path", r"SmartSPIM/([^/]+)/", 1)
-    stack = F.regexp_extract("path", r"/([^/]+)/[^/]+\.[A-Za-z]+$", 1)
+    ext = F.lower(F.regexp_extract("path", _EXT_RE.pattern, 1))
+    channel = F.regexp_extract("path", _CHANNEL_RE.pattern, 1)
+    stack = F.regexp_extract("path", _STACK_RE.pattern, 1)
     return (
         df.withColumn("ext", ext)
         .filter(F.col("ext").isin(*ALLOWED_EXTENSIONS))
@@ -119,11 +128,6 @@ def scan_stack_files(spark: SparkSession, root: str) -> DataFrame:
             "content",
         )
     )
-
-
-_EXT_RE = re.compile(r"\.([A-Za-z]+)$")
-_CHANNEL_RE = re.compile(r"SmartSPIM/([^/]+)/")
-_STACK_RE = re.compile(r"/([^/]+)/[^/]+\.[A-Za-z]+$")
 
 
 def list_stack_files(root: str) -> list[tuple[str, str, str, int, int]]:

@@ -10,14 +10,18 @@ listed and decoded exactly once across any number of micro-batches.
 
 There is one incremental path, :func:`run_streaming_store_ingest`:
 
-    stream_stack_files → decode_stream_slices → repartition(channel, stack)
+    stream_stack_files → repartition(channel, stack)
                        → writeStream.format("smartspim")
 
-The ``smartspim`` stream writer
-(``sources/smartspim_datasource.SmartspimStreamWriter``) turns each
-microbatch into one fenced z-slab append per stack, so the OME-Zarr
-stores grow wave by wave and end identical to a one-shot build of the
-finished acquisition (asserted in tests/test_stack_stream.py).
+The stream carries slice PATHS, not pixels: ``binaryFile`` opens no
+file whose ``content`` column is not selected, so the scan and the one
+shuffle move one short row per slice.  The ``smartspim`` stream writer
+(``sources/smartspim_datasource.SmartspimStreamWriter``) reads,
+decodes and writes each stack's wave in one task through the fused
+band kernel (``imaging/fused.write_slab``) and turns each microbatch
+into one fenced z-slab append per stack, so the OME-Zarr stores grow
+wave by wave and end identical to a one-shot build of the finished
+acquisition (asserted in tests/test_stack_stream.py).
 
 **slice_key, not z, is the streamed identity.** The batch path assigns
 dense z as the path rank over *all* files of a stack, on the driver
@@ -29,23 +33,21 @@ content-stable); the writer orders a wave's slices by it and places the
 slab at the store's current z extent, which is the same rank under the
 acquisition contract (slices arrive in ascending stem order per stack).
 
-Scale posture: decode is a narrow map; the one shuffle is the
-repartition that puts each stack's wave in one write task, and the only stream state is the file-source's
-processed-file log.  1000 executors drain a burst of arriving slices at
-list-throughput.
+Scale posture: the one shuffle is the repartition that puts each
+stack's wave in one write task, and the only stream state is the
+file-source's processed-file log.  1000 executors drain a burst of
+arriving slices at list-throughput.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-    decode_image_gray,
+    _CHANNEL_RE,
+    _SLICE_KEY_RE,
+    _STACK_RE,
 )
 
 # binaryFile's fixed schema — streaming sources cannot infer it.
@@ -53,72 +55,27 @@ BINARY_FILE_SCHEMA = (
     "path string, modificationTime timestamp, length long, content binary"
 )
 
-STREAM_SLICE_SCHEMA = (
-    "channel string, stack string, slice_key long, height int, width int, "
-    "dtype string, data binary"
-)
-
 
 def stream_stack_files(spark: SparkSession, root: str) -> DataFrame:
-    """Streaming twin of ``scan_stack_files``: same path-derived columns,
-    plus the batch-independent ``slice_key`` (numeric filename stem)."""
-    from aind_smartspim_data_transformation_spark.session import imaging_session
-
+    """Streaming twin of ``scan_stack_files``: the slice ``path`` with
+    the same path-derived columns, plus the batch-independent
+    ``slice_key`` (numeric filename stem).  No file is opened here."""
     df = (
-        imaging_session(spark)  # megabyte-row Arrow batches, own SQLConf
-        .readStream.format("binaryFile")
+        spark.readStream.format("binaryFile")
         .schema(BINARY_FILE_SCHEMA)
         .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.{png,tif,tiff}")
         .load(root)
     )
-    channel = F.regexp_extract("path", r"SmartSPIM/([^/]+)/", 1)
-    stack = F.regexp_extract("path", r"/([^/]+)/[^/]+\.[A-Za-z]+$", 1)
-    slice_key = F.regexp_extract("path", r"/(\d+)\.[A-Za-z]+$", 1).cast("long")
-    return (
-        df.filter(channel != "")
-        .select(
-            channel.alias("channel"),
-            stack.alias("stack"),
-            slice_key.alias("slice_key"),
-            "content",
-        )
+    channel = F.regexp_extract("path", _CHANNEL_RE.pattern, 1)
+    stack = F.regexp_extract("path", _STACK_RE.pattern, 1)
+    slice_key = F.regexp_extract("path", _SLICE_KEY_RE.pattern, 1).cast("long")
+    return df.filter(channel != "").select(
+        channel.alias("channel"),
+        stack.alias("stack"),
+        slice_key.alias("slice_key"),
+        "path",
     )
-
-
-def decode_stream_slices(files: DataFrame) -> DataFrame:
-    """Decode (same PNG/TIFF dispatch as the batch path) keyed by slice_key."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_image_gray(bytes(r.content))
-                out.append(
-                    (
-                        r.channel,
-                        r.stack,
-                        int(r.slice_key),
-                        arr.shape[0],
-                        arr.shape[1],
-                        str(arr.dtype),
-                        arr.tobytes(),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "channel",
-                    "stack",
-                    "slice_key",
-                    "height",
-                    "width",
-                    "dtype",
-                    "data",
-                ],
-            )
-
-    return files.mapInPandas(_decode, schema=STREAM_SLICE_SCHEMA)
 
 
 def run_streaming_store_ingest(
@@ -133,12 +90,8 @@ def run_streaming_store_ingest(
     timeout_sec: int = 120,
 ) -> None:
     """Stream arriving slices straight into multiscale OME-Zarr stores
-    through the DataSource streaming commit protocol:
-
-        decoded slices → repartition(channel, stack)
-                       → writeStream.format("smartspim")
-
-    Each ``availableNow`` run drains the new waves; every microbatch
+    through the DataSource streaming commit protocol (the pipeline in
+    the module docstring).  Each ``availableNow`` run drains the new waves; every microbatch
     becomes one fenced z-slab append per stack
     (``SmartspimStreamWriter`` → ``append_slab_transaction``), so a
     mid-stream kill leaves either no trace (staging only), a detectable
@@ -153,16 +106,14 @@ def run_streaming_store_ingest(
         ensure_registered,
     )
 
-    slices = decode_stream_slices(
-        stream_stack_files(spark, root)
-    ).repartition("channel", "stack")
-    # streaming format resolution is SPLIT across sessions (observed,
-    # pyspark 4.1): .start() resolves from the ACTIVE session while the
-    # microbatch execution resolves from the DataFrame's own (imaging
-    # child) session — register in BOTH.  No fallback exists for a
-    # streaming sink, so a registration failure propagates.
+    # by number: adaptive execution would coalesce a by-column repartition
+    # of the few-KB path rows into ONE write task for every stack
+    slices = stream_stack_files(spark, root).repartition(
+        spark.sparkContext.defaultParallelism, "channel", "stack"
+    )
+    # no fallback exists for a streaming sink, so a registration
+    # failure propagates
     ensure_registered(spark)
-    ensure_registered(slices.sparkSession)
     q = (
         slices.writeStream.format("smartspim")
         .option("checkpointLocation", checkpoint_dir)

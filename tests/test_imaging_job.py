@@ -972,6 +972,50 @@ def test_listing_digest_matches_binaryfile_expression(spark, tmp_path):
     assert input_listing_digest(spark, root, stack_filter=one) == spark_digest(one)
 
 
+def test_content_digest_matches_binaryfile_expression(spark, tmp_path):
+    """Resume compatibility: the content digest, now a plain RDD job
+    over the listing, equals the Spark expression earlier releases
+    computed over a ``binaryFile`` scan, so content-mode progress
+    markers written before still validate."""
+    from aind_smartspim_data_transformation_spark.imaging.fused import (
+        input_listing_digest,
+    )
+    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
+        scan_stack_files,
+    )
+    from pyspark.sql import functions as F
+
+    make_dataset(tmp_path, height=16, width=20)
+    root = str(tmp_path / "SmartSPIM")
+
+    def spark_digest(stack_filter=None):
+        files = scan_stack_files(spark, root)
+        if stack_filter is not None:
+            keys = spark.createDataFrame(stack_filter, "channel string, stack string")
+            files = files.join(F.broadcast(keys), ["channel", "stack"])
+        per_file = F.sha2(
+            F.concat(
+                F.encode(F.concat_ws("|", "path", "length"), "UTF-8"),
+                F.col("content"),
+            ),
+            256,
+        )
+        d = files.agg(
+            F.count("*").alias("n"),
+            F.sum("length").alias("nbytes"),
+            F.sum(
+                F.conv(F.substring(per_file, 1, 15), 16, 10).cast("decimal(38,0)")
+            ).alias("hsum"),
+        ).collect()[0]
+        return f"content:{d['n']}:{d['nbytes']}:{d['hsum']}"
+
+    assert input_listing_digest(spark, root, mode="content") == spark_digest()
+    one = [("Ex_561_Em_600", "464780_530260")]
+    assert input_listing_digest(
+        spark, root, stack_filter=one, mode="content"
+    ) == spark_digest(one)
+
+
 def test_fused_job_runs_at_most_four_spark_jobs(spark, tmp_path):
     """One driver-side listing plans the probe, the resume digest and
     the band groups: the whole fused ingest is the probe job plus the

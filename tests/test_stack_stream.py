@@ -257,3 +257,41 @@ def test_default_codec_refuses_zlib_store_and_zlib_markers(
     )
     with pytest.raises(ValueError, match="different store configuration"):
         ingest(spark, root, out, (4, 64, 64), 2)
+
+
+def test_stream_carries_paths_not_pixels(spark, tmp_path):
+    """The stream ships one short row per slice: no column of the
+    streamed frame holds file bytes, so no pixel crosses the shuffle."""
+    from pyspark.sql.types import BinaryType
+
+    root = tmp_path / "acq" / "SmartSPIM"
+    root.mkdir(parents=True)
+    schema = ss.stream_stack_files(spark, str(root)).schema
+    assert schema.fieldNames() == ["channel", "stack", "slice_key", "path"]
+    assert not any(isinstance(f.dataType, BinaryType) for f in schema.fields)
+
+
+def test_stream_refuses_taller_slice(spark, tmp_path):
+    """A wave whose second slice is taller than its first fails the
+    write task at the slab writer's header gate, naming the slice, and
+    leaves no store group and no staged chunk behind."""
+    rng = np.random.default_rng(23)
+    root = tmp_path / "acq"
+    store = tmp_path / "store"
+    stack = "400000_500000"
+    _write_slice(root, "Ex_488_Em_525", stack, 0,
+                 rng.integers(0, 65535, size=(16, 20), dtype=np.uint16))
+    _write_slice(root, "Ex_488_Em_525", stack, 20,
+                 rng.integers(0, 65535, size=(24, 20), dtype=np.uint16))
+    with pytest.raises(
+        Exception, match=r"slice geometry mismatch in \S*/000020\.png"
+    ):
+        ss.run_streaming_store_ingest(
+            spark, str(root / "SmartSPIM"), str(store), str(tmp_path / "ckpt"),
+            chunk_zyx=[64, 64, 64], n_levels=2,
+        )
+    assert not (store / "Ex_488_Em_525").exists()
+    staged = store / ".staging"
+    assert not staged.exists() or not any(
+        p.is_file() for p in staged.rglob("*")
+    )
