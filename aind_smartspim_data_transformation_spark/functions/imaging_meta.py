@@ -11,8 +11,10 @@ Behavioral parity targets (from the reference, re-expressed):
 - F1 channel-name parsing (`compress/png_to_zarr.py:588-589`):
   "Ex_445_Em_469[.zarr]" → emission wavelength 469.
 - F4 coordinate-transform ladder (`compress/png_to_zarr.py:107-203`):
-  level-i scale = voxel · factor^i (cumulative), shape = ceil(prev/f),
-  chunks = min(shape, chunk).
+  level-i scale = voxel · factor^i (cumulative).  Level extents
+  (ceil(prev/f)) and chunk dims are the store planner's
+  (imaging/zarr_sink.plan_store_layout), which clamps only level 0's
+  chunk; the reference clamps chunks = min(shape, chunk) per level.
 - F3 OMERO channel metadata (`compress/png_to_zarr.py:36-104`):
   dtype-theoretic min/max (deliberately NOT a data scan — the
   reference rejected a percentile scan for cost, `607-627`), fixed
@@ -22,7 +24,6 @@ Behavioral parity targets (from the reference, re-expressed):
 
 from __future__ import annotations
 
-import math
 from typing import Any
 
 import numpy as np
@@ -88,43 +89,23 @@ def compute_scale_ladder(
     voxel_zyx: list[float],
     scale_factor_zyx: list[int],
     n_levels: int,
-    shape_5d: tuple[int, ...],
-    chunk_zyx: list[int],
-) -> tuple[list[list[dict[str, Any]]], list[tuple[int, ...]]]:
-    """Per-level NGFF coordinateTransformations + chunk shapes.
-
-    Level i voxel scale = base · factor^i; level shape halves with
-    ceil; chunks clamp to the level shape.
-    """
-    transforms: list[list[dict[str, Any]]] = []
-    chunk_opts: list[tuple[int, ...]] = []
-    shape = list(shape_5d)
-    for lvl in range(n_levels):
-        scale = [
-            1.0,
-            1.0,
-            voxel_zyx[0] * scale_factor_zyx[0] ** lvl,
-            voxel_zyx[1] * scale_factor_zyx[1] ** lvl,
-            voxel_zyx[2] * scale_factor_zyx[2] ** lvl,
+) -> list[list[dict[str, Any]]]:
+    """Per-level NGFF coordinateTransformations: level i voxel scale =
+    base · factor^i.  Extents and chunk dims are the store planner's
+    (imaging/zarr_sink.plan_store_layout)."""
+    return [
+        [
+            {
+                "type": "scale",
+                "scale": [
+                    1.0,
+                    1.0,
+                    *(v * f**lvl for v, f in zip(voxel_zyx, scale_factor_zyx)),
+                ],
+            }
         ]
-        transforms.append([{"type": "scale", "scale": scale}])
-        chunk_opts.append(
-            (
-                1,
-                1,
-                min(shape[2], chunk_zyx[0]),
-                min(shape[3], chunk_zyx[1]),
-                min(shape[4], chunk_zyx[2]),
-            )
-        )
-        shape = [
-            shape[0],
-            shape[1],
-            math.ceil(shape[2] / scale_factor_zyx[0]),
-            math.ceil(shape[3] / scale_factor_zyx[1]),
-            math.ceil(shape[4] / scale_factor_zyx[2]),
-        ]
-    return transforms, chunk_opts
+        for lvl in range(n_levels)
+    ]
 
 
 def dtype_display_range(dtype: np.dtype) -> tuple[float, float]:

@@ -711,6 +711,7 @@ def run_fused_ingest(
     from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
         _make_codec,
         _write_all_metadata,
+        plan_store_layout,
     )
     from aind_smartspim_data_transformation_spark.sources.stack_reader import (
         list_stack_files,
@@ -730,26 +731,14 @@ def run_fused_ingest(
             "chunk_bytes": 0,
             "phase_sec": dict.fromkeys(PHASES, 0.0),
         }
-    meta_rows = [
-        {
-            **g,
-            "cdz": min(chunk_zyx[0], g["z"]),
-            "cdy": min(chunk_zyx[1], g["y"]),
-            "cdx": min(chunk_zyx[2], g["x"]),
-        }
-        for g in geo
-    ]
-    # PLAN now (geometry guard fails fast, the band tasks get the chunk
-    # ladder), WRITE metadata only after every band task has succeeded
-    # (metadata-last, at the bottom of this function): a failed or
-    # killed fused job must not leave a target that parses as a
-    # complete store with missing chunks silently reading as zeros.
-    from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
-        plan_store_layout,
-    )
-
-    groups, ladder = plan_store_layout(
-        meta_rows, output_root, scale_factor_zyx, n_levels
+    # PLAN now (geometry guard fails fast; the band tasks pad to its
+    # chunk ladder), WRITE metadata from the same plan only after every
+    # band task has succeeded (metadata-last, at the bottom of this
+    # function): a failed or killed fused job must not leave a target
+    # that parses as a complete store with missing chunks silently
+    # reading as zeros.
+    layout = plan_store_layout(
+        geo, output_root, chunk_zyx, scale_factor_zyx, n_levels
     )
 
     cz_chunk, cy_chunk, cx_chunk = chunk_zyx
@@ -863,7 +852,7 @@ def run_fused_ingest(
         group = stack_group(base, channel, stack)
         n_chunks, raw_bytes, dead, read_s, decode_s, pyramid_s = write_slab(
             paths, wins, cols, geom[(channel, stack)], (cy_chunk, cx_chunk),
-            factors, ladder[(channel, stack)],
+            factors, [dims for _, dims in layout[(channel, stack)]["levels"]],
             lambda lvl, cy, cx: chunk_key(group, lvl, cz, cy, cx),
             cw, quarantine,
         )
@@ -943,14 +932,7 @@ def run_fused_ingest(
         ]
     # every band task succeeded — NOW the stores may parse as complete
     _write_all_metadata(
-        meta_rows,
-        output_root,
-        voxel_size_zyx,
-        scale_factor_zyx,
-        chunk_zyx,
-        n_levels,
-        compressor_name,
-        compressor_kwargs,
+        layout, voxel_size_zyx, scale_factor_zyx, compressor_name, compressor_kwargs
     )
     # the job is complete and finalized — retire the progress markers
     # (a COMPLETE store carries no droppings; the next run starts clean)
@@ -964,4 +946,4 @@ def run_fused_ingest(
     pdir = f"{out_base}/{_PROGRESS_DIRNAME}"
     if fs.get_file_info(pdir).type != pafs.FileType.NotFound:
         fs.delete_dir(pdir)
-    return sorted(groups), metrics
+    return sorted(e["group"] for e in layout.values()), metrics

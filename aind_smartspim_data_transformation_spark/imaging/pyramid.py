@@ -13,23 +13,15 @@ non-edge chunk dim is divisible by f (the 128-chunk / factor-2
 default guarantees it; :func:`validate_pyramid_geometry` rejects
 configurations that break it — per-chunk windows would otherwise
 truncate at interior chunk boundaries and silently diverge from the
-global windowed mean).
-
-:func:`downsample_chunks` is the same step over a chunk table
-(``CHUNK_SCHEMA``): a ``mapInPandas`` map with no shuffle, which the
-i03 pyramid-level query runs.
+global windowed mean).  The i03 pyramid-level query runs it in a
+``mapInPandas`` function (plans/imaging_queries.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
-from typing import TYPE_CHECKING
+from collections.abc import Sequence
 
 import numpy as np
-
-if TYPE_CHECKING:
-    import pandas as pd
-    from pyspark.sql import DataFrame
 
 
 def validate_pyramid_geometry(
@@ -88,44 +80,3 @@ def windowed_mean(arr: np.ndarray, factors: tuple[int, ...]) -> np.ndarray:
         acc[region] += piece
         cnt[region] += 1
     return (acc / cnt).astype(arr.dtype)
-
-
-def downsample_chunks(chunks: DataFrame, factors: tuple[int, int, int]) -> DataFrame:
-    """One pyramid step over the chunk table — mapInPandas, no shuffle.
-    pandas and the chunk schema are imported here, not at module level:
-    the band tasks import this module for :func:`windowed_mean` only."""
-    import pandas as pd
-
-    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        CHUNK_SCHEMA,
-    )
-
-    fz, fy, fx = factors
-
-    def _reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.data, dtype=np.dtype(r.dtype)).reshape(
-                    r.dz, r.dy, r.dx
-                )
-                red = windowed_mean(arr, (fz, fy, fx))
-                rows.append(
-                    (
-                        r.channel,
-                        r.stack,
-                        r.t,
-                        r.c,
-                        r.cz,
-                        r.cy,
-                        r.cx,
-                        red.shape[0],
-                        red.shape[1],
-                        red.shape[2],
-                        r.dtype,
-                        red.tobytes(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[c.split()[0] for c in CHUNK_SCHEMA.split(", ")])
-
-    return chunks.mapInPandas(_reduce, schema=CHUNK_SCHEMA)

@@ -9,8 +9,10 @@ driver share:
   streaming writer's staging) — embarrassingly parallel, no
   coordination, idempotent (re-run overwrites);
 - the driver writes all JSON metadata (.zgroup/.zattrs/.zarray) ONCE,
-  after every chunk has landed (metadata-last, ``_write_all_metadata``,
-  planned up front by ``plan_store_layout``), which removes
+  after every chunk has landed (metadata-last, ``_write_all_metadata``),
+  from the per-level extents and chunk dims ``plan_store_layout``
+  planned up front — the one layout decision every writer shares —
+  which removes
   the reference's create-race handling (`safe_create_zarr_group`,
   `compress/png_to_zarr.py:503-530`) and leaves a failed job with no
   store that parses as complete;
@@ -254,50 +256,39 @@ def _write_json(path: str, obj: Any) -> None:
 
 
 def _write_all_metadata(
-    geo,
-    output_root: str,
+    plan: dict[tuple[str, str], dict[str, Any]],
     voxel_size_zyx: list[float],
     scale_factor_zyx: list[int],
-    chunk_zyx: list[int],
-    n_lvls: int,
     compressor_name: str,
     compressor_kwargs: dict[str, Any] | None,
     extra_attrs: dict[str, Any] | None = None,
 ) -> None:
     """Driver-side metadata writer shared by the fused ingest
-    (imaging/fused.py) and the streaming writer: per stack, the group
-    .zgroup/.zattrs and every level's .zarray, including the geometry
-    guard.  ``geo`` rows carry channel/stack, full extents z/y/x,
-    dtype, and origin-chunk dims cdz/cdy/cdx — ONE implementation so
-    the write paths can never disagree on metadata.  Each stack's
-    compressor and filters come from ``_make_codec`` at its dtype.
-    ``extra_attrs`` entries land inside the stack's single ``.zattrs``
-    write (the streaming writer's epoch marker must be atomic with
-    store creation — see append_slab_transaction)."""
-    fz, fy, fx = scale_factor_zyx
-    groups, chunk_ladder = plan_store_layout(
-        geo, output_root, scale_factor_zyx, n_lvls
-    )
-    for r, group in zip(geo, groups):
-        channel, stack = r["channel"], r["stack"]
-        shape_5d = (1, 1, int(r["z"]), int(r["y"]), int(r["x"]))
-        transforms, _ = compute_scale_ladder(
-            voxel_size_zyx, scale_factor_zyx, n_lvls, shape_5d, chunk_zyx
+    (imaging/fused.py) and the streaming writer: per stack of a
+    :func:`plan_store_layout` plan, the channel and group .zgroup, the
+    group .zattrs and every level's .zarray at the plan's extent and
+    chunk dims — ONE implementation so the write paths can never
+    disagree on metadata.  Each stack's compressor and filters come
+    from ``_make_codec`` at its dtype.  ``extra_attrs`` entries land
+    inside the stack's single ``.zattrs`` write (the streaming writer's
+    epoch marker must be atomic with store creation — see
+    append_slab_transaction)."""
+    for (channel, stack), entry in plan.items():
+        group, dtype, levels = entry["group"], entry["dtype"], entry["levels"]
+        shape_5d = (1, 1, *levels[0][0])
+        transforms = compute_scale_ladder(
+            voxel_size_zyx, scale_factor_zyx, len(levels)
         )
-        _write_json(
-            os.path.join(output_root, channel, ".zgroup"), {"zarr_format": 2}
-        )
-        _write_json(os.path.join(group, ".zgroup"), {"zarr_format": 2})
+        # the channel group (the stack group's parent), then the stack's
+        for g in (os.path.dirname(group), group):
+            _write_json(os.path.join(g, ".zgroup"), {"zarr_format": 2})
         attrs = {
             "multiscales": [
                 {
                     "axes": axes_5d(),
                     "datasets": [
-                        {
-                            "path": str(i),
-                            "coordinateTransformations": transforms[i],
-                        }
-                        for i in range(n_lvls)
+                        {"path": str(i), "coordinateTransformations": t}
+                        for i, t in enumerate(transforms)
                     ],
                     "name": f"/{stack}.ome.zarr",
                     "version": "0.4",
@@ -305,27 +296,22 @@ def _write_all_metadata(
                 }
             ],
             "omero": build_omero(
-                channel,
-                shape_5d,
-                np.dtype(r["dtype"]),
-                image_name=f"{stack}.ome.zarr",
+                channel, shape_5d, np.dtype(dtype), image_name=f"{stack}.ome.zarr"
             ),
         }
         if extra_attrs:
             attrs.update(extra_attrs)
-        shape = list(shape_5d)
-        ladder = chunk_ladder[(channel, stack)]
         codec, _ = _make_codec(
-            compressor_name, compressor_kwargs, np.dtype(r["dtype"]).itemsize
+            compressor_name, compressor_kwargs, np.dtype(dtype).itemsize
         )
-        for lvl in range(n_lvls):
+        for lvl, (extent, dims) in enumerate(levels):
             _write_json(
                 os.path.join(group, str(lvl), ".zarray"),
                 {
                     "zarr_format": 2,
-                    "shape": shape,
-                    "chunks": [1, 1, *ladder[lvl]],
-                    "dtype": _ZARR_DTYPES[r["dtype"]],
+                    "shape": [1, 1, *extent],
+                    "chunks": [1, 1, *dims],
+                    "dtype": _ZARR_DTYPES[dtype],
                     "compressor": codec["compressor"],
                     "fill_value": 0,
                     "filters": codec["filters"],
@@ -333,7 +319,6 @@ def _write_all_metadata(
                     "dimension_separator": "/",
                 },
             )
-            shape = [1, 1, -(-shape[2] // fz), -(-shape[3] // fy), -(-shape[4] // fx)]
         # .zattrs LAST: it is what makes the group parse as a store, so
         # nothing can observe a stack whose levels are missing — and the
         # streaming writer's epoch marker inside it becomes atomic with
@@ -345,22 +330,29 @@ def _write_all_metadata(
 def plan_store_layout(
     geo,
     output_root: str,
+    chunk_zyx: list[int],
     scale_factor_zyx: list[int],
     n_lvls: int,
-) -> tuple[list[str], dict[tuple[str, str], list[tuple[int, int, int]]]]:
-    """PURE layout planner: (group paths, per-stack chunk-dims ladder)
-    plus the geometry guard, with NO writes — so a writer can validate
-    and plan BEFORE its data job and write metadata AFTER it
-    (metadata-last; the fused ingest does exactly this).  The guard:
-    per-chunk downsampling is exact only when a retained level's chunk
-    dims are divisible by the factor OR the chunk spans the whole
-    extent on that axis (then the truncated window IS the array edge)
-    — refuse loudly instead of planning levels that diverge from the
-    global windowed mean (see pyramid.validate_pyramid_geometry).  A
-    dtype the store cannot declare is refused here too."""
-    fz, fy, fx = scale_factor_zyx
-    groups: list[str] = []
-    chunk_ladder: dict[tuple[str, str], list[tuple[int, int, int]]] = {}
+) -> dict[tuple[str, str], dict[str, Any]]:
+    """PURE layout planner, the one place a store's level layout is
+    decided, with NO writes — so a writer can validate and plan BEFORE
+    its data job and write metadata AFTER it (metadata-last; the fused
+    ingest does exactly this).  ``geo`` rows carry channel, stack, the
+    full extents z/y/x and dtype.  Per (channel, stack) the plan holds
+    ``{"group": path, "dtype": ..., "levels": [(extent, dims), ...]}``
+    with zyx tuples: level 0's chunk dims are ``chunk_zyx`` clamped to
+    the extent, and each level's extent and chunk dims are the level
+    above's ceil-divided by the factor, so the chunk GRID is the same
+    at every level.
+
+    The guard: per-chunk downsampling is exact only when a retained
+    level's chunk dims are divisible by the factor OR the chunk spans
+    the whole extent on that axis (then the truncated window IS the
+    array edge) — refuse loudly instead of planning levels that diverge
+    from the global windowed mean (see
+    pyramid.validate_pyramid_geometry).  A dtype the store cannot
+    declare is refused here too."""
+    plan: dict[tuple[str, str], dict[str, Any]] = {}
     for r in geo:
         channel, stack = r["channel"], r["stack"]
         if r["dtype"] not in _ZARR_DTYPES:
@@ -368,27 +360,28 @@ def plan_store_layout(
                 f"zarr sink: unsupported dtype {r['dtype']} in "
                 f"{channel}/{stack}"
             )
-        groups.append(stack_group(output_root, channel, stack))
-        shape = [1, 1, int(r["z"]), int(r["y"]), int(r["x"])]
-        dims = (int(r["cdz"]), int(r["cdy"]), int(r["cdx"]))
-        ladder = []
+        extent = (int(r["z"]), int(r["y"]), int(r["x"]))
+        dims = tuple(map(min, chunk_zyx, extent))
+        levels = []
         for lvl in range(n_lvls):
-            if lvl < n_lvls - 1:
-                for ax, (d, f) in enumerate(zip(dims, (fz, fy, fx))):
-                    if d % f != 0 and d != shape[2 + ax]:
-                        raise ValueError(
-                            f"zarr sink: level-{lvl} chunk dim {d} on axis "
-                            f"{'zyx'[ax]} of {channel}/{stack} is neither "
-                            f"divisible by factor {f} nor the full extent "
-                            f"{shape[2 + ax]} — per-chunk pyramid would "
-                            f"diverge from the global windowed mean"
-                        )
-            ladder.append(dims)
-            shape = [1, 1, -(-shape[2] // fz), -(-shape[3] // fy), -(-shape[4] // fx)]
-            dims = (-(-dims[0] // fz), -(-dims[1] // fy), -(-dims[2] // fx))
-        chunk_ladder[(channel, stack)] = ladder
-
-    return groups, chunk_ladder
+            for ax, (d, f, e) in enumerate(zip(dims, scale_factor_zyx, extent)):
+                if lvl < n_lvls - 1 and d % f != 0 and d != e:
+                    raise ValueError(
+                        f"zarr sink: level-{lvl} chunk dim {d} on axis "
+                        f"{'zyx'[ax]} of {channel}/{stack} is neither "
+                        f"divisible by factor {f} nor the full extent "
+                        f"{e} — per-chunk pyramid would diverge from "
+                        f"the global windowed mean"
+                    )
+            levels.append((extent, dims))
+            extent = tuple(-(-e // f) for e, f in zip(extent, scale_factor_zyx))
+            dims = tuple(-(-d // f) for d, f in zip(dims, scale_factor_zyx))
+        plan[(channel, stack)] = {
+            "group": stack_group(output_root, channel, stack),
+            "dtype": r["dtype"],
+            "levels": levels,
+        }
+    return plan
 
 
 def read_zarr_level(group: str, level: int) -> np.ndarray:

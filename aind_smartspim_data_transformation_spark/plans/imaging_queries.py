@@ -1,8 +1,9 @@
 """Relational twin of the flagship imaging aggregation (SURVEY.md A1).
 
-The windowed-mean pyramid runs in production as a shuffle-free
-``mapInPandas`` kernel (imaging/pyramid.py).  To hook the SAME
-semantics into the driver's DuckDB correctness gate — which only sees
+The windowed-mean pyramid runs in production inside the imaging
+writers' tasks (imaging/pyramid.py::windowed_mean, applied per chunk
+by imaging/fused.py::write_slab).  To hook the SAME semantics into the
+driver's DuckDB correctness gate — which only sees
 the parquet tables — this module expresses one pyramid level as pure
 relational algebra over a deterministic synthetic voxel grid:
 
@@ -96,10 +97,11 @@ ORDER BY wavelength
 
 # ---------------------------------------------------------------------------
 # I3 — the REAL pyramid kernel under benchmark load: a deterministic
-# synthetic chunk table (4×4×4 grid of 64³ uint16 chunks ≈ 32 MiB)
-# generated executor-side, pushed through one mapInPandas windowed-mean
-# level, reduced to per-chunk checksums.  No files touched — chunk
-# payloads are a CLOSED FORM of the global voxel coordinate,
+# synthetic 4×4×4 grid of 64³ uint16 chunks (≈ 32 MiB), each one
+# generated, reduced one windowed-mean level and checksummed by ONE
+# mapInPandas function, so no chunk bytes cross to the JVM.  No files
+# touched — chunk payloads are a CLOSED FORM of the global voxel
+# coordinate,
 # v(gz,gy,gx) = (gz·131 + gy·17 + gx·7) % 4096 (i01's formula at i03's
 # geometry), so since round 5 the driver's DuckDB gate replays the
 # whole pipeline — generation, per-chunk 2×2×2 windowed mean with
@@ -120,10 +122,7 @@ def i03_pyramid_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-        downsample_chunks,
-    )
-    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        CHUNK_SCHEMA,
+        windowed_mean,
     )
 
     coords = (
@@ -136,40 +135,26 @@ def i03_pyramid_level(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(N_GRID**2)  # spread chunk generation over the cores
     )
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split()[0] for c in CHUNK_SCHEMA.split(", ")]
+    def _level(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
+            out = []
             for r in pdf.itertuples(index=False):
                 gz = (r.cz * CHUNK + np.arange(CHUNK, dtype=np.int64))[:, None, None]
                 gy = (r.cy * CHUNK + np.arange(CHUNK, dtype=np.int64))[None, :, None]
                 gx = (r.cx * CHUNK + np.arange(CHUNK, dtype=np.int64))[None, None, :]
                 arr = ((gz * 131 + gy * 17 + gx * 7) % 4096).astype(np.uint16)
-                rows.append(
-                    ("synthetic", "bench", 0, 0, r.cz, r.cy, r.cx,
-                     CHUNK, CHUNK, CHUNK, "uint16", arr.tobytes())
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    chunks = coords.mapInPandas(_gen, schema=CHUNK_SCHEMA)
-    lvl1 = downsample_chunks(chunks, (2, 2, 2))
-
-    def _checksum(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.data, dtype=np.dtype(r.dtype))
-                s = int(arr.sum())
+                red = windowed_mean(arr, (2, 2, 2))
+                s = int(red.sum())
                 # ONE division of exact integers (not np.mean's
                 # pairwise accumulation) — bit-identical to the
                 # oracle's sum/count
-                out.append((r.cz, r.cy, r.cx, s / arr.size, s))
+                out.append((r.cz, r.cy, r.cx, s / red.size, s))
             yield pd.DataFrame(
                 out, columns=["cz", "cy", "cx", "mean_v", "sum_v"]
             )
 
-    return lvl1.mapInPandas(
-        _checksum, schema="cz int, cy int, cx int, mean_v double, sum_v long"
+    return coords.mapInPandas(
+        _level, schema="cz int, cy int, cx int, mean_v double, sum_v long"
     ).orderBy("cz", "cy", "cx")
 
 
@@ -199,11 +184,16 @@ FROM ds GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
 # level i: voxel scale ×f^i (exact: power-of-two scaling only shifts
 # the exponent), extent = ceil(extent0 / f^i) — valid closed form
 # because ceil-div composes: ceil(ceil(n/a)/b) == ceil(n/(ab)) for
-# positive integers — and stored chunk dims clamp to the extent.
+# positive integers — and cz/cy/cx are the reference's chunk dims,
+# the requested chunk clamped to each level's extent.  The sink does
+# not write those: its planner (imaging/zarr_sink.plan_store_layout)
+# clamps only level 0 and divides the chunk dims by the factor at each
+# level after it (at this geometry (64,128,128) (32,64,64) (16,32,32)
+# (8,16,16)); the reference's layout is ROADMAP direction 2's target.
 # Pure integer/exact-float arithmetic end to end, so the DuckDB twin
-# matches bit-for-bit; `functions/imaging_meta.compute_scale_ladder`
-# (the metadata the sink writes) is golden-tested against the same
-# numbers in tests/test_imaging_queries.py.
+# matches bit-for-bit; the scale columns equal
+# `functions/imaging_meta.compute_scale_ladder` (the NGFF transforms
+# the sink writes), golden-tested in tests/test_imaging_queries.py.
 # ---------------------------------------------------------------------------
 LADDER_LEVELS = 4
 LADDER_VOX = (2.0, 1.8, 1.8)  # z, y, x µm (reference acquisition golden)

@@ -39,7 +39,8 @@ from aind_smartspim_data_transformation_spark.plans import relational
 # registry keys.  Later: d08 moved from its own label-propagation loop
 # onto the shared large-star/small-star components (d09's plan), so it
 # leads too; so do s09 and n07 (Lloyd assignment now calls the numpy
-# kernel shared with s11) and d03 (its observation option is gone).
+# kernel shared with s11), d03 (its observation option is gone) and
+# i03 (one mapInPandas now generates, reduces and checksums its chunks).
 _LEADING_R16 = [
     "s10_pq_adc",
     "s11_ivf_pq_search",
@@ -51,6 +52,7 @@ _LEADING_R16 = [
     "s09_kmeans_train",
     "n07_semantic_dedup",
     "d03_dedup_minhash_lsh",
+    "i03_pyramid_level",
 ]
 
 
@@ -82,8 +84,7 @@ def _modules():
         "aind_smartspim_data_transformation_spark.plans.imaging_queries",
         "aind_smartspim_data_transformation_spark.operators.dedup",
         # Module order no longer defines the sample window (the explicit
-        # _LEADING_R16 rotation above does); extras still merges last so
-        # its re-registrations of relational helpers win by key.
+        # _LEADING_R16 rotation above does).
         "aind_smartspim_data_transformation_spark.plans.extras",
     ]
     mods = []

@@ -44,8 +44,8 @@ _COMMON = {
     ),
     # Arrow for pandas UDF / toPandas — the only acceptable Python path.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Keep Arrow batches bounded so 128^3 uint16 blocks (~4 MiB) plus
-    # decode overhead fit comfortably in the Python worker.
+    # Keep Arrow batches bounded for the pandas-UDF paths (no imaging
+    # pixels ride Arrow: the imaging writers read slices by path).
     "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
     # Broadcast joins for dim tables (region/nation/customer/supplier
     # at test SF; on a cluster raise/lower by measurement).
@@ -53,47 +53,6 @@ _COMMON = {
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.ui.enabled": "false",
 }
-
-
-# Arrow batch rows for the imaging child session, whose one user is the
-# ``scan_stack_files`` binaryFile scan (the ingest routes read slices by
-# path, never as rows): a row is a whole slice file (2000×1600 uint16 ≈
-# 6.4 MB), so the relational 4096-row target would build multi-GB Arrow
-# batches.  32 × ~6.4 MB ≈ 200 MB per batch.
-IMAGING_ARROW_ROWS = "32"
-
-import weakref
-
-# Weak keys: a collected parent session must not pin its child (and a
-# recycled id() must not serve a stale child for a new parent).
-_imaging_sessions: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def imaging_session(spark: SparkSession) -> SparkSession:
-    """Child session (shared SparkContext, OWN SQLConf) for imaging
-    pipelines.
-
-    DataFrames remember the session that created them, so building the
-    imaging scan here pins megabyte-row Arrow batching to the imaging
-    lineage only — relational queries on the parent session keep their
-    4096-row batches.  This replaces the former session-wide
-    ``spark.conf.set`` in the scan builders, which silently degraded
-    every later pandas-UDF query in a shared session (ADVICE r2)."""
-    child = _imaging_sessions.get(spark)
-    if child is None:
-        child = spark.newSession()
-        child.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", IMAGING_ARROW_ROWS
-        )
-        # One slice file per scan partition (openCost ==
-        # maxPartitionBytes closes a partition after its first file)
-        # instead of the relational ~128 MB of files per partition.
-        child.conf.set("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        child.conf.set("spark.sql.files.openCostInBytes", str(32 * 1024 * 1024))
-        _imaging_sessions[spark] = child
-    return child
 
 
 def build_local_session(

@@ -76,8 +76,10 @@ def _stage_key(
 
 class SlabStage(WriterCommitMessage):
     """Per-task staging manifest: the staging root this task wrote under
-    and, per (channel, stack), the slab geometry + staged chunk index
-    lists per level.  Plain picklable payload."""
+    and, per (channel, stack), the wave's slice-key range and its
+    ``zarr_sink.plan_store_layout`` entry (per-level extents and chunk
+    dims, whose level-0 chunk grid is the staged one).  Plain
+    picklable payload."""
 
     def __init__(self, staging: str, stacks: dict):
         self.staging = staging
@@ -179,7 +181,7 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
             ChunkWriter,
             _fs_for,
             _make_codec,
-            stack_group,
+            plan_store_layout,
         )
 
         staging = f"{self.root}/.staging/{uuid.uuid4().hex}"
@@ -198,15 +200,19 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
             # writer's header gate refuses any slice that differs
             w, h, bits = probe_slice(paths[0])
             dt = "uint16" if bits == 16 else "uint8"
-            shape = (len(paths), h, w)
-            dims = tuple(map(min, self.chunk, shape))
+            geo = {"channel": channel, "stack": stack, "z": len(paths),
+                   "y": h, "x": w, "dtype": dt}
+            layout = plan_store_layout(
+                [geo], self.root, self.chunk, self.factors, self.n_levels
+            )[(channel, stack)]
+            ladder = [dims for _, dims in layout["levels"]]
             # An existing store fixes every level's chunk shape.  A short
-            # last wave clamps its dims below it, so its chunks are padded
-            # to the store's shape; a deeper wave keeps its own dims and
-            # the commit refuses its z grid.
-            _, group_base = _fs_for(stack_group(self.root, channel, stack))
-            store_dims = []
+            # last wave's planned dims are clamped below it, so its
+            # chunks are padded to the store's shape; a deeper wave keeps
+            # its own dims and the commit refuses its z grid.
+            _, group_base = _fs_for(layout["group"])
             try:
+                store_dims = []
                 for lvl in range(self.n_levels):
                     with fs.open_input_stream(
                         f"{group_base}/{lvl}/.zarray"
@@ -214,38 +220,20 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
                         store_dims.append(
                             _json.loads(f.read().decode())["chunks"][2:]
                         )
+                ladder = [tuple(map(max, d, sd)) for d, sd in zip(ladder, store_dims)]
             except FileNotFoundError:
-                store_dims = None
-            # per level: extent, chunk dims, staged pad dims; the chunk
-            # grid is the same at every level (see imaging/fused.py)
-            chunks = [
-                (cz, cy, cx)
-                for cz in range(-(-shape[0] // dims[0]))
-                for cy in range(-(-shape[1] // dims[1]))
-                for cx in range(-(-shape[2] // dims[2]))
-            ]
-            levels, ladder, lv_shape, lv_dims = [], [], shape, dims
-            for lvl in range(self.n_levels):
-                z, y, x = lv_shape
-                levels.append(
-                    {"z": z, "y": y, "x": x, "dims": list(lv_dims), "chunks": chunks}
-                )
-                ladder.append(
-                    lv_dims if store_dims is None
-                    else tuple(map(max, lv_dims, store_dims[lvl]))
-                )
-                lv_shape = tuple(-(-d // f) for d, f in zip(lv_shape, factors))
-                lv_dims = tuple(-(-d // f) for d, f in zip(lv_dims, factors))
+                pass
             _, compress = _make_codec(
                 self.compressor, self.compressor_kwargs, np.dtype(dt).itemsize
             )
             cw = ChunkWriter(fs, compress)
             # one slab-writer call per z-chunk of the wave, full-plane
             # window, staged at slab-local cz (see _stage_key)
-            for cz in range(-(-shape[0] // dims[0])):
+            dz, dy, dx = layout["levels"][0][1]
+            for cz in range(-(-len(paths) // dz)):
                 write_slab(
-                    paths[cz * dims[0] : (cz + 1) * dims[0]],
-                    [(0, 0, h)], (0, 0, w), (h, w, dt), dims[1:], factors,
+                    paths[cz * dz : (cz + 1) * dz],
+                    [(0, 0, h)], (0, 0, w), (h, w, dt), (dy, dx), factors,
                     ladder,
                     lambda lvl, cy, cx, cz=cz: _stage_key(
                         base, channel, stack, lvl, cz, cy, cx
@@ -253,19 +241,20 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
                     cw,
                 )
             stacks[(channel, stack)] = {
-                "dtype": dt, "min_key": rows[0][0], "max_key": rows[-1][0],
-                "levels": levels,
+                "min_key": rows[0][0], "max_key": rows[-1][0], "layout": layout,
             }
         return SlabStage(staging, stacks)
 
     # -- driver side -------------------------------------------------------
     def _promote(self, fs, stage_base: str, group_base: str,
-                 channel: str, stack: str, info: dict, lvl: int, off: int):
+                 channel: str, stack: str, layout: dict, lvl: int, off: int):
         """Move level ``lvl``'s staged chunks to final keys shifted by
         ``off`` store z-chunks.  Tolerates an already-moved source (the
         roll-forward path re-invokes for uncommitted levels after a
         crash that lost the staging dir's earlier moves mid-level —
         the destination then already holds the byte-identical chunk)."""
+        import itertools
+
         from pyarrow import fs as pafs
 
         from aind_smartspim_data_transformation_spark.imaging.zarr_sink import (
@@ -274,7 +263,11 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
         )
 
         cw = ChunkWriter(fs)
-        for cz, cy, cx in info["levels"][lvl]["chunks"]:
+        # the write tasks staged every level at level 0's chunk grid,
+        # which the plan keeps at every level
+        extent, dims = layout["levels"][0]
+        grid = (range(-(-e // d)) for e, d in zip(extent, dims))
+        for cz, cy, cx in itertools.product(*grid):
             src = _stage_key(stage_base, channel, stack, lvl, cz, cy, cx)
             dst = chunk_key(group_base, lvl, cz + off, cy, cx)
             cw.make_parent(dst)
@@ -304,7 +297,6 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
             _make_codec,
             _write_all_metadata,
             append_slab_transaction,
-            stack_group,
         )
 
         fs, root_base = _fs_for(self.root)
@@ -327,91 +319,59 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
                 per_stack[key] = (m.staging, info)
 
         def _commit_stack(channel, stack, staging, info):
-                _, stage_base = _fs_for(staging)
-                group = stack_group(self.root, channel, stack)
-                _, group_base = _fs_for(group)
-                geo = [
-                    ((lv["z"], lv["y"], lv["x"]), info["dtype"])
-                    for lv in info["levels"]
-                ]
-                chunk_info = [
-                    (lv["dims"][0], -(-lv["z"] // lv["dims"][0]))
-                    for lv in info["levels"]
-                ]
-                attrs_path = f"{group_base}/.zattrs"
-                exists = (
-                    fs.get_file_info(attrs_path).type != pafs.FileType.NotFound
+            _, stage_base = _fs_for(staging)
+            layout = info["layout"]
+            group = layout["group"]
+            _, group_base = _fs_for(group)
+            attrs_path = f"{group_base}/.zattrs"
+            if fs.get_file_info(attrs_path).type == pafs.FileType.NotFound:
+                # CREATE: chunks first, then .zarray levels, then
+                # .zattrs LAST with the epoch marker inside it —
+                # nothing can observe a created-but-unmarked store
+                for lvl in range(len(layout["levels"])):
+                    self._promote(
+                        fs, stage_base, group_base, channel, stack, layout, lvl, 0
+                    )
+                _write_all_metadata(
+                    {(channel, stack): layout},
+                    self.voxel,
+                    self.factors,
+                    self.compressor,
+                    self.compressor_kwargs,
+                    extra_attrs={"smartspim_stream_last_batch": batchId},
                 )
-                if exists:
-                    with fs.open_input_stream(attrs_path) as f:
-                        attrs = _json.loads(f.read().decode())
-                    if attrs.get("smartspim_stream_last_batch") == batchId:
-                        return  # epoch replay: already committed
-                    with fs.open_input_stream(
-                        f"{group_base}/0/.zarray"
-                    ) as f:
-                        zarray = _json.loads(f.read().decode())
-                    disk_codec = {
-                        k: zarray.get(k) for k in ("compressor", "filters")
-                    }
-                    codec_meta, _ = _make_codec(
-                        self.compressor, self.compressor_kwargs,
-                        np.dtype(info["dtype"]).itemsize,
-                    )
-                    if disk_codec != codec_meta:
-                        raise ValueError(
-                            f"{channel}/{stack}: stream codec {codec_meta} "
-                            f"!= store codec {disk_codec} — staged chunks "
-                            f"would be byte-incompatible"
-                        )
-                    # the epoch marker rides the SAME .zattrs write that
-                    # drops the fence — the append's commit point — so a
-                    # crash can never separate "appended" from "marked"
-                    # (a separate stamp left a window where a replay
-                    # double-appended the slab)
-                    append_slab_transaction(
-                        group,
-                        geo,
-                        chunk_info,
-                        lambda lvl, off, meta, sb=stage_base, gb=group_base,
-                        ch=channel, st=stack, inf=info: self._promote(
-                            fs, sb, gb, ch, st, inf, lvl, off
-                        ),
-                        extra_attrs={"smartspim_stream_last_batch": batchId},
-                    )
-                else:
-                    # CREATE: chunks first, then .zarray levels, then
-                    # .zattrs LAST with the epoch marker inside it —
-                    # nothing can observe a created-but-unmarked store
-                    for lvl in range(len(info["levels"])):
-                        self._promote(
-                            fs, stage_base, group_base, channel, stack,
-                            info, lvl, 0,
-                        )
-                    lv0 = info["levels"][0]
-                    _write_all_metadata(
-                        [
-                            {
-                                "channel": channel,
-                                "stack": stack,
-                                "z": lv0["z"],
-                                "y": lv0["y"],
-                                "x": lv0["x"],
-                                "dtype": info["dtype"],
-                                "cdz": lv0["dims"][0],
-                                "cdy": lv0["dims"][1],
-                                "cdx": lv0["dims"][2],
-                            }
-                        ],
-                        self.root,
-                        self.voxel,
-                        self.factors,
-                        self.chunk,
-                        self.n_levels,
-                        self.compressor,
-                        self.compressor_kwargs,
-                        extra_attrs={"smartspim_stream_last_batch": batchId},
-                    )
+                return
+            with fs.open_input_stream(attrs_path) as f:
+                attrs = _json.loads(f.read().decode())
+            if attrs.get("smartspim_stream_last_batch") == batchId:
+                return  # epoch replay: already committed
+            with fs.open_input_stream(f"{group_base}/0/.zarray") as f:
+                zarray = _json.loads(f.read().decode())
+            disk_codec = {k: zarray.get(k) for k in ("compressor", "filters")}
+            codec_meta, _ = _make_codec(
+                self.compressor, self.compressor_kwargs,
+                np.dtype(layout["dtype"]).itemsize,
+            )
+            if disk_codec != codec_meta:
+                raise ValueError(
+                    f"{channel}/{stack}: stream codec {codec_meta} "
+                    f"!= store codec {disk_codec} — staged chunks "
+                    f"would be byte-incompatible"
+                )
+            # the epoch marker rides the SAME .zattrs write that drops
+            # the fence — the append's commit point — so a crash can
+            # never separate "appended" from "marked" (a separate stamp
+            # left a window where a replay double-appended the slab)
+            append_slab_transaction(
+                group,
+                [(extent, layout["dtype"]) for extent, _ in layout["levels"]],
+                [(dims[0], -(-extent[0] // dims[0]))
+                 for extent, dims in layout["levels"]],
+                lambda lvl, off, meta: self._promote(
+                    fs, stage_base, group_base, channel, stack, layout, lvl, off
+                ),
+                extra_attrs={"smartspim_stream_last_batch": batchId},
+            )
 
         # Promote stacks CONCURRENTLY where latency dominates: each
         # stack's commit is an independent group (own fence, own

@@ -19,12 +19,6 @@ Re-expresses the reference's imaging ingest (SURVEY.md §2.1 S1-S4):
 - P1 extension whitelist (`smartspim_job.py:145-150`), enforced by
   :func:`list_stack_files`.
 
-``CHUNK_SCHEMA`` is the relational encoding of the 5-D canonical
-tensor (SURVEY.md §1.4): one row per chunk with coordinates
-``(t, c, cz, cy, cx)``, actual dims ``(dz, dy, dx)`` (t/c are size-1,
-the reference's pad-to-5D P4/P5), dtype, and C-order little-endian
-bytes.  ``pyramid.downsample_chunks`` and the i03 query run over it.
-
 Scale posture: the fused ingest plans from ONE listing held on the
 driver as path-sorted tuples (metadata only, ~10⁶ rows at acquisition
 scale); slice bytes are read only inside the band tasks.
@@ -87,25 +81,14 @@ _CHANNEL_RE = re.compile(r"SmartSPIM/([^/]+)/")
 _STACK_RE = re.compile(r"/([^/]+)/[^/]+\.[A-Za-z]+$")
 _SLICE_KEY_RE = re.compile(r"/(\d+)\.[A-Za-z]+$")
 
-CHUNK_SCHEMA = (
-    "channel string, stack string, t int, c int, cz int, cy int, cx int, "
-    "dz int, dy int, dx int, dtype string, data binary"
-)
-
 
 def scan_stack_files(spark: SparkSession, root: str) -> DataFrame:
-    """binaryFile scan of a SmartSPIM tree with path-derived columns.
-
-    Built on the imaging CHILD session (session.imaging_session): the
-    scan and anything downstream of it execute with imaging-sized Arrow
-    batches while the caller's session keeps its relational batch
-    config untouched.
-    """
-    from aind_smartspim_data_transformation_spark.session import imaging_session
-
+    """binaryFile scan of a SmartSPIM tree with path-derived columns,
+    on the caller's session.  No Arrow or pandas step reads it: the
+    ingest routes read slices by path, so the scan needs no session
+    settings of its own."""
     df = (
-        imaging_session(spark)
-        .read.format("binaryFile")
+        spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
         .load(root)
     )

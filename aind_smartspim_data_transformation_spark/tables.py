@@ -30,11 +30,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Small dimension tables that should broadcast in joins.  At larger SF
-# customer stops being broadcastable; region/nation always are.
-DIM_TABLES = ("region", "nation", "supplier")
-
-
 # Per-session memo of loaded tables, keyed by (path, (mtime_ns, size)).  This
 # caches the ANALYZED LAZY PLAN only — driver-side metadata (parquet
 # footer schema + file listing), the same class of thing Spark's own

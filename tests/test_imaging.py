@@ -270,35 +270,6 @@ def test_pyramid_import_leaves_pandas_unloaded():
     )
 
 
-def test_downsample_step_has_no_shuffle(spark):
-    """One pyramid level = mapInPandas over existing partitions — the
-    physical plan must contain no Exchange (SCALE.md §6)."""
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-        downsample_chunks,
-    )
-
-    arr = np.arange(4 * 8 * 8, dtype=np.uint16).reshape(4, 8, 8)
-    lvl1 = downsample_chunks(_chunk_table(spark, arr, (2, 4, 4)), (2, 2, 2))
-    plan = lvl1._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan.split("MapInPandas")[0]
-
-
-def test_multi_level_pyramid_has_no_shuffle(spark):
-    """Two chained pyramid steps over a chunk table — still zero
-    Exchange operators, one kernel per step."""
-    from aind_smartspim_data_transformation_spark.imaging.pyramid import (
-        downsample_chunks,
-    )
-
-    arr = np.arange(8 * 8 * 8, dtype=np.uint16).reshape(8, 8, 8)
-    lvl = _chunk_table(spark, arr, (4, 4, 4))
-    for _ in range(2):
-        lvl = downsample_chunks(lvl, (2, 2, 2))
-    plan = lvl._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert plan.count("MapInPandas") == 2
-
-
 def test_zarr_codec_none_roundtrip(spark, dataset, tmp_path):
     """compressor_name='none' stores raw bytes; reader follows the
     .zarray metadata (compressor: null) with no decode step."""
@@ -323,6 +294,7 @@ def _codec_store(tmp_path, name, vol, chunk):
         _make_codec,
         _write_all_metadata,
         chunk_key,
+        plan_store_layout,
         stack_group,
     )
 
@@ -339,10 +311,9 @@ def _codec_store(tmp_path, name, vol, chunk):
                 )
                 cw.write(key, block, chunk)
     geo = [{"channel": "Ex_445_Em_469", "stack": "s", "z": vol.shape[0],
-            "y": vol.shape[1], "x": vol.shape[2], "dtype": str(vol.dtype),
-            "cdz": chunk[0], "cdy": chunk[1], "cdx": chunk[2]}]
-    _write_all_metadata(geo, out, [1.0, 1.0, 1.0], [2, 2, 2], list(chunk), 1,
-                        name, None)
+            "y": vol.shape[1], "x": vol.shape[2], "dtype": str(vol.dtype)}]
+    plan = plan_store_layout(geo, out, list(chunk), [2, 2, 2], 1)
+    _write_all_metadata(plan, [1.0, 1.0, 1.0], [2, 2, 2], name, None)
     return group
 
 
@@ -456,34 +427,6 @@ def test_tiled_chunks_match_full_plane(spark, dataset, store, tmp_path):
 # per-chunk windowed means are exact only when retained-level chunk dims
 # divide by the factor; anything else must raise, never silently diverge.
 # ---------------------------------------------------------------------------
-def _chunk_table(spark, arr, chunk):
-    """Synthetic single-stack chunk table over a (Z,Y,X) numpy array."""
-    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
-        CHUNK_SCHEMA,
-    )
-
-    cz_n = -(-arr.shape[0] // chunk[0])
-    cy_n = -(-arr.shape[1] // chunk[1])
-    cx_n = -(-arr.shape[2] // chunk[2])
-    rows = []
-    for cz in range(cz_n):
-        for cy in range(cy_n):
-            for cx in range(cx_n):
-                tile = arr[
-                    cz * chunk[0] : (cz + 1) * chunk[0],
-                    cy * chunk[1] : (cy + 1) * chunk[1],
-                    cx * chunk[2] : (cx + 1) * chunk[2],
-                ]
-                rows.append(
-                    (
-                        "ch", "st", 0, 0, cz, cy, cx,
-                        tile.shape[0], tile.shape[1], tile.shape[2],
-                        str(arr.dtype), np.ascontiguousarray(tile).tobytes(),
-                    )
-                )
-    return spark.createDataFrame(rows, schema=CHUNK_SCHEMA)
-
-
 def test_validate_pyramid_geometry():
     from aind_smartspim_data_transformation_spark.imaging.pyramid import (
         validate_pyramid_geometry,
@@ -533,10 +476,11 @@ def test_zarr_sink_rejects_indivisible_chunks():
 
     geo = [
         {"channel": "ch", "stack": "st", "z": 20, "y": 6, "x": 6,
-         "dtype": "uint16", "cdz": 10, "cdy": 6, "cdx": 6}
+         "dtype": "uint16"}
     ]
     with pytest.raises(ValueError, match="neither divisible"):
-        plan_store_layout(geo, "/unused", [3, 3, 3], 2)  # 2 levels trigger it
+        # 2 levels trigger it
+        plan_store_layout(geo, "/unused", [10, 6, 6], [3, 3, 3], 2)
 
 
 def test_zarr_sink_failed_level_write_leaves_no_parsing_store(spark, tmp_path):
@@ -567,7 +511,7 @@ def test_imaging_does_not_clobber_arrow_batch_conf(spark, dataset):
     batches instead of the 4096 configured in session.py."""
     root, _ = dataset
     files = scan_stack_files(spark, str(root / "SmartSPIM"))
-    files.limit(2).collect()  # execute the imaging-session scan
+    files.limit(2).collect()  # execute the binaryFile scan
     assert (
         spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "4096"
     )

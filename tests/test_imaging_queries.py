@@ -31,7 +31,7 @@ def test_grid_query_matches_numpy_kernel(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # F3-F6 metadata goldens (COVERAGE.md §2.8) — reference semantics:
-# cumulative scale ladder, chunk clamping, dtype-theoretic display
+# cumulative scale ladder, dtype-theoretic display
 # window, defaultZ = Z//2.
 # ---------------------------------------------------------------------------
 def test_scale_ladder_golden():
@@ -39,17 +39,13 @@ def test_scale_ladder_golden():
         compute_scale_ladder,
     )
 
-    transforms, chunks = compute_scale_ladder(
+    transforms = compute_scale_ladder(
         voxel_zyx=[2.0, 1.8, 1.8],
         scale_factor_zyx=[2, 2, 2],
         n_levels=3,
-        shape_5d=(1, 1, 64, 1600, 2000),
-        chunk_zyx=[128, 128, 128],
     )
     assert transforms[0][0]["scale"] == [1.0, 1.0, 2.0, 1.8, 1.8]
     assert transforms[2][0]["scale"] == [1.0, 1.0, 8.0, 7.2, 7.2]
-    assert chunks[0] == (1, 1, 64, 128, 128)  # clamped to level-0 Z extent
-    assert chunks[2] == (1, 1, 16, 128, 128)  # level-2 Z extent 64/4
 
 
 def test_omero_metadata_golden():
@@ -113,27 +109,26 @@ def test_i03_pyramid_level_numpy_golden(spark, sf_dir):
 
 
 def test_i04_matches_compute_scale_ladder(spark, sf_dir):
-    """The i04 closed-form ladder equals the metadata builder the zarr
-    sink actually writes (functions/imaging_meta.compute_scale_ladder)."""
+    """The i04 closed-form scale ladder equals the NGFF transforms the
+    zarr sink writes (functions/imaging_meta.compute_scale_ladder).
+    i04's cz/cy/cx columns are the reference's per-level clamped chunk
+    layout, not the sink's (imaging/zarr_sink.plan_store_layout); the
+    DuckDB oracle pins them."""
     from aind_smartspim_data_transformation_spark.functions.imaging_meta import (
         compute_scale_ladder,
     )
 
-    transforms, chunks = compute_scale_ladder(
+    transforms = compute_scale_ladder(
         voxel_zyx=list(iq.LADDER_VOX),
         scale_factor_zyx=[2, 2, 2],
         n_levels=iq.LADDER_LEVELS,
-        shape_5d=(1, 1, *iq.LADDER_SHAPE),
-        chunk_zyx=[iq.LADDER_CHUNK] * 3,
     )
     rows = iq.i04_scale_ladder(spark, sf_dir).collect()
     assert len(rows) == iq.LADDER_LEVELS
     for r in rows:
-        lvl = r["lvl"]
-        assert transforms[lvl][0]["scale"] == [
+        assert transforms[r["lvl"]][0]["scale"] == [
             1.0, 1.0, r["scale_z"], r["scale_y"], r["scale_x"],
         ]
-        assert tuple(chunks[lvl]) == (1, 1, r["cz"], r["cy"], r["cx"])
 
 
 def test_i05_matches_production_band_plan(spark, sf_dir, monkeypatch):

@@ -295,3 +295,34 @@ def test_stream_refuses_taller_slice(spark, tmp_path):
     assert not staged.exists() or not any(
         p.is_file() for p in staged.rglob("*")
     )
+
+
+def test_one_wave_stream_store_equals_fused_store(spark, tmp_path):
+    """Both writers take their level layout from one planner: a
+    one-wave stream store of a multi-level stack equals the fused
+    ingest's store of the same tree file for file and byte for byte,
+    apart from the stream's epoch marker in ``.zattrs``."""
+    import json
+
+    from tests.imaging_fixtures import ingest, make_stack, tree_bytes
+
+    rng = np.random.default_rng(29)
+    vol = rng.integers(0, 65535, size=(8, 40, 50), dtype=np.uint16)
+    make_stack(tmp_path / "acq", vol)
+    ss.run_streaming_store_ingest(
+        spark, str(tmp_path / "acq" / "SmartSPIM"), str(tmp_path / "stream"),
+        str(tmp_path / "ckpt"), chunk_zyx=[4, 16, 16], n_levels=3,
+        voxel_size_zyx=[2.0, 1.8, 1.8],
+    )
+    ingest(spark, tmp_path / "acq", tmp_path / "fused", (4, 16, 16), 3)
+
+    streamed = tree_bytes(tmp_path / "stream")
+    fused = tree_bytes(tmp_path / "fused")
+    assert sorted(streamed) == sorted(fused)
+    for name, data in fused.items():
+        if name.endswith(".zattrs"):
+            attrs = json.loads(streamed[name])
+            assert attrs.pop("smartspim_stream_last_batch") == 0
+            assert attrs == json.loads(data), name
+        else:
+            assert streamed[name] == data, name
