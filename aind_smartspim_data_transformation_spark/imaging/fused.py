@@ -20,27 +20,22 @@ windowed mean (divisible-by-factor or full-extent per axis).  The
 tests check every level of the store against the numpy
 ``windowed_mean`` ladder of the decoded slices.
 
-Parallelism: slabs alone can under-fill a cluster (a 64-slice
-acquisition at chunk_z=128 is one slab per stack), so each slab is
-further split into Y-BANDS of whole chunk rows (band count ≈ 4×
-parallelism), executed FOLDED: task f processes bands f and
-n_bands−1−f.  One decode pass per slice serves both bands — a PNG
-must inflate up to the higher band's end anyway, so the lower band's
-rows are free, per-task decode cost (≈ max band end) is near-constant
-across folds instead of ramping with the band index, and slice-row
-duplication halves; TIFF folds decode each band window separately
-(strips are random-access, so the rows between the fold's bands are
-never read).  Fold count ≈ 2× parallelism keeps full occupancy with
-balanced tasks.
+Parallelism: a task decodes one contiguous Y-BAND of whole chunk rows
+(and one X-tile) of one slab.  A PNG band must inflate every row
+above it, so each extra band of a slab re-decodes rows: the plan
+makes ONE band per slab unless the slabs alone would leave cores idle
+(a 64-slice acquisition at chunk_z=128 is one slab per stack), and
+then ``ceil(parallelism / slabs)`` bands per slab.  TIFF strips are
+random-access, so a TIFF band reads only its own rows.
 
-Memory envelope: a task buffers its fold's two bands (``2 × min(cz, z)
-× band_rows × tile_width`` pixels) plus one decoded row span (``y ×
-x`` at most).  :func:`_band_plan` sizes the band buffers to what
+Memory envelope: a task buffers its band (``min(cz, z) × band_rows ×
+tile_width`` pixels) plus one decoded row span (``y × x`` at most).
+:func:`_band_plan` sizes the band buffer to what
 ``FUSED_MAX_TASK_BYTES`` leaves after the span: it first narrows bands
 to one chunk row, and when even a one-chunk-row band at full width
 does not fit, it also splits each band into X-TILES of whole chunk
-columns.  Every band group re-decodes its slices' rows, so the buffers
-never get less than 1/16 of a z-slab: fitting the envelope splits a
+columns.  Every band group re-decodes its slices' rows, so the buffer
+never gets less than 1/16 of a z-slab: fitting the envelope splits a
 slab into at most about 32 groups, and a plane too large for the
 envelope (8192² × 256 or 16384² × 8 uint16 at 128³ chunks) gets tasks
 above it rather than hundreds of re-decodes per slice.  The decoded
@@ -50,8 +45,8 @@ changes the plan or the route.
 Error handling (round 7): every slice passes a HEADER-ONLY geometry
 gate against the probed stack geometry before decoding (a taller slice
 decodes cleanly inside every band window, so only the header can see
-it — previously its bottom rows were silently dropped), band buffers
-are allocated from the probe, and each decoded window's shape/dtype is
+it — previously its bottom rows were silently dropped), the band buffer
+is allocated from the probe, and each decoded window's shape/dtype is
 re-checked before copying.  ``on_error="quarantine"`` gives dead-letter
 semantics with WHOLE-PLANE atomicity: quarantine mode decodes the full
 slice (strict end-to-end validation — PNG adler32 + exact length,
@@ -92,7 +87,7 @@ from aind_smartspim_data_transformation_spark.sources.stack_reader import (
 FUSED_MAX_TASK_BYTES = 256 << 20
 
 # Every band group re-reads and re-decodes its slices' rows, so the
-# band buffers' budget never drops below 1/_MAX_SLAB_SPLIT of a z-slab
+# band buffer's budget never drops below 1/_MAX_SLAB_SPLIT of a z-slab
 # (see _band_plan): fitting the envelope splits a slab into at most
 # about twice this many band groups.
 _MAX_SLAB_SPLIT = 16
@@ -224,7 +219,7 @@ def _read_progress_markers(
     output_root: str, store_fp: str, plan_fp: str
 ) -> dict[tuple[str, str, int, int], dict[str, Any]]:
     """Valid completion markers under ``<output_root>/.fused_progress``,
-    keyed by (channel, stack, slab, gi), the band group gi = fold·n_xt
+    keyed by (channel, stack, slab, gi), the band group gi = band·n_xt
     + x-tile.  A marker whose store fingerprint differs is a LOUD error
     (the target mixes layouts); a plan-only mismatch silently
     invalidates all markers (full redo is correct — chunk keys are
@@ -298,7 +293,7 @@ def probe_slice(path: str) -> tuple[int, int, int]:
 
 def write_slab(
     paths: list[str],
-    wins: list[tuple[int, int, int]],
+    win: tuple[int, int, int],
     cols: tuple[int, int, int],
     plane: tuple[int, int, str],
     chunk_yx: tuple[int, int],
@@ -311,7 +306,7 @@ def write_slab(
     """The one slab writer, called by the fused band tasks and the
     streaming writer: read, header-gate and decode the slices ``paths``
     (one z-chunk of one stack, in z order) into the ``(cy0, y0, y1)``
-    row windows ``wins`` and the ``(cx0, x0, x1)`` column span ``cols``
+    row window ``win`` and the ``(cx0, x0, x1)`` column span ``cols``
     (cy0/cx0: the first chunk row/column), then write every pyramid
     level of each ``chunk_yx`` chunk through the ``ChunkWriter`` ``cw``
     at ``key(lvl, cy, cx)``, padded to ``ladder[lvl]``.  ``plane`` is the
@@ -328,35 +323,15 @@ def write_slab(
     exp_dtype = np.dtype(dtype_name)
     exp_bits = exp_dtype.itemsize * 8
     cy_chunk, cx_chunk = chunk_yx
+    cy0, y0, y1 = win
     cx0, x0, x1 = cols
-    lo, hi = wins[0][1], wins[-1][2]
-
-    def _decode_windows(data):
-        if quarantine:
-            # whole-plane atomicity: decode (and validate) the full slice
-            full = decode_image_gray(data)
-            return [full[y0:y1, x0:x1] for (_, y0, y1) in wins]
-        # PNG inflates sequentially, so ONE pass to the higher window's
-        # end serves both windows (the lower one is free); TIFF strips
-        # are random-access, so per-window decodes skip the rows
-        # BETWEEN the windows too.
-        if len(wins) == 1 or data[:8] == _PNG_SIG:
-            span = decode_image_gray(data, row_stop=hi, row_start=lo)
-            return [span[y0 - lo : y1 - lo, x0:x1] for (_, y0, y1) in wins]
-        return [
-            decode_image_gray(data, row_stop=y1, row_start=y0)[:, x0:x1]
-            for (_, y0, y1) in wins
-        ]
 
     t_loop = time.perf_counter()
     read_s = 0.0
     # zeros, not empty: a quarantined slice's rows must come out
     # zero-filled AT POSITION (memset cost is noise next to the
     # decode+compress kernels this task runs)
-    bufs = [
-        np.zeros((len(paths), y1 - y0, x1 - x0), dtype=exp_dtype)
-        for (_, y0, y1) in wins
-    ]
+    buf = np.zeros((len(paths), y1 - y0, x1 - x0), dtype=exp_dtype)
     dead: list[tuple[int, str]] = []
     for i, path in enumerate(paths):
         try:
@@ -372,41 +347,42 @@ def write_slab(
                     f"{hp}x{wp}/{bits}bit != probed "
                     f"{height}x{width}/{exp_bits}bit"
                 )
-            parts = _decode_windows(data)
-            for p, (_, y0, y1) in zip(parts, wins):
-                if p.shape != (y1 - y0, x1 - x0) or p.dtype != exp_dtype:
-                    raise ValueError(
-                        f"slice geometry mismatch in {path}: decoded "
-                        f"window {p.shape} {p.dtype} != probed "
-                        f"{(y1 - y0, x1 - x0)} {exp_dtype}"
-                    )
+            if quarantine:
+                # whole-plane atomicity: decode (and validate) the full slice
+                part = decode_image_gray(data)[y0:y1, x0:x1]
+            else:
+                part = decode_image_gray(data, row_stop=y1, row_start=y0)
+                part = part[:, x0:x1]
+            if part.shape != (y1 - y0, x1 - x0) or part.dtype != exp_dtype:
+                raise ValueError(
+                    f"slice geometry mismatch in {path}: decoded "
+                    f"window {part.shape} {part.dtype} != probed "
+                    f"{(y1 - y0, x1 - x0)} {exp_dtype}"
+                )
         except Exception as exc:  # noqa: BLE001 — dead-letter boundary
             if not quarantine:
                 raise
             dead.append((i, f"{path}: {type(exc).__name__}: {exc}"))
             continue  # window rows stay zero-filled
-        for buf, p in zip(bufs, parts):
-            buf[i] = p
+        buf[i] = part
     decode_s = time.perf_counter() - t_loop - read_s
     pyramid_s = 0.0
     n_chunks = 0
     raw_bytes = 0
-    for buf, (cy0, _y0, _y1) in zip(bufs, wins):
-        _, bh, bw = buf.shape
-        for cyy in range(-(-bh // cy_chunk)):
-            ys = slice(cyy * cy_chunk, (cyy + 1) * cy_chunk)
-            for cx in range(-(-bw // cx_chunk)):
-                arr = buf[:, ys, cx * cx_chunk : (cx + 1) * cx_chunk]
-                n_chunks += 1
-                raw_bytes += arr.nbytes
-                for lvl, dims in enumerate(ladder):
-                    cw.write(key(lvl, cy0 + cyy, cx0 + cx), arr, dims)
-                    if lvl < len(ladder) - 1:
-                        # downsample the UNPADDED data: zero padding
-                        # before the mean would corrupt edge windows
-                        t0 = time.perf_counter()
-                        arr = windowed_mean(arr, factors)
-                        pyramid_s += time.perf_counter() - t0
+    for cyy in range(-(-(y1 - y0) // cy_chunk)):
+        ys = slice(cyy * cy_chunk, (cyy + 1) * cy_chunk)
+        for cx in range(-(-(x1 - x0) // cx_chunk)):
+            arr = buf[:, ys, cx * cx_chunk : (cx + 1) * cx_chunk]
+            n_chunks += 1
+            raw_bytes += arr.nbytes
+            for lvl, dims in enumerate(ladder):
+                cw.write(key(lvl, cy0 + cyy, cx0 + cx), arr, dims)
+                if lvl < len(ladder) - 1:
+                    # downsample the UNPADDED data: zero padding
+                    # before the mean would corrupt edge windows
+                    t0 = time.perf_counter()
+                    arr = windowed_mean(arr, factors)
+                    pyramid_s += time.perf_counter() - t0
     return n_chunks, raw_bytes, dead, read_s, decode_s, pyramid_s
 
 
@@ -494,46 +470,46 @@ def _band_plan(
     parallelism: int,
 ) -> dict[tuple[str, str], tuple[int, int, int, int]]:
     """Per stack: (n_bands, cy_chunks_per_band, n_xt, cx_chunks_per_xt)
-    — the y chunk rows split into bands (never more bands than chunk
-    rows; at least 1), and each band split into X-tiles of whole chunk
-    columns.
+    — the y chunk rows split into contiguous bands (never more bands
+    than chunk rows; at least 1), and each band split into X-tiles of
+    whole chunk columns.  Band group ``band·n_xt + x-tile`` of a slab
+    is one task.
 
-    Bands are executed FOLDED — task (fold f) processes bands f and
-    n_bands−1−f (see :func:`run_fused_ingest`) — so the band count
-    targets ≈ 4× parallelism to leave ≈ 2× parallelism tasks after
-    pairing.
+    A PNG band inflates every row above its end, so a slab split into
+    bands of ends ``e_b`` costs ``Σ e_b / y`` plane decodes per slice.
+    The band target is therefore ``ceil(parallelism / slabs)`` per
+    slab: one band per slab wherever the slabs fill the cores, and only
+    as many more as keep them busy otherwise.
 
     The plan is capped by the per-task memory envelope
-    ``FUSED_MAX_TASK_BYTES`` (read at call time): a folded task
-    buffers TWO bands of ``min(cz, z) × per_band·cy_chunk × tile_x``
-    pixels plus one decoded row span (``y × x``, the term no split
-    removes).  The band buffers get the envelope less that span, but
-    never less than ``1/_MAX_SLAB_SPLIT`` of a slab (``min(cz, z) × y
-    × x`` pixels).  Every band group re-decodes the rows ``[0, hi)``
-    of each slice in its slab — a PNG cannot skip rows, and quarantine
-    mode decodes whole planes — so a slab split into G groups costs
-    about 0.75·G plane decodes per slice.  Without the floor a
-    16384² × 8 stack, whose span alone exceeds 256 MiB, would split
-    into 8,192 groups per slab.  With it, each band or tile the budget narrows
-    buffers more than half the budget, so the envelope splits a slab
-    into at most about ``2 × _MAX_SLAB_SPLIT`` groups, and a task
-    holds at most ``max(cap, span + slab / _MAX_SLAB_SPLIT)``
-    (SCALE.md §6m, last follow-up).  First
+    ``FUSED_MAX_TASK_BYTES`` (read at call time): a task buffers ONE
+    band of ``min(cz, z) × per_band·cy_chunk × tile_x`` pixels plus one
+    decoded row span (``y × x``, the term no split removes).  The band
+    buffer gets the envelope less that span, but never less than
+    ``1/_MAX_SLAB_SPLIT`` of a slab (``min(cz, z) × y × x`` pixels):
+    every band group re-decodes rows of each slice in its slab — a
+    PNG cannot skip rows, and quarantine mode decodes whole planes —
+    and without the floor a 16384² × 8 stack, whose span alone exceeds
+    256 MiB, would split into 8,192 groups per slab.  With it, each
+    band or tile the budget narrows buffers more than half the budget,
+    so the envelope splits a slab into at most about ``2 ×
+    _MAX_SLAB_SPLIT`` groups, and a task holds at most ``max(cap, span
+    + slab / _MAX_SLAB_SPLIT)`` (SCALE.md §6m, last follow-up).  First
     ``per_band`` shrinks, never below one chunk row, until a
-    full-width band fits the budget — a deep acquisition (many
-    z-slabs → low band target → tall bands) would otherwise overshoot
-    the envelope (SCALE.md §6m).  When even a one-chunk-row band at
-    full width does not fit, the band is also split along X into
-    ``n_xt`` tiles of ``per_xt`` chunk columns, never fewer than one
-    column.  Otherwise ``n_xt = 1`` and ``per_xt`` is the whole
-    chunk-column count: the full width is compared against the budget
-    directly, because a width that is not a multiple of the chunk is
-    narrower than its whole chunk columns.  Band heights and tile
-    widths use whole chunks (per_band·cy_chunk, per_xt·cx_chunk) —
-    conservative by less than one chunk for the last band or tile."""
+    full-width band fits the budget — a deep acquisition would
+    otherwise overshoot the envelope (SCALE.md §6m).  When even a
+    one-chunk-row band at full width does not fit, the band is also
+    split along X into ``n_xt`` tiles of ``per_xt`` chunk columns,
+    never fewer than one column.  Otherwise ``n_xt = 1`` and
+    ``per_xt`` is the whole chunk-column count: the full width is
+    compared against the budget directly, because a width that is not
+    a multiple of the chunk is narrower than its whole chunk columns.
+    Band heights and tile widths use whole chunks (per_band·cy_chunk,
+    per_xt·cx_chunk) — conservative by less than one chunk for the
+    last band or tile."""
     cz, cy_chunk, cx_chunk = chunk_zyx
     slabs = sum(-(-g["z"] // cz) for g in geo)
-    want = max(1, (4 * parallelism) // max(slabs, 1))
+    want = -(-parallelism // max(slabs, 1))
     plan = {}
     for g in geo:
         n_cy = -(-g["y"] // cy_chunk)
@@ -543,10 +519,10 @@ def _band_plan(
         item = np.dtype(g["dtype"]).itemsize
         span = g["y"] * g["x"] * item
         zz = min(cz, g["z"])
-        # the band buffers' budget (see the docstring)
+        # the band buffer's budget (see the docstring)
         free = max(FUSED_MAX_TASK_BYTES - span, zz * span // _MAX_SLAB_SPLIT)
-        # one chunk row of one band pair, per pixel column
-        row = 2 * zz * cy_chunk * item
+        # one chunk row of the band, per pixel column
+        row = zz * cy_chunk * item
         per_band = min(per_band, max(1, free // (row * g["x"])))
         n_bands = -(-n_cy // per_band)  # drop empty trailing bands
         if per_band * row * g["x"] <= free:
@@ -667,9 +643,9 @@ def run_fused_ingest(
     ``on_error="quarantine"`` the metrics dict also carries
     ``"dead_letters"``: one {channel, stack, z, error} dict per corrupt
     slice, sorted by (channel, stack, z) — a slice decoded by several
-    folds (or also saved in a resumed band's marker) keeps its smallest
-    error string, so reruns report identical rows — and the store holds
-    ZERO planes at the quarantined z positions (asserted in
+    bands or tiles (or also saved in a resumed band's marker) keeps its
+    smallest error string, so reruns report identical rows — and the
+    store holds ZERO planes at the quarantined z positions (asserted in
     tests/test_quarantine.py).  The list is driver-side because dead
     letters are rare by construction; an operator at 100 TB persists it
     to the triage table of their choice.
@@ -768,11 +744,8 @@ def run_fused_ingest(
         codec_meta, geo, plan, on_error, content_fp,
     )
     markers = _read_progress_markers(output_root, store_fp, plan_fp)
-    # a band group is (slab, gi) with gi = fold·n_xt + x-tile; with one
-    # x-tile, gi is the fold
-    n_groups = {
-        k: (nb + 1) // 2 * n_xt for k, (nb, _, n_xt, _) in plan.items()
-    }
+    # a band group is (slab, gi) with gi = band·n_xt + x-tile
+    n_groups = {k: nb * n_xt for k, (nb, _, n_xt, _) in plan.items()}
     all_keys = [
         (g["channel"], g["stack"], slab, gi)
         for g in geo
@@ -794,16 +767,10 @@ def run_fused_ingest(
     # listing → one row per remaining (slab, gi) group carrying its
     # slice paths in z order; z is the path rank within the stack (the
     # reference's sorted-glob semantics, `io/readers.py:145`), computed
-    # here on the driver.  Each slice path rides once per FOLD — fold f
-    # covers bands f and n_bands−1−f, so one decode of the slice's row
-    # span serves both bands (a PNG must inflate up to the higher
-    # band's end anyway; the lower band's rows come out of the same
-    # pass free), the per-task decode cost max(ends) is near-constant
-    # across folds instead of ramping with the band index, and
-    # slice-path duplication halves.  The x-tiles of one fold each
-    # decode the same rows and keep their own columns.  Completed
-    # (marker-present) groups of a resumed run are simply never
-    # shipped.
+    # here on the driver.  Each slice path rides once per band group;
+    # the x-tiles of one band each decode the same rows and keep their
+    # own columns.  Completed (marker-present) groups of a resumed run
+    # are simply never shipped.
     stack_paths: dict[tuple[str, str], list[str]] = {k: [] for k in plan}
     for path, ch, st, _, _ in listing:
         if (ch, st) in stack_paths:
@@ -828,22 +795,17 @@ def run_fused_ingest(
         )
 
         channel, stack, cz, gi, paths = row
-        nb, per_band, n_xt, per_xt = plan[(channel, stack)]
-        fold, xt = divmod(gi, n_xt)
+        _, per_band, n_xt, per_xt = plan[(channel, stack)]
+        band, xt = divmod(gi, n_xt)
         height, width, dtype_name = geom[(channel, stack)]
         # the x-tile's columns [x0, x1), from chunk column cx0
         cx0 = xt * per_xt
         x0 = cx0 * cx_chunk
         cols = (cx0, x0, min(x0 + per_xt * cx_chunk, width))
-        # the fold's band windows: (cy0, y0, y1) for bands f and
-        # nb−1−f (one window when they coincide)
-        wins = []
-        for b in sorted({fold, nb - 1 - fold}):
-            cy0 = b * per_band
-            y0 = cy0 * cy_chunk
-            wins.append(
-                (cy0, y0, min(y0 + per_band * cy_chunk, height))
-            )
+        # the band's rows [y0, y1), from chunk row cy0
+        cy0 = band * per_band
+        y0 = cy0 * cy_chunk
+        win = (cy0, y0, min(y0 + per_band * cy_chunk, height))
         fs, base = _fs_for(output_root)
         _, compress = make_codec(
             compressor_name, compressor_kwargs, np.dtype(dtype_name).itemsize
@@ -851,7 +813,7 @@ def run_fused_ingest(
         cw = ChunkWriter(fs, compress)
         group = stack_group(base, channel, stack)
         n_chunks, raw_bytes, dead, read_s, decode_s, pyramid_s = write_slab(
-            paths, wins, cols, geom[(channel, stack)], (cy_chunk, cx_chunk),
+            paths, win, cols, geom[(channel, stack)], (cy_chunk, cx_chunk),
             factors, [dims for _, dims in layout[(channel, stack)]["levels"]],
             lambda lvl, cy, cx: chunk_key(group, lvl, cz, cy, cx),
             cw, quarantine,

@@ -54,11 +54,9 @@ def partition_stacks(stacks: list, n_partitions: int) -> list[list]:
 
 def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
     """Run the whole ingest; returns status_code, message, the written
-    stack groups, the ingest metrics, ``route`` — ``"fused"``, the one
-    ingest path, or None when this partition owns no stacks — and
-    ``phase_sec``: the band tasks' read/decode/pyramid/compress/write
-    seconds summed over the bands this run wrote (None when nothing
-    ran)."""
+    stack groups, the ingest metrics and ``phase_sec``: the band tasks'
+    read/decode/pyramid/compress/write seconds summed over the bands
+    this run wrote (None when this partition owns no stacks)."""
     start = time.time()
     root = str(settings.input_source)
     # With s3_location set, executors write STRAIGHT to the object
@@ -98,7 +96,6 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
                 "message": "empty partition",
                 "written": [],
                 "metrics": {},
-                "route": None,
                 "phase_sec": None,
             }
 
@@ -120,12 +117,10 @@ def run_imaging_job(spark: SparkSession, settings: ImagingJobSettings) -> dict:
     return {
         "status_code": 200,
         "message": (
-            f"wrote {len(written)} stacks in "
-            f"{time.time() - start:.1f}s (fused)"
+            f"wrote {len(written)} stacks in {time.time() - start:.1f}s"
         ),
         "written": written,
         "metrics": metrics,
-        "route": "fused",
         "phase_sec": phase_sec,
     }
 

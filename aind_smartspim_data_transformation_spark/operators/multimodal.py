@@ -6,9 +6,9 @@ the chunk-table design used for the imaging plane (SURVEY.md §1.4).
 
 The *plumbing* is real and tested: schemas, Arrow batch shapes,
 ``mapInPandas`` decode pipelines, partition sizing.  Image decode is
-real for PNG and baseline TIFF — ``decode_image_pixels`` dispatches on
-magic bytes to the repo's own pure-numpy codecs
-(``sources/png_codec.py`` / ``sources/tiff_codec.py``) — plus the
+real for PNG and baseline TIFF — ``decode_image_pixels`` hands them to
+the imaging ingest's slice decoder (``sources/stack_reader.py::
+decode_image_gray`` over the repo's pure-numpy codecs) — plus the
 deterministic fake format produced by :func:`make_fake_image` (a
 16-byte header ``SPKIMG01 | width u32 | height u32`` + raw payload)
 used for the oracle-backed queries.  The remaining stub boundary is
@@ -51,9 +51,9 @@ def decode_image_pixels(data: bytes) -> np.ndarray:
     """(height, width) pixel array, dispatched on magic bytes.
 
     - ``SPKIMG01`` fake → uint8 (the oracle-backed deterministic path);
-    - PNG → uint8/uint16 via the pure-numpy codec
-      (``sources/png_codec.py``, RFC 2083);
-    - baseline TIFF (II/MM) → via ``sources/tiff_codec.py``.
+    - PNG and baseline TIFF → ``sources/stack_reader.decode_image_gray``,
+      the slice decoder the imaging ingest uses, with big-endian (MM)
+      TIFF pixels normalised to native byte order.
 
     Anything else (JPEG, audio, video containers) raises
     ``NotImplementedError`` — the remaining genuine stub boundary in
@@ -64,35 +64,23 @@ def decode_image_pixels(data: bytes) -> np.ndarray:
         return np.frombuffer(
             data[16 : 16 + width * height], dtype=np.uint8
         ).reshape(height, width)
-    if data[:8] == b"\x89PNG\r\n\x1a\n":
-        from aind_smartspim_data_transformation_spark.sources.png_codec import (
-            decode_png_gray,
-        )
-
-        return decode_png_gray(bytes(data))
-    if data[:2] in (b"II", b"MM"):
-        from aind_smartspim_data_transformation_spark.sources.tiff_codec import (
-            decode_tiff_gray,
-        )
-
-        arr = decode_tiff_gray(bytes(data))
-        # Normalize to native byte order: an MM (big-endian) TIFF and
-        # its II twin must produce identical downstream bytes/digests,
-        # and the decode_image_bytes shim's "native-endian pixel
-        # buffer" contract must hold for every container.
-        if arr.dtype.byteorder == ">":
-            arr = arr.astype(arr.dtype.newbyteorder("="))
-        return arr
-    raise NotImplementedError(
-        "no codec for this payload in this environment (JPEG/audio/video "
-        "need pillow or imagecodecs); SPKIMG01, PNG and baseline TIFF decode"
+    from aind_smartspim_data_transformation_spark.sources.stack_reader import (
+        _PNG_SIG,
+        decode_image_gray,
     )
 
-
-def decode_image_bytes(data: bytes) -> tuple[int, int, bytes]:
-    """Back-compat shim: (width, height, native-endian pixel buffer)."""
-    arr = decode_image_pixels(data)
-    return arr.shape[1], arr.shape[0], arr.tobytes()
+    if data[:8] != _PNG_SIG and data[:2] not in (b"II", b"MM"):
+        raise NotImplementedError(
+            "no codec for this payload in this environment (JPEG/audio/"
+            "video need pillow or imagecodecs); SPKIMG01, PNG and "
+            "baseline TIFF decode"
+        )
+    arr = decode_image_gray(bytes(data))
+    # an MM (big-endian) TIFF and its II twin must produce identical
+    # downstream bytes/digests
+    if arr.dtype.byteorder == ">":
+        arr = arr.astype(arr.dtype.newbyteorder("="))
+    return arr
 
 
 FEATURE_SCHEMA = (

@@ -249,8 +249,8 @@ ORDER BY lvl
 # form the driver can hash-check (VERDICT r8 ask #8).  The kill/resume
 # machinery itself is pytest-verified (tests/test_imaging_job.py); this
 # query replays its arithmetic — the band plan (imaging/fused.py::
-# _band_plan: slab-count-scaled band target, ceil splits, fold pairing)
-# , the (stack, slab, fold) marker-key enumeration and the
+# _band_plan: a ceil(parallelism / slabs) band target, ceil splits)
+# , the (stack, slab, band) marker-key enumeration and the
 # done/remaining partition + saved-metrics merge of run_fused_ingest —
 # over a deterministic synthetic geometry with a deterministic "these
 # markers survived the crash" rule, so a regression in the shared
@@ -259,16 +259,16 @@ ORDER BY lvl
 # tests/test_imaging_queries.py.
 I05_PARALLELISM = 32  # fixed literal — both engines must agree
 I05_STACKS = 6
-# r11: _band_plan gained a per-task memory-envelope cap on the band
-# height (imaging/fused.py — a folded task's two band buffers plus one
-# decoded slice span must fit FUSED_MAX_TASK_BYTES).  The replay carries the
-# same closed form over a synthetic x/itemsize, with the cap literal
-# sized so it BINDS for the two deepest synthetic stacks (per_band
-# 2→1 and 3→1) and leaves the rest on the want-derived value — both
-# branches exercised, parity asserted against the production
-# _band_plan in tests/test_imaging_queries.py.  The production budget
-# also never drops below 1/16 of a z-slab; at most 4·41·32·2 // 16 =
-# 656 B here, it never binds, so the replay omits it.
+# _band_plan caps the band height to the per-task memory envelope
+# (imaging/fused.py — one band buffer plus one decoded slice span must
+# fit FUSED_MAX_TASK_BYTES).  The replay carries the same closed form
+# over a synthetic x/itemsize, with the cap literal sized so it BINDS
+# for the two deepest synthetic stacks (per_band 5→3 and 6→3) and
+# leaves the rest on the want-derived value — both branches
+# exercised, parity asserted against the production _band_plan in
+# tests/test_imaging_queries.py.  The production budget also never
+# drops below 1/16 of a z-slab; at most 4·41·32·2 // 16 = 656 B here,
+# it never binds, so the replay omits it.
 I05_X = 32  # synthetic plane width (pixels)
 I05_ITEM = 2  # synthetic dtype itemsize (uint16)
 I05_TASK_BYTES_CAP = 6144
@@ -294,13 +294,13 @@ def i05_resume_bookkeeping(spark: SparkSession, sf_dir: str) -> DataFrame:
     _cap_expr = (
         f"greatest(CAST(1 AS BIGINT), ({I05_TASK_BYTES_CAP} - "
         f"y*{I05_X}*{I05_ITEM}) div "
-        f"(2*least({I05_CZ}, z)*{I05_CY}*{I05_X}*{I05_ITEM}))"
+        f"(least({I05_CZ}, z)*{I05_CY}*{I05_X}*{I05_ITEM}))"
     )
     p5 = (
         s.crossJoin(F.broadcast(t))  # 1-row scalar, never a shuffle
         .withColumn(
             "want",
-            F.expr(f"greatest(CAST(1 AS BIGINT), (4*{P}) div tot)"),
+            F.expr(f"({P} + tot - 1) div tot"),
         )
         .withColumn("nb0", F.expr("least(want, n_cy)"))
         .withColumn("pb_cap", F.expr(_cap_expr))
@@ -309,7 +309,6 @@ def i05_resume_bookkeeping(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("least((n_cy + nb0 - 1) div nb0, pb_cap)"),
         )
         .withColumn("n_bands", F.expr("(n_cy + per_band - 1) div per_band"))
-        .withColumn("n_folds", F.expr("(n_bands + 1) div 2"))
     )
     k = (
         p5.select(
@@ -317,7 +316,6 @@ def i05_resume_bookkeeping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_slabs",
             "n_bands",
             "per_band",
-            "n_folds",
             F.explode(
                 F.expr("sequence(CAST(0 AS BIGINT), n_slabs - 1)")
             ).alias("slab"),
@@ -325,13 +323,13 @@ def i05_resume_bookkeeping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "*",
             F.explode(
-                F.expr("sequence(CAST(0 AS BIGINT), n_folds - 1)")
-            ).alias("fold"),
+                F.expr("sequence(CAST(0 AS BIGINT), n_bands - 1)")
+            ).alias("band"),
         )
-        .withColumn("done", F.expr("(slab*7 + fold*3) % 5 = 0"))
+        .withColumn("done", F.expr("(slab*7 + band*3) % 5 = 0"))
     )
     return (
-        k.groupBy("stack_id", "n_slabs", "n_bands", "per_band", "n_folds")
+        k.groupBy("stack_id", "n_slabs", "n_bands", "per_band")
         .agg(
             F.count("*").alias("n_keys"),
             F.sum(F.expr("CASE WHEN done THEN 1 ELSE 0 END"))
@@ -341,13 +339,13 @@ def i05_resume_bookkeeping(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_remaining"),
             F.sum(
-                F.expr("CASE WHEN done THEN (slab+1)*(fold+2) ELSE 0 END")
+                F.expr("CASE WHEN done THEN (slab+1)*(band+2) ELSE 0 END")
             )
             .cast("long")
             .alias("done_chunks"),
             F.sum(
                 F.expr(
-                    "CASE WHEN done THEN 1000 + slab*17 + fold*13 ELSE 0 END"
+                    "CASE WHEN done THEN 1000 + slab*17 + band*13 ELSE 0 END"
                 )
             )
             .cast("long")
@@ -363,32 +361,31 @@ WITH geo AS (SELECT range AS stack_id, 7 + 3*range AS z, 16 + 5*range AS y
 s AS (SELECT *, (z + {I05_CZ - 1}) // {I05_CZ} AS n_slabs,
              (y + {I05_CY - 1}) // {I05_CY} AS n_cy FROM geo),
 t AS (SELECT sum(n_slabs) AS tot FROM s),
-p AS (SELECT s.*, CAST(greatest(1, (4*{I05_PARALLELISM}) // tot) AS BIGINT)
+p AS (SELECT s.*, CAST(({I05_PARALLELISM} + tot - 1) // tot AS BIGINT)
               AS want FROM s, t),
 p5 AS (
-  SELECT *, (n_bands + 1) // 2 AS n_folds FROM (
-    SELECT *, (n_cy + per_band - 1) // per_band AS n_bands FROM (
-      SELECT *, least((n_cy + nb0 - 1) // nb0, pb_cap) AS per_band FROM (
-        SELECT *, least(want, n_cy) AS nb0,
-               greatest(1, ({I05_TASK_BYTES_CAP} - y*{I05_X}*{I05_ITEM}) //
-                   (2*least({I05_CZ}, z)*{I05_CY}*{I05_X}*{I05_ITEM}))
-                 AS pb_cap
-        FROM p)))),
+  SELECT *, (n_cy + per_band - 1) // per_band AS n_bands FROM (
+    SELECT *, least((n_cy + nb0 - 1) // nb0, pb_cap) AS per_band FROM (
+      SELECT *, least(want, n_cy) AS nb0,
+             greatest(1, ({I05_TASK_BYTES_CAP} - y*{I05_X}*{I05_ITEM}) //
+                 (least({I05_CZ}, z)*{I05_CY}*{I05_X}*{I05_ITEM}))
+               AS pb_cap
+      FROM p))),
 k AS (
-  SELECT p5.stack_id, p5.n_slabs, p5.n_bands, p5.per_band, p5.n_folds,
-         sl.slab, f.fold,
-         ((sl.slab*7 + f.fold*3) % 5 = 0) AS done
+  SELECT p5.stack_id, p5.n_slabs, p5.n_bands, p5.per_band,
+         sl.slab, b.band,
+         ((sl.slab*7 + b.band*3) % 5 = 0) AS done
   FROM p5,
        LATERAL (SELECT unnest(range(p5.n_slabs)) AS slab) sl,
-       LATERAL (SELECT unnest(range(p5.n_folds)) AS fold) f)
-SELECT stack_id, n_slabs, n_bands, per_band, n_folds,
+       LATERAL (SELECT unnest(range(p5.n_bands)) AS band) b)
+SELECT stack_id, n_slabs, n_bands, per_band,
        count(*) AS n_keys,
        CAST(sum(CASE WHEN done THEN 1 ELSE 0 END) AS BIGINT) AS n_done,
        CAST(sum(CASE WHEN NOT done THEN 1 ELSE 0 END) AS BIGINT)
          AS n_remaining,
-       CAST(sum(CASE WHEN done THEN (slab+1)*(fold+2) ELSE 0 END) AS BIGINT)
+       CAST(sum(CASE WHEN done THEN (slab+1)*(band+2) ELSE 0 END) AS BIGINT)
          AS done_chunks,
-       CAST(sum(CASE WHEN done THEN 1000 + slab*17 + fold*13 ELSE 0 END)
+       CAST(sum(CASE WHEN done THEN 1000 + slab*17 + band*13 ELSE 0 END)
          AS BIGINT) AS done_bytes
 FROM k GROUP BY ALL ORDER BY stack_id
 """

@@ -39,8 +39,10 @@ from aind_smartspim_data_transformation_spark.plans import relational
 # registry keys.  Later: d08 moved from its own label-propagation loop
 # onto the shared large-star/small-star components (d09's plan), so it
 # leads too; so do s09 and n07 (Lloyd assignment now calls the numpy
-# kernel shared with s11), d03 (its observation option is gone) and
-# i03 (one mapInPandas now generates, reduces and checksums its chunks).
+# kernel shared with s11), d03 (its observation option is gone), i03
+# (one mapInPandas now generates, reduces and checksums its chunks) and
+# i05 (it replays the unfolded band plan: one band buffer in the cap,
+# marker keys over (slab, band)).
 _LEADING_R16 = [
     "s10_pq_adc",
     "s11_ivf_pq_search",
@@ -53,6 +55,7 @@ _LEADING_R16 = [
     "n07_semantic_dedup",
     "d03_dedup_minhash_lsh",
     "i03_pyramid_level",
+    "i05_resume_bookkeeping",
 ]
 
 

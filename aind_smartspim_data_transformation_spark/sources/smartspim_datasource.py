@@ -233,7 +233,7 @@ class SmartspimStreamWriter(DataSourceStreamWriter):
             for cz in range(-(-len(paths) // dz)):
                 write_slab(
                     paths[cz * dz : (cz + 1) * dz],
-                    [(0, 0, h)], (0, 0, w), (h, w, dt), (dy, dx), factors,
+                    (0, 0, h), (0, 0, w), (h, w, dt), (dy, dx), factors,
                     ladder,
                     lambda lvl, cy, cx, cz=cz: _stage_key(
                         base, channel, stack, lvl, cz, cy, cx

@@ -63,12 +63,11 @@ def test_job_observed_metrics(job_run):
 
 
 def test_job_reports_phase_seconds(job_run):
-    """The fused route returns its band tasks' read, decode, pyramid,
-    compress and write seconds as a field."""
+    """The job returns its band tasks' read, decode, pyramid, compress
+    and write seconds as a field."""
     from aind_smartspim_data_transformation_spark.imaging.fused import PHASES
 
     resp, out, arrays = job_run
-    assert resp["route"] == "fused"
     phases = resp["phase_sec"]
     assert set(phases) == set(PHASES)
     assert all(v >= 0 for v in phases.values()), phases
@@ -429,9 +428,9 @@ def test_fused_multi_slab_store_identical(spark, tmp_path, monkeypatch):
     store, _ = job_store(spark, root, tmp_path / "out", [4, 4, 4], 3)
     g = f"{tmp_path}/out/{ch}/{stack}.ome.zarr"
     assert_pyramid(g, vol, 3)
-    # 12×16 uint16: 384 B decoded span; one-chunk-row bands of 2·4·4·2 B
-    # per column → a 1000 B envelope leaves 2-column x-tiles
-    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 1000)
+    # 12×16 uint16: 384 B decoded span; a one-chunk-row band of 4·4·2 B
+    # per column → a 700 B envelope leaves 2-column x-tiles
+    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 700)
     geo = fused.probe_stack_geometry(spark, str(root / "SmartSPIM"))
     assert fused._band_plan(geo, [4, 4, 4], 32)[(ch, stack)][2:] == (2, 2)
     tiled, _ = job_store(spark, root, tmp_path / "out_tiled", [4, 4, 4], 3)
@@ -458,7 +457,6 @@ def test_fused_rerun_and_partial_damage_repair(spark, tmp_path):
                 downsample_levels=2,
             ),
         )
-        assert resp["route"] == "fused"
         return resp
 
     def snap(out):
@@ -508,10 +506,10 @@ def test_fused_mixed_png_tiff_stack(spark, tmp_path):
     assert_pyramid(f"{tmp_path}/out/{ch}/{stack}.ome.zarr", vol, 2)
 
 
-def test_fused_even_band_count_folds_pairwise(spark, tmp_path):
-    """16 y-rows at chunk 4 → 4 bands → folds {0,3} and {1,2}: every
-    task is a PAIR (no middle singleton) — covers the two-band decode
-    and buffer routing for even band counts.  Store must equal the
+def test_fused_four_band_store_matches_oracle(spark, tmp_path):
+    """16 y-rows at chunk 4, one slab → 4 one-chunk-row bands, one task
+    each: every band decodes its own row window of every slice into its
+    own buffer and writes its own chunk row.  Store must equal the
     numpy oracle."""
     from aind_smartspim_data_transformation_spark.imaging.fused import (
         _band_plan,
@@ -524,9 +522,8 @@ def test_fused_even_band_count_folds_pairwise(spark, tmp_path):
     ch, stack = make_stack(root, vol)
 
     geo = probe_stack_geometry(spark, str(root))
-    nb, per_band, n_xt, _ = _band_plan(geo, [4, 4, 4], 32)[(ch, stack)]
-    # the even-fold shape this pins
-    assert nb == 4 and per_band == 1 and n_xt == 1
+    plan = _band_plan(geo, [4, 4, 4], spark.sparkContext.defaultParallelism)
+    assert plan[(ch, stack)][:3] == (4, 1, 1)
     job_store(spark, root, tmp_path / "out", [4, 4, 4], 2)
     assert_pyramid(f"{tmp_path}/out/{ch}/{stack}.ome.zarr", vol, 2)
 
@@ -614,12 +611,12 @@ def test_fused_mid_job_kill_resume_skips_completed_bands(
         spark.sparkContext.defaultParallelism,
     )
     nb, per_band, n_xt, _ = plan[(ch, stack)]
-    assert n_xt == 1  # a group is (slab, fold)
+    assert n_xt == 1  # a group is (slab, band)
     n_slabs, n_cy, n_cx = 3, 3, 4
     all_keys = {
-        (ch, stack, slab, fold)
+        (ch, stack, slab, band)
         for slab in range(n_slabs)
-        for fold in range((nb + 1) // 2)
+        for band in range(nb)
     }
     fail_key = (ch, stack, 0, 0)
 
@@ -640,12 +637,8 @@ def test_fused_mid_job_kill_resume_skips_completed_bands(
     assert set(markers) == all_keys
 
     # the chunk files each band owns
-    def band_files(slab, fold):
-        cys = []
-        for b in sorted({fold, nb - 1 - fold}):
-            cys.extend(
-                range(b * per_band, min((b + 1) * per_band, n_cy))
-            )
+    def band_files(slab, band):
+        cys = range(band * per_band, min((band + 1) * per_band, n_cy))
         return [
             out / ch / f"{stack}.ome.zarr" / str(lvl) / "0" / "0"
             / str(slab) / str(cy) / str(cx)
@@ -662,8 +655,8 @@ def test_fused_mid_job_kill_resume_skips_completed_bands(
 
     # the completed bands' chunk files, with their mtimes
     before = {}
-    for (_, _, slab, fold) in markers:
-        for p in band_files(slab, fold):
+    for (_, _, slab, band) in markers:
+        for p in band_files(slab, band):
             assert p.is_file(), f"completed band missing chunk {p}"
             before[p] = p.stat().st_mtime_ns
 
@@ -1031,10 +1024,9 @@ def test_fused_job_runs_at_most_four_spark_jobs(spark, tmp_path):
     group = f"fused-job-count-{tmp_path.name}"
     sc.setJobGroup(group, "job count")
     try:
-        resp = run_imaging_job(spark, settings)
+        run_imaging_job(spark, settings)
     finally:
         sc._jsc.clearJobGroup()
-    assert resp["route"] == "fused"
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 1 <= len(jobs) <= 4, jobs
 
@@ -1057,10 +1049,9 @@ def test_fused_job_is_two_jobs_without_shuffle(spark, tmp_path):
     group = f"fused-two-jobs-{tmp_path.name}"
     sc.setJobGroup(group, "job shape")
     try:
-        resp = run_imaging_job(spark, settings)
+        run_imaging_job(spark, settings)
     finally:
         sc._jsc.clearJobGroup()
-    assert resp["route"] == "fused"
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
     assert len(jobs) == 2, jobs
@@ -1088,8 +1079,8 @@ def test_auto_routing_boundary_on_task_budget(spark, tmp_path, monkeypatch):
     make_dataset(root, height=24, width=28)
     chunk = [64, 64, 8]  # 28 px → 4 chunk columns to split
     geo = fused.probe_stack_geometry(spark, f"{root}/SmartSPIM")
-    # two one-chunk-row bands of 2 slices × 28 px, plus the 24×28 span
-    fits = 2 * 2 * 64 * 28 * 2 + 24 * 28 * 2
+    # one one-chunk-row band of 2 slices × 28 px, plus the 24×28 span
+    fits = 2 * 64 * 28 * 2 + 24 * 28 * 2
 
     stores = []
     for on_error in ("fail", "quarantine"):
@@ -1109,9 +1100,9 @@ def test_band_plan_shrinks_to_memory_envelope(monkeypatch):
     """r11 (SCALE.md §6m): a deep acquisition must NARROW its bands to
     fit the per-task envelope.  This is the measured regression
     geometry — 4 stacks × 320 slices of 2000×1600 uint16 at 128³
-    chunks: the want-derived plan picks 2-chunk-row bands whose folded
-    buffers overshoot 256 MiB by ~0.04%; capped 1-chunk-row bands fit
-    at full width."""
+    chunks: the want-derived plan (12 slabs on 32 cores → 3 bands per
+    slab) picks 5-chunk-row bands whose buffer overshoots 256 MiB;
+    capped 3-chunk-row bands, the tallest that fit, stay full width."""
     from aind_smartspim_data_transformation_spark.imaging import fused
     from aind_smartspim_data_transformation_spark.imaging.fused import (
         FUSED_MAX_TASK_BYTES,
@@ -1131,20 +1122,20 @@ def test_band_plan_shrinks_to_memory_envelope(monkeypatch):
     ]
     chunk = [128, 128, 128]
 
-    def task_bytes(per_band):  # two bands at full width + the span
-        return 2 * 128 * per_band * 128 * 2000 * 2 + 1600 * 2000 * 2
+    def task_bytes(per_band):  # one band at full width + the span
+        return 128 * per_band * 128 * 2000 * 2 + 1600 * 2000 * 2
 
     plan = _band_plan(geo, chunk, 32)
-    # cap shrinks the 2-chunk-row band; 2000 px stays one 16-column tile
-    assert plan[("Ex_445_Em_469", "s0")] == (13, 1, 1, 16)  # ceil(1600 / 128)
-    assert task_bytes(1) <= FUSED_MAX_TASK_BYTES
+    # cap shrinks the 5-chunk-row band; 2000 px stays one 16-column tile
+    assert plan[("Ex_445_Em_469", "s0")] == (5, 3, 1, 16)  # ceil(13 / 3)
+    assert task_bytes(3) <= FUSED_MAX_TASK_BYTES < task_bytes(4)
 
-    # uncapped want-derived plan (the pre-r11 shape) for contrast:
-    # 12 slabs → want 10 → 2-chunk-row bands → 268.5 MB task > cap
+    # uncapped want-derived plan for contrast: 12 slabs on 32 cores →
+    # 3 bands of 5 chunk rows → 334 MB task > cap
     monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 1 << 40)
     loose = _band_plan(geo, chunk, 32)
-    assert loose[("Ex_445_Em_469", "s0")] == (7, 2, 1, 16)
-    assert task_bytes(2) > FUSED_MAX_TASK_BYTES
+    assert loose[("Ex_445_Em_469", "s0")] == (3, 5, 1, 16)
+    assert task_bytes(5) > FUSED_MAX_TASK_BYTES
 
 
 def test_band_plan_cap_never_changes_store_bytes(
@@ -1153,9 +1144,9 @@ def test_band_plan_cap_never_changes_store_bytes(
     """The envelope cap changes the BAND SPLIT, never the output: the
     same acquisition written under a cap that forces 1-chunk-row bands
     must be byte-identical to the uncapped plan.  Geometry chosen so
-    the cap actually binds (height 80 / cy 4 → n_cy 20, want-derived
-    bands of 5 chunk rows uncapped; cap 6000 B → pb_cap 1, and the
-    capped 1-row task (5376 B) still fits, so both runs stay fused)."""
+    the cap actually binds (height 80 / cy 4 → n_cy 20, 8 slabs on 8
+    cores → one band of 20 chunk rows uncapped; cap 5000 B → pb_cap 1,
+    and the capped 1-row task (4928 B) still fits at full width)."""
     from aind_smartspim_data_transformation_spark.imaging import fused
 
     root = tmp_path / "ds"
@@ -1164,7 +1155,7 @@ def test_band_plan_cap_never_changes_store_bytes(
     P = spark.sparkContext.defaultParallelism
     monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 1 << 40)
     loose = fused._band_plan(geo, [4, 4, 4], P)
-    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 6000)
+    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 5000)
     tight = fused._band_plan(geo, [4, 4, 4], P)
     first = next(iter(loose))
     assert loose[first][1] > tight[first][1] == 1, (
@@ -1186,10 +1177,9 @@ def test_band_plan_cap_never_changes_store_bytes(
             ),
         )
         assert resp["status_code"] == 200
-        assert resp["route"] == "fused"
         return tree_bytes(out)
 
-    assert run("loose", 1 << 40) == run("tight", 6000)
+    assert run("loose", 1 << 40) == run("tight", 5000)
 
 
 def test_band_plan_invariants_hypothesis():
@@ -1197,15 +1187,16 @@ def test_band_plan_invariants_hypothesis():
     geometries (tiny planes, z < cz, single-pixel widths, all dtypes):
     the plan must always (1) floor per_band and per_xt at 1, (2) cover
     every y chunk row and every x chunk column exactly once (no empty
-    trailing band or tile), (3) keep the band buffers within their
+    trailing band or tile), (3) keep the band buffer within its
     budget — the envelope less one decoded span, but at least 1/16 of
     a z-slab — whenever a 1×1-chunk tile fits it, (4) keep whole-width
     bands whenever a one-chunk-row full-width band fits the budget,
     (5) never produce MORE bands than chunk rows or tiles than chunk
-    columns, and (6) give every band it narrowed below the parallelism
-    target, and every full tile when it splits along X, more than half
-    the budget, so the group count (and with it the slices'
-    re-decodes) stays within twice what the budget forces."""
+    columns, nor more than ceil(parallelism / slabs) bands unless the
+    budget forces them, and (6) give every band it narrowed below the
+    parallelism target, and every full tile when it splits along X,
+    more than half the budget, so the group count (and with it the
+    slices' re-decodes) stays within twice what the budget forces."""
     from unittest import mock
 
     from hypothesis import given, settings
@@ -1248,21 +1239,26 @@ def test_band_plan_invariants_hypothesis():
         item = np.dtype(dtype).itemsize
         zz = min(cz, z)
         budget = max(cap - y * x * item, zz * y * x * item // 16)
-        if 2 * zz * cy * x * item <= budget:
+        if zz * cy * x * item <= budget:
             assert n_xt == 1
-        one_tile = 2 * zz * min(cy, y) * min(cx, x) * item
+        one_tile = zz * min(cy, y) * min(cx, x) * item
         band_rows = min(per_band * cy, y)
         tile_cols = min(per_xt * cx, x)
-        worst = 2 * zz * band_rows * tile_cols * item
+        worst = zz * band_rows * tile_cols * item
         if worst > budget:
             # the budget was missed — only legal when even a
             # 1×1-chunk tile cannot fit it
             assert per_band == 1 and per_xt == 1 and one_tile > budget
-        want = max(1, 4 * par // -(-z // cz))
+        want = -(-par // -(-z // cz))
+        # at most ceil(parallelism / slabs) bands unless the budget
+        # forces more
+        assert nb <= want or per_band == 1 or (
+            zz * (per_band + 1) * cy * x * item > budget
+        )
         if per_band < -(-n_cy // min(want, n_cy)):
-            assert 2 * zz * per_band * cy * x * item > budget // 2
+            assert zz * per_band * cy * x * item > budget // 2
         if n_xt > 1:
-            assert 2 * zz * per_band * cy * per_xt * cx * item > budget // 2
+            assert zz * per_band * cy * per_xt * cx * item > budget // 2
 
     check()
 
@@ -1270,9 +1266,9 @@ def test_band_plan_invariants_hypothesis():
 def test_band_plan_giant_plane_splits_in_x():
     """A plane too wide for even a one-chunk-row band splits its bands
     along X: 1024 × 32768 × 256 uint16 at 128³ chunks plans 8 one-row
-    bands of 4 tiles × 64 chunk columns.  The envelope less the span
-    (192 MiB) would split each slab into ~43 groups, every one
-    re-decoding its slices' rows; the buffers get 1/16 of a slab
+    bands of 2 tiles × 128 chunk columns.  The envelope less the span
+    (192 MiB) would split each slab into ~22 groups, every one
+    re-decoding its slices' rows; the buffer gets 1/16 of a slab
     (512 MiB) instead, so a slab is 16 groups."""
     from aind_smartspim_data_transformation_spark.imaging.fused import (
         FUSED_MAX_TASK_BYTES,
@@ -1285,11 +1281,11 @@ def test_band_plan_giant_plane_splits_in_x():
     ]
     span = 1024 * 32768 * 2
     plan = _band_plan(geo, [128, 128, 128], 32)
-    assert plan[("C", "s0")] == (8, 1, 4, 64)
-    # full width: 2·128·128·32768·2 = 2 GiB, over the envelope alone
-    assert 2 * 128 * 128 * 32768 * 2 > FUSED_MAX_TASK_BYTES
-    # one tile pair: exactly 1/16 of a 128-slice slab
-    assert 2 * 128 * 128 * 64 * 128 * 2 == 128 * span // 16
+    assert plan[("C", "s0")] == (8, 1, 2, 128)
+    # full width: 128·128·32768·2 = 1 GiB, over the envelope alone
+    assert 128 * 128 * 32768 * 2 > FUSED_MAX_TASK_BYTES
+    # one tile: exactly 1/16 of a 128-slice slab
+    assert 128 * 128 * 128 * 128 * 2 == 128 * span // 16
     assert 128 * span // 16 > FUSED_MAX_TASK_BYTES - span
 
 
@@ -1297,10 +1293,10 @@ def test_band_plan_giant_span_bounds_groups_per_slab():
     """Planes whose envelope fit would need hundreds of band groups per
     slab.  A 16384² uint16 span (512 MiB) alone exceeds the 256 MiB
     envelope: at 8 slices the plan keeps full-width bands of 1/16 of
-    the slab, 16 groups per slab on 4 cores (64 on 32 cores, from the
+    the slab, 16 groups per slab on 4 cores (32 on 32 cores, from the
     parallelism target) — not 8,192 groups of one chunk each.  8192² ×
-    256 at 128³ keeps full-width one-row bands, 32 groups per slab on
-    32 cores, not 128 x-tiled ones."""
+    256 at 128³ keeps full-width 4-row bands, 16 groups per slab on 4
+    and on 32 cores, not 128 x-tiled ones."""
     from aind_smartspim_data_transformation_spark.imaging.fused import (
         _band_plan,
     )
@@ -1310,17 +1306,49 @@ def test_band_plan_giant_span_bounds_groups_per_slab():
                 "dtype": "uint16"}]
         return _band_plan(geo, [128, 128, 128], par)[("C", "s0")]
 
-    assert plan(8, 16384, 16384, 4) == (32, 4, 1, 128)
-    # two bands of 4 chunk rows: 1/16 of the 8-slice slab
-    assert 2 * 8 * 4 * 128 * 16384 * 2 == 8 * 16384 * 16384 * 2 // 16
-    assert plan(8, 16384, 16384, 32) == (128, 1, 1, 128)
-    assert plan(256, 8192, 8192, 4) == (32, 2, 1, 64)
-    assert plan(256, 8192, 8192, 32) == (64, 1, 1, 64)
+    assert plan(8, 16384, 16384, 4) == (16, 8, 1, 128)
+    # one band of 8 chunk rows: 1/16 of the 8-slice slab
+    assert 8 * 8 * 128 * 16384 * 2 == 8 * 16384 * 16384 * 2 // 16
+    assert plan(8, 16384, 16384, 32) == (32, 4, 1, 128)
+    assert plan(256, 8192, 8192, 4) == (16, 4, 1, 64)
+    assert plan(256, 8192, 8192, 32) == (16, 4, 1, 64)
+
+
+def test_band_plan_decodes_per_slice():
+    """A band group inflates its slices' PNG rows from the top to its
+    band's end, so the plan's decodes per slice are the groups' band
+    ends summed over slices × height.  Pinned on perfbench's
+    ``imaging_ingest`` geometry (4 stacks × 8 × 1600 × 2000 uint16) and
+    on one 128-deep slab of the same plane, at 128³ chunks.  One deep
+    slab on 16 cores plans 13 one-row groups: their extra decodes run
+    on cores that would otherwise sit idle, and the critical path stays
+    one full-plane decode plus one chunk row."""
+    from aind_smartspim_data_transformation_spark.imaging.fused import (
+        _band_plan,
+    )
+
+    def decodes(n_stacks, z, par):
+        geo = [{"channel": "C", "stack": f"s{i}", "z": z, "y": 1600,
+                "x": 2000, "dtype": "uint16"} for i in range(n_stacks)]
+        plan = _band_plan(geo, [128, 128, 128], par)
+        rows = groups = 0
+        for g in geo:
+            nb, per_band, n_xt, _ = plan[(g["channel"], g["stack"])]
+            ends = sum(min((b + 1) * per_band * 128, g["y"]) for b in range(nb))
+            rows += g["z"] * n_xt * ends
+            groups += nb * n_xt
+        return round(rows / sum(g["z"] * g["y"] for g in geo), 2), groups // n_stacks
+
+    assert decodes(4, 8, 4) == (1.0, 1)  # one band per slab
+    assert decodes(4, 8, 8) == (1.56, 2)
+    assert decodes(4, 8, 32) == (4.36, 7)
+    assert decodes(1, 128, 4) == (3.4, 5)  # the envelope narrows bands
+    assert decodes(1, 128, 16) == (7.24, 13)
 
 
 def test_band_plan_span_over_cap_ingests(spark, tmp_path, monkeypatch):
     """A plane whose decoded span ALONE exceeds the envelope: the band
-    buffers get 1/16 of the slab, so each slab splits into 16 one-column
+    buffer gets 1/16 of the slab, so each slab splits into 8 two-column
     tiles, and the job still writes the numpy oracle's store."""
     from aind_smartspim_data_transformation_spark.imaging import fused
 
@@ -1329,11 +1357,11 @@ def test_band_plan_span_over_cap_ingests(spark, tmp_path, monkeypatch):
     vol = rng.integers(0, 65535, size=(6, 8, 64)).astype(np.uint16)
     ch, stack = make_stack(root, vol)
     # span 1,024 B > 1,000 B envelope; a 2-slice slab is 2,048 B, so
-    # the budget is 128 B: one chunk column of a one-row band pair
-    # (2·2·4·4·2 B) per tile
+    # the budget is 128 B: two chunk columns of a one-row band
+    # (2·4·4·2 B each) per tile
     monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 1000)
     geo = fused.probe_stack_geometry(spark, str(root / "SmartSPIM"))
-    assert fused._band_plan(geo, [2, 4, 4], 32)[(ch, stack)] == (2, 1, 16, 1)
+    assert fused._band_plan(geo, [2, 4, 4], 32)[(ch, stack)] == (2, 1, 8, 2)
     job_store(spark, root, tmp_path / "out", [2, 4, 4], 2)
     assert_pyramid(f"{tmp_path}/out/{ch}/{stack}.ome.zarr", vol, 2)
 
@@ -1344,7 +1372,7 @@ def test_fused_x_tiled_ingest_matches_oracle(spark, tmp_path, monkeypatch, on_er
     PNG/TIFF stack of 10 slices × 12 × 20 at chunk 4³ splits into
     3 x-tiles of 2, 2 and 1 chunk columns.  The store equals the numpy
     oracle at every level; in quarantine mode a corrupt slice, decoded
-    by every tile and fold of its slab, is one dead letter and one zero
+    by every band and tile of its slab, is one dead letter and one zero
     plane."""
     from aind_smartspim_data_transformation_spark.imaging import fused
     from aind_smartspim_data_transformation_spark.sources.png_codec import (
@@ -1368,9 +1396,9 @@ def test_fused_x_tiled_ingest_matches_oracle(spark, tmp_path, monkeypatch, on_er
         bad = next((root / "SmartSPIM").rglob("000005.png"))
         bad.write_bytes(b"\x89PNG\r\n\x1a\n" + b"\x00" * 40)
         expect[5] = 0
-    # 480 B span; one-chunk-row bands cost 64 B per column, so 1000 B
-    # leaves (1000 − 480) // 256 = 2 columns per tile
-    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 1000)
+    # 480 B span; a one-chunk-row band costs 32 B per column, so 800 B
+    # leaves (800 − 480) // 128 = 2 columns per tile
+    monkeypatch.setattr(fused, "FUSED_MAX_TASK_BYTES", 800)
     geo = fused.probe_stack_geometry(spark, str(root / "SmartSPIM"))
     assert fused._band_plan(geo, [4, 4, 4], 32)[(ch, stack)][1:] == (1, 3, 2)
     _, resp = job_store(spark, root, tmp_path / "out", [4, 4, 4], 3, on_error)

@@ -135,7 +135,7 @@ def test_i05_matches_production_band_plan(spark, sf_dir, monkeypatch):
     """i05's declarative band-plan/marker-key arithmetic must be the
     PRODUCTION bookkeeping, not merely self-consistent: replay the
     same synthetic geometry through imaging/fused.py's _band_plan and
-    run_fused_ingest's (stack, slab, fold) key enumeration + marker
+    run_fused_ingest's (stack, slab, band) key enumeration + marker
     merge, and require row-identical numbers."""
     from aind_smartspim_data_transformation_spark.imaging import fused
 
@@ -166,19 +166,17 @@ def test_i05_matches_production_band_plan(spark, sf_dir, monkeypatch):
     assert len(got) == iq.I05_STACKS
     for i, g in enumerate(geo):
         nb, per_band, n_xt, _ = plan[(g["channel"], g["stack"])]
-        assert n_xt == 1  # marker keys are (slab, fold) at this geometry
+        assert n_xt == 1  # marker keys are (slab, band) at this geometry
         n_slabs = -(-g["z"] // cz)
-        n_folds = (nb + 1) // 2  # run_fused_ingest's fold pairing
         # the all_keys enumeration + the deterministic "survived" rule
-        keys = [(slab, fold) for slab in range(n_slabs) for fold in range(n_folds)]
-        done = [(s, f) for (s, f) in keys if (s * 7 + f * 3) % 5 == 0]
+        keys = [(slab, band) for slab in range(n_slabs) for band in range(nb)]
+        done = [(s, b) for (s, b) in keys if (s * 7 + b * 3) % 5 == 0]
         r = got[i]
         assert r["n_slabs"] == n_slabs
         assert r["n_bands"] == nb
         assert r["per_band"] == per_band
-        assert r["n_folds"] == n_folds
         assert r["n_keys"] == len(keys)
         assert r["n_done"] == len(done)
         assert r["n_remaining"] == len(keys) - len(done)
-        assert r["done_chunks"] == sum((s + 1) * (f + 2) for s, f in done)
-        assert r["done_bytes"] == sum(1000 + s * 17 + f * 13 for s, f in done)
+        assert r["done_chunks"] == sum((s + 1) * (b + 2) for s, b in done)
+        assert r["done_bytes"] == sum(1000 + s * 17 + b * 13 for s, b in done)

@@ -274,25 +274,29 @@ def test_partially_corrupt_slice_zeroes_whole_plane(spark, tmp_path):
     assert got[1].any()
 
 
-def test_slice_decoded_by_two_folds_gives_one_dead_letter(spark, tmp_path):
-    """Height 32 at chunk (64, 8, 64) splits every stack into 4 bands,
-    so 2 folds each decode the corrupt slice: the job reports ONE dead
-    letter for it, picked by a fixed rule (two runs agree, byte for
-    byte), and its store equals the numpy oracle."""
-    from aind_smartspim_data_transformation_spark.imaging.fused import (
-        _band_plan,
-        probe_stack_geometry,
-    )
+def test_slice_decoded_by_two_bands_gives_one_dead_letter(
+    spark, tmp_path, monkeypatch
+):
+    """Height 32 at chunk (64, 8, 64) under a 2,560 B envelope (a
+    1,280 B decoded span plus 640 B per 2-slice chunk row) splits every
+    stack into 2 bands of 2 chunk rows, so 2 tasks each decode the
+    corrupt slice: the job reports ONE dead letter for it, picked by a
+    fixed rule (two runs agree, byte for byte), and its store equals
+    the numpy oracle."""
+    from aind_smartspim_data_transformation_spark.imaging import fused as fused_mod
 
     root = tmp_path / "ds"
     vols = make_dataset(root, height=32, width=20)
     bad_stack = _corrupt_slice(root)
     chunk = (64, 8, 64)
-    geo = probe_stack_geometry(
+    monkeypatch.setattr(fused_mod, "FUSED_MAX_TASK_BYTES", 2560)
+    geo = fused_mod.probe_stack_geometry(
         spark, str(root / "SmartSPIM"), on_error="quarantine"
     )
-    plan = _band_plan(geo, list(chunk), spark.sparkContext.defaultParallelism)
-    assert plan[(CHANNELS[0], bad_stack)][0] == 4  # 4 bands: 2 folds
+    plan = fused_mod._band_plan(
+        geo, list(chunk), spark.sparkContext.defaultParallelism
+    )
+    assert plan[(CHANNELS[0], bad_stack)][:3] == (2, 2, 1)
 
     fused, resp = _run_job(spark, root, tmp_path / "out_f", "quarantine", chunk=chunk)
     twice, again = _run_job(

@@ -19,9 +19,10 @@ Measured (local[32], 4 stacks, 128³ bricks, fused path): r10 driver
 best-of-3 193 MB/s at 1.6 GB; r11 deep-scale points 154–205 MB/s at
 8.19 GB and 156 MB/s at 16.38 GB (SCALE.md §6m — the 8 GB regime
 initially measured 47 MB/s because the band plan overshot the task
-envelope by 0.04% and auto fell back to the chunk-table pipeline;
-fixed by the _band_plan envelope cap).  Throughput RISES with depth
-as thicker slabs amortize scheduling and decode duplication.
+envelope by 0.04% and auto fell back to the chunk-table pipeline).
+_band_plan makes one y-band per z-slab unless the slabs would leave
+cores idle, and narrows bands only to fit the task envelope; every
+extra band of a slab re-inflates the PNG rows above it.
 
 CAVEAT: the container shares a host and wall-clock swings 3-5× with
 neighbor load (identical code measured 36 s and 110 s an hour apart).
@@ -148,11 +149,9 @@ def run_e2e(spark, n_slices: int) -> dict:
             "wall_sec": round(wall, 2),
             "stacks": len(CHANNELS) * len(COLS) * len(ROWS),
             "slices_per_stack": n_slices,
-            # which ingest route the job took — the SCALE.md §6m routing
-            # regression (deep stacks silently on the chunk-table
-            # fallback at half throughput) was invisible in BENCH JSON
-            # until this field existed
-            "route": resp["route"],
+            # the band tasks' read/decode/pyramid/compress/write seconds:
+            # which layer a throughput change moved
+            "phase_sec": resp["phase_sec"],
         }
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
