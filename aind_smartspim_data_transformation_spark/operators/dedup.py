@@ -187,77 +187,43 @@ ORDER BY doc1, doc2
 # ---------------------------------------------------------------------------
 def minhash_band_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, band_id, bkey) LSH band rows for any (doc_id, text)
-    DataFrame — the signature pipeline shared by batch d03 and the
-    streaming incremental detector (streaming/docs_stream.py); the two
-    paths MUST bucket identically or stream-vs-batch parity breaks.
+    DataFrame, batch or streaming — the one signature pipeline of d03,
+    d15, d16 and the incremental detector (streaming/docs_stream.py),
+    so stream and batch bucket identically by construction.
 
     16 minhashes from only 4 md5 evaluations: each 128-bit digest is
     split into 4 independent 32-bit (8-hex) lanes — 4× less hashing
-    than 16 per-function md5 calls, the dominant cost at scale.  Raw
-    (multiset) shingles: min() is duplicate-insensitive, so no
-    distinct before the partial agg.
+    than 16 per-function md5 calls, the dominant cost at scale.  The
+    shingle array is built once per row and the minima are
+    ``array_min`` over its hash arrays, so the pipeline is one narrow
+    map: no aggregation and no doc_id exchange, which also lets it feed
+    a streaming stateful operator (a streaming groupBy(doc_id) would
+    need a watermark, and each doc arrives whole anyway).  Raw
+    (multiset) shingles: min() is duplicate-insensitive.  Assumes one
+    row per doc_id, as in the documents table.
     """
-    sh = (
+    shs = (
         docs.withColumn("toks", F.split("text", " "))
         .filter(F.size("toks") >= 3)
-        .select("doc_id", F.explode(F.expr(_SHINGLES)).alias("sh"))
+        .select("doc_id", F.expr(_SHINGLES).alias("shs"))
     )
-    sigs = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.substring(F.md5(F.concat(F.lit(f"{i // 4}|"), F.col("sh"))), 8 * (i % 4) + 1, 8)
-            ).alias(f"h{i}")
-            for i in range(N_MINHASH)
-        ]
-    )
-    return sigs.select(
+    lanes = shs.select(
         "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band_id"),
-                        F.concat(F.col(f"h{2 * j}"), F.col(f"h{2 * j + 1}")).alias("bkey"),
-                    )
-                    for j in range(N_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band_id", "b.bkey")
-
-
-def minhash_band_rows_narrow(docs: DataFrame) -> DataFrame:
-    """Per-ROW variant of :func:`minhash_band_rows`: the minima come
-    from ``array_min`` over the in-row shingle array instead of an
-    explode + groupBy — zero aggregation, zero shuffle.
-
-    Same hash family, same minima, identical (doc_id, band_id, bkey)
-    rows (asserted in tests/test_docs_stream.py).  This is the variant
-    a STREAMING pipeline needs: a streaming groupBy(doc_id) is a
-    stateful aggregation (unsupported in append mode without a
-    watermark, and pointless state — each doc arrives whole), while a
-    narrow map composes freely with the downstream stateful bucket
-    operator.  Batch keeps the agg form (partial-agg bundles shingle
-    hashing across the scan); per-doc work is identical either way.
-    """
-    shs = "transform(sequence(0, size(toks) - 3), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"
-    out = docs.withColumn("toks", F.split("text", " ")).filter(
-        F.size("toks") >= 3
+        *[
+            F.expr(f"transform(shs, sh -> md5(concat('{k}|', sh)))").alias(f"lane{k}")
+            for k in range(N_MINHASH // 4)
+        ],
     )
-    lanes = [
-        F.expr(
-            f"transform({shs}, sh -> md5(concat('{k}|', sh)))"
-        ).alias(f"lane{k}")
-        for k in range(N_MINHASH // 4)
-    ]
-    out = out.select("doc_id", *lanes)
-    hs = [
-        F.array_min(
-            F.expr(f"transform(lane{i // 4}, d -> substring(d, {8 * (i % 4) + 1}, 8))")
-        ).alias(f"h{i}")
-        for i in range(N_MINHASH)
-    ]
-    sigs = out.select("doc_id", *hs)
+
+    def minhash(i: int):
+        lane, start = f"lane{i // 4}", 8 * (i % 4) + 1
+        if start == 1:
+            # equal-length hex digests: the least digest has the least
+            # 8-char prefix, so the first slice needs no transform
+            return F.substring(F.array_min(lane), 1, 8)
+        return F.array_min(F.expr(f"transform({lane}, d -> substring(d, {start}, 8))"))
+
+    sigs = lanes.select("doc_id", *[minhash(i).alias(f"h{i}") for i in range(N_MINHASH)])
     return sigs.select(
         "doc_id",
         F.explode(
@@ -449,8 +415,8 @@ def d03_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Candidate pairs by grouping each band bucket and expanding i<j
     # combinations in-bucket — ONE pass over the signature pipeline and
     # one shuffle on the band key, where a bands⋈bands self-join would
-    # compute the minhash aggregation twice (once per side) and shuffle
-    # both.  Bucket membership lists are tiny by construction (a bucket
+    # compute the signatures twice (once per side) and shuffle both.
+    # Bucket membership lists are tiny by construction (a bucket
     # = docs agreeing on 64 bits of minhash); the MAX_BAND_BUCKET cap
     # drops degenerate buckets (empty/boilerplate text all hashing
     # identically) BEFORE the quadratic pair expansion, bounding the

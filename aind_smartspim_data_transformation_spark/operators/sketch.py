@@ -170,27 +170,74 @@ ORDER BY exact_cnt DESC, token ASC
 # ---------------------------------------------------------------------------
 HLL_M = 256  # buckets (p = 8)
 HLL_ALPHA_MILLI = 718
+# numerator of the raw estimate: est = HLL_NUM div (1000 · S)
+HLL_NUM = HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << 32)
+
+# the 32-bit md5 prefix of the `token` column as an integer
+_H32 = "CAST(conv(substring(md5(token), 1, 8), 16, 10) AS BIGINT)"
+_DUCK_H32 = "('0x' || substring(md5(token), 1, 8))::BIGINT"
 
 
-def hll_registers(tok: DataFrame) -> DataFrame:
-    """(bucket, r) HLL registers over a (token) DataFrame — the
-    production register pipeline, shared with the mergeability
-    property test (tests/test_extras.py) so the test always exercises
-    the real hash/bucket/rho formulas."""
-    h = F.conv(F.substring(F.md5(F.col("token")), 1, 8), 16, 10).cast("long")
-    hashed = tok.select(
-        (h % HLL_M).alias("bucket"), F.expr(f"{_H32} div {HLL_M}").alias("v")
-    )
+def hll_registers(tok: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, bucket, r) HLL registers over a (token, *keys) DataFrame,
+    one register set per key — the one register pipeline (x04 without
+    keys, n08 per window, and the mergeability property test in
+    tests/test_extras.py)."""
+    v = F.col("v")
     return (
-        hashed.withColumn(
-            "rho",
-            F.when(F.col("v") == 0, F.lit(25)).otherwise(
-                F.lit(25) - F.length(F.bin("v"))
-            ),
+        tok.select(
+            *keys,
+            F.expr(f"{_H32} % {HLL_M}").alias("bucket"),
+            F.expr(f"{_H32} div {HLL_M}").alias("v"),
         )
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("r"))
+        .groupBy(*keys, "bucket")
+        .agg(
+            F.max(
+                F.when(v == 0, F.lit(25)).otherwise(F.lit(25) - F.length(F.bin(v)))
+            ).alias("r")
+        )
     )
+
+
+def hll_estimate(regs: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, s, n_regs, est) from :func:`hll_registers` output: the
+    exact scaled harmonic sum S (an empty bucket adds 2^32), the count
+    of non-empty registers, and the integer raw estimate."""
+    return (
+        regs.groupBy(*keys)
+        .agg(
+            (
+                F.expr("sum(shiftleft(CAST(1 AS BIGINT), 32 - r))")
+                + (F.lit(HLL_M) - F.count("*")) * F.lit(1 << 32)
+            ).alias("s"),
+            F.count("*").alias("n_regs"),
+        )
+        .withColumn("est", F.expr(f"{HLL_NUM} div (1000 * s)"))
+    )
+
+
+def hll_sql(src: str, *keys: str) -> str:
+    """DuckDB twin of :func:`hll_registers` + :func:`hll_estimate`: the
+    `hashed`, `regs` and `sums` CTEs (continuing a WITH list) over CTE
+    ``src``'s VARCHAR `token` column, grouped by ``keys``.  `sums`
+    carries (*keys, s, n_regs, est)."""
+    k = "".join(f"{c}, " for c in keys)
+    by = f" GROUP BY {', '.join(keys)}" if keys else ""
+    return f"""hashed AS (
+  SELECT {k}{_DUCK_H32} % {HLL_M} AS bucket,
+         {_DUCK_H32} // {HLL_M} AS v
+  FROM {src}
+), regs AS (
+  SELECT {k}bucket,
+         max(CASE WHEN v = 0 THEN 25 ELSE 25 - length(bin(v)) END) AS r
+  FROM hashed GROUP BY {k}bucket
+), sums AS (
+  SELECT *, {HLL_NUM} // (1000 * s) AS est FROM (
+    SELECT {k}sum((1::BIGINT << (32 - r)))::BIGINT
+           + ({HLL_M} - count(*)) * (1::BIGINT << 32) AS s,
+           count(*) AS n_regs
+    FROM regs{by}) _s
+)"""
 
 
 def x04_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,34 +251,19 @@ def x04_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tok = _shingle_rows_raw(spark, sf_dir).select(F.col("sh").alias("token"))
-    regs = hll_registers(tok)
-    sums = regs.agg(
-        (
-            F.expr("sum(shiftleft(CAST(1 AS BIGINT), 32 - r))")
-            + (F.lit(HLL_M) - F.count("*")) * F.lit(1 << 32)
-        ).alias("s"),
-        F.count("*").alias("n_regs"),
-    )
     exact = tok.agg(F.countDistinct("token").alias("n_exact"))
-    num = HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << 32)
     return (
-        sums.crossJoin(F.broadcast(exact))
+        hll_estimate(hll_registers(tok))
+        .crossJoin(F.broadcast(exact))
         .select(
             F.lit(HLL_M).alias("m"),
             "n_regs",
             "n_exact",
-            F.expr(f"{num} div (1000 * s)").alias("est"),
-            F.expr(
-                f"abs({num} div (1000 * s) - n_exact) * 1000000 div n_exact"
-            ).alias("err_ppm"),
+            "est",
+            F.expr("abs(est - n_exact) * 1000000 div n_exact").alias("err_ppm"),
         )
     )
 
-
-# the 32-bit md5 prefix as an integer, shared by the Spark expr above
-_H32 = "CAST(conv(substring(md5(token), 1, 8), 16, 10) AS BIGINT)"
-
-_DUCK_H32 = "('0x' || substring(md5(token), 1, 8))::BIGINT"
 
 X04_SQL = f"""
 WITH toks AS (
@@ -241,26 +273,11 @@ WITH toks AS (
   SELECT unnest(list_transform(range(1, len(t) - 1),
                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS token
   FROM toks
-), hashed AS (
-  SELECT {_DUCK_H32} % {HLL_M} AS bucket,
-         {_DUCK_H32} // {HLL_M} AS v
-  FROM tok2
-), regs AS (
-  SELECT bucket,
-         max(CASE WHEN v = 0 THEN 25 ELSE 25 - length(bin(v)) END) AS r
-  FROM hashed GROUP BY bucket
-), sums AS (
-  SELECT sum((1::BIGINT << (32 - r)))::BIGINT
-         + ({HLL_M} - count(*)) * (1::BIGINT << 32) AS s,
-         count(*) AS n_regs
-  FROM regs
-), exact AS (
+), {hll_sql("tok2")}, exact AS (
   SELECT count(DISTINCT token) AS n_exact FROM tok2
 )
-SELECT {HLL_M} AS m, n_regs, n_exact,
-       ({HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << 32)}) // (1000 * s) AS est,
-       abs(({HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << 32)}) // (1000 * s) - n_exact)
-         * 1000000 // n_exact AS err_ppm
+SELECT {HLL_M} AS m, n_regs, n_exact, est,
+       abs(est - n_exact) * 1000000 // n_exact AS err_ppm
 FROM sums CROSS JOIN exact
 """
 

@@ -1257,6 +1257,25 @@ QUERIES["n05_sequence_packing"] = n05_sequence_packing
 ORACLE["n05_sequence_packing"] = N05_SQL
 
 
+def _tok_ttr() -> tuple:
+    """(tok, ttr_milli) columns of a documents row: the whitespace token
+    count and the type-token ratio in milli (distinct tokens × 1000 div
+    tokens) — the lexical features of n06, n18 and n19."""
+    return (
+        F.size(F.split("text", " ")).alias("tok"),
+        F.expr(
+            "size(array_distinct(split(text, ' '))) * 1000"
+            " div size(split(text, ' '))"
+        ).alias("ttr_milli"),
+    )
+
+
+# DuckDB twin of _tok_ttr, for a SELECT list over documents
+_TOK_TTR_SQL = """len(string_split(text, ' ')) AS tok,
+         len(list_distinct(string_split(text, ' '))) * 1000
+           // len(string_split(text, ' ')) AS ttr_milli"""
+
+
 # ---------------------------------------------------------------------------
 # N6 (round 6) — curriculum quality deciles: bucket the corpus into 10
 # equal-count tiers by a deterministic lexical-quality proxy (type-
@@ -1284,16 +1303,8 @@ def n06_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    scored = docs.select(
-        "doc_id",
-        "n_chars",
-        F.size(toks).alias("tok"),
-        F.expr(
-            "size(array_distinct(split(text, ' '))) * 1000"
-            " div size(split(text, ' '))"
-        ).alias("ttr_milli"),
-    ).persist()  # query-path cache: harness clearCache() releases — SCALE.md §6q
+    # query-path cache: harness clearCache() releases — SCALE.md §6q
+    scored = docs.select("doc_id", "n_chars", *_tok_ttr()).persist()
     tiered = distributed_ntile(
         scored, "ttr_milli", 10, tie_cols=("doc_id",), out_col="tier"
     )
@@ -1316,12 +1327,10 @@ def n06_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-N06_SQL = """
+N06_SQL = f"""
 WITH scored AS (
   SELECT doc_id, n_chars,
-         len(string_split(text, ' ')) AS tok,
-         len(list_distinct(string_split(text, ' '))) * 1000
-           // len(string_split(text, ' ')) AS ttr_milli
+         {_TOK_TTR_SQL}
   FROM documents
 ), tiered AS (
   SELECT n_chars, tok, ttr_milli,
@@ -1561,9 +1570,8 @@ ORACLE["n07_semantic_dedup"] = _n07_sql()
 # ---------------------------------------------------------------------------
 def n08_windowed_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aind_smartspim_data_transformation_spark.operators.sketch import (
-        HLL_ALPHA_MILLI,
-        HLL_M,
-        _H32,
+        hll_estimate,
+        hll_registers,
     )
     from aind_smartspim_data_transformation_spark.tables import load_events
 
@@ -1571,30 +1579,7 @@ def n08_windowed_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", "ts").alias("w_start"),
         F.col("user_id").cast("string").alias("token"),
     )
-    h = F.expr(_H32)
-    regs = (
-        ev.select(
-            "w_start",
-            (h % HLL_M).alias("bucket"),
-            F.expr(f"{_H32} div {HLL_M}").alias("v"),
-        )
-        .withColumn(
-            "rho",
-            F.when(F.col("v") == 0, F.lit(25)).otherwise(
-                F.lit(25) - F.length(F.bin("v"))
-            ),
-        )
-        .groupBy("w_start", "bucket")
-        .agg(F.max("rho").alias("r"))
-    )
-    num = HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << 32)
-    sums = regs.groupBy("w_start").agg(
-        (
-            F.expr("sum(shiftleft(CAST(1 AS BIGINT), 32 - r))")
-            + (F.lit(HLL_M) - F.count("*")) * F.lit(1 << 32)
-        ).alias("s"),
-        F.count("*").alias("n_regs"),
-    )
+    sums = hll_estimate(hll_registers(ev, "w_start"), "w_start")
     exact = ev.groupBy("w_start").agg(
         F.countDistinct("token").alias("n_exact")
     )
@@ -1604,10 +1589,9 @@ def n08_windowed_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w_start",
             "n_regs",
             "n_exact",
-            F.expr(f"{num} div (1000 * s)").alias("est"),
+            "est",
             F.expr(
-                f"abs({num} div (1000 * s) - n_exact) * 1000000"
-                " div greatest(n_exact, 1)"
+                "abs(est - n_exact) * 1000000 div greatest(n_exact, 1)"
             ).alias("err_ppm"),
         )
         .orderBy("w_start")
@@ -1616,34 +1600,19 @@ def n08_windowed_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _n08_sql() -> str:
     from aind_smartspim_data_transformation_spark.operators.sketch import (
-        HLL_ALPHA_MILLI,
-        HLL_M,
+        hll_sql,
     )
 
-    h = "('0x' || substring(md5(user_id::VARCHAR), 1, 8))::BIGINT"
-    num = HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << 32)
     return f"""
 WITH ev AS (
   SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS w_start,
-         {h} % {HLL_M} AS bucket, {h} // {HLL_M} AS v, user_id
+         user_id::VARCHAR AS token
   FROM events
-), regs AS (
-  SELECT w_start, bucket,
-         max(CASE WHEN v = 0 THEN 25 ELSE 25 - length(bin(v)) END) AS r
-  FROM ev GROUP BY w_start, bucket
-), sums AS (
-  SELECT w_start,
-         sum((1::BIGINT << (32 - r)))::BIGINT
-           + ({HLL_M} - count(*)) * (1::BIGINT << 32) AS s,
-         count(*) AS n_regs
-  FROM regs GROUP BY w_start
-), exact AS (
-  SELECT w_start, count(DISTINCT user_id) AS n_exact FROM ev GROUP BY w_start
+), {hll_sql("ev", "w_start")}, exact AS (
+  SELECT w_start, count(DISTINCT token) AS n_exact FROM ev GROUP BY w_start
 )
-SELECT s.w_start, s.n_regs, e.n_exact,
-       {num} // (1000 * s.s) AS est,
-       abs({num} // (1000 * s.s) - e.n_exact) * 1000000
-         // greatest(e.n_exact, 1) AS err_ppm
+SELECT s.w_start, s.n_regs, e.n_exact, s.est,
+       abs(s.est - e.n_exact) * 1000000 // greatest(e.n_exact, 1) AS err_ppm
 FROM sums s JOIN exact e USING (w_start)
 ORDER BY s.w_start
 """
@@ -2496,14 +2465,8 @@ def n18_length_quality_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id",
-        F.size(F.split("text", " ")).alias("tok"),
-        F.expr(
-            "size(array_distinct(split(text, ' '))) * 1000"
-            " div size(split(text, ' '))"
-        ).alias("ttr_milli"),
-    ).persist()  # query-path cache: harness clearCache() releases — SCALE.md §6q
+    # query-path cache: harness clearCache() releases — SCALE.md §6q
+    scored = docs.select("doc_id", *_tok_ttr()).persist()
     r1, totals = distributed_order_stats(
         scored, "tok", tie_cols=("doc_id",), rank_col="rank_len"
     )
@@ -2536,12 +2499,10 @@ def n18_length_quality_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-N18_SQL = """
+N18_SQL = f"""
 WITH scored AS (
   SELECT doc_id,
-         len(string_split(text, ' ')) AS tok,
-         len(list_distinct(string_split(text, ' '))) * 1000
-           // len(string_split(text, ' ')) AS ttr_milli
+         {_TOK_TTR_SQL}
   FROM documents
 ), r AS (
   SELECT doc_id,
@@ -2582,15 +2543,8 @@ def n19_tier_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id",
-        "source",
-        F.size(F.split("text", " ")).alias("tok"),
-        F.expr(
-            "size(array_distinct(split(text, ' '))) * 1000"
-            " div size(split(text, ' '))"
-        ).alias("ttr_milli"),
-    ).persist()  # query-path cache: harness clearCache() releases — SCALE.md §6q
+    # query-path cache: harness clearCache() releases — SCALE.md §6q
+    scored = docs.select("doc_id", "source", *_tok_ttr()).persist()
     tiered = distributed_ntile(
         scored, "ttr_milli", 10, tie_cols=("doc_id",), out_col="tier"
     )
@@ -2617,12 +2571,10 @@ def n19_tier_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-N19_SQL = """
+N19_SQL = f"""
 WITH scored AS (
   SELECT doc_id, source,
-         len(string_split(text, ' ')) AS tok,
-         len(list_distinct(string_split(text, ' '))) * 1000
-           // len(string_split(text, ' ')) AS ttr_milli
+         {_TOK_TTR_SQL}
   FROM documents
 ), tiered AS (
   SELECT source, tok,

@@ -42,7 +42,10 @@ from aind_smartspim_data_transformation_spark.plans import relational
 # kernel shared with s11), d03 (its observation option is gone), i03
 # (one mapInPandas now generates, reduces and checksums its chunks) and
 # i05 (it replays the unfolded band plan: one band buffer in the cap,
-# marker keys over (slab, band)).
+# marker keys over (slab, band)).  So do the users of the single sketch
+# kernels: d03, d15 and d16 (one per-row MinHash band signature), x04
+# and n08 (one HLL register and estimate pipeline), n06, n18 and n19
+# (one token-count / type-token-ratio feature).
 _LEADING_R16 = [
     "s10_pq_adc",
     "s11_ivf_pq_search",
@@ -56,6 +59,13 @@ _LEADING_R16 = [
     "d03_dedup_minhash_lsh",
     "i03_pyramid_level",
     "i05_resume_bookkeeping",
+    "d15_lsh_saturation_audit",
+    "d16_lsh_recovered_pairs",
+    "x04_hll_distinct",
+    "n08_windowed_hll_users",
+    "n06_quality_deciles",
+    "n18_length_quality_spearman",
+    "n19_tier_source_mix",
 ]
 
 

@@ -38,9 +38,17 @@ _COMMON = {
     # production shuffle sizes the term on the left dominates and the
     # plan is unchanged.  Measured (sf0.1, interleaved min-of-4): d14
     # 2.8→2.3 s, e04 1.49→1.39 s, e05 0.76→0.69 s, q03/e02 wash, n07
-    # −0.3 s; net positive.  Env-overridable for cluster tuning.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"
+    # −0.3 s; net positive.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    # Python workers import the installed pyspark instead of
+    # $SPARK_HOME/python/lib/pyspark.zip when the versions match — no
+    # per-daemon compile of the zip, no per-task zip directory re-reads
+    # (see worker_daemon.py).
+    "spark.python.daemon.module": "aind_smartspim_data_transformation_spark.worker_daemon",
+    # ...which the workers must import whatever the driver's cwd: put
+    # the directory holding this package on their path.
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
     ),
     # Arrow for pandas UDF / toPandas — the only acceptable Python path.
     "spark.sql.execution.arrow.pyspark.enabled": "true",

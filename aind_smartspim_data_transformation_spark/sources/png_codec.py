@@ -305,15 +305,16 @@ _ADAM7 = (
 )
 
 
-def _inflate_all_idat(data: bytes) -> bytes:
-    """Inflate the full IDAT stream with adler32 verification."""
-    import struct as _s
-
+def _inflate_idat(data: bytes, target: int | None = None) -> bytearray:
+    """Inflate the IDAT payloads in stream order.  Without ``target``
+    the whole stream is inflated, so zlib verifies its adler32 at the
+    stream end; with ``target`` inflation stops once that many bytes
+    are in (a row prefix)."""
     dec = zlib.decompressobj()
     raw = bytearray()
     off = 8
-    while off < len(data):
-        (length,) = _s.unpack(">I", data[off : off + 4])
+    while off < len(data) and (target is None or len(raw) < target):
+        (length,) = struct.unpack(">I", data[off : off + 4])
         tag = data[off + 4 : off + 8]
         if tag == b"IDAT":
             raw += dec.decompress(data[off + 8 : off + 8 + length])
@@ -321,7 +322,7 @@ def _inflate_all_idat(data: bytes) -> bytes:
         if tag == b"IEND":
             break
     raw += dec.flush()
-    return bytes(raw)
+    return raw
 
 
 def _decode_adam7(data: bytes, w: int, h: int, bitdepth: int) -> np.ndarray:
@@ -330,7 +331,7 @@ def _decode_adam7(data: bytes, w: int, h: int, bitdepth: int) -> np.ndarray:
     filtered independently — unfilter each with the shared
     :func:`_unfilter` and scatter onto the (h, w) grid."""
     bpp = bitdepth // 8
-    raw = _inflate_all_idat(data)
+    raw = _inflate_idat(data)
     out8 = np.zeros((h, w * bpp), dtype=np.uint8)
     pos = 0
     for sx, sy, dx, dy in _ADAM7:
@@ -406,17 +407,7 @@ def decode_png_gray(
     # height claims (silently cropping a corrupt oversized stream would
     # feed truncated data into the store instead of dead-lettering).
     full = row_stop == h
-    dec = zlib.decompressobj()
-    raw = bytearray()
-    off = 8
-    while off < len(data) and (full or len(raw) < need):
-        (length,) = struct.unpack(">I", data[off : off + 4])
-        tag = data[off + 4 : off + 8]
-        if tag == b"IDAT":
-            raw += dec.decompress(data[off + 8 : off + 8 + length])
-        off += 12 + length
-        if tag == b"IEND":
-            break
+    raw = _inflate_idat(data, None if full else need)
     if len(raw) < need:
         raise ValueError(
             f"PNG pixel stream truncated: {len(raw)} bytes for "

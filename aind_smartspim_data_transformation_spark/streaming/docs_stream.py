@@ -5,12 +5,10 @@ assumes the whole corpus is present; a continuously-ingested corpus
 wants the INCREMENTAL form: as each new document arrives, compare it
 against everything already seen and emit candidate pairs immediately.
 
-Shape: the stream uses the per-row signature variant
-(``dedup.minhash_band_rows_narrow`` — same hash family and minima as
-the batch pipeline, asserted band-row-identical in tests, because
-stream and batch MUST bucket identically; the narrow form exists
-because a streaming groupBy(doc_id) would be a watermark-less stateful
-aggregation), then a custom stateful operator keyed by LSH band bucket
+Shape: the stream computes its LSH band rows with the batch pipeline's
+own function (``dedup.minhash_band_rows``, a narrow per-row map, so it
+needs no streaming aggregation and stream and batch bucket
+identically), then a custom stateful operator keyed by LSH band bucket
 (``applyInPandasWithState``) keeps the bucket's member list in the
 state store and emits (prior_member, new_doc) candidate pairs on
 arrival.  Across the whole stream this produces exactly the batch
@@ -33,7 +31,7 @@ from pyspark.sql import DataFrame
 
 from aind_smartspim_data_transformation_spark.operators.dedup import (
     MAX_BAND_BUCKET,
-    minhash_band_rows_narrow,
+    minhash_band_rows,
 )
 
 CANDIDATE_SCHEMA = "doc1 long, doc2 long, band_id int"
@@ -46,9 +44,7 @@ def incremental_candidates(docs_stream: DataFrame) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    # narrow (stateless) signature variant: a streaming groupBy(doc_id)
-    # would be an unsupported watermark-less stateful aggregation
-    bands = minhash_band_rows_narrow(docs_stream)
+    bands = minhash_band_rows(docs_stream)
 
     def _update(key, pdfs, state):
         band_id = int(key[0])

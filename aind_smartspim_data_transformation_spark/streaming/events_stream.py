@@ -381,8 +381,8 @@ def windowed_hll_distinct(events: DataFrame) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from aind_smartspim_data_transformation_spark.operators.sketch import (
-        HLL_ALPHA_MILLI,
         HLL_M,
+        HLL_NUM,
     )
 
     out_schema = "w_start timestamp, n_regs long, est long"
@@ -401,8 +401,7 @@ def windowed_hll_distinct(events: DataFrame) -> DataFrame:
                 s += 1 << (32 - r)
             else:
                 s += 1 << 32
-        num = HLL_ALPHA_MILLI * HLL_M * HLL_M * (1 << 32)
-        return n_regs, num // (1000 * s)
+        return n_regs, HLL_NUM // (1000 * s)
 
     def _update(key, pdfs, state):
         import hashlib

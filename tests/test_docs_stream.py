@@ -83,15 +83,6 @@ def test_streaming_candidates_cap_degenerate_bucket(spark, tmp_path):
     assert 0 < n_pairs <= max_pairs  # bounded, not O(n²)
 
 
-def test_narrow_band_rows_equal_agg_band_rows(spark, sf_dir):
-    """The per-row signature variant must bucket IDENTICALLY to the
-    batch explode+groupBy pipeline — stream/batch parity rests on it."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = sorted(map(tuple, dedup.minhash_band_rows(docs).collect()))
-    b = sorted(map(tuple, dedup.minhash_band_rows_narrow(docs).collect()))
-    assert a == b
-
-
 def test_streaming_countmin_sketch_matches_batch(spark, sf_dir, tmp_path):
     """The count-min sketch is mergeable, so the SAME cm_sketch()
     composition runs as a streaming aggregation; the converged stream

@@ -31,7 +31,7 @@ MAX_WIDE_EXCHANGES = {
     "e02_tumbling_window": 2,       # observed 1
     "e04_sessionize": 2,            # observed 1: one user_id shuffle
     "e05_asof_join": 2,             # observed 1
-    "d03_dedup_minhash_lsh": 4,     # observed 3: sig agg, band groupBy, verify
+    "d03_dedup_minhash_lsh": 3,     # observed 2: band groupBy, verify
     "s01_cosine_topk": 1,           # observed 0: broadcast query vec, top-k
     "s11_ivf_pq_search": 1,         # observed 0: narrow map + two top-k's
     "t02_quality_score": 1,         # observed 0
