@@ -9,14 +9,13 @@ oracle-verified here in batch — time-bucketed groupBys behave the same
 in both modes.
 
 Scale posture: everything is a single hash shuffle on (key) or
-(bucket,key); sessionization and as-of use one window sort per key —
-the same shape Flink/Kafka-Streams state stores would give, minus the
-state store.
+(bucket,key); sessionization (one range shuffle on user_id) and as-of
+use one window sort per key — the same shape Flink/Kafka-Streams state
+stores would give, minus the state store.
 """
 
 from __future__ import annotations
 
-import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -124,30 +123,37 @@ FROM expanded GROUP BY w_start ORDER BY w_start
 
 # ---------------------------------------------------------------------------
 # E4 — sessionization: 30-minute inactivity gap per user.
-# lag → gap flag → running sum = session id (one shuffle by user_id).
+# lag → gap flag → running sum = session id.  One range exchange on
+# user_id serves both windows, the group-by and the final ordering.
 # ---------------------------------------------------------------------------
-def e04_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _ev(spark, sf_dir)
+def _sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per (user_id, session_id): n_events, session_start,
+    session_end, session_value.  The plan e04 and e14 share.
+
+    Ties on ts cannot move an event between sessions: a tied row's gap
+    is 0, so every row of a tied run gets the same running sum."""
+    ev = _ev(spark, sf_dir).repartitionByRange("user_id")
     w = W.partitionBy("user_id").orderBy("ts")
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
-    is_new = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    sess = (
-        ev.withColumn("is_new", is_new)
+    is_head = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
+    return (
+        ev.withColumn("is_head", is_head)
         .withColumn(
             "session_id",
-            F.sum("is_new").over(w.rowsBetween(W.unboundedPreceding, 0)),
+            F.sum("is_head").over(w.rowsBetween(W.unboundedPreceding, 0)),
         )
-    )
-    return (
-        sess.groupBy("user_id", "session_id")
+        .groupBy("user_id", "session_id")
         .agg(
             F.count("*").alias("n_events"),
             F.min("ts").alias("session_start"),
             F.max("ts").alias("session_end"),
             F.round(F.sum("value"), 2).alias("session_value"),
         )
-        .orderBy("user_id", "session_id")
     )
+
+
+def e04_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _sessions(spark, sf_dir).orderBy("user_id", "session_id")
 
 
 E04_SQL = """
@@ -748,200 +754,23 @@ def e16_rolling_24h_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Checkpoint RDD handles still potentially referenced by a returned
-# e14_sessions_recursive frame, as (weakref-to-result-frame, handle)
-# pairs.  r16 (VERDICT r15 "what's wrong" #2): the r15 registry was a
-# flat list released unconditionally at the start of the NEXT build,
-# which reintroduced a lifetime hazard — with two e14 result frames
-# alive at once (two threads, or a harness holding the old frame while
-# building a new one) the second build unpersisted blocks the first
-# frame's plan still referenced (`Block rdd_N does not exist`).  Keyed
-# by the result frame, a handle is released only once its frame is
-# garbage — pinned by tests/test_events.py::
-# test_e14_two_result_frames_alive_concurrently.  Retention follows:
-# N live e14 result frames keep N generations of checkpoint blocks,
-# and a dropped frame's blocks are freed at the NEXT e14 build (the
-# sweep in _e14_release_dead_handles), not when the frame is
-# garbage-collected (SCALE.md §6q).
-_E14_LIVE_HANDLES: list = []  # [(weakref.ref(result_frame), rdd_handle)]
-
-
-def _e14_release_dead_handles() -> None:
-    """Unpersist checkpoint blocks whose result frame has been
-    collected; keep handles whose frame is still alive.  Called at the
-    start of every build so repeated-invocation sweeps (bench, strict
-    verify) never accumulate corpus-sized block sets — the r15
-    behavior — without the next build ever touching a live frame."""
-    global _E14_LIVE_HANDLES
-    still_live = []
-    for ref, h in _E14_LIVE_HANDLES:
-        if ref() is None:
-            try:
-                h.unpersist(False)
-            except Exception:
-                pass
-        else:
-            still_live.append((ref, h))
-    _E14_LIVE_HANDLES = still_live
-
-
-def _ck_rdd_handle(df: DataFrame):
-    """The exact JVM RDD handle backing a ``localCheckpoint``'d
-    DataFrame: its analyzed plan is the LogicalRDD wrapping the
-    persisted internal RDD, so ``unpersist`` through this handle can
-    only ever touch THIS checkpoint's blocks — never a concurrent
-    thread's cache (VERDICT r14 "what's wrong" #2)."""
-    return df._jdf.queryExecution().analyzed().rdd()
-
-
 # ---------------------------------------------------------------------------
-# E14 — the same 30-minute-gap sessions as e04, via chain traversal.
-# The contract is the recursive chain walk, stated once as the DuckDB
-# oracle (E14_SQL): each recursion step advances one event along a
-# per-user chain, so its LEVELS = the longest session — the skew wall.
-# The Spark plan is pointer jumping, which needs O(log longest-chain)
-# rounds instead.  The chain links on a per-user ROW NUMBER (ts,
-# event_id order), not on ts: two events of one user sharing a
-# timestamp would make a ts-keyed link match both rows, forking the
-# chain and double-counting the session.
+# E14 — the same 30-minute-gap sessions as e04, stated as a chain walk.
 # ---------------------------------------------------------------------------
 def e14_sessions_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """e14's REGISTERED plan — pointer jumping (doubling) since r14
-    (VERDICT r13 ask #4, measured decision; artifact
-    `tools/e14_pointer_probe_r14_100x_zipf.json`).  A recursive chain
-    walk replays ONE chain step per iteration, so a hot user's longest
-    session sets the iteration count: on the 100× zipf corpus the
-    Spark rCTE failed its 100-level recursion guard on the hot user's
-    1.48M-event session, and with the guard raised it timed out, while
-    this plan computes all 4,883,560 sessions in ~205 s.  Here every
-    event starts with a pointer at its predecessor (heads self-loop)
-    and each round composes ptr ← ptr(ptr), halving every event's
-    remaining distance to its session head: O(log longest-chain)
-    rounds total, the d09 large/small-star trick applied to a path.
+    """Sessions as (user_id, session_start, session_end, n_events).
 
-    Pointer convergence lands every event on the nearest preceding
-    head — the session head — so the rows equal E14_SQL's; the strict
-    gate and tests/test_events.py pin that.  Each round is one shuffle
-    join on (user_id, ptr); the join key spreads a hot user's rows
-    across ptr values, so skew DILUTES with each round instead of
-    serializing.  Rounds localCheckpoint (the d09 convention):
-    truncates lineage (the self-referential join would otherwise
-    double the plan every round) and materializes, so the convergence
-    probe is a cheap scan, not a re-execution.
-
-    Storage is bounded (r14, tightened r15): consumed generations are
-    released as soon as their successor is materialized.  Without the
-    release, ~log2(max chain) generations accumulate and the
-    1000×-zipf corpus (100M rows × ~27 rounds) OOMs the driver heap at
-    round ~12 with unrecoverable `Block rdd_N does not exist` errors
-    (measured — tools/e14_pointer_probe_r14_1000x_zipf.json records
-    the pre-fix failure at 1177 s).  Neither `DataFrame.unpersist()`
-    nor `toRdd().unpersist()` reaches a local checkpoint's blocks; the
-    release derives the EXACT JVM RDD handle from the checkpointed
-    DataFrame itself (`_ck_rdd_handle` — its analyzed plan is the
-    LogicalRDD wrapping the persisted RDD), so a persist from a
-    concurrent thread of the same session can never be captured
-    (VERDICT r14 "what's wrong" #2 / ADVICE r14 — the r14 mechanism
-    set-diffed the GLOBAL getPersistentRDDs map around the call).
-
-    r15 (VERDICT r14 ask #7): CONVERGED-ROW FILTERING was built,
-    row-identity-verified (same 4,883,560 sessions at 100× zipf) and
-    REJECTED on the ABAB gate — 0.87× at 100× zipf, 2/3 interleaved
-    pairs clearly slower (tools/r15_e14_filter_probe.json records the
-    run).  Why the geometric-shrink intuition fails: filtering only
-    thins the join's LEFT side (10M→~1.5M rows after round 2 on this
-    corpus), but the mapping (right) side must stay corpus-sized every
-    round — an active row can target any long-converged node — and the
-    added per-round work (separate done-part and active-part
-    checkpoint jobs, a k-part union feeding the mapping) costs more
-    than the left-side shuffle saving.  That candidate is no longer in
-    the tree; do not rebuild it without a corpus where the LEFT side
-    dominates the join cost."""
-    # Release any checkpoint blocks whose result frame a PREVIOUS e14
-    # build of this process has since dropped (ADVICE r14: the final
-    # generation's blocks outlive the returned DataFrame until GC;
-    # clearCache() does not reach them).  r16: release is keyed by the
-    # result frame's liveness, so a still-alive older result is never
-    # invalidated (see _e14_release_dead_handles).
-    _e14_release_dead_handles()
-
-    from pyspark import StorageLevel
-
-    # Serialized, disk-spillable generations (PySpark's
-    # MEMORY_AND_DISK is JVM-serialized): the default deserialized
-    # object store holds ~3× the bytes per row, and at 100M rows ×
-    # two live generations that alone OOMed a 32g heap mid-round
-    # even with the release below in place (measured, same artifact).
-    _GEN_LEVEL = StorageLevel.MEMORY_AND_DISK
-
-    ev = _ev(spark, sf_dir)
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    base = ev.select(
-        "user_id",
-        "ts",
-        F.row_number().over(w).alias("rn"),
-        F.lag("ts").over(w).alias("prev_ts"),
-    )
-    nodes = base.withColumn(
-        "is_head",
-        F.col("prev_ts").isNull()
-        | (F.col("ts").cast("long") - F.col("prev_ts").cast("long") > 1800),
-    )
-    cur = nodes.select(
-        "user_id",
-        "ts",
-        "rn",
-        F.when(F.col("is_head"), F.col("rn"))
-        .otherwise(F.col("rn") - 1)
-        .alias("ptr"),
-    ).localCheckpoint(storageLevel=_GEN_LEVEL)
-    cur_h = _ck_rdd_handle(cur)
-    while True:
-        m = cur.select(
-            F.col("user_id").alias("m_uid"),
-            F.col("rn").alias("m_rn"),
-            F.col("ptr").alias("m_ptr"),
-        )
-        nxt = (
-            cur.join(
-                m,
-                (F.col("user_id") == F.col("m_uid"))
-                & (F.col("ptr") == F.col("m_rn")),
-            )
-            .select(
-                "user_id",
-                "ts",
-                "rn",
-                F.col("m_ptr").alias("ptr"),
-                (F.col("m_ptr") != F.col("ptr")).alias("moved"),
-            )
-            # eager: materialized on return, so the consumed
-            # generation below is safe to drop
-            .localCheckpoint(storageLevel=_GEN_LEVEL)
-        )
-        nxt_h = _ck_rdd_handle(nxt)
-        cur_h.unpersist(False)
-        cur, cur_h = nxt.drop("moved"), nxt_h
-        if nxt.filter("moved").limit(1).count() == 0:
-            break
-    # The FINAL generation's blocks back the returned (lazy) result —
-    # they must stay alive for the caller, so register the handle
-    # KEYED BY the result frame: a later build (or sweep iteration)
-    # releases it only once this frame is garbage (ADVICE r14 #2:
-    # GC/ContextCleaner reclamation is nondeterministic across a long
-    # sweep, so the explicit release stays).
-    result = (
-        cur.groupBy("user_id", F.col("ptr").alias("head_rn"))
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count("*").cast("bigint").alias("n_events"),
-        )
+    The contract is the recursive chain walk E14_SQL: each recursion
+    step advances one event along a per-user chain, linked on a row
+    number so tied timestamps cannot fork it.  The Spark plan is e04's
+    window running sum (``_sessions``), which gives the same sessions
+    in one pass whatever the longest chain; session_value is projected
+    away and column pruning drops its sum."""
+    return (
+        _sessions(spark, sf_dir)
         .select("user_id", "session_start", "session_end", "n_events")
         .orderBy("user_id", "session_start")
     )
-    _E14_LIVE_HANDLES.append((weakref.ref(result), cur_h))
-    return result
 
 
 E14_SQL = """

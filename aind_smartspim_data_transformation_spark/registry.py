@@ -32,14 +32,13 @@ from aind_smartspim_data_transformation_spark.plans import relational
 # d14's self-pair filter were de-spoiled (coalesce / null-safe <=>) so
 # AQE's runtime stage cache shares ONE signature subtree across all
 # consumers (ask #3 — executed plans now 1 documents scan, was 2; d04
-# rotated too as a _simhash_sigs consumer, belt-and-braces); (c)
-# e14's checkpoint-handle registry is keyed by the result frame (ask
-# #8 — release mechanics only, plan unchanged, rotated on the n18
-# lesson: every touched query gets driver verification).  No new
-# registry keys.  Later: d08 moved from its own label-propagation loop
-# onto the shared large-star/small-star components (d09's plan), so it
-# leads too; so do s09 and n07 (Lloyd assignment now calls the numpy
-# kernel shared with s11), d03 (its observation option is gone), i03
+# rotated too as a _simhash_sigs consumer, belt-and-braces); (c) e14
+# now runs e04's sessions plan, which gained a user_id range exchange,
+# so both lead on the n18 lesson: every touched query gets driver
+# verification.  No new registry keys.  Later: d08 moved from its own
+# label-propagation loop onto the shared large-star/small-star
+# components (d09's plan), so it leads too; so do s09 and n07 (Lloyd
+# assignment now calls the numpy kernel shared with s11), d03 (its observation option is gone), i03
 # (one mapInPandas now generates, reduces and checksums its chunks) and
 # i05 (it replays the unfolded band plan: one band buffer in the cap,
 # marker keys over (slab, band)).  So do the users of the single sketch
@@ -53,6 +52,7 @@ _LEADING_R16 = [
     "d07_simhash_hamming_pairs",
     "d14_hamming_neighbor_topk",
     "e14_sessions_recursive",
+    "e04_sessionize",
     "d08_dup_components",
     "s09_kmeans_train",
     "n07_semantic_dedup",

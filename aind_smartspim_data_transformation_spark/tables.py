@@ -40,8 +40,8 @@ TABLE_NAMES = (
 # 0.17–0.29 s per call at the bench SF — a pure per-query driver fixed
 # cost paid by each of a query's table loads on each timed run.  The
 # mtime in the key makes a rewritten fixture (tests overwrite tmp
-# paths in place) miss cleanly; distinct sessions (e.g. e14's scoped
-# clone) get distinct memos and die with their session (WeakKey).
+# paths in place) miss cleanly; distinct sessions get distinct memos
+# and die with their session (WeakKey).
 _TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )

@@ -72,7 +72,7 @@ def test_cogroup_applyinpandas_matches_join(spark, sf_dir):
 
 
 def test_recursive_sessions_equal_window_sessions(spark, sf_dir):
-    """e14's pointer-jumping chains produce exactly e04's window-scan
+    """e14 (the chain-walk contract) returns exactly e04's window-scan
     sessions (user, start, end, event count) — two formulations, one
     contract."""
     e04 = sorted(
@@ -86,36 +86,34 @@ def test_recursive_sessions_equal_window_sessions(spark, sf_dir):
     assert e14 == e04
 
 
-def test_e14_two_result_frames_alive_concurrently(spark, sf_dir):
-    """r16 (VERDICT r15 "what's wrong" #2): building a SECOND e14
-    result while the first frame is still alive must not unpersist the
-    first frame's checkpoint blocks (the r15 registry released the
-    previous build's handles unconditionally → `Block rdd_N does not
-    exist` on the older frame).  Handles are now keyed by the result
-    frame and released only once it is garbage."""
-    import gc
+def test_e14_build_submits_no_spark_job(spark, sf_dir):
+    """Building e14 is plan construction only: no Spark job runs until
+    the caller acts on the frame.  The events table is loaded first so
+    its one-off schema read is not counted."""
+    from aind_smartspim_data_transformation_spark.tables import load_table
 
-    a = events.e14_sessions_recursive(spark, sf_dir)
-    a_rows = sorted(map(tuple, a.collect()))
-    b = events.e14_sessions_recursive(spark, sf_dir)  # a alive here
-    # the OLDER frame must still execute off its checkpoint blocks
-    assert sorted(map(tuple, a.collect())) == a_rows
-    assert sorted(map(tuple, b.collect())) == a_rows
-    # once a result frame is garbage, the next release pass drops its
-    # handle (no unbounded accumulation across a sweep)
-    del a, b
-    gc.collect()
-    events._e14_release_dead_handles()
-    assert events._E14_LIVE_HANDLES == []
+    load_table(spark, sf_dir, "events")
+    sc = spark.sparkContext
+    group = "test-e14-build"
+    sc.setJobGroup(group, "e14 build")
+    try:
+        events.e14_sessions_recursive(spark, sf_dir)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert list(jobs) == []
 
 
-def test_pointer_jumping_handles_long_chains_and_ties(spark, tmp_path):
+def test_sessions_long_chain_ties_and_singletons_match_chain_walk(
+    spark, tmp_path
+):
     """Shapes the base fixture lacks: a session LONGER than Spark's
     100-level rCTE guard (300 same-gap events — the zipf-hot-user shape
-    in miniature), same-timestamp events within one user (the rn
-    tie-break on event_id), and single-event sessions.  Checked against
-    e04's window scan and against E14_SQL, the recursive chain walk in
-    DuckDB."""
+    in miniature), same-timestamp events within one user, and
+    single-event sessions.  e14 is checked against e04's window scan
+    and against E14_SQL, the recursive chain walk in DuckDB."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1)
@@ -138,16 +136,16 @@ def test_pointer_jumping_handles_long_chains_and_ties(spark, tmp_path):
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
         for r in events.e04_sessionize(spark, str(tmp_path)).collect()
     )
-    ptr = sorted(
+    e14 = sorted(
         map(
             tuple,
             events.e14_sessions_recursive(spark, str(tmp_path)).collect(),
         )
     )
-    assert ptr == e04
-    assert any(n == 300 for _, _, _, n in ptr)  # the long chain survived
+    assert e14 == e04
+    assert any(n == 300 for _, _, _, n in e14)  # the long chain survived
     _, oracle = run_oracle(events.E14_SQL, str(tmp_path), tables=["events"])
-    assert ptr == sorted(oracle)
+    assert e14 == sorted(oracle)
 
 
 def test_bucketed_rolling_boundary_ties(spark, tmp_path):
@@ -294,9 +292,9 @@ def test_variant_props_equal_json_extract(spark, sf_dir):
 
 
 def test_recursive_sessions_duplicate_timestamps(spark, tmp_path):
-    """Two events of one user at the SAME timestamp must not fork the
-    session chain: the chain links on a per-user row number, so the
-    tied events count once each in one session."""
+    """Two events of one user at the SAME timestamp count once each in
+    one session: the chain walk links on a per-user row number, and the
+    running sum gives every row of a tied run one session id."""
     from datetime import datetime as dt
 
     rows = [

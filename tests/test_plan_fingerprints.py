@@ -29,7 +29,8 @@ MAX_WIDE_EXCHANGES = {
     "q03_revenue_by_nation": 2,     # observed 1: AQE broadcasts dims
     "q12_distinct_agg": 3,          # observed 2: Expand + distinct aggs
     "e02_tumbling_window": 2,       # observed 1
-    "e04_sessionize": 2,            # observed 1: one user_id shuffle
+    "e04_sessionize": 1,            # observed 0: one user_id range exchange
+    "e14_sessions_recursive": 1,    # observed 0: e04's plan, value pruned
     "e05_asof_join": 2,             # observed 1
     "d03_dedup_minhash_lsh": 3,     # observed 2: band groupBy, verify
     "s01_cosine_topk": 1,           # observed 0: broadcast query vec, top-k

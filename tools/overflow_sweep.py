@@ -228,58 +228,61 @@ def main() -> int:
             names.remove(k)
             print(f"{k}: WAIVED — {reason}")
 
-    tmp = tempfile.mkdtemp(prefix="overflow_sweep_")
-    print(
-        f"# scale dir {tmp}: {args.base} with {_SCALED} x{args.factor}"
-        + (f" skew={args.skew} frac={args.skew_frac}" if args.skew else "")
-    )
-    build_scale_dir(
-        spark, args.base, tmp, args.factor, skew=args.skew, skew_frac=args.skew_frac
-    )
-
-    overflowed, errored = [], []
-    for name in names:
-        # Cache hygiene lives HERE, not in the plans: queries persist
-        # inputs their returned plan still references, so releasing
-        # between queries keeps a long sweep bounded without breaking
-        # plan shapes (r8 n05/n15 regression).
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        try:
-            # Evaluate through the noop sink, not collect(): every
-            # output expression is computed on the executors (the
-            # overflow check this sweep exists for) but nothing is
-            # serialized to the driver — a duplicate-heavy 10× corpus
-            # makes pair-listing queries (d07) return tens of millions
-            # of rows, which is a result-SIZE harness limit, not an
-            # engine envelope.  Row count rides an Observation on the
-            # same single execution.
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            df = queries[name](spark, tmp).observe(
-                obs, F.count(F.lit(1)).alias("n")
-            )
-            df.write.mode("overwrite").format("noop").save()
-            n = obs.get["n"]
-            print(f"{name}: OK rows={n} ({time.perf_counter() - t0:.1f}s)")
-        except Exception as exc:  # keep sweeping; classify
-            msg = f"{type(exc).__name__}: {exc}"
-            if any(m.lower() in msg.lower() for m in _OVERFLOW_MARKERS):
-                overflowed.append(name)
-                print(f"{name}: OVERFLOW {msg.splitlines()[0][:200]}")
-            else:
-                errored.append(name)
-                print(f"{name}: ERROR {msg.splitlines()[0][:200]}")
-    print(
-        f"\n{len(names)} swept; "
-        + (
-            f"OVERFLOW: {' '.join(overflowed)}; ERROR: {' '.join(errored)}"
-            if (overflowed or errored)
-            else "ALL CLEAN"
+    # the scale dir is a replicated corpus (210 MB at --factor 100):
+    # it goes with the run, whichever way the run ends
+    with tempfile.TemporaryDirectory(prefix="overflow_sweep_") as tmp:
+        print(
+            f"# scale dir {tmp}: {args.base} with {_SCALED} x{args.factor}"
+            + (f" skew={args.skew} frac={args.skew_frac}" if args.skew else "")
         )
-    )
-    return 1 if (overflowed or errored) else 0
+        build_scale_dir(
+            spark, args.base, tmp, args.factor,
+            skew=args.skew, skew_frac=args.skew_frac,
+        )
+
+        overflowed, errored = [], []
+        for name in names:
+            # Cache hygiene lives HERE, not in the plans: queries persist
+            # inputs their returned plan still references, so releasing
+            # between queries keeps a long sweep bounded without breaking
+            # plan shapes (r8 n05/n15 regression).
+            spark.catalog.clearCache()
+            t0 = time.perf_counter()
+            try:
+                # Evaluate through the noop sink, not collect(): every
+                # output expression is computed on the executors (the
+                # overflow check this sweep exists for) but nothing is
+                # serialized to the driver — a duplicate-heavy 10× corpus
+                # makes pair-listing queries (d07) return tens of millions
+                # of rows, which is a result-SIZE harness limit, not an
+                # engine envelope.  Row count rides an Observation on the
+                # same single execution.
+                from pyspark.sql import Observation
+
+                obs = Observation()
+                df = queries[name](spark, tmp).observe(
+                    obs, F.count(F.lit(1)).alias("n")
+                )
+                df.write.mode("overwrite").format("noop").save()
+                n = obs.get["n"]
+                print(f"{name}: OK rows={n} ({time.perf_counter() - t0:.1f}s)")
+            except Exception as exc:  # keep sweeping; classify
+                msg = f"{type(exc).__name__}: {exc}"
+                if any(m.lower() in msg.lower() for m in _OVERFLOW_MARKERS):
+                    overflowed.append(name)
+                    print(f"{name}: OVERFLOW {msg.splitlines()[0][:200]}")
+                else:
+                    errored.append(name)
+                    print(f"{name}: ERROR {msg.splitlines()[0][:200]}")
+        print(
+            f"\n{len(names)} swept; "
+            + (
+                f"OVERFLOW: {' '.join(overflowed)}; ERROR: {' '.join(errored)}"
+                if (overflowed or errored)
+                else "ALL CLEAN"
+            )
+        )
+        return 1 if (overflowed or errored) else 0
 
 
 if __name__ == "__main__":
