@@ -98,29 +98,46 @@ def parse_pytest_counts(output: str) -> str:
     )
 
 
+def _cited_size(rel: str) -> int | None:
+    """Byte size of a cited artifact, or None when it does not exist.
+    ``<rev>:tools/x.json`` names a file deleted from the tree, read from
+    that git revision; a bare ``tools/x.json`` is read from the tree."""
+    rev, sep, _ = rel.partition(":")
+    if not sep:
+        p = REPO / rel
+        return p.stat().st_size if p.is_file() else None
+    out = subprocess.run(
+        ["git", "cat-file", "-s", rel], cwd=REPO, capture_output=True, text=True
+    )
+    return int(out.stdout) if out.returncode == 0 else None
+
+
 def check_evidence() -> None:
     """Evidence-rule enforcement (VERDICT r13 ask #2): every
     `tools/*.{json,jsonl,log}` path cited in SCALE.md or any
     NOTES_r*.md must exist and be non-empty (≥16 bytes — the r13
     failure mode was a 1-byte file holding a lone newline, committed
     where a measured per-key-state table's artifact should have been).
-    The rule itself stood since r13; this makes the gate red instead
-    of trusting the citer."""
+    A citation in git-revision form (`<sha>:tools/x.json`) must exist,
+    non-empty, at that revision.  The rule itself stood since r13; this
+    makes the gate red instead of trusting the citer."""
     import re
 
-    pat = re.compile(r"tools/[A-Za-z0-9_\-./]+?\.(?:json|jsonl|log)\b")
+    pat = re.compile(
+        r"(?:\b[0-9a-f]{7,40}:)?tools/[A-Za-z0-9_\-./]+?\.(?:json|jsonl|log)\b"
+    )
     cited: dict[str, list[str]] = {}
     for doc in sorted([REPO / "SCALE.md", *REPO.glob("NOTES_r*.md")]):
         for m in pat.finditer(doc.read_text()):
             cited.setdefault(m.group(0), []).append(doc.name)
     bad = []
     for rel, docs in sorted(cited.items()):
-        p = REPO / rel
-        if not p.is_file():
+        size = _cited_size(rel)
+        if size is None:
             bad.append(f"  MISSING {rel} (cited in {', '.join(sorted(set(docs)))})")
-        elif p.stat().st_size < 16:
+        elif size < 16:
             bad.append(
-                f"  EMPTY ({p.stat().st_size} B) {rel} "
+                f"  EMPTY ({size} B) {rel} "
                 f"(cited in {', '.join(sorted(set(docs)))})"
             )
     if bad:
