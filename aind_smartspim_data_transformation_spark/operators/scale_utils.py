@@ -303,154 +303,6 @@ def _bucket_expr(order_col: str, uniq: list[float], descending: bool = False):
     )
 
 
-def distributed_cumsum(
-    df: DataFrame,
-    order_col: str,
-    value_col: str,
-    out_col: str = "running_total",
-    num_partitions: int | None = None,
-    partition_cols: tuple[str, ...] = (),
-    ascending: bool = True,
-    tie_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Global running sum WITHOUT the single-task global window.
-
-    ``Window.orderBy(...)`` with no ``partitionBy`` funnels the ENTIRE
-    input through one task (Spark even warns) — the classic prefix-sum
-    scale trap that n05/n06's docstrings document around.  This is the
-    real two-pass construction those docstrings promise:
-
-    1. ``repartitionByRange`` on the order key — partition *p* holds a
-       contiguous key range, so partition order == key order;
-    2. per-partition partial sums (#partitions rows, map-side
-       combined), cumulated into per-partition OFFSETS on the driver
-       (a #partitions-sized list, not data) and broadcast-joined back;
-    3. within-partition cumsum via a window PARTITIONED by the range
-       partition id — every task windows only its own range.
-
-    Row-identical to the global window when ``order_col`` is a total
-    order (unique keys); with ties the per-row running values within a
-    tie group are order-dependent in BOTH constructions (document or
-    pre-aggregate ties away).  The input is scanned three times
-    (boundary sample + offset pass + cumsum pass) — persist upstream
-    if it is expensive to recompute.
-
-    The range buckets come from EXPLICIT approxQuantile boundaries
-    baked in as literals (:func:`_quantile_bounds` — see its docstring
-    for why ``repartitionByRange`` would be silently wrong).  Boundary
-    comparison happens in DOUBLE (what approxQuantile returns): integer
-    keys beyond 2^53 can land on either side of a boundary, which only
-    skews bucket BALANCE, never the total — the within-bucket window
-    still orders by the original key.  approxQuantile's 0.001 relative
-    error likewise bounds imbalance, not correctness.
-
-    ``partition_cols`` generalizes the construction to per-group
-    running sums (``sum(v) OVER (PARTITION BY g ORDER BY k)``): the
-    bucket boundaries stay GLOBAL (one quantile pass), partial sums
-    group by (group, bucket), and — because each group's offsets derive
-    only from its own ≤ #buckets partial rows — the offsets are
-    computed with a window PARTITIONED by the group over that tiny
-    aggregate, never on the driver and never through a single task.
-    Every shuffle is keyed; no partition-less window exists at any
-    group size.
-
-    ``ascending=False`` orders (and range-buckets) by ``order_col``
-    DESC (NaN first, NULLs last — Spark's DESC ordering);
-    ``tie_cols`` extend the within-bucket sort (always ascending) so a
-    non-unique order key still yields a deterministic running sum —
-    the same total-order contract :func:`distributed_ntile` uses.
-    Range buckets never split equal keys, so the tie group always
-    cumulates inside one window.
-    """
-    for reserved in ("_rpid", "_offset", "_psum", out_col):
-        if reserved in df.columns:
-            raise ValueError(
-                f"distributed_cumsum: input already has a column named "
-                f"{reserved!r} — rename it (the construction would "
-                f"silently overwrite and drop it)"
-            )
-    import decimal
-
-    from pyspark.sql.types import DecimalType
-
-    if isinstance(df.schema[value_col].dataType, DecimalType):
-        # the driver-side offset pass would hand decimal.Decimal
-        # partial sums to createDataFrame against a long/double schema
-        # (opaque failure); refuse up front with the fix in the message
-        raise ValueError(
-            f"distributed_cumsum: value column {value_col!r} is DECIMAL — "
-            f"cast it to bigint or double first (decimal partial sums "
-            f"are not representable in the offset table's schema)"
-        )
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    uniq = _quantile_bounds(df, order_col, n)
-    parts = df.withColumn(
-        "_rpid", _bucket_expr(order_col, uniq, descending=not ascending)
-    )
-    order = [
-        F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    ] + [F.col(c).asc() for c in tie_cols]
-
-    from pyspark.sql.window import Window as W
-
-    if partition_cols:
-        # per-group offsets: a window over the (group, bucket) partial-
-        # sum AGGREGATE (≤ #buckets rows per group), partitioned by the
-        # group — bounded per task, fully distributed, no collect()
-        partials = parts.groupBy(*partition_cols, "_rpid").agg(
-            F.sum(value_col).alias("_psum")
-        )
-        w_off = (
-            W.partitionBy(*partition_cols)
-            .orderBy("_rpid")
-            .rowsBetween(W.unboundedPreceding, -1)
-        )
-        offsets_df = partials.select(
-            *partition_cols,
-            "_rpid",
-            F.coalesce(F.sum("_psum").over(w_off), F.lit(0)).alias("_offset"),
-        )
-        w = (
-            W.partitionBy(*partition_cols, "_rpid")
-            .orderBy(*order)
-            .rowsBetween(W.unboundedPreceding, 0)
-        )
-        return (
-            parts.join(offsets_df, [*partition_cols, "_rpid"])
-            .withColumn(out_col, F.col("_offset") + F.sum(value_col).over(w))
-            .drop("_rpid", "_offset")
-        )
-
-    partials = (
-        parts.groupBy("_rpid").agg(F.sum(value_col).alias("_psum")).collect()
-    )
-    running = 0
-    offsets = []
-    for r in sorted(partials, key=lambda r: r["_rpid"]):
-        offsets.append((int(r["_rpid"]), running))
-        running += r["_psum"] or 0
-    if isinstance(running, (float, decimal.Decimal)):
-        # a float value_col makes later offsets float while the first
-        # is int 0 — PySpark's schema verifier rejects int for a
-        # DoubleType field, so coerce the whole column (Decimal sums
-        # are refused above; the isinstance keeps this total anyway)
-        offsets = [(pid, float(v)) for pid, v in offsets]
-    offsets_df = df.sparkSession.createDataFrame(
-        offsets,
-        f"_rpid int, _offset {'double' if isinstance(running, float) else 'long'}",
-    )
-    w = (
-        W.partitionBy("_rpid")
-        .orderBy(*order)
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    return (
-        parts.join(F.broadcast(offsets_df), "_rpid")
-        .withColumn(out_col, F.col("_offset") + F.sum(value_col).over(w))
-        .drop("_rpid", "_offset")
-    )
-
-
 def distributed_order_stats(
     df: DataFrame,
     order_col: str,
@@ -460,21 +312,44 @@ def distributed_order_stats(
     cum_col: str = "running_total",
     ascending: bool = True,
     num_partitions: int | None = None,
-) -> tuple[DataFrame, dict]:
-    """EXACT global ``row_number`` — and, with ``value_col``, the
-    running sum — over ``(order_col [DESC], *tie_cols)`` WITHOUT a
-    partition-less window, plus the grand totals as plain Python
-    numbers (computed from the same per-bucket partials the offsets
-    need, so "attach the total" costs no extra pass and no
-    single-partition aggregate exchange).
+    partition_cols: tuple[str, ...] = (),
+) -> tuple[DataFrame, dict | None]:
+    """EXACT ``row_number`` — and, with ``value_col``, the running sum —
+    over ``(order_col [DESC], *tie_cols)``, globally or per
+    ``partition_cols`` group, WITHOUT a partition-less window.
 
-    Returns ``(df + rank_col [+ cum_col], {"count": N, "sum": S})``
-    (``sum`` is None without ``value_col``).  Same construction and
-    determinism contract as :func:`distributed_ntile` — literal range
-    buckets, per-bucket windows, driver offsets of #buckets rows.
-    This is what retires the "rank the vocab aggregate in one task"
-    idiom (t10/t12): the vocabulary grows sublinearly but unboundedly,
-    and with this the rank pass is bucket-parallel at any vocab size.
+    ``Window.orderBy(...)`` with no ``partitionBy`` funnels the ENTIRE
+    input through one task (Spark even warns).  This range-bucket
+    construction is the one every global-order operator here rides
+    (:func:`distributed_ntile`, the vocab ranks, the grouped running
+    sums):
+
+    1. approxQuantile boundaries on ``order_col`` become literal range
+       buckets (:func:`_quantile_bounds`, :func:`_bucket_expr`); equal
+       keys never split across buckets;
+    2. per-(group,) bucket partials — row count and value sum — become
+       per-bucket offsets.  Ungrouped, the ≤ #buckets partial rows go to
+       the driver and come back as a broadcast table, which also yields
+       the grand totals as plain Python numbers.  Grouped, a window over
+       the partial aggregate partitioned by the group computes them —
+       never the driver, never one task, at any group count;
+    3. ``row_number`` and the running sum run in a window partitioned
+       by (group, bucket), plus the offsets — every task sorts only its
+       own key range.
+
+    Returns ``(df + rank_col [+ cum_col], totals)``: ``totals`` is
+    ``{"count": N, "sum": S}`` (``sum`` None without ``value_col``)
+    when ungrouped, None when grouped.  The rank is BIGINT, like
+    ``row_number()``.
+
+    Row-identical to the global (per-group) window whenever
+    ``(order_col, *tie_cols)`` is a total order; ``tie_cols`` always
+    sort ascending.  ``ascending=False`` buckets and sorts descending
+    (NaN first, NULLs last — Spark's DESC ordering).  Boundaries compare
+    in DOUBLE: integer keys past 2^53 and approxQuantile's error skew
+    bucket BALANCE, never the result.  The input is scanned three times
+    (quantile pass, partials pass, final pass) — persist upstream if it
+    is expensive to recompute.
     """
     reserved = ["_rpid", "_rnoff", "_cmoff", rank_col]
     if value_col is not None:
@@ -489,46 +364,65 @@ def distributed_order_stats(
         from pyspark.sql.types import DecimalType
 
         if isinstance(df.schema[value_col].dataType, DecimalType):
-            # same contract as distributed_cumsum: Decimal partial sums
-            # are not representable in the offset table's long/double
-            # schema — refuse with the fix instead of an opaque error
+            # Decimal partial sums are not representable in the offset
+            # table's long/double schema — refuse with the fix instead
+            # of an opaque error
             raise ValueError(
                 f"distributed_order_stats: value column {value_col!r} is "
                 f"DECIMAL — cast it to bigint or double first"
             )
+    from pyspark.sql.window import Window as W
+
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     uniq = _quantile_bounds(df, order_col, n)
     parts = df.withColumn(
         "_rpid", _bucket_expr(order_col, uniq, descending=not ascending)
     )
-    aggs = [F.count("*").alias("_n")]
-    if value_col is not None:
-        aggs.append(F.sum(value_col).alias("_s"))
-    partials = parts.groupBy("_rpid").agg(*aggs).collect()
-    run_n = 0
-    run_s = 0
-    offsets = []
-    for r in sorted(partials, key=lambda r: r["_rpid"]):
-        offsets.append((int(r["_rpid"]), run_n, run_s))
-        run_n += r["_n"]
-        if value_col is not None:
-            run_s += r["_s"] or 0
-    if value_col is not None and isinstance(run_s, float):
-        offsets = [(p, rn, float(rs)) for p, rn, rs in offsets]
-    offsets_df = df.sparkSession.createDataFrame(
-        offsets,
-        "_rpid int, _rnoff long, _cmoff "
-        + ("double" if isinstance(run_s, float) else "long"),
+    keys = [*partition_cols, "_rpid"]
+    partials = parts.groupBy(*keys).agg(
+        F.count("*").alias("_n"),
+        (F.sum(value_col) if value_col is not None else F.lit(0)).alias("_s"),
     )
-
-    from pyspark.sql.window import Window as W
+    if partition_cols:
+        w_off = (
+            W.partitionBy(*partition_cols)
+            .orderBy("_rpid")
+            .rowsBetween(W.unboundedPreceding, -1)
+        )
+        offsets = partials.select(
+            *keys,
+            F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_rnoff"),
+            F.coalesce(F.sum("_s").over(w_off), F.lit(0)).alias("_cmoff"),
+        )
+        totals = None
+    else:
+        run_n = run_s = 0
+        rows = []
+        for r in sorted(partials.collect(), key=lambda r: r["_rpid"]):
+            rows.append((int(r["_rpid"]), run_n, run_s))
+            run_n += r["_n"]
+            run_s += r["_s"] or 0
+        if isinstance(run_s, float):
+            # the first offset is int 0 — PySpark's schema verifier
+            # rejects int for a DoubleType field, so coerce the column
+            rows = [(p, rn, float(rs)) for p, rn, rs in rows]
+        offsets = F.broadcast(
+            df.sparkSession.createDataFrame(
+                rows,
+                "_rpid int, _rnoff long, _cmoff "
+                + ("double" if isinstance(run_s, float) else "long"),
+            )
+        )
+        totals = {
+            "count": run_n, "sum": run_s if value_col is not None else None
+        }
 
     order = [
         F.col(order_col).asc() if ascending else F.col(order_col).desc()
     ] + [F.col(c).asc() for c in tie_cols]
-    w = W.partitionBy("_rpid").orderBy(*order)
-    out = parts.join(F.broadcast(offsets_df), "_rpid").withColumn(
-        rank_col, (F.col("_rnoff") + F.row_number().over(w)).cast("int")
+    w = W.partitionBy(*keys).orderBy(*order)
+    out = parts.join(offsets, keys).withColumn(
+        rank_col, F.col("_rnoff") + F.row_number().over(w)
     )
     if value_col is not None:
         out = out.withColumn(
@@ -536,10 +430,7 @@ def distributed_order_stats(
             F.col("_cmoff")
             + F.sum(value_col).over(w.rowsBetween(W.unboundedPreceding, 0)),
         )
-    return (
-        out.drop("_rpid", "_rnoff", "_cmoff"),
-        {"count": run_n, "sum": run_s if value_col is not None else None},
-    )
+    return out.drop("_rpid", "_rnoff", "_cmoff"), totals
 
 
 def distributed_ntile(
@@ -552,78 +443,29 @@ def distributed_ntile(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """EXACT ``ntile(n) OVER (ORDER BY ...)`` without the single-task
-    global window.
+    global window: pure arithmetic on :func:`distributed_order_stats`'
+    global 0-based position p and total N.  SQL-standard ntile — with
+    q = N div n, r = N mod n, the first r tiles take q+1 rows:
+    ``p < r*(q+1) ? p div (q+1) : r + (p - r*(q+1)) div q`` (+1).
 
-    A partition-less ``Window.orderBy`` moves the ENTIRE input through
-    one reducer — the last plan shape in this repo that could not
-    survive 100× (VERDICT r6).  This is the distributed construction:
-
-    1. approxQuantile boundaries on ``order_col`` → literal range
-       buckets (:func:`_bucket_expr`; ties never split across buckets);
-    2. per-bucket COUNTS to the driver (≤ #buckets rows, not data) →
-       per-bucket row-number offsets and the global total N;
-    3. within-bucket ``row_number`` windowed BY bucket (every task
-       sorts only its own key range) + broadcast offset = exact global
-       0-based position p;
-    4. the tile is pure arithmetic on p — SQL-standard ntile: with
-       q = N div n, r = N mod n, the first r tiles take q+1 rows:
-       ``p < r*(q+1) ? p div (q+1) : r + (p - r*(q+1)) div q`` (+1).
-
-    Row-identical to the global-window ntile whenever
-    (order_col, *tie_cols) is a total order — the same determinism
-    contract the global form needs for a stable oracle.  ``ascending=
-    False`` buckets and sorts descending (NaN first, NULLs last,
-    matching Spark's DESC ordering).  The input is scanned three times
-    (quantile pass, count pass, tile pass) — persist upstream if it is
-    expensive to recompute.
-
-    The tile column is INT (like ``F.ntile``).  Output columns = input
+    Same determinism contract as :func:`distributed_order_stats`.  The
+    tile column is INT (like ``F.ntile``).  Output columns = input
     columns + ``out_col``.
     """
     if n_tiles < 1:
         raise ValueError(f"n_tiles must be >= 1, got {n_tiles}")
-    for reserved in ("_rpid", "_rnoff", "_gpos", out_col):
-        if reserved in df.columns:
-            raise ValueError(
-                f"distributed_ntile: input already has a column named "
-                f"{reserved!r} — rename it (the construction would "
-                f"silently overwrite and drop it)"
-            )
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    uniq = _quantile_bounds(df, order_col, n)
-    parts = df.withColumn(
-        "_rpid", _bucket_expr(order_col, uniq, descending=not ascending)
+    ranked, totals = distributed_order_stats(
+        df, order_col, tie_cols, rank_col=out_col, ascending=ascending,
+        num_partitions=num_partitions,
     )
-    counts = parts.groupBy("_rpid").count().collect()
-    running = 0
-    offsets: list[tuple[int, int]] = []
-    for r in sorted(counts, key=lambda r: r["_rpid"]):
-        offsets.append((int(r["_rpid"]), running))
-        running += r["count"]
-    total = running
-    offsets_df = df.sparkSession.createDataFrame(
-        offsets, "_rpid int, _rnoff long"
-    )
-
-    from pyspark.sql.window import Window as W
-
-    order = [
-        F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    ] + [F.col(c).asc() for c in tie_cols]
-    w = W.partitionBy("_rpid").orderBy(*order)
-    pos = parts.join(F.broadcast(offsets_df), "_rpid").withColumn(
-        "_gpos", F.col("_rnoff") + F.row_number().over(w) - F.lit(1)
-    )
-    q, rem = divmod(total, n_tiles)
+    q, rem = divmod(totals["count"], n_tiles)
     if q == 0:
         # fewer rows than tiles: row i (1-based) IS tile i
-        tile = F.col("_gpos") + F.lit(1)
+        tile = F.col(out_col)
     else:
-        cut = rem * (q + 1)
+        pos, cut = f"(`{out_col}` - 1)", rem * (q + 1)
         tile = F.expr(
-            f"CASE WHEN _gpos < {cut} THEN _gpos div {q + 1} "
-            f"ELSE {rem} + (_gpos - {cut}) div {q} END + 1"
+            f"CASE WHEN {pos} < {cut} THEN {pos} div {q + 1} "
+            f"ELSE {rem} + ({pos} - {cut}) div {q} END + 1"
         )
-    return pos.withColumn(out_col, tile.cast("int")).drop(
-        "_rpid", "_rnoff", "_gpos"
-    )
+    return ranked.withColumn(out_col, tile.cast("int"))

@@ -1147,8 +1147,8 @@ ORACLE["n04_event_burstiness"] = N04_SQL
 # by the model).  Token counts are t01's whitespace tokens (parity
 # with DuckDB's string_split established there).
 #
-# Plan (round 7): the per-source cumsum RIDES the two-pass distributed
-# prefix sum — operators/scale_utils.py::distributed_cumsum with
+# Plan (round 7): the per-source cumsum RIDES the range-bucket running
+# sum — operators/scale_utils.py::distributed_order_stats with
 # partition_cols=("source",): global literal doc_id range buckets,
 # per-(source, bucket) token subtotals, per-source offsets from a
 # window over that ≤#buckets-row AGGREGATE (partitioned by source —
@@ -1165,7 +1165,7 @@ _N05_CAP = 2048  # tokens per packed training sequence
 
 def n05_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aind_smartspim_data_transformation_spark.operators.scale_utils import (
-        distributed_cumsum,
+        distributed_order_stats,
     )
 
     cap = _N05_CAP
@@ -1174,13 +1174,11 @@ def n05_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.split("text", " ")).alias("tok"),
     ).persist()  # query-path cache: harness clearCache() releases — SCALE.md §6q
-    placed = distributed_cumsum(
-        docs, "doc_id", "tok", out_col="cum", partition_cols=("source",)
-    ).select(
-        "source",
-        "tok",
-        "cum",
-    ).select(
+    placed, _ = distributed_order_stats(
+        docs, "doc_id", value_col="tok", cum_col="cum",
+        partition_cols=("source",),
+    )
+    placed = placed.select(
         "source",
         "tok",
         F.expr(f"(cum - tok) div {cap}").alias("shard_first"),
@@ -2122,9 +2120,10 @@ ORACLE["n13_cluster_merge_qa"] = _n13_sql()
 
 # ===========================================================================
 # Round 7 — curriculum/coverage/retention audits, riding the round's
-# distributed window replacements (scale_utils.distributed_ntile /
-# distributed_cumsum with desc+ties) so the new machinery carries
-# oracle-backed correctness rows of its own.  All integer-exact.
+# distributed window replacement (scale_utils.distributed_order_stats,
+# directly for desc+ties running sums and via distributed_ntile for
+# tiles) so the construction carries oracle-backed correctness rows of
+# its own.  All integer-exact.
 # ===========================================================================
 
 
@@ -2210,7 +2209,7 @@ ORACLE["n14_token_volume_deciles"] = N14_SQL
 #
 # Plan: one (lang, tok) count aggregate (map-side combined; the only
 # pass over text), then the running coverage rides
-# distributed_cumsum(partition_cols=("lang",), ascending=False,
+# distributed_order_stats(partition_cols=("lang",), ascending=False,
 # tie_cols=("tok",)) — counts cumulate from the most frequent token
 # down with NO per-language single-task window and NO driver collect;
 # k_p is then a pure count of rows with cum < threshold (no rank
@@ -2220,7 +2219,7 @@ ORACLE["n14_token_volume_deciles"] = N14_SQL
 # ---------------------------------------------------------------------------
 def n15_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aind_smartspim_data_transformation_spark.operators.scale_utils import (
-        distributed_cumsum,
+        distributed_order_stats,
     )
 
     vocab = (
@@ -2230,9 +2229,9 @@ def n15_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
         .persist()  # query-path cache: harness clearCache() releases — SCALE.md §6q
     )
-    cum = distributed_cumsum(
-        vocab, "cnt", "cnt", out_col="cum",
-        partition_cols=("lang",), ascending=False, tie_cols=("tok",),
+    cum, _ = distributed_order_stats(
+        vocab, "cnt", tie_cols=("tok",), value_col="cnt", cum_col="cum",
+        ascending=False, partition_cols=("lang",),
     )
     totals = vocab.groupBy("lang").agg(
         F.count("*").alias("vocab_n"), F.sum("cnt").alias("total_tok")

@@ -44,7 +44,9 @@ from aind_smartspim_data_transformation_spark.plans import relational
 # marker keys over (slab, band)).  So do the users of the single sketch
 # kernels: d03, d15 and d16 (one per-row MinHash band signature), x04
 # and n08 (one HLL register and estimate pipeline), n06, n18 and n19
-# (one token-count / type-token-ratio feature).
+# (one token-count / type-token-ratio feature).  So do the nine users of
+# the one range-bucket construction (distributed_order_stats): q09,
+# n05, n06, n14, n15, n18, n19, t10 and t12.
 _LEADING_R16 = [
     "s10_pq_adc",
     "s11_ivf_pq_search",
@@ -66,6 +68,12 @@ _LEADING_R16 = [
     "n06_quality_deciles",
     "n18_length_quality_spearman",
     "n19_tier_source_mix",
+    "q09_ntile",
+    "n05_sequence_packing",
+    "n14_token_volume_deciles",
+    "n15_vocab_coverage",
+    "t10_vocab_zipf",
+    "t12_mean_token_rank",
 ]
 
 

@@ -19,47 +19,47 @@ import pytest
 
 from aind_smartspim_data_transformation_spark import registry
 
-# query -> max allowed "Exchange hashpartitioning" nodes in the FINAL
-# adaptive plan (ceilings = observed + headroom 1; observed counts were
-# measured IDENTICAL at sf0.001 and sf0.01 in r6 and are recorded in
-# PLANS.md §fingerprints — regenerate with tools/dump_plans.py before
-# touching a ceiling).
+# query -> max allowed wide exchanges (hash plus range partitioning) in
+# the FINAL adaptive plan.  Ceilings = observed + headroom 1; "observed
+# H+R" is H hash and R range exchanges, measured identical at sf0.001
+# (this fixture) and sf0.01 (PLANS.md) — regenerate with
+# tools/dump_plans.py before touching a ceiling.
 MAX_WIDE_EXCHANGES = {
-    "q01_pricing_summary": 2,       # observed 1: one agg exchange
-    "q03_revenue_by_nation": 2,     # observed 1: AQE broadcasts dims
-    "q12_distinct_agg": 3,          # observed 2: Expand + distinct aggs
-    "e02_tumbling_window": 2,       # observed 1
-    "e04_sessionize": 1,            # observed 0: one user_id range exchange
-    "e14_sessions_recursive": 1,    # observed 0: e04's plan, value pruned
-    "e05_asof_join": 2,             # observed 1
-    "d03_dedup_minhash_lsh": 3,     # observed 2: band groupBy, verify
-    "s01_cosine_topk": 1,           # observed 0: broadcast query vec, top-k
-    "s11_ivf_pq_search": 1,         # observed 0: narrow map + two top-k's
-    "t02_quality_score": 1,         # observed 0
-    "c13_mixture_rebalance": 3,     # observed 2
-    "x08_fk_orphans": 4,            # observed 3: one distinct+join+agg per edge
-    "d13_keep_best_quality": 7,     # observed 6: d03 + star + score join + agg
-    "c14_curation_pipeline": 9,     # observed 8: d13 shape + gate + manifest agg
-    "n01_minhash_estimator_qa": 4,  # observed 3
-    "n02_source_pair_tvd": 8,       # observed 7: shared-vocab join chain
-    "n03_source_gini": 4,           # observed 3 (+legit tiny-agg BNLJ)
-    "n04_event_burstiness": 3,      # observed 2 (+legit dense-grid BNLJ)
-    "q09_ntile": 3,                 # observed 2 (r7): bucket count agg + tile window
-    "n05_sequence_packing": 3,      # observed 2 (r7): distributed per-source cumsum
-    "n06_quality_deciles": 3,       # observed 2 (r7): distributed_ntile + tier agg
-    "n07_semantic_dedup": 2,        # observed 2 (r10): (cell,v) collapse + cell agg
-    "n09_cross_source_contamination": 7,  # observed 6: h window feeds pair join
-    "n10_embedding_dispersion": 3,  # observed 2: (label,dim) agg + label agg
-    "n11_split_balance": 7,         # observed 6: cell agg + tiny totals
-    "n12_source_dup_profile": 5,    # observed 4: one scan, digest-only aggs
-    "t10_vocab_zipf": 3,            # observed 2 (r7): vocab agg + dist. rank/cum
-    "t12_mean_token_rank": 4,       # observed 3 (r7): vocab agg + rank + doc agg
-    "n14_token_volume_deciles": 3,  # observed 2 (r7): distributed_ntile + tier agg
-    "n15_vocab_coverage": 2,        # observed 1 (r7): vocab agg feeds dist. cumsum
-    "n16_retention_cohorts": 3,     # observed 2 (r7): weeks distinct + cohort agg
-    "n17_event_heavy_hitters": 5,   # observed 4 (r7): per-user agg + type window
-    "n18_length_quality_spearman": 3,  # observed 2 (r7): two dist. rank passes
-    "n19_tier_source_mix": 4,       # observed 3 (r7): ntile + cell agg + tier window
+    "q01_pricing_summary": 3,           # observed 1+1: one agg exchange
+    "q03_revenue_by_nation": 3,         # observed 1+1: AQE broadcasts dims
+    "q12_distinct_agg": 4,              # observed 2+1: Expand + distinct aggs
+    "e02_tumbling_window": 3,           # observed 1+1
+    "e04_sessionize": 2,                # observed 0+1: one user_id range exchange
+    "e14_sessions_recursive": 2,        # observed 0+1: e04's plan, value pruned
+    "e05_asof_join": 3,                 # observed 1+1
+    "d03_dedup_minhash_lsh": 4,         # observed 2+1: band groupBy, verify
+    "s01_cosine_topk": 1,               # observed 0+0: broadcast query vec, top-k
+    "s11_ivf_pq_search": 1,             # observed 0+0: narrow map + two top-k's
+    "t02_quality_score": 2,             # observed 0+1
+    "c13_mixture_rebalance": 4,         # observed 2+1
+    "x08_fk_orphans": 4,                # observed 3+0: one distinct+join+agg per edge
+    "d13_keep_best_quality": 8,         # observed 6+1: d03 + star + score join + agg
+    "c14_curation_pipeline": 10,        # observed 8+1: d13 shape + gate + manifest agg
+    "n01_minhash_estimator_qa": 5,      # observed 2+2
+    "n02_source_pair_tvd": 9,           # observed 7+1: shared-vocab join chain
+    "n03_source_gini": 4,               # observed 3+0
+    "n04_event_burstiness": 3,          # observed 2+0
+    "q09_ntile": 4,                     # observed 2+1: bucket count agg + tile window
+    "n05_sequence_packing": 4,          # observed 2+1: dist. per-source running sum
+    "n06_quality_deciles": 4,           # observed 2+1: distributed_ntile + tier agg
+    "n07_semantic_dedup": 4,            # observed 2+1: (cell,v) collapse + cell agg
+    "n09_cross_source_contamination": 8,  # observed 6+1: h window feeds pair join
+    "n10_embedding_dispersion": 4,      # observed 2+1: (label,dim) agg + label agg
+    "n11_split_balance": 8,             # observed 6+1: cell agg + tiny totals
+    "n12_source_dup_profile": 6,        # observed 4+1: one scan, digest-only aggs
+    "t10_vocab_zipf": 4,                # observed 2+1: vocab agg + dist. rank/cum
+    "t12_mean_token_rank": 5,           # observed 3+1: vocab agg + rank + doc agg
+    "n14_token_volume_deciles": 4,      # observed 2+1: distributed_ntile + tier agg
+    "n15_vocab_coverage": 3,            # observed 1+1: vocab agg + dist. running sum
+    "n16_retention_cohorts": 4,         # observed 2+1: weeks distinct + cohort agg
+    "n17_event_heavy_hitters": 6,       # observed 4+1: per-user agg + type window
+    "n18_length_quality_spearman": 3,   # observed 2+0: two dist. rank passes
+    "n19_tier_source_mix": 5,           # observed 3+1: ntile + cell agg + tier window
 }
 
 # Queries whose plan MUST share multi-referenced subtrees instead of
@@ -86,18 +86,18 @@ REQUIRE_REUSED_EXCHANGE = {
 }
 
 # Queries whose r6 plans funneled the whole input through ONE task via
-# a partition-less Window (Exchange SinglePartition) — rewired onto the
-# distributed constructions in r7 (scale_utils.distributed_ntile /
-# distributed_cumsum(partition_cols=...)).  The single-partition
-# exchange must never come back; it is the one plan shape that cannot
-# survive 100×.
+# a partition-less Window (Exchange SinglePartition) — rewired in r7
+# onto the range-bucket construction (scale_utils.distributed_order_stats,
+# which distributed_ntile wraps; partition_cols for per-group sums).
+# The single-partition exchange must never come back; it is the one
+# plan shape that cannot survive 100×.
 NO_SINGLE_PARTITION_EXCHANGE = {
     "q09_ntile",
     "n05_sequence_packing",
     "n06_quality_deciles",
-    # per-lang distributed cumsum + bounded aggregates only (n14 is NOT
-    # here: its one SinglePartition is the legitimate 1-row grand-total
-    # scalar aggregate, not a window)
+    # per-lang distributed running sum + bounded aggregates only (n14
+    # is NOT here: its one SinglePartition is the legitimate 1-row
+    # grand-total scalar aggregate, not a window)
     "n15_vocab_coverage",
     "n17_event_heavy_hitters",
     # vocab-aggregate ranks rewired onto distributed_order_stats (r7):
@@ -126,6 +126,14 @@ BNLJ_ALLOWED = {
 }
 
 
+def wide_exchanges(plan: str) -> int:
+    """Hash plus range exchanges: each moves every input row across
+    the network."""
+    return plan.count("Exchange hashpartitioning") + plan.count(
+        "Exchange rangepartitioning"
+    )
+
+
 def _final_plan(df) -> str:
     df.collect()
     return (
@@ -137,7 +145,7 @@ def _final_plan(df) -> str:
 @pytest.mark.parametrize("name", sorted(MAX_WIDE_EXCHANGES))
 def test_wide_shuffle_ceiling(spark, sf_dir, name):
     plan = _final_plan(registry.all_queries()[name](spark, sf_dir))
-    n = plan.count("Exchange hashpartitioning")
+    n = wide_exchanges(plan)
     assert n <= MAX_WIDE_EXCHANGES[name], (
         f"{name}: {n} wide exchanges (ceiling {MAX_WIDE_EXCHANGES[name]}) — "
         f"a plan regression, not a correctness bug; inspect before raising "

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -318,357 +319,254 @@ def test_aqe_skew_join_split_fires(spark):
             conf.set(k, v)
 
 
-def test_distributed_cumsum_matches_global_window(spark):
-    """Two-pass range cumsum == the single-task global window, and the
-    plan proves the scale claim: every window is PARTITIONED by the
-    range partition id (no empty-partition-spec window funneling the
-    input through one task)."""
-    import pyspark.sql.functions as F
-    from pyspark.sql.window import Window as W
-
-    from aind_smartspim_data_transformation_spark.operators.scale_utils import (
-        distributed_cumsum,
-    )
-
-    df = (
-        spark.range(10_000)
-        .select(
-            (F.col("id") * 2654435761 % 1000003).alias("k"),
-            (F.col("id") % 97).alias("v"),
-        )
-        .distinct()  # unique k: total order, so row-level parity is exact
-    )
-    got = distributed_cumsum(df, "k", "v", num_partitions=8)
-    w = W.orderBy("k").rowsBetween(W.unboundedPreceding, 0)
-    want = df.withColumn("running_total", F.sum("v").over(w))
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    # every windowspec must carry the _rpid partition key
-    import re
-
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-    assert specs and all("_rpid" in s for s in specs), specs
-
-
-def test_distributed_cumsum_float_values(spark):
-    """Float value column: the offset column must coerce to double
-    (the first offset is int 0 — the schema verifier rejects mixing)."""
-    import pyspark.sql.functions as F
-    from pyspark.sql.window import Window as W
-
-    from aind_smartspim_data_transformation_spark.operators.scale_utils import (
-        distributed_cumsum,
-    )
-
-    df = spark.range(500).select(
-        F.col("id").alias("k"), (F.col("id") * 0.25).alias("v")
-    )
-    got = distributed_cumsum(df, "k", "v", num_partitions=4)
-    w = W.orderBy("k").rowsBetween(W.unboundedPreceding, 0)
-    want = df.withColumn("running_total", F.sum("v").over(w))
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-
-
-def test_distributed_cumsum_null_and_nan_keys(spark):
-    """NULL order keys sort first, NaN doubles last (Spark's global
-    ordering) — the bucket sentinels must reproduce that instead of
-    crashing the driver sort (null bucket) or mis-bucketing NaN."""
+def _nan_safe_rows(df, cols):
+    """Collected rows as a sorted list, NaN spelled out so equal rows
+    compare equal (NaN != NaN in Python)."""
     import math
 
-    import pyspark.sql.functions as F
-    from pyspark.sql.window import Window as W
+    def norm(v):
+        return "NaN" if isinstance(v, float) and math.isnan(v) else v
 
-    from aind_smartspim_data_transformation_spark.operators.scale_utils import (
-        distributed_cumsum,
+    return sorted(
+        (tuple(norm(v) for v in r) for r in df.select(*cols).collect()),
+        key=repr,
     )
 
-    rows = [(float(i), i % 7) for i in range(200)]
-    rows += [(None, 5), (None, 3), (float("nan"), 11), (float("nan"), 2)]
-    df = spark.createDataFrame(rows, "k double, v long")
-    got = distributed_cumsum(df, "k", "v", num_partitions=4)
-    w = W.orderBy("k").rowsBetween(W.unboundedPreceding, 0)
-    want = df.withColumn("running_total", F.sum("v").over(w))
 
-    def norm(rows):
-        def key(r):
-            if r[0] is None:
-                return (0, 0.0, r[1], r[2])
-            if math.isnan(r[0]):
-                return (2, 0.0, r[1], r[2])
-            return (1, r[0], r[1], r[2])
-
-        return sorted((key(r) for r in rows))
-
-    # ties among the two NULLs (and the two NaNs) make their individual
-    # running values order-dependent in BOTH constructions; compare the
-    # per-group SETS, which a total ordering makes identical
-    assert norm(got.collect()) == norm(want.collect())
-
-
-def test_distributed_cumsum_rejects_reserved_columns(spark):
-    import pytest as _pytest
-
-    from aind_smartspim_data_transformation_spark.operators.scale_utils import (
-        distributed_cumsum,
-    )
-
-    df = spark.range(5).selectExpr("id AS k", "id AS v", "id AS _rpid")
-    with _pytest.raises(ValueError, match="_rpid"):
-        distributed_cumsum(df, "k", "v")
-
-
-def test_distributed_cumsum_rejects_decimal_values(spark):
-    """DECIMAL value columns would hand decimal.Decimal partial sums to
-    the long/double offset schema (opaque failure) — refused up front
-    with the cast fix in the message (ADVICE r6)."""
-    import pytest as _pytest
-
-    from aind_smartspim_data_transformation_spark.operators.scale_utils import (
-        distributed_cumsum,
-    )
-
-    df = spark.range(10).selectExpr("id AS k", "CAST(id AS DECIMAL(10,2)) AS v")
-    with _pytest.raises(ValueError, match="DECIMAL"):
-        distributed_cumsum(df, "k", "v")
-
-
-def test_distributed_cumsum_partitioned_matches_group_window(spark):
-    """partition_cols: the per-group two-pass cumsum == the per-group
-    window, with NO driver collect and NO partition-less window — the
-    offsets themselves come from a window over the (group, bucket)
-    aggregate partitioned by the group."""
-    import pyspark.sql.functions as F
-    from pyspark.sql.window import Window as W
-
-    from aind_smartspim_data_transformation_spark.operators.scale_utils import (
-        distributed_cumsum,
-    )
-
-    df = spark.range(20_000).select(
-        (F.col("id") % 7).cast("string").alias("g"),
-        F.col("id").alias("k"),  # unique within group: total order
-        (F.col("id") % 31).alias("v"),
-    )
-    got = distributed_cumsum(
-        df, "k", "v", num_partitions=8, partition_cols=("g",)
-    )
-    w = (
-        W.partitionBy("g")
-        .orderBy("k")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    want = df.withColumn("running_total", F.sum("v").over(w))
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-    plan = got._jdf.queryExecution().executedPlan().toString()
+def _assert_windows_bucketed(df, key):
+    """No partition-less window: every window spec is partitioned by
+    ``key`` and no single-partition exchange funnels the input."""
     import re
 
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-    # every window carries a partition key (g for the offset window,
-    # g+_rpid for the cumsum window) — nothing global
-    assert specs and all("g#" in s for s in specs), specs
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange SinglePartition" not in plan
+    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
+    assert specs and all(key in s for s in specs), specs
 
 
-def test_distributed_ntile_matches_global_window(spark):
-    """distributed_ntile == F.ntile over the global window, for both
-    sort directions, with ties on the order key, at an N not divisible
-    by n_tiles — and the plan has no single-partition exchange."""
-    import pyspark.sql.functions as F
-    from pyspark.sql.window import Window as W
-
-    from aind_smartspim_data_transformation_spark.operators.scale_utils import (
-        distributed_ntile,
-    )
-
-    # 10_007 rows (prime: exercises the uneven first-r-tiles arithmetic),
-    # heavy ties on k (only 500 distinct values), doc_id tie-break
-    df = spark.range(10_007).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") * 2654435761 % 500).alias("k"),
-    )
-    for ascending in (True, False):
-        got = distributed_ntile(
-            df, "k", 10, tie_cols=("doc_id",), out_col="tier",
-            ascending=ascending, num_partitions=8,
+def _order_stats_case(spark, case):
+    """(df, distributed_order_stats kwargs, window partition cols,
+    window order) for one parity case."""
+    if case == "unique_keys":
+        df = spark.range(10_000).select(
+            (F.col("id") * 2654435761 % 1000003).alias("k"),
+            (F.col("id") % 97).alias("v"),
+        ).distinct()
+        return df, dict(order_col="k", value_col="v", num_partitions=8), (), [
+            F.col("k")
+        ]
+    if case == "float_values":
+        # the first driver offset is int 0: the offset column must
+        # coerce to double
+        df = spark.range(500).select(
+            F.col("id").alias("k"), (F.col("id") * 0.25).alias("v")
         )
-        order = [F.col("k").asc() if ascending else F.col("k").desc(),
-                 F.col("doc_id").asc()]
-        want = df.withColumn("tier", F.ntile(10).over(W.orderBy(*order)))
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        ), f"ascending={ascending}"
-        plan = got._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange SinglePartition" not in plan
-        import re
-
-        specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-        assert specs and all("_rpid" in s for s in specs), specs
-    # schema parity with F.ntile: INT tile column
-    assert dict(got.dtypes)["tier"] == "int"
-
-
-def test_distributed_ntile_edge_cases(spark):
-    """Fewer rows than tiles (tile i = row i); single-tile; null and
-    NaN keys reproduce Spark's asc ordering (nulls first, NaN last)."""
-    import pyspark.sql.functions as F
-    from pyspark.sql.window import Window as W
-
-    from aind_smartspim_data_transformation_spark.operators.scale_utils import (
-        distributed_ntile,
-    )
-
-    small = spark.range(3).selectExpr("id AS doc_id", "id * 10 AS k")
-    got = distributed_ntile(small, "k", 7, tie_cols=("doc_id",), num_partitions=4)
-    want = small.withColumn(
-        "tile", F.ntile(7).over(W.orderBy("k", "doc_id"))
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-
-    one = distributed_ntile(small, "k", 1, tie_cols=("doc_id",), num_partitions=4)
-    assert all(r["tile"] == 1 for r in one.collect())
-
-    rows = [(i, float(i % 13)) for i in range(100)]
-    rows += [(1000, None), (1001, None), (1002, float("nan"))]
-    df = spark.createDataFrame(rows, "doc_id long, k double")
-    got = distributed_ntile(df, "k", 4, tie_cols=("doc_id",), num_partitions=4)
-    want = df.withColumn(
-        "tile", F.ntile(4).over(W.orderBy(F.col("k").asc(), F.col("doc_id")))
-    )
-    def norm(rs):
-        import math
-
-        def key(r):
-            k = r[1]
-            cls = 0 if k is None else (2 if math.isnan(k) else 1)
-            return (r[0], cls, 0.0 if cls != 1 else k, r[2])
-
-        return sorted(key(r) for r in rs)
-
-    assert norm(got.collect()) == norm(want.collect())
-
-
-def test_distributed_ntile_rejects_bad_args(spark):
-    import pytest as _pytest
-
-    from aind_smartspim_data_transformation_spark.operators.scale_utils import (
-        distributed_ntile,
-    )
-
-    df = spark.range(5).selectExpr("id AS k", "id AS _gpos")
-    with _pytest.raises(ValueError, match="_gpos"):
-        distributed_ntile(df, "k", 4)
-    with _pytest.raises(ValueError, match="n_tiles"):
-        distributed_ntile(spark.range(5).selectExpr("id AS k"), "k", 0)
-
-
-def test_distributed_cumsum_descending_with_ties(spark):
-    """ascending=False + tie_cols: running sum over a DESC non-unique
-    key (the vocab-coverage shape: cumulate counts from the most
-    frequent token down) matches the global window, per group."""
-    import pyspark.sql.functions as F
-    from pyspark.sql.window import Window as W
-
-    from aind_smartspim_data_transformation_spark.operators.scale_utils import (
-        distributed_cumsum,
-    )
-
+        return df, dict(order_col="k", value_col="v", num_partitions=4), (), [
+            F.col("k")
+        ]
+    if case == "null_nan_keys":
+        # NULL keys sort first, NaN last: the bucket sentinels must
+        # reproduce Spark's global ordering
+        rows = [(i, float(i), i % 7) for i in range(200)]
+        rows += [(200, None, 5), (201, None, 3)]
+        rows += [(202, float("nan"), 11), (203, float("nan"), 2)]
+        df = spark.createDataFrame(rows, "id long, k double, v long")
+        kw = dict(order_col="k", tie_cols=("id",), value_col="v",
+                  num_partitions=4)
+        return df, kw, (), [F.col("k"), F.col("id")]
+    if case == "desc_heavy_ties":
+        df = spark.range(8_000).select(
+            (F.col("id") % 300).alias("n"),
+            F.col("id").cast("string").alias("word"),
+        )
+        kw = dict(order_col="n", tie_cols=("word",), value_col="n",
+                  rank_col="rnk", cum_col="cum", ascending=False,
+                  num_partitions=8)
+        return df, kw, (), [F.col("n").desc(), F.col("word")]
+    if case == "rank_only":
+        df = spark.range(8_000).select(
+            (F.col("id") % 300).alias("n"),
+            F.col("id").cast("string").alias("word"),
+        )
+        kw = dict(order_col="n", tie_cols=("word",), num_partitions=8)
+        return df, kw, (), [F.col("n"), F.col("word")]
+    if case == "grouped":
+        df = spark.range(20_000).select(
+            (F.col("id") % 7).cast("string").alias("g"),
+            F.col("id").alias("k"),
+            (F.col("id") % 31).alias("v"),
+        )
+        kw = dict(order_col="k", value_col="v", num_partitions=8,
+                  partition_cols=("g",))
+        return df, kw, ("g",), [F.col("k")]
+    assert case == "grouped_desc_ties"
+    # the vocab-coverage shape: cumulate counts from the most frequent
+    # token down, per group
     df = spark.range(5_000).select(
         (F.col("id") % 3).cast("string").alias("g"),
-        (F.col("id") % 40).alias("cnt"),  # heavy ties
-        F.col("id").alias("tok"),  # tie-break: total order
+        (F.col("id") % 40).alias("cnt"),
+        F.col("id").alias("tok"),
         (F.col("id") % 11).alias("v"),
     )
-    got = distributed_cumsum(
-        df, "cnt", "v", num_partitions=6,
-        partition_cols=("g",), ascending=False, tie_cols=("tok",),
-    )
-    w = (
-        W.partitionBy("g")
-        .orderBy(F.col("cnt").desc(), F.col("tok").asc())
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    want = df.withColumn("running_total", F.sum("v").over(w))
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-    # global (no partition_cols) desc form too
-    got_g = distributed_cumsum(
-        df.drop("g"), "cnt", "v", num_partitions=6,
-        ascending=False, tie_cols=("tok",),
-    )
-    w_g = W.orderBy(F.col("cnt").desc(), F.col("tok").asc()).rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    want_g = df.drop("g").withColumn("running_total", F.sum("v").over(w_g))
-    assert sorted(map(tuple, got_g.collect())) == sorted(
-        map(tuple, want_g.collect())
-    )
+    kw = dict(order_col="cnt", tie_cols=("tok",), value_col="v",
+              ascending=False, num_partitions=6, partition_cols=("g",))
+    return df, kw, ("g",), [F.col("cnt").desc(), F.col("tok")]
 
 
-def test_distributed_order_stats_matches_global_window(spark):
-    """Global rank + running sum == the partition-less window forms,
-    desc with heavy ties; totals come back as driver numbers; plan has
-    no single-partition exchange."""
-    import pyspark.sql.functions as F
+@pytest.mark.parametrize(
+    "case",
+    [
+        "unique_keys",
+        "float_values",
+        "null_nan_keys",
+        "desc_heavy_ties",
+        "rank_only",
+        "grouped",
+        "grouped_desc_ties",
+    ],
+)
+def test_distributed_order_stats_matches_window(spark, case):
+    """Rank and running sum == the global (per-group) window, every
+    window partitioned by the bucket (group), totals as driver numbers
+    when ungrouped."""
     from pyspark.sql.window import Window as W
 
     from aind_smartspim_data_transformation_spark.operators.scale_utils import (
         distributed_order_stats,
     )
 
-    df = spark.range(8_000).select(
-        (F.col("id") % 300).alias("n"),  # heavy ties
-        F.col("id").cast("string").alias("word"),
+    df, kw, groups, order = _order_stats_case(spark, case)
+    got, totals = distributed_order_stats(df, **kw)
+    rank_col = kw.get("rank_col", "rank")
+    cum_col = kw.get("cum_col", "running_total")
+    value_col = kw.get("value_col")
+    w = (W.partitionBy(*groups) if groups else W).orderBy(*order)
+    want = df.withColumn(rank_col, F.row_number().over(w))
+    if value_col is not None:
+        want = want.withColumn(
+            cum_col,
+            F.sum(value_col).over(w.rowsBetween(W.unboundedPreceding, 0)),
+        )
+    else:
+        assert cum_col not in got.columns
+    assert sorted(got.columns) == sorted(want.columns)
+    assert _nan_safe_rows(got, want.columns) == _nan_safe_rows(
+        want, want.columns
     )
-    got, totals = distributed_order_stats(
-        df, "n", tie_cols=("word",), value_col="n",
-        rank_col="rnk", cum_col="cum", ascending=False, num_partitions=8,
-    )
-    w = W.orderBy(F.col("n").desc(), F.col("word").asc())
-    want = df.select(
-        "n",
-        "word",
-        F.row_number().over(w).alias("rnk"),
-        F.sum("n").over(w.rowsBetween(W.unboundedPreceding, 0)).alias("cum"),
-    )
-    assert sorted(map(tuple, got.select("n", "word", "rnk", "cum").collect())) \
-        == sorted(map(tuple, want.collect()))
-    assert totals["count"] == 8_000
-    assert totals["sum"] == sum(i % 300 for i in range(8_000))
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange SinglePartition" not in plan
-    # rank-only form (no value_col): no cum column, sum is None
-    got2, totals2 = distributed_order_stats(
-        df, "n", tie_cols=("word",), rank_col="rnk", num_partitions=8
-    )
-    assert "running_total" not in got2.columns
-    assert totals2["sum"] is None and totals2["count"] == 8_000
-    want2 = df.select(
-        "n", "word",
-        F.row_number().over(W.orderBy(F.col("n").asc(), F.col("word"))).alias("rnk"),
-    )
-    assert sorted(map(tuple, got2.select("n", "word", "rnk").collect())) \
-        == sorted(map(tuple, want2.collect()))
+    if groups:
+        assert totals is None
+    else:
+        want_sum = df.agg(F.sum(value_col)).first()[0] if value_col else None
+        assert totals == {"count": df.count(), "sum": want_sum}
+    _assert_windows_bucketed(got, f"{groups[0]}#" if groups else "_rpid")
 
 
-def test_distributed_order_stats_rejects_decimal_values(spark):
-    import pytest as _pytest
+@pytest.mark.parametrize("groups", [(), ("g",)], ids=["global", "grouped"])
+def test_distributed_order_stats_rank_is_long(spark, groups):
+    """The rank is BIGINT like row_number(): an INT rank raises
+    CAST_OVERFLOW past 2^31 rows under ANSI mode."""
+    from pyspark.sql.types import LongType
 
     from aind_smartspim_data_transformation_spark.operators.scale_utils import (
         distributed_order_stats,
     )
 
-    df = spark.range(5).selectExpr("id AS k", "CAST(id AS DECIMAL(10,2)) AS v")
-    with _pytest.raises(ValueError, match="DECIMAL"):
-        distributed_order_stats(df, "k", value_col="v")
+    df = spark.range(100).select(
+        (F.col("id") % 3).alias("g"), F.col("id").alias("k")
+    )
+    got, _ = distributed_order_stats(
+        df, "k", num_partitions=4, partition_cols=groups
+    )
+    assert isinstance(got.schema["rank"].dataType, LongType)
+
+
+def _ntile_case(spark, case):
+    """(df, n_tiles, ascending) for one ntile parity case; every df
+    has ``doc_id`` (the tie-break) and the order key ``k``."""
+    if case in ("asc_ties", "desc_ties"):
+        # 10_007 rows (prime: exercises the uneven first-r-tiles
+        # arithmetic), heavy ties on k (500 distinct values)
+        df = spark.range(10_007).select(
+            F.col("id").alias("doc_id"),
+            (F.col("id") * 2654435761 % 500).alias("k"),
+        )
+        return df, 10, case == "asc_ties"
+    small = spark.range(3).selectExpr("id AS doc_id", "id * 10 AS k")
+    if case == "fewer_rows_than_tiles":
+        return small, 7, True  # tile i = row i
+    if case == "single_tile":
+        return small, 1, True
+    assert case == "null_nan_keys"
+    rows = [(i, float(i % 13)) for i in range(100)]
+    rows += [(1000, None), (1001, None), (1002, float("nan"))]
+    return spark.createDataFrame(rows, "doc_id long, k double"), 4, True
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "asc_ties",
+        "desc_ties",
+        "fewer_rows_than_tiles",
+        "single_tile",
+        "null_nan_keys",
+    ],
+)
+def test_distributed_ntile_matches_window(spark, case):
+    """distributed_ntile == F.ntile over the global window, with an INT
+    tile column like F.ntile's and no partition-less window."""
+    from pyspark.sql.window import Window as W
+
+    from aind_smartspim_data_transformation_spark.operators.scale_utils import (
+        distributed_ntile,
+    )
+
+    df, n_tiles, ascending = _ntile_case(spark, case)
+    got = distributed_ntile(
+        df, "k", n_tiles, tie_cols=("doc_id",), out_col="tier",
+        ascending=ascending, num_partitions=8,
+    )
+    key = F.col("k").asc() if ascending else F.col("k").desc()
+    want = df.withColumn(
+        "tier", F.ntile(n_tiles).over(W.orderBy(key, F.col("doc_id")))
+    )
+    assert got.columns == want.columns
+    assert _nan_safe_rows(got, want.columns) == _nan_safe_rows(
+        want, want.columns
+    )
+    assert dict(got.dtypes)["tier"] == "int"
+    _assert_windows_bucketed(got, "_rpid")
+
+
+@pytest.mark.parametrize(
+    "fn, cols, kwargs, match",
+    [
+        ("order_stats", ["id AS k", "id AS v", "id AS _rpid"],
+         {"value_col": "v"}, "_rpid"),
+        ("order_stats", ["id AS k", "CAST(id AS DECIMAL(10,2)) AS v"],
+         {"value_col": "v"}, "DECIMAL"),
+        ("order_stats", ["id AS k", "id AS g", "CAST(id AS DECIMAL(10,2)) AS v"],
+         {"value_col": "v", "partition_cols": ("g",)}, "DECIMAL"),
+        ("ntile", ["id AS k", "id AS tile"], {"n_tiles": 4}, "'tile'"),
+        ("ntile", ["id AS k"], {"n_tiles": 0}, "n_tiles"),
+    ],
+    ids=[
+        "order_stats_reserved_column",
+        "order_stats_decimal_values",
+        "grouped_decimal_values",
+        "ntile_reserved_out_col",
+        "ntile_zero_tiles",
+    ],
+)
+def test_distributed_refusals(spark, fn, cols, kwargs, match):
+    """Inputs the construction would silently corrupt are refused up
+    front: a column it would overwrite, DECIMAL values (partial sums
+    the long/double offsets cannot hold), fewer than one tile."""
+    from aind_smartspim_data_transformation_spark.operators import scale_utils
+
+    call = getattr(scale_utils, f"distributed_{fn}")
+    with pytest.raises(ValueError, match=match):
+        call(spark.range(10).selectExpr(*cols), "k", **kwargs)
 
 
 def test_n18_spearman_50k_probe(spark, tmp_path):

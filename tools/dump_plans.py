@@ -35,6 +35,7 @@ def main() -> None:
     from test_plan_fingerprints import (
         MAX_WIDE_EXCHANGES,
         REQUIRE_REUSED_EXCHANGE,
+        wide_exchanges,
     )
 
     out = [
@@ -42,11 +43,12 @@ def main() -> None:
         "",
         "Regenerate with `python tools/dump_plans.py`.  Executed adaptive",
         f"plans at {Path(SF_DIR).name}.  `tests/test_plan_fingerprints.py`",
-        "pins each query's ceiling at observed+1; regenerate this table",
-        "before touching a ceiling.",
+        "counts hash plus range exchanges and pins each query's ceiling at",
+        "observed+1 (the larger of this table's and the sf0.001 test",
+        "fixture's count); regenerate this table before touching a ceiling.",
         "",
-        "| query | wide exchanges | ceiling | reused | BNLJ |",
-        "|---|---|---|---|---|",
+        "| query | hash exchanges | range exchanges | ceiling | reused | BNLJ |",
+        "|---|---|---|---|---|---|",
     ]
     for name in sorted(MAX_WIDE_EXCHANGES):
         # harness-level cache hygiene (the plans keep their persists)
@@ -57,11 +59,12 @@ def main() -> None:
             df._jdf.queryExecution().executedPlan().toString()
             .split("== Initial Plan ==")[0]
         )
-        n = plan.count("Exchange hashpartitioning")
+        n_hash = plan.count("Exchange hashpartitioning")
+        n_range = wide_exchanges(plan) - n_hash
         reuse = plan.count("ReusedExchange")
         mark = " (required)" if name in REQUIRE_REUSED_EXCHANGE else ""
         out.append(
-            f"| {name} | {n} | {MAX_WIDE_EXCHANGES[name]} | "
+            f"| {name} | {n_hash} | {n_range} | {MAX_WIDE_EXCHANGES[name]} | "
             f"{reuse}{mark} | "
             f"{'yes' if 'BroadcastNestedLoopJoin' in plan else 'no'} |"
         )
